@@ -1226,7 +1226,7 @@ object SparkEntry {
       // four scalar subqueries that Spark's MergeScalarSubqueries fuses into
       // ONE build pass per parity; the probes hit the merged subquery's
       // struct fields, which the contains-expressions evaluate once per task
-      // (never per row — see FilterContainsExpression.rowIndependentFilter)
+      // (never per row — see graft.functions.OncePerTaskBlob)
       "q_fuse_golden" -> q("""
         SELECT 0 AS filter_rem,
                CAST(COUNT(CASE WHEN binary_fuse16_filter_contains(

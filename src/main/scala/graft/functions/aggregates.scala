@@ -11,43 +11,63 @@ import org.apache.spark.unsafe.types.UTF8String
 
 import graft.core._
 
-/** Growable unboxed key buffer used by the xor/fuse aggregates: construction
-  * happens only at finalize, so partial-aggregate state is just the raw keys
-  * (reference buffers identically: src/bitfilters_xor_filter.cpp:127-132).
+/** The one partial-aggregation buffer of every hash-keyed filter and
+  * sketch family: a growable unboxed list of 64-bit keys and, once the
+  * family has densified (see [[DenseKeyBufferAgg]]), its dense structure.
   */
-final class LongKeyBuffer(var arr: Array[Long], var n: Int) {
-  def this() = this(new Array[Long](16), 0)
+final class KeyBuffer(var keys: Array[Long], var n: Int) {
+  /** The family's dense structure; null while the buffer is sparse. */
+  var dense: AnyRef = null
+
+  def this() = this(KeyBuffer.NoKeys, 0)
+
+  def isEmpty: Boolean = dense == null && n == 0
 
   def add(v: Long): Unit = {
-    if (n == arr.length) arr = java.util.Arrays.copyOf(arr, arr.length * 2)
-    arr(n) = v
+    if (n == keys.length) grow(n + 1L)
+    keys(n) = v
     n += 1
   }
 
-  def addAll(o: LongKeyBuffer): Unit = {
-    if (n + o.n > arr.length) {
-      val target = math.max(arr.length * 2L, (n + o.n).toLong)
-      if (target > Int.MaxValue - 8) throw new IllegalStateException(
-        "filter aggregate key buffer exceeds 2^31 keys per group; split the group")
-      arr = java.util.Arrays.copyOf(arr, target.toInt)
-    }
-    System.arraycopy(o.arr, 0, arr, n, o.n)
-    n += o.n
+  def addAll(src: Array[Long], m: Int): Unit = {
+    if (n + m > keys.length) grow(n.toLong + m)
+    System.arraycopy(src, 0, keys, n, m)
+    n += m
   }
 
-  def serialize(): Array[Byte] = {
-    val out = new Array[Byte](8 * n)
-    ByteBuffer.wrap(out).order(ByteOrder.LITTLE_ENDIAN).asLongBuffer().put(arr, 0, n)
+  private def grow(min: Long): Unit = {
+    if (min > KeyBuffer.MaxKeys) throw new IllegalStateException(
+      "filter aggregate key buffer exceeds 2^31 keys per group; split the group")
+    val target = math.min(math.max(math.max(keys.length * 2L, 16L), min), KeyBuffer.MaxKeys)
+    keys = java.util.Arrays.copyOf(keys, target.toInt)
+  }
+
+  /** Drop the keys; a list longer than one staging batch is released. */
+  def clear(): Unit = {
+    n = 0
+    if (keys.length > KeyBuffer.Batch) keys = KeyBuffer.NoKeys
+  }
+
+  /** `prefix` zero bytes, then the keys as little-endian u64s. */
+  def toBytes(prefix: Int): Array[Byte] = {
+    val out = new Array[Byte](prefix + 8 * n)
+    ByteBuffer.wrap(out, prefix, 8 * n).order(ByteOrder.LITTLE_ENDIAN).asLongBuffer().put(keys, 0, n)
     out
   }
 }
 
-object LongKeyBuffer {
-  def deserialize(bytes: Array[Byte]): LongKeyBuffer = {
-    val n = bytes.length / 8
-    val arr = new Array[Long](math.max(n, 16))
-    ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN).asLongBuffer().get(arr, 0, n)
-    new LongKeyBuffer(arr, n)
+object KeyBuffer {
+  private val NoKeys = new Array[Long](0)
+  private val MaxKeys = Int.MaxValue - 8L
+
+  /** Keys a dense buffer stages before one family `insertAll` call. */
+  val Batch = 256
+
+  def fromBytes(bytes: Array[Byte], offset: Int): KeyBuffer = {
+    val n = (bytes.length - offset) / 8
+    val keys = new Array[Long](n)
+    ByteBuffer.wrap(bytes, offset, 8 * n).order(ByteOrder.LITTLE_ENDIAN).asLongBuffer().get(keys, 0, n)
+    new KeyBuffer(keys, n)
   }
 }
 
@@ -91,6 +111,133 @@ private[graft] object AggUtil {
     else TypeCheckResult.TypeCheckSuccess
 }
 
+/** Base of every aggregate that buffers 64-bit keys and finalizes to a
+  * blob. This level alone is the xor/fuse families: construction happens
+  * only at finalize, so the partial state is the raw keys and the shuffle
+  * wire is the bare little-endian key list (reference buffers identically:
+  * src/bitfilters_xor_filter.cpp:127-132).
+  */
+abstract class KeyBufferAgg extends TypedImperativeAggregate[KeyBuffer] {
+  def child: Expression
+
+  override def dataType: DataType = BinaryType
+  override def nullable: Boolean = true
+  override def createAggregationBuffer(): KeyBuffer = new KeyBuffer()
+
+  /** The 64-bit key of a non-NULL input value. */
+  protected def keyOf(v: Any): Long = v.asInstanceOf[Long]
+
+  protected def add(buf: KeyBuffer, v: Any): Unit = buf.add(keyOf(v))
+
+  override def update(buf: KeyBuffer, input: InternalRow): KeyBuffer = {
+    val v = child.eval(input)
+    if (v != null) add(buf, v) // aggregates ignore NULL inputs
+    buf
+  }
+
+  override def merge(buf: KeyBuffer, other: KeyBuffer): KeyBuffer = {
+    buf.addAll(other.keys, other.n); buf
+  }
+
+  override def serialize(buf: KeyBuffer): Array[Byte] = buf.toBytes(0)
+  override def deserialize(bytes: Array[Byte]): KeyBuffer = KeyBuffer.fromBytes(bytes, 0)
+}
+
+/** SPARSE-UNTIL-DENSE key buffering, shared by every family whose dense
+  * state is a fixed-size structure (quotient, DuckDB bloom, classic bloom,
+  * hll, cms). Rationale: dense state is allocated per partial-aggregation
+  * buffer — i.e. PER CORE — so at 2^26 bloom sectors every core holds
+  * 512 MB during the partial phase (16 GB on a 32-core executor, an OOM
+  * observed in the 50M-key smoke, graft.tools.BigGroupSmoke). Buffers
+  * therefore start as the raw key list (8 B per inserted key — also far
+  * smaller on the shuffle wire for small groups) and DENSIFY once the list
+  * reaches `denseThreshold`, capping partial memory at min(8*keys, dense
+  * size) + O(1). A dense buffer keeps appending keys and inserts them in
+  * batches of at most [[KeyBuffer.Batch]]. Insertion order never affects
+  * the final bits (set union / OR / max / sum), so results are
+  * byte-identical on every path.
+  *
+  * A BINARY input selects the family's merge overload: each row is a blob,
+  * unioned into the dense state.
+  */
+abstract class DenseKeyBufferAgg[D <: AnyRef] extends KeyBufferAgg {
+  /** Key count at which the raw list outgrows the dense structure. */
+  protected def denseThreshold: Long
+  protected def create(): D
+  /** Insert `keys(0 until n)`; the per-key loop stays in the family. */
+  protected def insertAll(d: D, keys: Array[Long], n: Int): Unit
+  /** Union `other` into `d`; returns the result. */
+  protected def union(d: D, other: D): D
+  protected def encode(d: D): Array[Byte]
+  protected def decode(blob: Array[Byte]): D
+  /** A dense buffer on the partial-aggregation wire: any first byte but 0
+    * (the raw-key mode). By default mode 1, then the blob.
+    */
+  protected def encodePartial(d: D): Array[Byte] = {
+    val blob = encode(d)
+    val out = new Array[Byte](1 + blob.length)
+    out(0) = 1.toByte
+    System.arraycopy(blob, 0, out, 1, blob.length)
+    out
+  }
+  protected def decodePartial(bytes: Array[Byte]): D =
+    decode(java.util.Arrays.copyOfRange(bytes, 1, bytes.length))
+
+  /** BINARY input: the family's merge overload. */
+  protected lazy val mergeMode: Boolean = child.dataType == BinaryType
+  private lazy val stageLimit: Long = math.min(denseThreshold, KeyBuffer.Batch.toLong)
+
+  /** Insert the pending keys into the dense state, creating it if the buffer is sparse. */
+  private def densify(buf: KeyBuffer): D = {
+    if (buf.dense == null) buf.dense = create()
+    val d = buf.dense.asInstanceOf[D]
+    insertAll(d, buf.keys, buf.n)
+    buf.clear()
+    d
+  }
+
+  override protected final def add(buf: KeyBuffer, v: Any): Unit =
+    if (mergeMode) buf.dense = union(densify(buf), decode(v.asInstanceOf[Array[Byte]]))
+    else {
+      buf.add(keyOf(v))
+      if (buf.n >= (if (buf.dense == null) denseThreshold else stageLimit)) densify(buf)
+    }
+
+  override final def merge(buf: KeyBuffer, other: KeyBuffer): KeyBuffer = {
+    if (other.dense != null) {
+      // a merge into an empty buffer takes over the other side's dense state
+      buf.dense = if (buf.isEmpty) densify(other) else union(densify(buf), densify(other))
+    } else if (buf.dense != null) insertAll(buf.dense.asInstanceOf[D], other.keys, other.n)
+    else {
+      buf.addAll(other.keys, other.n)
+      if (buf.n >= denseThreshold) densify(buf)
+    }
+    buf
+  }
+
+  override final def eval(buf: KeyBuffer): Any =
+    if (buf.isEmpty) null // empty group finalizes to NULL, like every family
+    else encode(densify(buf))
+
+  // shuffle wire: [mode:1][mode=0: raw keys ×8 | otherwise: dense form]
+  override final def serialize(buf: KeyBuffer): Array[Byte] =
+    if (buf.isEmpty) Array.emptyByteArray
+    else if (buf.dense == null) buf.toBytes(1)
+    else encodePartial(densify(buf))
+
+  override final def deserialize(bytes: Array[Byte]): KeyBuffer =
+    if (bytes.isEmpty) new KeyBuffer()
+    else if (bytes(0) == 0) {
+      val buf = KeyBuffer.fromBytes(bytes, 1)
+      if (buf.n >= denseThreshold) densify(buf)
+      buf
+    } else {
+      val buf = new KeyBuffer()
+      buf.dense = decodePartial(bytes)
+      buf
+    }
+}
+
 /** SQL: `xor8_filter(hash)` / `xor16_filter(hash)` — aggregates pre-hashed
   * u64 keys into a serialized xor filter BLOB.
   * Reference: src/bitfilters_xor_filter.cpp:104-183,263-289.
@@ -100,32 +247,15 @@ case class XorFilterAgg(
     bits: Int,
     override val mutableAggBufferOffset: Int = 0,
     override val inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[LongKeyBuffer] {
+  extends KeyBufferAgg {
 
   override def children: Seq[Expression] = child :: Nil
   override def checkInputDataTypes(): TypeCheckResult = AggUtil.checkHashInput(prettyName, child)
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
   override def prettyName: String = s"xor${bits}_filter"
 
-  override def createAggregationBuffer(): LongKeyBuffer = new LongKeyBuffer()
-
-  override def update(buf: LongKeyBuffer, input: InternalRow): LongKeyBuffer = {
-    val v = child.eval(input)
-    if (v != null) buf.add(v.asInstanceOf[Long]) // aggregates ignore NULL inputs
-    buf
-  }
-
-  override def merge(buf: LongKeyBuffer, other: LongKeyBuffer): LongKeyBuffer = {
-    buf.addAll(other); buf
-  }
-
-  override def eval(buf: LongKeyBuffer): Any =
+  override def eval(buf: KeyBuffer): Any =
     if (buf.n == 0) null // empty group finalizes to NULL
-    else XorFilter.build(bits, java.util.Arrays.copyOf(buf.arr, buf.n), buf.n).serialize()
-
-  override def serialize(buf: LongKeyBuffer): Array[Byte] = buf.serialize()
-  override def deserialize(bytes: Array[Byte]): LongKeyBuffer = LongKeyBuffer.deserialize(bytes)
+    else XorFilter.build(bits, java.util.Arrays.copyOf(buf.keys, buf.n), buf.n).serialize()
 
   override def withNewMutableAggBufferOffset(newOffset: Int): XorFilterAgg =
     copy(mutableAggBufferOffset = newOffset)
@@ -143,32 +273,15 @@ case class BinaryFuseFilterAgg(
     bits: Int,
     override val mutableAggBufferOffset: Int = 0,
     override val inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[LongKeyBuffer] {
+  extends KeyBufferAgg {
 
   override def children: Seq[Expression] = child :: Nil
   override def checkInputDataTypes(): TypeCheckResult = AggUtil.checkHashInput(prettyName, child)
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
   override def prettyName: String = s"binary_fuse${bits}_filter"
 
-  override def createAggregationBuffer(): LongKeyBuffer = new LongKeyBuffer()
-
-  override def update(buf: LongKeyBuffer, input: InternalRow): LongKeyBuffer = {
-    val v = child.eval(input)
-    if (v != null) buf.add(v.asInstanceOf[Long])
-    buf
-  }
-
-  override def merge(buf: LongKeyBuffer, other: LongKeyBuffer): LongKeyBuffer = {
-    buf.addAll(other); buf
-  }
-
-  override def eval(buf: LongKeyBuffer): Any =
+  override def eval(buf: KeyBuffer): Any =
     if (buf.n == 0) null
-    else BinaryFuseFilter.build(bits, java.util.Arrays.copyOf(buf.arr, buf.n), buf.n).serialize()
-
-  override def serialize(buf: LongKeyBuffer): Array[Byte] = buf.serialize()
-  override def deserialize(bytes: Array[Byte]): LongKeyBuffer = LongKeyBuffer.deserialize(bytes)
+    else BinaryFuseFilter.build(bits, java.util.Arrays.copyOf(buf.keys, buf.n), buf.n).serialize()
 
   override def withNewMutableAggBufferOffset(newOffset: Int): BinaryFuseFilterAgg =
     copy(mutableAggBufferOffset = newOffset)
@@ -178,17 +291,6 @@ case class BinaryFuseFilterAgg(
     copy(child = newChildren.head)
 }
 
-/** Mutable quotient aggregation state — SPARSE-UNTIL-DENSE (see
-  * [[SparseKeys]]; a dense 2^q table per partial buffer is per-core
-  * memory: q=28, r=8 is ~370 MB per buffer). Hash-mode buffers hold raw
-  * keys (insert only uses the low q+r bits, so raw keys replay
-  * losslessly); the blob-merge overload is dense from the first row by
-  * nature.
-  */
-final class QuotientBuf(var filter: QuotientFilter) extends SparseKeys {
-  def isEmpty: Boolean = filter == null && keyCount == 0
-}
-
 /** SQL: `quotient_filter(q, r, hash_or_blob[, strict])` — like the
   * reference, a single name with two overloads resolved by the third
   * argument's type (src/bitfilters_quotient_filter.cpp:269-289): LongType
@@ -196,7 +298,9 @@ final class QuotientBuf(var filter: QuotientFilter) extends SparseKeys {
   * blobs. `strict` (default false = reference parity) makes a merge that
   * overflows the destination table RAISE instead of silently dropping
   * keys (the reference ignores insert() failures during merge,
-  * quotient_filter.cpp:399,403).
+  * quotient_filter.cpp:399,403). Sparse buffers hold raw keys: insert
+  * only uses the low q+r bits, so raw keys replay losslessly (a dense 2^q
+  * table per partial buffer is per-core memory: q=28, r=8 is ~370 MB).
   */
 case class QuotientFilterAgg(
     qExpr: Expression,
@@ -205,16 +309,13 @@ case class QuotientFilterAgg(
     strict: Boolean = false,
     override val mutableAggBufferOffset: Int = 0,
     override val inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[QuotientBuf] {
+  extends DenseKeyBufferAgg[QuotientFilter] {
 
   override def children: Seq[Expression] = Seq(qExpr, rExpr, child)
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
   override def prettyName: String = "quotient_filter"
 
   private lazy val q: Int = AggUtil.foldableLong(qExpr, "quotient_filter q").toInt
   private lazy val r: Int = AggUtil.foldableLong(rExpr, "quotient_filter r").toInt
-  private lazy val mergeMode: Boolean = child.dataType == BinaryType
 
   override def checkInputDataTypes(): TypeCheckResult = {
     val f1 = AggUtil.checkFoldable(qExpr, "quotient_filter q")
@@ -230,111 +331,52 @@ case class QuotientFilterAgg(
     }
   }
 
-  override def createAggregationBuffer(): QuotientBuf = new QuotientBuf(null)
-
   /** Key list longer than this outgrows the dense table (8 B/key vs
-    * 2^q*(r+3)/8 table bytes); tiny q floors at 1 so full-filter errors
-    * still surface during update.
+    * 2^q*(r+3)/8 table bytes); tiny q floors at 1 so a full table still
+    * fails the query.
     */
-  private lazy val denseThreshold: Long = math.max(1L, ((1L << q) * (r + 3)) / 64)
+  override protected lazy val denseThreshold: Long = math.max(1L, ((1L << q) * (r + 3)) / 64)
 
   private def insertOrThrow(f: QuotientFilter, h: Long): Unit =
     if (!f.insert(h))
       throw new IllegalStateException(
         "Failed to insert item into quotient filter, likely it is full")
 
-  private def densify(buf: QuotientBuf): Unit = {
-    if (buf.filter == null) buf.filter = QuotientFilter.create(q, r)
+  override protected def create(): QuotientFilter = QuotientFilter.create(q, r)
+  override protected def insertAll(f: QuotientFilter, keys: Array[Long], n: Int): Unit = {
     var i = 0
-    while (i < buf.keyCount) { insertOrThrow(buf.filter, buf.keys(i)); i += 1 }
-    buf.clearKeys()
+    while (i < n) { insertOrThrow(f, keys(i)); i += 1 }
   }
-
-  override def update(buf: QuotientBuf, input: InternalRow): QuotientBuf = {
-    val v = child.eval(input)
-    if (v != null) {
-      if (mergeMode) {
-        if (buf.filter == null) buf.filter = QuotientFilter.create(q, r)
-        buf.filter = buf.filter.merge(
-          QuotientFilter.deserialize(v.asInstanceOf[Array[Byte]]), strict)
-      } else if (buf.filter != null) {
-        insertOrThrow(buf.filter, v.asInstanceOf[Long])
-      } else {
-        buf.appendKey(v.asInstanceOf[Long])
-        if (buf.keyCount >= denseThreshold) densify(buf)
-      }
-    }
-    buf
-  }
-
-  override def merge(buf: QuotientBuf, other: QuotientBuf): QuotientBuf = {
-    if (!other.isEmpty) {
-      if (buf.filter == null && other.filter == null) {
-        var i = 0
-        while (i < other.keyCount) { buf.appendKey(other.keys(i)); i += 1 }
-        if (buf.keyCount >= denseThreshold) densify(buf)
-      } else if (buf.filter == null) {
-        if (buf.keyCount == 0) buf.filter = other.filter
-        else { densify(buf); buf.filter = buf.filter.merge(other.filter, strict) }
-      } else if (other.filter == null) {
-        var i = 0
-        while (i < other.keyCount) { insertOrThrow(buf.filter, other.keys(i)); i += 1 }
-      } else {
-        buf.filter = buf.filter.merge(other.filter, strict)
-      }
-    }
-    buf
-  }
-
-  override def eval(buf: QuotientBuf): Any =
-    if (buf.isEmpty) null
+  // hash input: a full table fails the query, whichever partial densified
+  // first; the merge overload keeps the reference's silent drop unless strict
+  override protected def union(f: QuotientFilter, o: QuotientFilter): QuotientFilter =
+    if (mergeMode) f.merge(o, strict)
     else {
-      if (buf.filter == null) densify(buf)
-      buf.filter.serialize()
+      val it = new QuotientFilterIterator(o)
+      while (!it.done) insertOrThrow(f, it.next())
+      f
     }
+  override protected def encode(f: QuotientFilter): Array[Byte] = f.serialize()
+  override protected def decode(blob: Array[Byte]): QuotientFilter = QuotientFilter.deserialize(blob)
 
-  // Partial-state shuffle format: compact [u8 q][u8 r][u64 values...] —
-  // stored (quotient<<r | remainder) values for dense buffers, raw keys for
-  // sparse ones (insert() masks to the low q+r bits, so both replay
-  // identically). NOT the dense table blob: a near-full q=24 filter is
-  // ~22MB dense but entries*8 bytes compact, and the final-side rebuild
-  // costs the same inserts an absorb-merge pays anyway.
-  override def serialize(buf: QuotientBuf): Array[Byte] =
-    if (buf.isEmpty) Array.emptyByteArray
-    else if (buf.filter == null) {
-      val out = ByteBuffer.allocate(2 + 8 * buf.keyCount).order(ByteOrder.LITTLE_ENDIAN)
-      out.put(q.toByte).put(r.toByte)
-      var i = 0
-      while (i < buf.keyCount) { out.putLong(buf.keys(i)); i += 1 }
-      out.array()
-    } else {
-      val f = buf.filter
-      val out = ByteBuffer.allocate(2 + 8 * f.entries.toInt).order(ByteOrder.LITTLE_ENDIAN)
-      out.put(f.qbits.toByte).put(f.rbits.toByte)
-      val it = new graft.core.QuotientFilterIterator(f)
-      while (!it.done) out.putLong(it.next())
-      out.array()
-    }
-  override def deserialize(bytes: Array[Byte]): QuotientBuf =
-    if (bytes.isEmpty) new QuotientBuf(null)
-    else {
-      val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
-      val sq = bb.get() & 0xff
-      val sr = bb.get() & 0xff
-      if (sq == q && sr == r) {
-        // stay sparse across the shuffle: the final task then densifies
-        // once, instead of once per incoming partial
-        val buf = new QuotientBuf(null)
-        while (bb.remaining() >= 8) buf.appendKey(bb.getLong())
-        if (buf.keyCount >= denseThreshold) densify(buf)
-        buf
-      } else {
-        // merge-overload partials can carry grown (q,r); rebuild dense
-        val f = QuotientFilter.create(sq, sr)
-        while (bb.remaining() >= 8) f.insert(bb.getLong())
-        new QuotientBuf(f)
-      }
-    }
+  // Dense form on the partial wire: compact [u8 q][u8 r][u64 values...] of
+  // the stored (quotient<<r | remainder) values, q >= 1 doubling as the
+  // mode byte — NOT the dense table blob: a near-full q=24 filter is ~22MB
+  // dense but entries*8 bytes compact. The (q,r) header carries the grown
+  // geometry of merge-overload partials.
+  override protected def encodePartial(f: QuotientFilter): Array[Byte] = {
+    val out = ByteBuffer.allocate(2 + 8 * f.entries.toInt).order(ByteOrder.LITTLE_ENDIAN)
+    out.put(f.qbits.toByte).put(f.rbits.toByte)
+    val it = new QuotientFilterIterator(f)
+    while (!it.done) out.putLong(it.next())
+    out.array()
+  }
+  override protected def decodePartial(bytes: Array[Byte]): QuotientFilter = {
+    val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
+    val f = QuotientFilter.create(bb.get() & 0xff, bb.get() & 0xff)
+    while (bb.remaining() >= 8) f.insert(bb.getLong())
+    f
+  }
 
   override def withNewMutableAggBufferOffset(newOffset: Int): QuotientFilterAgg =
     copy(mutableAggBufferOffset = newOffset)
@@ -342,45 +384,6 @@ case class QuotientFilterAgg(
     copy(inputAggBufferOffset = newOffset)
   override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): QuotientFilterAgg =
     copy(qExpr = newChildren(0), rExpr = newChildren(1), child = newChildren(2))
-}
-
-/** Growable raw-key list shared by the SPARSE-UNTIL-DENSE aggregation
-  * buffers (bloom / quotient / classic bloom). Rationale: dense filter
-  * state is allocated per partial-aggregation buffer — i.e. PER CORE — so
-  * at 2^26 bloom sectors every core holds 512 MB during the partial phase
-  * (16 GB on a 32-core executor, an OOM observed in the 50M-key smoke,
-  * graft.tools.BigGroupSmoke). Buffers therefore start as this raw key
-  * list (8 B per inserted key — also far smaller on the shuffle wire for
-  * small groups) and DENSIFY once the list would outgrow the dense
-  * structure, capping partial memory at min(8*keys, dense size) + O(1).
-  * Insertion order never affects the final bits (pure OR / set union), so
-  * results are byte-identical on every path.
-  */
-trait SparseKeys {
-  var keys: Array[Long] = null
-  var keyCount: Int = 0
-
-  final def appendKey(h: Long): Unit = {
-    if (keys == null) keys = new Array[Long](64)
-    else if (keyCount == keys.length) keys = java.util.Arrays.copyOf(keys, keys.length * 2)
-    keys(keyCount) = h
-    keyCount += 1
-  }
-
-  final def clearKeys(): Unit = { keys = null; keyCount = 0 }
-}
-
-/** Mutable bloom aggregation state (see [[SparseKeys]]). */
-final class BloomBuf(var filter: DuckDbBloomFilter, var count: Long) extends SparseKeys {
-
-  def densify(numSectors: Int): Unit = {
-    if (filter == null) filter = DuckDbBloomFilter.create(numSectors)
-    var i = 0
-    while (i < keyCount) { filter.insert(keys(i)); i += 1 }
-    clearKeys()
-  }
-
-  def isEmpty: Boolean = filter == null && keyCount == 0
 }
 
 /** SQL: `bitfilters_duckdb_bloom_filter_create(version, num_sectors, hash)`.
@@ -392,11 +395,9 @@ case class DuckDbBloomFilterCreateAgg(
     child: Expression,
     override val mutableAggBufferOffset: Int = 0,
     override val inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[BloomBuf] {
+  extends DenseKeyBufferAgg[DuckDbBloomFilter] {
 
   override def children: Seq[Expression] = Seq(versionExpr, sectorsExpr, child)
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
   override def prettyName: String = "bitfilters_duckdb_bloom_filter_create"
 
   private lazy val numSectors: Int = {
@@ -423,77 +424,18 @@ case class DuckDbBloomFilterCreateAgg(
     TypeCheckResult.TypeCheckSuccess
   }
 
-  override def createAggregationBuffer(): BloomBuf = new BloomBuf(null, 0L)
-
-  override def update(buf: BloomBuf, input: InternalRow): BloomBuf = {
-    val v = child.eval(input)
-    if (v != null) {
-      buf.count += 1
-      if (buf.filter != null) buf.filter.insert(v.asInstanceOf[Long])
-      else {
-        buf.appendKey(v.asInstanceOf[Long])
-        if (buf.keyCount >= numSectors) buf.densify(numSectors)
-      }
-    }
-    buf
+  // a sector is 8 B, a key is 8 B
+  override protected def denseThreshold: Long = numSectors
+  override protected def create(): DuckDbBloomFilter = DuckDbBloomFilter.create(numSectors)
+  override protected def insertAll(f: DuckDbBloomFilter, keys: Array[Long], n: Int): Unit = {
+    var i = 0
+    while (i < n) { f.insert(keys(i)); i += 1 }
   }
-
-  override def merge(buf: BloomBuf, other: BloomBuf): BloomBuf = {
-    if (!other.isEmpty) {
-      buf.count += other.count
-      if (buf.filter == null && other.filter == null) {
-        var i = 0
-        while (i < other.keyCount) { buf.appendKey(other.keys(i)); i += 1 }
-        if (buf.keyCount >= numSectors) buf.densify(numSectors)
-      } else {
-        if (buf.filter == null) buf.densify(numSectors)
-        if (other.filter != null) buf.filter.orMerge(other.filter)
-        else {
-          var i = 0
-          while (i < other.keyCount) { buf.filter.insert(other.keys(i)); i += 1 }
-        }
-      }
-    }
-    buf
+  override protected def union(f: DuckDbBloomFilter, o: DuckDbBloomFilter): DuckDbBloomFilter = {
+    f.orMerge(o); f
   }
-
-  override def eval(buf: BloomBuf): Any =
-    if (buf.isEmpty) null
-    else {
-      if (buf.filter == null) buf.densify(numSectors)
-      buf.filter.serialize()
-    }
-
-  // shuffle wire format (internal, same-version only):
-  //   [count:8][mode:1][mode=0: keyCount×8 raw keys | mode=1: filter blob]
-  override def serialize(buf: BloomBuf): Array[Byte] =
-    if (buf.isEmpty) Array.emptyByteArray
-    else if (buf.filter == null) {
-      val out = ByteBuffer.allocate(9 + 8 * buf.keyCount).order(ByteOrder.LITTLE_ENDIAN)
-      out.putLong(buf.count).put(0.toByte)
-      var i = 0
-      while (i < buf.keyCount) { out.putLong(buf.keys(i)); i += 1 }
-      out.array()
-    } else {
-      val blob = buf.filter.serialize()
-      val out = ByteBuffer.allocate(9 + blob.length).order(ByteOrder.LITTLE_ENDIAN)
-      out.putLong(buf.count).put(1.toByte).put(blob)
-      out.array()
-    }
-
-  override def deserialize(bytes: Array[Byte]): BloomBuf =
-    if (bytes.isEmpty) new BloomBuf(null, 0L)
-    else {
-      val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
-      val count = bb.getLong
-      val mode = bb.get()
-      if (mode == 0) {
-        val buf = new BloomBuf(null, count)
-        while (bb.remaining() >= 8) buf.appendKey(bb.getLong())
-        buf
-      } else
-        new BloomBuf(DuckDbBloomFilter.deserialize(java.util.Arrays.copyOfRange(bytes, 9, bytes.length)), count)
-    }
+  override protected def encode(f: DuckDbBloomFilter): Array[Byte] = f.serialize()
+  override protected def decode(blob: Array[Byte]): DuckDbBloomFilter = DuckDbBloomFilter.deserialize(blob)
 
   override def withNewMutableAggBufferOffset(newOffset: Int): DuckDbBloomFilterCreateAgg =
     copy(mutableAggBufferOffset = newOffset)

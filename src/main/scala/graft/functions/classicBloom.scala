@@ -1,22 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.types._
 
 import graft.core.ClassicBloomFilter
-
-/** Mutable classic-bloom aggregation state — SPARSE-UNTIL-DENSE (see
-  * [[graft.functions.SparseKeys]]; a dense bit array per partial buffer
-  * is per-core memory at large capacities). Value-mode buffers hold the
-  * 64-bit value hashes (the filter derives its probe positions from that
-  * hash, so replay is lossless).
-  */
-final class ClassicBloomBuf(var filter: ClassicBloomFilter) extends SparseKeys {
-  def isEmpty: Boolean = filter == null && keyCount == 0
-}
 
 /** SQL: `bloomfilter(capacity, fpr, value_or_blob)` — the reference's
   * written-but-disabled classic bloom family
@@ -25,6 +13,8 @@ final class ClassicBloomBuf(var filter: ClassicBloomFilter) extends SparseKeys {
   * are constants, a BINARY third argument switches to the OR-merge overload
   * (cpp:180-218), typed values are accepted directly (hashed internally, no
   * pre-hash step needed — the only family with that property, cpp:336-345).
+  * Sparse buffers hold the 64-bit value hashes (the filter derives its
+  * probe positions from that hash, so replay is lossless).
   */
 case class ClassicBloomFilterAgg(
     capacityExpr: Expression,
@@ -32,18 +22,15 @@ case class ClassicBloomFilterAgg(
     child: Expression,
     override val mutableAggBufferOffset: Int = 0,
     override val inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[ClassicBloomBuf] {
+  extends DenseKeyBufferAgg[ClassicBloomFilter] {
 
   override def children: Seq[Expression] = Seq(capacityExpr, fprExpr, child)
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
   override def prettyName: String = "bloomfilter"
 
   private lazy val capacity: Long = AggUtil.foldableLong(capacityExpr, "Bloom filter capacity")
   private lazy val fpr: Double = capacityToDouble(fprExpr.eval(null))
-  private lazy val mergeMode: Boolean = child.dataType == BinaryType
   @transient private lazy val hasher: Any => Long =
-    if (mergeMode) null else HashDispatch.hasherFor(child.dataType, "bloomfilter")
+    HashDispatch.hasherFor(child.dataType, "bloomfilter")
 
   private def capacityToDouble(v: Any): Double = v match {
     case null => throw new IllegalArgumentException("Bloom false positive rate cannot be NULL")
@@ -67,91 +54,21 @@ case class ClassicBloomFilterAgg(
       s"bloomfilter value must be a numeric/string/binary type or BINARY filter blob, got ${child.dataType.sql}")
   }
 
-  override def createAggregationBuffer(): ClassicBloomBuf = new ClassicBloomBuf(null)
-
   /** Keys beyond this outgrow the dense bit array (8 B/key vs bits/8). */
-  private lazy val denseThreshold: Long =
+  override protected lazy val denseThreshold: Long =
     math.max(1L, ClassicBloomFilter.capacityFor(capacity, fpr) / 64)
 
-  private def densify(buf: ClassicBloomBuf): Unit = {
-    if (buf.filter == null) buf.filter = ClassicBloomFilter.create(capacity, fpr)
+  override protected def keyOf(v: Any): Long = hasher(v)
+  override protected def create(): ClassicBloomFilter = ClassicBloomFilter.create(capacity, fpr)
+  override protected def insertAll(f: ClassicBloomFilter, keys: Array[Long], n: Int): Unit = {
     var i = 0
-    while (i < buf.keyCount) { buf.filter.insert(buf.keys(i)); i += 1 }
-    buf.clearKeys()
+    while (i < n) { f.insert(keys(i)); i += 1 }
   }
-
-  override def update(buf: ClassicBloomBuf, input: InternalRow): ClassicBloomBuf = {
-    val v = child.eval(input)
-    if (v != null) {
-      if (mergeMode) {
-        if (buf.filter == null) buf.filter = ClassicBloomFilter.create(capacity, fpr)
-        buf.filter.orMerge(ClassicBloomFilter.deserialize(v.asInstanceOf[Array[Byte]]))
-      } else if (buf.filter != null) {
-        buf.filter.insert(hasher(v))
-      } else {
-        buf.appendKey(hasher(v))
-        if (buf.keyCount >= denseThreshold) densify(buf)
-      }
-    }
-    buf
+  override protected def union(f: ClassicBloomFilter, o: ClassicBloomFilter): ClassicBloomFilter = {
+    f.orMerge(o); f
   }
-
-  override def merge(buf: ClassicBloomBuf, other: ClassicBloomBuf): ClassicBloomBuf = {
-    if (!other.isEmpty) {
-      if (buf.filter == null && other.filter == null) {
-        var i = 0
-        while (i < other.keyCount) { buf.appendKey(other.keys(i)); i += 1 }
-        if (buf.keyCount >= denseThreshold) densify(buf)
-      } else if (buf.filter == null) {
-        if (buf.keyCount == 0) buf.filter = other.filter
-        else { densify(buf); buf.filter.orMerge(other.filter) }
-      } else if (other.filter == null) {
-        var i = 0
-        while (i < other.keyCount) { buf.filter.insert(other.keys(i)); i += 1 }
-      } else {
-        buf.filter.orMerge(other.filter)
-      }
-    }
-    buf
-  }
-
-  override def eval(buf: ClassicBloomBuf): Any =
-    if (buf.isEmpty) null
-    else {
-      if (buf.filter == null) densify(buf)
-      buf.filter.serialize()
-    }
-
-  // shuffle wire format (internal): [mode:1][mode=0: keyCount×8 hashes |
-  // mode=1: filter blob]
-  override def serialize(buf: ClassicBloomBuf): Array[Byte] =
-    if (buf.isEmpty) Array.emptyByteArray
-    else if (buf.filter == null) {
-      val out = java.nio.ByteBuffer.allocate(1 + 8 * buf.keyCount)
-        .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-      out.put(0.toByte)
-      var i = 0
-      while (i < buf.keyCount) { out.putLong(buf.keys(i)); i += 1 }
-      out.array()
-    } else {
-      val blob = buf.filter.serialize()
-      val out = java.nio.ByteBuffer.allocate(1 + blob.length)
-        .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-      out.put(1.toByte).put(blob)
-      out.array()
-    }
-  override def deserialize(bytes: Array[Byte]): ClassicBloomBuf =
-    if (bytes.isEmpty) new ClassicBloomBuf(null)
-    else if (bytes(0) == 0) {
-      val bb = java.nio.ByteBuffer.wrap(bytes, 1, bytes.length - 1)
-        .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-      val buf = new ClassicBloomBuf(null)
-      while (bb.remaining() >= 8) buf.appendKey(bb.getLong())
-      if (buf.keyCount >= denseThreshold) densify(buf)
-      buf
-    } else
-      new ClassicBloomBuf(ClassicBloomFilter.deserialize(
-        java.util.Arrays.copyOfRange(bytes, 1, bytes.length)))
+  override protected def encode(f: ClassicBloomFilter): Array[Byte] = f.serialize()
+  override protected def decode(blob: Array[Byte]): ClassicBloomFilter = ClassicBloomFilter.deserialize(blob)
 
   override def withNewMutableAggBufferOffset(newOffset: Int): ClassicBloomFilterAgg =
     copy(mutableAggBufferOffset = newOffset)

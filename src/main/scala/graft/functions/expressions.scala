@@ -3,27 +3,13 @@ package graft.functions
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{Block, CodeGenerator, CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.core._
 
-/** Base for the `*_contains` probe expressions: (filter BLOB, hash BIGINT) ->
-  * BOOLEAN with standard null propagation.
-  *
-  * All probes are ZERO-COPY against the serialized blob bytes (no filter
-  * materialization per row) and implement `doGenCode`, so `WHERE
-  * xyz_contains(...)` predicates stay inside whole-stage codegen. This
-  * matters twice at scale: (a) the probe is a handful of inlined integer ops,
-  * and (b) an expression that falls back to interpreted mode would eject its
-  * whole operator from codegen, forcing joined rows (which carry the filter
-  * blobs) to be materialized at stage boundaries — at 100k+ rows x 100KB+
-  * blobs that is gigabytes of row copies. Mirrors the reference's
-  * constant-vector fast path intent (src/bitfilters_xor_filter.cpp:223-232)
-  * with Spark's compilation model.
-  */
 /** Leaf-whitelist test for "safe to evaluate once per task": the expression
   * is deterministic, not foldable (a plain Literal needs no cache), and
   * every leaf is a Literal or a subquery result (`PlanExpression` covers
@@ -135,7 +121,97 @@ case class BroadcastBlobMap(
     copy(child = c)
 }
 
-abstract class FilterContainsExpression extends BinaryExpression {
+/** The once-per-task blob evaluation shared by every probe scalar
+  * (`*_contains`, `bitfilters_duckdb_bloom_filter_probe`, `cms_estimate`),
+  * for both `eval` and `doGenCode`. A blob argument that is row-independent
+  * (see [[RowIndependent]]) but not a plain literal — e.g. a scalar
+  * subquery, or a struct field of a MERGED scalar subquery — is evaluated
+  * ONCE per task: evaluating it per row would copy the whole serialized
+  * blob out of its container for every probe (measured ~2 ms/row for a
+  * 120 KB fuse16 blob — turns a sub-second scan into minutes at scale).
+  * This is the Spark-native mirror of the reference's constant-vector fast
+  * path (src/bitfilters_xor_filter.cpp:223-232).
+  */
+trait OncePerTaskBlob extends Expression {
+  /** The argument yielding the serialized blob. */
+  protected def blobExpr: Expression
+
+  protected def rowIndependentBlob: Boolean = RowIndependent(blobExpr)
+
+  // benign-race cache for the interpreted path (value write precedes flag)
+  @transient private var cachedBlob: Array[Byte] = _
+  @transient @volatile private var cachedBlobSet = false
+
+  protected def evalBlob(input: InternalRow): Array[Byte] =
+    if (!rowIndependentBlob) blobExpr.eval(input).asInstanceOf[Array[Byte]]
+    else {
+      if (!cachedBlobSet) {
+        cachedBlob = blobExpr.eval(input).asInstanceOf[Array[Byte]]
+        cachedBlobSet = true
+      }
+      cachedBlob
+    }
+
+  /** Java for the blob: the code, and a term holding the blob or null. A
+    * row-independent blob's code runs inside an init-once guard (it reads
+    * no input columns, so this is safe) and lands in mutable state `state`.
+    */
+  protected def genBlob(ctx: CodegenContext, state: String): (Block, String) =
+    if (rowIndependentBlob) {
+      val blobVar = ctx.addMutableState("byte[]", state)
+      val initVar = ctx.addMutableState("boolean", state + "Init")
+      val f = blobExpr.genCode(ctx)
+      (code"""
+      if (!$initVar) {
+        ${f.code}
+        $blobVar = ${f.isNull} ? null : ${f.value};
+        $initVar = true;
+      }""", blobVar)
+    } else {
+      val f = blobExpr.genCode(ctx)
+      (f.code, s"(${f.isNull} ? null : ${f.value})")
+    }
+
+  /** Java for a row-independent (blob, key) probe of BOOLEAN or BIGINT
+    * result: NULL when the key or the blob is NULL, else `call(blob, key)`.
+    * Locals are named `<local>IsNull` and `<local>Value`.
+    */
+  protected def genKeyedProbe(ctx: CodegenContext, ev: ExprCode, key: Expression,
+      state: String, local: String)(call: (String, String) => String): ExprCode = {
+    val (blobCode, blob) = genBlob(ctx, state)
+    val h = key.genCode(ctx)
+    val isNullVar = ctx.freshName(local + "IsNull")
+    val valueVar = ctx.freshName(local + "Value")
+    val javaType = CodeGenerator.javaType(dataType)
+    ev.copy(code = code"""$blobCode
+      ${h.code}
+      boolean $isNullVar = true;
+      $javaType $valueVar = ${if (dataType == BooleanType) "false" else "0L"};
+      if (!(${h.isNull}) && $blob != null) {
+        $isNullVar = false;
+        $valueVar = ${call(blob, h.value.toString)};
+      }
+      boolean ${ev.isNull} = $isNullVar;
+      $javaType ${ev.value} = $valueVar;
+    """)
+  }
+}
+
+/** Base for the `*_contains` probe expressions: (filter BLOB, hash BIGINT) ->
+  * BOOLEAN with standard null propagation.
+  *
+  * All probes are ZERO-COPY against the serialized blob bytes (no filter
+  * materialization per row) and implement `doGenCode`, so `WHERE
+  * xyz_contains(...)` predicates stay inside whole-stage codegen. This
+  * matters twice at scale: (a) the probe is a handful of inlined integer ops,
+  * and (b) an expression that falls back to interpreted mode would eject its
+  * whole operator from codegen, forcing joined rows (which carry the filter
+  * blobs) to be materialized at stage boundaries — at 100k+ rows x 100KB+
+  * blobs that is gigabytes of row copies. Mirrors the reference's
+  * constant-vector fast path intent (src/bitfilters_xor_filter.cpp:223-232)
+  * with Spark's compilation model.
+  */
+abstract class FilterContainsExpression extends BinaryExpression with OncePerTaskBlob {
 
   override def checkInputDataTypes(): TypeCheckResult =
     if (left.dataType != BinaryType)
@@ -146,6 +222,7 @@ abstract class FilterContainsExpression extends BinaryExpression {
 
   override def dataType: DataType = BooleanType
   override def nullable: Boolean = left.nullable || right.nullable
+  override protected def blobExpr: Expression = left
 
   /** Probe a serialized filter blob (zero-copy). */
   protected def probe(blob: Array[Byte], hash: Long): Boolean
@@ -162,62 +239,18 @@ abstract class FilterContainsExpression extends BinaryExpression {
   /** Java source mapping the right-hand value term to the probe hash. */
   protected def hashCall(term: String): String = term
 
-  /** The filter child is row-independent (see [[RowIndependent]]) but not a
-    * plain literal — e.g. a scalar subquery, or a struct field of a MERGED
-    * scalar subquery. Evaluating it per row would copy the whole serialized
-    * filter out of its container for every probe (measured ~2 ms/row for a
-    * 120 KB fuse16 blob — turns a sub-second scan into minutes at scale),
-    * so evaluate it ONCE per task instead. This is the Spark-native mirror
-    * of the reference's constant-vector fast path
-    * (src/bitfilters_xor_filter.cpp:223-232).
-    */
-  protected def rowIndependentFilter: Boolean = RowIndependent(left)
-
-  // benign-race cache for the interpreted path (value write precedes flag)
-  @transient private var cachedBlob: Array[Byte] = _
-  @transient @volatile private var cachedBlobSet = false
-
   override def eval(input: InternalRow): Any = {
     val h = right.eval(input)
     if (h == null) return null
-    val blob =
-      if (rowIndependentFilter) {
-        if (!cachedBlobSet) {
-          cachedBlob = left.eval(input).asInstanceOf[Array[Byte]]
-          cachedBlobSet = true
-        }
-        cachedBlob
-      } else left.eval(input).asInstanceOf[Array[Byte]]
+    val blob = evalBlob(input)
     if (blob == null) return null
     probe(blob, hashOf(h))
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    if (!rowIndependentFilter) return defineCodeGen(ctx, ev, (f, h) => probeCall(f, hashCall(h)))
-    // once-per-task blob evaluation: the child's code runs inside an
-    // init-once guard (it reads no input columns, so this is safe)
-    val blobVar = ctx.addMutableState("byte[]", "graftConstBlob")
-    val initVar = ctx.addMutableState("boolean", "graftConstBlobInit")
-    val f = left.genCode(ctx)
-    val h = right.genCode(ctx)
-    val isNullVar = ctx.freshName("probeIsNull")
-    val valueVar = ctx.freshName("probeValue")
-    ev.copy(code = code"""
-      if (!$initVar) {
-        ${f.code}
-        $blobVar = ${f.isNull} ? null : ${f.value};
-        $initVar = true;
-      }
-      ${h.code}
-      boolean $isNullVar = true;
-      boolean $valueVar = false;
-      if (!(${h.isNull}) && $blobVar != null) {
-        $isNullVar = false;
-        $valueVar = ${probeCall(blobVar, hashCall(h.value.toString))};
-      }
-      boolean ${ev.isNull} = $isNullVar;
-      boolean ${ev.value} = $valueVar;
-    """)
+    val call = (f: String, h: String) => probeCall(f, hashCall(h))
+    if (rowIndependentBlob) genKeyedProbe(ctx, ev, right, "graftConstBlob", "probe")(call)
+    else defineCodeGen(ctx, ev, call)
   }
 }
 
@@ -394,7 +427,7 @@ case class DuckDbHashExpr(children: Seq[Expression]) extends Expression {
   * src/bitfilters_duckdb_bloom_filter.cpp:444-446) we also accept a
   * per-row filter column. Reference cpp:327-468.
   */
-case class DuckDbBloomFilterProbe(children: Seq[Expression]) extends Expression {
+case class DuckDbBloomFilterProbe(children: Seq[Expression]) extends Expression with OncePerTaskBlob {
 
   override def dataType: DataType = BooleanType
   override def nullable: Boolean = true
@@ -425,24 +458,10 @@ case class DuckDbBloomFilterProbe(children: Seq[Expression]) extends Expression 
     valueExprs.map(e => HashDispatch.hasherFor(e.dataType, "bitfilters_duckdb_bloom_filter_probe")).toArray
   @transient private lazy val valueArr: Array[Expression] = valueExprs.toArray
 
-  /** See [[FilterContainsExpression.rowIndependentFilter]]: row-independent
-    * non-literal filters (scalar subqueries, merged-subquery struct fields)
-    * are evaluated once per task, never per row.
-    */
-  private def rowIndependentFilter: Boolean = RowIndependent(filterExpr)
-
-  @transient private var cachedBlob: Array[Byte] = _
-  @transient @volatile private var cachedBlobSet = false
+  override protected def blobExpr: Expression = filterExpr
 
   override def eval(input: InternalRow): Any = {
-    val blob =
-      if (rowIndependentFilter) {
-        if (!cachedBlobSet) {
-          cachedBlob = filterExpr.eval(input).asInstanceOf[Array[Byte]]
-          cachedBlobSet = true
-        }
-        cachedBlob
-      } else filterExpr.eval(input).asInstanceOf[Array[Byte]]
+    val blob = evalBlob(input)
     if (blob == null) return null
     var h = 0L
     var i = 0
@@ -456,18 +475,7 @@ case class DuckDbBloomFilterProbe(children: Seq[Expression]) extends Expression 
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val f = filterExpr.genCode(ctx)
-    val blobCode =
-      if (rowIndependentFilter) {
-        val blobVar = ctx.addMutableState("byte[]", "graftConstBlob")
-        val initVar = ctx.addMutableState("boolean", "graftConstBlobInit")
-        (code"""
-          if (!$initVar) {
-            ${f.code}
-            $blobVar = ${f.isNull} ? null : ${f.value};
-            $initVar = true;
-          }""", blobVar)
-      } else (f.code, s"(${f.isNull} ? null : ${f.value})")
+    val blobCode = genBlob(ctx, "graftConstBlob")
     val hVar = ctx.freshName("ddbHash")
     val nullVar = ctx.freshName("ddbAnyNull")
     val hashCode = HashDispatch.genCombinedHash(ctx, valueExprs, hVar, nullVar)

@@ -1,7 +1,5 @@
 package graft.functions
 
-import java.nio.{ByteBuffer, ByteOrder}
-
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
@@ -20,18 +18,12 @@ import graft.core._
   * hashes, a BINARY last argument union-merges existing sketch blobs
   * (src/bitfilters_quotient_filter.cpp:269-289).
   *
-  * Aggregation state is SPARSE-UNTIL-DENSE for HLL and CMS (see
-  * [[SparseKeys]]): partial buffers are allocated PER CORE, so a dense
-  * 8 MB CMS per buffer across 32 cores costs 256 MB during the partial
-  * phase even for tiny groups. Buffers hold raw 8-byte keys until the key
-  * list would outgrow the dense structure. KMV state is already bounded
-  * (≤ k entries) and needs no such staging.
-  */
-final class HllBuf(var sketch: HllSketch) extends SparseKeys {
-  def isEmpty: Boolean = sketch == null && keyCount == 0
-}
-
-/** SQL: `hll_sketch(p, hash_or_blob)` — HyperLogLog register blob over
+  * HLL and CMS buffer keys sparse-until-dense through
+  * [[DenseKeyBufferAgg]]: a dense 8 MB CMS per partial buffer across 32
+  * cores would cost 256 MB even for tiny groups. KMV state is already
+  * bounded (≤ k entries) and needs no such staging.
+  *
+  * SQL: `hll_sketch(p, hash_or_blob)` — HyperLogLog register blob over
   * pre-hashed keys, or register-max merge of existing HLL blobs.
   */
 case class HllSketchAgg(
@@ -39,11 +31,9 @@ case class HllSketchAgg(
     child: Expression,
     override val mutableAggBufferOffset: Int = 0,
     override val inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[HllBuf] {
+  extends DenseKeyBufferAgg[HllSketch] {
 
   override def children: Seq[Expression] = Seq(pExpr, child)
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
   override def prettyName: String = "hll_sketch"
 
   private lazy val p: Int = {
@@ -52,9 +42,6 @@ case class HllSketchAgg(
       s"hll_sketch p must be in [${HllSketch.MinP}, ${HllSketch.MaxP}], got $v")
     v
   }
-  private lazy val mergeMode: Boolean = child.dataType == BinaryType
-  // registers are 2^p bytes = 2^p/8 longs-worth; keys cost 8 B each
-  private lazy val denseThreshold: Int = math.max(1, (1 << p) / 8)
 
   override def checkInputDataTypes(): TypeCheckResult = {
     val f = AggUtil.checkFoldable(pExpr, "hll_sketch p")
@@ -68,80 +55,16 @@ case class HllSketchAgg(
     }
   }
 
-  override def createAggregationBuffer(): HllBuf = new HllBuf(null)
-
-  private def densify(buf: HllBuf): Unit = {
-    if (buf.sketch == null) buf.sketch = HllSketch.create(p)
+  // registers are 2^p bytes = 2^p/8 longs-worth; keys cost 8 B each
+  override protected lazy val denseThreshold: Long = math.max(1, (1 << p) / 8)
+  override protected def create(): HllSketch = HllSketch.create(p)
+  override protected def insertAll(sk: HllSketch, keys: Array[Long], n: Int): Unit = {
     var i = 0
-    while (i < buf.keyCount) { buf.sketch.add(buf.keys(i)); i += 1 }
-    buf.clearKeys()
+    while (i < n) { sk.add(keys(i)); i += 1 }
   }
-
-  override def update(buf: HllBuf, input: InternalRow): HllBuf = {
-    val v = child.eval(input)
-    if (v != null) {
-      if (mergeMode) {
-        if (buf.sketch == null) { densify(buf) }
-        buf.sketch.mergeMax(HllSketch.deserialize(v.asInstanceOf[Array[Byte]]))
-      } else if (buf.sketch != null) buf.sketch.add(v.asInstanceOf[Long])
-      else {
-        buf.appendKey(v.asInstanceOf[Long])
-        if (buf.keyCount >= denseThreshold) densify(buf)
-      }
-    }
-    buf
-  }
-
-  override def merge(buf: HllBuf, other: HllBuf): HllBuf = {
-    if (!other.isEmpty) {
-      if (buf.sketch == null && other.sketch == null) {
-        var i = 0
-        while (i < other.keyCount) { buf.appendKey(other.keys(i)); i += 1 }
-        if (buf.keyCount >= denseThreshold) densify(buf)
-      } else {
-        if (buf.sketch == null) densify(buf)
-        if (other.sketch != null) buf.sketch.mergeMax(other.sketch)
-        else {
-          var i = 0
-          while (i < other.keyCount) { buf.sketch.add(other.keys(i)); i += 1 }
-        }
-      }
-    }
-    buf
-  }
-
-  override def eval(buf: HllBuf): Any =
-    if (buf.isEmpty) null // empty group finalizes to NULL, like every family
-    else {
-      if (buf.sketch == null) densify(buf)
-      buf.sketch.serialize()
-    }
-
-  // shuffle wire: [u8 mode][mode=0: raw keys ×8 | mode=1: sketch blob]
-  override def serialize(buf: HllBuf): Array[Byte] =
-    if (buf.isEmpty) Array.emptyByteArray
-    else if (buf.sketch == null) {
-      val out = ByteBuffer.allocate(1 + 8 * buf.keyCount).order(ByteOrder.LITTLE_ENDIAN)
-      out.put(0.toByte)
-      var i = 0
-      while (i < buf.keyCount) { out.putLong(buf.keys(i)); i += 1 }
-      out.array()
-    } else {
-      val blob = buf.sketch.serialize()
-      val out = new Array[Byte](1 + blob.length)
-      out(0) = 1.toByte
-      System.arraycopy(blob, 0, out, 1, blob.length)
-      out
-    }
-
-  override def deserialize(bytes: Array[Byte]): HllBuf =
-    if (bytes.isEmpty) new HllBuf(null)
-    else if (bytes(0) == 0) {
-      val buf = new HllBuf(null)
-      val bb = ByteBuffer.wrap(bytes, 1, bytes.length - 1).order(ByteOrder.LITTLE_ENDIAN)
-      while (bb.remaining() >= 8) buf.appendKey(bb.getLong())
-      buf
-    } else new HllBuf(HllSketch.deserialize(java.util.Arrays.copyOfRange(bytes, 1, bytes.length)))
+  override protected def union(sk: HllSketch, o: HllSketch): HllSketch = { sk.mergeMax(o); sk }
+  override protected def encode(sk: HllSketch): Array[Byte] = sk.serialize()
+  override protected def decode(blob: Array[Byte]): HllSketch = HllSketch.deserialize(blob)
 
   override def withNewMutableAggBufferOffset(newOffset: Int): HllSketchAgg =
     copy(mutableAggBufferOffset = newOffset)
@@ -149,10 +72,6 @@ case class HllSketchAgg(
     copy(inputAggBufferOffset = newOffset)
   override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): HllSketchAgg =
     copy(pExpr = newChildren(0), child = newChildren(1))
-}
-
-final class CmsBuf(var sketch: CountMinSketch) extends SparseKeys {
-  def isEmpty: Boolean = sketch == null && keyCount == 0
 }
 
 /** SQL: `cms_sketch(depth, log2_width, hash_or_blob)` — Count-Min frequency
@@ -164,20 +83,13 @@ case class CmsSketchAgg(
     child: Expression,
     override val mutableAggBufferOffset: Int = 0,
     override val inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[CmsBuf] {
+  extends DenseKeyBufferAgg[CountMinSketch] {
 
   override def children: Seq[Expression] = Seq(depthExpr, log2wExpr, child)
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
   override def prettyName: String = "cms_sketch"
 
   private lazy val depth: Int = AggUtil.foldableLong(depthExpr, "cms_sketch depth").toInt
   private lazy val log2w: Int = AggUtil.foldableLong(log2wExpr, "cms_sketch log2_width").toInt
-  private lazy val mergeMode: Boolean = child.dataType == BinaryType
-  private lazy val denseThreshold: Int = {
-    val cells = depth.toLong << log2w
-    if (cells >= Int.MaxValue) Int.MaxValue else math.max(1, cells.toInt)
-  }
 
   override def checkInputDataTypes(): TypeCheckResult = {
     for ((e, what) <- Seq(depthExpr -> "cms_sketch depth", log2wExpr -> "cms_sketch log2_width")) {
@@ -193,80 +105,18 @@ case class CmsSketchAgg(
     }
   }
 
-  override def createAggregationBuffer(): CmsBuf = new CmsBuf(null)
-
-  private def densify(buf: CmsBuf): Unit = {
-    if (buf.sketch == null) buf.sketch = CountMinSketch.create(depth, log2w)
+  // one 8 B counter per cell, one 8 B key per row
+  override protected lazy val denseThreshold: Long = math.max(1L, depth.toLong << log2w)
+  override protected def create(): CountMinSketch = CountMinSketch.create(depth, log2w)
+  override protected def insertAll(sk: CountMinSketch, keys: Array[Long], n: Int): Unit = {
     var i = 0
-    while (i < buf.keyCount) { buf.sketch.add(buf.keys(i)); i += 1 }
-    buf.clearKeys()
+    while (i < n) { sk.add(keys(i)); i += 1 }
   }
-
-  override def update(buf: CmsBuf, input: InternalRow): CmsBuf = {
-    val v = child.eval(input)
-    if (v != null) {
-      if (mergeMode) {
-        if (buf.sketch == null) densify(buf)
-        buf.sketch.addMerge(CountMinSketch.deserialize(v.asInstanceOf[Array[Byte]]))
-      } else if (buf.sketch != null) buf.sketch.add(v.asInstanceOf[Long])
-      else {
-        buf.appendKey(v.asInstanceOf[Long])
-        if (buf.keyCount >= denseThreshold) densify(buf)
-      }
-    }
-    buf
+  override protected def union(sk: CountMinSketch, o: CountMinSketch): CountMinSketch = {
+    sk.addMerge(o); sk
   }
-
-  override def merge(buf: CmsBuf, other: CmsBuf): CmsBuf = {
-    if (!other.isEmpty) {
-      if (buf.sketch == null && other.sketch == null) {
-        var i = 0
-        while (i < other.keyCount) { buf.appendKey(other.keys(i)); i += 1 }
-        if (buf.keyCount >= denseThreshold) densify(buf)
-      } else {
-        if (buf.sketch == null) densify(buf)
-        if (other.sketch != null) buf.sketch.addMerge(other.sketch)
-        else {
-          var i = 0
-          while (i < other.keyCount) { buf.sketch.add(other.keys(i)); i += 1 }
-        }
-      }
-    }
-    buf
-  }
-
-  override def eval(buf: CmsBuf): Any =
-    if (buf.isEmpty) null
-    else {
-      if (buf.sketch == null) densify(buf)
-      buf.sketch.serialize()
-    }
-
-  // shuffle wire: [u8 mode][mode=0: raw keys ×8 | mode=1: sketch blob]
-  override def serialize(buf: CmsBuf): Array[Byte] =
-    if (buf.isEmpty) Array.emptyByteArray
-    else if (buf.sketch == null) {
-      val out = ByteBuffer.allocate(1 + 8 * buf.keyCount).order(ByteOrder.LITTLE_ENDIAN)
-      out.put(0.toByte)
-      var i = 0
-      while (i < buf.keyCount) { out.putLong(buf.keys(i)); i += 1 }
-      out.array()
-    } else {
-      val blob = buf.sketch.serialize()
-      val out = new Array[Byte](1 + blob.length)
-      out(0) = 1.toByte
-      System.arraycopy(blob, 0, out, 1, blob.length)
-      out
-    }
-
-  override def deserialize(bytes: Array[Byte]): CmsBuf =
-    if (bytes.isEmpty) new CmsBuf(null)
-    else if (bytes(0) == 0) {
-      val buf = new CmsBuf(null)
-      val bb = ByteBuffer.wrap(bytes, 1, bytes.length - 1).order(ByteOrder.LITTLE_ENDIAN)
-      while (bb.remaining() >= 8) buf.appendKey(bb.getLong())
-      buf
-    } else new CmsBuf(CountMinSketch.deserialize(java.util.Arrays.copyOfRange(bytes, 1, bytes.length)))
+  override protected def encode(sk: CountMinSketch): Array[Byte] = sk.serialize()
+  override protected def decode(blob: Array[Byte]): CountMinSketch = CountMinSketch.deserialize(blob)
 
   override def withNewMutableAggBufferOffset(newOffset: Int): CmsSketchAgg =
     copy(mutableAggBufferOffset = newOffset)
@@ -428,10 +278,12 @@ case class HllRegisters(child: Expression) extends UnaryExpression
   * `*_contains` family (a scalar-subquery CMS probed across a scan must
   * not re-copy the multi-MB blob per row).
   */
-case class CmsEstimate(left: Expression, right: Expression) extends BinaryExpression {
+case class CmsEstimate(left: Expression, right: Expression) extends BinaryExpression
+  with OncePerTaskBlob {
   override def prettyName: String = "cms_estimate"
   override def dataType: DataType = LongType
   override def nullable: Boolean = left.nullable || right.nullable
+  override protected def blobExpr: Expression = left
 
   override def checkInputDataTypes(): TypeCheckResult =
     if (left.dataType != BinaryType)
@@ -440,52 +292,18 @@ case class CmsEstimate(left: Expression, right: Expression) extends BinaryExpres
       TypeCheckResult.TypeCheckFailure(s"cms_estimate hash argument must be BIGINT, got ${right.dataType.sql}")
     else TypeCheckResult.TypeCheckSuccess
 
-  private def rowIndependentBlob: Boolean = RowIndependent(left)
-
-  @transient private var cachedBlob: Array[Byte] = _
-  @transient @volatile private var cachedBlobSet = false
-
   override def eval(input: InternalRow): Any = {
     val h = right.eval(input)
     if (h == null) return null
-    val blob =
-      if (rowIndependentBlob) {
-        if (!cachedBlobSet) {
-          cachedBlob = left.eval(input).asInstanceOf[Array[Byte]]
-          cachedBlobSet = true
-        }
-        cachedBlob
-      } else left.eval(input).asInstanceOf[Array[Byte]]
+    val blob = evalBlob(input)
     if (blob == null) return null
     CountMinSketch.probeBlob(blob, h.asInstanceOf[Long])
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    if (!rowIndependentBlob)
-      return defineCodeGen(ctx, ev, (f, h) => s"graft.core.CountMinSketch.probeBlob($f, $h)")
-    val blobVar = ctx.addMutableState("byte[]", "graftCmsBlob")
-    val initVar = ctx.addMutableState("boolean", "graftCmsBlobInit")
-    val f = left.genCode(ctx)
-    val h = right.genCode(ctx)
-    val isNullVar = ctx.freshName("cmsIsNull")
-    val valueVar = ctx.freshName("cmsValue")
-    ev.copy(code = code"""
-      if (!$initVar) {
-        ${f.code}
-        $blobVar = ${f.isNull} ? null : ${f.value};
-        $initVar = true;
-      }
-      ${h.code}
-      boolean $isNullVar = true;
-      long $valueVar = 0L;
-      if (!(${h.isNull}) && $blobVar != null) {
-        $isNullVar = false;
-        $valueVar = graft.core.CountMinSketch.probeBlob($blobVar, ${h.value});
-      }
-      boolean ${ev.isNull} = $isNullVar;
-      long ${ev.value} = $valueVar;
-    """)
+    val call = (f: String, h: String) => s"graft.core.CountMinSketch.probeBlob($f, $h)"
+    if (rowIndependentBlob) genKeyedProbe(ctx, ev, right, "graftCmsBlob", "cms")(call)
+    else defineCodeGen(ctx, ev, call)
   }
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): CmsEstimate =

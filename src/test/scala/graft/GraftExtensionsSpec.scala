@@ -21,9 +21,9 @@ class GraftExtensionsSpec extends AnyFunSuite {
     try {
       spark.sparkContext.setLogLevel("WARN")
       // every registered function resolves
-      GraftFunctions.all.foreach { case (name, _, _) =>
+      GraftFunctions.all.foreach { fn =>
         assert(spark.sessionState.functionRegistry
-          .functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(name)), name)
+          .functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(fn.name)), fn.name)
       }
       // a filter function works end-to-end
       val cnt = spark.sql("""
@@ -42,12 +42,15 @@ class GraftExtensionsSpec extends AnyFunSuite {
       assert(q.head().getLong(0) == 1000L)
       // catalog metadata parity: every function carries arguments + a
       // runnable example, surfaced by DESCRIBE FUNCTION EXTENDED
-      GraftFunctions.all.foreach { case (name, _, _) =>
-        assert(GraftFunctions.docs.contains(name), s"missing FnDoc for $name")
+      GraftFunctions.all.foreach { fn =>
+        val name = fn.name
+        assert(fn.usage.nonEmpty && fn.arguments.nonEmpty && fn.examples.nonEmpty, s"empty doc for $name")
         val described = spark.sql(s"DESCRIBE FUNCTION EXTENDED $name")
           .collect().map(_.getString(0)).mkString("\n")
         assert(described.contains("Examples:"), s"$name: no examples in\n$described")
         assert(described.contains("Arguments:"), s"$name: no arguments in\n$described")
+        // the same class as registerAll reports
+        assert(described.contains(s"Class: ${GraftFunctions.getClass.getName}"), described)
       }
       // the documented examples actually run
       val exampleSql = "SELECT bitfilters_duckdb_hash('v1.5.1', 42)"

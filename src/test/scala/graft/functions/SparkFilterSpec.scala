@@ -338,6 +338,10 @@ class SparkFilterSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(fails("SELECT quotient_filter(id, 4, bitfilters_duckdb_hash('v1.5.1', id)) FROM range(10)"))
     // full quotient filter errors like the reference (bitfilters_quotient_filter.cpp:196-198)
     assert(fails("SELECT quotient_filter(2, 4, bitfilters_duckdb_hash('v1.5.1', id)) FROM range(100)"))
+    // ... also when every partial fits and only their union overflows
+    val overflow = intercept[Exception](spark.sql(
+      "SELECT quotient_filter(10, 4, bitfilters_duckdb_hash('v1.5.1', id)) FROM range(0, 1500, 1, 4)").collect())
+    assert(overflow.getMessage.contains("likely it is full"), overflow.getMessage)
     assert(fails("SELECT bloomfilter(0, CAST(0.1 AS DOUBLE), id) FROM range(10)"))
     assert(fails("SELECT bloomfilter(10, CAST(1.5 AS DOUBLE), id) FROM range(10)"))
   }
@@ -371,17 +375,107 @@ class SparkFilterSpec extends AnyFunSuite with BeforeAndAfterAll {
     // quotient q=12 (threshold = 2^12*7/64 = 448 keys/buffer) with 3000
     // keys: single partition densifies during update, 32 partitions stay
     // sparse until the final merge — blob must be byte-identical. The
-    // duckdb bloom (64 sectors, threshold 64) crosses the same boundary.
-    def blobs(parts: Int): (Seq[Byte], Seq[Byte], Seq[Byte]) = {
+    // duckdb bloom (64 sectors, threshold 64), hll p=10 (threshold 128)
+    // and classic bloom cross the same boundary; cms 1x2^4 (threshold 16)
+    // densifies inside every ~94-key partition too, so the final merge
+    // takes over and unions dense partials. The BINARY merge overloads
+    // union per-group blobs of each family across the same partitionings.
+    def blobs(parts: Int): Seq[Seq[Byte]] = {
       spark.range(0, 3000).repartition(parts).createOrReplaceTempView("sdk")
       val r = spark.sql("""
-        SELECT quotient_filter(12, 4, bitfilters_duckdb_hash('v1.5.1', id)),
-               bitfilters_duckdb_bloom_filter_create('v1.5.1', 64, bitfilters_duckdb_hash('v1.5.1', id)),
-               bloomfilter(100, CAST(0.01 AS DOUBLE), id)
-        FROM sdk""").head()
-      (r.getAs[Array[Byte]](0).toSeq, r.getAs[Array[Byte]](1).toSeq, r.getAs[Array[Byte]](2).toSeq)
+        WITH g AS (
+          SELECT quotient_filter(12, 4, bitfilters_duckdb_hash('v1.5.1', id)) AS qf,
+                 bloomfilter(100, CAST(0.01 AS DOUBLE), id) AS bf,
+                 hll_sketch(10, bitfilters_duckdb_hash('v1.5.1', id)) AS hll,
+                 cms_sketch(1, 4, bitfilters_duckdb_hash('v1.5.1', id)) AS cms
+          FROM sdk GROUP BY id % 7)
+        SELECT
+          (SELECT quotient_filter(12, 4, bitfilters_duckdb_hash('v1.5.1', id)) FROM sdk),
+          (SELECT bitfilters_duckdb_bloom_filter_create('v1.5.1', 64, bitfilters_duckdb_hash('v1.5.1', id)) FROM sdk),
+          (SELECT bloomfilter(100, CAST(0.01 AS DOUBLE), id) FROM sdk),
+          (SELECT hll_sketch(10, bitfilters_duckdb_hash('v1.5.1', id)) FROM sdk),
+          (SELECT cms_sketch(1, 4, bitfilters_duckdb_hash('v1.5.1', id)) FROM sdk),
+          (SELECT quotient_filter(12, 4, qf) FROM g),
+          (SELECT bloomfilter(100, CAST(0.01 AS DOUBLE), bf) FROM g),
+          (SELECT hll_sketch(10, hll) FROM g),
+          (SELECT cms_sketch(1, 4, cms) FROM g)""").head()
+      (0 until r.length).map(i => r.getAs[Array[Byte]](i).toSeq)
     }
-    assert(blobs(1) == blobs(32))
+    val one = blobs(1)
+    assert(one.forall(_.nonEmpty))
+    // hash aggregate and merge overload agree: the union of per-group
+    // blobs is the blob of all keys
+    assert(one.slice(5, 9) == Seq(one(0), one(2), one(3), one(4)))
+    assert(one == blobs(32))
+  }
+
+  test("probes: codegen and interpreted paths agree on once-per-task and per-row blobs") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{BinaryType, LongType, StructField, StructType}
+    val h = "bitfilters_duckdb_hash('v1.5.1', id)"
+    val builds = Seq(
+      "xor8" -> s"xor8_filter($h)", "xor16" -> s"xor16_filter($h)",
+      "fuse8" -> s"binary_fuse8_filter($h)", "fuse16" -> s"binary_fuse16_filter($h)",
+      "qf" -> s"quotient_filter(12, 8, $h)",
+      "ddb" -> s"bitfilters_duckdb_bloom_filter_create('v1.5.1', 256, $h)",
+      "bf" -> "bloomfilter(1000, CAST(0.01 AS DOUBLE), id)",
+      "cms" -> s"cms_sketch(4, 8, $h)")
+    def probe(family: String, blob: String): String = family match {
+      case "xor8" | "xor16" => s"${family}_filter_contains($blob, $h)"
+      case "fuse8" => s"binary_fuse8_filter_contains($blob, $h)"
+      case "fuse16" => s"binary_fuse16_filter_contains($blob, $h)"
+      case "qf" => s"quotient_filter_contains($blob, $h)"
+      case "ddb" => s"bitfilters_duckdb_bloom_filter_probe('v1.5.1', $blob, id)"
+      case "bf" => s"bloom_filter_contains($blob, id)"
+      case "cms" => s"cms_estimate($blob, $h)"
+    }
+    val names = builds.map(_._1)
+    // blobs built once and held in RDD-backed views, so both modes probe
+    // the same bytes (xor/fuse layouts depend on key order) and the
+    // subqueries stay subqueries rather than folding into literals
+    val blobRow = spark.sql(builds.map { case (n, b) => s"$b AS $n" }
+      .mkString("SELECT ", ", ", " FROM range(0, 1000)")).head()
+    val blobSchema = StructType(names.map(StructField(_, BinaryType)))
+    spark.createDataFrame(spark.sparkContext.parallelize(Seq(blobRow), 1), blobSchema)
+      .createOrReplaceTempView("probe_blobs")
+    // per-row blob column: ids 800..1199 (half members), every 7th blob NULL
+    val perRow = (800L until 1200L).map(id =>
+      Row.fromSeq(id +: names.indices.map(i => if (id % 7 == 0) null else blobRow.get(i))))
+    spark.createDataFrame(spark.sparkContext.parallelize(perRow, 4),
+      StructType(StructField("id", LongType) +: blobSchema.fields))
+      .createOrReplaceTempView("probe_rows")
+    val onceQ = "SELECT id, " + names.map(n => probe(n, s"(SELECT $n FROM probe_blobs)")).mkString(", ") +
+      ", " + names.map(n => probe(n, s"(SELECT max($n) FROM probe_blobs WHERE false)")).mkString(", ") +
+      " FROM range(800, 1200)"
+    val perRowQ = "SELECT id, " + names.map(n => probe(n, n)).mkString(", ") + " FROM probe_rows"
+    def run(mode: String): (Seq[Seq[Any]], Seq[Seq[Any]]) = {
+      spark.conf.set("spark.sql.codegen.factoryMode", mode)
+      spark.conf.set("spark.sql.codegen.wholeStage", (mode == "CODEGEN_ONLY").toString)
+      try {
+        val once = spark.sql(onceQ)
+        assert(once.queryExecution.executedPlan.toString.contains("Subquery"))
+        (once.collect().toSeq.map(_.toSeq).sortBy(_.head.asInstanceOf[Long]),
+          sqlRows(perRowQ).sortBy(_.head.asInstanceOf[Long]))
+      } finally {
+        spark.conf.unset("spark.sql.codegen.factoryMode")
+        spark.conf.unset("spark.sql.codegen.wholeStage")
+      }
+    }
+    val (onceGen, rowsGen) = run("CODEGEN_ONLY")
+    val (onceInt, rowsInt) = run("NO_CODEGEN")
+    assert(onceGen == onceInt)
+    assert(rowsGen == rowsInt)
+    val k = names.size
+    for (r <- onceGen) {
+      val member = r.head.asInstanceOf[Long] < 1000L
+      assert(r.slice(k + 1, 2 * k + 1).forall(_ == null), s"NULL blob must probe NULL: $r")
+      if (member) assert(r.slice(1, k).forall(_ == true) && r(k).asInstanceOf[Long] >= 1L, s"false negative: $r")
+    }
+    for (r <- rowsGen) {
+      val id = r.head.asInstanceOf[Long]
+      if (id % 7 == 0) assert(r.tail.forall(_ == null), s"NULL blob must probe NULL: $r")
+      else assert(r.tail == onceGen(id.toInt - 800).slice(1, k + 1), s"per-row and once-per-task differ: $r")
+    }
   }
 
   test("broadcast blob probe: shared bytes, correct membership, codegen path") {
