@@ -230,6 +230,14 @@ class CoreFilterSpec extends AnyFunSuite {
 
   // --- Xor filters --------------------------------------------------------
 
+  test("xor: duplicates tolerated") {
+    val keys = Array.fill(1000)(DuckDbHash.hashLong(7L)) ++ (1L to 1000L).map(DuckDbHash.hashLong)
+    for (bits <- Seq(8, 16)) {
+      val f = XorFilter.build(bits, keys.clone(), keys.length)
+      assert(keys.forall(f.mightContain), s"xor$bits false negative")
+    }
+  }
+
   test("xor: no false negatives, FPR sanity, sizes match published figures") {
     val keys = (1L to 50000L).map(DuckDbHash.hashLong).toArray
     for ((bits, maxFpr, expSize) <- Seq((8, 0.01, 61546), (16, 0.001, 123076))) {
@@ -250,5 +258,52 @@ class CoreFilterSpec extends AnyFunSuite {
     val keys = (1L to 1000000L).map(DuckDbHash.hashLong).toArray
     assert(XorFilter.build(8, keys.clone(), keys.length).serializedBytes == 1230046)
     assert(XorFilter.build(16, keys.clone(), keys.length).serializedBytes == 2460076)
+  }
+
+  // --- Golden blob pins (xor and fuse builders) ---------------------------
+
+  private def sha256(blob: Array[Byte]): String =
+    java.security.MessageDigest.getInstance("SHA-256").digest(blob).map("%02x".format(_)).mkString
+
+  /** SHA-256 of the xor8, xor16, fuse8 and fuse16 blobs over `keys`. */
+  private def blobDigests(keys: Array[Long]): Seq[String] = Seq(
+    sha256(XorFilter.build(8, keys.clone(), keys.length).serialize()),
+    sha256(XorFilter.build(16, keys.clone(), keys.length).serialize()),
+    sha256(BinaryFuseFilter.build(8, keys.clone(), keys.length).serialize()),
+    sha256(BinaryFuseFilter.build(16, keys.clone(), keys.length).serialize()))
+
+  test("golden blobs: 40k-row multiset, 1 row in 4 a repeat") {
+    // row j repeats row (j / 4) * 2 when j % 4 == 3: 30000 distinct keys
+    val keys = Array.tabulate(40000)(j =>
+      DuckDbHash.hashLong(if (j % 4 == 3) (j / 4) * 2L else j.toLong))
+    assert(blobDigests(keys) == Seq(
+      "8fb846939970ed8b9d28e8498132f28fb791881d811e19bf2a1dffd4376d6928",
+      "b61dc1776145fcca99e68a53f99a77ce372e21d25664d403991bf2992525484a",
+      "3991d8875ff398bf376bf3ae2bf7ac2602b730723414d8644a153217b603fdf9",
+      "ad4c9712de45363f5a4e6379f9e40f9a643fc2e7cc5f695a4b2385de0d71042b"))
+  }
+
+  test("golden blobs: 1000 copies of one key plus 1000 distinct keys") {
+    val keys = Array.fill(1000)(DuckDbHash.hashLong(7L)) ++ (1L to 1000L).map(DuckDbHash.hashLong)
+    assert(blobDigests(keys) == Seq(
+      "e1e1025d706431f8c618d5155b692cd041eb05a66885859fcb3c1b2f00286a7f",
+      "27a5225aea49ea5f95bd2adb011910e6b318822f84825dac7358c1c30ab2858d",
+      "344ed8c60558909d8f5690974cf05b065389f6d19fabe6f796b63d8d9e72a913",
+      "497bbb04d6967f2d656a8335e10f67130e68abf68cfd925449a3160fd38af3b0"))
+  }
+
+  test("golden blobs: distinct keys whose first xor seed fails to peel (n = 143)") {
+    // hash(1..143) is the smallest such prefix of hash(1..n): the xor blob
+    // carries a seed other than the first one the builder draws
+    val keys = (1L to 143L).map(DuckDbHash.hashLong).toArray
+    val firstSeed = new Hashing.SplitMix64(1L).next()
+    val xorSeed = java.nio.ByteBuffer.wrap(XorFilter.build(8, keys.clone(), keys.length).serialize())
+      .order(java.nio.ByteOrder.LITTLE_ENDIAN).getLong(0)
+    assert(xorSeed != firstSeed)
+    assert(blobDigests(keys) == Seq(
+      "852c032d55d2bc0a656802baa0f19859e221d65549b222f795e147acac7e1249",
+      "b49587908bce669a2bb6c80f3a753e57906aaab535972b75273a40bb2e693ffa",
+      "596da345f1d3b0df67cdd4b7d5844d1e246a289b9a5421d9583484c6843e7ffa",
+      "0cfb5d8088bc4d211146c532dab325c720ee690cc3529c56916c5bc81d881887"))
   }
 }
