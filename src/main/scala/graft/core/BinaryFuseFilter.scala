@@ -14,8 +14,18 @@ import Hashing._
   *  - member iff fingerprint(hash) ^ fp[h0] ^ fp[h1] ^ fp[h2] == 0 (:176-182)
   *  - construction: deterministic seed sequence from the fixed rng counter
   *    0x726b2b9d438b9d4d (:272), <=100 attempts, duplicate detection and
-  *    removal (:346-359,416-418). Order-insensitive => byte-reproducible for
-  *    a given key set.
+  *    removal (:346-359,416-418). The removal sorts into the reference's
+  *    unsigned order with an unboxed radix sort (`Hashing.sortUnsigned`).
+  *  - order: over distinct keys the blob depends only on the key set. The
+  *    reference's duplicate check does not: whether it catches every repeat
+  *    in an attempt depends on key order, and that decides the seed. So
+  *    unless the first attempt succeeds without meeting a repeat, the keys go
+  *    on in unsigned order, and if they hold a repeat the build starts over
+  *    from the first seed. The blob is then the reference's over the sorted
+  *    keys, whatever the input order (Spark's shuffle order is not fixed);
+  *    where the reference's blob did not depend on order, it is unchanged.
+  *    An attempt that cannot succeed (a repeat still counted twice never
+  *    peels) skips its peel.
   *  - serialization (little-endian, 28-byte header): [u64 Seed][u32 Size]
   *    [u32 SegmentLength][u32 SegmentCount][u32 SegmentCountLength]
   *    [u32 ArrayLength][fp array]; SegmentLengthMask is recomputed on load
@@ -98,6 +108,9 @@ object BinaryFuseFilter {
 
   @inline private def mod3(x: Int): Int = if (x > 2) x - 3 else x
 
+  /** The fixed rng counter every build draws its seeds from (:272). */
+  private val RngStart = 0x726b2b9d438b9d4dL
+
   /** Builds a binary fuse filter (duplicates tolerated); reference :267-445. */
   def build(bits: Int, keys0: Array[Long], n0: Int): BinaryFuseFilter = {
     if (n0 == 0) throw new IllegalArgumentException("cannot build binary fuse filter over 0 keys")
@@ -114,7 +127,7 @@ object BinaryFuseFilter {
       (h ^ ((hh >>> (36 - 18 * index)) & segmentLengthMask)).toInt
     }
 
-    val rng = new SplitMix64(0x726b2b9d438b9d4dL)
+    var rng = new SplitMix64(RngStart)
     var seed = rng.next()
 
     val capacity = arrayLength
@@ -132,6 +145,8 @@ object BinaryFuseFilter {
 
     reverseOrder(size) = 1
     var finalSize = size
+    var ordered = false
+    var distinctKeys = size // until a sort counts them
     var loop = 0
     var constructed = false
     while (!constructed) {
@@ -195,12 +210,11 @@ object BinaryFuseFilter {
         i += 1
       }
 
-      if (error) {
-        java.util.Arrays.fill(reverseOrder, 0, size, 0L)
-        java.util.Arrays.fill(t2count, 0.toByte)
-        java.util.Arrays.fill(t2hash, 0L)
-        seed = rng.next()
-      } else {
+      // Skip the peel when its outcome cannot matter: a repeat counted twice
+      // never peels, and an unsorted multiset starts over anyway.
+      val doomed = duplicates < size - distinctKeys || (!ordered && duplicates > 0)
+      var stackSize = 0
+      if (!error && !doomed) {
         var qSize = 0
         i = 0
         while (i < capacity) {
@@ -208,7 +222,6 @@ object BinaryFuseFilter {
           if (((t2count(i) & 0xff) >> 2) == 1) qSize += 1
           i += 1
         }
-        var stackSize = 0
         while (qSize > 0) {
           qSize -= 1
           val index = alone(qSize)
@@ -236,21 +249,31 @@ object BinaryFuseFilter {
             t2hash(other2) ^= hash
           }
         }
-        if (stackSize + duplicates == size) {
-          finalSize = stackSize
-          constructed = true
-        } else {
-          if (duplicates > 0) {
-            val deduped = keys.take(size)
-              .sorted(Ordering.fromLessThan[Long](java.lang.Long.compareUnsigned(_, _) < 0)).distinct
-            keys = deduped
-            size = deduped.length
+      }
+
+      if (!error && !doomed && stackSize + duplicates == size) {
+        finalSize = stackSize
+        constructed = true
+      } else {
+        if (!ordered) {
+          // Whether a repeat is caught depends on key order, so the keys go
+          // on in unsigned order, and a multiset starts over from seed 1.
+          ordered = true
+          keys = sortUnsigned(keys, size)
+          distinctKeys = distinctSorted(keys).length
+          if (distinctKeys < size) {
+            rng = new SplitMix64(RngStart)
+            loop = 0
           }
-          java.util.Arrays.fill(reverseOrder, 0, size, 0L)
-          java.util.Arrays.fill(t2count, 0.toByte)
-          java.util.Arrays.fill(t2hash, 0L)
-          seed = rng.next()
+        } else if (!error && duplicates > 0) {
+          keys = distinctSorted(keys)
+          size = keys.length
+          distinctKeys = size
         }
+        java.util.Arrays.fill(reverseOrder, 0, size, 0L)
+        java.util.Arrays.fill(t2count, 0.toByte)
+        java.util.Arrays.fill(t2hash, 0L)
+        seed = rng.next()
       }
     }
 

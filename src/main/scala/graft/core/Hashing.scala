@@ -9,6 +9,7 @@ package graft.core
   *   - splitmix64 RNG (xorfilter.h:76-81, binaryfusefilter.h:61-66)
   *   - Lemire multiply-shift range reduction (xorfilter.h:62-65)
   *   - unsigned 64x64 -> high 64 multiply (binaryfusefilter.h:82-146)
+  *   - the unsigned key sort and dedup of xor and fuse construction
   *
   * All operate on Scala `Long` interpreted as unsigned 64-bit.
   */
@@ -56,6 +57,56 @@ object Hashing {
 
   /** 32/16/8-bit fingerprint source: hash xor (hash >>> 32); xorfilter.h:67-69. */
   @inline def fingerprint64(hash: Long): Long = hash ^ (hash >>> 32)
+
+  /** A copy of `keys(0 until n)` in unsigned ascending order, the order xor
+    * and fuse construction dedups into. An LSD radix sort, one byte per pass,
+    * orders unsigned values as they are and boxes nothing; a pass over a
+    * byte that every key shares is skipped.
+    */
+  private[core] def sortUnsigned(keys: Array[Long], n: Int): Array[Long] = {
+    var src = java.util.Arrays.copyOf(keys, n)
+    var dst = new Array[Long](n)
+    val offsets = new Array[Int](8 * 256)
+    var i = 0
+    while (i < n) {
+      val k = src(i)
+      var b = 0
+      while (b < 8) { offsets(b * 256 + ((k >>> (8 * b)).toInt & 0xff)) += 1; b += 1 }
+      i += 1
+    }
+    var b = 0
+    while (b < 8) {
+      val base = b * 256
+      if (n > 0 && offsets(base + ((src(0) >>> (8 * b)).toInt & 0xff)) != n) {
+        var sum = 0
+        var d = 0
+        while (d < 256) { val c = offsets(base + d); offsets(base + d) = sum; sum += c; d += 1 }
+        i = 0
+        while (i < n) {
+          val k = src(i)
+          val d = base + ((k >>> (8 * b)).toInt & 0xff)
+          dst(offsets(d)) = k
+          offsets(d) += 1
+          i += 1
+        }
+        val t = src; src = dst; dst = t
+      }
+      b += 1
+    }
+    src
+  }
+
+  /** `sorted` with each value once; `sorted` itself when it has no repeat. */
+  private[core] def distinctSorted(sorted: Array[Long]): Array[Long] = {
+    val out = new Array[Long](sorted.length)
+    var m = 0
+    var i = 0
+    while (i < sorted.length) {
+      if (i == 0 || sorted(i) != sorted(i - 1)) { out(m) = sorted(i); m += 1 }
+      i += 1
+    }
+    if (m == sorted.length) sorted else java.util.Arrays.copyOf(out, m)
+  }
 
   /** Mersenne prime 2^61 - 1: the modulus for SQL-portable affine hashing
     * (the largest prime whose products stay inside 128-bit signed math, so

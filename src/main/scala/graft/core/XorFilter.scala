@@ -21,6 +21,14 @@ import Hashing._
   * better under Spark's nondeterministic shuffle ordering — the reference's
   * own tests disable xor FP golden checks for exactly this reason
   * (test/sql/bitfilters.test:78).
+  *
+  * Repeated keys: a key present twice adds 2 to the count of each of its
+  * slots, so it never peels and every seed fails on a multiset. The
+  * reference runs 9 such attempts and dedups at attempt 10. Here a failed
+  * attempt 1 dedups at once and, if a key was removed, draws and discards
+  * seeds 2-9 and builds with seed 10 over the distinct keys. A failed attempt
+  * has no effect but its seed draw, and the blob depends only on the key set
+  * and the seed, so the blob is byte-identical to the reference's.
   */
 final class XorFilter(val bits: Int, val seed: Long, val blockLength: Int, val fingerprints: Array[Char]) {
   require(bits == 8 || bits == 16)
@@ -97,11 +105,6 @@ object XorFilter {
     var done = false
     while (!done) {
       iterations += 1
-      if (iterations == 10) { // sort + dedup after 10 failed attempts
-        val deduped = keys.take(size).sorted(Ordering.fromLessThan[Long](java.lang.Long.compareUnsigned(_, _) < 0)).distinct
-        keys = deduped
-        size = deduped.length
-      }
       if (iterations > 100)
         throw new IllegalStateException("xor filter construction failed after 100 seeds")
 
@@ -185,7 +188,20 @@ object XorFilter {
       }
 
       if (stackSize == size) done = true
-      else seed = rng.next()
+      else {
+        seed = rng.next()
+        if (iterations == 1) {
+          // The reference dedups before attempt 10, but a repeated key never
+          // peels, so over a multiset attempts 1-9 all fail. Dedup now and
+          // skip to attempt 10 and its seed: same seed, same keys, same blob.
+          val deduped = distinctSorted(sortUnsigned(keys, size))
+          if (deduped.length < size) {
+            keys = deduped
+            size = deduped.length
+            while (iterations < 9) { seed = rng.next(); iterations += 1 }
+          }
+        }
+      }
     }
 
     val fingerprints = new Array[Char](arrayLength)

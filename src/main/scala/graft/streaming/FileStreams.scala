@@ -214,16 +214,29 @@ object FileStreams {
     * gates as the upper-bound `expectedStateKeys` estimate: dedup state
     * <= distinct keys <= rows, join buffers <= rows inside the watermark
     * horizon, window state <= rows.
+    *
+    * A directory is listed recursively, so partitioned (`k=v/`) layouts
+    * count. Names Spark's file index skips are skipped too: a leading `.`,
+    * or a leading `_` without `=` (`_SUCCESS`, `_temporary`). A path that
+    * holds no parquet file fails rather than counting 0, which would floor
+    * the derived state partitions silently.
     */
   def parquetRowCount(spark: SparkSession, path: String): Long = {
+    import org.apache.hadoop.fs.Path
     val hconf = spark.sessionState.newHadoopConf()
-    val p = new org.apache.hadoop.fs.Path(path)
+    val p = new Path(path)
     val fs = p.getFileSystem(hconf)
-    val files =
-      if (fs.getFileStatus(p).isDirectory)
-        fs.listStatus(p).toSeq.map(_.getPath)
-          .filter(_.getName.endsWith(".parquet"))
-      else Seq(p)
+    def hidden(name: String) =
+      name.startsWith(".") || (name.startsWith("_") && !name.contains("="))
+    def parquetFiles(dir: Path): Seq[Path] =
+      fs.listStatus(dir).toSeq.filterNot(st => hidden(st.getPath.getName)).flatMap { st =>
+        if (st.isDirectory) parquetFiles(st.getPath)
+        else if (st.getPath.getName.endsWith(".parquet")) Seq(st.getPath)
+        else Nil
+      }
+    val files = if (fs.getFileStatus(p).isDirectory) parquetFiles(p) else Seq(p)
+    if (files.isEmpty)
+      throw new IllegalArgumentException(s"parquetRowCount: no parquet file under $path")
     files.map { f =>
       val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, hconf)
       val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)

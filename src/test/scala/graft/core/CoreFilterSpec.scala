@@ -228,6 +228,20 @@ class CoreFilterSpec extends AnyFunSuite {
     assert(keys.forall(f.mightContain))
   }
 
+  test("binary fuse: hot keys repeated 1000 times build in any order") {
+    // 20000 distinct keys plus 8 keys 1000 times each, shuffled. Spread out,
+    // the copies of a hot key are not caught as duplicates and overflow its
+    // byte slot counts, so every seed failed in this order; the build now
+    // runs over the keys in unsigned order, where each hot key's copies are
+    // adjacent.
+    val hot = (1L to 8L).flatMap(h => Seq.fill(1000)(DuckDbHash.hashLong(-h)))
+    val keys = new scala.util.Random(1017).shuffle((1L to 20000L).map(DuckDbHash.hashLong) ++ hot).toArray
+    for (bits <- Seq(8, 16)) {
+      val blob = BinaryFuseFilter.build(bits, keys.clone(), keys.length).serialize()
+      assert(keys.forall(BinaryFuseFilter.probeBlob(bits, blob, _)), s"fuse$bits false negative")
+    }
+  }
+
   // --- Xor filters --------------------------------------------------------
 
   test("xor: duplicates tolerated") {
@@ -260,7 +274,7 @@ class CoreFilterSpec extends AnyFunSuite {
     assert(XorFilter.build(16, keys.clone(), keys.length).serializedBytes == 2460076)
   }
 
-  // --- Golden blob pins (xor and fuse builders) ---------------------------
+  // --- Golden blob pins (xor and fuse construction) -----------------------
 
   private def sha256(blob: Array[Byte]): String =
     java.security.MessageDigest.getInstance("SHA-256").digest(blob).map("%02x".format(_)).mkString
@@ -272,11 +286,18 @@ class CoreFilterSpec extends AnyFunSuite {
     sha256(BinaryFuseFilter.build(8, keys.clone(), keys.length).serialize()),
     sha256(BinaryFuseFilter.build(16, keys.clone(), keys.length).serialize()))
 
+  /** The pinned digests hold for `keys` as given, reversed and shuffled. */
+  private def assertPinned(keys: Array[Long], expected: Seq[String]): Unit = {
+    assert(blobDigests(keys) == expected)
+    assert(blobDigests(keys.reverse) == expected, "reversed")
+    assert(blobDigests(new scala.util.Random(5).shuffle(keys.toSeq).toArray) == expected, "shuffled")
+  }
+
   test("golden blobs: 40k-row multiset, 1 row in 4 a repeat") {
     // row j repeats row (j / 4) * 2 when j % 4 == 3: 30000 distinct keys
     val keys = Array.tabulate(40000)(j =>
       DuckDbHash.hashLong(if (j % 4 == 3) (j / 4) * 2L else j.toLong))
-    assert(blobDigests(keys) == Seq(
+    assertPinned(keys, Seq(
       "8fb846939970ed8b9d28e8498132f28fb791881d811e19bf2a1dffd4376d6928",
       "b61dc1776145fcca99e68a53f99a77ce372e21d25664d403991bf2992525484a",
       "3991d8875ff398bf376bf3ae2bf7ac2602b730723414d8644a153217b603fdf9",
@@ -285,22 +306,26 @@ class CoreFilterSpec extends AnyFunSuite {
 
   test("golden blobs: 1000 copies of one key plus 1000 distinct keys") {
     val keys = Array.fill(1000)(DuckDbHash.hashLong(7L)) ++ (1L to 1000L).map(DuckDbHash.hashLong)
-    assert(blobDigests(keys) == Seq(
+    // The reference fuse construction's duplicate check depends on key order:
+    // it gives other fuse blobs over these keys as given than over them
+    // sorted, reversed or shuffled. The fuse pins are its blobs over the keys
+    // in unsigned order, which `build` now gives for every order.
+    assertPinned(keys, Seq(
       "e1e1025d706431f8c618d5155b692cd041eb05a66885859fcb3c1b2f00286a7f",
       "27a5225aea49ea5f95bd2adb011910e6b318822f84825dac7358c1c30ab2858d",
-      "344ed8c60558909d8f5690974cf05b065389f6d19fabe6f796b63d8d9e72a913",
-      "497bbb04d6967f2d656a8335e10f67130e68abf68cfd925449a3160fd38af3b0"))
+      "61c9f8e2553cb1e887f643b4f47636bfe50db9489b964be12c9e0f7e2ebf0685",
+      "287bd1933a5c05d91779eba01fe6a9f6522ca8a97864331a4c69ce0b30904adc"))
   }
 
   test("golden blobs: distinct keys whose first xor seed fails to peel (n = 143)") {
     // hash(1..143) is the smallest such prefix of hash(1..n): the xor blob
-    // carries a seed other than the first one the builder draws
+    // carries a seed other than the first one `build` draws
     val keys = (1L to 143L).map(DuckDbHash.hashLong).toArray
     val firstSeed = new Hashing.SplitMix64(1L).next()
     val xorSeed = java.nio.ByteBuffer.wrap(XorFilter.build(8, keys.clone(), keys.length).serialize())
       .order(java.nio.ByteOrder.LITTLE_ENDIAN).getLong(0)
     assert(xorSeed != firstSeed)
-    assert(blobDigests(keys) == Seq(
+    assertPinned(keys, Seq(
       "852c032d55d2bc0a656802baa0f19859e221d65549b222f795e147acac7e1249",
       "b49587908bce669a2bb6c80f3a753e57906aaab535972b75273a40bb2e693ffa",
       "596da345f1d3b0df67cdd4b7d5844d1e246a289b9a5421d9583484c6843e7ffa",

@@ -23,6 +23,52 @@ class PropertySpec extends AnyFunSuite {
   private val keySets: Gen[List[Long]] =
     Gen.chooseNum(1, 400).flatMap(n => Gen.listOfN(n, Gen.long)).map(_.distinct)
 
+  /** Multisets: n draws from a pool of at most n/2 + 1 values, so most keys
+    * repeat; paired with a seed for shuffling them.
+    */
+  private val keyMultisets: Gen[(List[Long], Long)] = for {
+    n <- Gen.chooseNum(1, 400)
+    poolSize <- Gen.chooseNum(1, n / 2 + 1)
+    pool <- Gen.listOfN(poolSize, Gen.long)
+    keys <- Gen.listOfN(n, Gen.oneOf(pool))
+    shuffleSeed <- Gen.long
+  } yield (keys, shuffleSeed)
+
+  test("xor/fuse over multisets: shuffle-invariant blobs, no false negatives, sized on n with repeats") {
+    forAllSeeded(keyMultisets) { case (keys, shuffleSeed) =>
+      val arr = keys.toArray
+      val shuffled = new scala.util.Random(shuffleSeed).shuffle(keys).toArray
+      val n = arr.length
+      for (bits <- Seq(8, 16)) {
+        val xf = XorFilter.build(bits, arr.clone(), n).serialize()
+        assert(XorFilter.build(bits, shuffled.clone(), n).serialize().sameElements(xf))
+        assert(keys.forall(XorFilter.probeBlob(bits, xf, _)))
+        val blockLength = ((32 + 1.23 * n).toLong / 3 * 3).toInt / 3
+        assert(xf.length == 16 + (bits / 8) * 3 * blockLength)
+
+        val ff = BinaryFuseFilter.build(bits, arr.clone(), n).serialize()
+        assert(BinaryFuseFilter.build(bits, shuffled.clone(), n).serialize().sameElements(ff))
+        assert(keys.forall(BinaryFuseFilter.probeBlob(bits, ff, _)))
+        val arrayLength = BinaryFuseFilter.layoutFor(n).arrayLength
+        assert(ff.length == 28 + (bits / 8) * arrayLength + (if (bits == 16) 4 else 0))
+      }
+    }
+  }
+
+  test("sortUnsigned and distinctSorted match a boxed unsigned sort and distinct") {
+    val value = Gen.frequency(
+      3 -> Gen.long,
+      1 -> Gen.chooseNum(0L, 1000L), // most bytes shared: skipped radix passes
+      1 -> Gen.oneOf(0L, 1L, -1L, Long.MinValue, Long.MaxValue, 0xff00L))
+    forAllSeeded(Gen.chooseNum(0, 300).flatMap(n => Gen.listOfN(n, value))) { xs =>
+      val arr = xs.toArray
+      val want = arr.sorted(Ordering.fromLessThan[Long](java.lang.Long.compareUnsigned(_, _) < 0))
+      val got = Hashing.sortUnsigned(arr :+ 42L, arr.length) // entries past n are not keys
+      assert(got.sameElements(want))
+      assert(Hashing.distinctSorted(got).sameElements(want.distinct))
+    }
+  }
+
   test("no false negatives after serialize/deserialize, all families") {
     forAllSeeded(keySets) { keys0 =>
       if (keys0.nonEmpty) {

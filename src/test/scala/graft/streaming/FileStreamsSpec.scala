@@ -620,4 +620,29 @@ class FileStreamsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .collect().map(_.toSeq).toSet
     assert(counts(None, keys = 5000L) == counts(Some(4), keys = -1L))
   }
+
+  test("parquet row count: flat file, nested k=v/ layout, hidden names skipped, empty path fails") {
+    val flat = s"$dir/events.parquet"
+    val rows = spark.read.parquet(flat).count()
+    assert(FileStreams.parquetRowCount(spark, flat) == rows)
+    assert(FileStreams.tableRowCount(spark, dir, "events") == rows)
+
+    val root = java.nio.file.Files.createTempDirectory("graft-rowcount")
+    try {
+      val nested = root.resolve("t").toString
+      spark.range(0, 1000).selectExpr("id", "id % 3 AS k").write.partitionBy("k").parquet(nested)
+      assert(new java.io.File(nested, "k=0").isDirectory)
+      // hidden files and directories hold parquet that must not count
+      spark.range(0, 7).write.parquet(s"$nested/_temporary")
+      spark.range(0, 5).write.parquet(s"$nested/k=1/.staging")
+      assert(FileStreams.parquetRowCount(spark, nested) == 1000L)
+
+      val empty = root.resolve("empty").toFile
+      assert(empty.mkdir())
+      val ex = intercept[IllegalArgumentException](FileStreams.parquetRowCount(spark, empty.getPath))
+      assert(ex.getMessage.contains("no parquet file"))
+    } finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
+    }
+  }
 }
