@@ -41,6 +41,24 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   * state store is bounded by the watermark horizon (not stream length), and
   * the parquet sink is just a distributed write per micro-batch. Nothing
   * below collects to the driver.
+  *
+  * Checkpoint writes: every drain runs under Spark's
+  * `FileSystemBasedCheckpointFileManager` unless the session already names
+  * a `spark.sql.streaming.checkpointFileManagerClass`. Spark's default,
+  * `FileContextBasedCheckpointFileManager`, renames through Hadoop's
+  * `FileContext`, whose local-filesystem rename asks for link status; with
+  * no `libhadoop` on the classpath (the Spark distribution ships none)
+  * Hadoop forks a `readlink` per call, on every offset-log, commit-log,
+  * state-delta and sink-log write: 208 forks per `q_stream_dedup_wm` drain,
+  * most of the per-batch state commit time. Spark prefers `FileContext`
+  * only because HDFS renames are atomic through it; the checkpoint and sink
+  * here are always local paths, where a POSIX rename within one filesystem
+  * is atomic too. Hadoop's `.crc` side files and Spark's state-file
+  * checksums are still written and verified.
+  *
+  * Directories this object creates (landing, sink, checkpoint) are deleted,
+  * recursively and without following symlinks, by one JVM-exit hook: a
+  * returned frame reads its sink lazily, so nothing can go sooner.
   */
 object FileStreams {
 
@@ -86,7 +104,7 @@ object FileStreams {
     * production ingestion shape anyway.
     */
   def stageLanding(files: Seq[Path]): Path = {
-    val landing = Files.createTempDirectory("graft_landing_")
+    val landing = createTempDir("graft_landing_")
     val parts = files.flatMap { f =>
       if (Files.isDirectory(f))
         f.toFile.listFiles().toSeq.filter(_.getName.endsWith(".parquet"))
@@ -96,8 +114,53 @@ object FileStreams {
     parts.zipWithIndex.foreach { case (f, i) =>
       Files.createSymbolicLink(landing.resolve(f"part_$i%05d.parquet"), f): Unit
     }
-    landing.toFile.deleteOnExit()
     landing
+  }
+
+  /** Directories created by [[createTempDir]], deleted at JVM exit. */
+  private[graft] val createdDirs = java.util.concurrent.ConcurrentHashMap.newKeySet[Path]()
+  private lazy val exitHook: Unit = sys.addShutdownHook {
+    createdDirs.forEach { d =>
+      try deleteTree(d)
+      catch { case _: java.io.IOException => () } // best effort at exit
+    }
+  }: Unit
+
+  /** A fresh temp directory that [[deleteTree]] removes at JVM exit.
+    * `File.deleteOnExit` cannot do it: it skips non-empty directories.
+    */
+  private[graft] def createTempDir(prefix: String): Path = {
+    exitHook
+    val d = Files.createTempDirectory(prefix)
+    createdDirs.add(d): Unit
+    d
+  }
+
+  /** Delete `root` and everything under it. The walk does not follow
+    * symlinks: a landing directory's links are removed and the tables they
+    * point at stay. In-JVM `java.nio` only; Spark's
+    * `JavaUtils.deleteRecursively` forks `rm -rf`.
+    */
+  private[graft] def deleteTree(root: Path): Unit = {
+    import java.nio.file.{FileVisitResult, NoSuchFileException, SimpleFileVisitor}
+    import java.nio.file.attribute.BasicFileAttributes
+    // a path already gone (the root included) is skipped, not an error
+    Files.walkFileTree(root, new SimpleFileVisitor[Path] {
+      override def visitFile(f: Path, a: BasicFileAttributes): FileVisitResult = {
+        Files.deleteIfExists(f): Unit
+        FileVisitResult.CONTINUE
+      }
+      override def visitFileFailed(f: Path, e: java.io.IOException): FileVisitResult =
+        e match {
+          case _: NoSuchFileException => FileVisitResult.CONTINUE
+          case _ => throw e
+        }
+      override def postVisitDirectory(d: Path, e: java.io.IOException): FileVisitResult = {
+        if (e != null && !e.isInstanceOf[NoSuchFileException]) throw e
+        Files.deleteIfExists(d): Unit
+        FileVisitResult.CONTINUE
+      }
+    }): Unit
   }
 
   /** Stream one driver table (`$sfDir/$table.parquet`) as a parquet file
@@ -113,18 +176,6 @@ object FileStreams {
       spark.readStream.schema(schema).parquet(landing.toString), nanosCols)
   }
 
-  /** Run a streaming frame to a parquet sink under AvailableNow, block
-    * until drained, and hand back the sink contents as a batch frame. By
-    * default every call gets its own sink + checkpoint (reruns replay
-    * from scratch); pass explicit `sinkDir`/`checkpointDir` to RESUME a
-    * stopped query — the second drain restarts from the checkpointed
-    * offsets + state (watermark included) and processes only files staged
-    * since, appending to the same sink. For in-event-time-order arrivals
-    * the union of emissions across drains equals the single-drain result
-    * (spec-pinned, "two drains" case): a window still open at drain 1's
-    * final watermark survives in the restored state store and finalizes
-    * in drain 2 with its full cross-drain count.
-    */
   /** Derived state-store backend (round 15, same derived-default
     * discipline as the LSH width / IVF nlist / SemDeDup k knobs): pick
     * RocksDB when the projected on-heap state no longer fits comfortably.
@@ -166,9 +217,14 @@ object FileStreams {
     * fsync) PER STORE INSTANCE — a stream-stream join runs 4 stores x
     * partitions, and the commit floor is paid again on the no-data
     * finalize batch (probed round 15: stateCommit 2.3 s of a 3.8 s
-    * trigger at 8 partitions). So partitions should be the MINIMUM that
-    * keeps per-partition state comfortable, not the session's
-    * batch-shuffle parallelism:
+    * trigger at 8 partitions). Most of that 2.3 s was forked `readlink`
+    * under Spark's default `FileContext`-based checkpoint manager, which
+    * [[runAvailableNow]] now replaces (object scaladoc): at sf0.01 and 4
+    * partitions, `q_stream_join`'s state commit over both batches fell from
+    * ~1.2 s to ~50 ms. The per-store cost that remains still grows with the
+    * store count, and the floor of 4 below is unchanged. So partitions
+    * should be the MINIMUM that keeps per-partition state comfortable, not
+    * the session's batch-shuffle parallelism:
     *  - volume term: `ceil(keys * StatePerKeyBytes /
     *    targetBytesPerPartition)` — one store per ~64 MB of projected
     *    state, the guide-§2.2 "fewer, larger partitions" sizing applied
@@ -248,37 +304,63 @@ object FileStreams {
   def tableRowCount(spark: SparkSession, sfDir: String, table: String): Long =
     parquetRowCount(spark, s"$sfDir/$table.parquet")
 
-  def runAvailableNow(stream: DataFrame,
-      mode: OutputMode = OutputMode.Append,
-      sinkDir: Option[Path] = None,
-      checkpointDir: Option[Path] = None,
+  private[graft] val ShufflePartitionsConf = "spark.sql.shuffle.partitions"
+  private[graft] val StateStoreProviderConf = "spark.sql.streaming.stateStore.providerClass"
+  private[graft] val CheckpointManagerConf = "spark.sql.streaming.checkpointFileManagerClass"
+  /** Spark's own manager: renames through `FileSystem`, forking nothing on
+    * a local path (see the object scaladoc).
+    */
+  private[graft] val FileSystemCheckpointManager =
+    "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"
+
+  /** Session-conf overrides for one [[runAvailableNow]] drain.
+    *
+    * State-store BACKEND: the default HDFS-backed provider holds every
+    * partition's full state map ON-HEAP (disk is only the commit log), so
+    * executor heap must scale with the key universe — fine for the
+    * watermark-bounded gates here, wrong for the 100 TB streaming shape
+    * (dedup/session key universes >> heap). "rocksdb" switches the query
+    * to RocksDBStateStoreProvider: state lives off-heap/on-disk per
+    * partition with a block-cache working set, heap stays O(cache), and
+    * changelog/snapshot files still ride the same checkpoint location.
+    * Like `statePartitions`, the provider is pinned by the FIRST
+    * checkpoint (offset-log metadata) — pass it on the first drain; a
+    * resume under a different provider refuses rather than corrupts.
+    * Resolution: explicit param > session conf `graft.streaming.stateStore`
+    * (lets a pipeline/Verify run flip EVERY streaming query to RocksDB
+    * without threading the knob through each call) > engine default.
+    *
+    * State-partition sizing: a stateful streaming query FREEZES its state
+    * partition count at the first checkpoint (it rides the offset-log
+    * metadata; later conf changes are ignored on resume), and every
+    * micro-batch pays a per-partition state-store commit for EVERY
+    * stateful operator — a stream-stream join commits four stores per
+    * partition per batch. Inheriting the session's batch-oriented
+    * shuffle.partitions therefore sets a permanent per-batch floor that
+    * has nothing to do with state volume. `statePartitions` sizes it
+    * explicitly at query start (state is keyed small-state here:
+    * watermark-bounded windows/joins hold thousands of keys, not rows);
+    * with no explicit count, a caller-supplied `expectedStateKeys`
+    * estimate derives it ([[derivedStatePartitions]] — volume-sized,
+    * floor 4, the same estimate that drives the "auto" backend choice);
+    * None + no estimate keeps the session default. Only meaningful for a
+    * FRESH checkpoint — on resume the checkpointed count wins, by design.
+    *
+    * Checkpoint manager: [[FileSystemCheckpointManager]], unless the
+    * session already sets [[CheckpointManagerConf]].
+    *
+    * CONCURRENCY CAVEAT: the overrides are session-global keys, set for
+    * the drain and restored after it — a streaming query STARTED
+    * concurrently on the same SparkSession during the drain would capture
+    * the temporary values and freeze them into its own checkpoint. This
+    * helper assumes the session starts one streaming query at a time
+    * (Spark offers no per-query provider option to scope it tighter).
+    */
+  private[graft] def drainConf(spark: SparkSession,
       statePartitions: Option[Int] = None,
       stateStore: Option[String] = None,
-      expectedStateKeys: Long = -1L): DataFrame = {
-    val spark = stream.sparkSession
-    // State-store BACKEND: the default HDFS-backed provider holds every
-    // partition's full state map ON-HEAP (disk is only the commit log), so
-    // executor heap must scale with the key universe — fine for the
-    // watermark-bounded gates here, wrong for the 100 TB streaming shape
-    // (dedup/session key universes >> heap). "rocksdb" switches the query
-    // to RocksDBStateStoreProvider: state lives off-heap/on-disk per
-    // partition with a block-cache working set, heap stays O(cache), and
-    // changelog/snapshot files still ride the same checkpoint location.
-    // Like `statePartitions`, the provider is pinned by the FIRST
-    // checkpoint (offset-log metadata) — pass it on the first drain; a
-    // resume under a different provider refuses rather than corrupts.
-    // Resolution: explicit param > session conf `graft.streaming.stateStore`
-    // (lets a pipeline/Verify run flip EVERY streaming query to RocksDB
-    // without threading the knob through each call) > engine default.
-    // CONCURRENCY CAVEAT: the override is the session-global provider key,
-    // set for this drain and restored in the finally — a streaming query
-    // STARTED concurrently on the same SparkSession during the drain would
-    // capture the temporary value and freeze it into its own checkpoint.
-    // This helper assumes the session starts one streaming query at a time
-    // (Spark offers no per-query provider option to scope it tighter).
-    val providerConf = "spark.sql.streaming.stateStore.providerClass"
-    val requested = stateStore.orElse(spark.conf.getOption("graft.streaming.stateStore"))
-    val prevProvider = requested.map { s =>
+      expectedStateKeys: Long = -1L): Map[String, String] = {
+    val provider = stateStore.orElse(spark.conf.getOption("graft.streaming.stateStore")).map { s =>
       // "auto" derives the backend from the caller's distinct-state-key
       // estimate ([[autoStateStoreChoice]]). Without an estimate it keeps
       // the on-heap provider: every helper here is watermark-BOUNDED
@@ -290,51 +372,75 @@ object FileStreams {
         if (expectedStateKeys >= 0) autoStateStoreChoice(expectedStateKeys)
         else "hdfs"
       } else s
-      val cls = resolved.toLowerCase match {
+      StateStoreProviderConf -> (resolved.toLowerCase match {
         case "rocksdb" =>
           "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
         case "hdfs" =>
           "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
         case other => throw new IllegalArgumentException(
           s"stateStore must be 'hdfs', 'rocksdb' or 'auto', got '$other'")
-      }
-      val old = spark.conf.getOption(providerConf)
-      spark.conf.set(providerConf, cls)
-      old
+      })
     }
-    // State-partition sizing: a stateful streaming query FREEZES its state
-    // partition count at the first checkpoint (it rides the offset-log
-    // metadata; later conf changes are ignored on resume), and every
-    // micro-batch pays a per-partition state-store commit for EVERY
-    // stateful operator — a stream-stream join commits four stores per
-    // partition per batch. Inheriting the session's batch-oriented
-    // shuffle.partitions therefore sets a permanent per-batch floor that
-    // has nothing to do with state volume. `statePartitions` sizes it
-    // explicitly at query start (state is keyed small-state here:
-    // watermark-bounded windows/joins hold thousands of keys, not rows);
-    // with no explicit count, a caller-supplied `expectedStateKeys`
-    // estimate derives it ([[derivedStatePartitions]] — volume-sized,
-    // floor 4, the same estimate that drives the "auto" backend choice);
-    // None + no estimate keeps the session default. Only meaningful for a
-    // FRESH checkpoint — on resume the checkpointed count wins, by design.
-    val effectiveStatePartitions = statePartitions.orElse(
+    val partitions = statePartitions.orElse(
       if (expectedStateKeys >= 0) Some(derivedStatePartitions(expectedStateKeys))
-      else None)
-    val prevShuffle = effectiveStatePartitions.map { n =>
+      else None).map { n =>
       require(n > 0, s"statePartitions must be positive, got $n")
-      val old = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", n.toString)
-      old
+      ShufflePartitionsConf -> n.toString
     }
-    // deleteOnExit ONLY on directories this call created — a caller's
-    // persistent sink/checkpoint location is theirs, not ours to delete
-    val out = sinkDir.getOrElse {
-      val d = Files.createTempDirectory("graft_sink_"); d.toFile.deleteOnExit(); d
+    val manager =
+      if (isSet(spark, CheckpointManagerConf)) None
+      else Some(CheckpointManagerConf -> FileSystemCheckpointManager)
+    (provider ++ partitions ++ manager).toMap
+  }
+
+  /** Whether the session sets `key` itself; a registered key's default does
+    * not count.
+    */
+  private[graft] def isSet(spark: SparkSession, key: String): Boolean =
+    spark.sessionState.conf.contains(key)
+
+  /** Run `body` with `overrides` set on the session, then restore each key
+    * exactly — a key that was unset is unset again, a set key gets its old
+    * value back — also when `body` throws.
+    */
+  private[graft] def withSessionConf[T](spark: SparkSession,
+      overrides: Map[String, String])(body: => T): T = {
+    val saved = overrides.keys.map(k =>
+      k -> (if (isSet(spark, k)) Some(spark.conf.get(k)) else None))
+    overrides.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
     }
-    val ck = checkpointDir.getOrElse {
-      val d = Files.createTempDirectory("graft_ck_"); d.toFile.deleteOnExit(); d
-    }
-    val q = try {
+  }
+
+  /** Run a streaming frame to a parquet sink under AvailableNow, block
+    * until drained, and hand back the sink contents as a batch frame. By
+    * default every call gets its own sink + checkpoint (reruns replay
+    * from scratch); pass explicit `sinkDir`/`checkpointDir` to RESUME a
+    * stopped query — the second drain restarts from the checkpointed
+    * offsets + state (watermark included) and processes only files staged
+    * since, appending to the same sink. For in-event-time-order arrivals
+    * the union of emissions across drains equals the single-drain result
+    * (spec-pinned, "two drains" case): a window still open at drain 1's
+    * final watermark survives in the restored state store and finalizes
+    * in drain 2 with its full cross-drain count.
+    */
+  def runAvailableNow(stream: DataFrame,
+      mode: OutputMode = OutputMode.Append,
+      sinkDir: Option[Path] = None,
+      checkpointDir: Option[Path] = None,
+      statePartitions: Option[Int] = None,
+      stateStore: Option[String] = None,
+      expectedStateKeys: Long = -1L): DataFrame = {
+    val spark = stream.sparkSession
+    val overrides = drainConf(spark, statePartitions, stateStore, expectedStateKeys)
+    // a caller's persistent sink/checkpoint location is theirs, not ours to
+    // delete: only directories this call creates go at JVM exit
+    val out = sinkDir.getOrElse(createTempDir("graft_sink_"))
+    val ck = checkpointDir.getOrElse(createTempDir("graft_ck_"))
+    val q = withSessionConf(spark, overrides) {
       val started = stream.writeStream.format("parquet")
         .option("path", out.toString)
         .option("checkpointLocation", ck.toString)
@@ -343,13 +449,6 @@ object FileStreams {
         .start()
       started.awaitTermination()
       started
-    } finally {
-      prevShuffle.foreach(old =>
-        spark.conf.set("spark.sql.shuffle.partitions", old))
-      prevProvider.foreach {
-        case Some(old) => spark.conf.set(providerConf, old)
-        case None => spark.conf.unset(providerConf)
-      }
     }
     // operator-cost meter: the engine's own per-batch triggerExecution
     // clock, summed over this drain (AvailableNow drains stay far under the

@@ -645,4 +645,93 @@ class FileStreamsSpec extends AnyFunSuite with BeforeAndAfterAll {
       org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
     }
   }
+
+  test("temp dirs: deleteTree empties and removes a landing dir, symlink targets stay") {
+    val target = java.nio.file.Files.createTempFile("graft-link-target", ".parquet")
+    val targetDir = java.nio.file.Files.createTempDirectory("graft-link-target-dir")
+    val inner = java.nio.file.Files.createFile(targetDir.resolve("keep.parquet"))
+    try {
+      val landing = FileStreams.stageLanding(Seq(target))
+      assert(FileStreams.createdDirs.contains(landing), "landing not registered for exit")
+      assert(java.nio.file.Files.isSymbolicLink(landing.resolve("part_00000.parquet")))
+      // a directory link and a real subdirectory: neither may be followed out
+      java.nio.file.Files.createSymbolicLink(landing.resolve("dirlink"), targetDir): Unit
+      java.nio.file.Files.createDirectories(landing.resolve("sub/deeper"))
+      java.nio.file.Files.createFile(landing.resolve("sub/deeper/f")): Unit
+      FileStreams.deleteTree(landing)
+      assert(!java.nio.file.Files.exists(landing, java.nio.file.LinkOption.NOFOLLOW_LINKS))
+      assert(java.nio.file.Files.exists(target) && java.nio.file.Files.exists(inner))
+      FileStreams.deleteTree(landing) // already gone: no-op
+    } finally {
+      java.nio.file.Files.deleteIfExists(target)
+      java.nio.file.Files.deleteIfExists(inner)
+      java.nio.file.Files.deleteIfExists(targetDir)
+    }
+  }
+
+  private def windowCounts(): Set[Seq[Any]] = FileStreams.runAvailableNow(
+    FileStreams.windowedEventCounts(
+      FileStreams.tableStream(spark, dir, "events", Seq("ts")),
+      "ts", "event_type", "1 day", "1 hour"),
+    statePartitions = Some(4)).collect().map(_.toSeq).toSet
+
+  test("checkpoint manager: FileSystem-based by default, a session-set class is kept") {
+    import FileStreams.CheckpointManagerConf
+    assert(!FileStreams.isSet(spark, CheckpointManagerConf))
+    assert(FileStreams.drainConf(spark).get(CheckpointManagerConf) == Some(
+      classOf[org.apache.spark.sql.execution.streaming.checkpointing
+        .FileSystemBasedCheckpointFileManager].getName))
+    val viaDefault = windowCounts()
+    val counting = classOf[CountingCheckpointFileManager].getName
+    spark.conf.set(CheckpointManagerConf, counting)
+    try {
+      assert(!FileStreams.drainConf(spark).contains(CheckpointManagerConf))
+      val before = CountingCheckpointFileManager.constructed.get
+      assert(windowCounts() == viaDefault)
+      assert(CountingCheckpointFileManager.constructed.get > before,
+        "the session's checkpoint manager was not used")
+      assert(spark.conf.get(CheckpointManagerConf) == counting)
+    } finally spark.conf.unset(CheckpointManagerConf)
+  }
+
+  test("a drain whose query fails restores every overridden session key exactly") {
+    import FileStreams.{CheckpointManagerConf, ShufflePartitionsConf, StateStoreProviderConf}
+    val shuffle = spark.conf.get(ShufflePartitionsConf)
+    assert(!FileStreams.isSet(spark, StateStoreProviderConf))
+    assert(!FileStreams.isSet(spark, CheckpointManagerConf))
+    val boom = udf((x: Long) => { if (x >= 0) throw new IllegalStateException("boom"); x })
+    val failing = FileStreams.tableStream(spark, dir, "events", Seq("ts"))
+      .select(boom(col("user_id").cast("long")).as("x"))
+    val overrides = FileStreams.drainConf(spark, Some(3), Some("rocksdb"))
+    assert(overrides.keySet ==
+      Set(ShufflePartitionsConf, StateStoreProviderConf, CheckpointManagerConf))
+    intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+      FileStreams.runAvailableNow(failing, statePartitions = Some(3), stateStore = Some("rocksdb")))
+    assert(spark.conf.get(ShufflePartitionsConf) == shuffle)
+    assert(!FileStreams.isSet(spark, StateStoreProviderConf))
+    assert(!FileStreams.isSet(spark, CheckpointManagerConf))
+    // the helper alone, body throwing: a set key gets its old value, an
+    // unset key is unset again
+    intercept[IllegalStateException](FileStreams.withSessionConf(spark,
+      Map(ShufflePartitionsConf -> "3", CheckpointManagerConf -> "x")) {
+      assert(spark.conf.get(ShufflePartitionsConf) == "3")
+      throw new IllegalStateException("body")
+    })
+    assert(spark.conf.get(ShufflePartitionsConf) == shuffle)
+    assert(!FileStreams.isSet(spark, CheckpointManagerConf))
+  }
+}
+
+/** Spark's FileSystem-based checkpoint manager, counting its constructions
+  * so a spec can tell which manager a drain used.
+  */
+class CountingCheckpointFileManager(path: org.apache.hadoop.fs.Path,
+    conf: org.apache.hadoop.conf.Configuration)
+    extends org.apache.spark.sql.execution.streaming.checkpointing
+      .FileSystemBasedCheckpointFileManager(path, conf) {
+  CountingCheckpointFileManager.constructed.incrementAndGet(): Unit
+}
+
+object CountingCheckpointFileManager {
+  val constructed = new java.util.concurrent.atomic.AtomicInteger
 }
