@@ -2986,7 +2986,7 @@ object SparkEntry {
       "q_pagerank" -> ((s: SparkSession, dir: String) => {
         prepare(s, dir)
         Graphs.pageRank(sharedPreparedGraph(s, dir), iterations = 5,
-            dampingPpm = 850000L, trackConvergence = false, tolerancePpb = 0L)
+            dampingPpm = 850000L, onConvergence = None, tolerancePpb = 0L)
           .orderBy(col("rank_ppb").desc, col("node")).limit(25)
       }),
 
@@ -3025,7 +3025,7 @@ object SparkEntry {
         val seeds = s.sql(
           "SELECT s_suppkey * 2 + 1 AS node FROM supplier WHERE s_nationkey = 0")
         Graphs.personalizedPageRank(sharedPreparedGraph(s, dir), seeds, "node",
-            iterations = 3, dampingPpm = 850000L, trackConvergence = false,
+            iterations = 3, dampingPpm = 850000L, onConvergence = None,
             tolerancePpb = 0L)
           .where(col("rank_ppb") > 0)
           .orderBy(col("rank_ppb").desc, col("node")).limit(25)

@@ -3,51 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Task-side max accumulator (Spark ships only sum/collect built-ins).
-  * `add` is idempotent for repeated observations of the same value, so the
-  * merged max is exact even under task retry.
-  */
-final class MaxLongAccumulator extends org.apache.spark.util.AccumulatorV2[Long, Long] {
-  private var _max = 0L
-  override def isZero: Boolean = _max == 0L
-  override def copy(): MaxLongAccumulator = {
-    val a = new MaxLongAccumulator; a._max = _max; a
-  }
-  override def reset(): Unit = _max = 0L
-  override def add(v: Long): Unit = if (v > _max) _max = v
-  override def merge(other: org.apache.spark.util.AccumulatorV2[Long, Long]): Unit =
-    _max = math.max(_max, other.value)
-  override def value: Long = _max
-}
-
-/** Task-side min accumulator, the dual of [[MaxLongAccumulator]]; zero
-  * state is Long.MaxValue. `add` is idempotent under task retry.
-  */
-final class MinLongAccumulator extends org.apache.spark.util.AccumulatorV2[Long, Long] {
-  private var _min = Long.MaxValue
-  override def isZero: Boolean = _min == Long.MaxValue
-  override def copy(): MinLongAccumulator = {
-    val a = new MinLongAccumulator; a._min = _min; a
-  }
-  override def reset(): Unit = _min = Long.MaxValue
-  override def add(v: Long): Unit = if (v < _min) _min = v
-  override def merge(other: org.apache.spark.util.AccumulatorV2[Long, Long]): Unit =
-    _min = math.min(_min, other.value)
-  override def value: Long = _min
-}
-
-/** Per-pipeline-run LSH bucket-skew telemetry, accumulator-backed so the
-  * values survive AQE re-planning (which hides `observe` metrics from
-  * `observedMetrics` — the re-planned CollectMetrics accumulator is not
-  * the one collected). `maxBucket` is exact under task retry (max is
-  * idempotent); `dropped` can overcount under retry or multi-action
-  * recompute — it is telemetry, never part of a result.
-  */
-final class LshRunStats private[operators] (
-    val name: String,
-    val maxBucket: MaxLongAccumulator,
-    val dropped: org.apache.spark.util.LongAccumulator) extends Serializable
-
 /** Document deduplication operators for large-scale training-data pipelines.
   *
   * All operators are pure DataFrame transformations built from codegen'd
@@ -57,54 +12,6 @@ final class LshRunStats private[operators] (
   * in each method.
   */
 object Dedup {
-
-  /** Disambiguates the per-pipeline `graft_lsh_buckets_<n>` observe names —
-    * one query may hold several LSH pipelines (see the fast-vs-portable
-    * recall gate) and Spark rejects duplicate metric names with different
-    * results.
-    */
-  private val lshObserveId = new java.util.concurrent.atomic.AtomicLong()
-
-  /** Recent per-run skew accumulators, newest last, bounded at
-    * [[LshRegistryCap]] (a stopped-being-polled entry just stops being
-    * tracked). Listeners registered by
-    * [[registerLshBucketWarningListener]] poll this after every query.
-    */
-  private val lshRunRegistry =
-    new java.util.concurrent.ConcurrentLinkedDeque[LshRunStats]()
-  private val LshRegistryCap = 128
-
-  private def newLshRunStats(spark: org.apache.spark.sql.SparkSession,
-      name: String): LshRunStats = {
-    val mx = new MaxLongAccumulator
-    spark.sparkContext.register(mx, s"${name}_max")
-    val dr = spark.sparkContext.longAccumulator(s"${name}_dropped")
-    val st = new LshRunStats(name, mx, dr)
-    lshRunRegistry.addLast(st)
-    while (lshRunRegistry.size > LshRegistryCap) lshRunRegistry.pollFirst()
-    st
-  }
-
-  private[graft] def lshRunStatsSnapshot(): Seq[LshRunStats] = {
-    val b = Seq.newBuilder[LshRunStats]
-    lshRunRegistry.forEach(st => b += st)
-    b.result()
-  }
-
-  /** Always-true filter over a bucket-size column that feeds a fresh
-    * per-run pair of skew accumulators — nondeterministic so Catalyst
-    * neither folds it away nor reorders it past the cap filter. Apply to
-    * the post-aggregate bucket stream: `.where(skewRecord(...)(size(...)))`.
-    */
-  private[graft] def skewRecord(spark: org.apache.spark.sql.SparkSession,
-      name: String, cap: Int): org.apache.spark.sql.expressions.UserDefinedFunction = {
-    val stats = newLshRunStats(spark, name)
-    udf { (sz: Int) =>
-      stats.maxBucket.add(sz.toLong)
-      if (sz > cap) stats.dropped.add(1L)
-      true
-    }.asNondeterministic()
-  }
 
   /** Exact duplicate statistics by content hash (md5 for oracle parity). */
   def exactDuplicateStats(df: DataFrame, textCol: String): DataFrame =
@@ -171,10 +78,9 @@ object Dedup {
     * join), and ordered pairs explode from the list (no shingle self-join)
     * into the per-pair common count. `maxDocFreq` is the classic skew
     * guard: a shingle in thousands of docs would emit quadratic pairs.
-    * The cap is NOT silent: every run publishes its dropped-shingle count
-    * and max observed doc frequency as the `graft_jaccard_shingles_<n>`
-    * observable metric plus AQE-proof per-run accumulators
-    * ([[LshRunStats]]), and [[registerJaccardShingleWarningListener]]
+    * The cap is NOT silent: every run records its dropped-shingle count
+    * and max observed doc frequency as a `graft_jaccard_shingles_<n>`
+    * [[Telemetry.Run]], and [[registerJaccardShingleWarningListener]]
     * turns a crossed threshold into a WARN — dropped shingles mean the
     * affected pairs under-count their intersection, so the count is the
     * operator's accuracy disclosure, not just perf telemetry.
@@ -189,22 +95,16 @@ object Dedup {
     * near 1. Free here (same common/size inputs).
     */
   def exactJaccardPairs(shingles0: DataFrame, maxDocFreq: Int = 1000): DataFrame = {
-    val runId = lshObserveId.incrementAndGet()
     // same telemetry discipline as the LSH bucket cap: the doc-frequency
     // cap DROPS hot shingles (their intersection contributions vanish, so
     // affected pairs under-count), and a silent drop violates the no-
-    // silent-caps rule — every run publishes dropped-shingle count and max
-    // observed doc frequency both as an observable metric and as AQE-proof
-    // per-run accumulators polled by [[registerJaccardShingleWarningListener]]
-    val record = skewRecord(shingles0.sparkSession, s"graft_jaccard_shingles_$runId", maxDocFreq)
+    // silent-caps rule
+    val run = Telemetry.start(shingles0.sparkSession, "graft_jaccard_shingles")
     // collect_set: input rows are per-doc multisets (see shingleHashes);
     // dedup happens inside this groupBy rather than in an upstream shuffle
     val capped = shingles0.groupBy("shingle")
       .agg(sort_array(collect_set(col("doc_id"))).as("docs"))
-      .observe(s"graft_jaccard_shingles_$runId",
-        sum(when(size(col("docs")) > maxDocFreq, 1L).otherwise(0L)).as("dropped_shingles"),
-        max(size(col("docs"))).as("max_doc_freq"))
-      .where(record(size(col("docs"))))
+      .where(Telemetry.record(run, size(col("docs")), maxDocFreq))
       .where(size(col("docs")) <= maxDocFreq)
       // feeds both the per-doc sizes and the pair counts
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -264,16 +164,12 @@ object Dedup {
     * is the fail-soft backstop for pathological buckets (an adversarial
     * corpus slice with 10^5 near-identical docs would otherwise emit
     * 5*10^9 pairs — an executor OOM, not a slow query). Capped buckets are
-    * DROPPED (their pairs are not emitted); the drop count and max
-    * observed bucket size are published twice: as the `graft_lsh_buckets`
-    * observable metric (`df.observe`, readable from
-    * `queryExecution.observedMetrics` — but hidden when AQE re-plans the
-    * query), and as per-run registered accumulators ([[LshRunStats]]),
-    * which survive AQE and are what
-    * [[registerLshBucketWarningListener]] polls — so the skew warning
-    * fires with `spark.sql.adaptive.enabled=true` (the default). Default
-    * = no cap, because dropping buckets changes results and any threshold
-    * must be the caller's call.
+    * DROPPED (their pairs are not emitted); every run, capped or not,
+    * records the drop count and max observed bucket size as a
+    * `graft_lsh_buckets_<n>` [[Telemetry.Run]], which survives AQE and is
+    * what [[registerLshBucketWarningListener]] polls. Default = no cap,
+    * because dropping buckets changes results and any threshold must be
+    * the caller's call.
     *
     * NOTE: `sigs` is consumed three times (banding + both estimate joins) —
     * persist it, as [[minHashNearDuplicates]] does, or the signature
@@ -286,24 +182,14 @@ object Dedup {
         posexplode(transform(sequence(lit(0), lit(bands - 1)),
           b => xxhash64(concat_ws(",", slice(col("sig"), b * rowsPerBand + 1, lit(rowsPerBand)))))))
       .toDF("doc_id", "band_id", "band_hash")
-    val runId = lshObserveId.incrementAndGet()
-    // AQE-safe telemetry: per-run accumulators updated by an always-true
-    // filter over the (post-aggregate) bucket rows
-    val record = skewRecord(sigs.sparkSession, s"graft_lsh_buckets_$runId", maxBucketSize)
+    val run = Telemetry.start(sigs.sparkSession, "graft_lsh_buckets")
     val buckets = banded.groupBy("band_id", "band_hash")
       .agg(sort_array(collect_list(col("doc_id"))).as("docs"))
       .where(size(col("docs")) > 1)
-      // always published (capped or not) so callers/listeners can see skew
+      // always recorded (capped or not) so callers/listeners can see skew
       // building up BEFORE it becomes an OOM; see
-      // [[registerLshBucketWarningListener]] for the log-a-warning hookup.
-      // The name gets a unique suffix because Spark rejects two observe
-      // nodes with the same name but different results in ONE query (e.g.
-      // a fast-vs-portable pipeline comparison); listeners match on the
-      // "graft_lsh_buckets" prefix.
-      .observe(s"graft_lsh_buckets_$runId",
-        sum(when(size(col("docs")) > maxBucketSize, 1L).otherwise(0L)).as("dropped_buckets"),
-        max(size(col("docs"))).as("max_bucket_size"))
-      .where(record(size(col("docs"))))
+      // [[registerLshBucketWarningListener]] for the log-a-warning hookup
+      .where(Telemetry.record(run, size(col("docs")), maxBucketSize))
     val guarded =
       if (maxBucketSize == Int.MaxValue) buckets
       else buckets.where(size(col("docs")) <= maxBucketSize)
@@ -329,20 +215,19 @@ object Dedup {
 
   /** Install a QueryExecutionListener that logs a WARN (and invokes
     * `onWarn`, for tests/metrics hookup) whenever a query carrying the
-    * `graft_lsh_buckets` observable metric (published by every
-    * [[lshNearDuplicatePairs]] / [[minHashNearDuplicates]] run, capped or
-    * not) observes a max bucket size above `threshold`. A hot bucket of k
-    * docs emits k^2/2 candidate pairs, so crossing ~10^4 is the early
-    * signal that an uncapped run is heading for an executor OOM at scale —
-    * the fix is dropping exact duplicates upstream or setting
-    * `maxBucketSize`.
+    * `graft_lsh_buckets` run record (written by every
+    * [[lshNearDuplicatePairs]] / [[minHashNearDuplicates]] /
+    * [[simHashNearDuplicates]] run, capped or not) observes a max bucket
+    * size above `threshold`. A hot bucket of k docs emits k^2/2 candidate
+    * pairs, so crossing ~10^4 is the early signal that an uncapped run is
+    * heading for an executor OOM at scale — the fix is dropping exact
+    * duplicates upstream or setting `maxBucketSize`.
     *
-    * The listener polls the per-run [[LshRunStats]] accumulators (not
-    * `observedMetrics`), so it fires with AQE on or off. Pipelines that
-    * already ran before registration are latched at their current
-    * high-water mark and do not retro-trigger; each run warns at most
-    * once per observed maximum (re-executing a pipeline that finds a
-    * bigger bucket warns again).
+    * The listener polls [[Telemetry.runs]], so it fires with AQE on or
+    * off. Pipelines that already ran before registration are latched at
+    * their current high-water mark and do not retro-trigger; each run
+    * warns at most once per observed maximum (re-executing a pipeline
+    * that finds a bigger bucket warns again).
     */
   def registerLshBucketWarningListener(spark: org.apache.spark.sql.SparkSession,
       threshold: Long = 10000L,
@@ -372,29 +257,26 @@ object Dedup {
           "affected pairs under-count their intersection. Raise maxDocFreq, strip " +
           "boilerplate shingles upstream, or use the MinHash path at this scale.")
 
-  /** Shared poll-the-accumulators listener: warns once per run per observed
-    * maximum for every [[LshRunStats]] entry whose name starts with
-    * `prefix`. Polls the per-run accumulators (not `observedMetrics`), so
-    * it fires with AQE on or off; runs that finished before registration
-    * are latched at their current high-water mark and do not retro-trigger.
+  /** Shared poll-the-registry listener: warns once per run per observed
+    * maximum for every [[Telemetry.Run]] whose name starts with `prefix`.
+    * Runs that finished before registration are latched at their current
+    * high-water mark and do not retro-trigger.
     */
   private def registerSkewWarningListener(spark: org.apache.spark.sql.SparkSession,
       prefix: String, threshold: Long, onWarn: (Long, Long) => Unit,
       message: (Long, Long) => String): Unit = {
     // per-listener latch: warn only when a run's max grows past what THIS
     // listener already reported (weak keys: dropped registry entries fall out)
-    val warned = new java.util.WeakHashMap[LshRunStats, java.lang.Long]()
+    val warned = new java.util.WeakHashMap[Telemetry.Run, java.lang.Long]()
     warned.synchronized {
-      lshRunStatsSnapshot().foreach(st => warned.put(st, st.maxBucket.value))
+      Telemetry.runs(prefix).foreach(st => warned.put(st, st.max.value))
     }
     spark.listenerManager.register(new org.apache.spark.sql.util.QueryExecutionListener {
       private def check(): Unit = warned.synchronized {
-        // the registry is shared across skew-capped operators (LSH buckets,
-        // jaccard shingles, ewmaSmooth's graft_ewma_keys_*) — each listener
-        // speaks only for its own prefix
-        lshRunStatsSnapshot()
-          .filter(_.name.startsWith(prefix)).foreach { st =>
-          val maxSeen = st.maxBucket.value
+        // the registry is shared by every approximate operator — each
+        // listener speaks only for its own prefix
+        Telemetry.runs(prefix).foreach { st =>
+          val maxSeen = st.max.value
           if (maxSeen > threshold) {
             val prev = Option(warned.get(st)).fold(0L)(_.longValue)
             if (maxSeen > prev) {
@@ -518,18 +400,13 @@ object Dedup {
     val rowsPerBand = math.max(1, numHashes / bands)
     def bandCol = posexplode(transform(sequence(lit(0), lit(bands - 1)),
       b => xxhash64(concat_ws(",", slice(col("sig"), b * rowsPerBand + 1, lit(rowsPerBand))))))
-    val runId = lshObserveId.incrementAndGet()
-    // dual skew telemetry, as in [[lshNearDuplicatePairs]]: observe metric
-    // + AQE-safe per-run accumulators for the warning listener
-    val record = skewRecord(oldSigs.sparkSession, s"graft_lsh_buckets_$runId", maxBucketSize)
+    // skew telemetry for the warning listener, as in [[lshNearDuplicatePairs]]
+    val run = Telemetry.start(oldSigs.sparkSession, "graft_lsh_buckets")
     val oldBuckets = oldSigs.select(col("doc_id"), bandCol)
       .toDF("doc_id", "band_id", "band_hash")
       .groupBy("band_id", "band_hash")
       .agg(sort_array(collect_list(col("doc_id"))).as("olds"))
-      .observe(s"graft_lsh_buckets_$runId",
-        sum(when(size(col("olds")) > maxBucketSize, 1L).otherwise(0L)).as("dropped_buckets"),
-        max(size(col("olds"))).as("max_bucket_size"))
-      .where(record(size(col("olds"))))
+      .where(Telemetry.record(run, size(col("olds")), maxBucketSize))
     val guarded =
       if (maxBucketSize == Int.MaxValue) oldBuckets
       else oldBuckets.where(size(col("olds")) <= maxBucketSize)
@@ -900,21 +777,15 @@ object Dedup {
         }
         struct(lit(ci).as("band_id"), key.as("band_val"))
       }
-    val runId = lshObserveId.incrementAndGet()
     // same skew telemetry + fail-soft cap as the minhash variant: a band
-    // key shared by k docs emits k^2/2 candidate pairs. Dual publication
-    // as in [[lshNearDuplicatePairs]]: observe metric + AQE-safe per-run
-    // accumulators polled by [[registerLshBucketWarningListener]].
-    val record = skewRecord(fps.sparkSession, s"graft_lsh_buckets_$runId", maxBucketSize)
+    // key shared by k docs emits k^2/2 candidate pairs
+    val run = Telemetry.start(fps.sparkSession, "graft_lsh_buckets")
     val buckets = fps
       .select(col("doc_id"), col("simhash"), explode(array(bandCols: _*)).as("band"))
       .groupBy(col("band.band_id"), col("band.band_val"))
       .agg(array_sort(collect_list(struct(col("doc_id"), col("simhash")))).as("docs"))
       .where(size(col("docs")) > 1)
-      .observe(s"graft_lsh_buckets_$runId",
-        sum(when(size(col("docs")) > maxBucketSize, 1L).otherwise(0L)).as("dropped_buckets"),
-        max(size(col("docs"))).as("max_bucket_size"))
-      .where(record(size(col("docs"))))
+      .where(Telemetry.record(run, size(col("docs")), maxBucketSize))
     (if (maxBucketSize == Int.MaxValue) buckets
      else buckets.where(size(col("docs")) <= maxBucketSize))
       // streaming pair emission (see exactJaccardPairs): never hold k^2

@@ -21,8 +21,6 @@ import graft.core.Hashing
   */
 object Embeddings {
 
-  private val semdedupObserveId = new java.util.concurrent.atomic.AtomicLong()
-
   /** Dot product / L2 norm of ARRAY<FLOAT>/ARRAY<DOUBLE> columns — fused
     * native kernels (see [[VectorOps]]); sequential double accumulation,
     * bit-equal to the `aggregate(zip_with(...))` HOF form it replaces.
@@ -114,53 +112,16 @@ object Embeddings {
   def wordHamming(a: Column, b: Column): Column =
     ColumnBridge.column(WordHamming(ColumnBridge.expression(a), ColumnBridge.expression(b)))
 
-  /** Per-run [[hammingTopK]] recall telemetry (accumulator-backed, AQE-safe
-    * like [[LshRunStats]]). The signal: if `maxKeptHamming ==
-    * maxCandidateHamming`, the final top-k reached the prescreen boundary —
-    * the candidate budget was fully consumed and true neighbors may have
-    * been cut; raise `candidates`. A healthy margin (kept max well below
-    * candidate max) means the budget had slack. `minKeptSimE6` is the worst
-    * cosine that made the final top-k, floored to e6 micro-units.
+  /** [[hammingTopK]]'s raise-`candidates` signal over one call's two run
+    * records (`graft_hamming_candidates_<n>`, then `graft_hamming_kept_<n>`):
+    * true when the largest kept Hamming distance reaches the largest
+    * candidate distance, i.e. the final top-k consumed the whole prescreen
+    * budget and true neighbors may have been cut. A healthy margin (kept
+    * max well below candidate max) means the budget had slack. Only
+    * meaningful after an action ran the query.
     */
-  final class HammingRunStats private[operators] (
-      val name: String,
-      val maxCandidateHamming: MaxLongAccumulator,
-      val maxKeptHamming: MaxLongAccumulator,
-      val minKeptSimE6: MinLongAccumulator) extends Serializable {
-    /** True when the final top-k consumed the entire prescreen budget —
-      * the raise-`candidates` signal. Only meaningful after an action ran
-      * the query.
-      */
-    def saturated: Boolean =
-      maxKeptHamming.value >= maxCandidateHamming.value
-  }
-
-  private val hammingObserveId = new java.util.concurrent.atomic.AtomicLong()
-  private val hammingRunRegistry =
-    new java.util.concurrent.ConcurrentLinkedDeque[HammingRunStats]()
-  private val HammingRegistryCap = 128
-
-  /** Recent [[hammingTopK]] run telemetry, newest last (bounded buffer). */
-  def hammingRunStatsSnapshot(): Seq[HammingRunStats] = {
-    val b = Seq.newBuilder[HammingRunStats]
-    hammingRunRegistry.forEach(st => b += st)
-    b.result()
-  }
-
-  private def newHammingRunStats(spark: org.apache.spark.sql.SparkSession):
-      HammingRunStats = {
-    val name = s"graft_hamming_${hammingObserveId.incrementAndGet()}"
-    val candMax = new MaxLongAccumulator
-    spark.sparkContext.register(candMax, s"${name}_cand_max")
-    val keptMax = new MaxLongAccumulator
-    spark.sparkContext.register(keptMax, s"${name}_kept_max")
-    val keptMinSim = new MinLongAccumulator
-    spark.sparkContext.register(keptMinSim, s"${name}_kept_min_sim_e6")
-    val st = new HammingRunStats(name, candMax, keptMax, keptMinSim)
-    hammingRunRegistry.addLast(st)
-    while (hammingRunRegistry.size > HammingRegistryCap) hammingRunRegistry.pollFirst()
-    st
-  }
+  def hammingSaturated(candidates: Telemetry.Run, kept: Telemetry.Run): Boolean =
+    kept.max.value >= candidates.max.value
 
   /** Two-stage binary-quantized top-k: Hamming prescreen over 1-bit
     * signatures, exact cosine rerank over the survivors.
@@ -184,8 +145,11 @@ object Embeddings {
     * `candidates`/k — both stages are deterministic (id tie-breaks), and
     * the DuckDB oracle replays prescreen + rerank exactly.
     *
-    * Recall telemetry: every run registers a [[HammingRunStats]]
-    * (see [[hammingRunStatsSnapshot]]); `saturated` after an action means
+    * Recall telemetry: every call starts two [[Telemetry.Run]]s.
+    * `graft_hamming_candidates_<n>` records the candidates' Hamming
+    * distances; `graft_hamming_kept_<n>` records the kept rows' distances
+    * (`max`) and their floored e6 cosine (`min`, the worst kept
+    * similarity). [[hammingSaturated]] over the pair after an action means
     * the top-k consumed the whole prescreen budget — raise `candidates`.
     *
     * `candidates <= 0` derives a CORPUS-SCALED budget, max(4k, n/1000):
@@ -208,16 +172,10 @@ object Embeddings {
             else candidates
     require(c >= k, s"candidates ($c) must be >= k ($k)")
     val idType = embeddings.schema(idCol).dataType
-    val stats = newHammingRunStats(embeddings.sparkSession)
-    // telemetry recorders: always-true nondeterministic filters over the
-    // already-tiny candidate / kept rows (≤ candidates·|queries| each)
-    val recordCand = udf { (h: Int) => stats.maxCandidateHamming.add(h.toLong); true }
-      .asNondeterministic()
-    val recordKept = udf { (h: Int, sim: Double) =>
-      stats.maxKeptHamming.add(h.toLong)
-      stats.minKeptSimE6.add(math.floor(sim * 1000000.0).toLong)
-      true
-    }.asNondeterministic()
+    // telemetry recorders run over the already-tiny candidate / kept rows
+    // (≤ candidates·|queries| each)
+    val candRun = Telemetry.start(embeddings.sparkSession, "graft_hamming_candidates")
+    val keptRun = Telemetry.start(embeddings.sparkSession, "graft_hamming_kept")
     val embSig = embeddings.select(col(idCol), quantizeBinary(col(vecCol)).as("__sig"))
     val qrySig = queries.select(col(queryIdCol), quantizeBinary(col(queryVecCol)).as("__qsig"))
     val cand = embSig.crossJoin(broadcast(qrySig))
@@ -231,7 +189,7 @@ object Embeddings {
       .select(col(queryIdCol), explode(col("__tk")).as("__e"))
       .select(col(queryIdCol), col("__e.payload").cast(idType).as(idCol),
         (-col("__e.ord")).cast("int").as("hamming"))
-      .where(recordCand(col("hamming")))
+      .where(Telemetry.record(candRun, col("hamming"), Long.MaxValue))
     // join-back pins the ≤ c·|queries| candidate set as the BROADCAST side:
     // the corpus scans once more (columns pruned to id + vector) probing a
     // tiny hash table — no shuffle, and the float vectors surface only for
@@ -243,7 +201,7 @@ object Embeddings {
       .withColumn("sim", cosine(col(vecCol), col(queryVecCol)))
       .withColumn("rank", row_number().over(wFin))
       .where(col("rank") <= k)
-      .where(recordKept(col("hamming"), col("sim")))
+      .where(Telemetry.record(keptRun, col("hamming"), floor(col("sim") * lit(1e6))))
       .select(col(queryIdCol).as("query_id"), col("rank"),
         col(idCol).as("neighbor_id"), col("sim"), col("hamming"))
   }
@@ -839,16 +797,14 @@ object Embeddings {
     * pairs, an executor OOM rather than a slow query). Clusters over the
     * cap are excluded from PAIRING — every member keeps (conservative: no
     * false drops) — and the capped-cluster count plus the max observed
-    * cluster size are published as an observable metric named
-    * `graft_semdedup_clusters_<n>` (unique suffix per call, same contract
-    * as the LSH bucket metric — listeners match on the prefix). Default =
-    * no cap, because skipping clusters changes results and any threshold
-    * must be the caller's call.
+    * cluster size are recorded as a `graft_semdedup_clusters_<n>`
+    * [[Telemetry.Run]]. Default = no cap, because skipping clusters
+    * changes results and any threshold must be the caller's call.
     */
   def semanticDeduplicate(embeddings: DataFrame, vecCol: String, idCol: String,
       k: Int, threshold: Double, iterations: Int = 1,
       maxClusterSize: Int = Int.MaxValue): DataFrame = {
-    val reserved = Seq("cid", "keep", "__norm", "__drop", "__csize")
+    val reserved = Seq("cid", "keep", "__norm", "__drop")
     require(!embeddings.columns.exists(reserved.contains),
       s"semanticDeduplicate reserves column names ${reserved.mkString(", ")}; " +
         "rename the input columns")
@@ -906,7 +862,7 @@ object Embeddings {
       vecCol: String, idCol: String, k: Int, threshold: Double,
       iterations: Int = 1, maxClusterSize: Int = Int.MaxValue,
       centroids: Option[DataFrame] = None): DataFrame = {
-    val reserved = Seq("cid", "keep", "__new", "__norm", "__drop", "__csize")
+    val reserved = Seq("cid", "keep", "__new", "__norm", "__drop")
     for (df <- Seq(newEmb, oldEmb))
       require(!df.columns.exists(reserved.contains),
         s"incrementalSemanticDeduplicate reserves column names " +
@@ -960,22 +916,24 @@ object Embeddings {
       .setScale(0, java.math.RoundingMode.HALF_UP).doubleValue().toLong
 
   /** Fail-soft cluster cap: oversized clusters leave the pairing set
-    * (every member keeps); the capped count and max observed size publish
-    * under a uniquely-suffixed `graft_semdedup_clusters` metric. The
-    * sizes frame is at most k rows — it broadcasts, so the data-sized
-    * side never reshuffles for the guard.
+    * (every member keeps); the capped count and max observed size are
+    * recorded as a `graft_semdedup_clusters_<n>` [[Telemetry.Run]]. The
+    * per-cluster sizes are a ≤ k bounded collect (the k-means pattern),
+    * so every cluster counts once however often the caller's plan reads
+    * `assigned` (the self-join reads it twice), and the guard is a row
+    * filter on the over-cap cids: the data-sized side never reshuffles.
     */
   private def capClusters(assigned: DataFrame, maxClusterSize: Int): DataFrame =
     if (maxClusterSize == Int.MaxValue) assigned
     else {
-      val sizes = assigned.groupBy(col("cid"))
-        .agg(count(lit(1)).as("__csize"))
-        .observe(s"graft_semdedup_clusters_${semdedupObserveId.incrementAndGet()}",
-          sum(when(col("__csize") > maxClusterSize, 1L).otherwise(0L))
-            .as("capped_clusters"),
-          max(col("__csize")).as("max_cluster_size"))
-      assigned.join(broadcast(
-        sizes.where(col("__csize") <= lit(maxClusterSize)).select("cid")), Seq("cid"))
+      val run = Telemetry.start(assigned.sparkSession, "graft_semdedup_clusters")
+      val sizes = assigned.groupBy(col("cid")).agg(count(lit(1)))
+        .collect().map(r => (r.getLong(0), r.getLong(1)))
+      sizes.foreach { case (_, n) => run.max.add(n); run.min.add(n) }
+      val over = sizes.collect { case (cid, n) if n > maxClusterSize => cid }
+      run.dropped.add(over.length.toLong)
+      if (over.isEmpty) assigned
+      else assigned.where(!col("cid").isin(over.toIndexedSeq: _*))
     }
 
   /** In-cluster drop join: `candidates` (alias a) against `neighbors`

@@ -299,8 +299,6 @@ object Events {
     */
   val EwmaMaxAbsVE6: Long = Long.MaxValue / 1000000L  // 9223372036854
 
-  private val ewmaObserveId = new java.util.concurrent.atomic.AtomicLong()
-
   /** Per-key EWMA smoothing with EXACT integer recursion — the telemetry
     * baseline/anomaly primitive: `e_1 = v_1`,
     * `e_t = (alpha_ppm·v_t + (10^6 − alpha_ppm)·e_{t−1}) div 10^6`
@@ -326,11 +324,9 @@ object Events {
     * is the fail-soft backstop for exactly that hot key: over-cap keys
     * are DROPPED (their rows are not emitted — truncating a prefix would
     * silently change every downstream smoothed value), and the drop
-    * count + max observed history are published both as the
-    * `graft_ewma_keys_<n>` observable metric and as the AQE-safe per-run
-    * accumulators the LSH skew machinery uses
-    * ([[Dedup.lshRunStatsSnapshot]]). Default = no cap: dropping keys
-    * changes results, so any threshold is the caller's call.
+    * count + max observed history are recorded as a `graft_ewma_keys_<n>`
+    * [[Telemetry.Run]]. Default = no cap: dropping keys changes results,
+    * so any threshold is the caller's call.
     *
     * @return (keyCol, us BIGINT, v_e6, ewma_e6, dev_e6)
     */
@@ -351,16 +347,12 @@ object Events {
         lit("graft.ewmaSmooth: |value| outside the exact-recursion domain " +
           s"(|v_e6| <= $EwmaMaxAbsVE6, ~9.22e6 natural units); got value="),
         col(valueCol).cast("string"))).cast("long"))
-    val runId = ewmaObserveId.incrementAndGet()
-    val record = Dedup.skewRecord(df.sparkSession, s"graft_ewma_keys_$runId", maxKeyHistory)
+    val run = Telemetry.start(df.sparkSession, "graft_ewma_keys")
     val histories = df
       .select(col(keyCol), unix_micros(col(tsCol)).as("__us"), vGuarded.as("__v"))
       .groupBy(col(keyCol))
       .agg(sort_array(collect_list(struct(col("__us"), col("__v")))).as("__h"))
-      .observe(s"graft_ewma_keys_$runId",
-        sum(when(size(col("__h")) > maxKeyHistory, 1L).otherwise(0L)).as("dropped_keys"),
-        max(size(col("__h"))).as("max_key_history"))
-      .where(record(size(col("__h"))))
+      .where(Telemetry.record(run, size(col("__h")), maxKeyHistory))
     val guarded =
       if (maxKeyHistory == Int.MaxValue) histories
       else histories.where(size(col("__h")) <= maxKeyHistory)

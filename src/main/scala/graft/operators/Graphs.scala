@@ -49,24 +49,13 @@ import org.apache.spark.sql.functions._
 object Graphs {
 
   /** One power-iteration run's convergence telemetry (see
-    * [[pageRank]]'s `trackConvergence`): `finalDeltaPpb` is the L1
+    * [[pageRank]]'s `onConvergence`): `finalDeltaPpb` is the L1
     * distance Σ|rank_n − rank_{n−1}| in ppb — the raise-`iterations`
     * signal (a converged run changes a few ppb per node; a run stopped
     * early still moves percent-level mass).
     */
   final case class PageRankStats(iterations: Int, nodes: Long,
       finalDeltaPpb: Long)
-
-  private val statsRegistry =
-    new java.util.concurrent.ConcurrentLinkedDeque[PageRankStats]()
-  private val StatsRegistryCap = 128
-
-  /** Recent convergence-tracked run stats, newest last (bounded buffer). */
-  def pageRankStatsSnapshot(): Seq[PageRankStats] = {
-    val b = Seq.newBuilder[PageRankStats]
-    statsRegistry.forEach(s => b += s)
-    b.result()
-  }
 
   /** PageRank over `edges(srcCol, dstCol)` (node ids BIGINT).
     *
@@ -80,6 +69,10 @@ object Graphs {
     * out-degree before the damped sum, which stays ≪ 2^63).
     *
     * @param undirected emit each input edge in both directions (dedup'd)
+    * @param onConvergence receives the run's [[PageRankStats]] before the
+    *        call returns. Given a callback, a run without a tolerance pays
+    *        one extra bounded node-keyed join for the final step's delta;
+    *        `None` pays nothing.
     * @param tolerancePpb > 0 enables convergence-driven early stop: quit
     *        when the L1 step delta Σ|rank_i − rank_{i−1}| falls to the
     *        tolerance (one extra bounded node-keyed join per step;
@@ -92,10 +85,10 @@ object Graphs {
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
                iterations: Int, dampingPpm: Long = 850000L,
                undirected: Boolean = false,
-               trackConvergence: Boolean = false,
+               onConvergence: Option[PageRankStats => Unit] = None,
                tolerancePpb: Long = 0L): DataFrame =
     runPageRank(edges, srcCol, dstCol, iterations, dampingPpm, undirected,
-      None, trackConvergence, tolerancePpb)
+      None, onConvergence, tolerancePpb)
 
   /** Personalized (seeded) PageRank: the teleport mass lands ONLY on the
     * seed nodes — `tele(v) = 10^9 div |seeds|` for seeds, 0 otherwise —
@@ -107,10 +100,11 @@ object Graphs {
   def personalizedPageRank(edges: DataFrame, srcCol: String, dstCol: String,
       seeds: DataFrame, seedCol: String, iterations: Int,
       dampingPpm: Long = 850000L, undirected: Boolean = false,
-      trackConvergence: Boolean = false, tolerancePpb: Long = 0L): DataFrame =
+      onConvergence: Option[PageRankStats => Unit] = None,
+      tolerancePpb: Long = 0L): DataFrame =
     runPageRank(edges, srcCol, dstCol, iterations, dampingPpm, undirected,
       Some(seeds.select(col(seedCol).cast("long").as("node")).distinct()),
-      trackConvergence, tolerancePpb)
+      onConvergence, tolerancePpb)
 
   /** Degree distribution of the (simple) graph: one row per distinct
     * degree with the number of nodes holding it — the first thing to look
@@ -408,22 +402,23 @@ object Graphs {
     * distinct+degree+checkpoint derivation.
     */
   def pageRank(g: PreparedGraph, iterations: Int, dampingPpm: Long,
-      trackConvergence: Boolean, tolerancePpb: Long): DataFrame =
-    runPrepared(g, iterations, dampingPpm, None, trackConvergence,
-      tolerancePpb)
+      onConvergence: Option[PageRankStats => Unit],
+      tolerancePpb: Long): DataFrame =
+    runPrepared(g, iterations, dampingPpm, None, onConvergence, tolerancePpb)
 
   /** [[personalizedPageRank]] over a [[PreparedGraph]]. */
   def personalizedPageRank(g: PreparedGraph, seeds: DataFrame,
       seedCol: String, iterations: Int, dampingPpm: Long,
-      trackConvergence: Boolean, tolerancePpb: Long): DataFrame =
+      onConvergence: Option[PageRankStats => Unit],
+      tolerancePpb: Long): DataFrame =
     runPrepared(g, iterations, dampingPpm,
       Some(seeds.select(col(seedCol).cast("long").as("node")).distinct()),
-      trackConvergence, tolerancePpb)
+      onConvergence, tolerancePpb)
 
   private def runPageRank(edges: DataFrame, srcCol: String, dstCol: String,
       iterations: Int, dampingPpm: Long, undirected: Boolean,
-      seedsOpt: Option[DataFrame], trackConvergence: Boolean = false,
-      tolerancePpb: Long = 0L): DataFrame = {
+      seedsOpt: Option[DataFrame], onConvergence: Option[PageRankStats => Unit],
+      tolerancePpb: Long): DataFrame = {
     // the per-call PreparedGraph is released eagerly once the run returns:
     // the result roots at its own final rank checkpoint, so the graph's
     // eDeg/nodes blocks are unreachable from it, and without the release a
@@ -431,14 +426,14 @@ object Graphs {
     // accumulate edge-table copies in spark.local.dir until a driver GC
     // lets the ContextCleaner notice
     val g = prepareGraph(edges, srcCol, dstCol, undirected)
-    try runPrepared(g, iterations, dampingPpm, seedsOpt, trackConvergence,
+    try runPrepared(g, iterations, dampingPpm, seedsOpt, onConvergence,
       tolerancePpb)
     finally g.unpersist()
   }
 
   private def runPrepared(g: PreparedGraph,
       iterations: Int, dampingPpm: Long,
-      seedsOpt: Option[DataFrame], trackConvergence: Boolean,
+      seedsOpt: Option[DataFrame], onConvergence: Option[PageRankStats => Unit],
       tolerancePpb: Long): DataFrame = {
     require(iterations >= 1 && iterations <= 100, "iterations must be in [1, 100]")
     require(dampingPpm >= 0 && dampingPpm <= 1000000L, "dampingPpm must be in [0, 10^6]")
@@ -516,12 +511,12 @@ object Graphs {
           expr(s"((${1000000L - dampingPpm}L * tele) div 1000000L)") +
           expr(s"(${dampingPpm}L * coalesce(inc, 0L)) div 1000000L")).as("rank"))
       performed += 1
-      // the penultimate step is also cut when convergence TELEMETRY is on
-      // without a tolerance: the final l1Delta joins ranks against prev,
-      // and an uncut prev would silently recompute a whole superstep
+      // the penultimate step is also cut when a convergence callback is
+      // given without a tolerance: the final l1Delta joins ranks against
+      // prev, and an uncut prev would silently recompute a whole superstep
       // inside the telemetry join
       val cut = performed % checkpointInterval == 0 || performed == iterations ||
-        (trackConvergence && tolerancePpb == 0 && performed == iterations - 1)
+        (onConvergence.isDefined && tolerancePpb == 0 && performed == iterations - 1)
       if (cut) {
         ranks = cutLineage(next, g.reliable) // eager: executes the chain
         cutHistory.enqueue(ranks)
@@ -535,13 +530,12 @@ object Graphs {
         if (d <= tolerancePpb) converged = true
       }
     }
-    if (trackConvergence && prev != null) {
+    for (report <- onConvergence if prev != null) {
       val (d, n) = if (tolerancePpb > 0 && lastDelta >= 0) {
         // reuse the step's delta; node count from the final rank table
         (lastDelta, ranks.count())
       } else l1Delta(ranks, prev)
-      statsRegistry.addLast(PageRankStats(performed, n, d))
-      while (statsRegistry.size() > StatsRegistryCap) statsRegistry.pollFirst()
+      report(PageRankStats(performed, n, d))
     }
     // the returned frame roots at the final rank checkpoint; every other
     // cut in the history (and the per-call teleport base) is unreachable

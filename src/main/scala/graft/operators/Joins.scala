@@ -28,32 +28,11 @@ object Joins {
     * plain — result unchanged, but the threshold has stopped being
     * selective), the smallest kept count (every dropped key weighs ≤
     * this), and the threshold actually used (the quantile-derived value
-    * in auto mode). Delivered to the caller through `saltedJoin`'s
-    * `onStats` callback — the race-free attribution path; the process
-    * [[saltedJoinStatsSnapshot]] registry is ADVISORY ONLY (concurrent
-    * joins interleave entries).
+    * in auto mode). Known on the driver before the join is planned, and
+    * delivered through `saltedJoin`'s `onStats` callback.
     */
   final case class SaltedJoinStats(hotKeysKept: Int, overflowed: Boolean,
       minKeptCount: Long, hotKeyThreshold: Long)
-
-  private val saltedJoinStatsRegistry =
-    new java.util.concurrent.ConcurrentLinkedDeque[SaltedJoinStats]()
-
-  private def publishSaltedJoinStats(s: SaltedJoinStats): Unit = {
-    saltedJoinStatsRegistry.addLast(s)
-    while (saltedJoinStatsRegistry.size > 64) saltedJoinStatsRegistry.pollFirst()
-  }
-
-  /** Snapshot of recent [[saltedJoin]] runs' stats (oldest first).
-    * ADVISORY: concurrent joins interleave entries, so a caller that needs
-    * to attribute stats to ITS join must use `saltedJoin`'s `onStats`
-    * callback instead of diffing this registry.
-    */
-  def saltedJoinStatsSnapshot(): Seq[SaltedJoinStats] = {
-    val b = Seq.newBuilder[SaltedJoinStats]
-    saltedJoinStatsRegistry.forEach(s => b += s)
-    b.result()
-  }
 
   /** Left-side key frequencies above `threshold` — the keys that would
     * overload single tasks in a plain shuffle join. One partial-aggregated
@@ -118,9 +97,8 @@ object Joins {
     *            the sf10 sweep, where a gate threshold sized at sf0.1
     *            qualified >1M keys and the previous fail-fast require()
     *            aborted a join that was otherwise fine.
-    * @param onStats receives this run's [[SaltedJoinStats]] — the
-    *            race-free way to observe the derived threshold / overflow
-    *            under concurrent joins (the global snapshot interleaves).
+    * @param onStats receives this run's [[SaltedJoinStats]]: the derived
+    *            threshold and whether the hot-key cap overflowed.
     */
   def saltedJoin(left: DataFrame, right: DataFrame, keys: Seq[String],
       saltFactor: Int = 16, hotKeyThreshold: Long = 0,
@@ -179,7 +157,6 @@ object Joins {
     val stats = SaltedJoinStats(
       hotKeysKept = hotRows.length, overflowed = overflowed,
       minKeptCount = minKeptCount, hotKeyThreshold = thr)
-    publishSaltedJoinStats(stats)
     onStats(stats)
     if (overflowed)
       org.slf4j.LoggerFactory.getLogger(Joins.getClass).warn(

@@ -3,6 +3,8 @@ package graft.sources
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.operators.Telemetry
+
 /** Token → posting-list index over a text corpus: build once, persist as
   * parquet, answer multi-term membership queries by reading ONLY the query
   * terms' postings (parquet predicate pushdown on the token column).
@@ -14,8 +16,9 @@ import org.apache.spark.sql.functions._
   * Scale shape: the build is ONE token-keyed aggregate (map-side partial
   * `collect_set`); hyper-frequent tokens produce corpus-sized posting
   * rows — the classic stopword skew — so `maxDf` drops tokens above a
-  * document-frequency cap (they carry no selectivity; the drop count is
-  * reported via the `graft_inverted_index` observable metric). Search
+  * document-frequency cap (they carry no selectivity; each capped build
+  * records its drop count and max df as a `graft_inverted_index_<n>`
+  * [[Telemetry.Run]]). Search
   * explodes only the matched posting rows and groups on doc_id —
   * co-partitioned, bounded by the query terms' total df.
   */
@@ -35,11 +38,11 @@ object InvertedIndex {
       .agg(count(lit(1)).cast("long").as("df"),
         sort_array(collect_set(col("doc_id"))).as("postings"))
     if (maxDf <= 0L) idx
-    else idx
-      .observe("graft_inverted_index",
-        sum(when(col("df") > maxDf, 1L).otherwise(0L)).as("dropped_tokens"),
-        max(col("df")).as("max_df"))
-      .where(col("df") <= maxDf)
+    else {
+      val run = Telemetry.start(docs.sparkSession, "graft_inverted_index")
+      idx.where(Telemetry.record(run, col("df"), maxDf))
+        .where(col("df") <= maxDf)
+    }
   }
 
   /** Persist sorted by token so reads cluster and row-group stats make the

@@ -105,7 +105,7 @@ object SemDedupIndex {
   def refresh(spark: SparkSession, dir: String, newEmb: DataFrame,
       vecCol: String, idCol: String, threshold: Double,
       maxClusterSize: Int = Int.MaxValue): DataFrame = {
-    val reserved = Seq("cid", "keep", "__new", "__norm", "__drop", "__csize")
+    val reserved = Seq("cid", "keep", "__new", "__norm", "__drop")
     require(!newEmb.columns.exists(reserved.contains),
       s"SemDedupIndex.refresh reserves column names ${reserved.mkString(", ")}; " +
         "rename the input columns")

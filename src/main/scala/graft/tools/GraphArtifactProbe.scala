@@ -81,7 +81,7 @@ object GraphArtifactProbe {
         .write.format("noop").mode("overwrite").save()
     }
     timed("pageRank 5 iters (unpinned)") {
-      graft.operators.Graphs.pageRank(g0, 5, 850000L, false, 0L)
+      graft.operators.Graphs.pageRank(g0, 5, 850000L, None, 0L)
         .orderBy(col("rank_ppb").desc, col("node")).limit(25)
         .write.format("noop").mode("overwrite").save()
     }
@@ -93,7 +93,7 @@ object GraphArtifactProbe {
       }
       println(f"[graphart] after pin: free=${freeGb}%.1f GB")
       timed("pageRank 5 iters (pinned)") {
-        graft.operators.Graphs.pageRank(gp, 5, 850000L, false, 0L)
+        graft.operators.Graphs.pageRank(gp, 5, 850000L, None, 0L)
           .orderBy(col("rank_ppb").desc, col("node")).limit(25)
           .write.format("noop").mode("overwrite").save()
       }

@@ -56,7 +56,7 @@ object GraphFusedAB {
       println(f"[ab] $label%-34s $dt%.3f s"); dt
     }
     def pr2(g: graft.operators.Graphs.PreparedGraph): Array[org.apache.spark.sql.Row] =
-      graft.operators.Graphs.pageRank(g, 2, 850000L, false, 0L)
+      graft.operators.Graphs.pageRank(g, 2, 850000L, None, 0L)
         .orderBy(col("rank_ppb").desc, col("node")).limit(25).collect()
 
     var ref: Array[org.apache.spark.sql.Row] = null

@@ -59,14 +59,14 @@ object GraphGatePhases {
         g0.eDeg.count(); g0
       }
       timed("pagerank 5 iters") {
-        noop(graft.operators.Graphs.pageRank(g, 5, 850000L, false, 0L)
+        noop(graft.operators.Graphs.pageRank(g, 5, 850000L, None, 0L)
           .orderBy(col("rank_ppb").desc, col("node")).limit(25))
       }
       val seeds = spark.sql(
         "SELECT s_suppkey * 2 + 1 AS node FROM supplier WHERE s_nationkey = 0")
       timed("ppr 3 iters") {
         noop(graft.operators.Graphs.personalizedPageRank(g, seeds, "node",
-            3, 850000L, false, 0L)
+            3, 850000L, None, 0L)
           .where(col("rank_ppb") > 0)
           .orderBy(col("rank_ppb").desc, col("node")).limit(25))
       }

@@ -55,7 +55,7 @@ object GraphPhaseProbe {
     }
     for (iters <- Seq(1, 2, 3, 4, 5)) {
       timed(s"pageRank iters=$iters") {
-        graft.operators.Graphs.pageRank(g, iters, 850000L, false, 0L)
+        graft.operators.Graphs.pageRank(g, iters, 850000L, None, 0L)
           .orderBy(col("rank_ppb").desc, col("node")).limit(25)
           .write.format("noop").mode("overwrite").save()
       }

@@ -75,12 +75,12 @@ class GraphOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       df.collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
     // integer arithmetic end to end, so the two paths must agree EXACTLY —
     // pagerank (even iterations: interval-2 cuts) and ppr (seeded base)
-    assert(rows(Graphs.pageRank(rel, 4, 850000L, trackConvergence = false, 0L)) ==
-           rows(Graphs.pageRank(local, 4, 850000L, trackConvergence = false, 0L)))
+    assert(rows(Graphs.pageRank(rel, 4, 850000L, onConvergence = None, 0L)) ==
+           rows(Graphs.pageRank(local, 4, 850000L, onConvergence = None, 0L)))
     assert(rows(Graphs.personalizedPageRank(rel, seeds, "node", 3, 850000L,
-             trackConvergence = false, 0L)) ==
+             onConvergence = None, 0L)) ==
            rows(Graphs.personalizedPageRank(local, seeds, "node", 3, 850000L,
-             trackConvergence = false, 0L)))
+             onConvergence = None, 0L)))
     // the runs' checkpoint files exist under the caller's dir...
     def fileCount: Int = {
       val walk = java.nio.file.Files.walk(ckDir)
@@ -111,14 +111,14 @@ class GraphOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val s = spark
     import s.implicits._
     val edges = (for (i <- 0L until 30L) yield (i, (i * 11 + 3) % 30)).toDF("src", "dst")
-    val before = Graphs.pageRankStatsSnapshot().size
+    val reported = scala.collection.mutable.ArrayBuffer.empty[Graphs.PageRankStats]
     Graphs.pageRank(edges, "src", "dst", 2, undirected = true).collect(): Unit
-    assert(Graphs.pageRankStatsSnapshot().size == before) // default: no tracking
+    assert(reported.isEmpty) // no callback, no stats
     Graphs.pageRank(edges, "src", "dst", 2, undirected = true,
-      trackConvergence = true).collect(): Unit
+      onConvergence = Some(reported += _)).collect(): Unit
     Graphs.pageRank(edges, "src", "dst", 12, undirected = true,
-      trackConvergence = true).collect(): Unit
-    val stats = Graphs.pageRankStatsSnapshot().takeRight(2)
+      onConvergence = Some(reported += _)).collect(): Unit
+    val stats = reported.toSeq
     assert(stats.map(_.iterations) == Seq(2, 12))
     assert(stats.forall(_.nodes == 30L))
     // more iterations -> smaller final step (power iteration converges)
@@ -134,11 +134,12 @@ class GraphOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L)).toDF("src", "dst")
     val fixed = Graphs.pageRank(edges, "src", "dst", 50)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    var reported: Graphs.PageRankStats = null
     val early = Graphs.pageRank(edges, "src", "dst", 50,
-        trackConvergence = true, tolerancePpb = 1L)
+        onConvergence = Some(reported = _), tolerancePpb = 1L)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(early == fixed, s"early-stop diverged: $early vs $fixed")
-    val st = Graphs.pageRankStatsSnapshot().last
+    val st = reported
     assert(st.iterations < 50, s"never stopped early: $st")
     assert(st.finalDeltaPpb <= 1L && st.nodes == 3L, st.toString)
     // a fixed-iteration run shorter than the stop point differs (the
@@ -152,9 +153,10 @@ class GraphOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val s = spark
     import s.implicits._
     val empty = Seq.empty[(Long, Long)].toDF("src", "dst")
-    val out = Graphs.pageRank(empty, "src", "dst", 3, trackConvergence = true)
+    var st: Graphs.PageRankStats = null
+    val out = Graphs.pageRank(empty, "src", "dst", 3, onConvergence = Some(st = _))
     assert(out.count() == 0L)
-    val st = Graphs.pageRankStatsSnapshot().last
+    assert(st != null, "no stats reported")
     assert(st.nodes == 0L && st.finalDeltaPpb == 0L, st.toString)
     // tolerance mode on an empty graph stops without a crash too
     assert(Graphs.pageRank(empty, "src", "dst", 3, tolerancePpb = 5L).count() == 0L)
@@ -231,7 +233,7 @@ class GraphOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       val prRaw = Graphs.pageRank(edges, "src", "dst", 4, undirected = und)
         .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
       val prPrep = Graphs.pageRank(g, 4, dampingPpm = 850000L,
-          trackConvergence = false, tolerancePpb = 0L)
+          onConvergence = None, tolerancePpb = 0L)
         .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
       assert(prPrep == prRaw, s"pagerank undirected=$und")
       val seeds = Seq(1L, 4L).toDF("node")
@@ -239,7 +241,7 @@ class GraphOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
           "node", 3, undirected = und)
         .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
       val pprPrep = Graphs.personalizedPageRank(g, seeds, "node", 3,
-          dampingPpm = 850000L, trackConvergence = false, tolerancePpb = 0L)
+          dampingPpm = 850000L, onConvergence = None, tolerancePpb = 0L)
         .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
       assert(pprPrep == pprRaw, s"ppr undirected=$und")
       val ddRaw = Graphs.degreeDistribution(edges, "src", "dst", undirected = und)

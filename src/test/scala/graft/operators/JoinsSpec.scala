@@ -92,7 +92,7 @@ class JoinsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // (key 0 at 5000 rows, then keys 1 and 2 at 10 rows by the key
     // tie-break) and joins the other 198 plain — same answer either way.
     // Stats arrive through onStats — per-call attribution, race-free under
-    // concurrent joins (the global snapshot is advisory only).
+    // concurrent joins.
     var s: Joins.SaltedJoinStats = null
     val salted = Joins.saltedJoin(left, right, Seq("k"),
       saltFactor = 4, hotKeyThreshold = 9L, maxHotKeys = 3, onStats = s = _)
@@ -106,8 +106,6 @@ class JoinsSpec extends AnyFunSuite with BeforeAndAfterAll {
     Joins.saltedJoin(left, right, Seq("k"),
       saltFactor = 4, hotKeyThreshold = 100L, onStats = s2 = _).count()
     assert(!s2.overflowed && s2.hotKeysKept == 1 && s2.minKeptCount == 5000L)
-    // and the advisory registry still records runs (oldest first)
-    assert(Joins.saltedJoinStatsSnapshot().nonEmpty)
   }
 
   test("auto threshold: quantile-derived cutoff selects ~the heaviest decile at two SFs") {

@@ -509,24 +509,19 @@ class OperatorSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("ewmaSmooth: maxKeyHistory drops hot keys fail-soft with telemetry") {
     import java.sql.Timestamp
     def ts(i: Int) = Timestamp.valueOf(f"2024-01-01 10:00:$i%02d")
-    val prev = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      val df = spark.createDataFrame(
-        (1 to 5).map(i => (1L, ts(i), i.toDouble)) ++ // hot key: 5 points
-          (1 to 2).map(i => (2L, ts(i), i.toDouble))  // cold key: 2 points
-      ).toDF("k", "ts", "v")
-      // uncapped: all 7 rows; capped at 3: the hot key is DROPPED whole
-      assert(Events.ewmaSmooth(df, "k", "ts", "v", 500000L).count() == 7L)
-      val capped = Events.ewmaSmooth(df, "k", "ts", "v", 500000L, maxKeyHistory = 3)
-      val rows = capped.collect()
-      assert(rows.map(_.getLong(0)).toSet == Set(2L), rows.mkString(","))
-      val m = capped.queryExecution.observedMetrics.collectFirst {
-        case (name, r) if name.startsWith("graft_ewma_keys") => r
-      }.getOrElse(fail("graft_ewma_keys metric missing from the executed plan"))
-      assert(m.getAs[Long]("dropped_keys") == 1L)
-      assert(m.getAs[Int]("max_key_history") == 5)
-    } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
+    val df = spark.createDataFrame(
+      (1 to 5).map(i => (1L, ts(i), i.toDouble)) ++ // hot key: 5 points
+        (1 to 2).map(i => (2L, ts(i), i.toDouble))  // cold key: 2 points
+    ).toDF("k", "ts", "v")
+    // uncapped: all 7 rows; capped at 3: the hot key is DROPPED whole
+    assert(Events.ewmaSmooth(df, "k", "ts", "v", 500000L).count() == 7L)
+    val capped = Events.ewmaSmooth(df, "k", "ts", "v", 500000L, maxKeyHistory = 3)
+    val run = Telemetry.runs("graft_ewma_keys").last
+    val rows = capped.collect()
+    assert(rows.map(_.getLong(0)).toSet == Set(2L), rows.mkString(","))
+    // the run record is read with AQE on (the session default)
+    assert(run.dropped.value == 1L)
+    assert(run.max.value == 5L)
   }
 
   test("asof join forward: earliest-at-or-after, inclusive, tolerance, tie policy") {
@@ -752,8 +747,10 @@ class OperatorSpec extends AnyFunSuite with BeforeAndAfterAll {
     // pairing happens and every member keeps (conservative, no drops)
     val capped = Embeddings.semanticDeduplicate(vecs, "vec", "vec_id",
         k = 2, threshold = 0.95, iterations = 2, maxClusterSize = 2)
-      .where(col("keep")).count()
-    assert(capped == 6L)
+    val run = Telemetry.runs("graft_semdedup_clusters").last
+    assert(capped.where(col("keep")).count() == 6L)
+    assert(run.dropped.value == 2L, "both clusters over the cap")
+    assert(run.max.value == 3L)
   }
 
   test("feature-hash vectors: deterministic buckets, unit norm, zero-doc safe") {
@@ -2392,28 +2389,18 @@ class OperatorSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("lsh guard publishes dropped-bucket counts through the observable metric") {
-    // AQE's re-planning detaches the CollectMetrics accumulator that
-    // queryExecution.observedMetrics collects (observed empirically on
-    // this plan shape: node present in all three plans, metrics map
-    // empty) — disable it for the metric read; the functional guard
-    // itself is AQE-independent and covered by the previous test
-    val prev = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      val dup = spark.createDataFrame((1 to 12).map(i =>
-        (i.toLong, "same text repeated for every document in this tiny corpus again and again")))
-        .toDF("doc_id", "text")
-      val sigs = Dedup.minHashSignatures(Dedup.shingleHashes(dup, "text", "doc_id", 3), 32)
-      val pairs = Dedup.lshNearDuplicatePairs(sigs, 8, 32, maxBucketSize = 8)
-      assert(pairs.collect().isEmpty)
-      // metric names carry a unique per-pipeline suffix (duplicate observe
-      // names are rejected inside one query) — match on the prefix
-      val row = pairs.queryExecution.observedMetrics.collectFirst {
-        case (name, r) if name.startsWith("graft_lsh_buckets") => r
-      }.getOrElse(fail("observed metric missing from the executed plan"))
-      assert(row.getAs[Long]("dropped_buckets") == 8L, "all 8 band buckets over the cap")
-      assert(row.getAs[Int]("max_bucket_size") == 12)
-    } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
+    // with AQE on (the session default) a cap that drops every bucket
+    // empties the plan branch, and a Dataset.observe metric there is
+    // never reported; the run record's accumulators still are
+    val dup = spark.createDataFrame((1 to 12).map(i =>
+      (i.toLong, "same text repeated for every document in this tiny corpus again and again")))
+      .toDF("doc_id", "text")
+    val sigs = Dedup.minHashSignatures(Dedup.shingleHashes(dup, "text", "doc_id", 3), 32)
+    val pairs = Dedup.lshNearDuplicatePairs(sigs, 8, 32, maxBucketSize = 8)
+    val run = Telemetry.runs("graft_lsh_buckets").last
+    assert(pairs.collect().isEmpty)
+    assert(run.dropped.value == 8L, "all 8 band buckets over the cap")
+    assert(run.max.value == 12L)
   }
 
   test("histDrift: per-slot counts, fractions, integer L1") {
@@ -2733,25 +2720,27 @@ class OperatorSpec extends AnyFunSuite with BeforeAndAfterAll {
       (i.toLong, Array.tabulate(16)(d => math.sin(i * 1.7 + d * 0.61) + 0.05))
     }.toDF("vec_id", "vec")
     val queries = vecs.where($"vec_id" < 2).select($"vec_id".as("qid"), $"vec".as("qvec"))
-    def lastStats(run: => Unit): Embeddings.HammingRunStats = {
+    // (candidates, kept) run records of the call `run` makes
+    def lastRuns(run: => Unit): (Telemetry.Run, Telemetry.Run) = {
       run
-      Embeddings.hammingRunStatsSnapshot().last
+      (Telemetry.runs("graft_hamming_candidates").last,
+        Telemetry.runs("graft_hamming_kept").last)
     }
     // candidates == corpus: the kept max hamming sits well inside the
     // admitted candidate range — budget had slack
-    val loose = lastStats {
+    val (looseCand, looseKept) = lastRuns {
       Embeddings.hammingTopK(vecs, "vec", "vec_id", queries, "qvec", "qid",
         k = 3, candidates = 39).count(): Unit
     }
-    assert(loose.maxCandidateHamming.value > loose.maxKeptHamming.value)
-    assert(!loose.saturated)
-    assert(loose.minKeptSimE6.value <= 1000000L) // a real cosine, not zero-state
+    assert(looseCand.max.value > looseKept.max.value)
+    assert(!Embeddings.hammingSaturated(looseCand, looseKept))
+    assert(looseKept.min.value <= 1000000L) // a real cosine, not zero-state
     // candidates == k: every admitted candidate is kept, so the top-k
     // touches the prescreen boundary — the raise-candidates signal
-    val tight = lastStats {
+    val (tightCand, tightKept) = lastRuns {
       Embeddings.hammingTopK(vecs, "vec", "vec_id", queries, "qvec", "qid",
         k = 3, candidates = 3).count(): Unit
     }
-    assert(tight.saturated)
+    assert(Embeddings.hammingSaturated(tightCand, tightKept))
   }
 }

@@ -52,13 +52,13 @@ class GraphIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(rows(Graphs.degreeDistribution(loaded)) ==
            rows(Graphs.degreeDistribution(mem)))
     // integer ppb arithmetic: analysis results must agree EXACTLY
-    assert(rows(Graphs.pageRank(loaded, 4, 850000L, trackConvergence = false, 0L)) ==
-           rows(Graphs.pageRank(mem, 4, 850000L, trackConvergence = false, 0L)))
+    assert(rows(Graphs.pageRank(loaded, 4, 850000L, onConvergence = None, 0L)) ==
+           rows(Graphs.pageRank(mem, 4, 850000L, onConvergence = None, 0L)))
     val seeds = Seq(1L, 3L).toDF("node")
     assert(rows(Graphs.personalizedPageRank(loaded, seeds, "node", 3, 850000L,
-             trackConvergence = false, 0L)) ==
+             onConvergence = None, 0L)) ==
            rows(Graphs.personalizedPageRank(mem, seeds, "node", 3, 850000L,
-             trackConvergence = false, 0L)))
+             onConvergence = None, 0L)))
     // degree-only analyses over the loaded graph take NO checkpoint: both
     // relations root at parquet scans, so unpersist is a safe no-op and
     // the frames stay executable afterwards
@@ -70,8 +70,8 @@ class GraphIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the superstep gates use
     val pinned = GraphIndex.load(spark, s"$dir/g", pin = true)
     assert(rows(pinned.eDeg) == rows(loaded.eDeg))
-    assert(rows(Graphs.pageRank(pinned, 4, 850000L, trackConvergence = false, 0L)) ==
-           rows(Graphs.pageRank(loaded, 4, 850000L, trackConvergence = false, 0L)))
+    assert(rows(Graphs.pageRank(pinned, 4, 850000L, onConvergence = None, 0L)) ==
+           rows(Graphs.pageRank(loaded, 4, 850000L, onConvergence = None, 0L)))
     assert(pinned.eDeg.queryExecution.analyzed
       .isInstanceOf[org.apache.spark.sql.execution.LogicalRDD])
     pinned.unpersist()
