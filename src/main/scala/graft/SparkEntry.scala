@@ -1289,7 +1289,8 @@ object SparkEntry {
       // per-nation aggregate.
       "q_filter_store" -> ((s: SparkSession, dir: String) => {
         prepare(s, dir)
-        val path = java.nio.file.Files.createTempDirectory("graft_fstore_").toString + "/catalog"
+        val base = java.nio.file.Files.createTempDirectory("graft_fstore_").toString
+        val path = base + "/catalog"
         val cust = s.table("customer").select(col("c_nationkey"), col("c_custkey"),
           expr("bitfilters_duckdb_hash('v1.5.1', c_custkey)").as("h"))
         graft.sources.FilterStore.write(cust, "c_nationkey", "h",
@@ -1304,7 +1305,7 @@ object SparkEntry {
             sum("c_custkey").cast("long").as("key_sum"))
           .orderBy("c_nationkey")
         val out = localResult(s, res) // per-nation rollup; frees the catalog
-        deleteDirs(path)
+        deleteDirs(base)
         out
       }),
 
