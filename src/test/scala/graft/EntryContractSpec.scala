@@ -8,7 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * rows-only — exactly the regression class round-11 retired the last
   * golden pin to prevent), and no oracle may name a gate that does not
   * exist (a renamed gate would otherwise leave its oracle checking
-  * nothing). Pure map comparisons — no Spark session.
+  * nothing). Every gate is declared once, so the registry's declared
+  * names must be unique and complete. Pure list and map comparisons —
+  * no Spark session.
   */
 class EntryContractSpec extends AnyFunSuite {
 
@@ -30,5 +32,13 @@ class EntryContractSpec extends AnyFunSuite {
     SparkEntry.oracleSql.foreach { case (name, sql) =>
       assert(sql.trim.nonEmpty, s"$name oracle is empty")
     }
+  }
+
+  test("declared gate names are unique and number exactly 172") {
+    val names = SparkEntry.declared.map(_.name)
+    val twice = names.diff(names.distinct)
+    assert(twice.isEmpty, s"gates declared twice: ${twice.sorted.mkString(", ")}")
+    assert(names.size == 172)
+    assert(SparkEntry.queries.keySet == names.toSet)
   }
 }
