@@ -56,7 +56,7 @@ object StateStoreScaleProbe {
       println(s"[ssprobe] staged $numKeys keys at $inDir")
     }
     val ckpt = s"$workDir/ckpt_${provider}_$numKeys"
-    deleteRecursively(new java.io.File(ckpt))
+    graft.streaming.FileStreams.deleteTree(java.nio.file.Paths.get(ckpt))
 
     val t0 = System.nanoTime()
     val q = spark.readStream
@@ -76,10 +76,5 @@ object StateStoreScaleProbe {
     println(f"[ssprobe] RESULT provider=$provider keys=$numKeys wall=$wall%.1f s " +
       f"usedHeapMB=$heapMb maxHeapMB=${rt.maxMemory() / (1024 * 1024)}")
     spark.stop()
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory) f.listFiles().foreach(deleteRecursively)
-    f.delete(): Unit
   }
 }
