@@ -112,6 +112,7 @@ object SparkEntry {
     */
   def clearSharedRelations(): Unit = SharedRelation.clearAll()
 
+  /** The graph evidence tools' handle on the purchase-edge checkpoint. */
   private[graft] def sharedPurchaseEdges(s: SparkSession, dir: String): DataFrame =
     GraphGates.sharedPurchaseEdges(s, dir)
 }

@@ -12,11 +12,10 @@ import graft.operators.Graphs
   */
 object GraphGates {
 
-  /** Distinct customer↔supplier purchase edges (parity-encoded node ids),
-    * shared by the `q_pagerank` and `q_ppr` gates — the same
-    * checkpoint-the-expensive-relation pattern as [[sharedJaccardPairs]]:
-    * a real pipeline derives the link graph once and runs every graph
-    * analysis against the materialized edge table.
+  /** Distinct customer↔supplier purchase edges (parity-encoded node ids)
+    * as a parquet checkpoint. No gate reads it: [[sharedPreparedGraph]]
+    * derives straight from the join. The graph evidence tools read it
+    * through [[SparkEntry.sharedPurchaseEdges]].
     */
   private[graft] val sharedPurchaseEdges: SharedRelation[DataFrame] =
     SharedRelation.parquet("edges") { s =>

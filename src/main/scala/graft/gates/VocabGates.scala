@@ -15,8 +15,9 @@ object VocabGates {
 
   /** Learned BPE merge table (6 merges over `documents`), shared by the
     * `q_bpe` and `q_bpe_encode` gates — the same checkpoint-the-expensive-
-    * relation pattern as [[sharedJaccardPairs]]: training drives ~2 jobs
-    * per merge step (pair-count argmax + vocab re-materialization), and a
+    * relation pattern as [[DedupGates.sharedJaccardPairs]]: training
+    * drives ~2 jobs per merge step (pair-count argmax + vocab
+    * re-materialization), and a
     * real pipeline trains its tokenizer once and ships the merge table to
     * every consumer. The table itself is tiny (one row per merge); what
     * the checkpoint saves is re-RUNNING the training loop per consumer.
