@@ -111,10 +111,6 @@ object SparkEntry {
     * gate result BEFORE clearing; Bench/Verify and the probes all do.
     */
   def clearSharedRelations(): Unit = SharedRelation.clearAll()
-
-  /** The graph evidence tools' handle on the purchase-edge checkpoint. */
-  private[graft] def sharedPurchaseEdges(s: SparkSession, dir: String): DataFrame =
-    GraphGates.sharedPurchaseEdges(s, dir)
 }
 
 /** A relation several gates share, built on first use once per

@@ -39,7 +39,7 @@ final class QuotientFilter private (
   def entries: Long = _entries
 
   /** Read slot idx (low `elemBits` bits); reference quotient_filter.cpp:60-73. */
-  @inline private def getElem(idx: Long): Long = {
+  @inline private[core] def getElem(idx: Long): Long = {
     val bitpos = elemBits * idx
     val tabpos = (bitpos >>> 6).toInt
     val slotpos = (bitpos & 63).toInt
@@ -391,31 +391,10 @@ final class QuotientFilterIterator(qf: QuotientFilter) {
     var start = 0L
     var found = false
     while (start < qf.maxSize && !found) {
-      if (isClusterStart(elemAt(start))) found = true else start += 1
+      if (isClusterStart(qf.getElem(start))) found = true else start += 1
     }
     visited = 0
     index = start
-  }
-
-  @inline private def elemAt(i: Long): Long = {
-    // QuotientFilter.getElem is private; recompute via reflection-free access:
-    qfGetElem(i)
-  }
-
-  // mirror of QuotientFilter.getElem over the public table
-  @inline private def qfGetElem(idx: Long): Long = {
-    val elemBits = qf.rbits + 3
-    val elemMask = if (elemBits >= 64) -1L else (1L << elemBits) - 1L
-    val bitpos = elemBits * idx
-    val tabpos = (bitpos >>> 6).toInt
-    val slotpos = (bitpos & 63).toInt
-    val spill = slotpos + elemBits - 64
-    var elt = (qf.table(tabpos) >>> slotpos) & elemMask
-    if (spill > 0) {
-      val x = qf.table(tabpos + 1) & ((1L << spill) - 1L)
-      elt |= x << (elemBits - spill)
-    }
-    elt
   }
 
   @inline private def incr(i: Long): Long = (i + 1) & (qf.maxSize - 1)
@@ -424,11 +403,11 @@ final class QuotientFilterIterator(qf: QuotientFilter) {
 
   def next(): Long = {
     while (!done) {
-      val elt = elemAt(index)
+      val elt = qf.getElem(index)
       if (isClusterStart(elt)) quotient = index
       else if (isRunStart(elt)) {
         var quot = quotient
-        do quot = incr(quot) while (!isOccupied(elemAt(quot)))
+        do quot = incr(quot) while (!isOccupied(qf.getElem(quot)))
         quotient = quot
       }
       index = incr(index)

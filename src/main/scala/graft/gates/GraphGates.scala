@@ -12,18 +12,6 @@ import graft.operators.Graphs
   */
 object GraphGates {
 
-  /** Distinct customer↔supplier purchase edges (parity-encoded node ids)
-    * as a parquet checkpoint. No gate reads it: [[sharedPreparedGraph]]
-    * derives straight from the join. The graph evidence tools read it
-    * through [[SparkEntry.sharedPurchaseEdges]].
-    */
-  private[graft] val sharedPurchaseEdges: SharedRelation[DataFrame] =
-    SharedRelation.parquet("edges") { s =>
-      s.sql("""
-        SELECT DISTINCT o.o_custkey * 2 AS src, l.l_suppkey * 2 + 1 AS dst
-        FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey""")
-    }
-
   /** The purchase graph PREPARED for iterative analytics (simple edges +
     * out-degree as DISK_ONLY blocks), shared by `q_pagerank`, `q_ppr` AND
     * `q_graph_stats`: the superstep loops want the relation as compact
@@ -46,7 +34,7 @@ object GraphGates {
     * vs the shipped chain: −1 edge-table parquet write, −2 edge-table
     * reads, −1 exchange, −1 sort per (session, fixture); A/B at sf0.1
     * 5.2–5.7 s → 3.9–4.2 s with identical pagerank output
-    * (tools/GraphFusedAB). A degree-only session that wants no
+    * (OPTIMIZATION_r15.md). A degree-only session that wants no
     * checkpoint still has the [[sources.GraphIndex.build]] API.
     */
   private[graft] val sharedPreparedGraph: SharedRelation[Graphs.PreparedGraph] =

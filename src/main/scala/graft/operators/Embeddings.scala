@@ -1058,7 +1058,7 @@ object Embeddings {
     *
     * 64 → 4 in round 16: same-JVM A/Bs at dim=64 measured the literal
     * path SLOWER at every probed k — k=32 lloyd-update 0.56 vs 0.33 s,
-    * k=8 assignment 0.18 vs 0.14 s warm (tools/SemDedupGatePhases) —
+    * k=8 assignment 0.18 vs 0.14 s warm (VERDICT.md round 16) —
     * the k·dim literal tree's analysis/codegen cost exceeds what the
     * inline expression saves, and the kernel's tight matrix loop is no
     * slower per row. The literal form is kept only for trivial fits

@@ -373,7 +373,7 @@ object Graphs {
     // former distinct -> groupBy -> join form paid an (src, dst) exchange
     // plus an src exchange of the deduped relation plus two sorts (A/B at
     // 117M mirrored edges: 14.3 s vs 20.6 s, identical output —
-    // tools/GraphBuildAB, SCALE.md round-15). Bonus for superstep loops:
+    // SCALE.md round-15). Bonus for superstep loops:
     // the checkpoint below then advertises HashPartitioning(src) + (src,
     // dst) ordering, so per-iteration rank joins plan exchange-free and
     // sort-free on the edge side with no separate re-clustering pass.

@@ -58,8 +58,8 @@ object GraphIndex {
     * spill-prone 2^26-entry hash tables. The former distinct → groupBy →
     * join form paid an `(src, dst)` exchange plus an `src` exchange of
     * the full deduped relation plus two sort-merge sorts; A/B at 117M
-    * mirrored edges: 14.3 s vs 20.6 s, identical output (tools/GraphBuildAB,
-    * SCALE.md round-15 — third decade re-measured there too).
+    * mirrored edges: 14.3 s vs 20.6 s, identical output (SCALE.md
+    * round-15 — third decade re-measured there too).
     * Trade-off: the exchange carries RAW (pre-dedup) rows —
     * an input with heavy multi-edge duplication shuffles the duplicates;
     * pre-`distinct` such inputs before `build` if that dominates.

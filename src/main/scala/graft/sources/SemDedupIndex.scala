@@ -70,7 +70,7 @@ object SemDedupIndex {
     // COUNT is derived too (round 16): the default shuffle fan-out gave
     // every task ~one cell and the per-task commit overhead dominated at
     // bench scale (0.93 -> 0.62 s at k=32 with 4 tasks, same ~k files;
-    // tools/SemDedupGatePhases) — [[writeTasks]] packs ~8 occupancy-
+    // VERDICT.md round 16) — [[writeTasks]] packs ~8 occupancy-
     // pinned cells per task so tasks carry real data at every k.
     Embeddings.kmeansAssign(
         embeddings.select(col(idCol).as("id"), col(vecCol).as("vec")),

@@ -5,8 +5,9 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.Pca
 
-/** Prints the exactReplay-fitted PCA model (sf0.01 embeddings, k=4) as
-  * DuckDB SQL literals for the `q_pca_project` oracle. The fit is a
+/** Regenerates [[graft.operators.PcaPinnedModels]]: prints the
+  * exactReplay-fitted PCA model (sf0.01 embeddings, k=4) as the literals
+  * pinned there and in the `q_pca_project` oracle. The fit is a
   * deterministic pure function of the data — e6-integer Gram (order- and
   * partitioning-independent) + driver-side Jacobi — so the pinned model is
   * reproducible bit-for-bit by re-running this tool; the oracle then

@@ -2,21 +2,58 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.FormattedMode
 
-/** Dumps formatted physical plans of representative gate queries to
-  * docs/PLANS.md so plan-shape regressions (lost pushdown, broken codegen,
-  * surprise shuffles) are reviewable in diffs.
+import graft.SparkEntry
+
+/** Dumps formatted physical plans of gate queries so plan-shape
+  * regressions (lost pushdown, broken codegen, surprise shuffles) are
+  * reviewable in diffs without running Spark. Two forms, both over the
+  * fixture in `SPARK_GRAFT_SF_DIR` (default sf0.01):
+  *  - no arguments: the representative gates below, each with what its
+  *    plan should show, to docs/PLANS.md;
+  *  - `<tag> <suffix> <gate ...|ALL>`: each named gate (ALL = every
+  *    declared gate) to plans/<tag>/<gate>_<suffix>.txt, the before/after
+  *    evidence of an optimization round. A gate that fails to plan is
+  *    skipped with a message.
+  *
   * Run: sbt "runMain graft.tools.PlanDump"
+  *  or  sbt "runMain graft.tools.PlanDump r15 before q_pagerank q_skipping_index"
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
+    require(args.isEmpty || args.length >= 3,
+      "usage: PlanDump | PlanDump <tag> <suffix> <gate ...|ALL>")
     val spark = SparkSession.builder().master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
       // same optimizer-rule placement as Bench/Verify/production
       .config("spark.sql.extensions", "graft.GraftSparkExtensions")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val dir = "/root/testdata/sf0.01"
+    val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
+    def plan(name: String): String =
+      SparkEntry.queries(name)(spark, dir).queryExecution.explainString(FormattedMode)
+    if (args.isEmpty) writeReview(plan)
+    else writeTagged(args(0), args(1), args.drop(2).toSeq, plan)
+    spark.stop()
+  }
+
+  private def writeTagged(tag: String, suffix: String, gates: Seq[String],
+      plan: String => String): Unit = {
+    val names = if (gates.contains("ALL")) SparkEntry.queries.keys.toSeq.sorted else gates
+    Files.createDirectories(Paths.get(s"plans/$tag"))
+    names.foreach { name =>
+      val out = Paths.get(s"plans/$tag/${name}_$suffix.txt")
+      try {
+        Files.writeString(out, plan(name))
+        println(s"wrote $out")
+      } catch { case e: Throwable =>
+        println(s"SKIP $name: ${e.getMessage}")
+      }
+    }
+  }
+
+  private def writeReview(plan: String => String): Unit = {
     val picks = Seq(
       "q_fuse_semijoin" -> "scalar-subquery probe: single codegen'd scan, single-column read, no join",
       "q1_agg" -> "grouped aggregation: 5-column pruned scan, partial+final hash agg",
@@ -96,14 +133,12 @@ object PlanDump {
     sb.append("# Physical plans of representative gate queries (sf0.01)\n\n")
     sb.append("Generated by `graft.tools.PlanDump`; regenerate after plan-affecting changes.\n")
     picks.foreach { case (name, why) =>
-      val df = graft.SparkEntry.queries(name)(spark, dir)
       sb.append(s"\n## $name\n\n$why\n\n```\n")
-      sb.append(df.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode))
+      sb.append(plan(name))
       sb.append("```\n")
     }
     Files.createDirectories(Paths.get("docs"))
     Files.writeString(Paths.get("docs/PLANS.md"), sb.toString)
     println(s"wrote docs/PLANS.md (${sb.length} chars)")
-    spark.stop()
   }
 }

@@ -20,6 +20,12 @@ class CoreFilterSpec extends AnyFunSuite {
     assert(DuckDbHash.hashInt32Like(-1) == u("4739667815145166545")) // tinyint/smallint/integer -1
     assert(DuckDbHash.hashLong(-1L) == u("4939931809569846361"))
     assert(DuckDbHash.hashInt32Like(-128) == u("17192691921624903227"))
+    // anchors generated by live DuckDB 1.0: SELECT hash(v::BIGINT)
+    assert(DuckDbHash.hashLong(2671521945691753783L) == u("15610132216258790398"))
+    assert(DuckDbHash.hashLong(-3720958657989204912L) == u("80955607330571406"))
+    assert(DuckDbHash.hashLong(-2875293200062377941L) == u("18114528437098465506"))
+    assert(DuckDbHash.hashLong(-651203574895259915L) == u("6855432294921172226"))
+    assert(DuckDbHash.hashLong(-3026239342489546536L) == u("4901432840579259285"))
   }
 
   test("duckdb hash: unsigned64 (DECIMAL(20,0) interop) vectors") {
@@ -330,5 +336,14 @@ class CoreFilterSpec extends AnyFunSuite {
       "b49587908bce669a2bb6c80f3a753e57906aaab535972b75273a40bb2e693ffa",
       "596da345f1d3b0df67cdd4b7d5844d1e246a289b9a5421d9583484c6843e7ffa",
       "0cfb5d8088bc4d211146c532dab325c720ee690cc3529c56916c5bc81d881887"))
+  }
+
+  // --- Error paths --------------------------------------------------------
+
+  test("error paths: malformed blobs and impossible builds raise IllegalArgumentException") {
+    intercept[IllegalArgumentException](QuotientFilter.deserialize(Array[Byte](1, 2, 3)))
+    intercept[IllegalArgumentException](DuckDbBloomFilter.deserialize(Array.fill[Byte](40)(7)))
+    intercept[IllegalArgumentException](XorFilter.build(8, Array.empty[Long], 0))
+    intercept[IllegalArgumentException](QuotientFilter.create(40, 30)) // q + r > 64
   }
 }
