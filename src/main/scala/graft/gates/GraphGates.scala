@@ -1,7 +1,6 @@
 package graft
 package gates
 
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.Graphs
