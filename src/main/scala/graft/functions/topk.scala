@@ -2,12 +2,16 @@ package graft.functions
 
 import java.nio.{ByteBuffer, ByteOrder}
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.functions.{col, lit, posexplode}
 import org.apache.spark.sql.types._
+
+import graft.operators.ColumnBridge
 
 /** Bounded-heap per-group top-k state: a TreeSet of (ord, payload) pairs
   * ordered by (ord DESC, payload ASC), capped at k entries — O(log k) per
@@ -143,6 +147,31 @@ case class TopKAgg(
 
 object TopKAgg {
   val MaxK = 1 << 20
+
+  /** The one bounded top-k ranking stage: the `k` best rows per group of
+    * `df` by [[TopKAgg]], one output row per kept entry. Returns the
+    * grouping columns plus `rank` (INT, 1-based), `ord` and `payload`
+    * (both BIGINT), in `(ord DESC, payload ASC)` order, so it ranks
+    * exactly like `row_number() OVER (PARTITION BY groups ORDER BY ord
+    * DESC, payload) <= k`. Callers map their sort key into `ord` (a
+    * negated distance, [[SortableBits]] of a similarity) and carry an
+    * integral id as `payload`.
+    *
+    * A row whose `ord` or `payload` is NULL is skipped, where the window
+    * would rank it; a caller that must keep such rows maps the NULL to a
+    * BIGINT sentinel first. Duplicate `(ord, payload)` pairs in one group
+    * collapse to one entry.
+    */
+  def rank(df: DataFrame, groupCols: Seq[Column], k: Int, ord: Column,
+      payload: Column): DataFrame = {
+    val tk = ColumnBridge.column(TopKAgg(ColumnBridge.expression(lit(k)),
+      ColumnBridge.expression(ord), ColumnBridge.expression(payload)).toAggregateExpression())
+    val agg = df.groupBy(groupCols: _*).agg(tk.as("__tk"))
+    val keys = agg.columns.toSeq.init.map(agg.col)
+    agg.select(keys :+ posexplode(col("__tk")).as(Seq("__pos", "__e")): _*)
+      .select(keys ++ Seq((col("__pos") + 1).cast("int").as("rank"),
+        col("__e.ord").as("ord"), col("__e.payload").as("payload")): _*)
+  }
 }
 
 /** Order-preserving DOUBLE <-> BIGINT involution used to ride doubles

@@ -4,7 +4,7 @@ package gates
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Embeddings, Pca, PcaPinnedModels}
-import Gate.{deleteDirs, localResult}
+import Gate.{deleteDirs, localResult, vectors}
 
 /** Embedding transforms and clustering: k-means, kNN evaluation,
   * outliers, feature-hash vectors, SemDeDup (batch, incremental and
@@ -12,38 +12,88 @@ import Gate.{deleteDirs, localResult}
   */
 object EmbeddingGates {
 
-  val gates: Seq[Gate] = Seq(
-    // spherical k-means, one full Lloyd round (seed-assign -> exact
-    // micro-unit centroid update -> reassign); per-cluster membership
-    // and id-checksums put every assignment on the hash path
-    // one Lloyd round replayed: same seeds (first 8 by vec_id), same
-    // argmax-cosine-ties-to-smallest-cid, same exact micro-unit centroid
-    // reconstruction CAST(s_e6 AS DOUBLE) / (CAST(m AS DOUBLE) * 1e6)
-    Gate("q_kmeans", """
-      WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-      c0 AS (SELECT vec_id AS cid, v AS cv FROM e ORDER BY vec_id LIMIT 8),
-      a0 AS (SELECT vec_id, v, cid FROM (
-        SELECT e.vec_id, e.v, c0.cid,
-               row_number() OVER (PARTITION BY e.vec_id
-                 ORDER BY round(list_cosine_similarity(e.v, c0.cv) * 1e6) DESC, c0.cid) AS rn
-        FROM e, c0) WHERE rn = 1),
+  /** One spherical k-means Lloyd round over `src(vec_id, v)` from seeds
+    * `c0(cid, cv)`: assignment `a0` (argmax of the micro-rounded cosine,
+    * ties to the smallest cid), then the exact micro-unit centroid update
+    * `c1(cid, cv)`, reconstructed as CAST(s_e6 AS DOUBLE) / (CAST(m AS
+    * DOUBLE) * 1e6) exactly as the operator does.
+    */
+  private def kmeansLloyd(src: String): String = s"""a0 AS (SELECT vec_id, v, cid FROM (
+        SELECT $src.vec_id, $src.v, c0.cid,
+               row_number() OVER (PARTITION BY $src.vec_id
+                 ORDER BY round(list_cosine_similarity($src.v, c0.cv) * 1e6) DESC, c0.cid) AS rn
+        FROM $src, c0) WHERE rn = 1),
       dims AS (SELECT cid, unnest(v) AS x, generate_subscripts(v, 1) AS i FROM a0),
       sums AS (SELECT cid, i, SUM(CAST(round(x * 1e6) AS BIGINT)) AS s_e6,
                       COUNT(*) AS m
                FROM dims GROUP BY cid, i),
       c1 AS (SELECT cid, list(CAST(s_e6 AS DOUBLE) / (CAST(m AS DOUBLE) * 1e6)
                               ORDER BY i) AS cv
-             FROM sums GROUP BY cid),
-      a1 AS (SELECT vec_id, cid FROM (
+             FROM sums GROUP BY cid)"""
+
+  /** Reassignment of every `e` vector to the updated centroids `c1`:
+    * `a1(vec_id, cid)`. */
+  private val kmeansReassign = """a1 AS (SELECT vec_id, cid FROM (
         SELECT e.vec_id, c1.cid,
                row_number() OVER (PARTITION BY e.vec_id
                  ORDER BY round(list_cosine_similarity(e.v, c1.cv) * 1e6) DESC, c1.cid) AS rn
-        FROM e, c1) WHERE rn = 1)
+        FROM e, c1) WHERE rn = 1)"""
+
+  /** SemDeDup's corpus-derived k, clamp(ceil(n/1000), 32, 65536) over
+    * `src`'s COUNT(*) (pure integer arithmetic, `kk`), and the first k
+    * vectors by id as seeds `c0`. */
+  private def semdedupSeeds(src: String): String = s"""kk AS (SELECT GREATEST(LEAST(((SELECT COUNT(*) FROM $src) + 999) // 1000, 65536), 32) AS k),
+      c0 AS (SELECT vec_id AS cid, v AS cv FROM (
+               SELECT vec_id, v, row_number() OVER (ORDER BY vec_id) AS rn FROM $src)
+             WHERE rn <= (SELECT k FROM kk))"""
+
+  /** The incremental SemDeDup replay: the kmeans chain fit on the OLD
+    * slice (`vec_id % 10 <> 0`) only, with k derived from its COUNT(*);
+    * ALL vectors assigned into it; the drop rule restricted to new-side
+    * vectors against (old OR smaller-id new) same-cluster neighbors.
+    * q_incremental_semdedup and q_semdedup_index compute the same fit,
+    * assignment and drop rule, so they share it. */
+  private val incrementalSemdedupOracle = s"""
+      WITH eo AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
+                  FROM embeddings WHERE vec_id % 10 <> 0),
+      ea AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
+                    vec_id % 10 = 0 AS isnew
+             FROM embeddings),
+      ${semdedupSeeds("eo")},
+      ${kmeansLloyd("eo")},
+      a1 AS (SELECT vec_id, isnew, cid FROM (
+        SELECT ea.vec_id, ea.isnew, c1.cid,
+               row_number() OVER (PARTITION BY ea.vec_id
+                 ORDER BY round(list_cosine_similarity(ea.v, c1.cv) * 1e6) DESC, c1.cid) AS rn
+        FROM ea, c1) WHERE rn = 1),
+      dropped AS (
+        SELECT DISTINCT a.vec_id
+        FROM a1 a JOIN a1 b ON a.cid = b.cid AND a.isnew
+          AND (NOT b.isnew OR b.vec_id < a.vec_id)
+        JOIN ea x ON x.vec_id = a.vec_id
+        JOIN ea y ON y.vec_id = b.vec_id
+        WHERE round(list_cosine_similarity(x.v, y.v) * 1e6) >= 350000)
+      SELECT a1.cid, CAST(COUNT(*) AS BIGINT) AS members,
+             CAST(SUM(CASE WHEN d.vec_id IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS kept,
+             CAST(SUM(CASE WHEN d.vec_id IS NULL THEN a1.vec_id END) AS BIGINT) AS kept_id_sum
+      FROM a1 LEFT JOIN dropped d ON a1.vec_id = d.vec_id
+      WHERE a1.isnew
+      GROUP BY a1.cid ORDER BY a1.cid"""
+
+  val gates: Seq[Gate] = Seq(
+    // spherical k-means, one full Lloyd round (seed-assign -> exact
+    // micro-unit centroid update -> reassign), replayed with the same
+    // seeds (first 8 by vec_id); per-cluster membership and id-checksums
+    // put every assignment on the hash path
+    Gate("q_kmeans", s"""
+      WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+      c0 AS (SELECT vec_id AS cid, v AS cv FROM e ORDER BY vec_id LIMIT 8),
+      ${kmeansLloyd("e")},
+      $kmeansReassign
       SELECT cid, CAST(COUNT(*) AS BIGINT) AS members,
              CAST(SUM(vec_id) AS BIGINT) AS id_sum
       FROM a1 GROUP BY cid ORDER BY cid""") { (s, _) =>
-      val emb = s.table("embeddings")
-        .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("vec"))
+      val emb = vectors(s)
       Embeddings.kmeansLloyd(emb, "vec", "vec_id", k = 8, iterations = 1)
         .groupBy("cid")
         .agg(count(lit(1)).cast("long").as("members"),
@@ -52,8 +102,8 @@ object EmbeddingGates {
     },
 
     // kNN label consistency: do the 5 nearest neighbors of each of the
-    // first 200 vectors share its label? Per-label exact-integer rollup
-    // kNN label consistency: the ann_topk ordering contract + label joins
+    // first 200 vectors share its label? Per-label exact-integer rollup;
+    // the oracle is the q_ann_topk ordering contract plus label joins
     Gate("q_knn_eval", """
       WITH nn AS (
         SELECT query_id, neighbor_id, qlabel FROM (
@@ -83,25 +133,13 @@ object EmbeddingGates {
     },
 
     // per-cluster embedding outliers: the 5 members farthest from their
-    // Lloyd-fit centroid (micro-rounded cosine, id tiebreak) — the
-    // oracle extends the q_kmeans replay chain with the similarity rank
-    // centroid outliers: the q_kmeans chain through c1, re-scoring every
-    // member against its ASSIGNED centroid and ranking ascending
-    Gate("q_outliers", """
+    // Lloyd-fit centroid (micro-rounded cosine, id tiebreak). The oracle
+    // runs the q_kmeans chain through c1, re-scores every member against
+    // its ASSIGNED centroid and ranks ascending
+    Gate("q_outliers", s"""
       WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
       c0 AS (SELECT vec_id AS cid, v AS cv FROM e ORDER BY vec_id LIMIT 8),
-      a0 AS (SELECT vec_id, v, cid FROM (
-        SELECT e.vec_id, e.v, c0.cid,
-               row_number() OVER (PARTITION BY e.vec_id
-                 ORDER BY round(list_cosine_similarity(e.v, c0.cv) * 1e6) DESC, c0.cid) AS rn
-        FROM e, c0) WHERE rn = 1),
-      dims AS (SELECT cid, unnest(v) AS x, generate_subscripts(v, 1) AS i FROM a0),
-      sums AS (SELECT cid, i, SUM(CAST(round(x * 1e6) AS BIGINT)) AS s_e6,
-                      COUNT(*) AS m
-               FROM dims GROUP BY cid, i),
-      c1 AS (SELECT cid, list(CAST(s_e6 AS DOUBLE) / (CAST(m AS DOUBLE) * 1e6)
-                              ORDER BY i) AS cv
-             FROM sums GROUP BY cid),
+      ${kmeansLloyd("e")},
       a1 AS (SELECT vec_id, cid, sim_e6 FROM (
         SELECT e.vec_id, c1.cid,
                CAST(round(list_cosine_similarity(e.v, c1.cv) * 1e6) AS BIGINT) AS sim_e6,
@@ -114,8 +152,7 @@ object EmbeddingGates {
             FROM a1)
       SELECT cid, CAST(rnk AS INTEGER) AS rnk, vec_id, sim_e6
       FROM r WHERE rnk <= 5 ORDER BY cid, rnk""") { (s, _) =>
-      val emb = s.table("embeddings")
-        .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("vec"))
+      val emb = vectors(s)
       Embeddings.centroidOutliers(emb, "vec", "vec_id", k = 8,
           iterations = 1, m = 5)
         .orderBy("cid", "rnk")
@@ -123,9 +160,9 @@ object EmbeddingGates {
 
     // feature-hashed text vectors (hashing trick): md5-bucket tf counts,
     // L2-normalized — the in-engine text vectorizer. nnz + micro-rounded
-    // element sums checksum every vector for the first 20 docs.
-    // feature-hash vectors replayed: same md5-prefix bucket, same integer
-    // counts, same IEEE normalize; docs with no tokens keep a zero row
+    // element sums checksum every vector for the first 20 docs; the
+    // replay uses the same md5-prefix bucket, integer counts and IEEE
+    // normalize, and docs with no tokens keep a zero row
     Gate("q_text_vectors", """
       WITH toks AS (
         SELECT doc_id,
@@ -159,35 +196,15 @@ object EmbeddingGates {
     // 32, 65536)) — a fixed k measured 23.9x/decade at sf100cd because
     // occupancy n/k grew linearly and within-cell pairing quadratically;
     // the derived rule pins occupancy, and the oracle replays it from
-    // COUNT(*).
-    // SemDeDup: the q_kmeans assignment chain, then the per-cluster drop
-    // rule — a vector is dropped iff a same-cluster smaller-id neighbor has
-    // round(sim*1e6) >= 350000 (threshold 0.35 micro-rounded, as in Spark).
-    // k is the CORPUS-DERIVED default replayed from COUNT(*):
-    // clamp(ceil(n/1000), 32, 65536), pure integer arithmetic (kk CTE)
-    Gate("q_semdedup", """
+    // COUNT(*) (semdedupSeeds). The oracle runs the q_kmeans chain, then
+    // the per-cluster drop rule: a vector is dropped iff a same-cluster
+    // smaller-id neighbor has round(sim*1e6) >= 350000 (threshold 0.35
+    // micro-rounded, as in Spark)
+    Gate("q_semdedup", s"""
       WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-      kk AS (SELECT GREATEST(LEAST(((SELECT COUNT(*) FROM e) + 999) // 1000, 65536), 32) AS k),
-      c0 AS (SELECT vec_id AS cid, v AS cv FROM (
-               SELECT vec_id, v, row_number() OVER (ORDER BY vec_id) AS rn FROM e)
-             WHERE rn <= (SELECT k FROM kk)),
-      a0 AS (SELECT vec_id, v, cid FROM (
-        SELECT e.vec_id, e.v, c0.cid,
-               row_number() OVER (PARTITION BY e.vec_id
-                 ORDER BY round(list_cosine_similarity(e.v, c0.cv) * 1e6) DESC, c0.cid) AS rn
-        FROM e, c0) WHERE rn = 1),
-      dims AS (SELECT cid, unnest(v) AS x, generate_subscripts(v, 1) AS i FROM a0),
-      sums AS (SELECT cid, i, SUM(CAST(round(x * 1e6) AS BIGINT)) AS s_e6,
-                      COUNT(*) AS m
-               FROM dims GROUP BY cid, i),
-      c1 AS (SELECT cid, list(CAST(s_e6 AS DOUBLE) / (CAST(m AS DOUBLE) * 1e6)
-                              ORDER BY i) AS cv
-             FROM sums GROUP BY cid),
-      a1 AS (SELECT vec_id, cid FROM (
-        SELECT e.vec_id, c1.cid,
-               row_number() OVER (PARTITION BY e.vec_id
-                 ORDER BY round(list_cosine_similarity(e.v, c1.cv) * 1e6) DESC, c1.cid) AS rn
-        FROM e, c1) WHERE rn = 1),
+      ${semdedupSeeds("e")},
+      ${kmeansLloyd("e")},
+      $kmeansReassign,
       dropped AS (
         SELECT DISTINCT a.vec_id
         FROM a1 a JOIN a1 b ON a.cid = b.cid AND a.vec_id > b.vec_id
@@ -199,8 +216,7 @@ object EmbeddingGates {
              CAST(SUM(CASE WHEN d.vec_id IS NULL THEN a1.vec_id END) AS BIGINT) AS kept_id_sum
       FROM a1 LEFT JOIN dropped d ON a1.vec_id = d.vec_id
       GROUP BY a1.cid ORDER BY a1.cid""") { (s, _) =>
-      val emb = s.table("embeddings")
-        .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("vec"))
+      val emb = vectors(s)
       Embeddings.semanticDeduplicate(emb, "vec", "vec_id", k = 0, threshold = 0.35)
         .groupBy("cid")
         .agg(count(lit(1)).cast("long").as("members"),
@@ -218,53 +234,8 @@ object EmbeddingGates {
     // refresh path the operator advertises (the operator never re-fits).
     // k = 0: the fit derives k from the OLD slice's count (the
     // occupancy-pinned SemDeDup sizing rule), replayed by the oracle.
-    // incremental SemDeDup: the kmeans chain fit on the OLD slice only,
-    // ALL vectors assigned into it, drop rule restricted to new-side
-    // vectors against (old OR smaller-id new) same-cluster neighbors.
-    // k derives from the OLD slice's COUNT(*) (the fit corpus):
-    // clamp(ceil(n/1000), 32, 65536)
-    Gate("q_incremental_semdedup", """
-      WITH eo AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-                  FROM embeddings WHERE vec_id % 10 <> 0),
-      ea AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-                    vec_id % 10 = 0 AS isnew
-             FROM embeddings),
-      kk AS (SELECT GREATEST(LEAST(((SELECT COUNT(*) FROM eo) + 999) // 1000, 65536), 32) AS k),
-      c0 AS (SELECT vec_id AS cid, v AS cv FROM (
-               SELECT vec_id, v, row_number() OVER (ORDER BY vec_id) AS rn FROM eo)
-             WHERE rn <= (SELECT k FROM kk)),
-      a0 AS (SELECT vec_id, v, cid FROM (
-        SELECT eo.vec_id, eo.v, c0.cid,
-               row_number() OVER (PARTITION BY eo.vec_id
-                 ORDER BY round(list_cosine_similarity(eo.v, c0.cv) * 1e6) DESC, c0.cid) AS rn
-        FROM eo, c0) WHERE rn = 1),
-      dims AS (SELECT cid, unnest(v) AS x, generate_subscripts(v, 1) AS i FROM a0),
-      sums AS (SELECT cid, i, SUM(CAST(round(x * 1e6) AS BIGINT)) AS s_e6,
-                      COUNT(*) AS m
-               FROM dims GROUP BY cid, i),
-      c1 AS (SELECT cid, list(CAST(s_e6 AS DOUBLE) / (CAST(m AS DOUBLE) * 1e6)
-                              ORDER BY i) AS cv
-             FROM sums GROUP BY cid),
-      a1 AS (SELECT vec_id, isnew, cid FROM (
-        SELECT ea.vec_id, ea.isnew, c1.cid,
-               row_number() OVER (PARTITION BY ea.vec_id
-                 ORDER BY round(list_cosine_similarity(ea.v, c1.cv) * 1e6) DESC, c1.cid) AS rn
-        FROM ea, c1) WHERE rn = 1),
-      dropped AS (
-        SELECT DISTINCT a.vec_id
-        FROM a1 a JOIN a1 b ON a.cid = b.cid AND a.isnew
-          AND (NOT b.isnew OR b.vec_id < a.vec_id)
-        JOIN ea x ON x.vec_id = a.vec_id
-        JOIN ea y ON y.vec_id = b.vec_id
-        WHERE round(list_cosine_similarity(x.v, y.v) * 1e6) >= 350000)
-      SELECT a1.cid, CAST(COUNT(*) AS BIGINT) AS members,
-             CAST(SUM(CASE WHEN d.vec_id IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS kept,
-             CAST(SUM(CASE WHEN d.vec_id IS NULL THEN a1.vec_id END) AS BIGINT) AS kept_id_sum
-      FROM a1 LEFT JOIN dropped d ON a1.vec_id = d.vec_id
-      WHERE a1.isnew
-      GROUP BY a1.cid ORDER BY a1.cid""") { (s, _) =>
-      val emb = s.table("embeddings")
-        .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("vec"))
+    Gate("q_incremental_semdedup", incrementalSemdedupOracle) { (s, _) =>
+      val emb = vectors(s)
       val oldE = emb.where(col("vec_id") % 10 =!= 0)
       val cents = Embeddings.kmeansCentroids(oldE, "vec", "vec_id",
         k = 0, iterations = 1)
@@ -282,54 +253,12 @@ object EmbeddingGates {
     // fit + assignment are written to disk (centroids + cid-partitioned
     // members) and the refresh answers from the FILES, reading only the
     // cells the slice touches — zero re-fit, zero archive re-assignment.
-    // Identical drop rule and fit, so it replays in the SAME DuckDB
-    // oracle as q_incremental_semdedup.
-    // the persisted-index refresh computes the IDENTICAL fit, assignment
-    // and drop rule as q_incremental_semdedup (spec-asserted row-equal),
-    // so the same replay is its oracle
-    Gate("q_semdedup_index", """
-      WITH eo AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-                  FROM embeddings WHERE vec_id % 10 <> 0),
-      ea AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-                    vec_id % 10 = 0 AS isnew
-             FROM embeddings),
-      kk AS (SELECT GREATEST(LEAST(((SELECT COUNT(*) FROM eo) + 999) // 1000, 65536), 32) AS k),
-      c0 AS (SELECT vec_id AS cid, v AS cv FROM (
-               SELECT vec_id, v, row_number() OVER (ORDER BY vec_id) AS rn FROM eo)
-             WHERE rn <= (SELECT k FROM kk)),
-      a0 AS (SELECT vec_id, v, cid FROM (
-        SELECT eo.vec_id, eo.v, c0.cid,
-               row_number() OVER (PARTITION BY eo.vec_id
-                 ORDER BY round(list_cosine_similarity(eo.v, c0.cv) * 1e6) DESC, c0.cid) AS rn
-        FROM eo, c0) WHERE rn = 1),
-      dims AS (SELECT cid, unnest(v) AS x, generate_subscripts(v, 1) AS i FROM a0),
-      sums AS (SELECT cid, i, SUM(CAST(round(x * 1e6) AS BIGINT)) AS s_e6,
-                      COUNT(*) AS m
-               FROM dims GROUP BY cid, i),
-      c1 AS (SELECT cid, list(CAST(s_e6 AS DOUBLE) / (CAST(m AS DOUBLE) * 1e6)
-                              ORDER BY i) AS cv
-             FROM sums GROUP BY cid),
-      a1 AS (SELECT vec_id, isnew, cid FROM (
-        SELECT ea.vec_id, ea.isnew, c1.cid,
-               row_number() OVER (PARTITION BY ea.vec_id
-                 ORDER BY round(list_cosine_similarity(ea.v, c1.cv) * 1e6) DESC, c1.cid) AS rn
-        FROM ea, c1) WHERE rn = 1),
-      dropped AS (
-        SELECT DISTINCT a.vec_id
-        FROM a1 a JOIN a1 b ON a.cid = b.cid AND a.isnew
-          AND (NOT b.isnew OR b.vec_id < a.vec_id)
-        JOIN ea x ON x.vec_id = a.vec_id
-        JOIN ea y ON y.vec_id = b.vec_id
-        WHERE round(list_cosine_similarity(x.v, y.v) * 1e6) >= 350000)
-      SELECT a1.cid, CAST(COUNT(*) AS BIGINT) AS members,
-             CAST(SUM(CASE WHEN d.vec_id IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS kept,
-             CAST(SUM(CASE WHEN d.vec_id IS NULL THEN a1.vec_id END) AS BIGINT) AS kept_id_sum
-      FROM a1 LEFT JOIN dropped d ON a1.vec_id = d.vec_id
-      WHERE a1.isnew
-      GROUP BY a1.cid ORDER BY a1.cid""") { (s, _) =>
-      val emb = s.table("embeddings")
-        .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("vec"))
-      val idx = java.nio.file.Files.createTempDirectory("graft_semdedup_idx_").toString
+    // The refresh computes the IDENTICAL fit, assignment and drop rule as
+    // q_incremental_semdedup (spec-asserted row-equal), so it replays in
+    // the same DuckDB oracle
+    Gate("q_semdedup_index", incrementalSemdedupOracle) { (s, _) =>
+      val emb = vectors(s)
+      val idx = streaming.FileStreams.createTempDir("graft_semdedup_idx_").toString
       graft.sources.SemDedupIndex.build(
         emb.where(col("vec_id") % 10 =!= 0), "vec", "vec_id", idx, k = 0)
       val res = graft.sources.SemDedupIndex.refresh(s, idx,
@@ -346,10 +275,9 @@ object EmbeddingGates {
 
     // 1-bit sign quantization: the packed word + its popcount per vector
     // certify the exact bit layout (LSB-first within word) against a
-    // DuckDB rebuild from embedding[j] > 0 tests
-    // packed sign-bit word rebuilt from embedding[j] > 0: HUGEINT power
-    // sum (DuckDB raises on 1::BIGINT << 63), two's-complement fold back
-    // to BIGINT; popcnt from the SAME packed word certifies the layout
+    // DuckDB rebuild from embedding[j] > 0 tests — a HUGEINT power sum
+    // (DuckDB raises on 1::BIGINT << 63) folded back to BIGINT in two's
+    // complement, with popcnt taken from the SAME packed word
     Gate("q_embed_binary", """
       WITH p AS (
         SELECT vec_id,
@@ -373,11 +301,9 @@ object EmbeddingGates {
 
     // PCA's distributed phase: one-pass Gram accumulation in replay mode
     // (per-row products micro-rounded to e6 integers, summed as BIGINT —
-    // exact in any engine/order); first-8-dims slice keeps the oracle at
-    // 36 pair sums
-    // upper-triangle Gram over the first 8 dims, each product micro-rounded
-    // to e6 (floor(x + 0.5): the only half-rounding identical across
-    // engines) before the exact integer sum
+    // exact in any engine/order); the first-8-dims slice keeps the oracle
+    // at 36 upper-triangle pair sums. floor(x + 0.5) is the only
+    // half-rounding identical across engines
     Gate("q_pca_cov", """
       WITH e AS (SELECT list_transform(embedding[1:8], x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
       prods AS (
@@ -395,21 +321,16 @@ object EmbeddingGates {
     // PCA projection, LIVE at every scale factor: BOTH sides project the
     // same pinned model (PcaPinnedModels.sf001K4 — the deterministic
     // exactReplay fit of the sf0.01 fixture; tools.PinPcaModel
-    // regenerates, PcaSpec asserts the re-fit still equals the pin) and
-    // the oracle replays every per-row projection dot product against
-    // the parquet vectors in DuckDB — both engines fold the dot
-    // left-to-right, so e6-rounded projections match exactly. A live
-    // RE-fit here would bind the gate to the fixture the oracle literals
-    // were fitted on (mismatch at any other SF); fit correctness rides
-    // q_pca_cov (live gram) + the Jacobi/fit specs + the pin-equality
-    // spec instead
-    // LIVE fit->project replay: the model (mean + 4 eigenvector rows,
-    // deterministic under exactReplay — regenerate with
-    // `runMain graft.tools.PinPcaModel`) rides as %.17E DOUBLE literals
-    // (E-notation bypasses DuckDB's DECIMAL literal path, which loses the
-    // last bit at 17 significant digits); every per-row projection dot
-    // product is recomputed from the parquet vectors — both engines fold
-    // the dot left-to-right, so the e6 roundings agree bit-for-bit
+    // regenerates, PcaSpec asserts the re-fit still equals the pin). The
+    // model (mean + 4 eigenvector rows) rides in the oracle as %.17E
+    // DOUBLE literals (E-notation bypasses DuckDB's DECIMAL literal path,
+    // which loses the last bit at 17 significant digits), and every
+    // per-row projection dot product is recomputed from the parquet
+    // vectors — both engines fold the dot left-to-right, so the e6
+    // roundings agree bit-for-bit. A live RE-fit here would bind the gate
+    // to the fixture the oracle literals were fitted on (mismatch at any
+    // other SF); fit correctness rides q_pca_cov (live gram) + the
+    // Jacobi/fit specs + the pin-equality spec instead
     Gate("q_pca_project", """
       WITH m(mv) AS (SELECT [2.16468600000000030E-03, -4.54778400000000000E-03, 3.93014800000000000E-03, -4.79319200000000000E-03, 9.94306600000000000E-03, 7.77251400000000000E-03, -1.82313359999999970E-02, 9.21736400000000000E-03, -2.42739800000000030E-03, -6.17906000000000000E-04, 6.43607000000000000E-03, 3.35401200000000000E-03, -2.65886800000000000E-03, 2.05402000000000000E-03, -2.14576000000000000E-04, 5.91025199999999950E-03, 3.33420800000000000E-03, 5.82612199999999960E-03, -4.61284000000000000E-04, 1.23172999999999990E-03, -3.83917000000000030E-03, 2.30218400000000000E-03, 4.16825800000000000E-03, -8.05457800000000000E-03, -1.89116600000000000E-03, 1.28081300000000010E-02, -1.59705000000000000E-03, 1.06263300000000000E-02, -1.15325799999999990E-03, 3.90362000000000000E-04, 5.60471400000000000E-03, -5.79268800000000000E-03, 8.33528600000000000E-03, -6.67538400000000000E-03, 5.15563199999999900E-03, 1.17717800000000000E-03, -5.33530800000000000E-03, -1.59378200000000000E-03, -9.66712000000000000E-04, -1.14097800000000000E-03, -1.74419800000000000E-03, -1.18341320000000000E-02, 3.13532000000000000E-04, -5.63154000000000100E-04, -1.15205620000000000E-02, 3.83261800000000000E-03, -5.98054000000000000E-04, 5.89032400000000000E-03, -3.74965200000000000E-03, -1.02643980000000000E-02, 9.37715800000000000E-03, -1.48200800000000000E-03, 7.77006000000000000E-03, -3.91755000000000000E-03, 4.70980799999999900E-03, -3.57730600000000000E-03, 4.77385400000000000E-03, -2.47035800000000000E-03, -4.84451800000000000E-03, -8.72118400000000000E-03, -2.81182000000000000E-04, 5.00419400000000000E-03, -1.15905400000000000E-03, -1.32662280000000000E-02]),
       w(component, wv) AS (SELECT * FROM (VALUES
@@ -423,8 +344,7 @@ object EmbeddingGates {
                list_transform(range(1, len(v) + 1), i -> v[i] - mv[i]), wv) * 1000000.0 + 0.5) AS BIGINT) AS x_e6
       FROM e, m, w
       ORDER BY vec_id, component""") { (s, _) =>
-      val emb = s.table("embeddings")
-        .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("vec"))
+      val emb = vectors(s)
       Pca.project(emb, "vec", PcaPinnedModels.sf001K4, "pca")
         .select(col("vec_id"), posexplode(col("pca")).as(Seq("component", "x")))
         .select(col("vec_id"), col("component"),
@@ -433,11 +353,10 @@ object EmbeddingGates {
     },
 
     // int8 quantization of raw and unit-normalized vectors; every step
-    // (abs-max, sequential-fold norm, floor(x*scale+0.5)) is exact IEEE
-    // arithmetic replayed verbatim by the DuckDB oracle
-    // int8 quantization replayed step-for-step: abs-max scale, sequential
-    // list_reduce norm (0.0 + x0^2 == x0^2, so the fold matches vec_norm's
-    // zero-seeded loop bit-for-bit), floor(x*scale + 0.5) half-up rounding
+    // (abs-max scale, sequential-fold norm, floor(x*scale + 0.5) half-up
+    // rounding) is exact IEEE arithmetic replayed verbatim by the DuckDB
+    // oracle. Its list_reduce norm matches vec_norm's zero-seeded loop
+    // bit-for-bit, since 0.0 + x0^2 == x0^2
     Gate("q_embed_quant", """
       WITH e AS (SELECT CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
       s1 AS (SELECT v, list_max(list_transform(v, x -> abs(x))) AS mx,
@@ -455,8 +374,7 @@ object EmbeddingGates {
              CAST(SUM(list_reduce(q, (a, b) -> a + b)) AS BIGINT) AS q_sum,
              CAST(SUM(list_reduce(qn, (a, b) -> a + b)) AS BIGINT) AS qn_sum
       FROM q""") { (s, _) =>
-      val emb = s.table("embeddings")
-        .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("vec"))
+      val emb = vectors(s)
       val staged = Embeddings.withInt8Quantized(
         Embeddings.withInt8Quantized(
           Embeddings.withNormalized(emb, "vec", "vn"), "vec", "q", "s1"),

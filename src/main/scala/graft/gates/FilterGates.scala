@@ -228,7 +228,7 @@ object FilterGates {
       SELECT c_nationkey, CAST(COUNT(*) AS BIGINT) AS cnt,
              CAST(SUM(c_custkey) AS BIGINT) AS key_sum
       FROM customer GROUP BY c_nationkey ORDER BY c_nationkey""") { (s, _) =>
-      val base = java.nio.file.Files.createTempDirectory("graft_fstore_").toString
+      val base = streaming.FileStreams.createTempDir("graft_fstore_").toString
       val path = base + "/catalog"
       val cust = s.table("customer").select(col("c_nationkey"), col("c_custkey"),
         expr("bitfilters_duckdb_hash('v1.5.1', c_custkey)").as("h"))

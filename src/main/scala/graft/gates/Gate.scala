@@ -2,6 +2,7 @@ package graft
 package gates
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, expr}
 
 /** One driver-contract gate: its name, the DuckDB SQL that replays its
   * answer over the same fixture, and the Spark side. [[SparkEntry]]
@@ -28,6 +29,19 @@ object Gate {
     val rows = df.collect()
     s.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema)
   }
+
+  /** The `embeddings` fixture as `(vec_id, vec ARRAY<DOUBLE>)`: the corpus
+    * every vector gate reads.
+    */
+  private[gates] def vectors(s: SparkSession): DataFrame =
+    s.table("embeddings")
+      .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("vec"))
+
+  /** The vector gates' query side: the [[vectors]] rows with `vec_id < n`
+    * as `(qid, qvec)`.
+    */
+  private[gates] def vectorQueries(vecs: DataFrame, n: Int = 10): DataFrame =
+    vecs.where(col("vec_id") < n).select(col("vec_id").as("qid"), col("vec").as("qvec"))
 
   private[gates] def deleteDirs(dirs: String*): Unit =
     dirs.foreach(d => streaming.FileStreams.deleteTree(java.nio.file.Paths.get(d)))

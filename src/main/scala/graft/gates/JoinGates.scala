@@ -225,8 +225,8 @@ object JoinGates {
              CAST(SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT)) AS BIGINT) AS price_e2
       FROM lineitem
       WHERE l_orderkey IN (SELECT o_orderkey FROM orders WHERE o_orderkey % 97 = 0)""") { (s, _) =>
-      val tmpData = java.nio.file.Files.createTempDirectory("graft_skip_data_").toString
-      val tmpIdx = java.nio.file.Files.createTempDirectory("graft_skip_idx_").toString
+      val tmpData = streaming.FileStreams.createTempDir("graft_skip_data_").toString
+      val tmpIdx = streaming.FileStreams.createTempDir("graft_skip_idx_").toString
       val rows = s.table("lineitem").count()
       val parts = math.min(2048L, math.max(8L, (rows + 749999L) / 750000L)).toInt
       // guide §2.3 (project before the exchange): the gate's lookup only
@@ -292,7 +292,7 @@ object JoinGates {
              CAST(SUM(l_orderkey % 1000003) % 1000003 AS BIGINT) AS key_checksum
       FROM lineitem JOIN orders ON l_orderkey = o_orderkey
       GROUP BY o_orderpriority ORDER BY o_orderpriority""") { (s, _) =>
-      val base = java.nio.file.Files.createTempDirectory("graft_bucketed_").toString
+      val base = streaming.FileStreams.createTempDir("graft_bucketed_").toString
       graft.sources.BucketedTables.saveBucketed(
         s.table("lineitem").select(col("l_orderkey"), col("l_extendedprice"), col("l_discount")),
         "graft_b_lineitem", "l_orderkey", 8, sortCols = Seq("l_orderkey"),

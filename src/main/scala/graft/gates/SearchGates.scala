@@ -5,7 +5,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Embeddings, Ranking}
-import Gate.{deleteDirs, localResult}
+import Gate.{deleteDirs, localResult, vectorQueries, vectors}
 
 /** Similarity search: BM25 and hybrid retrieval, exact and approximate
   * top-k (LSH, IVF, PQ, IVFPQ, Hamming), MMR reranking and cosine pair
@@ -16,6 +16,11 @@ import Gate.{deleteDirs, localResult}
   * when a config's recall drops below its pinned floor, so an ANN
   * regression goes red in CORRECTNESS even though every individual stage
   * would still replay "correctly".
+  *
+  * Each DuckDB replay stage the gates share is declared once below as a
+  * SQL fragment and spliced into the gates' oracle text. A fragment
+  * assumes the CTEs it reads are in scope (`e(vec_id, v DOUBLE[])`, and
+  * `q`, `c`, `enc`, `cb`... where it names them).
   */
 object SearchGates {
 
@@ -43,25 +48,15 @@ object SearchGates {
     local
   }
 
-  /** Shared DuckDB CTE fragment replaying the splitmix64 hyperplane LSH
-    * bucketing LIVE (assumes a CTE `e(vec_id, v DOUBLE[])` is already in
-    * scope): plane value k of the counter-based splitmix64 stream is a
-    * PURE FUNCTION of k (`mix(seed + k·golden)` — no sequential state),
-    * so the first `prefixBits`·dim plane draws, the sequential
-    * dot-product folds, and the sign-prefix bucket all replay exactly.
-    * The mod-2^64 multiplies decompose into 32x64-bit pieces
-    * (`(lo·c + ((hi·c) mod 2^32)·2^32) mod 2^64`) because a full 64x64
-    * product overflows DuckDB's signed INT128. Produces
-    * `bkt(vec_id, b BIGINT)` — the exact `shiftrightunsigned(sig,
-    * 64 − prefixBits)` bucket (bit 63−j of the signature is plane j, so
-    * the bucket needs only planes j < prefixBits). Replaces the former
-    * golden pins for the LSH gates.
+  /** The counter-based splitmix64 hyperplane stream and the per-vector
+    * plane dot products: plane value k is a PURE FUNCTION of k
+    * (`mix(seed + k·golden)` — no sequential state), so any prefix of the
+    * planes replays exactly. Reads `idx(j, i, k)` and `d(dim)`; produces
+    * `hdots(vec_id, j, dot)`. The mod-2^64 multiplies decompose into
+    * 32x64-bit pieces (`(lo·c + ((hi·c) mod 2^32)·2^32) mod 2^64`)
+    * because a full 64x64 product overflows DuckDB's signed INT128.
     */
-  private def lshBucketCte(prefixBits: Int, seed: Long = 42L): String = s"""
-      d AS (SELECT len(v) AS dim FROM e LIMIT 1),
-      idx AS (SELECT j.j, i.i, (j.j * d.dim + i.i + 1) AS k
-              FROM d, (SELECT unnest(range($prefixBits)) AS j) j,
-                   (SELECT unnest(range((SELECT dim FROM d))) AS i) i),
+  private def splitmixPlanes(seed: Long): String = s"""
       st AS (SELECT j, i,
         CAST((($seed::HUGEINT + k::HUGEINT * 11400714819323198485::HUGEINT)
               % 18446744073709551616::HUGEINT) AS UBIGINT) AS s FROM idx),
@@ -85,7 +80,23 @@ object SearchGates {
         list_reduce(list_prepend(CAST(0 AS DOUBLE),
           list_transform(range((SELECT dim FROM d)), x -> e.v[x + 1] * pl.pv[x + 1])),
           (a, b) -> a + b) AS dot
-        FROM e, pl),
+        FROM e, pl)"""
+
+  /** Shared DuckDB CTE fragment replaying the splitmix64 hyperplane LSH
+    * bucketing LIVE (assumes a CTE `e(vec_id, v DOUBLE[])` is already in
+    * scope): the first `prefixBits`·dim plane draws
+    * ([[splitmixPlanes]]), the sequential dot-product folds, and the
+    * sign-prefix bucket all replay exactly. Produces `bkt(vec_id, b
+    * BIGINT)` — the exact `shiftrightunsigned(sig, 64 − prefixBits)`
+    * bucket (bit 63−j of the signature is plane j, so the bucket needs
+    * only planes j < prefixBits). Replaces the former golden pins for the
+    * LSH gates.
+    */
+  private def lshBucketCte(prefixBits: Int, seed: Long = 42L): String = s"""
+      d AS (SELECT len(v) AS dim FROM e LIMIT 1),
+      idx AS (SELECT j.j, i.i, (j.j * d.dim + i.i + 1) AS k
+              FROM d, (SELECT unnest(range($prefixBits)) AS j) j,
+                   (SELECT unnest(range((SELECT dim FROM d))) AS i) i),${splitmixPlanes(seed)},
       bkt AS (SELECT vec_id,
                      CAST(SUM(CASE WHEN dot > 0
                               THEN 1 << (${prefixBits - 1} - j) ELSE 0 END) AS BIGINT) AS b
@@ -107,44 +118,236 @@ object SearchGates {
       idx AS (SELECT j.j, i.i, (j.j * d.dim + i.i + 1) AS k
               FROM d, (SELECT unnest(range(16)) AS j) j,
                    (SELECT unnest(range((SELECT dim FROM d))) AS i) i
-              WHERE j.j < (SELECT p FROM pb)),
-      st AS (SELECT j, i,
-        CAST((($seed::HUGEINT + k::HUGEINT * 11400714819323198485::HUGEINT)
-              % 18446744073709551616::HUGEINT) AS UBIGINT) AS s FROM idx),
-      sm1 AS (SELECT j, i, CAST(xor(s, s >> 30) AS HUGEINT) AS z FROM st),
-      sm2 AS (SELECT j, i, CAST(
-          ((z % 4294967296::HUGEINT) * 13787848793156543929::HUGEINT
-           + (((z // 4294967296::HUGEINT) * 13787848793156543929::HUGEINT)
-              % 4294967296::HUGEINT) * 4294967296::HUGEINT)
-          % 18446744073709551616::HUGEINT AS UBIGINT) AS z FROM sm1),
-      sm3 AS (SELECT j, i, CAST(xor(z, z >> 27) AS HUGEINT) AS z FROM sm2),
-      sm4 AS (SELECT j, i, CAST(
-          ((z % 4294967296::HUGEINT) * 10723151780598845931::HUGEINT
-           + (((z // 4294967296::HUGEINT) * 10723151780598845931::HUGEINT)
-              % 4294967296::HUGEINT) * 4294967296::HUGEINT)
-          % 18446744073709551616::HUGEINT AS UBIGINT) AS z FROM sm3),
-      sm5 AS (SELECT j, i, xor(z, z >> 31) AS z FROM sm4),
-      pl AS (SELECT j, list(CAST(z >> 11 AS DOUBLE) / 9007199254740992.0 * 2.0 - 1.0
-                            ORDER BY i) AS pv
-             FROM sm5 GROUP BY j),
-      hdots AS (SELECT e.vec_id, pl.j,
-        list_reduce(list_prepend(CAST(0 AS DOUBLE),
-          list_transform(range((SELECT dim FROM d)), x -> e.v[x + 1] * pl.pv[x + 1])),
-          (a, b) -> a + b) AS dot
-        FROM e, pl),
+              WHERE j.j < (SELECT p FROM pb)),${splitmixPlanes(seed)},
       bkt AS (SELECT vec_id,
                      CAST(SUM(CASE WHEN dot > 0
                               THEN 1 << ((SELECT p FROM pb) - 1 - j) ELSE 0 END) AS BIGINT) AS b
               FROM hdots GROUP BY vec_id)"""
 
-  val gates: Seq[Gate] = Seq(
-    // BM25 corpus search: top-20 docs for a 3-term query. Scores are
-    // micro-unit-rounded and the ordering is on the ROUNDED score (then
-    // doc_id), so the cross-engine compare never rests on a double tie.
-    // BM25 replayed with the same fold order (term0 + term1 + term2) and
-    // the same Lucene idf; ln() is natural log in DuckDB (log() is base-10)
-    Gate("q_bm25", """
-      WITH t AS (
+  /** The LSH gates' corpus and queries: `e`, the 4-bit buckets, `c(vec_id,
+    * v, b, nrm)` with the operator's sequential-fold norm, and the
+    * `vec_id < 10` queries `q(qid, qv, b, qnrm)`.
+    */
+  private val lshVectors = s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+      ${lshBucketCte(4)},
+      c AS (SELECT e.vec_id, e.v, bkt.b,
+        sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
+          list_transform(range((SELECT dim FROM d)), x -> e.v[x + 1] * e.v[x + 1])),
+          (a, b) -> a + b)) AS nrm
+        FROM e JOIN bkt USING (vec_id)),
+      q AS (SELECT vec_id AS qid, v AS qv, b, nrm AS qnrm FROM c WHERE vec_id < 10)"""
+
+  /** Exact top-5 over [[lshVectors]], ranked by the operator's exact sim
+    * expression (sequential dot fold / (norm_a · norm_b)). */
+  private val lshExact = """exact AS (SELECT query_id, neighbor_id FROM (
+        SELECT q.qid AS query_id, c.vec_id AS neighbor_id,
+               row_number() OVER (PARTITION BY q.qid
+                 ORDER BY list_reduce(list_prepend(CAST(0 AS DOUBLE),
+                     list_transform(range((SELECT dim FROM d)),
+                       x -> c.v[x + 1] * q.qv[x + 1])),
+                     (p, s) -> p + s) / (c.nrm * q.qnrm) DESC, c.vec_id) AS rank
+        FROM c, q WHERE c.vec_id != q.qid) t WHERE rank <= 5)"""
+
+  /** Multi-probe LSH candidates: every corpus vector in a bucket that a
+    * `probes(m)` flip mask reaches from the query's bucket, with its exact
+    * sim. `cols` prefixes the select list (the probe radius column). */
+  private def lshProbeCand(cols: String): String = s"""cand AS (SELECT ${cols}q.qid, c.vec_id,
+               list_reduce(list_prepend(CAST(0 AS DOUBLE),
+                 list_transform(range((SELECT dim FROM d)),
+                   x -> c.v[x + 1] * q.qv[x + 1])),
+                 (p2, s2) -> p2 + s2) / (c.nrm * q.qnrm) AS sim
+        FROM q JOIN probes pr ON true
+             JOIN c ON c.b = xor(q.b::UBIGINT, pr.m::UBIGINT)::BIGINT
+        WHERE c.vec_id != q.qid)"""
+
+  /** Exact cosine top-5 per query over `e`, against a query CTE
+    * `q(qid, qv)`, named by its id and vector columns. */
+  private def exactCosine(qid: String, qv: String): String = s"""exact AS (SELECT query_id, neighbor_id FROM (
+        SELECT q.$qid AS query_id, e2.vec_id AS neighbor_id,
+               row_number() OVER (PARTITION BY q.$qid
+                 ORDER BY list_cosine_similarity(e2.v, q.$qv) DESC, e2.vec_id) AS rank
+        FROM e e2, q WHERE e2.vec_id != q.$qid) WHERE rank <= 5)"""
+
+  /** The [[Embeddings.recallReport]] rollup of `approx` against `exact`
+    * (integer ppm per query, then the corpus-level row), with the pinned
+    * floor column of the recall-floor gates when `floorPpm` is set. */
+  private def recallRollup(floorPpm: Option[Long]): String = s"""pq AS (SELECT exact.query_id,
+               CAST(COUNT(*) AS BIGINT) AS ex,
+               CAST(SUM(CASE WHEN approx.neighbor_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS hits
+             FROM exact LEFT JOIN approx
+               ON approx.query_id = exact.query_id AND approx.neighbor_id = exact.neighbor_id
+             GROUP BY exact.query_id),
+      pr AS (SELECT query_id, ex, hits, hits * 1000000 // ex AS recall_ppm FROM pq)
+      SELECT CAST(COUNT(*) AS BIGINT) AS queries,
+             CAST(SUM(recall_ppm) // COUNT(*) AS BIGINT) AS mean_recall_ppm,
+             CAST(MIN(recall_ppm) AS BIGINT) AS min_recall_ppm,
+             CAST(SUM(CASE WHEN hits = ex THEN 1 ELSE 0 END) AS BIGINT) AS perfect_queries${
+    floorPpm.fold("")(f => s",\n             CAST($f AS BIGINT) AS floor_ppm")}
+      FROM pr"""
+
+  /** IVF cells over `e`: the 16 lowest-id seed centroids `c($cid, $cv)`
+    * and each vector's nearest cell `ea(vec_id, v, <cell>)` (argmax
+    * cosine, ties to the smallest id). `cell` is the select-list item that
+    * names the cell column. */
+  private def ivfCells(cid: String, cv: String, cell: String): String =
+    s"""c AS (SELECT vec_id AS $cid, v AS $cv FROM e ORDER BY vec_id LIMIT 16),
+      ea AS (
+        SELECT vec_id, v, $cell FROM (
+          SELECT e.vec_id, e.v, c.$cid,
+                 row_number() OVER (PARTITION BY e.vec_id
+                   ORDER BY list_cosine_similarity(e.v, c.$cv) DESC, c.$cid) AS rn
+          FROM e, c) WHERE rn = 1)"""
+
+  /** The `vec_id < 10` queries' nprobe = 4 nearest cells of
+    * [[ivfCells]]: `qa(qid, qv, <cell>)`. */
+  private def ivfProbes(cid: String, cv: String, cell: String): String =
+    s"""qa AS (
+        SELECT vec_id AS qid, v AS qv, $cell FROM (
+          SELECT e.vec_id, e.v, c.$cid,
+                 row_number() OVER (PARTITION BY e.vec_id
+                   ORDER BY list_cosine_similarity(e.v, c.$cv) DESC, c.$cid) AS rn
+          FROM e, c WHERE e.vec_id < 10) WHERE rn <= 4)"""
+
+  /** The IVF-flat replay (nlist = 16, nprobe = 4, in-cell exact top-5):
+    * q_ann_ivf and q_ann_index must answer alike, so they share it. */
+  private val ivfOracle = s"""
+      WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+      ${ivfCells("cid", "cv", "cid")},
+      ${ivfProbes("cid", "cv", "cid")}
+      SELECT query_id, rank, neighbor_id FROM (
+        SELECT qa.qid AS query_id, ea.vec_id AS neighbor_id,
+               row_number() OVER (PARTITION BY qa.qid
+                 ORDER BY list_cosine_similarity(ea.v, qa.qv) DESC, ea.vec_id) AS rank
+        FROM ea JOIN qa ON ea.cid = qa.cid
+        WHERE ea.vec_id != qa.qid)
+      WHERE rank <= 5 ORDER BY query_id, rank"""
+
+  /** The exact and IVF top-5 (`exact`, `approx`) of the IVF recall gates. */
+  private val ivfRecallRanks = """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+      exact AS (SELECT query_id, neighbor_id FROM (
+        SELECT q.vec_id AS query_id, e2.vec_id AS neighbor_id,
+               row_number() OVER (PARTITION BY q.vec_id
+                 ORDER BY list_cosine_similarity(e2.v, q.v) DESC, e2.vec_id) AS rank
+        FROM e e2, (SELECT * FROM e WHERE vec_id < 10) q
+        WHERE e2.vec_id != q.vec_id) WHERE rank <= 5),
+      c AS (SELECT vec_id AS cid, v AS cv FROM e ORDER BY vec_id LIMIT 16),
+      ea AS (SELECT vec_id, v, cid FROM (
+        SELECT e.vec_id, e.v, c.cid,
+               row_number() OVER (PARTITION BY e.vec_id
+                 ORDER BY list_cosine_similarity(e.v, c.cv) DESC, c.cid) AS rn
+        FROM e, c) WHERE rn = 1),
+      qa AS (SELECT vec_id AS qid, v AS qv, cid FROM (
+        SELECT e.vec_id, e.v, c.cid,
+               row_number() OVER (PARTITION BY e.vec_id
+                 ORDER BY list_cosine_similarity(e.v, c.cv) DESC, c.cid) AS rn
+        FROM e, c WHERE e.vec_id < 10) WHERE rn <= 4),
+      approx AS (SELECT query_id, neighbor_id FROM (
+        SELECT qa.qid AS query_id, ea.vec_id AS neighbor_id,
+               row_number() OVER (PARTITION BY qa.qid
+                 ORDER BY list_cosine_similarity(ea.v, qa.qv) DESC, ea.vec_id) AS rank
+        FROM ea JOIN qa ON ea.cid = qa.cid
+        WHERE ea.vec_id != qa.qid) WHERE rank <= 5)"""
+
+  /** PQ squared-L2 distance between subspace `j` of vector `x` and the
+    * codebook entry `cb.cv`: the operator's sequential fold over the 8
+    * dims, `(a-b)*(a-b)` rather than `^` so the arithmetic is identical. */
+  private def pqSqDist(x: String, j: String, cb: String): String =
+    s"""list_reduce(list_prepend(CAST(0 AS DOUBLE),
+          list_transform(range(8), d ->
+            ($x[$j*8 + d + 1] - $cb.cv[d + 1]) * ($x[$j*8 + d + 1] - $cb.cv[d + 1]))),
+          (a, b) -> a + b)"""
+
+  /** PQ encode against codebooks `cb<sfx>`: each vector `src.v` gets the
+    * e6-rounded nearest entry per subspace, ties to the smaller code —
+    * `dist<sfx>(vec_id, j, cid, d_e6)` and `enc<sfx>(vec_id, j, cid)`. */
+  private def pqEncode(sfx: String = "", src: String = "e", v: String = "v"): String =
+    s"""dist$sfx AS (SELECT $src.vec_id, cb$sfx.j, cb$sfx.cid,
+        CAST(round(${pqSqDist(s"$src.$v", s"cb$sfx.j", s"cb$sfx")} * 1e6) AS BIGINT) AS d_e6
+        FROM $src, cb$sfx),
+      enc$sfx AS (SELECT vec_id, j, cid FROM (
+        SELECT vec_id, j, cid,
+               row_number() OVER (PARTITION BY vec_id, j ORDER BY d_e6, cid) AS rn
+        FROM dist$sfx) WHERE rn = 1)"""
+
+  /** PQ seed codebooks `cb<sfx>(j, cid, cv)` — the 16 lowest-id vectors
+    * of `src`, sliced into 8 subspaces of dim 8 — and the [[pqEncode]]
+    * against them. */
+  private def pqCodes(sfx: String = "", src: String = "e", v: String = "v"): String = {
+    val seedVec = if (v == "v") v else s"$v AS v"
+    val pad = " " * (sfx.length + 13) // aligns FROM under `cb<sfx> AS (`
+    s"""cbv AS (SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cid, $seedVec
+              FROM $src ORDER BY vec_id LIMIT 16),
+      subs AS (SELECT unnest(range(8)) AS j),
+      cb$sfx AS (SELECT subs.j, cbv.cid, list_slice(cbv.v, subs.j*8 + 1, subs.j*8 + 8) AS cv
+${pad}FROM cbv, subs),
+      ${pqEncode(sfx, src, v)}"""
+  }
+
+  /** One Lloyd update of the seed codebooks `cb0` over `enc0`: the
+    * per-entry e6-integer mean of the member slices, the seed entry kept
+    * where it lost every member. Produces `cb`. */
+  private val pqLloyd = """upd AS (SELECT enc0.j, enc0.cid, p.p,
+        CAST(SUM(CAST(round(e.v[enc0.j*8 + p.p + 1] * 1e6) AS BIGINT)) AS DOUBLE)
+          / (COUNT(*) * 1e6) AS val
+        FROM enc0 JOIN e ON e.vec_id = enc0.vec_id,
+             (SELECT unnest(range(8)) AS p) p
+        GROUP BY enc0.j, enc0.cid, p.p),
+      cbu AS (SELECT j, cid, list(val ORDER BY p) AS cv FROM upd GROUP BY j, cid),
+      cb AS (SELECT cb0.j, cb0.cid, coalesce(cbu.cv, cb0.cv) AS cv
+             FROM cb0 LEFT JOIN cbu ON cbu.j = cb0.j AND cbu.cid = cb0.cid)"""
+
+  /** The ADC distance of query vector `qv` to the codes `enc<sfx>`: the
+    * integer sum of the per-subspace e6-rounded distances. */
+  private def pqAdcSum(qv: String, sfx: String): String =
+    s"""CAST(SUM(CAST(round(${pqSqDist(qv, s"enc$sfx.j", s"cb$sfx")} * 1e6) AS BIGINT)) AS BIGINT) AS adc_e6"""
+
+  /** `adc<sfx>(qid, vec_id, adc_e6)`: every `q` query against every
+    * encoded vector. */
+  private def pqAdc(sfx: String): String = s"""adc$sfx AS (SELECT q.qid, enc$sfx.vec_id,
+        ${pqAdcSum("q.qv", sfx)}
+        FROM q, enc$sfx JOIN cb$sfx ON cb$sfx.j = enc$sfx.j AND cb$sfx.cid = enc$sfx.cid
+        WHERE enc$sfx.vec_id != q.qid
+        GROUP BY q.qid, enc$sfx.vec_id)"""
+
+  /** IVFPQ ADC: each probe row of `probes(qid, cell, <qv>)` against the
+    * encoded vectors of `corpus(vec_id, cell)` in its cell. */
+  private def ivfPqAdc(corpus: String, probes: String, qv: String): String =
+    s"""adc AS (SELECT $probes.qid, $corpus.vec_id,
+        ${pqAdcSum(s"$probes.$qv", "")}
+        FROM $corpus JOIN $probes ON $corpus.cell = $probes.cell
+                JOIN enc ON enc.vec_id = $corpus.vec_id
+                JOIN cb ON cb.j = enc.j AND cb.cid = enc.cid
+        WHERE $corpus.vec_id != $probes.qid
+        GROUP BY $probes.qid, $corpus.vec_id)"""
+
+  /** The PQ gates' answer: top-5 per query by (adc_e6, vec_id). */
+  private val pqAdcRanked = """SELECT query_id, rank, neighbor_id, adc_e6 FROM (
+        SELECT qid AS query_id, vec_id AS neighbor_id, adc_e6,
+               row_number() OVER (PARTITION BY qid ORDER BY adc_e6, vec_id) AS rank
+        FROM adc)
+      WHERE rank <= 5 ORDER BY query_id, rank"""
+
+  /** [[pqAdcRanked]] as a recall input: `name(query_id, neighbor_id)`. */
+  private def pqApprox(name: String, adc: String): String = s"""$name AS (SELECT query_id, neighbor_id FROM (
+        SELECT qid AS query_id, vec_id AS neighbor_id,
+               row_number() OVER (PARTITION BY qid ORDER BY adc_e6, vec_id) AS rank
+        FROM $adc) WHERE rank <= 5)"""
+
+  /** Hamming prescreen over `e` and `q(vec_id, v)`: the sign
+    * disagreements (== popcount of the xor of the packed words), then
+    * each candidate's rank `hr` by (hamming, id). */
+  private val hammingDist = """ham AS (
+        SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id,
+               len(list_filter(range(len(e.v)), j -> (e.v[j+1] > 0) <> (q.v[j+1] > 0))) AS hamming
+        FROM e, q WHERE e.vec_id != q.vec_id)"""
+  private val hammingCand = """cand AS (
+        SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY hamming, neighbor_id) AS hr
+        FROM ham)"""
+
+  /** BM25 term statistics for the 3-term query ('hash', 'join',
+    * 'vector'): tokens `t`, per-doc length and term counts `tf`, and the
+    * corpus `s(n, avgdl, df0..df2)`. */
+  private val bm25Terms = """t AS (
         SELECT doc_id,
                list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '') AS toks
         FROM documents),
@@ -160,7 +363,16 @@ object SearchGates {
                CAST(SUM(CASE WHEN tf0 > 0 THEN 1 ELSE 0 END) AS DOUBLE) AS df0,
                CAST(SUM(CASE WHEN tf1 > 0 THEN 1 ELSE 0 END) AS DOUBLE) AS df1,
                CAST(SUM(CASE WHEN tf2 > 0 THEN 1 ELSE 0 END) AS DOUBLE) AS df2
-        FROM tf)
+        FROM tf)"""
+
+  val gates: Seq[Gate] = Seq(
+    // BM25 corpus search: top-20 docs for a 3-term query. Scores are
+    // micro-unit-rounded and the ordering is on the ROUNDED score (then
+    // doc_id), so the cross-engine compare never rests on a double tie.
+    // The oracle keeps the same fold order (term0 + term1 + term2) and
+    // the same Lucene idf; ln() is natural log in DuckDB (log() is base-10)
+    Gate("q_bm25", s"""
+      WITH $bm25Terms
       SELECT doc_id, dl,
              CAST(round((
                ln(1.0 + (n - df0 + 0.5) / (df0 + 0.5)) * (CAST(tf0 AS DOUBLE) * 2.2)
@@ -182,30 +394,13 @@ object SearchGates {
 
     // hybrid retrieval: BM25 recall (full corpus, no doc-keyed shuffle)
     // -> bounded-candidate cosine rerank against vec_id 0's embedding ->
-    // reciprocal-rank fusion. Ranks are small exact integers, so the
-    // fused ordering replays exactly; the cosine rank inherits the ANN
-    // gates' ordering contract.
-    // hybrid retrieval: the bm25 replay above feeds a bounded candidate
-    // set, list_cosine_similarity reranks it, and reciprocal-rank fusion
-    // (exact rationals of small integer ranks) fixes the final order
-    Gate("q_hybrid_search", """
-      WITH t AS (
-        SELECT doc_id,
-               list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '') AS toks
-        FROM documents),
-      tf AS (
-        SELECT doc_id, CAST(len(toks) AS BIGINT) AS dl,
-               CAST(len(list_filter(toks, x -> x = 'hash')) AS BIGINT) AS tf0,
-               CAST(len(list_filter(toks, x -> x = 'join')) AS BIGINT) AS tf1,
-               CAST(len(list_filter(toks, x -> x = 'vector')) AS BIGINT) AS tf2
-        FROM t),
-      s AS (
-        SELECT CAST(COUNT(*) AS DOUBLE) AS n,
-               CAST(SUM(dl) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS avgdl,
-               CAST(SUM(CASE WHEN tf0 > 0 THEN 1 ELSE 0 END) AS DOUBLE) AS df0,
-               CAST(SUM(CASE WHEN tf1 > 0 THEN 1 ELSE 0 END) AS DOUBLE) AS df1,
-               CAST(SUM(CASE WHEN tf2 > 0 THEN 1 ELSE 0 END) AS DOUBLE) AS df2
-        FROM tf),
+    // reciprocal-rank fusion. The oracle's bm25 replay feeds the bounded
+    // candidate set and list_cosine_similarity reranks it; the fused
+    // ranks are exact rationals of small integer ranks, so the final
+    // order replays exactly, and the cosine rank inherits the ANN gates'
+    // ordering contract.
+    Gate("q_hybrid_search", s"""
+      WITH $bm25Terms,
       sc AS (
         SELECT doc_id,
                CAST(round((
@@ -242,10 +437,8 @@ object SearchGates {
       val qv = s.table("embeddings").where(col("vec_id") === 0L)
         .select(expr("transform(embedding, x -> CAST(x AS DOUBLE))"))
         .head().getSeq[Double](0)
-      val emb = s.table("embeddings")
-        .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("vec"))
       Ranking.hybridSearch(s.table("documents"), "text", "doc_id",
-          Seq("hash", "join", "vector"), emb, "vec", "vec_id", qv,
+          Seq("hash", "join", "vector"), vectors(s), "vec", "vec_id", qv,
           candidates = 100, k = 10)
         .select(col("doc_id"), col("rank").cast("int").as("rank"),
           col("rank_bm25").cast("int").as("rank_bm25"),
@@ -263,11 +456,8 @@ object SearchGates {
         FROM embeddings e, (SELECT * FROM embeddings WHERE vec_id < 10) q
         WHERE e.vec_id != q.vec_id) ranked
       WHERE rank <= 5 ORDER BY query_id, rank""") { (s, _) =>
-      val emb = s.table("embeddings")
-        .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("vec"))
-      val queries = emb.where(col("vec_id") < 10)
-        .select(col("vec_id").as("qid"), col("vec").as("qvec"))
-      Embeddings.bruteForceTopK(emb, "vec", "vec_id", queries, "qvec", "qid", 5)
+      val emb = vectors(s)
+      Embeddings.bruteForceTopK(emb, "vec", "vec_id", vectorQueries(emb), "qvec", "qid", 5)
         .select(col("query_id"), col("rank"), col("neighbor_id"))
         .orderBy("query_id", "rank")
     },
@@ -277,14 +467,7 @@ object SearchGates {
     // ranking sim is the operator's EXACT expression (sequential dot
     // fold / (norm_a · norm_b)) so near-ties cannot ULP-flip the order
     Gate("q_ann_lsh", s"""
-      WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-      ${lshBucketCte(4)},
-      c AS (SELECT e.vec_id, e.v, bkt.b,
-        sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-          list_transform(range((SELECT dim FROM d)), x -> e.v[x + 1] * e.v[x + 1])),
-          (a, b) -> a + b)) AS nrm
-        FROM e JOIN bkt USING (vec_id)),
-      q AS (SELECT vec_id AS qid, v AS qv, b, nrm AS qnrm FROM c WHERE vec_id < 10),
+      $lshVectors,
       cand AS (SELECT q.qid, c.vec_id,
         list_reduce(list_prepend(CAST(0 AS DOUBLE),
           list_transform(range((SELECT dim FROM d)), x -> c.v[x + 1] * q.qv[x + 1])),
@@ -294,49 +477,21 @@ object SearchGates {
         SELECT qid AS query_id, vec_id AS neighbor_id,
                row_number() OVER (PARTITION BY qid ORDER BY sim DESC, vec_id) AS rank
         FROM cand) t WHERE rank <= 5 ORDER BY query_id, rank""") { (s, _) =>
-      val emb = s.table("embeddings")
-        .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("vec"))
-      val queries = emb.where(col("vec_id") < 10)
-        .select(col("vec_id").as("qid"), col("vec").as("qvec"))
-      Embeddings.lshTopK(emb, "vec", "vec_id", queries, "qvec", "qid", 5, prefixBits = 4)
+      val emb = vectors(s)
+      Embeddings.lshTopK(emb, "vec", "vec_id", vectorQueries(emb), "qvec", "qid", 5,
+          prefixBits = 4)
         .select(col("query_id"), col("rank"), col("neighbor_id"))
         .orderBy("query_id", "rank")
     },
 
-    // IVF-flat with deterministic seed centroids: assignment, probing and
-    // ranking are all exactly replayable in DuckDB (real oracle), unlike
-    // the hyperplane-LSH path, whose planes are ALSO live since r10
-    // (counter-based splitmix64 replays in SQL)
-    // full replication of the IVF pipeline: seed centroids, cell
-    // assignment (argmax cosine, ties to smallest cid), nprobe=4 query
-    // cells, in-cell exact ranking
-    Gate("q_ann_ivf", """
-      WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-      c AS (SELECT vec_id AS cid, v AS cv FROM e ORDER BY vec_id LIMIT 16),
-      ea AS (
-        SELECT vec_id, v, cid FROM (
-          SELECT e.vec_id, e.v, c.cid,
-                 row_number() OVER (PARTITION BY e.vec_id
-                   ORDER BY list_cosine_similarity(e.v, c.cv) DESC, c.cid) AS rn
-          FROM e, c) WHERE rn = 1),
-      qa AS (
-        SELECT vec_id AS qid, v AS qv, cid FROM (
-          SELECT e.vec_id, e.v, c.cid,
-                 row_number() OVER (PARTITION BY e.vec_id
-                   ORDER BY list_cosine_similarity(e.v, c.cv) DESC, c.cid) AS rn
-          FROM e, c WHERE e.vec_id < 10) WHERE rn <= 4)
-      SELECT query_id, rank, neighbor_id FROM (
-        SELECT qa.qid AS query_id, ea.vec_id AS neighbor_id,
-               row_number() OVER (PARTITION BY qa.qid
-                 ORDER BY list_cosine_similarity(ea.v, qa.qv) DESC, ea.vec_id) AS rank
-        FROM ea JOIN qa ON ea.cid = qa.cid
-        WHERE ea.vec_id != qa.qid)
-      WHERE rank <= 5 ORDER BY query_id, rank""") { (s, _) =>
-      val emb = s.table("embeddings")
-        .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("vec"))
-      val queries = emb.where(col("vec_id") < 10)
-        .select(col("vec_id").as("qid"), col("vec").as("qvec"))
-      Embeddings.ivfTopK(emb, "vec", "vec_id", queries, "qvec", "qid", 5, nlist = 16, nprobe = 4)
+    // IVF-flat with deterministic seed centroids: the oracle replays the
+    // whole pipeline exactly — seed centroids, cell assignment (argmax
+    // cosine, ties to the smallest cid), the nprobe = 4 query cells and
+    // the in-cell exact ranking (ivfOracle)
+    Gate("q_ann_ivf", ivfOracle) { (s, _) =>
+      val emb = vectors(s)
+      Embeddings.ivfTopK(emb, "vec", "vec_id", vectorQueries(emb), "qvec", "qid", 5,
+          nlist = 16, nprobe = 4)
         .select(col("query_id"), col("rank"), col("neighbor_id"))
         .orderBy("query_id", "rank")
     },
@@ -345,39 +500,14 @@ object SearchGates {
     // cid-partitioned cells to disk, then answer from the FILES — the
     // probe reads only nprobe/nlist of the corpus directories. Routing
     // and ranking reuse the exact ivfTopK kernels, so the stored-index
-    // answer replays in the SAME DuckDB oracle as q_ann_ivf
-    // the persisted index must answer EXACTLY like the in-memory IVF —
-    // same routing, same ranking — so its oracle IS the q_ann_ivf replay
-    Gate("q_ann_index", """
-      WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-      c AS (SELECT vec_id AS cid, v AS cv FROM e ORDER BY vec_id LIMIT 16),
-      ea AS (
-        SELECT vec_id, v, cid FROM (
-          SELECT e.vec_id, e.v, c.cid,
-                 row_number() OVER (PARTITION BY e.vec_id
-                   ORDER BY list_cosine_similarity(e.v, c.cv) DESC, c.cid) AS rn
-          FROM e, c) WHERE rn = 1),
-      qa AS (
-        SELECT vec_id AS qid, v AS qv, cid FROM (
-          SELECT e.vec_id, e.v, c.cid,
-                 row_number() OVER (PARTITION BY e.vec_id
-                   ORDER BY list_cosine_similarity(e.v, c.cv) DESC, c.cid) AS rn
-          FROM e, c WHERE e.vec_id < 10) WHERE rn <= 4)
-      SELECT query_id, rank, neighbor_id FROM (
-        SELECT qa.qid AS query_id, ea.vec_id AS neighbor_id,
-               row_number() OVER (PARTITION BY qa.qid
-                 ORDER BY list_cosine_similarity(ea.v, qa.qv) DESC, ea.vec_id) AS rank
-        FROM ea JOIN qa ON ea.cid = qa.cid
-        WHERE ea.vec_id != qa.qid)
-      WHERE rank <= 5 ORDER BY query_id, rank""") { (s, _) =>
-      val emb = s.table("embeddings")
-        .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("vec"))
-      val queries = emb.where(col("vec_id") < 10)
-        .select(col("vec_id").as("qid"), col("vec").as("qvec"))
-      val idx = java.nio.file.Files.createTempDirectory("graft_ann_idx_").toString
+    // answer must equal the in-memory IVF's, and q_ann_ivf's replay is
+    // its oracle
+    Gate("q_ann_index", ivfOracle) { (s, _) =>
+      val emb = vectors(s)
+      val idx = streaming.FileStreams.createTempDir("graft_ann_idx_").toString
       graft.sources.AnnIndex.build(emb, "vec", "vec_id", idx, nlist = 16)
       val res = graft.sources.AnnIndex
-        .query(s, idx, queries, "qvec", "qid", k = 5, nprobe = 4)
+        .query(s, idx, vectorQueries(emb), "qvec", "qid", k = 5, nprobe = 4)
         .select(col("query_id"), col("rank"), col("neighbor_id"))
         .orderBy("query_id", "rank")
       val out = localResult(s, res) // 10 queries x k rows; frees the index
@@ -385,287 +515,100 @@ object SearchGates {
       out
     },
 
-    // product quantization: deterministic seed codebooks (16 lowest-id
-    // vectors, 8 subspaces of dim 8), e6-integer encode + ADC scoring —
-    // the DuckDB oracle rebuilds codebooks, codes and distances exactly
-    // full replication of the PQ pipeline: codebooks from the 16
+    // product quantization, fully replayed: codebooks from the 16
     // lowest-id vectors (8 subspaces x dim 8), per-subspace e6-rounded
-    // squared-L2 encode (sequential fold replayed via list_reduce), ADC =
-    // integer sum of the per-subspace rounded distances, rank by (adc,
-    // id). ^ (power) avoided: (a-b)*(a-b) keeps the arithmetic identical
-    Gate("q_ann_pq", """
+    // squared-L2 encode (the sequential fold replayed via list_reduce),
+    // ADC = integer sum of the per-subspace rounded distances, rank by
+    // (adc, id)
+    Gate("q_ann_pq", s"""
       WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-      cbv AS (SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cid, v
-              FROM e ORDER BY vec_id LIMIT 16),
-      subs AS (SELECT unnest(range(8)) AS j),
-      cb AS (SELECT subs.j, cbv.cid, list_slice(cbv.v, subs.j*8 + 1, subs.j*8 + 8) AS cv
-             FROM cbv, subs),
-      dist AS (SELECT e.vec_id, cb.j, cb.cid,
-        CAST(round(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-          list_transform(range(8), d ->
-            (e.v[cb.j*8 + d + 1] - cb.cv[d + 1]) * (e.v[cb.j*8 + d + 1] - cb.cv[d + 1]))),
-          (a, b) -> a + b) * 1e6) AS BIGINT) AS d_e6
-        FROM e, cb),
-      enc AS (SELECT vec_id, j, cid FROM (
-        SELECT vec_id, j, cid,
-               row_number() OVER (PARTITION BY vec_id, j ORDER BY d_e6, cid) AS rn
-        FROM dist) WHERE rn = 1),
+      ${pqCodes()},
       q AS (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id < 10),
-      adc AS (SELECT q.qid, enc.vec_id,
-        CAST(SUM(CAST(round(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-          list_transform(range(8), d ->
-            (q.qv[enc.j*8 + d + 1] - cb.cv[d + 1]) * (q.qv[enc.j*8 + d + 1] - cb.cv[d + 1]))),
-          (a, b) -> a + b) * 1e6) AS BIGINT)) AS BIGINT) AS adc_e6
-        FROM q, enc JOIN cb ON cb.j = enc.j AND cb.cid = enc.cid
-        WHERE enc.vec_id != q.qid
-        GROUP BY q.qid, enc.vec_id)
-      SELECT query_id, rank, neighbor_id, adc_e6 FROM (
-        SELECT qid AS query_id, vec_id AS neighbor_id, adc_e6,
-               row_number() OVER (PARTITION BY qid ORDER BY adc_e6, vec_id) AS rank
-        FROM adc)
-      WHERE rank <= 5 ORDER BY query_id, rank""") { (s, _) =>
-      val emb = s.table("embeddings")
-        .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("vec"))
-      val queries = emb.where(col("vec_id") < 10)
-        .select(col("vec_id").as("qid"), col("vec").as("qvec"))
-      Embeddings.pqTopK(emb, "vec", "vec_id", queries, "qvec", "qid",
+      ${pqAdc("")}
+      $pqAdcRanked""") { (s, _) =>
+      val emb = vectors(s)
+      Embeddings.pqTopK(emb, "vec", "vec_id", vectorQueries(emb), "qvec", "qid",
           k = 5, m = 8, ksub = 16)
         .orderBy("query_id", "rank")
     },
 
-    // Lloyd-TRAINED PQ codebooks (1 iteration): assignment is the
-    // integer encode kernel, the update is an e6-integer mean — both
-    // pure SQL transforms, so the oracle replays seed -> update ->
-    // re-encode -> ADC entirely live (no golden pin)
-    // trained PQ, fully live: seed codebooks -> encode (the q_ann_pq
-    // replay) -> ONE Lloyd update (per-entry e6-integer mean of member
-    // slices, seed kept where an entry lost every member) -> re-encode
-    // with the trained codebooks -> ADC rank. Every stage is the exact
-    // integer arithmetic the Scala operator runs.
-    Gate("q_ann_pq_trained", """
+    // Lloyd-TRAINED PQ codebooks (1 iteration), fully live: seed
+    // codebooks -> encode (the q_ann_pq replay) -> ONE Lloyd update
+    // (pqLloyd) -> re-encode with the trained codebooks -> ADC rank. The
+    // assignment is the integer encode kernel and the update an e6-integer
+    // mean, so every stage is the exact integer arithmetic the Scala
+    // operator runs (no golden pin)
+    Gate("q_ann_pq_trained", s"""
       WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-      cbv AS (SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cid, v
-              FROM e ORDER BY vec_id LIMIT 16),
-      subs AS (SELECT unnest(range(8)) AS j),
-      cb0 AS (SELECT subs.j, cbv.cid, list_slice(cbv.v, subs.j*8 + 1, subs.j*8 + 8) AS cv
-              FROM cbv, subs),
-      dist0 AS (SELECT e.vec_id, cb0.j, cb0.cid,
-        CAST(round(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-          list_transform(range(8), d ->
-            (e.v[cb0.j*8 + d + 1] - cb0.cv[d + 1]) * (e.v[cb0.j*8 + d + 1] - cb0.cv[d + 1]))),
-          (a, b) -> a + b) * 1e6) AS BIGINT) AS d_e6
-        FROM e, cb0),
-      enc0 AS (SELECT vec_id, j, cid FROM (
-        SELECT vec_id, j, cid,
-               row_number() OVER (PARTITION BY vec_id, j ORDER BY d_e6, cid) AS rn
-        FROM dist0) WHERE rn = 1),
-      upd AS (SELECT enc0.j, enc0.cid, p.p,
-        CAST(SUM(CAST(round(e.v[enc0.j*8 + p.p + 1] * 1e6) AS BIGINT)) AS DOUBLE)
-          / (COUNT(*) * 1e6) AS val
-        FROM enc0 JOIN e ON e.vec_id = enc0.vec_id,
-             (SELECT unnest(range(8)) AS p) p
-        GROUP BY enc0.j, enc0.cid, p.p),
-      cbu AS (SELECT j, cid, list(val ORDER BY p) AS cv FROM upd GROUP BY j, cid),
-      cb AS (SELECT cb0.j, cb0.cid, coalesce(cbu.cv, cb0.cv) AS cv
-             FROM cb0 LEFT JOIN cbu ON cbu.j = cb0.j AND cbu.cid = cb0.cid),
-      dist AS (SELECT e.vec_id, cb.j, cb.cid,
-        CAST(round(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-          list_transform(range(8), d ->
-            (e.v[cb.j*8 + d + 1] - cb.cv[d + 1]) * (e.v[cb.j*8 + d + 1] - cb.cv[d + 1]))),
-          (a, b) -> a + b) * 1e6) AS BIGINT) AS d_e6
-        FROM e, cb),
-      enc AS (SELECT vec_id, j, cid FROM (
-        SELECT vec_id, j, cid,
-               row_number() OVER (PARTITION BY vec_id, j ORDER BY d_e6, cid) AS rn
-        FROM dist) WHERE rn = 1),
+      ${pqCodes("0")},
+      $pqLloyd,
+      ${pqEncode()},
       q AS (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id < 10),
-      adc AS (SELECT q.qid, enc.vec_id,
-        CAST(SUM(CAST(round(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-          list_transform(range(8), d ->
-            (q.qv[enc.j*8 + d + 1] - cb.cv[d + 1]) * (q.qv[enc.j*8 + d + 1] - cb.cv[d + 1]))),
-          (a, b) -> a + b) * 1e6) AS BIGINT)) AS BIGINT) AS adc_e6
-        FROM q, enc JOIN cb ON cb.j = enc.j AND cb.cid = enc.cid
-        WHERE enc.vec_id != q.qid
-        GROUP BY q.qid, enc.vec_id)
-      SELECT query_id, rank, neighbor_id, adc_e6 FROM (
-        SELECT qid AS query_id, vec_id AS neighbor_id, adc_e6,
-               row_number() OVER (PARTITION BY qid ORDER BY adc_e6, vec_id) AS rank
-        FROM adc)
-      WHERE rank <= 5 ORDER BY query_id, rank""") { (s, _) =>
-      val emb = s.table("embeddings")
-        .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("vec"))
-      val queries = emb.where(col("vec_id") < 10)
-        .select(col("vec_id").as("qid"), col("vec").as("qvec"))
+      ${pqAdc("")}
+      $pqAdcRanked""") { (s, _) =>
+      val emb = vectors(s)
       val cb = Embeddings.pqCodebooksTrained(emb, "vec", "vec_id",
         m = 8, ksub = 16, iterations = 1)
-      Embeddings.pqTopK(emb, "vec", "vec_id", queries, "qvec", "qid",
+      Embeddings.pqTopK(emb, "vec", "vec_id", vectorQueries(emb), "qvec", "qid",
           k = 5, m = 8, ksub = 16, codebooks = Some(cb))
         .orderBy("query_id", "rank")
     },
 
     // IVF + PQ composed (the billion-scale ANN shape): nprobe cells
-    // bound the candidates, global-codebook PQ codes bound the scan;
-    // the oracle composes the two existing replays
-    // IVF cell routing composed with the PQ code/ADC replay: candidates
-    // are the query's nprobe cells, scored by the integer ADC distance
-    Gate("q_ann_ivfpq", """
+    // bound the candidates, global-codebook PQ codes bound the scan. The
+    // oracle composes the two replays: IVF cell routing, then the
+    // candidates in the query's cells scored by the integer ADC distance
+    Gate("q_ann_ivfpq", s"""
       WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-      c AS (SELECT vec_id AS ccid, v AS cv0 FROM e ORDER BY vec_id LIMIT 16),
-      ea AS (
-        SELECT vec_id, v, ccid AS cell FROM (
-          SELECT e.vec_id, e.v, c.ccid,
-                 row_number() OVER (PARTITION BY e.vec_id
-                   ORDER BY list_cosine_similarity(e.v, c.cv0) DESC, c.ccid) AS rn
-          FROM e, c) WHERE rn = 1),
-      qa AS (
-        SELECT vec_id AS qid, v AS qv, ccid AS cell FROM (
-          SELECT e.vec_id, e.v, c.ccid,
-                 row_number() OVER (PARTITION BY e.vec_id
-                   ORDER BY list_cosine_similarity(e.v, c.cv0) DESC, c.ccid) AS rn
-          FROM e, c WHERE e.vec_id < 10) WHERE rn <= 4),
-      cbv AS (SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cid, v
-              FROM e ORDER BY vec_id LIMIT 16),
-      subs AS (SELECT unnest(range(8)) AS j),
-      cb AS (SELECT subs.j, cbv.cid, list_slice(cbv.v, subs.j*8 + 1, subs.j*8 + 8) AS cv
-             FROM cbv, subs),
-      dist AS (SELECT e.vec_id, cb.j, cb.cid,
-        CAST(round(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-          list_transform(range(8), d ->
-            (e.v[cb.j*8 + d + 1] - cb.cv[d + 1]) * (e.v[cb.j*8 + d + 1] - cb.cv[d + 1]))),
-          (a, b) -> a + b) * 1e6) AS BIGINT) AS d_e6
-        FROM e, cb),
-      enc AS (SELECT vec_id, j, cid FROM (
-        SELECT vec_id, j, cid,
-               row_number() OVER (PARTITION BY vec_id, j ORDER BY d_e6, cid) AS rn
-        FROM dist) WHERE rn = 1),
-      adc AS (SELECT qa.qid, ea.vec_id,
-        CAST(SUM(CAST(round(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-          list_transform(range(8), d ->
-            (qa.qv[enc.j*8 + d + 1] - cb.cv[d + 1]) * (qa.qv[enc.j*8 + d + 1] - cb.cv[d + 1]))),
-          (a, b) -> a + b) * 1e6) AS BIGINT)) AS BIGINT) AS adc_e6
-        FROM ea JOIN qa ON ea.cell = qa.cell
-                JOIN enc ON enc.vec_id = ea.vec_id
-                JOIN cb ON cb.j = enc.j AND cb.cid = enc.cid
-        WHERE ea.vec_id != qa.qid
-        GROUP BY qa.qid, ea.vec_id)
-      SELECT query_id, rank, neighbor_id, adc_e6 FROM (
-        SELECT qid AS query_id, vec_id AS neighbor_id, adc_e6,
-               row_number() OVER (PARTITION BY qid ORDER BY adc_e6, vec_id) AS rank
-        FROM adc)
-      WHERE rank <= 5 ORDER BY query_id, rank""") { (s, _) =>
-      val emb = s.table("embeddings")
-        .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("vec"))
-      val queries = emb.where(col("vec_id") < 10)
-        .select(col("vec_id").as("qid"), col("vec").as("qvec"))
-      Embeddings.ivfPqTopK(emb, "vec", "vec_id", queries, "qvec", "qid",
+      ${ivfCells("ccid", "cv0", "ccid AS cell")},
+      ${ivfProbes("ccid", "cv0", "ccid AS cell")},
+      ${pqCodes()},
+      ${ivfPqAdc("ea", "qa", "qv")}
+      $pqAdcRanked""") { (s, _) =>
+      val emb = vectors(s)
+      Embeddings.ivfPqTopK(emb, "vec", "vec_id", vectorQueries(emb), "qvec", "qid",
           k = 5, nlist = 16, nprobe = 4, m = 8, ksub = 16)
         .orderBy("query_id", "rank")
     },
 
     // residual IVFPQ (the textbook encoding): codes quantize v − cell
-    // centroid instead of v, queries rank in residual space — LIVE
-    // oracle since r11: the residual subtraction is one list_transform
-    // layered over the q_ann_ivfpq replay (codebooks seed from the
-    // residual frame, so the whole encode/ADC pipeline shifts with it)
-    // residual IVFPQ: identical skeleton to q_ann_ivfpq with every vector
-    // replaced by (v − centroid-of-its-cell); codebooks seed from the
-    // residual frame (first ksub residual vectors by vec_id), the query
-    // residual is taken against EACH probed cell's centroid
-    Gate("q_ann_ivfpq_residual", """
+    // centroid instead of v, queries rank in residual space. LIVE oracle
+    // since r11: the q_ann_ivfpq skeleton with every vector replaced by
+    // (v − centroid of its cell), one list_transform; codebooks seed
+    // from the residual frame (the first ksub residual vectors by
+    // vec_id), and the query residual is taken against EACH probed
+    // cell's centroid
+    Gate("q_ann_ivfpq_residual", s"""
       WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-      c AS (SELECT vec_id AS ccid, v AS cv0 FROM e ORDER BY vec_id LIMIT 16),
-      ea AS (
-        SELECT vec_id, v, ccid AS cell FROM (
-          SELECT e.vec_id, e.v, c.ccid,
-                 row_number() OVER (PARTITION BY e.vec_id
-                   ORDER BY list_cosine_similarity(e.v, c.cv0) DESC, c.ccid) AS rn
-          FROM e, c) WHERE rn = 1),
+      ${ivfCells("ccid", "cv0", "ccid AS cell")},
       er AS (SELECT ea.vec_id, ea.cell,
                list_transform(range(64), i -> ea.v[i + 1] - c.cv0[i + 1]) AS rv
              FROM ea JOIN c ON c.ccid = ea.cell),
-      qa AS (
-        SELECT vec_id AS qid, v AS qv, ccid AS cell FROM (
-          SELECT e.vec_id, e.v, c.ccid,
-                 row_number() OVER (PARTITION BY e.vec_id
-                   ORDER BY list_cosine_similarity(e.v, c.cv0) DESC, c.ccid) AS rn
-          FROM e, c WHERE e.vec_id < 10) WHERE rn <= 4),
+      ${ivfProbes("ccid", "cv0", "ccid AS cell")},
       qr AS (SELECT qa.qid, qa.cell,
                list_transform(range(64), i -> qa.qv[i + 1] - c.cv0[i + 1]) AS qrv
              FROM qa JOIN c ON c.ccid = qa.cell),
-      cbv AS (SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cid, rv AS v
-              FROM er ORDER BY vec_id LIMIT 16),
-      subs AS (SELECT unnest(range(8)) AS j),
-      cb AS (SELECT subs.j, cbv.cid, list_slice(cbv.v, subs.j*8 + 1, subs.j*8 + 8) AS cv
-             FROM cbv, subs),
-      dist AS (SELECT er.vec_id, cb.j, cb.cid,
-        CAST(round(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-          list_transform(range(8), d ->
-            (er.rv[cb.j*8 + d + 1] - cb.cv[d + 1]) * (er.rv[cb.j*8 + d + 1] - cb.cv[d + 1]))),
-          (a, b) -> a + b) * 1e6) AS BIGINT) AS d_e6
-        FROM er, cb),
-      enc AS (SELECT vec_id, j, cid FROM (
-        SELECT vec_id, j, cid,
-               row_number() OVER (PARTITION BY vec_id, j ORDER BY d_e6, cid) AS rn
-        FROM dist) WHERE rn = 1),
-      adc AS (SELECT qr.qid, er.vec_id,
-        CAST(SUM(CAST(round(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-          list_transform(range(8), d ->
-            (qr.qrv[enc.j*8 + d + 1] - cb.cv[d + 1]) * (qr.qrv[enc.j*8 + d + 1] - cb.cv[d + 1]))),
-          (a, b) -> a + b) * 1e6) AS BIGINT)) AS BIGINT) AS adc_e6
-        FROM er JOIN qr ON er.cell = qr.cell
-                JOIN enc ON enc.vec_id = er.vec_id
-                JOIN cb ON cb.j = enc.j AND cb.cid = enc.cid
-        WHERE er.vec_id != qr.qid
-        GROUP BY qr.qid, er.vec_id)
-      SELECT query_id, rank, neighbor_id, adc_e6 FROM (
-        SELECT qid AS query_id, vec_id AS neighbor_id, adc_e6,
-               row_number() OVER (PARTITION BY qid ORDER BY adc_e6, vec_id) AS rank
-        FROM adc)
-      WHERE rank <= 5 ORDER BY query_id, rank""") { (s, _) =>
-      val emb = s.table("embeddings")
-        .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("vec"))
-      val queries = emb.where(col("vec_id") < 10)
-        .select(col("vec_id").as("qid"), col("vec").as("qvec"))
-      Embeddings.ivfPqTopK(emb, "vec", "vec_id", queries, "qvec", "qid",
+      ${pqCodes("", "er", "rv")},
+      ${ivfPqAdc("er", "qr", "qrv")}
+      $pqAdcRanked""") { (s, _) =>
+      val emb = vectors(s)
+      Embeddings.ivfPqTopK(emb, "vec", "vec_id", vectorQueries(emb), "qvec", "qid",
           k = 5, nlist = 16, nprobe = 4, m = 8, ksub = 16, residual = true)
         .orderBy("query_id", "rank")
     },
 
     // multi-probe LSH recall curve vs the exact baseline: Hamming-ball
     // query-side probing recovers the recall a single coarse bucket
-    // loses (12% -> 44% -> 84% at prefixBits=4) — LIVE oracle since
-    // r10: the counter-based splitmix planes replay in SQL
-    // LIVE (was golden until r10): the full multi-probe recall curve —
-    // splitmix buckets (lshBucketCte), exact baseline, Hamming-ball
-    // probe masks (bit_count(m) <= p over prefixBits), per-probe top-5,
-    // and the recallReport integer rollup, all replayed
+    // loses (12% -> 44% -> 84% at prefixBits=4). LIVE oracle since r10:
+    // splitmix buckets (lshBucketCte), the exact baseline, Hamming-ball
+    // probe masks (bit_count(m) <= p over prefixBits), per-probe top-5
+    // and the recallReport integer rollup are all replayed
     Gate("q_ann_lsh_probe", s"""
-      WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-      ${lshBucketCte(4)},
-      c AS (SELECT e.vec_id, e.v, bkt.b,
-        sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-          list_transform(range((SELECT dim FROM d)), x -> e.v[x + 1] * e.v[x + 1])),
-          (a, b) -> a + b)) AS nrm
-        FROM e JOIN bkt USING (vec_id)),
-      q AS (SELECT vec_id AS qid, v AS qv, b, nrm AS qnrm FROM c WHERE vec_id < 10),
-      exact AS (SELECT query_id, neighbor_id FROM (
-        SELECT q.qid AS query_id, c.vec_id AS neighbor_id,
-               row_number() OVER (PARTITION BY q.qid
-                 ORDER BY list_reduce(list_prepend(CAST(0 AS DOUBLE),
-                     list_transform(range((SELECT dim FROM d)),
-                       x -> c.v[x + 1] * q.qv[x + 1])),
-                     (p, s) -> p + s) / (c.nrm * q.qnrm) DESC, c.vec_id) AS rank
-        FROM c, q WHERE c.vec_id != q.qid) t WHERE rank <= 5),
+      $lshVectors,
+      $lshExact,
       probes AS (SELECT p.p, m.m FROM (SELECT unnest(range(3)) AS p) p,
                  (SELECT unnest(range(16)) AS m) m WHERE bit_count(m) <= p.p),
-      cand AS (SELECT pr.p, q.qid, c.vec_id,
-               list_reduce(list_prepend(CAST(0 AS DOUBLE),
-                 list_transform(range((SELECT dim FROM d)),
-                   x -> c.v[x + 1] * q.qv[x + 1])),
-                 (p2, s2) -> p2 + s2) / (c.nrm * q.qnrm) AS sim
-        FROM q JOIN probes pr ON true
-             JOIN c ON c.b = xor(q.b::UBIGINT, pr.m::UBIGINT)::BIGINT
-        WHERE c.vec_id != q.qid),
+      ${lshProbeCand("pr.p, ")},
       approx AS (SELECT p, query_id, neighbor_id FROM (
         SELECT p, qid AS query_id, vec_id AS neighbor_id,
                row_number() OVER (PARTITION BY p, qid ORDER BY sim DESC, vec_id) AS rank
@@ -684,10 +627,8 @@ object SearchGates {
              CAST(MIN(ppm) AS BIGINT) AS min_recall_ppm,
              CAST(SUM(CASE WHEN hits = ex_cnt THEN 1 ELSE 0 END) AS BIGINT) AS perfect_queries
       FROM r GROUP BY p ORDER BY probe""") { (s, _) =>
-      val emb = s.table("embeddings")
-        .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("vec"))
-      val queries = emb.where(col("vec_id") < 10)
-        .select(col("vec_id").as("qid"), col("vec").as("qvec"))
+      val emb = vectors(s)
+      val queries = vectorQueries(emb)
       val exact = Embeddings.bruteForceTopK(emb, "vec", "vec_id",
         queries, "qvec", "qid", 5)
       (0 to 2).map { p =>
@@ -702,52 +643,15 @@ object SearchGates {
     },
 
     // recall@5 of the IVF path vs the exact baseline — the eval that
-    // justifies an ANN configuration; every stage deterministic, both
-    // pipelines + the overlap count replayed live
-    // recall@5: both pipelines (exact window ranking; IVF cell routing +
-    // in-cell ranking) replayed, per-query overlap counted, integer
-    // ppm recall rolled up exactly as the operator computes it
-    Gate("q_ann_recall", """
-      WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-      exact AS (SELECT query_id, neighbor_id FROM (
-        SELECT q.vec_id AS query_id, e2.vec_id AS neighbor_id,
-               row_number() OVER (PARTITION BY q.vec_id
-                 ORDER BY list_cosine_similarity(e2.v, q.v) DESC, e2.vec_id) AS rank
-        FROM e e2, (SELECT * FROM e WHERE vec_id < 10) q
-        WHERE e2.vec_id != q.vec_id) WHERE rank <= 5),
-      c AS (SELECT vec_id AS cid, v AS cv FROM e ORDER BY vec_id LIMIT 16),
-      ea AS (SELECT vec_id, v, cid FROM (
-        SELECT e.vec_id, e.v, c.cid,
-               row_number() OVER (PARTITION BY e.vec_id
-                 ORDER BY list_cosine_similarity(e.v, c.cv) DESC, c.cid) AS rn
-        FROM e, c) WHERE rn = 1),
-      qa AS (SELECT vec_id AS qid, v AS qv, cid FROM (
-        SELECT e.vec_id, e.v, c.cid,
-               row_number() OVER (PARTITION BY e.vec_id
-                 ORDER BY list_cosine_similarity(e.v, c.cv) DESC, c.cid) AS rn
-        FROM e, c WHERE e.vec_id < 10) WHERE rn <= 4),
-      approx AS (SELECT query_id, neighbor_id FROM (
-        SELECT qa.qid AS query_id, ea.vec_id AS neighbor_id,
-               row_number() OVER (PARTITION BY qa.qid
-                 ORDER BY list_cosine_similarity(ea.v, qa.qv) DESC, ea.vec_id) AS rank
-        FROM ea JOIN qa ON ea.cid = qa.cid
-        WHERE ea.vec_id != qa.qid) WHERE rank <= 5),
-      pq AS (SELECT exact.query_id,
-               CAST(COUNT(*) AS BIGINT) AS ex,
-               CAST(SUM(CASE WHEN approx.neighbor_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS hits
-             FROM exact LEFT JOIN approx
-               ON approx.query_id = exact.query_id AND approx.neighbor_id = exact.neighbor_id
-             GROUP BY exact.query_id),
-      pr AS (SELECT query_id, ex, hits, hits * 1000000 // ex AS recall_ppm FROM pq)
-      SELECT CAST(COUNT(*) AS BIGINT) AS queries,
-             CAST(SUM(recall_ppm) // COUNT(*) AS BIGINT) AS mean_recall_ppm,
-             CAST(MIN(recall_ppm) AS BIGINT) AS min_recall_ppm,
-             CAST(SUM(CASE WHEN hits = ex THEN 1 ELSE 0 END) AS BIGINT) AS perfect_queries
-      FROM pr""") { (s, _) =>
-      val emb = s.table("embeddings")
-        .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("vec"))
-      val queries = emb.where(col("vec_id") < 10)
-        .select(col("vec_id").as("qid"), col("vec").as("qvec"))
+    // justifies an ANN configuration. Every stage is deterministic: both
+    // pipelines (exact window ranking; IVF cell routing + in-cell
+    // ranking) are replayed live, the per-query overlap counted and the
+    // integer ppm recall rolled up exactly as the operator computes it
+    Gate("q_ann_recall", s"""
+      $ivfRecallRanks,
+      ${recallRollup(None)}""") { (s, _) =>
+      val emb = vectors(s)
+      val queries = vectorQueries(emb)
       Embeddings.recallReport(
         Embeddings.ivfTopK(emb, "vec", "vec_id", queries, "qvec", "qid", 5,
           nlist = 16, nprobe = 4),
@@ -755,37 +659,16 @@ object SearchGates {
     },
 
     // LSH multi-probe at its pinned config (prefixBits=4, probe radius
-    // 2): floor 0.80 under the 0.84/0.90/0.92 measured across SFs.
-    // recall-floor gates: the oracle certifies the exact recall rollup
-    // (and the pinned floor literal); the floor ASSERTION itself lives
-    // Spark-side in recallFloor's require — a breach turns the gate red
-    // before any output is written
+    // 2): floor 0.80 under the 0.84/0.90/0.92 measured across SFs. In
+    // every recall-floor gate the oracle certifies the exact recall
+    // rollup (and the pinned floor literal); the floor ASSERTION itself
+    // lives Spark-side in recallFloor's require — a breach turns the gate
+    // red before any output is written
     Gate("q_recall_floor_lsh", s"""
-      WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-      ${lshBucketCte(4)},
-      c AS (SELECT e.vec_id, e.v, bkt.b,
-        sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-          list_transform(range((SELECT dim FROM d)), x -> e.v[x + 1] * e.v[x + 1])),
-          (a, b) -> a + b)) AS nrm
-        FROM e JOIN bkt USING (vec_id)),
-      q AS (SELECT vec_id AS qid, v AS qv, b, nrm AS qnrm FROM c WHERE vec_id < 10),
-      exact AS (SELECT query_id, neighbor_id FROM (
-        SELECT q.qid AS query_id, c.vec_id AS neighbor_id,
-               row_number() OVER (PARTITION BY q.qid
-                 ORDER BY list_reduce(list_prepend(CAST(0 AS DOUBLE),
-                     list_transform(range((SELECT dim FROM d)),
-                       x -> c.v[x + 1] * q.qv[x + 1])),
-                     (p, s) -> p + s) / (c.nrm * q.qnrm) DESC, c.vec_id) AS rank
-        FROM c, q WHERE c.vec_id != q.qid) t WHERE rank <= 5),
+      $lshVectors,
+      $lshExact,
       probes AS (SELECT m FROM (SELECT unnest(range(16)) AS m) WHERE bit_count(m) <= 2),
-      cand AS (SELECT q.qid, c.vec_id,
-               list_reduce(list_prepend(CAST(0 AS DOUBLE),
-                 list_transform(range((SELECT dim FROM d)),
-                   x -> c.v[x + 1] * q.qv[x + 1])),
-                 (p2, s2) -> p2 + s2) / (c.nrm * q.qnrm) AS sim
-        FROM q JOIN probes pr ON true
-             JOIN c ON c.b = xor(q.b::UBIGINT, pr.m::UBIGINT)::BIGINT
-        WHERE c.vec_id != q.qid),
+      ${lshProbeCand("")},
       approx AS (SELECT query_id, neighbor_id FROM (
         SELECT qid AS query_id, vec_id AS neighbor_id,
                row_number() OVER (PARTITION BY qid ORDER BY sim DESC, vec_id) AS rank
@@ -804,10 +687,8 @@ object SearchGates {
              CAST(SUM(CASE WHEN hits = ex_cnt THEN 1 ELSE 0 END) AS BIGINT) AS perfect_queries,
              CAST(800000 AS BIGINT) AS floor_ppm
       FROM r""") { (s, _) =>
-      val emb = s.table("embeddings")
-        .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("vec"))
-      val queries = emb.where(col("vec_id") < 10)
-        .select(col("vec_id").as("qid"), col("vec").as("qvec"))
+      val emb = vectors(s)
+      val queries = vectorQueries(emb)
       recallFloor(
         Embeddings.lshTopK(emb, "vec", "vec_id", queries, "qvec", "qid",
           5, prefixBits = 4, multiProbe = 2),
@@ -817,48 +698,11 @@ object SearchGates {
 
     // IVF at its pinned config (nlist=16, nprobe=4): floor 0.90 under
     // the 0.92/1.00/1.00 measured across SFs.
-    Gate("q_recall_floor_ivf", """
-      WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-      exact AS (SELECT query_id, neighbor_id FROM (
-        SELECT q.vec_id AS query_id, e2.vec_id AS neighbor_id,
-               row_number() OVER (PARTITION BY q.vec_id
-                 ORDER BY list_cosine_similarity(e2.v, q.v) DESC, e2.vec_id) AS rank
-        FROM e e2, (SELECT * FROM e WHERE vec_id < 10) q
-        WHERE e2.vec_id != q.vec_id) WHERE rank <= 5),
-      c AS (SELECT vec_id AS cid, v AS cv FROM e ORDER BY vec_id LIMIT 16),
-      ea AS (SELECT vec_id, v, cid FROM (
-        SELECT e.vec_id, e.v, c.cid,
-               row_number() OVER (PARTITION BY e.vec_id
-                 ORDER BY list_cosine_similarity(e.v, c.cv) DESC, c.cid) AS rn
-        FROM e, c) WHERE rn = 1),
-      qa AS (SELECT vec_id AS qid, v AS qv, cid FROM (
-        SELECT e.vec_id, e.v, c.cid,
-               row_number() OVER (PARTITION BY e.vec_id
-                 ORDER BY list_cosine_similarity(e.v, c.cv) DESC, c.cid) AS rn
-        FROM e, c WHERE e.vec_id < 10) WHERE rn <= 4),
-      approx AS (SELECT query_id, neighbor_id FROM (
-        SELECT qa.qid AS query_id, ea.vec_id AS neighbor_id,
-               row_number() OVER (PARTITION BY qa.qid
-                 ORDER BY list_cosine_similarity(ea.v, qa.qv) DESC, ea.vec_id) AS rank
-        FROM ea JOIN qa ON ea.cid = qa.cid
-        WHERE ea.vec_id != qa.qid) WHERE rank <= 5),
-      pq AS (SELECT exact.query_id,
-               CAST(COUNT(*) AS BIGINT) AS ex,
-               CAST(SUM(CASE WHEN approx.neighbor_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS hits
-             FROM exact LEFT JOIN approx
-               ON approx.query_id = exact.query_id AND approx.neighbor_id = exact.neighbor_id
-             GROUP BY exact.query_id),
-      pr AS (SELECT query_id, ex, hits, hits * 1000000 // ex AS recall_ppm FROM pq)
-      SELECT CAST(COUNT(*) AS BIGINT) AS queries,
-             CAST(SUM(recall_ppm) // COUNT(*) AS BIGINT) AS mean_recall_ppm,
-             CAST(MIN(recall_ppm) AS BIGINT) AS min_recall_ppm,
-             CAST(SUM(CASE WHEN hits = ex THEN 1 ELSE 0 END) AS BIGINT) AS perfect_queries,
-             CAST(900000 AS BIGINT) AS floor_ppm
-      FROM pr""") { (s, _) =>
-      val emb = s.table("embeddings")
-        .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("vec"))
-      val queries = emb.where(col("vec_id") < 10)
-        .select(col("vec_id").as("qid"), col("vec").as("qvec"))
+    Gate("q_recall_floor_ivf", s"""
+      $ivfRecallRanks,
+      ${recallRollup(Some(900000L))}""") { (s, _) =>
+      val emb = vectors(s)
+      val queries = vectorQueries(emb)
       recallFloor(
         Embeddings.ivfTopK(emb, "vec", "vec_id", queries, "qvec", "qid", 5,
           nlist = 16, nprobe = 4),
@@ -873,45 +717,22 @@ object SearchGates {
     // exactly the production guidance this gate should encode: size
     // the prescreen WITH the corpus. The floor stays a backstop, not a
     // tight bar; the tight bars live on the lsh/ivf/pq gates.
-    Gate("q_recall_floor_hamming", """
+    Gate("q_recall_floor_hamming", s"""
       WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
       q AS (SELECT * FROM e WHERE vec_id < 10),
-      exact AS (SELECT query_id, neighbor_id FROM (
-        SELECT q.vec_id AS query_id, e2.vec_id AS neighbor_id,
-               row_number() OVER (PARTITION BY q.vec_id
-                 ORDER BY list_cosine_similarity(e2.v, q.v) DESC, e2.vec_id) AS rank
-        FROM e e2, q WHERE e2.vec_id != q.vec_id) WHERE rank <= 5),
-      ham AS (
-        SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id,
-               len(list_filter(range(len(e.v)), j -> (e.v[j+1] > 0) <> (q.v[j+1] > 0))) AS hamming
-        FROM e, q WHERE e.vec_id != q.vec_id),
+      ${exactCosine("vec_id", "v")},
+      $hammingDist,
       budget AS (SELECT greatest(20, COUNT(*) // 1000) AS b FROM e),
-      cand AS (
-        SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY hamming, neighbor_id) AS hr
-        FROM ham),
+      $hammingCand,
       approx AS (SELECT query_id, neighbor_id FROM (
         SELECT c.query_id, c.neighbor_id,
                row_number() OVER (PARTITION BY c.query_id
                  ORDER BY list_cosine_similarity(e2.v, q2.v) DESC, c.neighbor_id) AS rank
         FROM cand c JOIN e e2 ON e2.vec_id = c.neighbor_id JOIN q q2 ON q2.vec_id = c.query_id
         WHERE c.hr <= (SELECT b FROM budget)) WHERE rank <= 5),
-      pq AS (SELECT exact.query_id,
-               CAST(COUNT(*) AS BIGINT) AS ex,
-               CAST(SUM(CASE WHEN approx.neighbor_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS hits
-             FROM exact LEFT JOIN approx
-               ON approx.query_id = exact.query_id AND approx.neighbor_id = exact.neighbor_id
-             GROUP BY exact.query_id),
-      pr AS (SELECT query_id, ex, hits, hits * 1000000 // ex AS recall_ppm FROM pq)
-      SELECT CAST(COUNT(*) AS BIGINT) AS queries,
-             CAST(SUM(recall_ppm) // COUNT(*) AS BIGINT) AS mean_recall_ppm,
-             CAST(MIN(recall_ppm) AS BIGINT) AS min_recall_ppm,
-             CAST(SUM(CASE WHEN hits = ex THEN 1 ELSE 0 END) AS BIGINT) AS perfect_queries,
-             CAST(120000 AS BIGINT) AS floor_ppm
-      FROM pr""") { (s, _) =>
-      val emb = s.table("embeddings")
-        .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("vec"))
-      val queries = emb.where(col("vec_id") < 10)
-        .select(col("vec_id").as("qid"), col("vec").as("qvec"))
+      ${recallRollup(Some(120000L))}""") { (s, _) =>
+      val emb = vectors(s)
+      val queries = vectorQueries(emb)
       val budget = math.max(20L, emb.count() / 1000L).toInt
       recallFloor(
         Embeddings.hammingTopK(emb, "vec", "vec_id", queries, "qvec", "qid",
@@ -936,78 +757,20 @@ object SearchGates {
     // and replica-0 head queries at a cd fixture mismatch a mixture-
     // trained codebook — SCALE.md round-12), so recall is reported as
     // oracle-certified telemetry rather than gated. Two rows out
-    // (seed, trained) with exact recall AND exact distortion — a
-    // regression in either chain flips the DuckDB hash red.
-    // seed AND Lloyd-trained PQ recall from one replay (the trained chain
-    // already materializes the seed encode enc0/cb0): per-config exact-vs-
-    // ADC-top-5 recall rollups, labeled rows — the Spark-side require
-    // asserts trained >= seed on these exact numbers
-    Gate("q_recall_floor_pq", """
+    // (seed, trained) with exact recall AND exact distortion, both from
+    // one replay (the trained chain already materializes the seed encode
+    // enc0/cb0) — a regression in either chain flips the DuckDB hash red.
+    Gate("q_recall_floor_pq", s"""
       WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
       q AS (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id < 10),
-      exact AS (SELECT query_id, neighbor_id FROM (
-        SELECT q.qid AS query_id, e2.vec_id AS neighbor_id,
-               row_number() OVER (PARTITION BY q.qid
-                 ORDER BY list_cosine_similarity(e2.v, q.qv) DESC, e2.vec_id) AS rank
-        FROM e e2, q WHERE e2.vec_id != q.qid) WHERE rank <= 5),
-      cbv AS (SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cid, v
-              FROM e ORDER BY vec_id LIMIT 16),
-      subs AS (SELECT unnest(range(8)) AS j),
-      cb0 AS (SELECT subs.j, cbv.cid, list_slice(cbv.v, subs.j*8 + 1, subs.j*8 + 8) AS cv
-              FROM cbv, subs),
-      dist0 AS (SELECT e.vec_id, cb0.j, cb0.cid,
-        CAST(round(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-          list_transform(range(8), d ->
-            (e.v[cb0.j*8 + d + 1] - cb0.cv[d + 1]) * (e.v[cb0.j*8 + d + 1] - cb0.cv[d + 1]))),
-          (a, b) -> a + b) * 1e6) AS BIGINT) AS d_e6
-        FROM e, cb0),
-      enc0 AS (SELECT vec_id, j, cid FROM (
-        SELECT vec_id, j, cid,
-               row_number() OVER (PARTITION BY vec_id, j ORDER BY d_e6, cid) AS rn
-        FROM dist0) WHERE rn = 1),
-      adc0 AS (SELECT q.qid, enc0.vec_id,
-        CAST(SUM(CAST(round(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-          list_transform(range(8), d ->
-            (q.qv[enc0.j*8 + d + 1] - cb0.cv[d + 1]) * (q.qv[enc0.j*8 + d + 1] - cb0.cv[d + 1]))),
-          (a, b) -> a + b) * 1e6) AS BIGINT)) AS BIGINT) AS adc_e6
-        FROM q, enc0 JOIN cb0 ON cb0.j = enc0.j AND cb0.cid = enc0.cid
-        WHERE enc0.vec_id != q.qid
-        GROUP BY q.qid, enc0.vec_id),
-      approx0 AS (SELECT query_id, neighbor_id FROM (
-        SELECT qid AS query_id, vec_id AS neighbor_id,
-               row_number() OVER (PARTITION BY qid ORDER BY adc_e6, vec_id) AS rank
-        FROM adc0) WHERE rank <= 5),
-      upd AS (SELECT enc0.j, enc0.cid, p.p,
-        CAST(SUM(CAST(round(e.v[enc0.j*8 + p.p + 1] * 1e6) AS BIGINT)) AS DOUBLE)
-          / (COUNT(*) * 1e6) AS val
-        FROM enc0 JOIN e ON e.vec_id = enc0.vec_id,
-             (SELECT unnest(range(8)) AS p) p
-        GROUP BY enc0.j, enc0.cid, p.p),
-      cbu AS (SELECT j, cid, list(val ORDER BY p) AS cv FROM upd GROUP BY j, cid),
-      cb AS (SELECT cb0.j, cb0.cid, coalesce(cbu.cv, cb0.cv) AS cv
-             FROM cb0 LEFT JOIN cbu ON cbu.j = cb0.j AND cbu.cid = cb0.cid),
-      dist AS (SELECT e.vec_id, cb.j, cb.cid,
-        CAST(round(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-          list_transform(range(8), d ->
-            (e.v[cb.j*8 + d + 1] - cb.cv[d + 1]) * (e.v[cb.j*8 + d + 1] - cb.cv[d + 1]))),
-          (a, b) -> a + b) * 1e6) AS BIGINT) AS d_e6
-        FROM e, cb),
-      enc AS (SELECT vec_id, j, cid FROM (
-        SELECT vec_id, j, cid,
-               row_number() OVER (PARTITION BY vec_id, j ORDER BY d_e6, cid) AS rn
-        FROM dist) WHERE rn = 1),
-      adc AS (SELECT q.qid, enc.vec_id,
-        CAST(SUM(CAST(round(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-          list_transform(range(8), d ->
-            (q.qv[enc.j*8 + d + 1] - cb.cv[d + 1]) * (q.qv[enc.j*8 + d + 1] - cb.cv[d + 1]))),
-          (a, b) -> a + b) * 1e6) AS BIGINT)) AS BIGINT) AS adc_e6
-        FROM q, enc JOIN cb ON cb.j = enc.j AND cb.cid = enc.cid
-        WHERE enc.vec_id != q.qid
-        GROUP BY q.qid, enc.vec_id),
-      approx1 AS (SELECT query_id, neighbor_id FROM (
-        SELECT qid AS query_id, vec_id AS neighbor_id,
-               row_number() OVER (PARTITION BY qid ORDER BY adc_e6, vec_id) AS rank
-        FROM adc) WHERE rank <= 5),
+      ${exactCosine("qid", "qv")},
+      ${pqCodes("0")},
+      ${pqAdc("0")},
+      ${pqApprox("approx0", "adc0")},
+      $pqLloyd,
+      ${pqEncode()},
+      ${pqAdc("")},
+      ${pqApprox("approx1", "adc")},
       roll AS (
         SELECT 'pq_seed' AS config, ex.query_id,
                CAST(COUNT(*) AS BIGINT) AS ex,
@@ -1036,10 +799,8 @@ object SearchGates {
              CAST(MIN(sdist.distortion_e6) AS BIGINT) AS distortion_e6
       FROM pr JOIN sdist ON sdist.config = pr.config
       GROUP BY pr.config ORDER BY pr.config""") { (s, _) =>
-      val emb = s.table("embeddings")
-        .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("vec"))
-      val queries = emb.where(col("vec_id") < 10)
-        .select(col("vec_id").as("qid"), col("vec").as("qvec"))
+      val emb = vectors(s)
+      val queries = vectorQueries(emb)
       val exact = Embeddings.bruteForceTopK(emb, "vec", "vec_id",
         queries, "qvec", "qid", 5)
       val cb0 = Embeddings.pqCodebooks(emb, "vec", "vec_id", m = 8, ksub = 16)
@@ -1069,21 +830,16 @@ object SearchGates {
     },
 
     // two-stage binary ANN: Hamming prescreen (top-20 by packed-signature
-    // popcount) then exact cosine rerank to top-5 — both stages replayed
-    // verbatim by the oracle from float sign tests
-    // two-stage replay: hamming = count of sign disagreements (== popcount
-    // of xor of the packed words by construction), top-20 candidates by
-    // (hamming, id), exact-cosine top-5 among them
-    Gate("q_ann_hamming", """
+    // popcount) then exact cosine rerank to top-5. The oracle replays
+    // both stages from float sign tests: hamming = the count of sign
+    // disagreements (== popcount of the xor of the packed words by
+    // construction), top-20 candidates by (hamming, id), exact-cosine
+    // top-5 among them
+    Gate("q_ann_hamming", s"""
       WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
       q AS (SELECT * FROM e WHERE vec_id < 10),
-      ham AS (
-        SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id,
-               len(list_filter(range(len(e.v)), j -> (e.v[j+1] > 0) <> (q.v[j+1] > 0))) AS hamming
-        FROM e, q WHERE e.vec_id != q.vec_id),
-      cand AS (
-        SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY hamming, neighbor_id) AS hr
-        FROM ham),
+      $hammingDist,
+      $hammingCand,
       ranked AS (
         SELECT c.query_id, c.neighbor_id,
                row_number() OVER (PARTITION BY c.query_id
@@ -1091,11 +847,8 @@ object SearchGates {
         FROM cand c JOIN e e2 ON e2.vec_id = c.neighbor_id JOIN q q2 ON q2.vec_id = c.query_id
         WHERE c.hr <= 20)
       SELECT query_id, rank, neighbor_id FROM ranked WHERE rank <= 5 ORDER BY query_id, rank""") { (s, _) =>
-      val emb = s.table("embeddings")
-        .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("vec"))
-      val queries = emb.where(col("vec_id") < 10)
-        .select(col("vec_id").as("qid"), col("vec").as("qvec"))
-      Embeddings.hammingTopK(emb, "vec", "vec_id", queries, "qvec", "qid",
+      val emb = vectors(s)
+      Embeddings.hammingTopK(emb, "vec", "vec_id", vectorQueries(emb), "qvec", "qid",
           k = 5, candidates = 20)
         .select(col("query_id"), col("rank"), col("neighbor_id"))
         .orderBy("query_id", "rank")
@@ -1103,12 +856,11 @@ object SearchGates {
 
     // MMR diversity rerank over the exact-cosine top-20 candidates:
     // integer e6/ppm greedy (pure function of the data), replayed step
-    // for step by a DuckDB recursive CTE
-    // MMR greedy rerank replayed step for step: candidate cosines with the
-    // EXACT Spark arithmetic (sequential list_reduce dot, dot/(sqrt*sqrt))
-    // so the e6 floors agree bit-for-bit, then a recursive CTE advances
-    // every query one rank per iteration — LATERAL argmax over the
-    // not-yet-chosen candidates, penalty = MAX pair sim to the chosen list
+    // for step. The candidate cosines use the EXACT Spark arithmetic
+    // (sequential list_reduce dot, dot/(sqrt*sqrt)) so the e6 floors
+    // agree bit-for-bit; a recursive CTE then advances every query one
+    // rank per iteration — LATERAL argmax over the not-yet-chosen
+    // candidates, penalty = MAX pair sim to the chosen list
     Gate("q_mmr_rerank", """
       WITH RECURSIVE
       e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
@@ -1147,26 +899,23 @@ object SearchGates {
         WHERE s.mmr_rank < 5)
       SELECT qid AS query_id, CAST(mmr_rank AS INT) AS mmr_rank, id, score AS mmr_score_e12
       FROM sel ORDER BY query_id, mmr_rank""") { (s, _) =>
-      val emb = s.table("embeddings")
-        .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("vec"))
-      val queries = emb.where(col("vec_id") < 5)
-        .select(col("vec_id").as("qid"), col("vec").as("qvec"))
-      val cand = Embeddings.bruteForceTopK(emb, "vec", "vec_id", queries, "qvec", "qid", 20)
+      val emb = vectors(s)
+      val cand = Embeddings.bruteForceTopK(emb, "vec", "vec_id", vectorQueries(emb, 5),
+          "qvec", "qid", 20)
         .join(emb.select(col("vec_id").as("neighbor_id"), col("vec")), "neighbor_id")
       Embeddings.mmrRerank(cand, "query_id", "neighbor_id", "sim", "vec", k = 5)
         .orderBy("query_id", "mmr_rank")
     },
 
-    // the O(n^2) baseline requires the explicit opt-in flag — this gate
-    // IS the baseline measurement, so it opts in
-    // exact all-pairs cosine: both engines fold the dot product
-    // left-to-right over the same double-cast values, so counts agree
+    // exact all-pairs cosine, the O(n^2) baseline: the operator requires
+    // the explicit opt-in flag, and this gate IS the baseline measurement,
+    // so it opts in. Both engines fold the dot product left-to-right over
+    // the same double-cast values, so counts agree
     Gate("q_cosine_pairs", """
       SELECT CAST(COUNT(*) AS BIGINT) AS pairs
       FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
       WHERE list_cosine_similarity(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])) >= 0.5""") { (s, _) =>
-      val emb = s.table("embeddings")
-        .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("vec"))
+      val emb = vectors(s)
       Embeddings.cosineNearDuplicatesExact(emb, "vec", "vec_id", 0.5,
           allowBruteForce = true)
         .agg(count(lit(1)).cast("long").as("pairs"))
@@ -1178,8 +927,8 @@ object SearchGates {
     // the oracle replays the same integer rule), because a fixed
     // width's in-bucket verify grows quadratically with the corpus
     // (measured >21x/decade at sf100cd under prefixBits=4; the derived
-    // width bounds verify work at ~250·n pairs, linear)
-    // LIVE (was golden until r10): buckets replay via lshBucketCte; the
+    // width bounds verify work at ~250·n pairs, linear). LIVE oracle
+    // since r10: buckets replay via lshBucketCteDerived, and the
     // in-bucket sim is the operator's EXACT expression — sequential dot
     // fold / (norm_a · norm_b), norms each a sequential sumsq fold — so
     // the >= threshold test cannot ULP-flip between engines
@@ -1199,8 +948,7 @@ object SearchGates {
       SELECT CAST(COUNT(*) AS BIGINT) AS pairs, CAST(SUM(id1) AS BIGINT) AS id1_sum,
              CAST(SUM(id2) AS BIGINT) AS id2_sum
       FROM prs WHERE sim >= 0.3""") { (s, _) =>
-      val emb = s.table("embeddings")
-        .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("vec"))
+      val emb = vectors(s)
       Embeddings.cosineNearDuplicates(emb, "vec", "vec_id", 0.3)
         .agg(count(lit(1)).cast("long").as("pairs"),
           sum("id1").cast("long").as("id1_sum"),

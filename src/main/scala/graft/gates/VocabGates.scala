@@ -422,7 +422,7 @@ object VocabGates {
         .select(when(col("doc_id") % 17 === 0,
           col("l").substr(lit(1), length(col("l")) - lit(5)))
           .otherwise(col("l")).as("line"))
-      val tmp = java.nio.file.Files.createTempDirectory("graft_jsonl_").toString
+      val tmp = streaming.FileStreams.createTempDir("graft_jsonl_").toString
       lines.coalesce(4).write.mode("overwrite").text(tmp)
       val schema = org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("doc_id",
@@ -488,7 +488,7 @@ object VocabGates {
             concat(col("doc_id").cast("string"), lit(","), col("source")))
           .otherwise(concat(col("doc_id").cast("string"), lit(","), col("source"),
             lit(","), col("n_chars").cast("string"))).as("line"))
-      val tmp = java.nio.file.Files.createTempDirectory("graft_csv_").toString
+      val tmp = streaming.FileStreams.createTempDir("graft_csv_").toString
       lines.coalesce(4).write.mode("overwrite").text(tmp)
       val schema = org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("doc_id",

@@ -128,7 +128,7 @@ object Embeddings {
     *
     * Stage 1 streams the corpus once computing `word_hamming(sig, qsig)`
     * against the broadcast query signatures, and takes the `candidates`
-    * best per query with the bounded-heap [[graft.functions.TopKAgg]]
+    * best per query with the bounded-heap stage [[graft.functions.TopKAgg.rank]]
     * (`ord = -hamming`, payload = id, so ties break to the smaller id):
     * each task keeps at most `candidates` (hamming, id) pairs per query
     * through the partial phase, the exchange carries ≤ candidates ·
@@ -136,7 +136,8 @@ object Embeddings {
     * sorts a full per-query partition — a `row_number()` window here
     * would funnel ALL n corpus rows of a query into one task. Stage 2
     * joins the ≤ `candidates`·|queries| survivors BACK to the embeddings
-    * table for their float vectors and ranks by exact cosine. At 100 TB
+    * table for their float vectors and ranks by exact cosine through the
+    * same stage ([[rankTopKByQuery]]). At 100 TB
     * this is the memory-bound scale path: the prescreen touches 8 bytes
     * per dim-64 vector (a popcount per candidate, inside whole-stage
     * codegen) and the expensive float arithmetic is bounded by the
@@ -167,7 +168,6 @@ object Embeddings {
   def hammingTopK(embeddings: DataFrame, vecCol: String, idCol: String,
       queries: DataFrame, queryVecCol: String, queryIdCol: String,
       k: Int, candidates: Int = 0): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val c = if (candidates <= 0) derivedHammingBudget(k, embeddings.count())
             else candidates
     require(c >= k, s"candidates ($c) must be >= k ($k)")
@@ -178,32 +178,30 @@ object Embeddings {
     val keptRun = Telemetry.start(embeddings.sparkSession, "graft_hamming_kept")
     val embSig = embeddings.select(col(idCol), quantizeBinary(col(vecCol)).as("__sig"))
     val qrySig = queries.select(col(queryIdCol), quantizeBinary(col(queryVecCol)).as("__qsig"))
-    val cand = embSig.crossJoin(broadcast(qrySig))
+    val scanned = embSig.crossJoin(broadcast(qrySig))
       .where(col(idCol) =!= col(queryIdCol))
       .select(col(queryIdCol), col(idCol), wordHamming(col("__sig"), col("__qsig")).as("hamming"))
-      .groupBy(col(queryIdCol))
-      .agg(ColumnBridge.column(graft.functions.TopKAgg(
-        ColumnBridge.expression(lit(c)),
-        ColumnBridge.expression((-col("hamming")).cast("long")),
-        ColumnBridge.expression(col(idCol).cast("long"))).toAggregateExpression()).as("__tk"))
-      .select(col(queryIdCol), explode(col("__tk")).as("__e"))
-      .select(col(queryIdCol), col("__e.payload").cast(idType).as(idCol),
-        (-col("__e.ord")).cast("int").as("hamming"))
-      .where(Telemetry.record(candRun, col("hamming"), Long.MaxValue))
+    val cand = graft.functions.TopKAgg.rank(scanned, Seq(col(queryIdCol)), c,
+        (-col("hamming")).cast("long"), col(idCol).cast("long"))
+      .select(col(queryIdCol), col("payload").cast(idType).as(idCol),
+        (-col("ord")).cast("int").as("hamming"))
     // join-back pins the ≤ c·|queries| candidate set as the BROADCAST side:
     // the corpus scans once more (columns pruned to id + vector) probing a
     // tiny hash table — no shuffle, and the float vectors surface only for
     // rows that survived the prescreen
-    val wFin = Window.partitionBy(col(queryIdCol)).orderBy(col("sim").desc, col(idCol))
-    embeddings.select(col(idCol), col(vecCol))
-      .join(broadcast(cand), idCol)
-      .join(broadcast(queries.select(col(queryIdCol), col(queryVecCol))), queryIdCol)
-      .withColumn("sim", cosine(col(vecCol), col(queryVecCol)))
-      .withColumn("rank", row_number().over(wFin))
-      .where(col("rank") <= k)
+    val reranked = rankTopKByQuery(
+      embeddings.select(col(idCol), col(vecCol))
+        .join(broadcast(cand.where(Telemetry.record(candRun, col("hamming"), Long.MaxValue))), idCol)
+        .join(broadcast(queries.select(col(queryIdCol), col(queryVecCol))), queryIdCol)
+        .withColumn("sim", cosine(col(vecCol), col(queryVecCol))),
+      queryIdCol, idCol, k)
+    // the rerank keeps (sim, id) only: the kept rows' Hamming distances
+    // come back from the candidate rows (the same shuffle, reused)
+    reranked
+      .join(broadcast(cand.select(col(queryIdCol).as("query_id"),
+        col(idCol).as("neighbor_id"), col("hamming"))), Seq("query_id", "neighbor_id"))
       .where(Telemetry.record(keptRun, col("hamming"), floor(col("sim") * lit(1e6))))
-      .select(col(queryIdCol).as("query_id"), col("rank"),
-        col(idCol).as("neighbor_id"), col("sim"), col("hamming"))
+      .select(col("query_id"), col("rank"), col("neighbor_id"), col("sim"), col("hamming"))
   }
 
   /** The default [[cosineNearDuplicates]] bucket width for a corpus of
@@ -244,7 +242,7 @@ object Embeddings {
 
   /** Shared per-query ranking stage for the ANN paths: reduce a
     * `(queryIdCol, idCol, sim)` candidate relation to each query's top-k
-    * via the bounded-heap `topk_agg` — `ord` is the order-preserving IEEE
+    * via [[graft.functions.TopKAgg.rank]] — `ord` is the order-preserving IEEE
     * bits of `sim` ([[graft.functions.SortableBits]], strictly monotone),
     * `payload` the candidate id, so the (ord DESC, payload ASC) heap order
     * IS the window order (sim DESC, id ASC) and oracles replaying
@@ -263,19 +261,27 @@ object Embeddings {
   private[graft] def rankTopKByQuery(cands: DataFrame, queryIdCol: String,
       idCol: String, k: Int): DataFrame = {
     val idType = cands.schema(idCol).dataType
-    cands
-      .groupBy(col(queryIdCol))
-      .agg(ColumnBridge.column(graft.functions.TopKAgg(
-        ColumnBridge.expression(lit(k)),
-        graft.functions.SortableDoubleBits(
-          ColumnBridge.expression(col("sim").cast("double"))),
-        ColumnBridge.expression(col(idCol).cast("long"))).toAggregateExpression()).as("__tk"))
-      .select(col(queryIdCol).as("query_id"),
-        posexplode(col("__tk")).as(Seq("__pos", "__e")))
-      .select(col("query_id"), (col("__pos") + 1).cast("int").as("rank"),
-        col("__e.payload").cast(idType).as("neighbor_id"),
+    graft.functions.TopKAgg.rank(cands, Seq(col(queryIdCol)), k,
+        ColumnBridge.column(graft.functions.SortableDoubleBits(
+          ColumnBridge.expression(col("sim").cast("double")))),
+        col(idCol).cast("long"))
+      .select(col(queryIdCol).as("query_id"), col("rank"),
+        col("payload").cast(idType).as("neighbor_id"),
         ColumnBridge.column(graft.functions.SortableBitsDouble(
-          ColumnBridge.expression(col("__e.ord")))).as("sim"))
+          ColumnBridge.expression(col("ord")))).as("sim"))
+  }
+
+  /** [[rankTopKByQuery]] for the PQ paths: a `(queryIdCol, idCol, __adc)`
+    * relation ranked by the integer ADC distance ascending (`ord = -adc`),
+    * ties to the smaller id. Returns (query_id, rank, neighbor_id, adc_e6).
+    */
+  private def rankTopKByAdc(scored: DataFrame, queryIdCol: String,
+      idCol: String, k: Int): DataFrame = {
+    val idType = scored.schema(idCol).dataType
+    graft.functions.TopKAgg.rank(scored, Seq(col(queryIdCol)), k,
+        (-col("__adc")).cast("long"), col(idCol).cast("long"))
+      .select(col(queryIdCol).as("query_id"), col("rank"),
+        col("payload").cast(idType).as("neighbor_id"), (-col("ord")).as("adc_e6"))
   }
 
   /** Exact top-k neighbors for each query vector. `queries` must be small
@@ -425,8 +431,8 @@ object Embeddings {
   /** LSH-bucketed approximate top-k: candidates share a `prefixBits`-wide
     * signature prefix with the query, ranked by exact cosine. Trades recall
     * for a bucket-equi-join instead of a full scan.
-    */
-  /** `multiProbe` extends the query side to Hamming-adjacent buckets
+    *
+    * `multiProbe` extends the query side to Hamming-adjacent buckets
     * (multi-probe LSH, Lv et al. 2007): 0 = exact-prefix only; `p` adds
     * every bucket within Hamming distance ≤ p of the query's prefix —
     * a hyperplane sign near the decision boundary flips exactly one
@@ -470,19 +476,6 @@ object Embeddings {
     rankTopKByQuery(cands, queryIdCol, idCol, k)
   }
 
-  /** IVF-flat approximate top-k: vectors are partitioned into `nlist`
-    * cells by nearest coarse centroid; a query scans only its `nprobe`
-    * nearest cells. The second scale path next to [[lshTopK]]: cells are an
-    * equi-join key, so at 100 TB the probe is a co-partitioned join
-    * touching ~nprobe/nlist of the corpus instead of a full scan.
-    *
-    * Coarse centroids default to the `nlist` lowest-id vectors — a
-    * deterministic quantizer with NO floating-point-order sensitivity (no
-    * Lloyd averaging), so results are exactly reproducible in any engine:
-    * the DuckDB oracle replays assignment, probing, and ranking verbatim.
-    * Pass a trained `centroids` frame (id, vec) for better cell balance
-    * when recall matters more than replayability.
-    */
   /** Nearest-`topN`-centroid assignment against a `(cid, cvec)` relation
     * (broadcast): cosine, ties to the smaller cid — the cell routing used
     * by [[ivfTopK]] and the persisted [[graft.sources.AnnIndex]].
@@ -532,6 +525,19 @@ object Embeddings {
     embeddings.orderBy(col(idCol)).limit(nlist)
       .select(col(idCol).as("cid"), col(vecCol).as("cvec"))
 
+  /** IVF-flat approximate top-k: vectors are partitioned into `nlist`
+    * cells by nearest coarse centroid; a query scans only its `nprobe`
+    * nearest cells. The second scale path next to [[lshTopK]]: cells are an
+    * equi-join key, so at 100 TB the probe is a co-partitioned join
+    * touching ~nprobe/nlist of the corpus instead of a full scan.
+    *
+    * Coarse centroids default to the `nlist` lowest-id vectors — a
+    * deterministic quantizer with NO floating-point-order sensitivity (no
+    * Lloyd averaging), so results are exactly reproducible in any engine:
+    * the DuckDB oracle replays assignment, probing, and ranking verbatim.
+    * Pass a trained `centroids` frame (cid, cvec) for better cell balance
+    * when recall matters more than replayability.
+    */
   def ivfTopK(embeddings: DataFrame, vecCol: String, idCol: String,
       queries: DataFrame, queryVecCol: String, queryIdCol: String,
       k: Int, nlist: Int = 16, nprobe: Int = 4,
@@ -965,9 +971,10 @@ object Embeddings {
     * replays in SQL on top of the kmeans oracle chain.
     *
     * Scale shape: assignment is the zero-shuffle kmeans kernel; the
-    * centroid re-join is a k-row broadcast; the per-cluster bottom-m
-    * window partitions by cid (cluster-sized, k scales with the corpus
-    * under the SemDeDup sizing rule, so partitions stay bounded).
+    * centroid re-join is a k-row broadcast; the per-cluster bottom-m is
+    * the bounded-heap [[graft.functions.TopKAgg.rank]] stage, so at most
+    * m rows per (partition, cluster) cross the shuffle and no cluster is
+    * sorted. Ids must be integral (they ride the heap as BIGINT).
     *
     * @return (cid, rnk 1..m, idCol, sim_e6) — rnk 1 = farthest.
     */
@@ -978,16 +985,19 @@ object Embeddings {
     import spark.implicits._
     val cents = kmeansFit(embeddings, vecCol, idCol, k, iterations)
     val cdf = cents.map { case (cid, v) => (cid, v) }.toDF("cid", "__cvec")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("cid")).orderBy(col("sim_e6").asc, col(idCol))
-    kmeansAssign(embeddings, vecCol, cents)
+    val idType = embeddings.schema(idCol).dataType
+    val scored = kmeansAssign(embeddings, vecCol, cents)
       .join(broadcast(cdf), Seq("cid"))
       .withColumn("sim_e6",
         round(vecDot(col(vecCol), col("__cvec"))
           / (vecNorm(col(vecCol)) * vecNorm(col("__cvec"))) * lit(1e6)).cast("long"))
-      .withColumn("rnk", row_number().over(w))
-      .where(col("rnk") <= m)
-      .select(col("cid"), col("rnk"), col(idCol), col("sim_e6"))
+    // ascending sim_e6 = descending -sim_e6. A NULL vector (assigned the
+    // smallest cid, NULL sim_e6) sorts first ascending; Long.MaxValue keeps
+    // it first, since topk_agg would skip a NULL ord
+    graft.functions.TopKAgg.rank(scored, Seq(col("cid")), m,
+        coalesce(-col("sim_e6"), lit(Long.MaxValue)), col(idCol).cast("long"))
+      .select(col("cid"), col("rank").as("rnk"), col("payload").cast(idType).as(idCol),
+        when(col("ord") =!= Long.MaxValue, -col("ord")).as("sim_e6"))
   }
 
   /** The corpus-derived k for the SemDeDup family when the caller passes
@@ -1253,24 +1263,15 @@ object Embeddings {
       k: Int, m: Int = 8, ksub: Int = 16,
       codebooks: Option[Array[Array[Array[Double]]]] = None): DataFrame = {
     val cb = codebooks.getOrElse(pqCodebooks(embeddings, vecCol, idCol, m, ksub))
-    val idType = embeddings.schema(idCol).dataType
     val codes = embeddings.select(col(idCol), pqEncode(col(vecCol), cb).as("__codes"))
-    codes.crossJoin(broadcast(queries.select(col(queryIdCol), col(queryVecCol))))
-      .where(col(idCol) =!= col(queryIdCol))
-      .select(col(queryIdCol), col(idCol),
-        ColumnBridge.column(PqAdcE6(
-          ColumnBridge.expression(col("__codes")),
-          ColumnBridge.expression(col(queryVecCol)), cb)).as("__adc"))
-      .groupBy(col(queryIdCol))
-      .agg(ColumnBridge.column(graft.functions.TopKAgg(
-        ColumnBridge.expression(lit(k)),
-        ColumnBridge.expression((-col("__adc")).cast("long")),
-        ColumnBridge.expression(col(idCol).cast("long"))).toAggregateExpression()).as("__tk"))
-      .select(col(queryIdCol).as("query_id"),
-        posexplode(col("__tk")).as(Seq("__pos", "__e")))
-      .select(col("query_id"), (col("__pos") + 1).cast("int").as("rank"),
-        col("__e.payload").cast(idType).as("neighbor_id"),
-        (-col("__e.ord")).as("adc_e6"))
+    rankTopKByAdc(
+      codes.crossJoin(broadcast(queries.select(col(queryIdCol), col(queryVecCol))))
+        .where(col(idCol) =!= col(queryIdCol))
+        .select(col(queryIdCol), col(idCol),
+          ColumnBridge.column(PqAdcE6(
+            ColumnBridge.expression(col("__codes")),
+            ColumnBridge.expression(col(queryVecCol)), cb)).as("__adc")),
+      queryIdCol, idCol, k)
   }
 
   /** Recall@k of an approximate ANN result against the exact baseline:
@@ -1337,7 +1338,6 @@ object Embeddings {
       residual: Boolean = false): DataFrame = {
     val cents = centroids.getOrElse(seedCentroids(embeddings, vecCol, idCol, nlist))
       .select(col("cid"), col("cvec"))
-    val idType = embeddings.schema(idCol).dataType
     val (codes, probes, cb) =
       if (!residual) {
         val cbG = codebooks.getOrElse(pqCodebooks(embeddings, vecCol, idCol, m, ksub))
@@ -1359,22 +1359,14 @@ object Embeddings {
                 (a, b) => a.cast("double") - b).as("__qv")),
           cbR)
       }
-    codes.join(broadcast(probes), "cid")
-      .where(col(idCol) =!= col(queryIdCol))
-      .select(col(queryIdCol), col(idCol),
-        ColumnBridge.column(PqAdcE6(
-          ColumnBridge.expression(col("__codes")),
-          ColumnBridge.expression(col("__qv")), cb)).as("__adc"))
-      .groupBy(col(queryIdCol))
-      .agg(ColumnBridge.column(graft.functions.TopKAgg(
-        ColumnBridge.expression(lit(k)),
-        ColumnBridge.expression((-col("__adc")).cast("long")),
-        ColumnBridge.expression(col(idCol).cast("long"))).toAggregateExpression()).as("__tk"))
-      .select(col(queryIdCol).as("query_id"),
-        posexplode(col("__tk")).as(Seq("__pos", "__e")))
-      .select(col("query_id"), (col("__pos") + 1).cast("int").as("rank"),
-        col("__e.payload").cast(idType).as("neighbor_id"),
-        (-col("__e.ord")).as("adc_e6"))
+    rankTopKByAdc(
+      codes.join(broadcast(probes), "cid")
+        .where(col(idCol) =!= col(queryIdCol))
+        .select(col(queryIdCol), col(idCol),
+          ColumnBridge.column(PqAdcE6(
+            ColumnBridge.expression(col("__codes")),
+            ColumnBridge.expression(col("__qv")), cb)).as("__adc")),
+      queryIdCol, idCol, k)
   }
 
   /** The residual frame residual-IVFPQ encodes: each vector minus its

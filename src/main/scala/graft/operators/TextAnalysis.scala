@@ -19,9 +19,6 @@ object TextAnalysis {
   def tokenCount(text: Column): Column =
     ColumnBridge.column(TokenCountExpr(ColumnBridge.expression(text)))
 
-  /** Whitespace word count (matches DuckDB len(string_split(x, ' '))). */
-  def wordCount(text: Column): Column = size(split(text, " "))
-
   private def stopwords: Map[String, Seq[String]] = LangId.stopwords
 
   /** Fraction of whitespace words that are stopwords of `lang`. */

@@ -476,9 +476,9 @@ object FileStreams {
     * shape): the first watermarked aggregation counts per (event-time
     * window, key); the second, grouped on `window(window)` (the
     * window-of-window pattern), folds those finalized counts through the
-    * bounded-heap `topk_agg` — so the per-window state the SECOND
-    * operator holds is ≤ k entries, not the key universe, and no
-    * per-window sort ever runs. Emission inherits the
+    * bounded-heap [[graft.functions.TopKAgg.rank]] stage — so the
+    * per-window state the SECOND operator holds is ≤ k entries, not the
+    * key universe, and no per-window sort ever runs. Emission inherits the
     * [[windowedEventCounts]] contract: a window's top-k appears exactly
     * once, when the watermark closes it.
     *
@@ -490,7 +490,6 @@ object FileStreams {
     */
   def windowedTopK(events: DataFrame, tsCol: String, keyCol: String, k: Int,
       windowExpr: String = "1 day", watermark: String = "1 hour"): DataFrame = {
-    import graft.operators.ColumnBridge
     // fail fast on non-integral keys: a string key would cast to NULL
     // silently and vanish from every ranking
     events.schema(keyCol).dataType match {
@@ -499,20 +498,14 @@ object FileStreams {
       case other => throw new IllegalArgumentException(
         s"windowedTopK key column $keyCol must be integral (topk_agg payload is BIGINT), got $other")
     }
-    events
+    val counts = events
       .withWatermark(tsCol, watermark)
       .groupBy(window(col(tsCol), windowExpr), col(keyCol))
       .agg(count(lit(1)).cast("long").as("n"))
-      .groupBy(window(col("window"), windowExpr).as("w2"))
-      .agg(ColumnBridge.column(graft.functions.TopKAgg(
-        ColumnBridge.expression(lit(k)),
-        ColumnBridge.expression(col("n")),
-        ColumnBridge.expression(col(keyCol).cast("long"))).toAggregateExpression())
-        .as("__tk"))
-      .select(unix_micros(col("w2.start")).as("w_us"),
-        posexplode(col("__tk")).as(Seq("__pos", "__e")))
-      .select(col("w_us"), (col("__pos") + 1).cast("int").as("rank"),
-        col("__e.payload").as(keyCol), col("__e.ord").as("n"))
+    graft.functions.TopKAgg.rank(counts, Seq(window(col("window"), windowExpr).as("w2")), k,
+        col("n"), col(keyCol).cast("long"))
+      .select(unix_micros(col("w2.start")).as("w_us"), col("rank"),
+        col("payload").as(keyCol), col("ord").as("n"))
   }
 
   /** Per-window value histogram — the streaming drift monitor: each

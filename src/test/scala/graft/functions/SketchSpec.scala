@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
@@ -289,6 +290,20 @@ class SketchSpec extends AnyFunSuite with BeforeAndAfterAll {
             FROM tkv) WHERE rn <= 10
       ORDER BY g, rn""").collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
     assert(got.toSeq == expected.toSeq)
+    // the DataFrame stage over the same rows, with group 0 cut below k
+    // (5 rows), against the same replay: its row_number is the rank
+    val staged = TopKAgg.rank(spark.table("tkv").where("g <> 0 OR id < 40"),
+        Seq(col("g")), 10, col("v"), col("id"))
+      .orderBy("g", "rank").collect()
+      .map(r => (r.getInt(0), r.getInt(1), r.getLong(2), r.getLong(3)))
+    val replayed = spark.sql("""
+      SELECT g, CAST(rn AS INT), v, id
+      FROM (SELECT g, v, id, row_number() OVER (PARTITION BY g ORDER BY v DESC, id) AS rn
+            FROM tkv WHERE g <> 0 OR id < 40) WHERE rn <= 10
+      ORDER BY g, rn""").collect()
+      .map(r => (r.getInt(0), r.getInt(1), r.getLong(2), r.getLong(3)))
+    assert(staged.toSeq == replayed.toSeq)
+    assert(staged.count(_._1 == 0) == 5 && staged.length == 75)
     // k larger than the group emits the whole group, ordered
     val small = spark.sql(
       "SELECT size(topk_agg(100, v, id)) FROM tkv WHERE g = 0 AND id < 40 GROUP BY g")

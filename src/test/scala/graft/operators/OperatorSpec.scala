@@ -694,6 +694,16 @@ class OperatorSpec extends AnyFunSuite with BeforeAndAfterAll {
     val all = Embeddings.centroidOutliers(vecs, "vec", "vec_id", k = 2,
       iterations = 1, m = 100)
     assert(all.count() == 6L)
+    // a NULL vector is assigned the smallest cid with a NULL similarity,
+    // which ranks first (ascending order puts NULL first)
+    val withNull = vecs.union(spark.createDataFrame(Seq((9L, null: Seq[Double])))
+      .toDF("vec_id", "vec"))
+    val nullRow = Embeddings.centroidOutliers(withNull, "vec", "vec_id", k = 2,
+        iterations = 1, m = 2)
+      .where(col("vec_id") === 9L).collect()
+    assert(nullRow.length == 1, nullRow.mkString(", "))
+    assert(nullRow.head.getLong(0) == 1L && nullRow.head.getInt(1) == 1 &&
+      nullRow.head.isNullAt(3), nullRow.mkString(", "))
   }
 
   test("knn label consistency: clustered labels agree, shuffled labels near chance") {
