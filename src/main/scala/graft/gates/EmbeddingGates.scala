@@ -18,7 +18,8 @@ object EmbeddingGates {
     * `c1(cid, cv)`, reconstructed as CAST(s_e6 AS DOUBLE) / (CAST(m AS
     * DOUBLE) * 1e6) exactly as the operator does.
     */
-  private def kmeansLloyd(src: String): String = s"""a0 AS (SELECT vec_id, v, cid FROM (
+  private def kmeansLloyd(src: String): String =
+    s"""a0 AS (SELECT vec_id, v, cid FROM (
         SELECT $src.vec_id, $src.v, c0.cid,
                row_number() OVER (PARTITION BY $src.vec_id
                  ORDER BY round(list_cosine_similarity($src.v, c0.cv) * 1e6) DESC, c0.cid) AS rn
@@ -32,8 +33,10 @@ object EmbeddingGates {
              FROM sums GROUP BY cid)"""
 
   /** Reassignment of every `e` vector to the updated centroids `c1`:
-    * `a1(vec_id, cid)`. */
-  private val kmeansReassign = """a1 AS (SELECT vec_id, cid FROM (
+    * `a1(vec_id, cid)`.
+    */
+  private val kmeansReassign =
+    """a1 AS (SELECT vec_id, cid FROM (
         SELECT e.vec_id, c1.cid,
                row_number() OVER (PARTITION BY e.vec_id
                  ORDER BY round(list_cosine_similarity(e.v, c1.cv) * 1e6) DESC, c1.cid) AS rn
@@ -41,8 +44,10 @@ object EmbeddingGates {
 
   /** SemDeDup's corpus-derived k, clamp(ceil(n/1000), 32, 65536) over
     * `src`'s COUNT(*) (pure integer arithmetic, `kk`), and the first k
-    * vectors by id as seeds `c0`. */
-  private def semdedupSeeds(src: String): String = s"""kk AS (SELECT GREATEST(LEAST(((SELECT COUNT(*) FROM $src) + 999) // 1000, 65536), 32) AS k),
+    * vectors by id as seeds `c0`.
+    */
+  private def semdedupSeeds(src: String): String =
+    s"""kk AS (SELECT GREATEST(LEAST(((SELECT COUNT(*) FROM $src) + 999) // 1000, 65536), 32) AS k),
       c0 AS (SELECT vec_id AS cid, v AS cv FROM (
                SELECT vec_id, v, row_number() OVER (ORDER BY vec_id) AS rn FROM $src)
              WHERE rn <= (SELECT k FROM kk))"""
@@ -52,7 +57,8 @@ object EmbeddingGates {
     * ALL vectors assigned into it; the drop rule restricted to new-side
     * vectors against (old OR smaller-id new) same-cluster neighbors.
     * q_incremental_semdedup and q_semdedup_index compute the same fit,
-    * assignment and drop rule, so they share it. */
+    * assignment and drop rule, so they share it.
+    */
   private val incrementalSemdedupOracle = s"""
       WITH eo AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
                   FROM embeddings WHERE vec_id % 10 <> 0),

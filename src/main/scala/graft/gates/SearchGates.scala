@@ -128,7 +128,8 @@ object SearchGates {
     * v, b, nrm)` with the operator's sequential-fold norm, and the
     * `vec_id < 10` queries `q(qid, qv, b, qnrm)`.
     */
-  private val lshVectors = s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+  private val lshVectors =
+    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
       ${lshBucketCte(4)},
       c AS (SELECT e.vec_id, e.v, bkt.b,
         sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
@@ -138,8 +139,10 @@ object SearchGates {
       q AS (SELECT vec_id AS qid, v AS qv, b, nrm AS qnrm FROM c WHERE vec_id < 10)"""
 
   /** Exact top-5 over [[lshVectors]], ranked by the operator's exact sim
-    * expression (sequential dot fold / (norm_a · norm_b)). */
-  private val lshExact = """exact AS (SELECT query_id, neighbor_id FROM (
+    * expression (sequential dot fold / (norm_a · norm_b)).
+    */
+  private val lshExact =
+    """exact AS (SELECT query_id, neighbor_id FROM (
         SELECT q.qid AS query_id, c.vec_id AS neighbor_id,
                row_number() OVER (PARTITION BY q.qid
                  ORDER BY list_reduce(list_prepend(CAST(0 AS DOUBLE),
@@ -150,8 +153,10 @@ object SearchGates {
 
   /** Multi-probe LSH candidates: every corpus vector in a bucket that a
     * `probes(m)` flip mask reaches from the query's bucket, with its exact
-    * sim. `cols` prefixes the select list (the probe radius column). */
-  private def lshProbeCand(cols: String): String = s"""cand AS (SELECT ${cols}q.qid, c.vec_id,
+    * sim. `cols` prefixes the select list (the probe radius column).
+    */
+  private def lshProbeCand(cols: String): String =
+    s"""cand AS (SELECT ${cols}q.qid, c.vec_id,
                list_reduce(list_prepend(CAST(0 AS DOUBLE),
                  list_transform(range((SELECT dim FROM d)),
                    x -> c.v[x + 1] * q.qv[x + 1])),
@@ -161,8 +166,10 @@ object SearchGates {
         WHERE c.vec_id != q.qid)"""
 
   /** Exact cosine top-5 per query over `e`, against a query CTE
-    * `q(qid, qv)`, named by its id and vector columns. */
-  private def exactCosine(qid: String, qv: String): String = s"""exact AS (SELECT query_id, neighbor_id FROM (
+    * `q(qid, qv)`, named by its id and vector columns.
+    */
+  private def exactCosine(qid: String, qv: String): String =
+    s"""exact AS (SELECT query_id, neighbor_id FROM (
         SELECT q.$qid AS query_id, e2.vec_id AS neighbor_id,
                row_number() OVER (PARTITION BY q.$qid
                  ORDER BY list_cosine_similarity(e2.v, q.$qv) DESC, e2.vec_id) AS rank
@@ -170,8 +177,11 @@ object SearchGates {
 
   /** The [[Embeddings.recallReport]] rollup of `approx` against `exact`
     * (integer ppm per query, then the corpus-level row), with the pinned
-    * floor column of the recall-floor gates when `floorPpm` is set. */
-  private def recallRollup(floorPpm: Option[Long]): String = s"""pq AS (SELECT exact.query_id,
+    * floor column of the recall-floor gates when `floorPpm` is set.
+    */
+  private def recallRollup(floorPpm: Option[Long]): String = {
+    val floorCol = floorPpm.fold("")(f => s",\n             CAST($f AS BIGINT) AS floor_ppm")
+    s"""pq AS (SELECT exact.query_id,
                CAST(COUNT(*) AS BIGINT) AS ex,
                CAST(SUM(CASE WHEN approx.neighbor_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS hits
              FROM exact LEFT JOIN approx
@@ -181,14 +191,15 @@ object SearchGates {
       SELECT CAST(COUNT(*) AS BIGINT) AS queries,
              CAST(SUM(recall_ppm) // COUNT(*) AS BIGINT) AS mean_recall_ppm,
              CAST(MIN(recall_ppm) AS BIGINT) AS min_recall_ppm,
-             CAST(SUM(CASE WHEN hits = ex THEN 1 ELSE 0 END) AS BIGINT) AS perfect_queries${
-    floorPpm.fold("")(f => s",\n             CAST($f AS BIGINT) AS floor_ppm")}
+             CAST(SUM(CASE WHEN hits = ex THEN 1 ELSE 0 END) AS BIGINT) AS perfect_queries$floorCol
       FROM pr"""
+  }
 
-  /** IVF cells over `e`: the 16 lowest-id seed centroids `c($cid, $cv)`
+  /** IVF cells over `e`: the 16 lowest-id seed centroids `c(<cid>, <cv>)`
     * and each vector's nearest cell `ea(vec_id, v, <cell>)` (argmax
     * cosine, ties to the smallest id). `cell` is the select-list item that
-    * names the cell column. */
+    * names the cell column.
+    */
   private def ivfCells(cid: String, cv: String, cell: String): String =
     s"""c AS (SELECT vec_id AS $cid, v AS $cv FROM e ORDER BY vec_id LIMIT 16),
       ea AS (
@@ -199,7 +210,8 @@ object SearchGates {
           FROM e, c) WHERE rn = 1)"""
 
   /** The `vec_id < 10` queries' nprobe = 4 nearest cells of
-    * [[ivfCells]]: `qa(qid, qv, <cell>)`. */
+    * [[ivfCells]]: `qa(qid, qv, <cell>)`.
+    */
   private def ivfProbes(cid: String, cv: String, cell: String): String =
     s"""qa AS (
         SELECT vec_id AS qid, v AS qv, $cell FROM (
@@ -209,7 +221,8 @@ object SearchGates {
           FROM e, c WHERE e.vec_id < 10) WHERE rn <= 4)"""
 
   /** The IVF-flat replay (nlist = 16, nprobe = 4, in-cell exact top-5):
-    * q_ann_ivf and q_ann_index must answer alike, so they share it. */
+    * q_ann_ivf and q_ann_index must answer alike, so they share it.
+    */
   private val ivfOracle = s"""
       WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
       ${ivfCells("cid", "cv", "cid")},
@@ -223,7 +236,8 @@ object SearchGates {
       WHERE rank <= 5 ORDER BY query_id, rank"""
 
   /** The exact and IVF top-5 (`exact`, `approx`) of the IVF recall gates. */
-  private val ivfRecallRanks = """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+  private val ivfRecallRanks =
+    """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
       exact AS (SELECT query_id, neighbor_id FROM (
         SELECT q.vec_id AS query_id, e2.vec_id AS neighbor_id,
                row_number() OVER (PARTITION BY q.vec_id
@@ -250,7 +264,8 @@ object SearchGates {
 
   /** PQ squared-L2 distance between subspace `j` of vector `x` and the
     * codebook entry `cb.cv`: the operator's sequential fold over the 8
-    * dims, `(a-b)*(a-b)` rather than `^` so the arithmetic is identical. */
+    * dims, `(a-b)*(a-b)` rather than `^` so the arithmetic is identical.
+    */
   private def pqSqDist(x: String, j: String, cb: String): String =
     s"""list_reduce(list_prepend(CAST(0 AS DOUBLE),
           list_transform(range(8), d ->
@@ -259,7 +274,8 @@ object SearchGates {
 
   /** PQ encode against codebooks `cb<sfx>`: each vector `src.v` gets the
     * e6-rounded nearest entry per subspace, ties to the smaller code —
-    * `dist<sfx>(vec_id, j, cid, d_e6)` and `enc<sfx>(vec_id, j, cid)`. */
+    * `dist<sfx>(vec_id, j, cid, d_e6)` and `enc<sfx>(vec_id, j, cid)`.
+    */
   private def pqEncode(sfx: String = "", src: String = "e", v: String = "v"): String =
     s"""dist$sfx AS (SELECT $src.vec_id, cb$sfx.j, cb$sfx.cid,
         CAST(round(${pqSqDist(s"$src.$v", s"cb$sfx.j", s"cb$sfx")} * 1e6) AS BIGINT) AS d_e6
@@ -271,7 +287,8 @@ object SearchGates {
 
   /** PQ seed codebooks `cb<sfx>(j, cid, cv)` — the 16 lowest-id vectors
     * of `src`, sliced into 8 subspaces of dim 8 — and the [[pqEncode]]
-    * against them. */
+    * against them.
+    */
   private def pqCodes(sfx: String = "", src: String = "e", v: String = "v"): String = {
     val seedVec = if (v == "v") v else s"$v AS v"
     val pad = " " * (sfx.length + 13) // aligns FROM under `cb<sfx> AS (`
@@ -285,8 +302,10 @@ ${pad}FROM cbv, subs),
 
   /** One Lloyd update of the seed codebooks `cb0` over `enc0`: the
     * per-entry e6-integer mean of the member slices, the seed entry kept
-    * where it lost every member. Produces `cb`. */
-  private val pqLloyd = """upd AS (SELECT enc0.j, enc0.cid, p.p,
+    * where it lost every member. Produces `cb`.
+    */
+  private val pqLloyd =
+    """upd AS (SELECT enc0.j, enc0.cid, p.p,
         CAST(SUM(CAST(round(e.v[enc0.j*8 + p.p + 1] * 1e6) AS BIGINT)) AS DOUBLE)
           / (COUNT(*) * 1e6) AS val
         FROM enc0 JOIN e ON e.vec_id = enc0.vec_id,
@@ -297,20 +316,24 @@ ${pad}FROM cbv, subs),
              FROM cb0 LEFT JOIN cbu ON cbu.j = cb0.j AND cbu.cid = cb0.cid)"""
 
   /** The ADC distance of query vector `qv` to the codes `enc<sfx>`: the
-    * integer sum of the per-subspace e6-rounded distances. */
+    * integer sum of the per-subspace e6-rounded distances.
+    */
   private def pqAdcSum(qv: String, sfx: String): String =
     s"""CAST(SUM(CAST(round(${pqSqDist(qv, s"enc$sfx.j", s"cb$sfx")} * 1e6) AS BIGINT)) AS BIGINT) AS adc_e6"""
 
   /** `adc<sfx>(qid, vec_id, adc_e6)`: every `q` query against every
-    * encoded vector. */
-  private def pqAdc(sfx: String): String = s"""adc$sfx AS (SELECT q.qid, enc$sfx.vec_id,
+    * encoded vector.
+    */
+  private def pqAdc(sfx: String): String =
+    s"""adc$sfx AS (SELECT q.qid, enc$sfx.vec_id,
         ${pqAdcSum("q.qv", sfx)}
         FROM q, enc$sfx JOIN cb$sfx ON cb$sfx.j = enc$sfx.j AND cb$sfx.cid = enc$sfx.cid
         WHERE enc$sfx.vec_id != q.qid
         GROUP BY q.qid, enc$sfx.vec_id)"""
 
   /** IVFPQ ADC: each probe row of `probes(qid, cell, <qv>)` against the
-    * encoded vectors of `corpus(vec_id, cell)` in its cell. */
+    * encoded vectors of `corpus(vec_id, cell)` in its cell.
+    */
   private def ivfPqAdc(corpus: String, probes: String, qv: String): String =
     s"""adc AS (SELECT $probes.qid, $corpus.vec_id,
         ${pqAdcSum(s"$probes.$qv", "")}
@@ -321,33 +344,40 @@ ${pad}FROM cbv, subs),
         GROUP BY $probes.qid, $corpus.vec_id)"""
 
   /** The PQ gates' answer: top-5 per query by (adc_e6, vec_id). */
-  private val pqAdcRanked = """SELECT query_id, rank, neighbor_id, adc_e6 FROM (
+  private val pqAdcRanked =
+    """SELECT query_id, rank, neighbor_id, adc_e6 FROM (
         SELECT qid AS query_id, vec_id AS neighbor_id, adc_e6,
                row_number() OVER (PARTITION BY qid ORDER BY adc_e6, vec_id) AS rank
         FROM adc)
       WHERE rank <= 5 ORDER BY query_id, rank"""
 
   /** [[pqAdcRanked]] as a recall input: `name(query_id, neighbor_id)`. */
-  private def pqApprox(name: String, adc: String): String = s"""$name AS (SELECT query_id, neighbor_id FROM (
+  private def pqApprox(name: String, adc: String): String =
+    s"""$name AS (SELECT query_id, neighbor_id FROM (
         SELECT qid AS query_id, vec_id AS neighbor_id,
                row_number() OVER (PARTITION BY qid ORDER BY adc_e6, vec_id) AS rank
         FROM $adc) WHERE rank <= 5)"""
 
   /** Hamming prescreen over `e` and `q(vec_id, v)`: the sign
     * disagreements (== popcount of the xor of the packed words), then
-    * each candidate's rank `hr` by (hamming, id). */
-  private val hammingDist = """ham AS (
+    * each candidate's rank `hr` by (hamming, id).
+    */
+  private val hammingDist =
+    """ham AS (
         SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id,
                len(list_filter(range(len(e.v)), j -> (e.v[j+1] > 0) <> (q.v[j+1] > 0))) AS hamming
         FROM e, q WHERE e.vec_id != q.vec_id)"""
-  private val hammingCand = """cand AS (
+  private val hammingCand =
+    """cand AS (
         SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY hamming, neighbor_id) AS hr
         FROM ham)"""
 
   /** BM25 term statistics for the 3-term query ('hash', 'join',
     * 'vector'): tokens `t`, per-doc length and term counts `tf`, and the
-    * corpus `s(n, avgdl, df0..df2)`. */
-  private val bm25Terms = """t AS (
+    * corpus `s(n, avgdl, df0..df2)`.
+    */
+  private val bm25Terms =
+    """t AS (
         SELECT doc_id,
                list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '') AS toks
         FROM documents),
