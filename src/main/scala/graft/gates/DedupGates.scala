@@ -1,7 +1,7 @@
 package graft
 package gates
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, TextAnalysis}
@@ -117,13 +117,7 @@ object DedupGates {
     */
   private lazy val minhashPairCtes: String = {
     val (a, b) = graft.operators.MinHashPerm.params(128)
-    s"""toks AS (
-        SELECT doc_id, string_split_regex(lower(text), '\\s+') AS t FROM documents),
-      sh AS (
-        SELECT DISTINCT doc_id,
-               CAST(('0x' || substring(md5(t[i] || ' ' || t[i+1] || ' ' || t[i+2]), 1, 15)) AS BIGINT) AS h
-        FROM (SELECT doc_id, t, unnest(generate_series(1, len(t) - 2)) AS i
-              FROM toks WHERE len(t) >= 3)),
+    s"""$md5ShingleCtes,
       prm AS (
         SELECT unnest(generate_series(1, 128)) AS j,
                unnest(${a.mkString("[", ", ", "]")}) AS a,
@@ -146,12 +140,93 @@ object DedupGates {
         FROM cand JOIN sig s1 ON cand.id1 = s1.doc_id JOIN sig s2 ON cand.id2 = s2.doc_id)"""
   }
 
+  /** 3-shingle CTEs: `toks(doc_id, t)`, the whitespace tokens of
+    * `lower(text)`, and `sh`, the distinct 3-token windows of each doc with
+    * at least 3 tokens; `shingle` is `sh`'s select list after `doc_id,`.
+    */
+  private def shingleCtes(shingle: String): String = s"""toks AS (
+        SELECT doc_id, string_split_regex(lower(text), '\\s+') AS t FROM documents),
+      sh AS (
+        SELECT DISTINCT doc_id,$shingle
+        FROM (SELECT doc_id, t, unnest(generate_series(1, len(t) - 2)) AS i
+              FROM toks WHERE len(t) >= 3))"""
+
+  private val shingleText = "t[i] || ' ' || t[i+1] || ' ' || t[i+2]"
+
+  /** [[shingleCtes]] as `sh(doc_id, h)`: each shingle's md5-prefix 60-bit
+    * hash, the portable shingle hash.
+    */
+  private val md5ShingleCtes = shingleCtes(
+    s"\n               CAST(('0x' || substring(md5($shingleText), 1, 15)) AS BIGINT) AS h")
+
+  /** The exact 3-shingle overlap replay behind the Jaccard/containment
+    * gates: string shingles `sh(doc_id, s)`, minus those in more than 1000
+    * docs, give `f`, per-doc `sizes(doc_id, sz)` and per-pair
+    * `common(id1, id2, c)`; `name(cols)` then reads `common` joined to
+    * both sides' sizes as `s1` and `s2`.
+    */
+  private def shingleOverlapCtes(name: String, cols: String): String = s"""
+      WITH ${shingleCtes(s" $shingleText AS s")},
+      flt AS (SELECT s FROM sh GROUP BY s HAVING COUNT(*) <= 1000),
+      f AS (SELECT sh.doc_id, sh.s FROM sh JOIN flt USING (s)),
+      sizes AS (SELECT doc_id, COUNT(*) AS sz FROM f GROUP BY doc_id),
+      common AS (
+        SELECT a.doc_id AS id1, b.doc_id AS id2, COUNT(*) AS c
+        FROM f a JOIN f b ON a.s = b.s AND a.doc_id < b.doc_id
+        GROUP BY 1, 2),
+      $name AS (
+        SELECT $cols
+        FROM common JOIN sizes s1 ON common.id1 = s1.doc_id
+                    JOIN sizes s2 ON common.id2 = s2.doc_id)"""
+
+  /** The exact-duplicate pair CTE `p(id1, id2)`: documents with equal
+    * `md5(text)`, `id1 < id2`.
+    */
+  private[gates] val exactDupPairsCte = """p AS (
+        SELECT a.doc_id AS id1, b.doc_id AS id2
+        FROM documents a JOIN documents b
+          ON md5(a.text) = md5(b.text) AND a.doc_id < b.doc_id)"""
+
+  /** Connected components of the pair CTE `p(id1, id2)` in scope, replayed
+    * as a recursive min-reachable-id walk (the query must be `WITH
+    * RECURSIVE`): `lab(id, label)`, one row per paired node.
+    */
+  private[gates] val componentLabelCtes =
+    """e AS (SELECT id1 AS a, id2 AS b FROM p UNION SELECT id2, id1 FROM p),
+      reach(src, dst) AS (
+        SELECT a, a FROM e
+        UNION
+        SELECT r.src, e.b FROM reach r JOIN e ON e.a = r.dst),
+      lab AS (SELECT src AS id, MIN(dst) AS label FROM reach GROUP BY src)"""
+
+  /** The Spark twin of [[exactDupPairsCte]]'s pattern: `(id1, id2)` pairs
+    * of `df` rows with equal `key`, `id1 < id2` by `doc_id`.
+    */
+  private[gates] def keyPairs(df: DataFrame, key: String): DataFrame =
+    df.as("a").join(df.as("b"),
+        col(s"a.$key") === col(s"b.$key") && col("a.doc_id") < col("b.doc_id"))
+      .select(col("a.doc_id").as("id1"), col("b.doc_id").as("id2"))
+
+  /** The Spark side of [[exactDupPairsCte]]. */
+  private[gates] def exactDupPairs(s: SparkSession): DataFrame =
+    keyPairs(s.table("documents").select(col("doc_id"), md5(col("text")).as("h")), "h")
+
+  /** The rollup of a line/span dedup pass that rebuilt `text_deduped` out
+    * of `units` pieces: docs, pieces, removed pieces, rebuilt chars and an
+    * md5-prefix checksum of the rebuilt texts.
+    */
+  private def rebuiltTextRollup(deduped: DataFrame, units: String): DataFrame =
+    deduped.agg(count(lit(1)).cast("long").as("docs"),
+      sum(units).cast("long").as(units),
+      sum("removed").cast("long").as("removed"),
+      sum(length(col("text_deduped"))).cast("long").as("chars"),
+      Gate.md5PrefixSum(col("text_deduped")).as("checksum"))
+
   val gates: Seq[Gate] = Seq(
     // corpus-level exact span dedup: 8-token windows occurring >= 2
     // times anywhere are removed (first occurrence kept); the rebuilt
-    // texts ride the hash path via md5-prefix checksums
-    // full span-dedup replay: same windows, same md5 keys, same packed
-    // keep-first winner, same rebuild order
+    // texts ride the hash path via md5-prefix checksums. The replay uses
+    // the same windows, md5 keys, packed keep-first winner and rebuild order.
     Gate("q_span_dedup", """
       WITH t AS (
         SELECT doc_id,
@@ -184,14 +259,8 @@ object DedupGates {
              CAST(SUM(CAST(('0x' || substring(md5(newt), 1, 15)) AS BIGINT)
                       % 1000000000) AS BIGINT) AS checksum
       FROM f""") { (s, _) =>
-      Dedup.dropDuplicateSpans(s.table("documents"), "text", "doc_id",
-          spanTokens = 8, minCount = 2, keepFirst = true)
-        .agg(count(lit(1)).cast("long").as("docs"),
-          sum("spans").cast("long").as("spans"),
-          sum("removed").cast("long").as("removed"),
-          sum(length(col("text_deduped"))).cast("long").as("chars"),
-          sum(conv(substring(md5(col("text_deduped")), 1, 15), 16, 10)
-            .cast("long") % 1000000000L).cast("long").as("checksum"))
+      rebuiltTextRollup(Dedup.dropDuplicateSpans(s.table("documents"), "text", "doc_id",
+          spanTokens = 8, minCount = 2, keepFirst = true), "spans")
     },
 
     Gate("q_dedup_exact", """
@@ -214,7 +283,7 @@ object DedupGates {
     // are genuinely computed on the DuckDB side (trivially 0 here — the
     // stage IS this pipeline's output) and any staging corruption turns
     // the hash compare red before a downstream consumer trusts the file.
-    // full independent replication of the portable MinHash-LSH pipeline:
+    // The oracle fully replicates the portable MinHash-LSH pipeline:
     // string shingles -> md5-prefix 60-bit hashes -> the SAME affine
     // permutations (constants embedded below from MinHashPerm.params) ->
     // 32x4 band slices -> candidate pairs -> signature-estimate filter —
@@ -253,10 +322,10 @@ object DedupGates {
     // refresh-time near-dup: a 10% "new" slice banded against the other
     // 90% — only new-vs-old collisions are examined, never old-vs-old.
     // Checksums pin every (new, old) pair and its micro-unit estimate.
-    // cross-slice restriction of the STAGED pair artifact: the full
-    // pipeline's pair set intersected with (one side new, one side old)
-    // is exactly the incremental operator's collision set, and the stage
-    // is verified pair-by-pair by q_minhash_near_dup's full replay
+    // The oracle restricts the STAGED pair artifact across the slices:
+    // the full pipeline's pair set intersected with (one side new, one
+    // side old) is exactly the incremental operator's collision set, and
+    // the stage is verified pair-by-pair by q_minhash_near_dup's replay.
     Gate("q_incremental_dedup", s"""
       SELECT CAST(COUNT(*) AS BIGINT) AS pairs,
              CAST(SUM(CASE WHEN id1 % 10 = 0 THEN id1 * 3 + id2
@@ -293,12 +362,6 @@ object DedupGates {
     // counts those pairs independently from the corpus and asserts both
     // miss counts are zero; a fast-mode hash/permutation/banding bug
     // that loses pairs now hash-mismatches instead of passing rows-only.
-    // cross-mode recall gate: exact-duplicate pairs among shingle-eligible
-    // docs MUST be recovered by both the fast (xxhash64/splitmix) and the
-    // portable (md5/affine) pipelines — identical text => identical
-    // signatures in any hash mode => collision in every band at estimate
-    // 1.0. DuckDB independently counts the planted pairs; both missing
-    // columns are provably zero for a correct pipeline.
     Gate("q_minhash_fast", """
       WITH elig AS (
         SELECT doc_id, md5(text) AS ch FROM documents
@@ -311,9 +374,7 @@ object DedupGates {
       val eligible = docs
         .where(size(split(lower(col("text")), "\\s+")) >= 3)
         .select(col("doc_id"), md5(col("text")).as("ch"))
-      val planted = eligible.as("a").join(eligible.as("b"),
-          col("a.ch") === col("b.ch") && col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id").as("id1"), col("b.doc_id").as("id2"))
+      val planted = keyPairs(eligible, "ch")
       val fastPairs = Dedup.minHashNearDuplicates(docs, "text", "doc_id",
           numHashes = 128, bands = 32, shingleSize = 3, threshold = 0.2,
           portable = false)
@@ -333,29 +394,16 @@ object DedupGates {
 
     // clustering (keep-one-per-cluster) over the exact-duplicate pair
     // graph: md5-equality pairs keep the gate cheap while exercising the
-    // same component-labelling path as minhash/simhash pair graphs
-    // near-dup clustering = connected components over the exact-duplicate
-    // pair graph, replayed with a recursive CTE (min reachable id per node)
+    // same component-labelling path as minhash/simhash pair graphs;
+    // replayed with a recursive CTE (min reachable id per node)
     Gate("q_dedup_clusters", s"""
-      WITH RECURSIVE p AS (
-        SELECT a.doc_id AS id1, b.doc_id AS id2
-        FROM documents a JOIN documents b
-          ON md5(a.text) = md5(b.text) AND a.doc_id < b.doc_id),
-      e AS (SELECT id1 AS a, id2 AS b FROM p UNION SELECT id2, id1 FROM p),
-      reach(src, dst) AS (
-        SELECT a, a FROM e
-        UNION
-        SELECT r.src, e.b FROM reach r JOIN e ON e.a = r.dst),
-      lab AS (SELECT src AS id, MIN(dst) AS label FROM reach GROUP BY src)
+      WITH RECURSIVE $exactDupPairsCte,
+      $componentLabelCtes
       SELECT CAST(COUNT(*) AS BIGINT) AS nodes,
              CAST(COUNT(DISTINCT label) AS BIGINT) AS clusters,
              CAST(SUM(label) AS BIGINT) AS label_sum
       FROM lab""") { (s, _) =>
-      val d = s.table("documents").select(col("doc_id"), md5(col("text")).as("h"))
-      val pairs = d.as("a").join(d.as("b"),
-          col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id").as("id1"), col("b.doc_id").as("id2"))
-      Dedup.nearDuplicateClusters(pairs)
+      Dedup.nearDuplicateClusters(exactDupPairs(s))
         .agg(count(lit(1)).cast("long").as("nodes"),
           countDistinct("label").cast("long").as("clusters"),
           sum("label").cast("long").as("label_sum"))
@@ -364,25 +412,18 @@ object DedupGates {
     // keep-best near-dup resolution: docs sharing a 2-token prefix pair
     // up, components form, and the longest member (n_chars, ties to the
     // smaller doc_id) survives each cluster. The integer score makes the
-    // cross-engine argmax exact.
-    // keep-best resolution: 2-token-prefix pair graph -> components
-    // (recursive min-reachable-id) -> per-cluster argmax on (n_chars,
-    // smaller id); singletons keep trivially via the left join
-    Gate("q_keep_best", """
+    // cross-engine argmax exact; singletons keep trivially via the
+    // replay's left join.
+    Gate("q_keep_best", s"""
       WITH RECURSIVE k AS (
         SELECT doc_id, n_chars,
                md5(array_to_string(list_slice(
-                 list_filter(string_split_regex(lower(text), '\s+'), x -> x <> ''),
+                 list_filter(string_split_regex(lower(text), '\\s+'), x -> x <> ''),
                  1, 2), ' ')) AS pk
         FROM documents),
       p AS (SELECT a.doc_id AS id1, b.doc_id AS id2
             FROM k a JOIN k b ON a.pk = b.pk AND a.doc_id < b.doc_id),
-      e AS (SELECT id1 AS a, id2 AS b FROM p UNION SELECT id2, id1 FROM p),
-      reach(src, dst) AS (
-        SELECT a, a FROM e
-        UNION
-        SELECT r.src, e.b FROM reach r JOIN e ON e.a = r.dst),
-      lab AS (SELECT src AS id, MIN(dst) AS label FROM reach GROUP BY src),
+      $componentLabelCtes,
       cl AS (SELECT k.doc_id, k.n_chars, COALESCE(lab.label, k.doc_id) AS cluster
              FROM k LEFT JOIN lab ON k.doc_id = lab.id),
       win AS (SELECT cluster, doc_id AS winner FROM (
@@ -400,11 +441,8 @@ object DedupGates {
       val keyed = d.select(col("doc_id"),
         md5(concat_ws(" ",
           slice(filter(split(lower(col("text")), "\\s+"), t => t =!= ""), 1, 2))).as("pk"))
-      val pairs = keyed.as("a").join(keyed.as("b"),
-          col("a.pk") === col("b.pk") && col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id").as("id1"), col("b.doc_id").as("id2"))
       Dedup.resolveNearDuplicates(
-          d.select(col("doc_id"), col("n_chars")), "doc_id", "n_chars", pairs)
+          d.select(col("doc_id"), col("n_chars")), "doc_id", "n_chars", keyPairs(keyed, "pk"))
         .agg(count(lit(1)).cast("long").as("docs"),
           countDistinct("cluster").cast("long").as("clusters"),
           sum(when(col("keep"), 1L).otherwise(0L)).cast("long").as("kept"),
@@ -440,9 +478,9 @@ object DedupGates {
     },
 
     // train/held-out decontamination: fuse-filter prune + exact verify
-    // (held-out stand-in = the 'de' slice); results exact, live oracle
-    // the filter only prunes (no false negatives) and the exact semi-join
-    // confirms, so the flagged set equals the plain fingerprint semi-join
+    // (held-out stand-in = the 'de' slice); the filter only prunes (no
+    // false negatives) and the exact semi-join confirms, so the flagged
+    // set equals the plain fingerprint semi-join the oracle runs
     Gate("q_decontaminate", """
       WITH f AS (
         SELECT doc_id,
@@ -460,24 +498,7 @@ object DedupGates {
     // exact n-gram Jaccard on STRING shingles (the Spark side hashes
     // shingles to 64 bits first; at 500-doc scale collisions are absent, so
     // set-based counts agree exactly)
-    Gate("q_ngram_jaccard", """
-      WITH toks AS (
-        SELECT doc_id, string_split_regex(lower(text), '\s+') AS t FROM documents),
-      sh AS (
-        SELECT DISTINCT doc_id, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS s
-        FROM (SELECT doc_id, t, unnest(generate_series(1, len(t) - 2)) AS i
-              FROM toks WHERE len(t) >= 3)),
-      flt AS (SELECT s FROM sh GROUP BY s HAVING COUNT(*) <= 1000),
-      f AS (SELECT sh.doc_id, sh.s FROM sh JOIN flt USING (s)),
-      sizes AS (SELECT doc_id, COUNT(*) AS sz FROM f GROUP BY doc_id),
-      common AS (
-        SELECT a.doc_id AS id1, b.doc_id AS id2, COUNT(*) AS c
-        FROM f a JOIN f b ON a.s = b.s AND a.doc_id < b.doc_id
-        GROUP BY 1, 2),
-      j AS (
-        SELECT c * 1.0 / (s1.sz + s2.sz - c) AS jac
-        FROM common JOIN sizes s1 ON common.id1 = s1.doc_id
-                    JOIN sizes s2 ON common.id2 = s2.doc_id)
+    Gate("q_ngram_jaccard", shingleOverlapCtes("j", "c * 1.0 / (s1.sz + s2.sz - c) AS jac") + """
       SELECT CAST(COUNT(*) AS BIGINT) AS pairs FROM j WHERE jac >= 0.2""") { (s, dir) =>
       sharedJaccardPairs(s, dir)
         .where(col("jaccard") >= 0.2)
@@ -487,27 +508,10 @@ object DedupGates {
     // asymmetric containment pairs (|A∩B|/|A|): subset/quote detection —
     // a short doc embedded in a long one scores near 1 where jaccard is
     // near 0. Same integer-ratio arithmetic both engines, sums
-    // micro-rounded.
-    // containment replayed from the same shingle/common/sizes relations;
-    // c/sz is the same integer-input IEEE division in both engines
-    Gate("q_containment", """
-      WITH toks AS (
-        SELECT doc_id, string_split_regex(lower(text), '\s+') AS t FROM documents),
-      sh AS (
-        SELECT DISTINCT doc_id, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS s
-        FROM (SELECT doc_id, t, unnest(generate_series(1, len(t) - 2)) AS i
-              FROM toks WHERE len(t) >= 3)),
-      flt AS (SELECT s FROM sh GROUP BY s HAVING COUNT(*) <= 1000),
-      f AS (SELECT sh.doc_id, sh.s FROM sh JOIN flt USING (s)),
-      sizes AS (SELECT doc_id, COUNT(*) AS sz FROM f GROUP BY doc_id),
-      common AS (
-        SELECT a.doc_id AS id1, b.doc_id AS id2, COUNT(*) AS c
-        FROM f a JOIN f b ON a.s = b.s AND a.doc_id < b.doc_id
-        GROUP BY 1, 2),
-      p AS (
-        SELECT id1, id2, c * 1.0 / s1.sz AS c1, c * 1.0 / s2.sz AS c2
-        FROM common JOIN sizes s1 ON common.id1 = s1.doc_id
-                    JOIN sizes s2 ON common.id2 = s2.doc_id)
+    // micro-rounded; c/sz is the same integer-input IEEE division in
+    // both engines.
+    Gate("q_containment",
+        shingleOverlapCtes("p", "id1, id2, c * 1.0 / s1.sz AS c1, c * 1.0 / s2.sz AS c2") + """
       SELECT CAST(COUNT(*) AS BIGINT) AS pairs,
              CAST(SUM(id1 * 3 + id2) AS BIGINT) AS pair_sum,
              CAST(SUM(CAST(round(c1 * 1e6) AS BIGINT)
@@ -523,18 +527,10 @@ object DedupGates {
 
     // graded contamination: per-doc fraction of distinct 3-shingles
     // found in the held-out slice (doc_id % 17 = 0); one broadcast
-    // exact-set match per shingle, every count replayable.
-    // graded contamination: distinct portable shingle hashes per doc,
-    // held slice = doc_id % 17 = 0, exact hit counts per corpus doc
-    // (one broadcast exact-set match per shingle; results are exact)
-    Gate("q_contamination", """
-      WITH toks AS (
-        SELECT doc_id, string_split_regex(lower(text), '\s+') AS t FROM documents),
-      sh AS (
-        SELECT DISTINCT doc_id,
-               CAST(('0x' || substring(md5(t[i] || ' ' || t[i+1] || ' ' || t[i+2]), 1, 15)) AS BIGINT) AS h
-        FROM (SELECT doc_id, t, unnest(generate_series(1, len(t) - 2)) AS i
-              FROM toks WHERE len(t) >= 3)),
+    // exact-set match per shingle over portable shingle hashes, every
+    // count replayable.
+    Gate("q_contamination", s"""
+      WITH $md5ShingleCtes,
       held AS (SELECT DISTINCT h FROM sh WHERE doc_id % 17 = 0),
       corp AS (SELECT doc_id, h FROM sh WHERE doc_id % 17 <> 0),
       tot AS (SELECT doc_id, COUNT(*) AS shingles FROM corp GROUP BY doc_id),
@@ -568,10 +564,9 @@ object DedupGates {
 
     // within-doc repeated-line strip: per-row HOF only (no shuffle);
     // per-doc md5-prefix checksums make the oracle sensitive to every
-    // kept/dropped/reordered byte
-    // within-doc line strip replay: explode lines with their index, keep
-    // the first row of each (doc, normalized-key) by line order, rebuild
-    // the document in order, checksum with the engine-portable md5 prefix
+    // kept/dropped/reordered byte. The replay explodes lines with their
+    // index, keeps the first row of each (doc, normalized-key) by line
+    // order and rebuilds the document in order.
     Gate("q_doc_line_dedup", """
       WITH l AS (
         SELECT doc_id, text, string_split(text, chr(10)) AS lines FROM documents),
@@ -605,9 +600,8 @@ object DedupGates {
     // corpus-level repeated-line removal (boilerplate pass) over a
     // derived multi-line view (the synthetic corpus is single-line, so
     // both engines split it on a frequent token first); rebuilt texts
-    // ride the hash path via md5-prefix checksums
-    // repeated-line removal replay: split the derived multi-line view,
-    // count line hashes corpus-wide, drop lines with count >= 3, rebuild
+    // ride the hash path via md5-prefix checksums; lines whose hash
+    // occurs >= 3 times corpus-wide are dropped
     Gate("q_line_dedup", """
       WITH d AS (
         SELECT doc_id,
@@ -635,19 +629,12 @@ object DedupGates {
       FROM reb""") { (s, _) =>
       val docs = s.table("documents").select(col("doc_id"),
         expr("replace(text, ' table ', '\n')").as("text"))
-      Dedup.dropDuplicateLines(docs, "text", "doc_id", minCount = 3)
-        .agg(count(lit(1)).cast("long").as("docs"),
-          sum("lines").cast("long").as("lines"),
-          sum("removed").cast("long").as("removed"),
-          sum(length(col("text_deduped"))).cast("long").as("chars"),
-          sum(conv(substring(md5(col("text_deduped")), 1, 15), 16, 10)
-            .cast("long") % 1000000000L).cast("long").as("checksum"))
+      rebuiltTextRollup(Dedup.dropDuplicateLines(docs, "text", "doc_id", minCount = 3), "lines")
     },
 
     // any-alignment repeated-span detection: sliding 6-token windows at
     // every offset, cross-corpus hot windows merged to maximal ranges;
-    // full md5 replay with the same range-merge walk
-    // any-alignment repeated spans: same md5 windows, same merge walk
+    // full md5 replay with the same windows and range-merge walk
     Gate("q_span_ranges", """
       WITH t AS (
         SELECT doc_id,

@@ -1,8 +1,8 @@
 package graft
 package gates
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, expr}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, conv, expr, md5, substring, sum}
 
 /** One driver-contract gate: its name, the DuckDB SQL that replays its
   * answer over the same fixture, and the Spark side. [[SparkEntry]]
@@ -42,6 +42,13 @@ object Gate {
     */
   private[gates] def vectorQueries(vecs: DataFrame, n: Int = 10): DataFrame =
     vecs.where(col("vec_id") < n).select(col("vec_id").as("qid"), col("vec").as("qvec"))
+
+  /** The sum over rows of `c`'s md5-prefix 60-bit hash mod 1e9, as
+    * BIGINT: the Spark side of the oracles' `SUM(CAST(('0x' ||
+    * substring(md5(x), 1, 15)) AS BIGINT) % 1000000000)` checksum.
+    */
+  private[gates] def md5PrefixSum(c: Column): Column =
+    sum(conv(substring(md5(c), 1, 15), 16, 10).cast("long") % 1000000000L).cast("long")
 
   private[gates] def deleteDirs(dirs: String*): Unit =
     dirs.foreach(d => streaming.FileStreams.deleteTree(java.nio.file.Paths.get(d)))

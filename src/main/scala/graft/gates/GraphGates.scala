@@ -52,54 +52,43 @@ object GraphGates {
       g
     }, release = _.unpersist())
 
+  /** The undirected simple purchase graph of the replays: distinct
+    * customer (even id) to supplier (odd id) edges `e0` and both
+    * directions in `edges(src, dst)`.
+    */
+  private val edgesCte = """e0 AS (
+        SELECT DISTINCT o.o_custkey * 2 AS src, l.l_suppkey * 2 + 1 AS dst
+        FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey),
+      edges AS (SELECT src, dst FROM e0 UNION ALL SELECT dst, src FROM e0)"""
+
+  /** `iterations` unrolled PageRank steps in ppb integer arithmetic after
+    * `r0`: step k spreads `r(k-1)` over `edges` by out-degree (`deg`) and
+    * mixes the damped inflow with 0.15 of `teleport`, an expression over
+    * `base b`. Truncating integer division (`//`, all values positive)
+    * matches Spark's `div` exactly, so ranks replay bit-for-bit.
+    */
+  private def rankSteps(iterations: Int, teleport: String): String =
+    (1 to iterations).map { k => s"""
+      it$k AS (SELECT e.dst AS node, SUM(r.rank // d.deg) AS inc
+              FROM edges e JOIN r${k - 1} r ON e.src = r.node JOIN deg d ON d.src = e.src
+              GROUP BY e.dst),
+      r$k AS (SELECT b.node, (150000 * $teleport) // 1000000
+                          + (850000 * COALESCE(i.inc, 0)) // 1000000 AS rank
+             FROM base b LEFT JOIN it$k i ON b.node = i.node)"""
+    }.mkString(",")
+
   val gates: Seq[Gate] = Seq(
     // PageRank centrality over the customer↔supplier purchase graph
     // (undirected bipartite; node ids disambiguated by parity). Five
     // power iterations in pure ppb integer arithmetic — the oracle
     // replays every iteration exactly via an unrolled CTE chain.
-    // PageRank: 5 power iterations in ppb integer arithmetic, unrolled —
-    // truncating integer division (`//`, all values positive) matches
-    // Spark's `div` exactly, so ranks replay bit-for-bit
-    Gate("q_pagerank", """
-      WITH e0 AS (
-        SELECT DISTINCT o.o_custkey * 2 AS src, l.l_suppkey * 2 + 1 AS dst
-        FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey),
-      edges AS (SELECT src, dst FROM e0 UNION ALL SELECT dst, src FROM e0),
+    Gate("q_pagerank", s"""
+      WITH $edgesCte,
       deg AS (SELECT src, CAST(COUNT(*) AS BIGINT) AS deg FROM edges GROUP BY src),
       nodes AS (SELECT DISTINCT src AS node FROM edges),
       n AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM nodes),
       base AS (SELECT nodes.node, n.n FROM nodes CROSS JOIN n),
-      r0 AS (SELECT node, 1000000000 // n AS rank FROM base),
-      it1 AS (SELECT e.dst AS node, SUM(r.rank // d.deg) AS inc
-              FROM edges e JOIN r0 r ON e.src = r.node JOIN deg d ON d.src = e.src
-              GROUP BY e.dst),
-      r1 AS (SELECT b.node, (150000 * (1000000000 // b.n)) // 1000000
-                          + (850000 * COALESCE(i.inc, 0)) // 1000000 AS rank
-             FROM base b LEFT JOIN it1 i ON b.node = i.node),
-      it2 AS (SELECT e.dst AS node, SUM(r.rank // d.deg) AS inc
-              FROM edges e JOIN r1 r ON e.src = r.node JOIN deg d ON d.src = e.src
-              GROUP BY e.dst),
-      r2 AS (SELECT b.node, (150000 * (1000000000 // b.n)) // 1000000
-                          + (850000 * COALESCE(i.inc, 0)) // 1000000 AS rank
-             FROM base b LEFT JOIN it2 i ON b.node = i.node),
-      it3 AS (SELECT e.dst AS node, SUM(r.rank // d.deg) AS inc
-              FROM edges e JOIN r2 r ON e.src = r.node JOIN deg d ON d.src = e.src
-              GROUP BY e.dst),
-      r3 AS (SELECT b.node, (150000 * (1000000000 // b.n)) // 1000000
-                          + (850000 * COALESCE(i.inc, 0)) // 1000000 AS rank
-             FROM base b LEFT JOIN it3 i ON b.node = i.node),
-      it4 AS (SELECT e.dst AS node, SUM(r.rank // d.deg) AS inc
-              FROM edges e JOIN r3 r ON e.src = r.node JOIN deg d ON d.src = e.src
-              GROUP BY e.dst),
-      r4 AS (SELECT b.node, (150000 * (1000000000 // b.n)) // 1000000
-                          + (850000 * COALESCE(i.inc, 0)) // 1000000 AS rank
-             FROM base b LEFT JOIN it4 i ON b.node = i.node),
-      it5 AS (SELECT e.dst AS node, SUM(r.rank // d.deg) AS inc
-              FROM edges e JOIN r4 r ON e.src = r.node JOIN deg d ON d.src = e.src
-              GROUP BY e.dst),
-      r5 AS (SELECT b.node, (150000 * (1000000000 // b.n)) // 1000000
-                          + (850000 * COALESCE(i.inc, 0)) // 1000000 AS rank
-             FROM base b LEFT JOIN it5 i ON b.node = i.node)
+      r0 AS (SELECT node, 1000000000 // n AS rank FROM base),${rankSteps(5, "(1000000000 // b.n)")}
       SELECT CAST(node AS BIGINT) AS node, CAST(rank AS BIGINT) AS rank_ppb
       FROM r5 ORDER BY rank_ppb DESC, node LIMIT 25""") { (s, dir) =>
       Graphs.pageRank(sharedPreparedGraph(s, dir), iterations = 5,
@@ -108,8 +97,8 @@ object GraphGates {
     },
 
     // co-purchase graph construction: suppliers sharing an order become
-    // weighted edges (pairs emitted row-locally per order); top 20
-    // co-purchase edges: distinct (order, supplier) self-joined per order
+    // weighted edges (pairs emitted row-locally per order); top 20. The
+    // replay self-joins distinct (order, supplier) per order.
     Gate("q_copurchase", """
       WITH os AS (SELECT DISTINCT l_orderkey AS g, CAST(l_suppkey AS BIGINT) AS i
                   FROM lineitem)
@@ -125,13 +114,10 @@ object GraphGates {
     },
 
     // out-degree distribution of the purchase graph: two chained
-    // partial aggregates; top-25 degrees by node count
-    // degree distribution: undirected simple graph, degree histogram
-    Gate("q_graph_stats", """
-      WITH e0 AS (
-        SELECT DISTINCT o.o_custkey * 2 AS src, l.l_suppkey * 2 + 1 AS dst
-        FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey),
-      edges AS (SELECT src, dst FROM e0 UNION ALL SELECT dst, src FROM e0),
+    // partial aggregates over the undirected simple graph; top-25
+    // degrees by node count
+    Gate("q_graph_stats", s"""
+      WITH $edgesCte,
       deg AS (SELECT src, CAST(COUNT(*) AS BIGINT) AS degree FROM edges GROUP BY src)
       SELECT degree, CAST(COUNT(*) AS BIGINT) AS nodes
       FROM deg GROUP BY degree ORDER BY nodes DESC, degree LIMIT 25""") { (s, dir) =>
@@ -149,14 +135,10 @@ object GraphGates {
 
     // personalized PageRank: teleport mass restricted to nation-0
     // suppliers — random-walk proximity ranks the "more like these"
-    // neighborhood; 3 unrolled iterations, same ppb integer contract
-    // personalized PageRank: same unrolled integer chain with the
+    // neighborhood; 3 unrolled iterations, same ppb integer contract,
     // teleport restricted to the (graph-present) seed set
-    Gate("q_ppr", """
-      WITH e0 AS (
-        SELECT DISTINCT o.o_custkey * 2 AS src, l.l_suppkey * 2 + 1 AS dst
-        FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey),
-      edges AS (SELECT src, dst FROM e0 UNION ALL SELECT dst, src FROM e0),
+    Gate("q_ppr", s"""
+      WITH $edgesCte,
       deg AS (SELECT src, CAST(COUNT(*) AS BIGINT) AS deg FROM edges GROUP BY src),
       nodes AS (SELECT DISTINCT src AS node FROM edges),
       seeds AS (SELECT DISTINCT s_suppkey * 2 + 1 AS node FROM supplier
@@ -168,25 +150,7 @@ object GraphGates {
                CASE WHEN g.node IS NOT NULL THEN 1000000000 // ns.ns
                     ELSE 0 END AS tele
         FROM nodes n LEFT JOIN gs g ON n.node = g.node CROSS JOIN ns),
-      r0 AS (SELECT node, tele AS rank FROM base),
-      it1 AS (SELECT e.dst AS node, SUM(r.rank // d.deg) AS inc
-              FROM edges e JOIN r0 r ON e.src = r.node JOIN deg d ON d.src = e.src
-              GROUP BY e.dst),
-      r1 AS (SELECT b.node, (150000 * b.tele) // 1000000
-                          + (850000 * COALESCE(i.inc, 0)) // 1000000 AS rank
-             FROM base b LEFT JOIN it1 i ON b.node = i.node),
-      it2 AS (SELECT e.dst AS node, SUM(r.rank // d.deg) AS inc
-              FROM edges e JOIN r1 r ON e.src = r.node JOIN deg d ON d.src = e.src
-              GROUP BY e.dst),
-      r2 AS (SELECT b.node, (150000 * b.tele) // 1000000
-                          + (850000 * COALESCE(i.inc, 0)) // 1000000 AS rank
-             FROM base b LEFT JOIN it2 i ON b.node = i.node),
-      it3 AS (SELECT e.dst AS node, SUM(r.rank // d.deg) AS inc
-              FROM edges e JOIN r2 r ON e.src = r.node JOIN deg d ON d.src = e.src
-              GROUP BY e.dst),
-      r3 AS (SELECT b.node, (150000 * b.tele) // 1000000
-                          + (850000 * COALESCE(i.inc, 0)) // 1000000 AS rank
-             FROM base b LEFT JOIN it3 i ON b.node = i.node)
+      r0 AS (SELECT node, tele AS rank FROM base),${rankSteps(3, "b.tele")}
       SELECT CAST(node AS BIGINT) AS node, CAST(rank AS BIGINT) AS rank_ppb
       FROM r3 WHERE rank > 0 ORDER BY rank_ppb DESC, node LIMIT 25""") { (s, dir) =>
       val seeds = s.sql(

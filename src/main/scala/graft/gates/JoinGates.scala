@@ -1,6 +1,7 @@
 package graft
 package gates
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.{EditDistance, Events, Joins}
@@ -13,89 +14,90 @@ import Gate.{deleteDirs, localResult}
   */
 object JoinGates {
 
+  /** An as-of purchase-to-click join gate: purchases `p` and clicks `c`
+    * from `events`, each purchase's matched `click_id` (or NULL), rolled
+    * up to counts and id checksums so every per-row match is on the hash
+    * path. `matched` completes the replay's `SELECT p.event_id,
+    * p.user_id,` row for `j`; `rightOrderCols` and `direction` go to
+    * [[Events.asofJoin]].
+    */
+  private def asofGate(name: String, matched: String, rightOrderCols: Seq[String],
+      direction: String): Gate = Gate(name, s"""
+      WITH p AS (
+        SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase'),
+      c AS (
+        SELECT user_id, ts, event_id AS click_id FROM events WHERE event_type = 'click'),
+      j AS (
+        SELECT p.event_id, p.user_id,$matched)
+      SELECT CAST(COUNT(*) AS BIGINT) AS purchases,
+             CAST(COUNT(click_id) AS BIGINT) AS matched,
+             CAST(SUM(click_id) AS BIGINT) AS click_id_sum,
+             CAST(SUM(CASE WHEN click_id IS NOT NULL
+                           THEN event_id * click_id % 1000003 END) AS BIGINT) AS pair_checksum
+      FROM j""") { (s, _) =>
+    val ev = s.table("events")
+    val purchases = ev.where(col("event_type") === "purchase")
+      .select(col("event_id"), col("user_id"), col("ts"))
+    val clicks = ev.where(col("event_type") === "click")
+      .select(col("user_id"), col("ts"), col("event_id").as("click_id"))
+    Events.asofJoin(purchases, clicks, Seq("user_id"), "ts", "ts",
+        Seq("click_id"), rightOrderCols = rightOrderCols, direction = direction)
+      .agg(count(lit(1)).cast("long").as("purchases"),
+        count(col("click_id")).cast("long").as("matched"),
+        sum(col("click_id")).cast("long").as("click_id_sum"),
+        sum(when(col("click_id").isNotNull,
+          col("event_id") * col("click_id") % lit(1000003L)))
+          .cast("long").as("pair_checksum"))
+  }
+
+  /** The plain lineitem-orders join rolled up per `o_orderpriority`: the
+    * answer the salted and the bucketed join must both reproduce.
+    */
+  private val priorityRollupSql = """
+      SELECT o_orderpriority,
+             CAST(COUNT(*) AS BIGINT) AS cnt,
+             CAST(SUM(CAST(ROUND(l_extendedprice * (1 - l_discount) * 100) AS BIGINT)) AS BIGINT) AS revenue_e2,
+             CAST(SUM(l_orderkey % 1000003) % 1000003 AS BIGINT) AS key_checksum
+      FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+      GROUP BY o_orderpriority ORDER BY o_orderpriority"""
+
+  /** The Spark twin of [[priorityRollupSql]] over an engine join whose
+    * order key is `key`.
+    */
+  private def priorityRollup(joined: DataFrame, key: String): DataFrame =
+    joined.groupBy(col("o_orderpriority"))
+      .agg(count(lit(1)).cast("long").as("cnt"),
+        sum(round(col("l_extendedprice") * (lit(1) - col("l_discount")) * 100)
+          .cast("long")).cast("long").as("revenue_e2"),
+        (sum(col(key) % lit(1000003L)) % lit(1000003L)).cast("long").as("key_checksum"))
+      .orderBy(col("o_orderpriority"))
+
   val gates: Seq[Gate] = Seq(
     // as-of join: attach each purchase's most recent preceding click
     // (same user, click ts <= purchase ts). The right side is unique on
     // (user_id, ts) in this corpus, so DuckDB's native ASOF LEFT JOIN
-    // replays it exactly; aggregate to matched/unmatched counts plus
-    // exact id/lag checksums so every per-row match is on the hash path.
-    // forward as-of: each purchase takes its EARLIEST click at-or-after
-    // (ties to the largest click_id — the documented rightOrderCols
-    // policy); same single-shuffle plan with the time axis reversed
-    // forward replay: per purchase the min-ts click at-or-after, ties to
-    // the largest click_id (the engine's rightOrderCols-asc last() winner)
-    Gate("q_asof_forward", """
-      WITH p AS (
-        SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase'),
-      c AS (
-        SELECT user_id, ts, event_id AS click_id FROM events WHERE event_type = 'click'),
-      j AS (
-        SELECT p.event_id, p.user_id,
+    // replays it exactly. Forward as-of: each purchase takes its EARLIEST
+    // click at-or-after, ties to the largest click_id (the documented
+    // rightOrderCols policy, the engine's rightOrderCols-asc last()
+    // winner); same single-shuffle plan with the time axis reversed.
+    asofGate("q_asof_forward", """
                (SELECT c.click_id FROM c
                 WHERE c.user_id = p.user_id AND c.ts >= p.ts
                 ORDER BY c.ts ASC, c.click_id DESC LIMIT 1) AS click_id
-        FROM p)
-      SELECT CAST(COUNT(*) AS BIGINT) AS purchases,
-             CAST(COUNT(click_id) AS BIGINT) AS matched,
-             CAST(SUM(click_id) AS BIGINT) AS click_id_sum,
-             CAST(SUM(CASE WHEN click_id IS NOT NULL
-                           THEN event_id * click_id % 1000003 END) AS BIGINT) AS pair_checksum
-      FROM j""") { (s, _) =>
-      val ev = s.table("events")
-      val purchases = ev.where(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"), col("ts"))
-      val clicks = ev.where(col("event_type") === "click")
-        .select(col("user_id"), col("ts"), col("event_id").as("click_id"))
-      Events.asofJoin(purchases, clicks, Seq("user_id"), "ts", "ts",
-          Seq("click_id"), rightOrderCols = Seq("click_id"),
-          direction = "forward")
-        .agg(count(lit(1)).cast("long").as("purchases"),
-          count(col("click_id")).cast("long").as("matched"),
-          sum(col("click_id")).cast("long").as("click_id_sum"),
-          sum(when(col("click_id").isNotNull,
-            col("event_id") * col("click_id") % lit(1000003L)))
-            .cast("long").as("pair_checksum"))
-    },
+        FROM p""", Seq("click_id"), "forward"),
 
     // native ASOF LEFT JOIN (inclusive l.ts >= r.ts) — right side unique
     // on (user_id, ts), so the match DuckDB picks is the one match
-    Gate("q_asof_join", """
-      WITH p AS (
-        SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase'),
-      c AS (
-        SELECT user_id, ts, event_id AS click_id FROM events WHERE event_type = 'click'),
-      j AS (
-        SELECT p.event_id, p.user_id, c.click_id
-        FROM p ASOF LEFT JOIN c ON p.user_id = c.user_id AND p.ts >= c.ts)
-      SELECT CAST(COUNT(*) AS BIGINT) AS purchases,
-             CAST(COUNT(click_id) AS BIGINT) AS matched,
-             CAST(SUM(click_id) AS BIGINT) AS click_id_sum,
-             CAST(SUM(CASE WHEN click_id IS NOT NULL
-                           THEN event_id * click_id % 1000003 END) AS BIGINT) AS pair_checksum
-      FROM j""") { (s, _) =>
-      val ev = s.table("events")
-      val purchases = ev.where(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"), col("ts"))
-      val clicks = ev.where(col("event_type") === "click")
-        .select(col("user_id"), col("ts"), col("event_id").as("click_id"))
-      Events.asofJoin(purchases, clicks, Seq("user_id"), "ts", "ts",
-          Seq("click_id"))
-        .agg(count(lit(1)).cast("long").as("purchases"),
-          count(col("click_id")).cast("long").as("matched"),
-          sum(col("click_id")).cast("long").as("click_id_sum"),
-          sum(when(col("click_id").isNotNull,
-            col("event_id") * col("click_id") % lit(1000003L)))
-            .cast("long").as("pair_checksum"))
-    },
+    asofGate("q_asof_join", """ c.click_id
+        FROM p ASOF LEFT JOIN c ON p.user_id = c.user_id AND p.ts >= c.ts""", Nil, "backward"),
 
     // bucketed range join: for each purchase, count the events (any
     // user) inside the hour after it. The binned equi-join must equal
     // the nested-loop BETWEEN join DuckDB runs — per-anchor counts and
     // id checksums ride the hash path. Bin width (15 min) is deliberately
     // SMALLER than the window so intervals span several bins and the
-    // explode/residual path is actually exercised.
-    // plain nested-loop BETWEEN join (DuckDB plans it as an IEJoin) — the
-    // binned equi-join must reproduce it exactly
+    // explode/residual path is actually exercised. (DuckDB plans the
+    // plain nested-loop BETWEEN join as an IEJoin.)
     Gate("q_range_join", """
       WITH a AS (
         SELECT event_id AS anchor_id, ts AS w_start, ts + INTERVAL 1 HOUR AS w_end
@@ -139,23 +141,13 @@ object JoinGates {
             .cast("long").as("pair_checksum"))
     },
 
-    // skew-salted join: orders x lineitem through Joins.saltedJoin in
-    // AUTO-threshold mode — the hot cutoff is the p80 of the per-key
-    // count distribution (derived per run, so it stays selective at
-    // every SF with zero tuning; the sf10 sweep showed constants rot).
-    // On the TPC-H 1..7-lineitems-per-order shape p80 lands on 6, so the
-    // max-size orders (~1/7 of keys) take the salted fan-out path and
-    // the rest join plain — BOTH paths carry real rows. The result is
-    // row-identical to the plain join by construction — the oracle
-    // replays the plain join + aggregate.
     // edit-distance similarity self-join (PassJoin segment pigeonhole +
     // bounded-levenshtein verify) over the part-name DICTIONARY — the
     // right altitude for fuzzy matching: dedupe to distinct names first
     // (the replicated fixture would otherwise make the pair OUTPUT
     // quadratic in corpus size), match the dictionary, broadcast the
-    // resolution back. Oracle replays the brute-force quadratic join.
-    // brute-force replay of the segment-filtered join over the name
-    // dictionary: every unordered pair within levenshtein distance 1
+    // resolution back. Oracle replays the brute-force quadratic join:
+    // every unordered dictionary pair within levenshtein distance 1.
     Gate("q_editdist_join", """
       WITH s AS (
         SELECT CAST(MIN(p_partkey) AS BIGINT) AS id, p_name AS nm
@@ -177,9 +169,8 @@ object JoinGates {
     // unique, so candidates scale with true matches. Dictionary
     // altitude (distinct names, min key as the representative) — the
     // replicated fixture would otherwise multiply every variant cell by
-    // the replica count and candidates by its square
-    // deletion-neighborhood gate replay: per-distance rollup of the
-    // brute-force pair set over customer names
+    // the replica count and candidates by its square. Oracle: the
+    // per-distance rollup of the brute-force pair set over customer names.
     Gate("q_editdist_names", """
       WITH s AS (
         SELECT CAST(MIN(c_custkey) AS BIGINT) AS id, c_name AS nm
@@ -217,8 +208,6 @@ object JoinGates {
     // literal trap as the LSH width/semdedup k), and the per-file index
     // stays over right-sized files, never an exploding tiny-file
     // inventory (the anti-pattern regime; SCALE.md r14).
-    // skipping-index replay: the pruned read is row-identical to the
-    // plain key-set semi-join over the full table
     Gate("q_skipping_index", """
       SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
              CAST(SUM(l_orderkey) AS BIGINT) AS key_sum,
@@ -255,43 +244,30 @@ object JoinGates {
       out
     },
 
-    // the salted join must be row-identical to the plain equi-join
-    Gate("q_salted_join", """
-      SELECT o_orderpriority,
-             CAST(COUNT(*) AS BIGINT) AS cnt,
-             CAST(SUM(CAST(ROUND(l_extendedprice * (1 - l_discount) * 100) AS BIGINT)) AS BIGINT) AS revenue_e2,
-             CAST(SUM(l_orderkey % 1000003) % 1000003 AS BIGINT) AS key_checksum
-      FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-      GROUP BY o_orderpriority ORDER BY o_orderpriority""") { (s, _) =>
+    // skew-salted join: orders x lineitem through Joins.saltedJoin in
+    // AUTO-threshold mode — the hot cutoff is the p80 of the per-key
+    // count distribution (derived per run, so it stays selective at
+    // every SF with zero tuning; the sf10 sweep showed constants rot).
+    // On the TPC-H 1..7-lineitems-per-order shape p80 lands on 6, so the
+    // max-size orders (~1/7 of keys) take the salted fan-out path and
+    // the rest join plain — BOTH paths carry real rows. The result is
+    // row-identical to the plain join by construction — the oracle
+    // replays the plain join + aggregate (row-identical by construction).
+    Gate("q_salted_join", priorityRollupSql) { (s, _) =>
       val li = s.table("lineitem").select(
         col("l_orderkey").as("orderkey"), col("l_extendedprice"), col("l_discount"))
       val ord = s.table("orders").select(
         col("o_orderkey").as("orderkey"), col("o_orderpriority"))
-      Joins.saltedJoin(li, ord, Seq("orderkey"),
-          saltFactor = 4, hotKeyQuantile = 0.8)
-        .groupBy(col("o_orderpriority"))
-        .agg(count(lit(1)).cast("long").as("cnt"),
-          sum(round(col("l_extendedprice") * (lit(1) - col("l_discount")) * 100)
-            .cast("long")).cast("long").as("revenue_e2"),
-          (sum(col("orderkey") % lit(1000003L)) % lit(1000003L))
-            .cast("long").as("key_checksum"))
-        .orderBy(col("o_orderpriority"))
+      priorityRollup(Joins.saltedJoin(li, ord, Seq("orderkey"),
+          saltFactor = 4, hotKeyQuantile = 0.8), "orderkey")
     },
 
     // co-located join from BUCKETED tables: both sides hash-bucketed on
     // the join key at write time, so the join itself plans with zero
     // Exchange (spec-asserted in BucketedTablesSpec) — the write-once /
-    // join-many layout. Results are identical to the plain join, which
-    // is what the oracle replays.
-    // bucketed-table join: the zero-Exchange layout must return exactly
-    // the plain join's answer
-    Gate("q_bucketed_join", """
-      SELECT o_orderpriority,
-             CAST(COUNT(*) AS BIGINT) AS cnt,
-             CAST(SUM(CAST(ROUND(l_extendedprice * (1 - l_discount) * 100) AS BIGINT)) AS BIGINT) AS revenue_e2,
-             CAST(SUM(l_orderkey % 1000003) % 1000003 AS BIGINT) AS key_checksum
-      FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-      GROUP BY o_orderpriority ORDER BY o_orderpriority""") { (s, _) =>
+    // join-many layout. It must return exactly the plain join's answer,
+    // which is what the oracle replays.
+    Gate("q_bucketed_join", priorityRollupSql) { (s, _) =>
       val base = streaming.FileStreams.createTempDir("graft_bucketed_").toString
       graft.sources.BucketedTables.saveBucketed(
         s.table("lineitem").select(col("l_orderkey"), col("l_extendedprice"), col("l_discount")),
@@ -301,16 +277,8 @@ object JoinGates {
         s.table("orders").select(col("o_orderkey").as("l_orderkey"), col("o_orderpriority")),
         "graft_b_orders", "l_orderkey", 8, sortCols = Seq("l_orderkey"),
         path = Some(s"$base/orders"))
-      val res = graft.sources.BucketedTables.bucketedJoin(s,
-          "graft_b_lineitem", "graft_b_orders", Seq("l_orderkey"))
-        .groupBy(col("o_orderpriority"))
-        .agg(count(lit(1)).cast("long").as("cnt"),
-          sum(round(col("l_extendedprice") * (lit(1) - col("l_discount")) * 100)
-            .cast("long")).cast("long").as("revenue_e2"),
-          (sum(col("l_orderkey") % lit(1000003L)) % lit(1000003L))
-            .cast("long").as("key_checksum"))
-        .orderBy(col("o_orderpriority"))
-      val out = localResult(s, res) // per-priority rollup; frees the copies
+      val out = localResult(s, priorityRollup(graft.sources.BucketedTables.bucketedJoin(s,
+          "graft_b_lineitem", "graft_b_orders", Seq("l_orderkey")), "l_orderkey"))
       // drop the catalog entries BEFORE their external locations vanish:
       // leaving graft_b_* registered at deleted paths makes any catalog
       // or table access between gate runs hit a missing-path error

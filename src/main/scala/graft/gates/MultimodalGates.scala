@@ -1,6 +1,7 @@
 package graft
 package gates
 
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Multimodal
@@ -11,12 +12,64 @@ import graft.operators.Multimodal
   */
 object MultimodalGates {
 
+  /** The frame-hash replay both video gates share: patterns `p = doc_id %
+    * 200`, each pattern's gray GIF frames, and the 9x8 nearest-sample dHash
+    * per (pattern, frame) as `fh(p, f, fhash)`. Gray frames make luma ==
+    * the gray level; bit 63 is the sign bit, contributed as -(2^63) in
+    * two's complement.
+    */
+  private val frameHashCtes = """WITH pats AS (SELECT DISTINCT doc_id % 200 AS p FROM documents),
+      dim AS (SELECT p, 6 + p % 5 AS w, 6 + (p // 5) % 5 AS h,
+                     2 + p % 4 AS n FROM pats),
+      frames AS (SELECT d.p, d.w, d.h, f.f
+                 FROM dim d, (SELECT unnest(range(5)) AS f) f WHERE f.f < d.n),
+      cells AS (
+        SELECT fr.p, fr.f, gr.gr, gc.gc,
+               (fr.p*31 + fr.f*29 + ((gc.gc * fr.w) // 9)*7
+                + ((gr.gr * fr.h) // 8)*13) % 256 AS s
+        FROM frames fr,
+             (SELECT unnest(range(8)) AS gr) gr,
+             (SELECT unnest(range(9)) AS gc) gc),
+      bits AS (
+        SELECT a.p, a.f, a.gr, a.gc, CASE WHEN a.s > b.s THEN 1 ELSE 0 END AS bit
+        FROM cells a JOIN cells b
+          ON a.p = b.p AND a.f = b.f AND a.gr = b.gr AND b.gc = a.gc + 1
+        WHERE a.gc < 8),
+      fh AS (
+        SELECT p, f, CAST(SUM(CASE WHEN bit = 1 THEN
+                 CASE WHEN gr * 8 + gc = 63 THEN (-9223372036854775807 - 1)
+                      ELSE (1::BIGINT << CAST(gr * 8 + gc AS INTEGER)) END
+               ELSE 0 END) AS BIGINT) AS fhash
+        FROM bits GROUP BY p, f)"""
+
+  /** The perceptual-hash gates' corpus: one payload per distinct pattern
+    * `doc_id % mod`, made by `synth` and hashed by `hash`, keyed by
+    * `media_id` = the pattern.
+    */
+  private def patternHashes(s: SparkSession, mod: Int)(
+      synth: (DataFrame, String) => DataFrame,
+      hash: (DataFrame, String, String) => DataFrame): DataFrame =
+    hash(synth(s.table("documents").select((col("doc_id") % mod).as("pat")).distinct(), "pat"),
+      "media_id", "payload")
+
+  /** The 20 largest groups of documents sharing a hash: each doc takes its
+    * pattern's `hashed` rows by a broadcast join, grouped by `hashCol`,
+    * with the `slot` aggregate per group.
+    */
+  private def hashGroups(s: SparkSession, mod: Int, hashed: DataFrame, hashCol: String,
+      slot: Column): DataFrame =
+    s.table("documents").select(col("doc_id"), (col("doc_id") % mod).as("media_id"))
+      .join(broadcast(hashed), Seq("media_id"))
+      .groupBy(hashCol)
+      .agg(count(lit(1)).cast("long").as("members"), slot)
+      .orderBy(col("members").desc, col(hashCol))
+      .limit(20)
+
   val gates: Seq[Gate] = Seq(
     // frame sampling over REAL decoded GIF durations (per-frame delay
-    // metadata read back from the GraphicControlExtension blocks)
-    // live analytic replay of frame sampling over real GIF durations:
-    // duration = frames * delay_cs * 10; sampled frames at 2 fps =
-    // max(1, floor(dur/1000*2)); ts sum = 500 * f * (f-1) / 2
+    // metadata read back from the GraphicControlExtension blocks), with a
+    // live analytic replay: duration = frames * delay_cs * 10; sampled
+    // frames at 2 fps = max(1, floor(dur/1000*2)); ts sum = 500 * f * (f-1) / 2
     Gate("q_multimodal_frames", """
       WITH d AS (
         SELECT doc_id, 2 + doc_id % 4 AS nf, 20 + (doc_id % 5) * 10 AS delay
@@ -38,9 +91,9 @@ object MultimodalGates {
 
     // REAL byte-level resize: PNG decode -> nearest-neighbor resample
     // -> PNG re-encode -> decode again; NN index arithmetic is integer,
-    // so DuckDB replays every resized pixel from the source formula
-    // live analytic replay of the resize: target dims via the same
-    // LEAST/CEIL arithmetic, then source pixel (x*w // tw, y*h // th)
+    // so DuckDB replays every resized pixel from the source formula:
+    // target dims via the same LEAST/CEIL arithmetic, then source pixel
+    // (x*w // tw, y*h // th)
     Gate("q_multimodal_resize", """
       WITH d AS (
         SELECT doc_id, 8 + doc_id % 9 AS w, 8 + (doc_id // 9) % 9 AS h FROM documents),
@@ -80,8 +133,6 @@ object MultimodalGates {
     // multi-frame encoder) decoded back frame by frame; the lossless
     // gray palette lets DuckDB recompute every decoded-pixel statistic
     // analytically from the frame formula
-    // live analytic replay of the GIF round-trip: the lossless gray
-    // palette makes decoded pixels equal the generator formula exactly
     Gate("q_multimodal_video", """
       WITH d AS (
         SELECT doc_id, 6 + doc_id % 5 AS w, 6 + (doc_id // 5) % 5 AS h,
@@ -123,13 +174,8 @@ object MultimodalGates {
     // and aggregate pixel statistics of the DECODED rasters. PNG is
     // lossless, so the DuckDB oracle recomputes every statistic
     // analytically from the pixel formula — any encoder/decoder/feature
-    // bug breaks the hash match. Resize planning runs on the real dims.
-    // LIVE oracle for the real-codec round-trip: Spark routes pixels
-    // through actual PNG encode (javax.imageio) -> bytes -> PNG decode ->
-    // feature extraction; DuckDB recomputes the identical statistics
-    // analytically from the deterministic pixel formula (PNG is lossless,
-    // so the decoded raster equals the source pattern bit-for-bit). The
-    // resize column replays Spark's double arithmetic op-for-op (IEEE
+    // bug breaks the hash match. Resize planning runs on the real dims;
+    // the resize column replays Spark's double arithmetic op-for-op (IEEE
     // determinism: same ops, same order, same doubles).
     Gate("q_multimodal_decode", """
       WITH d AS (
@@ -169,10 +215,8 @@ object MultimodalGates {
     // dHash'd through the REAL PNG decode, fanned back to documents by
     // a broadcast join, grouped by hash. DuckDB recomputes every hash
     // analytically from the pixel formula (nearest-sample grid + integer
-    // luma + sign-bit two's complement).
-    // image dHash replay: nearest-sample 9x8 grid from the pixel formula,
-    // integer luma, bit gr*8+gc set iff s(gc) > s(gc+1); bit 63 is the
-    // sign bit, contributed as -(2^63) in two's complement
+    // luma, bit gr*8+gc set iff s(gc) > s(gc+1); bit 63 is the sign bit,
+    // contributed as -(2^63) in two's complement).
     Gate("q_image_dedup", """
       WITH pats AS (SELECT DISTINCT doc_id % 500 AS p FROM documents),
       dim AS (SELECT p, 8 + p % 9 AS w, 8 + (p // 9) % 9 AS h FROM pats),
@@ -203,96 +247,33 @@ object MultimodalGates {
              CAST(MIN(d.doc_id) AS BIGINT) AS min_doc
       FROM docs d JOIN hash h ON d.p = h.p
       GROUP BY h.dhash ORDER BY members DESC, dhash LIMIT 20""") { (s, _) =>
-      val docs = s.table("documents")
-      val pats = docs.select((col("doc_id") % 500).as("pat")).distinct()
-      val hashed = Multimodal.dHash64(
-        Multimodal.synthesizePngPayloads(pats, "pat"), "media_id", "payload")
-      docs.select(col("doc_id"), (col("doc_id") % 500).as("media_id"))
-        .join(broadcast(hashed), Seq("media_id"))
-        .groupBy("dhash")
-        .agg(count(lit(1)).cast("long").as("members"),
-          min("doc_id").cast("long").as("min_doc"))
-        .orderBy(col("members").desc, col("dhash"))
-        .limit(20)
+      hashGroups(s, 500,
+        patternHashes(s, 500)(Multimodal.synthesizePngPayloads, Multimodal.dHash64),
+        "dhash", min("doc_id").cast("long").as("min_doc"))
     },
 
     // video frame-hash dedup: per-frame dHash through the REAL animated-
     // GIF decode (patterns doc_id mod 200), shot-matching groups on the
-    // frame hash; analytic replay of every frame hash
-    // video frame-hash replay: gray frames make luma == the gray level;
-    // same 9x8 nearest-sample dHash per (pattern, frame)
-    Gate("q_video_dedup", """
-      WITH pats AS (SELECT DISTINCT doc_id % 200 AS p FROM documents),
-      dim AS (SELECT p, 6 + p % 5 AS w, 6 + (p // 5) % 5 AS h,
-                     2 + p % 4 AS n FROM pats),
-      frames AS (SELECT d.p, d.w, d.h, f.f
-                 FROM dim d, (SELECT unnest(range(5)) AS f) f WHERE f.f < d.n),
-      cells AS (
-        SELECT fr.p, fr.f, gr.gr, gc.gc,
-               (fr.p*31 + fr.f*29 + ((gc.gc * fr.w) // 9)*7
-                + ((gr.gr * fr.h) // 8)*13) % 256 AS s
-        FROM frames fr,
-             (SELECT unnest(range(8)) AS gr) gr,
-             (SELECT unnest(range(9)) AS gc) gc),
-      bits AS (
-        SELECT a.p, a.f, a.gr, a.gc, CASE WHEN a.s > b.s THEN 1 ELSE 0 END AS bit
-        FROM cells a JOIN cells b
-          ON a.p = b.p AND a.f = b.f AND a.gr = b.gr AND b.gc = a.gc + 1
-        WHERE a.gc < 8),
-      fh AS (
-        SELECT p, f, CAST(SUM(CASE WHEN bit = 1 THEN
-                 CASE WHEN gr * 8 + gc = 63 THEN (-9223372036854775807 - 1)
-                      ELSE (1::BIGINT << CAST(gr * 8 + gc AS INTEGER)) END
-               ELSE 0 END) AS BIGINT) AS fhash
-        FROM bits GROUP BY p, f),
+    // frame hash; analytic replay of every frame hash ([[frameHashCtes]])
+    Gate("q_video_dedup", s"""
+      $frameHashCtes,
       docs AS (SELECT doc_id, doc_id % 200 AS p FROM documents)
       SELECT fh.fhash, CAST(COUNT(*) AS BIGINT) AS members,
              CAST(MIN(d.doc_id * 1000 + fh.f) AS BIGINT) AS min_slot
       FROM docs d JOIN fh ON d.p = fh.p
       GROUP BY fh.fhash ORDER BY members DESC, fhash LIMIT 20""") { (s, _) =>
-      val docs = s.table("documents")
-      val pats = docs.select((col("doc_id") % 200).as("pat")).distinct()
-      val fh = Multimodal.frameDHashes(
-        Multimodal.synthesizeGifPayloads(pats, "pat"), "media_id", "payload")
-      docs.select(col("doc_id"), (col("doc_id") % 200).as("media_id"))
-        .join(broadcast(fh), Seq("media_id"))
-        .groupBy("fhash")
-        .agg(count(lit(1)).cast("long").as("members"),
-          min(col("doc_id") * 1000 + col("frame_idx")).cast("long").as("min_slot"))
-        .orderBy(col("members").desc, col("fhash"))
-        .limit(20)
+      hashGroups(s, 200,
+        patternHashes(s, 200)(Multimodal.synthesizeGifPayloads, Multimodal.frameDHashes),
+        "fhash", min(col("doc_id") * 1000 + col("frame_idx")).cast("long").as("min_slot"))
     },
 
     // video scene-cut detection: consecutive-frame dHash Hamming
     // distance over the real GIF decode; a cut = distance above
     // threshold. Composed from frameDHashes + a frame-ordered window
     // per clip + bit_count(xor) — every hash and distance replays
-    // analytically.
-    // scene cuts: the q_video_dedup frame-hash chain + lag/xor/bit_count
-    Gate("q_scene_cuts", """
-      WITH pats AS (SELECT DISTINCT doc_id % 200 AS p FROM documents),
-      dim AS (SELECT p, 6 + p % 5 AS w, 6 + (p // 5) % 5 AS h,
-                     2 + p % 4 AS n FROM pats),
-      frames AS (SELECT d.p, d.w, d.h, f.f
-                 FROM dim d, (SELECT unnest(range(5)) AS f) f WHERE f.f < d.n),
-      cells AS (
-        SELECT fr.p, fr.f, gr.gr, gc.gc,
-               (fr.p*31 + fr.f*29 + ((gc.gc * fr.w) // 9)*7
-                + ((gr.gr * fr.h) // 8)*13) % 256 AS s
-        FROM frames fr,
-             (SELECT unnest(range(8)) AS gr) gr,
-             (SELECT unnest(range(9)) AS gc) gc),
-      bits AS (
-        SELECT a.p, a.f, a.gr, a.gc, CASE WHEN a.s > b.s THEN 1 ELSE 0 END AS bit
-        FROM cells a JOIN cells b
-          ON a.p = b.p AND a.f = b.f AND a.gr = b.gr AND b.gc = a.gc + 1
-        WHERE a.gc < 8),
-      fh AS (
-        SELECT p, f, CAST(SUM(CASE WHEN bit = 1 THEN
-                 CASE WHEN gr * 8 + gc = 63 THEN (-9223372036854775807 - 1)
-                      ELSE (1::BIGINT << CAST(gr * 8 + gc AS INTEGER)) END
-               ELSE 0 END) AS BIGINT) AS fhash
-        FROM bits GROUP BY p, f),
+    // analytically (the q_video_dedup frame-hash chain + lag/xor/bit_count).
+    Gate("q_scene_cuts", s"""
+      $frameHashCtes,
       d AS (
         SELECT p, f, fhash,
                lag(fhash) OVER (PARTITION BY p ORDER BY f) AS prev
@@ -305,10 +286,7 @@ object MultimodalGates {
              CAST(SUM(CASE WHEN dist >= 12 THEN 1 ELSE 0 END) AS BIGINT) AS cuts,
              CAST(SUM(COALESCE(dist, 0)) AS BIGINT) AS dist_sum
       FROM dist GROUP BY p ORDER BY pat LIMIT 40""") { (s, _) =>
-      val docs = s.table("documents")
-      val pats = docs.select((col("doc_id") % 200).as("pat")).distinct()
-      val fh = Multimodal.frameDHashes(
-        Multimodal.synthesizeGifPayloads(pats, "pat"), "media_id", "payload")
+      val fh = patternHashes(s, 200)(Multimodal.synthesizeGifPayloads, Multimodal.frameDHashes)
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("media_id").orderBy("frame_idx")
       fh.withColumn("prev", lag(col("fhash"), 1).over(w))
@@ -325,9 +303,9 @@ object MultimodalGates {
 
     // audio dedup by waveform fingerprint: the image gate's audio twin —
     // patterns doc_id mod 300, REAL WAV decode, 65-probe sign signature,
-    // analytic DuckDB replay of every fingerprint
-    // audio fingerprint replay: sample formula ((p*31 + i*17) % 4001) -
-    // 2000 probed at the 65 positions k*N//65; bit 63 = sign bit
+    // analytic DuckDB replay of every fingerprint: sample formula
+    // ((p*31 + i*17) % 4001) - 2000 probed at the 65 positions k*N//65;
+    // bit 63 = sign bit
     Gate("q_audio_dedup", """
       WITH pats AS (SELECT DISTINCT doc_id % 300 AS p FROM documents),
       dim AS (SELECT p, (400 + (p % 7) * 100) * (1 + p % 2) AS n FROM pats),
@@ -347,17 +325,9 @@ object MultimodalGates {
              CAST(MIN(d.doc_id) AS BIGINT) AS min_doc
       FROM docs d JOIN fp f ON d.p = f.p
       GROUP BY f.afp ORDER BY members DESC, afp LIMIT 20""") { (s, _) =>
-      val docs = s.table("documents")
-      val pats = docs.select((col("doc_id") % 300).as("pat")).distinct()
-      val fps = Multimodal.audioFingerprint64(
-        Multimodal.synthesizeWavPayloads(pats, "pat"), "media_id", "payload")
-      docs.select(col("doc_id"), (col("doc_id") % 300).as("media_id"))
-        .join(broadcast(fps), Seq("media_id"))
-        .groupBy("afp")
-        .agg(count(lit(1)).cast("long").as("members"),
-          min("doc_id").cast("long").as("min_doc"))
-        .orderBy(col("members").desc, col("afp"))
-        .limit(20)
+      hashGroups(s, 300,
+        patternHashes(s, 300)(Multimodal.synthesizeWavPayloads, Multimodal.audioFingerprint64),
+        "afp", min("doc_id").cast("long").as("min_doc"))
     },
 
     // real-WAV round-trip: pixels' audio sibling. Samples route through
@@ -365,10 +335,8 @@ object MultimodalGates {
     // extraction; PCM is lossless, so DuckDB recomputes sample sums,
     // abs-sums, and zero crossings analytically from the sample formula.
     // Capped at 2000 clips so the oracle's generated-series replay stays
-    // tractable at every sf.
-    // live analytic replay of the WAV round-trip: PCM is lossless, so the
-    // decoded-sample stats equal the generator formula's stats; zero
-    // crossings need the lag window over the regenerated sample series
+    // tractable at every sf. Zero crossings need the lag window over the
+    // regenerated sample series.
     Gate("q_multimodal_audio", """
       WITH ids AS (
         SELECT doc_id AS id, 400 + (doc_id % 7) * 100 AS frames, 1 + doc_id % 2 AS ch

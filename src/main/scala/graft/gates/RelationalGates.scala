@@ -1,6 +1,7 @@
 package graft
 package gates
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Changelog, Dedup, Events, Profile}
@@ -11,6 +12,87 @@ import graft.operators.{Changelog, Dedup, Events, Profile}
   * compaction.
   */
 object RelationalGates {
+
+  /** Recursive-CTE replay of the per-key integer EWMA (alpha 0.3) over
+    * the `view` events of users with `user_id % 7 = 0`, rolled up so the
+    * full per-row fold is pinned; shared by q_ewma and q_stream_ewma (the
+    * streaming drain must emit the batch fold row for row). Toward-zero
+    * division via (x - x % 1e6) / 1e6: DuckDB % is C-style like the
+    * JVM's, so the subtraction leaves an exactly divisible numerator.
+    */
+  private[gates] val ewmaOracleSql = """
+      WITH RECURSIVE ev AS (
+        SELECT user_id AS k, epoch_us(ts) AS us,
+               CAST(round(value * 1e6) AS BIGINT) AS v
+        FROM events WHERE event_type = 'view' AND user_id % 7 = 0),
+      o AS (SELECT k, us, v,
+                   row_number() OVER (PARTITION BY k ORDER BY us, v) AS rn
+            FROM ev),
+      r AS (
+        SELECT k, rn, v, v AS e, CAST(0 AS BIGINT) AS d
+        FROM o WHERE rn = 1
+        UNION ALL
+        SELECT o.k, o.rn, o.v,
+               ((300000 * o.v + 700000 * r.e) -
+                ((300000 * o.v + 700000 * r.e) % 1000000)) // 1000000 AS e,
+               o.v - r.e AS d
+        FROM r JOIN o ON o.k = r.k AND o.rn = r.rn + 1)
+      SELECT CAST(COUNT(*) AS BIGINT) AS points,
+             CAST(COUNT(DISTINCT k) AS BIGINT) AS keys,
+             CAST(SUM(e) AS BIGINT) AS ewma_sum,
+             CAST(SUM(ABS(d)) AS BIGINT) AS abs_dev_sum,
+             CAST(MAX(ABS(d)) AS BIGINT) AS max_abs_dev
+      FROM r"""
+
+  /** Gap sessionization of `events` per user, breaking on a gap over 30
+    * min (events exactly 30 min apart merge): `x` flags the breaks and
+    * `sess(user_id, us, sid)` numbers each user's sessions.
+    */
+  private[gates] val sessionCtes = """x AS (
+        SELECT user_id, ts, event_id, epoch_us(ts) AS us,
+               CASE WHEN lag(epoch_us(ts)) OVER w IS NULL
+                      OR epoch_us(ts) - lag(epoch_us(ts)) OVER w > 1800000000
+                    THEN 1 ELSE 0 END AS brk
+        FROM events
+        WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
+      sess AS (
+        SELECT user_id, us,
+               SUM(brk) OVER (PARTITION BY user_id ORDER BY ts, event_id
+                              ROWS UNBOUNDED PRECEDING) AS sid
+        FROM x)"""
+
+  /** Changelog compaction replay: each user's latest event (ts, then
+    * event_id), dropped when it is the 'error' tombstone.
+    */
+  private val latestPerUserSql = """
+      WITH latest AS (
+        SELECT user_id, event_type, value, ts, event_id,
+               row_number() OVER (PARTITION BY user_id
+                                  ORDER BY ts DESC, event_id DESC) AS rn
+        FROM events)
+      SELECT user_id, event_type AS last_type,
+             CAST(round(value * 100) AS BIGINT) AS value_e2,
+             epoch_us(ts) AS ts_us, event_id
+      FROM latest WHERE rn = 1 AND event_type <> 'error'
+      ORDER BY user_id"""
+
+  /** The Spark side of [[latestPerUserSql]]'s projection and order. */
+  private def latestPerUser(latest: DataFrame): DataFrame =
+    latest.select(col("user_id"), col("event_type").as("last_type"),
+        round(col("value") * 100).cast("long").as("value_e2"),
+        unix_micros(col("ts")).as("ts_us"), col("event_id"))
+      .orderBy("user_id")
+
+  /** Per-1024-key-bucket checksums of the z-order keys `z(zkey)`, in
+    * DuckDB and Spark SQL alike.
+    */
+  private val zBucketRollup = """
+      SELECT CAST(zkey >> 10 AS BIGINT) AS zbucket,
+             CAST(COUNT(*) AS BIGINT) AS cnt,
+             CAST(SUM(zkey) AS BIGINT) AS zsum,
+             CAST(MIN(zkey) AS BIGINT) AS zmin,
+             CAST(MAX(zkey) AS BIGINT) AS zmax
+      FROM z GROUP BY zbucket ORDER BY zbucket"""
 
   val gates: Seq[Gate] = Seq(
     Gate.sameSql("q1_agg", """
@@ -44,9 +126,8 @@ object RelationalGates {
     // sliding event-time windows (1-day window, 6-hour slide): every
     // event contributes to exactly 4 overlapping windows — the Spark
     // window() multi-assignment semantics, replayed in the oracle by
-    // enumerating the 4 aligned starts per event
-    // sliding-window replay: the 4 windows containing ts start at
-    // 6h*floor(ts/6h) - o*6h for o in 0..3 (all satisfy ts < start+24h)
+    // enumerating the 4 aligned starts per event: 6h*floor(ts/6h) - o*6h
+    // for o in 0..3 (all satisfy ts < start+24h)
     Gate("q_events_sliding", """
       WITH e AS (
         SELECT epoch_us(ts) AS us, event_type,
@@ -112,19 +193,8 @@ object RelationalGates {
 
     // gap-based sessionization: one shuffle on user_id, running-sum
     // session index, co-partitioned per-session rollup
-    Gate("q_sessionize", """
-      WITH x AS (
-        SELECT user_id, ts, event_id, epoch_us(ts) AS us,
-               CASE WHEN lag(epoch_us(ts)) OVER w IS NULL
-                      OR epoch_us(ts) - lag(epoch_us(ts)) OVER w > 1800000000
-                    THEN 1 ELSE 0 END AS brk
-        FROM events
-        WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-      sess AS (
-        SELECT user_id, us,
-               SUM(brk) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                              ROWS UNBOUNDED PRECEDING) AS sid
-        FROM x),
+    Gate("q_sessionize", s"""
+      WITH $sessionCtes,
       g AS (
         SELECT user_id, sid, COUNT(*) AS n, MAX(us) - MIN(us) AS dur
         FROM sess GROUP BY user_id, sid)
@@ -208,34 +278,9 @@ object RelationalGates {
 
     // per-key EWMA: exact integer recursion (alpha 0.3), rolled up so
     // the full per-row fold is pinned without a 15k-row output; the
-    // DuckDB oracle replays the recursion with a recursive CTE and
-    // toward-zero division
-    // recursive-CTE replay of the integer EWMA recursion; toward-zero
-    // division via (x - x % 1e6) / 1e6 (DuckDB % is C-style like the
-    // JVM's, so the subtraction leaves an exactly divisible numerator)
-    Gate("q_ewma", """
-      WITH RECURSIVE ev AS (
-        SELECT user_id AS k, epoch_us(ts) AS us,
-               CAST(round(value * 1e6) AS BIGINT) AS v
-        FROM events WHERE event_type = 'view' AND user_id % 7 = 0),
-      o AS (SELECT k, us, v,
-                   row_number() OVER (PARTITION BY k ORDER BY us, v) AS rn
-            FROM ev),
-      r AS (
-        SELECT k, rn, v, v AS e, CAST(0 AS BIGINT) AS d
-        FROM o WHERE rn = 1
-        UNION ALL
-        SELECT o.k, o.rn, o.v,
-               ((300000 * o.v + 700000 * r.e) -
-                ((300000 * o.v + 700000 * r.e) % 1000000)) // 1000000 AS e,
-               o.v - r.e AS d
-        FROM r JOIN o ON o.k = r.k AND o.rn = r.rn + 1)
-      SELECT CAST(COUNT(*) AS BIGINT) AS points,
-             CAST(COUNT(DISTINCT k) AS BIGINT) AS keys,
-             CAST(SUM(e) AS BIGINT) AS ewma_sum,
-             CAST(SUM(ABS(d)) AS BIGINT) AS abs_dev_sum,
-             CAST(MAX(ABS(d)) AS BIGINT) AS max_abs_dev
-      FROM r""") { (s, _) =>
+    // DuckDB oracle replays the recursion with a recursive CTE
+    // ([[ewmaOracleSql]])
+    Gate("q_ewma", ewmaOracleSql) { (s, _) =>
       Events.ewmaSmooth(
           s.table("events").where(col("event_type") === "view" &&
             col("user_id") % 7 === 0),
@@ -247,15 +292,11 @@ object RelationalGates {
           max(abs(col("dev_e6"))).cast("long").as("max_abs_dev"))
     },
 
-    // distribution drift: view-event values vs purchase-event values
-    // histogrammed over the same range; per-slot counts, micro-unit
-    // occupancy fractions, and the integer L1 drift number
     // unknown-domain quantiles: min/max pass + [min,max) hist fit with
-    // the virtual max bin; both passes replayed exactly in SQL
-    // min/max pass + histogram interpolation replay: bin = LEAST(nbins-1,
-    // FLOOR((x-lo)/width)), rank q*n walked through the occupied-bin
-    // cumulative counts, value = lo + width*(b + (rank-cum)/c); the max
-    // values (x >= hi) are the virtual bin at hi
+    // the virtual max bin; both passes replayed exactly in SQL: bin =
+    // LEAST(nbins-1, FLOOR((x-lo)/width)), rank q*n walked through the
+    // occupied-bin cumulative counts, value = lo + width*(b +
+    // (rank-cum)/c); the max values (x >= hi) are the virtual bin at hi
     Gate("q_quantiles_auto", """
       WITH v AS (SELECT CAST(value AS DOUBLE) AS x FROM events WHERE value IS NOT NULL),
       mm AS (SELECT MIN(x) AS lo, MAX(x) AS hi FROM v),
@@ -286,8 +327,10 @@ object RelationalGates {
         .orderBy("q_ppm")
     },
 
-    // drift replay: both histograms rebuilt with the q_histogram slot
-    // arithmetic, fractions micro-rounded, L1 summed over integers
+    // distribution drift: view-event values vs purchase-event values
+    // histogrammed over the same range (the q_histogram slot arithmetic);
+    // per-slot counts, micro-unit occupancy fractions, and the integer
+    // L1 drift number
     Gate("q_drift", """
       WITH so AS (
         SELECT CASE WHEN value < 0.0 THEN 0 WHEN value >= 500.0 THEN 21
@@ -333,8 +376,7 @@ object RelationalGates {
     // bounded-heap per-group top-k: the k highest-balance customers per
     // nation WITHOUT sorting any group (k pairs per partition cross the
     // shuffle). Deterministic (ord DESC, payload ASC) order makes the
-    // window-function replay exact.
-    // bounded-heap top-k == row_number window replay (payloads unique)
+    // window-function replay exact (payloads unique).
     Gate("q_topk", """
       SELECT c_nationkey, CAST(rn - 1 AS INT) AS rank,
              CAST(bal_e2 AS BIGINT) AS bal_e2, CAST(c_custkey AS BIGINT) AS custkey
@@ -358,10 +400,8 @@ object RelationalGates {
     // scaled values. Every occupied bin count rides the hash path (explode),
     // and the interpolated median/p90 are micro-rounded doubles whose
     // arithmetic (rank walk + within-bin interpolation) DuckDB replays from
-    // its own bin counts with a window cumsum.
-    // equi-width histogram replay: slot = 1 + floor(x/width) (0/nbins+1 for
-    // outliers, matching hist_counts layout); quantiles re-derived from the
-    // bin counts with the same rank-walk interpolation arithmetic
+    // its own bin counts with a window cumsum. Replay slot = 1 +
+    // floor(x/width) (0/nbins+1 for outliers, matching hist_counts layout).
     Gate("q_histogram", """
       WITH v AS (
         SELECT event_type, CAST(CAST(ROUND(value * 100) AS BIGINT) AS DOUBLE) AS x
@@ -419,31 +459,18 @@ object RelationalGates {
     // z-order clustering key: Morton interleave of two bucketed part/supp
     // dimensions. Per-bucket integer checksums over the full key
     // distribution pin every bit position; DuckDB rebuilds the interleave
-    // from shift/mask arithmetic generated from the same (bits, dims).
-    // Morton interleave rebuilt from shift/mask arithmetic — generated from
-    // the same (bits=8, dims=2) the Spark expression folds
+    // from shift/mask arithmetic generated from the same (bits=8, dims=2)
+    // the Spark expression folds.
     Gate("q_zorder", {
       val terms = (for (j <- 0 until 8; (c, i) <- Seq("x" -> 0, "y" -> 1))
         yield s"(((${c} >> ${j}) & 1) << ${2 * j + i})").mkString(" + ")
       s"""
       WITH v AS (SELECT l_partkey % 256 AS x, l_suppkey % 256 AS y FROM lineitem),
-      z AS (SELECT CAST($terms AS BIGINT) AS zkey FROM v)
-      SELECT CAST(zkey >> 10 AS BIGINT) AS zbucket,
-             CAST(COUNT(*) AS BIGINT) AS cnt,
-             CAST(SUM(zkey) AS BIGINT) AS zsum,
-             CAST(MIN(zkey) AS BIGINT) AS zmin,
-             CAST(MAX(zkey) AS BIGINT) AS zmax
-      FROM z GROUP BY zbucket ORDER BY zbucket"""
+      z AS (SELECT CAST($terms AS BIGINT) AS zkey FROM v)$zBucketRollup"""
     }) { (s, _) =>
-      s.sql("""
-        SELECT CAST(zkey >> 10 AS BIGINT) AS zbucket,
-               CAST(COUNT(*) AS BIGINT) AS cnt,
-               CAST(SUM(zkey) AS BIGINT) AS zsum,
-               CAST(MIN(zkey) AS BIGINT) AS zmin,
-               CAST(MAX(zkey) AS BIGINT) AS zmax
-        FROM (SELECT zorder_key(8, l_partkey % 256, l_suppkey % 256) AS zkey
-              FROM lineitem)
-        GROUP BY zbucket ORDER BY zbucket""")
+      s.sql(s"""
+        WITH z AS (SELECT zorder_key(8, l_partkey % 256, l_suppkey % 256) AS zkey
+                   FROM lineitem)$zBucketRollup""")
     },
 
     // corpus snapshot diff: two derived versions of the documents table
@@ -477,54 +504,23 @@ object RelationalGates {
     // 'error' as the tombstone type — a key whose newest change is a
     // tombstone drops out; older tombstones are overridden. One
     // partial-aggregated struct-argmax, replayed by the oracle's
-    // window row_number form.
-    // changelog compaction: the window row_number replay of the
-    // struct-argmax form (ordering unique per key via event_id)
-    Gate("q_upsert", """
-      WITH latest AS (
-        SELECT user_id, event_type, value, ts, event_id,
-               row_number() OVER (PARTITION BY user_id
-                                  ORDER BY ts DESC, event_id DESC) AS rn
-        FROM events)
-      SELECT user_id, event_type AS last_type,
-             CAST(round(value * 100) AS BIGINT) AS value_e2,
-             epoch_us(ts) AS ts_us, event_id
-      FROM latest WHERE rn = 1 AND event_type <> 'error'
-      ORDER BY user_id""") { (s, _) =>
-      Changelog.compactLatest(s.table("events"), Seq("user_id"),
-          Seq("ts", "event_id"), col("event_type") === "error")
-        .select(col("user_id"), col("event_type").as("last_type"),
-          round(col("value") * 100).cast("long").as("value_e2"),
-          unix_micros(col("ts")).as("ts_us"), col("event_id"))
-        .orderBy("user_id")
+    // window row_number form (ordering unique per key via event_id).
+    Gate("q_upsert", latestPerUserSql) { (s, _) =>
+      latestPerUser(Changelog.compactLatest(s.table("events"), Seq("user_id"),
+          Seq("ts", "event_id"), col("event_type") === "error"))
     },
 
     // incremental MERGE: compact the first half-month into a snapshot,
     // apply the second half as a change slice — equals (and is oracle-
-    // checked against) the full-history compaction
-    // incremental merge: the oracle is the FULL-history compaction —
-    // snapshot+slice must reproduce it exactly
-    Gate("q_upsert_incr", """
-      WITH latest AS (
-        SELECT user_id, event_type, value, ts, event_id,
-               row_number() OVER (PARTITION BY user_id
-                                  ORDER BY ts DESC, event_id DESC) AS rn
-        FROM events)
-      SELECT user_id, event_type AS last_type,
-             CAST(round(value * 100) AS BIGINT) AS value_e2,
-             epoch_us(ts) AS ts_us, event_id
-      FROM latest WHERE rn = 1 AND event_type <> 'error'
-      ORDER BY user_id""") { (s, _) =>
+    // checked against) the FULL-history compaction: snapshot+slice must
+    // reproduce it exactly
+    Gate("q_upsert_incr", latestPerUserSql) { (s, _) =>
       val ev = s.table("events")
       val cut = lit("2024-01-16 00:00:00").cast("timestamp")
       val snap = Changelog.compactLatest(ev.where(col("ts") < cut),
         Seq("user_id"), Seq("ts", "event_id"), col("event_type") === "error")
-      Changelog.applyChanges(snap, ev.where(col("ts") >= cut),
-          Seq("user_id"), Seq("ts", "event_id"), col("event_type") === "error")
-        .select(col("user_id"), col("event_type").as("last_type"),
-          round(col("value") * 100).cast("long").as("value_e2"),
-          unix_micros(col("ts")).as("ts_us"), col("event_id"))
-        .orderBy("user_id")
+      latestPerUser(Changelog.applyChanges(snap, ev.where(col("ts") >= cut),
+          Seq("user_id"), Seq("ts", "event_id"), col("event_type") === "error"))
     },
   )
 }

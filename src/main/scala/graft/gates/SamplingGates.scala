@@ -1,16 +1,67 @@
 package graft
 package gates
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, Packing, Sampling, TextAnalysis}
 import Gate.localResult
-import DedupGates.{minhashPairsStagePath, sharedMinhashPairs}
+import DedupGates.{componentLabelCtes, exactDupPairs, exactDupPairsCte,
+  minhashPairsStagePath, sharedMinhashPairs}
 
 /** Deterministic sampling, splits and mixing: content-hash driven, so
   * every rerun draws the same rows.
   */
 object SamplingGates {
+
+  /** Docs and their doc_id sum per `key`, ordered by `key`. */
+  private def docsPer(df: DataFrame, key: String): DataFrame =
+    df.groupBy(key)
+      .agg(count(lit(1)).cast("long").as("docs"), sum("doc_id").cast("long").as("id_sum"))
+      .orderBy(key)
+
+  /** A leakage-safe split gate: the components of the `(id1, id2)` pair
+    * graph are the groups, the split hashes each doc's group label
+    * (singletons their own id) with the same md5 thresholds as
+    * `q_split`, and the gate hard-fails if ANY group spans two splits
+    * (the eval-contamination invariant, checked live) before rolling up
+    * per split. `pairsCte` declares the oracle's `p(id1, id2)` after
+    * `WITH RECURSIVE`; `pairs` is the engine's pair relation.
+    */
+  private def leakageSplit(name: String, pairsCte: String)(
+      pairs: (SparkSession, String) => DataFrame): Gate = Gate(name, s"""
+      WITH RECURSIVE$pairsCte,
+      $componentLabelCtes,
+      u AS (
+        SELECT d.doc_id,
+               CAST(('0x' || substring(md5(
+                 CAST(COALESCE(lab.label, d.doc_id) AS VARCHAR) || 'graft-split'), 1, 15)) AS BIGINT)
+                 / 1152921504606846976.0 AS u
+        FROM documents d LEFT JOIN lab ON lab.id = d.doc_id)
+      SELECT CASE WHEN u < 0.8 THEN 'train' WHEN u < 0.9 THEN 'val' ELSE 'test' END AS split,
+             CAST(COUNT(*) AS BIGINT) AS docs, CAST(SUM(doc_id) AS BIGINT) AS id_sum
+      FROM u GROUP BY 1 ORDER BY 1""") { (s, dir) =>
+    val clusters = Dedup.nearDuplicateClusters(pairs(s, dir))
+    // persisted: the zero-leak audit below AND the returned rollup both
+    // execute this relation — uncached, the documents⋈labels split join
+    // ran twice per gate (guide §5: reuse beats recompute; lineage kept
+    // so a post-clearCache re-execution still works)
+    val out = Sampling.assignSplitsByGroup(s.table("documents"), "doc_id",
+        clusters, "id", "label")
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val leaked = out
+      .join(clusters.withColumnRenamed("id", "doc_id"), Seq("doc_id"))
+      .groupBy("label").agg(countDistinct(col("split")).as("ns"))
+      .where(col("ns") > 1).count()
+    require(leaked == 0, s"$name LEAKED $leaked groups across splits")
+    // materialize the <=3-row rollup from the still-cached split and
+    // UNPERSIST before returning (round 16, advisor item): a returned
+    // live plan left the corpus-sized cached relation pinned for any
+    // non-harness caller — Bench's per-gate clearCache merely masked it
+    val rollup = localResult(s, docsPer(out, "split"))
+    out.unpersist()
+    rollup
+  }
 
   val gates: Seq[Gate] = Seq(
     // deterministic content-hash sample: the md5-prefix uniform weight is
@@ -35,138 +86,31 @@ object SamplingGates {
       SELECT CASE WHEN u < 0.8 THEN 'train' WHEN u < 0.9 THEN 'val' ELSE 'test' END AS split,
              CAST(COUNT(*) AS BIGINT) AS docs, CAST(SUM(doc_id) AS BIGINT) AS id_sum
       FROM u GROUP BY 1 ORDER BY 1""") { (s, _) =>
-      Sampling.assignSplits(s.table("documents"), "text")
-        .groupBy("split")
-        .agg(count(lit(1)).cast("long").as("docs"),
-          sum("doc_id").cast("long").as("id_sum"))
-        .orderBy("split")
+      docsPer(Sampling.assignSplits(s.table("documents"), "text"), "split")
     },
 
     // LEAKAGE-SAFE split (r13): exact-duplicate clusters land wholly in
     // one split — split decision hashes the group label, singletons
-    // their own id. The gate hard-fails if ANY group spans two splits
-    // (the eval-contamination invariant, checked live), then rolls up
-    // per split; the oracle replays clusters (recursive CTE), the
-    // grouped hash split, and the rollup.
-    // leakage-safe split: exact-dup clusters via the recursive reach CTE
-    // (q_dedup_clusters' replay), split hashed on the group key
-    // (min-label, singletons their own doc_id), same md5 thresholds
-    Gate("q_leakage_split", """
-      WITH RECURSIVE p AS (
-        SELECT a.doc_id AS id1, b.doc_id AS id2
-        FROM documents a JOIN documents b
-          ON md5(a.text) = md5(b.text) AND a.doc_id < b.doc_id),
-      e AS (SELECT id1 AS a, id2 AS b FROM p UNION SELECT id2, id1 FROM p),
-      reach(src, dst) AS (
-        SELECT a, a FROM e
-        UNION
-        SELECT r.src, e.b FROM reach r JOIN e ON e.a = r.dst),
-      lab AS (SELECT src AS id, MIN(dst) AS label FROM reach GROUP BY src),
-      u AS (
-        SELECT d.doc_id,
-               CAST(('0x' || substring(md5(
-                 CAST(COALESCE(lab.label, d.doc_id) AS VARCHAR) || 'graft-split'), 1, 15)) AS BIGINT)
-                 / 1152921504606846976.0 AS u
-        FROM documents d LEFT JOIN lab ON lab.id = d.doc_id)
-      SELECT CASE WHEN u < 0.8 THEN 'train' WHEN u < 0.9 THEN 'val' ELSE 'test' END AS split,
-             CAST(COUNT(*) AS BIGINT) AS docs, CAST(SUM(doc_id) AS BIGINT) AS id_sum
-      FROM u GROUP BY 1 ORDER BY 1""") { (s, _) =>
-      val d = s.table("documents").select(col("doc_id"), md5(col("text")).as("h"))
-      val pairs = d.as("a").join(d.as("b"),
-          col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id").as("id1"), col("b.doc_id").as("id2"))
-      val clusters = Dedup.nearDuplicateClusters(pairs)
-      // persisted: the zero-leak audit below AND the returned rollup both
-      // execute this relation — uncached, the documents⋈labels split join
-      // ran twice per gate (guide §5: reuse beats recompute; lineage kept
-      // so a post-clearCache re-execution still works)
-      val out = Sampling.assignSplitsByGroup(s.table("documents"), "doc_id",
-          clusters, "id", "label")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val leaked = out
-        .join(clusters.withColumnRenamed("id", "doc_id"), Seq("doc_id"))
-        .groupBy("label").agg(countDistinct(col("split")).as("ns"))
-        .where(col("ns") > 1).count()
-      require(leaked == 0,
-        s"leakage-safe split LEAKED $leaked groups across splits")
-      // materialize the <=3-row rollup from the still-cached split and
-      // UNPERSIST before returning (round 16, advisor item): a returned
-      // live plan left the corpus-sized cached relation pinned for any
-      // non-harness caller — Bench's per-gate clearCache merely masked it
-      val rollup = localResult(s, out.groupBy("split")
-        .agg(count(lit(1)).cast("long").as("docs"),
-          sum("doc_id").cast("long").as("id_sum"))
-        .orderBy("split"))
-      out.unpersist()
-      rollup
-    },
+    // their own id. The oracle replays the clusters with the recursive
+    // reach CTE (q_dedup_clusters' replay).
+    leakageSplit("q_leakage_split", s" $exactDupPairsCte")((s, _) => exactDupPairs(s)),
 
     // LEAKAGE-SAFE split over NEAR-duplicate clusters (r14): the leak
     // that motivates group-aware splitting is near-copies crossing
     // splits, so the groups here come from the REAL pipeline — portable
     // MinHash-LSH pairs -> connected components -> grouped hash split.
-    // Same hard zero-leakage require as q_leakage_split; the oracle
-    // replays components + split hash + rollup over the STAGED pair
-    // artifact (verified pair-by-pair by q_minhash_near_dup's oracle).
-    // near-dup leakage-safe split: components via recursive
-    // min-reachable-id over the STAGED pair artifact (which
-    // q_minhash_near_dup's oracle verifies pair-by-pair against its full
-    // independent minhash replay), then the SAME grouped md5 split hash
-    // and rollup as q_leakage_split — the oracle no longer recomputes an
-    // O(corpus) minhash chain single-node (the sf1cd timeout class)
-    Gate("q_leakage_split_near", s"""
-      WITH RECURSIVE
-      p AS (SELECT id1, id2 FROM read_parquet('$minhashPairsStagePath/*.parquet')),
-      e AS (SELECT id1 AS a, id2 AS b FROM p UNION SELECT id2, id1 FROM p),
-      reach(src, dst) AS (
-        SELECT a, a FROM e
-        UNION
-        SELECT r.src, e.b FROM reach r JOIN e ON e.a = r.dst),
-      lab AS (SELECT src AS id, MIN(dst) AS label FROM reach GROUP BY src),
-      u AS (
-        SELECT d.doc_id,
-               CAST(('0x' || substring(md5(
-                 CAST(COALESCE(lab.label, d.doc_id) AS VARCHAR) || 'graft-split'), 1, 15)) AS BIGINT)
-                 / 1152921504606846976.0 AS u
-        FROM documents d LEFT JOIN lab ON lab.id = d.doc_id)
-      SELECT CASE WHEN u < 0.8 THEN 'train' WHEN u < 0.9 THEN 'val' ELSE 'test' END AS split,
-             CAST(COUNT(*) AS BIGINT) AS docs, CAST(SUM(doc_id) AS BIGINT) AS id_sum
-      FROM u GROUP BY 1 ORDER BY 1""") { (s, dir) =>
-      // pairs from the STAGED shared relation (verified pair-by-pair by
-      // q_minhash_near_dup's oracle): both engines read the same parquet,
-      // so the DuckDB replay runs components+split over the artifact
-      // instead of recomputing an O(corpus) minhash chain single-node —
-      // the sf1cd oracle-timeout class (SCALE.md r14) and ~5 s of
-      // per-gate recompute at sf0.1 both gone
-      val pairs = sharedMinhashPairs(s, dir).select(col("id1"), col("id2"))
-      val clusters = Dedup.nearDuplicateClusters(pairs)
-      // persisted for the audit + rollup double execution (see
-      // q_leakage_split)
-      val out = Sampling.assignSplitsByGroup(s.table("documents"), "doc_id",
-          clusters, "id", "label")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val leaked = out
-        .join(clusters.withColumnRenamed("id", "doc_id"), Seq("doc_id"))
-        .groupBy("label").agg(countDistinct(col("split")).as("ns"))
-        .where(col("ns") > 1).count()
-      require(leaked == 0,
-        s"near-dup leakage-safe split LEAKED $leaked clusters across splits")
-      // <=3-row rollup collected + unpersist, as in q_leakage_split
-      val rollup = localResult(s, out.groupBy("split")
-        .agg(count(lit(1)).cast("long").as("docs"),
-          sum("doc_id").cast("long").as("id_sum"))
-        .orderBy("split"))
-      out.unpersist()
-      rollup
+    // Both engines read the STAGED pair artifact (verified pair-by-pair
+    // by q_minhash_near_dup's oracle against its full independent minhash
+    // replay), so the oracle no longer recomputes an O(corpus) minhash
+    // chain single-node (the sf1cd oracle-timeout class, SCALE.md r14)
+    // and the engine skips ~5 s of per-gate recompute at sf0.1.
+    leakageSplit("q_leakage_split_near", s"""
+      p AS (SELECT id1, id2 FROM read_parquet('$minhashPairsStagePath/*.parquet'))""") {
+      (s, dir) => sharedMinhashPairs(s, dir).select(col("id1"), col("id2"))
     },
 
-    // target-mixture rebalance: integer-ppm quota arithmetic, binding
-    // stratum fixes the scale, per-stratum content-hash prefix keeps
-    // the mix exact without upsampling
     // temperature-flattened mixture weights (sampling-alpha 0.6):
     // p_i ~ n_i^alpha with integer e6 weights and quotas
-    // integer-ppm quota replay: binding stratum scale -> per-stratum
-    // take -> content-hash prefix, all integer division
     Gate("q_temperature_mix", """
       WITH c AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS docs,
                         pow(CAST(COUNT(*) AS DOUBLE), 0.6) AS pw
@@ -181,6 +125,9 @@ object SamplingGates {
         .orderBy("source")
     },
 
+    // target-mixture rebalance: integer-ppm quota arithmetic, binding
+    // stratum fixes the scale, per-stratum content-hash prefix keeps
+    // the mix exact without upsampling; all integer division in the replay
     Gate("q_domain_mix", """
       WITH t AS (SELECT * FROM (VALUES ('src0', 400000), ('src1', 300000),
                                        ('src2', 200000), ('src3', 100000)) v(source, ppm)),
@@ -196,19 +143,14 @@ object SamplingGates {
              CAST(SUM(r.doc_id) AS BIGINT) AS id_sum
       FROM r JOIN q ON r.source = q.source AND r.rn <= q.take
       GROUP BY r.source ORDER BY r.source""") { (s, _) =>
-      Sampling.rebalanceMix(s.table("documents"), "source", "text", "doc_id",
-          Seq("src0" -> 0.4, "src1" -> 0.3, "src2" -> 0.2, "src3" -> 0.1))
-        .groupBy("source")
-        .agg(count(lit(1)).cast("long").as("docs"),
-          sum("doc_id").cast("long").as("id_sum"))
-        .orderBy("source")
+      docsPer(Sampling.rebalanceMix(s.table("documents"), "source", "text", "doc_id",
+          Seq("src0" -> 0.4, "src1" -> 0.3, "src2" -> 0.2, "src3" -> 0.1)), "source")
     },
 
     // contiguous block packing into 512-token sequences per source:
     // the assignment checksum (doc_id * (seq+1)) pins every block id,
-    // seq_pos sums pin the in-block offsets
-    // window-cumsum replay of contiguous block packing: exclusive cumsum
-    // in content-hash order, integer-divided by the 512-token budget
+    // seq_pos sums pin the in-block offsets. The replay is an exclusive
+    // window cumsum in content-hash order, integer-divided by the budget.
     Gate("q_pack", """
       WITH t AS (
         SELECT doc_id, source, text,
@@ -242,24 +184,11 @@ object SamplingGates {
     // exact dedup -> deterministic split assignment, composed from the
     // SAME operators the per-component gates verify. The oracle chains
     // the per-component SQL replays, so every intermediate row set (not
-    // just the final counts) must agree for the hashes to match.
-    // chained replay of the full curation pipeline: quality formula ->
-    // stopword-argmax language id -> keep-first dedup -> salted-hash split
-    Gate("q_curation", {
-      def inList(lang: String) =
-        graft.operators.LangId.stopwords(lang).map(w => s"'$w'").mkString("[", ", ", "]")
-      def hits(lang: String) =
-        s"len(list_filter(string_split_regex(lower(text), '\\s+'), x -> list_contains(${inList(lang)}, x))) AS $lang"
-      s"""
-      WITH m AS (
-        SELECT doc_id, text,
-               CAST(length(text) AS DOUBLE) AS chars,
-               CAST(len(string_split(text, ' ')) AS DOUBLE) AS words,
-               CAST(length(regexp_replace(text, '[A-Za-z0-9\\s]', '', 'g')) AS DOUBLE) AS punct,
-               CAST(len(list_filter(string_split_regex(lower(text), '\\s+'),
-                 x -> list_contains(['the','a','an','and','or','of','in','to','is','it','that','for','on','with','as'], x))) AS DOUBLE) AS sw_hits,
-               CAST(len(string_split_regex(lower(text), '\\s+')) AS DOUBLE) AS toks
-        FROM documents),
+    // just the final counts) must agree for the hashes to match: quality
+    // formula -> stopword-argmax language id -> keep-first dedup ->
+    // salted-hash split.
+    Gate("q_curation", s"""
+      WITH ${TextGates.qualityMetricsCte("doc_id, text,\n               ")},
       filt AS (
         SELECT doc_id, text FROM m
         WHERE least(1.0, greatest(0.0,
@@ -267,7 +196,7 @@ object SamplingGates {
               + 0.3 * (1.0 - least(punct / greatest(chars, 1.0) * 5.0, 1.0))
               + 0.3 * least(sw_hits / greatest(toks, 1.0) * 4.0, 1.0))) >= 0.5),
       lh AS (
-        SELECT doc_id, text, ${hits("de")}, ${hits("en")}, ${hits("es")}, ${hits("fr")}
+        SELECT doc_id, text, ${TextGates.stopwordHitCols}
         FROM filt),
       enl AS (
         SELECT doc_id, text FROM lh
@@ -290,8 +219,7 @@ object SamplingGates {
       SELECT split, CAST(COUNT(*) AS BIGINT) AS docs,
              CAST(SUM(doc_id) AS BIGINT) AS id_sum,
              CAST(SUM(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]'))) AS BIGINT) AS tokens
-      FROM sp GROUP BY split ORDER BY split"""
-    }) { (s, _) =>
+      FROM sp GROUP BY split ORDER BY split""") { (s, _) =>
       val docs = s.table("documents")
       val scored = TextAnalysis.withQualityMetrics(docs, "text")
         .where(col("quality_score") >= 0.5)
@@ -312,11 +240,7 @@ object SamplingGates {
               row_number() OVER (PARTITION BY lang ORDER BY md5(text), doc_id) AS rn
             FROM documents)
       WHERE rn <= 50 GROUP BY lang ORDER BY lang""") { (s, _) =>
-      Sampling.stratifiedTake(s.table("documents"), "lang", "text", 50, "doc_id")
-        .groupBy("lang")
-        .agg(count(lit(1)).cast("long").as("docs"),
-          sum("doc_id").cast("long").as("id_sum"))
-        .orderBy("lang")
+      docsPer(Sampling.stratifiedTake(s.table("documents"), "lang", "text", 50, "doc_id"), "lang")
     },
 
     // weighted (Efraimidis-Spirakis) variant, weight = document length;
@@ -336,11 +260,7 @@ object SamplingGates {
       SELECT lang, CAST(COUNT(*) AS BIGINT) AS docs, CAST(SUM(doc_id) AS BIGINT) AS id_sum
       FROM r WHERE rn <= 50 GROUP BY lang ORDER BY lang""") { (s, _) =>
       val docs = s.table("documents").withColumn("wt", length(col("text")).cast("double"))
-      Sampling.weightedStratifiedTake(docs, "lang", "text", "wt", 50, "doc_id")
-        .groupBy("lang")
-        .agg(count(lit(1)).cast("long").as("docs"),
-          sum("doc_id").cast("long").as("id_sum"))
-        .orderBy("lang")
+      docsPer(Sampling.weightedStratifiedTake(docs, "lang", "text", "wt", 50, "doc_id"), "lang")
     },
   )
 }

@@ -4,6 +4,7 @@ package gates
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Events, Profile, Sampling, TextAnalysis, Vocab}
+import TextGates.tokenRowsCte
 
 /** Cardinality, frequency and set sketches (HLL, count-min, KMV) and the
   * statistics built on them: collocations, lexical diversity, drift,
@@ -12,16 +13,57 @@ import graft.operators.{Events, Profile, Sampling, TextAnalysis, Vocab}
   */
 object SketchGates {
 
+  /** Per-source token rows `toks(source, tok)`. */
+  private val sourceTokens = tokenRowsCte("toks", "source", "tok")
+
+  /** The HistogramSketch replay over non-NaN event values (1000 slots of
+    * width 0.5 on [0, 500)): `slot = min(nbins-1, floor((x-lo)/width))`
+    * per in-range value, per-slot counts `c`, total `n` and running counts
+    * `w(slot, cnt, cum)` — the input of every quantile threshold.
+    */
+  private val valueHistCtes = """WITH v AS (SELECT value AS x FROM events WHERE NOT isnan(value)),
+      inr AS (
+        SELECT LEAST(999, CAST(FLOOR((x - 0.0) / 0.5) AS INT)) AS slot
+        FROM v WHERE x >= 0.0 AND x < 500.0),
+      c AS (SELECT slot, COUNT(*) AS cnt FROM inr GROUP BY slot),
+      n AS (SELECT SUM(cnt) AS n FROM c),
+      w AS (SELECT slot, cnt, SUM(cnt) OVER (ORDER BY slot) AS cum FROM c)"""
+
+  /** CountMinSketch.RowSeeds as unsigned decimals: rows `s(i, seed)`. */
+  private val cmsRowSeeds = """SELECT * FROM (VALUES
+          (0, CAST(0 AS UBIGINT)),
+          (1, CAST(2611923443488327891 AS UBIGINT)),
+          (2, CAST(1376283091369227076 AS UBIGINT)),
+          (3, CAST(11820040416388919760 AS UBIGINT))) s(i, seed)"""
+
+  /** The ten most frequent suppliers in `lineitem` with their exact
+    * counts: `top(suppkey, exact_cnt)`, in DuckDB and Spark SQL alike.
+    */
+  private val topSuppliersCte = """top AS (
+        SELECT CAST(l_suppkey AS BIGINT) AS suppkey, CAST(COUNT(*) AS BIGINT) AS exact_cnt
+        FROM lineitem GROUP BY 1 ORDER BY exact_cnt DESC, suppkey LIMIT 10)"""
+
+  /** The exact self-join size per pair of event types, from per-(user,
+    * type) counts without the pair blowup: `ex(t1, t2, exact_pairs)`, in
+    * DuckDB and Spark SQL alike.
+    */
+  private val exactJoinPairsCtes = """cnt AS (SELECT user_id, event_type, COUNT(*) AS c FROM events GROUP BY 1, 2),
+      ex AS (
+        SELECT a.event_type AS t1, b.event_type AS t2,
+               CAST(SUM(a.c * b.c) AS BIGINT) AS exact_pairs
+        FROM cnt a JOIN cnt b
+          ON a.user_id = b.user_id AND a.event_type < b.event_type
+        GROUP BY 1, 2)"""
+
   val gates: Seq[Gate] = Seq(
     // HLL per group over the engine hash. The gate pins the REGISTER
     // CONTENT with integer checksums (zeros, sum, position-weighted sum,
     // 2^-register harmonic numerator mod p) — the estimate is a pure
     // function of the registers — plus the centi-rounded estimate itself.
     // DuckDB recomputes every register from hash bit arithmetic
-    // (bucket = top-12 bits, rho = 53 - bitlength(low 52 bits)).
-    // HLL registers rebuilt from hash bit arithmetic: bucket = top-12 bits,
-    // rho = 53 - bitlength(low 52 bits) (bin() gives exact integer bit
-    // length — no float log2), absent buckets are zeros. The estimate
+    // (bucket = top-12 bits, rho = 53 - bitlength(low 52 bits); bin()
+    // gives exact integer bit length — no float log2), absent buckets
+    // are zeros. The estimate
     // mirrors HllSketch.estimate operation for operation: exact integer
     // harmonic numerator summed as HUGEINT, one rounding at CAST AS DOUBLE,
     // same multiply/divide order, same linear-counting branch.
@@ -97,24 +139,16 @@ object SketchGates {
     // exact top-10 keys. Counters and estimates are integers, so the
     // cross-engine compare is tolerance-free; DuckDB rebuilds each
     // probed cell as COUNT(*) over rows hashing there (row hash =
-    // engine-hash of the XOR-perturbed key).
-    // Count-Min cells rebuilt as COUNT(*) over rows whose perturbed-key
-    // engine hash lands there; probe = MIN over the 4 row cells. Seeds are
-    // CountMinSketch.RowSeeds as unsigned decimals.
-    Gate("q_cms", """
+    // engine-hash of the XOR-perturbed key); probe = MIN over the 4 row
+    // cells.
+    Gate("q_cms", s"""
       WITH seeds AS (
-        SELECT * FROM (VALUES
-          (0, CAST(0 AS UBIGINT)),
-          (1, CAST(2611923443488327891 AS UBIGINT)),
-          (2, CAST(1376283091369227076 AS UBIGINT)),
-          (3, CAST(11820040416388919760 AS UBIGINT))) s(i, seed)),
+        $cmsRowSeeds),
       h AS (SELECT hash(CAST(l_suppkey AS BIGINT)) AS hv FROM lineitem),
       cells AS (
         SELECT s.i, hash(xor(h.hv, s.seed)) % 16384 AS idx, COUNT(*) AS c
         FROM h, seeds s GROUP BY 1, 2),
-      top AS (
-        SELECT CAST(l_suppkey AS BIGINT) AS suppkey, CAST(COUNT(*) AS BIGINT) AS exact_cnt
-        FROM lineitem GROUP BY 1 ORDER BY exact_cnt DESC, suppkey LIMIT 10),
+      $topSuppliersCte,
       probe AS (
         SELECT t.suppkey, t.exact_cnt, s.i,
                hash(xor(hash(t.suppkey), s.seed)) % 16384 AS idx
@@ -123,13 +157,11 @@ object SketchGates {
       FROM probe p JOIN cells c ON c.i = p.i AND c.idx = p.idx
       GROUP BY p.suppkey, p.exact_cnt
       ORDER BY p.suppkey""") { (s, _) =>
-      s.sql("""
+      s.sql(s"""
           WITH sk AS (
             SELECT cms_sketch(4, 14, bitfilters_duckdb_hash('v1.5.1', CAST(l_suppkey AS BIGINT))) AS s
             FROM lineitem),
-          top AS (
-            SELECT CAST(l_suppkey AS BIGINT) AS suppkey, CAST(COUNT(*) AS BIGINT) AS exact_cnt
-            FROM lineitem GROUP BY 1 ORDER BY exact_cnt DESC, suppkey LIMIT 10)
+          $topSuppliersCte
           SELECT t.suppkey, t.exact_cnt,
                  cms_estimate(sk.s, bitfilters_duckdb_hash('v1.5.1', t.suppkey)) AS est_cnt
           FROM top t CROSS JOIN sk
@@ -139,10 +171,9 @@ object SketchGates {
     // KMV audience overlap: per-priority bottom-256 customer sketches;
     // per-pair shared-minima count (the exact-integer Jaccard numerator)
     // plus centi-rounded distinct estimates. DuckDB replays bottom-k
-    // DISTINCT in native unsigned hash order.
-    // KMV bottom-256 distinct customer hashes per priority in native
-    // unsigned (UBIGINT) order; estimate = (k-1) * 2^64 / kth minimum with
-    // the same operation order; shared = |bottom-256(A ∪ B) ∩ A ∩ B|.
+    // DISTINCT in native unsigned (UBIGINT) hash order; estimate =
+    // (k-1) * 2^64 / kth minimum with the same operation order; shared =
+    // |bottom-256(A ∪ B) ∩ A ∩ B|.
     Gate("q_kmv", """
       WITH d AS (
         SELECT DISTINCT o_orderpriority AS prio, hash(CAST(o_custkey AS BIGINT)) AS hv
@@ -194,9 +225,8 @@ object SketchGates {
     },
 
     // PMI collocations: top-20 adjacent pairs by count with micro-
-    // rounded pointwise mutual information
-    // collocations: row-local adjacent pairs, unigram/bigram totals,
-    // micro-rounded PMI with the exact same division order
+    // rounded pointwise mutual information (the replay keeps the exact
+    // same division order)
     Gate("q_collocations", """
       WITH t AS (
         SELECT list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '') AS toks
@@ -227,13 +257,8 @@ object SketchGates {
 
     // per-doc lexical diversity: type-token ratio + integer entropy
     // numerator (c·ln c micro-rounded per type, summed)
-    // lexical diversity: per-(doc, token) counts, c·ln(c) micro-rounded
-    Gate("q_lexdiv", """
-      WITH toks AS (
-        SELECT doc_id,
-               unnest(list_filter(string_split_regex(lower(text), '\s+'),
-                                  x -> x <> '')) AS tok
-        FROM documents WHERE doc_id < 50),
+    Gate("q_lexdiv", s"""
+      WITH ${tokenRowsCte("toks", "doc_id", "tok", "documents WHERE doc_id < 50")},
       c AS (SELECT doc_id, tok, CAST(COUNT(*) AS BIGINT) AS c
             FROM toks GROUP BY doc_id, tok)
       SELECT doc_id, CAST(SUM(c) AS BIGINT) AS tokens,
@@ -248,15 +273,10 @@ object SketchGates {
 
     // token-distribution drift per source: KL(source || corpus) over the
     // corpus top-200 tokens, add-one smoothed, nano-rounded per-token
-    // contributions summed as integers
-    // token drift: top-200 vocab (count desc, token asc), add-one
-    // smoothing over the restricted vocab, nano-rounded contributions
-    Gate("q_token_drift", """
-      WITH toks AS (
-        SELECT source,
-               unnest(list_filter(string_split_regex(lower(text), '\s+'),
-                                  x -> x <> '')) AS tok
-        FROM documents),
+    // contributions summed as integers; the vocab orders by count desc,
+    // token asc
+    Gate("q_token_drift", s"""
+      WITH $sourceTokens,
       top AS (
         SELECT tok, CAST(COUNT(*) AS BIGINT) AS cc FROM toks
         GROUP BY tok ORDER BY cc DESC, tok LIMIT 200),
@@ -286,26 +306,14 @@ object SketchGates {
     },
 
     // equal-frequency quartile binning: thresholds from one sketch pass,
-    // per-bucket rollup — near-equal counts, exact integer sums
-    // quartile binning: three interpolated thresholds replayed with the
-    // winsorize arithmetic, CASE bucket (v < t -> lower bucket)
-    Gate("q_qbin", """
-      WITH v AS (SELECT value AS x FROM events WHERE NOT isnan(value)),
-      inr AS (
-        SELECT LEAST(999, CAST(FLOOR((x - 0.0) / 0.5) AS INT)) AS slot
-        FROM v WHERE x >= 0.0 AND x < 500.0),
-      c AS (SELECT slot, COUNT(*) AS cnt FROM inr GROUP BY slot),
-      n AS (SELECT SUM(cnt) AS n FROM c),
-      w AS (SELECT slot, cnt, SUM(cnt) OVER (ORDER BY slot) AS cum FROM c),
-      t1 AS (SELECT 0.0 + 0.5 * (w.slot + GREATEST(0.0,
-               ((0.25 * n.n) - (w.cum - w.cnt)) / w.cnt)) AS t
-             FROM w, n WHERE w.cum >= 0.25 * n.n ORDER BY w.slot LIMIT 1),
-      t2 AS (SELECT 0.0 + 0.5 * (w.slot + GREATEST(0.0,
-               ((0.5 * n.n) - (w.cum - w.cnt)) / w.cnt)) AS t
-             FROM w, n WHERE w.cum >= 0.5 * n.n ORDER BY w.slot LIMIT 1),
-      t3 AS (SELECT 0.0 + 0.5 * (w.slot + GREATEST(0.0,
-               ((0.75 * n.n) - (w.cum - w.cnt)) / w.cnt)) AS t
-             FROM w, n WHERE w.cum >= 0.75 * n.n ORDER BY w.slot LIMIT 1),
+    // per-bucket rollup — near-equal counts, exact integer sums; the
+    // three interpolated thresholds replay with the winsorize arithmetic
+    // (v < t -> lower bucket)
+    Gate("q_qbin", s"""
+      $valueHistCtes,${Seq("0.25", "0.5", "0.75").zipWithIndex.map { case (q, i) => s"""
+      t${i + 1} AS (SELECT 0.0 + 0.5 * (w.slot + GREATEST(0.0,
+               (($q * n.n) - (w.cum - w.cnt)) / w.cnt)) AS t
+             FROM w, n WHERE w.cum >= $q * n.n ORDER BY w.slot LIMIT 1),""" }.mkString}
       b AS (
         SELECT CASE WHEN v.x < t1.t THEN 0
                     WHEN v.x < t2.t THEN 1
@@ -330,18 +338,10 @@ object SketchGates {
 
     // winsorization at hist-sketch quantiles: p05/p95 thresholds from
     // one sketch pass, heavy tail clipped; interpolated thresholds and
-    // per-row micro-rounded sums replay exactly
-    // winsorize: HistogramSketch slot/quantile arithmetic replayed —
-    // slot = min(nbins-1, floor((x-lo)/width)), rank q*n walked to the
+    // per-row micro-rounded sums replay exactly: rank q*n walked to the
     // first bin with cum >= rank, uniform within the bin
-    Gate("q_winsorize", """
-      WITH v AS (SELECT value AS x FROM events WHERE NOT isnan(value)),
-      inr AS (
-        SELECT LEAST(999, CAST(FLOOR((x - 0.0) / 0.5) AS INT)) AS slot
-        FROM v WHERE x >= 0.0 AND x < 500.0),
-      c AS (SELECT slot, COUNT(*) AS cnt FROM inr GROUP BY slot),
-      n AS (SELECT SUM(cnt) AS n FROM c),
-      w AS (SELECT slot, cnt, SUM(cnt) OVER (ORDER BY slot) AS cum FROM c),
+    Gate("q_winsorize", s"""
+      $valueHistCtes,
       tlo AS (
         SELECT 0.0 + 0.5 * (w.slot + GREATEST(0.0,
                  ((0.05 * n.n) - (w.cum - w.cnt)) / w.cnt)) AS t
@@ -372,15 +372,10 @@ object SketchGates {
     },
 
     // vocab coverage: OOV occurrence rate per source against the
-    // corpus's own top-500 token vocab — exact integer ppm
-    // vocab coverage: top-500 tokens (count desc, token asc) as the vocab,
-    // OOV occurrences counted per source, truncating-div ppm
-    Gate("q_vocab_coverage", """
-      WITH toks AS (
-        SELECT source,
-               unnest(list_filter(string_split_regex(lower(text), '\s+'),
-                                  x -> x <> '')) AS tok
-        FROM documents),
+    // corpus's own top-500 token vocab (count desc, token asc) — exact
+    // truncating-div integer ppm
+    Gate("q_vocab_coverage", s"""
+      WITH $sourceTokens,
       vocab AS (
         SELECT tok FROM (
           SELECT tok, COUNT(*) AS c FROM toks GROUP BY tok
@@ -401,7 +396,6 @@ object SketchGates {
     // event-stream resampling: 6-hour grid per user, forward-filled
     // (LOCF) — the oracle replays the fill with DuckDB's native ASOF
     // LEFT JOIN ((user, ts) unique per key, so the carry is total-ordered)
-    // resample: per-user aligned grid + native ASOF LEFT JOIN forward fill
     Gate("q_resample", """
       WITH obs AS (
         SELECT user_id, epoch_us(ts) AS us, value
@@ -428,8 +422,7 @@ object SketchGates {
     // deterministic contrastive negative sampling: 4 hash-drawn corpus
     // negatives per anchor over the dense vec_id space; the draw is a
     // pure function of the data (engine-portable integer hash), so the
-    // oracle replays every pick
-    // contrastive negatives: the engine hash of id*1000003 + j,
+    // oracle replays every pick: the engine hash of id*1000003 + j,
     // sign-cleared then mod n, anchor-collision bumped to (r+1) mod n
     Gate("q_neg_sample", """
       WITH n AS (SELECT COUNT(*) AS n FROM embeddings),
@@ -458,17 +451,11 @@ object SketchGates {
     // cms_inner_product bounds each cross-type self-join size WITHOUT
     // running the join — the planner-side primitive. Exact pair counts
     // computed from per-(user, type) counts (no pair blowup); estimates
-    // are integers, DuckDB rebuilds every counter cell exactly.
-    // CMS inner product: DuckDB rebuilds every (row, cell) counter with the
-    // engine hash (same machinery as q_cms), then min-over-rows of the
-    // cell-product sums; exact side via per-(user, type) count products
-    Gate("q_join_card", """
+    // are integers, DuckDB rebuilds every counter cell exactly (same
+    // machinery as q_cms), then min-over-rows of the cell-product sums.
+    Gate("q_join_card", s"""
       WITH seeds(i, seed) AS (
-        SELECT * FROM (VALUES
-          (0, CAST(0 AS UBIGINT)),
-          (1, CAST(2611923443488327891 AS UBIGINT)),
-          (2, CAST(1376283091369227076 AS UBIGINT)),
-          (3, CAST(11820040416388919760 AS UBIGINT))) s(i, seed)),
+        $cmsRowSeeds),
       h AS (SELECT event_type, hash(CAST(user_id AS BIGINT)) AS hv FROM events),
       cells AS (
         SELECT event_type, s.i, hash(xor(h.hv, s.seed)) % 16384 AS idx,
@@ -481,29 +468,16 @@ object SketchGates {
           ON a.i = b.i AND a.idx = b.idx AND a.event_type < b.event_type
         GROUP BY 1, 2, 3),
       est AS (SELECT t1, t2, MIN(rowsum) AS est_pairs FROM prod GROUP BY 1, 2),
-      cnt AS (SELECT user_id, event_type, COUNT(*) AS c FROM events GROUP BY 1, 2),
-      ex AS (
-        SELECT a.event_type AS t1, b.event_type AS t2,
-               CAST(SUM(a.c * b.c) AS BIGINT) AS exact_pairs
-        FROM cnt a JOIN cnt b
-          ON a.user_id = b.user_id AND a.event_type < b.event_type
-        GROUP BY 1, 2)
+      $exactJoinPairsCtes
       SELECT ex.t1, ex.t2, ex.exact_pairs, CAST(est.est_pairs AS BIGINT) AS est_pairs
       FROM ex JOIN est ON est.t1 = ex.t1 AND est.t2 = ex.t2
       ORDER BY ex.t1, ex.t2""") { (s, _) =>
-      s.sql("""
+      s.sql(s"""
           WITH sk AS (
             SELECT event_type,
                    cms_sketch(4, 14, bitfilters_duckdb_hash('v1.5.1', CAST(user_id AS BIGINT))) AS s
             FROM events GROUP BY event_type),
-          cnt AS (
-            SELECT user_id, event_type, COUNT(*) AS c FROM events GROUP BY 1, 2),
-          ex AS (
-            SELECT a.event_type AS t1, b.event_type AS t2,
-                   CAST(SUM(a.c * b.c) AS BIGINT) AS exact_pairs
-            FROM cnt a JOIN cnt b
-              ON a.user_id = b.user_id AND a.event_type < b.event_type
-            GROUP BY 1, 2)
+          $exactJoinPairsCtes
           SELECT ex.t1, ex.t2, ex.exact_pairs,
                  cms_inner_product(sa.s, sb.s) AS est_pairs
           FROM ex JOIN sk sa ON sa.event_type = ex.t1

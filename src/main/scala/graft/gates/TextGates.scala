@@ -1,7 +1,7 @@
 package graft
 package gates
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Classify, Ranking, TextAnalysis}
@@ -18,7 +18,6 @@ object TextGates {
     * operation order literally.
     */
   private def logisticOracleSql(iterations: Int, lr: Double): String = {
-    val enList = graft.operators.LangId.stopwords("en").map(w => s"'$w'").mkString("[", ", ", "]")
     val z = (w: Int => String) =>
       s"${w(0)} + ${w(1)} * f1 + ${w(2)} * f2 + ${w(3)} * f3"
     val sb = new StringBuilder
@@ -27,12 +26,7 @@ object TextGates {
                CAST(sw_hits AS DOUBLE) / CAST(toks AS DOUBLE) AS f1,
                CAST(toks AS DOUBLE) / 100.0 AS f2,
                CAST(chars AS DOUBLE) / CAST(words AS DOUBLE) / 10.0 AS f3
-        FROM (SELECT n_chars, length(text) AS chars,
-                     len(string_split(text, ' ')) AS words,
-                     len(list_filter(string_split_regex(lower(text), '\\s+'),
-                                     x -> list_contains($enList, x))) AS sw_hits,
-                     len(string_split_regex(lower(text), '\\s+')) AS toks
-              FROM documents)),
+        $classifierInputs),
       nn AS (SELECT COUNT(*) AS n FROM m),
       i0 AS (SELECT 0.0 AS w0, 0.0 AS w1, 0.0 AS w2, 0.0 AS w3)""")
     for (k <- 1 to iterations) {
@@ -61,54 +55,144 @@ object TextGates {
     sb.toString
   }
 
-  /** ONE definition of the demo quality scorer shared by
-    * q_classifier_eval / q_calibration (and mirrored by
-    * [[classifierScoreCte]] on the oracle side): text_metrics features,
-    * fixed logistic weights, n_chars >= 300 label. A scorer change edits
-    * exactly two places (this and the CTE), not four gates.
+  /** The classifier gates' inputs: `documents` with its text_metrics,
+    * the three features (stopword ratio, tokens / 100, mean word length /
+    * 10) and the `n_chars >= 300` label. The oracle side reads the same
+    * features from [[classifierInputs]].
     */
-  private def qualityScorer(s: SparkSession)
-      : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.Column,
-         org.apache.spark.sql.Column) = {
+  private def qualityFeatures(s: SparkSession): (DataFrame, Seq[Column], Column) = {
     val docs = s.table("documents").withColumn("__m", expr("text_metrics(text)"))
     val fSw = col("__m.sw_hits").cast("double") / col("__m.toks").cast("double")
     val fToks = col("__m.toks").cast("double") / lit(100.0)
     val fLen = col("__m.chars").cast("double") / col("__m.words").cast("double") / lit(10.0)
-    val score = Classify.logisticScore(Array(-2.0, 1.5, 0.8, -0.5),
-      Seq(fSw, fToks, fLen))
-    val y = when(col("n_chars") >= 300, 1.0).otherwise(0.0)
-    (docs, score, y)
+    (docs, Seq(fSw, fToks, fLen), when(col("n_chars") >= 300, 1.0).otherwise(0.0))
   }
+
+  /** ONE definition of the demo quality scorer shared by
+    * q_classifier_eval / q_calibration (and mirrored by
+    * [[classifierScoreCte]] on the oracle side): [[qualityFeatures]] under
+    * fixed logistic weights. A scorer change edits exactly two places
+    * (this and the CTE), not four gates.
+    */
+  private def qualityScorer(s: SparkSession): (DataFrame, Column, Column) = {
+    val (docs, feats, y) = qualityFeatures(s)
+    (docs, Classify.logisticScore(Array(-2.0, 1.5, 0.8, -0.5), feats), y)
+  }
+
+  /** The oracle-side per-doc inputs of [[qualityFeatures]]: the FROM clause
+    * of a `SELECT` over `(n_chars, chars, words, sw_hits, toks)`.
+    */
+  private val classifierInputs = s"""FROM (SELECT n_chars, length(text) AS chars,
+                     len(string_split(text, ' ')) AS words,
+                     len(list_filter(string_split_regex(lower(text), '\\s+'),
+                                     x -> list_contains(${stopwordList("en")}, x))) AS sw_hits,
+                     len(string_split_regex(lower(text), '\\s+')) AS toks
+              FROM documents)"""
 
   /** The oracle-side twin of [[qualityScorer]]: the `m(y, s)` scoring CTE
     * both classifier-gate oracles share.
     */
-  private def classifierScoreCte: String = {
-    val enList = graft.operators.LangId.stopwords("en").map(w => s"'$w'").mkString("[", ", ", "]")
+  private val classifierScoreCte: String =
     s"""m AS (
         SELECT CASE WHEN n_chars >= 300 THEN 1.0 ELSE 0.0 END AS y,
                1.0 / (1.0 + exp(-(-2.0
                  + 1.5 * (CAST(sw_hits AS DOUBLE) / CAST(toks AS DOUBLE))
                  + 0.8 * (CAST(toks AS DOUBLE) / 100.0)
                  + -0.5 * (CAST(chars AS DOUBLE) / CAST(words AS DOUBLE) / 10.0)))) AS s
-        FROM (SELECT n_chars, length(text) AS chars,
-                     len(string_split(text, ' ')) AS words,
-                     len(list_filter(string_split_regex(lower(text), '\\s+'),
-                                     x -> list_contains($enList, x))) AS sw_hits,
-                     len(string_split_regex(lower(text), '\\s+')) AS toks
-              FROM documents))"""
-  }
+        $classifierInputs)"""
+
+  /** `lang`'s stopword list as a DuckDB list literal. */
+  private[gates] def stopwordList(lang: String): String =
+    graft.operators.LangId.stopwords(lang).map(w => s"'$w'").mkString("[", ", ", "]")
+
+  /** The per-doc stopword-hit counts `de, en, es, fr` that
+    * [[TextAnalysis.langId]] takes the argmax of, as a DuckDB select list.
+    */
+  private[gates] val stopwordHitCols = Seq("de", "en", "es", "fr").map { lang =>
+    "len(list_filter(string_split_regex(lower(text), '\\s+'), " +
+      s"x -> list_contains(${stopwordList(lang)}, x))) AS $lang"
+  }.mkString(", ")
+
+  /** The quality-metric CTE `m(<lead> chars, words, punct, sw_hits, toks)`
+    * (all DOUBLE) that mirrors [[TextAnalysis.withQualityMetrics]] op for
+    * op (note the 'g' flag: DuckDB regexp_replace is first-match-only by
+    * default, Spark's is global); `lead` is the select list before `chars`.
+    */
+  private[gates] def qualityMetricsCte(lead: String): String = s"""m AS (
+        SELECT ${lead}CAST(length(text) AS DOUBLE) AS chars,
+               CAST(len(string_split(text, ' ')) AS DOUBLE) AS words,
+               CAST(length(regexp_replace(text, '[A-Za-z0-9\\s]', '', 'g')) AS DOUBLE) AS punct,
+               CAST(len(list_filter(string_split_regex(lower(text), '\\s+'),
+                 x -> list_contains(['the','a','an','and','or','of','in','to','is','it','that','for','on','with','as'], x))) AS DOUBLE) AS sw_hits,
+               CAST(len(string_split_regex(lower(text), '\\s+')) AS DOUBLE) AS toks
+        FROM documents)"""
+
+  /** One row per non-empty whitespace token of `lower(text)`:
+    * `name(key, tok)` over the `docs` relation.
+    */
+  private[gates] def tokenRowsCte(name: String, key: String, tok: String,
+      docs: String = "documents"): String = s"""$name AS (
+        SELECT $key,
+               unnest(list_filter(string_split_regex(lower(text), '\\s+'),
+                                  x -> x <> '')) AS $tok
+        FROM $docs)"""
+
+  private val tokCte = tokenRowsCte("tok", "doc_id", "t")
+
+  /** The LM gates' per-source rollup over `d(doc_id, toks, lp_sum)` in
+    * scope (a doc without tokens counts 0 of each).
+    */
+  private val perSourceLpSql = """
+      j AS (SELECT doc.doc_id, doc.source,
+                   coalesce(d.toks, 0) AS toks, coalesce(d.lp_sum, 0) AS lp_sum
+            FROM documents doc LEFT JOIN d ON doc.doc_id = d.doc_id)
+      SELECT source, CAST(COUNT(*) AS BIGINT) AS docs,
+             CAST(SUM(toks) AS BIGINT) AS tokens,
+             CAST(SUM(lp_sum) AS BIGINT) AS lp_e6_sum
+      FROM j GROUP BY source ORDER BY source"""
+
+  /** The Spark twin of [[perSourceLpSql]] over per-doc `(doc_id, tokens,
+    * lp_e6)` scores.
+    */
+  private def perSourceLp(s: SparkSession, scored: DataFrame): DataFrame =
+    scored.join(s.table("documents").select(col("doc_id"), col("source")), "doc_id")
+      .groupBy("source")
+      .agg(count(lit(1)).cast("long").as("docs"),
+        sum("tokens").cast("long").as("tokens"),
+        sum("lp_e6").cast("long").as("lp_e6_sum"))
+      .orderBy("source")
+
+  /** A language-id gate: `scores` selects each doc's per-language scores
+    * `de, en, es, fr` (`h`); the replayed detection is the argmax, ties to
+    * fr, es, en then de, and 'und' when every score is 0. `detect` is the
+    * engine's detector. Counts docs per detected language.
+    */
+  private def langIdGate(name: String, scores: String, detect: Column => Column): Gate =
+    Gate(name, s"""
+      WITH h AS (
+        SELECT $scores
+        FROM documents),
+      l AS (
+        SELECT CASE WHEN greatest(de, en, es, fr) = 0 THEN 'und'
+                    WHEN fr = greatest(de, en, es, fr) THEN 'fr'
+                    WHEN es = greatest(de, en, es, fr) THEN 'es'
+                    WHEN en = greatest(de, en, es, fr) THEN 'en'
+                    ELSE 'de' END AS lang_detected
+        FROM h)
+      SELECT lang_detected, CAST(COUNT(*) AS BIGINT) AS docs
+      FROM l GROUP BY lang_detected ORDER BY lang_detected""") { (s, _) =>
+      s.table("documents")
+        .select(detect(col("text")).as("lang_detected"))
+        .groupBy("lang_detected").agg(count(lit(1)).cast("long").as("docs"))
+        .orderBy("lang_detected")
+    }
 
   val gates: Seq[Gate] = Seq(
     // inverted index: build token -> postings, answer a 3-term AND
-    // without touching the corpus; result is the exact doc_id list
+    // without touching the corpus; result is the exact doc_id list of
     // docs containing all three tokens, replayed straight off the text
-    Gate("q_inverted_index", """
-      WITH tok AS (
-        SELECT doc_id,
-               unnest(list_filter(string_split_regex(lower(text), '\s+'),
-                                  x -> x <> '')) AS t
-        FROM documents)
+    Gate("q_inverted_index", s"""
+      WITH $tokCte
       SELECT doc_id FROM tok
       WHERE t IN ('hash', 'join', 'vector')
       GROUP BY doc_id HAVING COUNT(DISTINCT t) = 3
@@ -121,44 +205,20 @@ object TextGates {
 
     // unigram-LM surprisal (perplexity-filter lite): per-token micro-
     // unit logprobs integer-summed per doc, rolled up per source so
-    // every token's probability is on the hash path
-    // unigram surprisal replay: identical tokenization, identical
-    // micro-unit per-token rounding, integer per-doc/per-source sums
-    Gate("q_unigram_lp", """
-      WITH tok AS (
-        SELECT doc_id,
-               unnest(list_filter(string_split_regex(lower(text), '\s+'),
-                                  x -> x <> '')) AS t
-        FROM documents),
+    // every token's probability is on the hash path (identical
+    // tokenization and micro-unit per-token rounding in the replay)
+    Gate("q_unigram_lp", s"""
+      WITH $tokCte,
       f AS (SELECT t, COUNT(*) AS cnt FROM tok GROUP BY t),
       tot AS (SELECT SUM(cnt) AS total FROM f),
       lp AS (SELECT t, CAST(round(ln(CAST(cnt AS DOUBLE) / CAST(total AS DOUBLE))
                                   * 1e6) AS BIGINT) AS lp_e6
              FROM f, tot),
       d AS (SELECT tok.doc_id, COUNT(*) AS toks, SUM(lp.lp_e6) AS lp_sum
-            FROM tok JOIN lp ON tok.t = lp.t GROUP BY tok.doc_id),
-      j AS (SELECT doc.doc_id, doc.source,
-                   coalesce(d.toks, 0) AS toks, coalesce(d.lp_sum, 0) AS lp_sum
-            FROM documents doc LEFT JOIN d ON doc.doc_id = d.doc_id)
-      SELECT source, CAST(COUNT(*) AS BIGINT) AS docs,
-             CAST(SUM(toks) AS BIGINT) AS tokens,
-             CAST(SUM(lp_sum) AS BIGINT) AS lp_e6_sum
-      FROM j GROUP BY source ORDER BY source""") { (s, _) =>
-      val scored = Ranking.unigramLogProb(s.table("documents"), "text", "doc_id")
-      scored.join(s.table("documents").select(col("doc_id"), col("source")), "doc_id")
-        .groupBy("source")
-        .agg(count(lit(1)).cast("long").as("docs"),
-          sum("tokens").cast("long").as("tokens"),
-          sum("lp_e6").cast("long").as("lp_e6_sum"))
-        .orderBy("source")
+            FROM tok JOIN lp ON tok.t = lp.t GROUP BY tok.doc_id),$perSourceLpSql""") { (s, _) =>
+      perSourceLp(s, Ranking.unigramLogProb(s.table("documents"), "text", "doc_id"))
     },
 
-    // in-engine quality classifier: 10 full-batch GD rounds of logistic
-    // regression (predict the document-length class from text-metric
-    // ratios — a learnable target on this corpus; 489/500 train
-    // accuracy from 256/500 base rate); the micro-unit final weights
-    // and the training accuracy pin every per-row sigmoid/gradient
-    // across all rounds
     // classifier operating-point sweep with FIXED weights (the trained
     // model's eval twin, oracle-compact): one agg pass, 3 thresholds,
     // integer ppm precision/recall/F1
@@ -185,9 +245,8 @@ object TextGates {
 
     // calibration / reliability diagram of the same quality scorer:
     // equal-width bins, integer mean-score/rate/ECE-contribution per
-    // bin — is a 0.9 score actually right 90% of the time?
-    // calibration replay: the shared scoring CTE, bucketed into 10
-    // equal-width bins with the same integer mean/rate/ECE math
+    // bin — is a 0.9 score actually right 90% of the time? The replay
+    // buckets the shared scoring CTE with the same integer math.
     Gate("q_calibration", s"""
       WITH $classifierScoreCte,
       b0 AS (SELECT least(CAST(1.0 AS DOUBLE), greatest(CAST(0.0 AS DOUBLE), s)) AS sc, y
@@ -209,13 +268,14 @@ object TextGates {
       Classify.calibrationReport(docs, score, y, bins = 10).orderBy("bin")
     },
 
+    // in-engine quality classifier: 10 full-batch GD rounds of logistic
+    // regression (predict the document-length class from text-metric
+    // ratios — a learnable target on this corpus; 489/500 train
+    // accuracy from 256/500 base rate); the micro-unit final weights
+    // and the training accuracy pin every per-row sigmoid/gradient
+    // across all rounds
     Gate("q_logistic", logisticOracleSql(10, 5.0)) { (s, _) =>
-      val docs = s.table("documents").withColumn("__m", expr("text_metrics(text)"))
-      val fSw = col("__m.sw_hits").cast("double") / col("__m.toks").cast("double")
-      val fToks = col("__m.toks").cast("double") / lit(100.0)
-      val fLen = col("__m.chars").cast("double") / col("__m.words").cast("double") / lit(10.0)
-      val feats = Seq(fSw, fToks, fLen)
-      val y = when(col("n_chars") >= 300, 1.0).otherwise(0.0)
+      val (docs, feats, y) = qualityFeatures(s)
       val w = Classify.logisticTrain(docs, feats, y, iterations = 10, lr = 5.0)
       val pred = when(Classify.logisticScore(w, feats) >= 0.5, 1.0).otherwise(0.0)
       def e6(d: Double): Long = // ties away from zero, like SQL round()
@@ -228,8 +288,8 @@ object TextGates {
 
     // bigram-LM surprisal: token TRANSITIONS scored under Jelinek-
     // Mercer interpolation, first tokens under the unigram marginal;
-    // micro-unit integer sums keep every transition on the hash path
-    // bigram replay: same pair construction, same bigram-start
+    // micro-unit integer sums keep every transition on the hash path.
+    // The replay keeps the same pair construction, same bigram-start
     // denominator, same interpolation arithmetic (0.9 / (1.0 - 0.9)
     // literals so the IEEE weights match bit-for-bit), same micro-round.
     // The replay scores each DISTINCT bigram once (dlp) and weights it by
@@ -270,21 +330,9 @@ object TextGates {
                           * 1e6) AS BIGINT) AS lp_sum
               FROM fs JOIN un ON fs.tok = un.u_tok, tot),
       d AS (SELECT doc_id, SUM(toks) AS toks, SUM(lp_sum) AS lp_sum
-            FROM (SELECT * FROM ps UNION ALL SELECT * FROM fsc) GROUP BY doc_id),
-      j AS (SELECT doc.doc_id, doc.source,
-                   coalesce(d.toks, 0) AS toks, coalesce(d.lp_sum, 0) AS lp_sum
-            FROM documents doc LEFT JOIN d ON doc.doc_id = d.doc_id)
-      SELECT source, CAST(COUNT(*) AS BIGINT) AS docs,
-             CAST(SUM(toks) AS BIGINT) AS tokens,
-             CAST(SUM(lp_sum) AS BIGINT) AS lp_e6_sum
-      FROM j GROUP BY source ORDER BY source""") { (s, _) =>
-      val scored = Ranking.bigramLogProb(s.table("documents"), "text", "doc_id")
-      scored.join(s.table("documents").select(col("doc_id"), col("source")), "doc_id")
-        .groupBy("source")
-        .agg(count(lit(1)).cast("long").as("docs"),
-          sum("tokens").cast("long").as("tokens"),
-          sum("lp_e6").cast("long").as("lp_e6_sum"))
-        .orderBy("source")
+            FROM (SELECT * FROM ps UNION ALL SELECT * FROM fsc) GROUP BY doc_id),""" +
+      perSourceLpSql) { (s, _) =>
+      perSourceLp(s, Ranking.bigramLogProb(s.table("documents"), "text", "doc_id"))
     },
 
     Gate("q_text_stats", """
@@ -309,67 +357,18 @@ object TextGates {
         FROM documents""")
     },
 
-    Gate("q_lang_id", {
-      def inList(lang: String) =
-        graft.operators.LangId.stopwords(lang).map(w => s"'$w'").mkString("[", ", ", "]")
-      def hits(lang: String) =
-        s"len(list_filter(string_split_regex(lower(text), '\\s+'), x -> list_contains(${inList(lang)}, x))) AS $lang"
-      s"""
-      WITH h AS (
-        SELECT ${hits("de")}, ${hits("en")}, ${hits("es")}, ${hits("fr")}
-        FROM documents),
-      l AS (
-        SELECT CASE WHEN greatest(de, en, es, fr) = 0 THEN 'und'
-                    WHEN fr = greatest(de, en, es, fr) THEN 'fr'
-                    WHEN es = greatest(de, en, es, fr) THEN 'es'
-                    WHEN en = greatest(de, en, es, fr) THEN 'en'
-                    ELSE 'de' END AS lang_detected
-        FROM h)
-      SELECT lang_detected, CAST(COUNT(*) AS BIGINT) AS docs
-      FROM l GROUP BY lang_detected ORDER BY lang_detected"""
-    }) { (s, _) =>
-      s.table("documents")
-        .select(TextAnalysis.langId(col("text")).as("lang_detected"))
-        .groupBy("lang_detected").agg(count(lit(1)).cast("long").as("docs"))
-        .orderBy("lang_detected")
-    },
+    langIdGate("q_lang_id", stopwordHitCols, TextAnalysis.langId),
 
-    Gate("q_lang_id_ngram", {
+    langIdGate("q_lang_id_ngram", {
       def score(lang: String) = graft.operators.TextAnalysis.trigramProfiles(lang)
         .map(g => s"(CASE WHEN contains(lower(text), '$g') THEN 1 ELSE 0 END)")
         .mkString(" + ")
-      s"""
-      WITH h AS (
-        SELECT ${score("de")} AS de, ${score("en")} AS en,
-               ${score("es")} AS es, ${score("fr")} AS fr
-        FROM documents),
-      l AS (
-        SELECT CASE WHEN greatest(de, en, es, fr) = 0 THEN 'und'
-                    WHEN fr = greatest(de, en, es, fr) THEN 'fr'
-                    WHEN es = greatest(de, en, es, fr) THEN 'es'
-                    WHEN en = greatest(de, en, es, fr) THEN 'en'
-                    ELSE 'de' END AS lang_detected
-        FROM h)
-      SELECT lang_detected, CAST(COUNT(*) AS BIGINT) AS docs
-      FROM l GROUP BY lang_detected ORDER BY lang_detected"""
-    }) { (s, _) =>
-      s.table("documents")
-        .select(TextAnalysis.langIdNgram(col("text")).as("lang_detected"))
-        .groupBy("lang_detected").agg(count(lit(1)).cast("long").as("docs"))
-        .orderBy("lang_detected")
-    },
+      s"""${score("de")} AS de, ${score("en")} AS en,
+               ${score("es")} AS es, ${score("fr")} AS fr"""
+    }, TextAnalysis.langIdNgram),
 
-    // mirrors TextAnalysis.withQualityMetrics op-for-op (note the 'g' flag:
-    // DuckDB regexp_replace is first-match-only by default, Spark's is global)
-    Gate("q_quality_score", """
-      WITH m AS (
-        SELECT CAST(length(text) AS DOUBLE) AS chars,
-               CAST(len(string_split(text, ' ')) AS DOUBLE) AS words,
-               CAST(length(regexp_replace(text, '[A-Za-z0-9\s]', '', 'g')) AS DOUBLE) AS punct,
-               CAST(len(list_filter(string_split_regex(lower(text), '\s+'),
-                 x -> list_contains(['the','a','an','and','or','of','in','to','is','it','that','for','on','with','as'], x))) AS DOUBLE) AS sw_hits,
-               CAST(len(string_split_regex(lower(text), '\s+')) AS DOUBLE) AS toks
-        FROM documents),
+    Gate("q_quality_score", s"""
+      WITH ${qualityMetricsCte("")},
       p AS (
         SELECT words, punct / greatest(chars, 1.0) AS punct_ratio,
                chars / greatest(words, 1.0) AS mean_word_len,
@@ -392,22 +391,13 @@ object TextGates {
 
     // per-source adaptive quality trim: drop each source's worst 25% by
     // its OWN histogram quantile; thresholds + filter + rollup all
-    // replayed (integer bin counts -> interpolated quantile -> >= cut)
-    // adaptive per-source trim replay: per-doc quality score (the
-    // q_quality_score formula), 65-bin width-1/64 histogram slots,
+    // replayed: per-doc quality score (the q_quality_score formula),
+    // 65-bin width-1/64 histogram slots,
     // cumulative-count interpolated quantile with the EXACT
     // lo + width*(slot + (rank-cum_before)/cnt) arithmetic of
     // HistogramSketch.quantile, then the >= threshold cut and rollup
-    Gate("q_adaptive_filter", """
-      WITH m AS (
-        SELECT source,
-               CAST(length(text) AS DOUBLE) AS chars,
-               CAST(len(string_split(text, ' ')) AS DOUBLE) AS words,
-               CAST(length(regexp_replace(text, '[A-Za-z0-9\s]', '', 'g')) AS DOUBLE) AS punct,
-               CAST(len(list_filter(string_split_regex(lower(text), '\s+'),
-                 x -> list_contains(['the','a','an','and','or','of','in','to','is','it','that','for','on','with','as'], x))) AS DOUBLE) AS sw_hits,
-               CAST(len(string_split_regex(lower(text), '\s+')) AS DOUBLE) AS toks
-        FROM documents),
+    Gate("q_adaptive_filter", s"""
+      WITH ${qualityMetricsCte("source,\n               ")},
       sc AS (
         SELECT source,
                least(1.0, greatest(0.0,
@@ -486,17 +476,15 @@ object TextGates {
         .agg(count(lit(1)).cast("long").as("docs"),
           sum(length(col("clean"))).cast("long").as("clean_chars"),
           sum(when(col("clean") =!= col("text"), 1L).otherwise(0L)).cast("long").as("changed"),
-          sum(conv(substring(md5(col("clean")), 1, 15), 16, 10).cast("long") % 1000000000L)
-            .cast("long").as("hash_sum"))
+          Gate.md5PrefixSum(col("clean")).as("hash_sum"))
     },
 
     // canonical text normalization (NFC + lowercase + whitespace collapse
     // + trim, plus the accent-folded variant): per-document md5 of both
     // canonical forms rides the hash path against DuckDB's native
-    // nfc_normalize/strip_accents; `changed` proves non-triviality
-    // DuckDB's native nfc_normalize / strip_accents replay the canonical
-    // forms; regexp_replace needs the 'g' flag (RE2) where Java replaces
-    // all matches by default
+    // nfc_normalize/strip_accents; `changed` proves non-triviality.
+    // regexp_replace needs the 'g' flag (RE2) where Java replaces all
+    // matches by default.
     Gate("q_normalize", """
       SELECT doc_id,
              md5(trim(regexp_replace(lower(nfc_normalize(text)), '\s+', ' ', 'g'))) AS nh,
@@ -539,8 +527,7 @@ object TextGates {
       TextAnalysis.chunkDocuments(s.table("documents"), "text", "doc_id", 64, 8)
         .agg(count(lit(1)).cast("long").as("chunks"),
           sum("n_tokens").cast("long").as("tok_sum"),
-          sum(conv(substring(md5(col("chunk_text")), 1, 15), 16, 10).cast("long") % 1000000000L)
-            .cast("long").as("hash_sum"),
+          Gate.md5PrefixSum(col("chunk_text")).as("hash_sum"),
           max("chunk_idx").cast("long").as("max_idx"))
     },
 
@@ -585,7 +572,6 @@ object TextGates {
     // TF-IDF keywords: top-3 terms per document (tokens >= 3 chars),
     // micro-rounded scores; df/N computed on the FULL corpus, output
     // restricted to doc_id < 40 to bound the compare.
-    // TF-IDF keywords: full-corpus df/N, micro-rounded ln scores
     Gate("q_tfidf", """
       WITH toks AS (
         SELECT doc_id,

@@ -1,10 +1,12 @@
 package graft
 package gates
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.operators.{Sampling, TextAnalysis, UrlOps, Vocab}
+import graft.sources.JsonlIngest
 import Gate.{deleteDirs, localResult}
 
 /** Vocabulary and corpus-preparation gates: BPE training and encoding,
@@ -22,6 +24,28 @@ object VocabGates {
     * every consumer. The table itself is tiny (one row per merge); what
     * the checkpoint saves is re-RUNNING the training loop per consumer.
     */
+  /** The ingest gates' staged run: `lines` written as text under a temp
+    * dir, parsed by `ingest` against the `(doc_id, source, n_chars)`
+    * schema into good rows and quarantined raw lines, rolled up to one row
+    * (good rows, their doc_id sum and `goodStat`, then the quarantine's
+    * count and raw chars), and the staged text deleted.
+    */
+  private def ingestRollup(s: SparkSession, lines: DataFrame, prefix: String)(
+      ingest: (SparkSession, String, StructType) => (DataFrame, DataFrame))(
+      goodStat: Column): DataFrame = {
+    val tmp = streaming.FileStreams.createTempDir(prefix).toString
+    lines.coalesce(4).write.mode("overwrite").text(tmp)
+    val (good, bad) = ingest(s, tmp, StructType(Seq(StructField("doc_id", LongType),
+      StructField("source", StringType), StructField("n_chars", LongType))))
+    val res = good.agg(count(lit(1)).cast("long").as("good_rows"),
+        sum("doc_id").cast("long").as("id_sum"), goodStat)
+      .crossJoin(bad.agg(count(lit(1)).cast("long").as("quarantined"),
+        sum(length(col("raw_line"))).cast("long").as("quarantine_chars")))
+    val out = localResult(s, res) // 1-row checksum; frees the staged text
+    deleteDirs(tmp)
+    out
+  }
+
   private val sharedBpeMerges: SharedRelation[DataFrame] =
     SharedRelation.parquet("bpe") { s =>
       Vocab.bpeMerges(s.table("documents"), "text", numMerges = 6)
@@ -120,16 +144,14 @@ object VocabGates {
         .selectExpr("token", "CAST(cnt AS BIGINT) AS cnt")
     },
 
-    // per-source curation report: docs / dup rate / volume per source,
-    // the table a pipeline reads to set per-source sampling weights
     // URL canonicalization + registered-domain rollup: URLs synthesized
     // deterministically from doc_id (the multimodal pattern — both
     // engines build the identical strings), exercising every contract
     // clause: case, fragments, default/nondefault ports, tracking
-    // params, param sort, trailing slash, co.uk registered domains
-    // full canonicalization replay: same synthesized strings, then the
-    // documented contract step by step (scheme/host lower, fragment off,
-    // default-port strip, tracking filter + byte sort, path normalize)
+    // params, param sort, trailing slash, co.uk registered domains. The
+    // replay follows the documented contract step by step (scheme/host
+    // lower, fragment off, default-port strip, tracking filter + byte
+    // sort, path normalize)
     Gate("q_url_canon", """
       WITH u AS (SELECT concat(
                CASE WHEN doc_id % 3 = 0 THEN 'HTTP://' ELSE 'https://' END,
@@ -220,10 +242,8 @@ object VocabGates {
     // consistent pseudonymization: every distinct email -> a stable
     // user_<md5-8>@redacted.invalid token, longest-first replace fold;
     // every 11th doc carries the substring-hazard pair (a@b.co inside
-    // xa@b.co) so the ordering is exercised live
-    // pseudonymize replay: identical payload synthesis, the same
-    // longest-first (lpad key) literal-replace fold, token arithmetic via
-    // DuckDB's own md5/list_reduce — the whole transform replayed
+    // xa@b.co) so the ordering is exercised live; the replay's token
+    // arithmetic runs on DuckDB's own md5/list_reduce
     Gate("q_pseudonymize", s"""
       WITH d AS (SELECT doc_id, source,
           text || ' contact admin' || CAST(doc_id % 5 AS VARCHAR) || '@example.com' ||
@@ -272,7 +292,6 @@ object VocabGates {
 
     // exact-size deterministic sample: the 500 smallest content-hash
     // keys — TakeOrdered plan (bounded heap/partition), no global sort
-    // exact-size sample replay: same md5 order, same tie-break, LIMIT n
     Gate("q_sample_take", """
       SELECT doc_id, source FROM (
         SELECT doc_id, source FROM documents
@@ -285,9 +304,8 @@ object VocabGates {
 
     // per-source token-budget curation: greedy-prefix admission in
     // (toks DESC, doc_id) priority order under a 2000-token budget per
-    // source; ONE stratum-keyed window cumsum
-    // token-budget replay: window cumsum in the same (toks DESC, doc_id)
-    // order, prefix kept while cum <= budget
+    // source; ONE stratum-keyed window cumsum, prefix kept while
+    // cum <= budget
     Gate("q_token_budget", """
       WITH t AS (SELECT doc_id, source,
           CAST(len(list_filter(string_split_regex(lower(text), '\s+'),
@@ -312,10 +330,9 @@ object VocabGates {
 
     // encoding-damage (mojibake) screen: cp1252 artifacts injected into
     // every 7th doc with identical string synthesis in both engines;
-    // hits counted by pure replace/length arithmetic (no regex dialect)
-    // mojibake replay: identical payload synthesis via chr() code points,
-    // hits via the same replace/length arithmetic — the artifact list and
-    // the SQL are generated from ONE source (TextAnalysis.MojibakeArtifacts)
+    // hits counted by pure replace/length arithmetic (no regex dialect);
+    // the artifact list and the SQL come from ONE source
+    // (TextAnalysis.MojibakeArtifacts)
     Gate("q_mojibake", {
       def chrs(s: String) = s.map(c => s"chr(${c.toInt})").mkString(" || ")
       val arts = graft.operators.TextAnalysis.MojibakeArtifacts
@@ -397,10 +414,9 @@ object VocabGates {
 
     // JSONL quarantine ingest: hand-built JSON lines (identical string
     // construction in both engines), every 17th truncated-corrupt;
-    // PERMISSIVE parse splits good rows from quarantined raw lines
-    // the same hand-built lines; good rows are the %17!=0 docs, the
-    // quarantine is the truncated lines (raw text lands in the corrupt
-    // column, so its length is the truncated length)
+    // PERMISSIVE parse splits good rows from quarantined raw lines (raw
+    // text lands in the corrupt column, so its length is the truncated
+    // length)
     Gate("q_jsonl_ingest", """
       WITH l AS (SELECT doc_id, source,
         concat('{"doc_id": ', CAST(doc_id AS VARCHAR), ', "source": "', source,
@@ -422,32 +438,14 @@ object VocabGates {
         .select(when(col("doc_id") % 17 === 0,
           col("l").substr(lit(1), length(col("l")) - lit(5)))
           .otherwise(col("l")).as("line"))
-      val tmp = streaming.FileStreams.createTempDir("graft_jsonl_").toString
-      lines.coalesce(4).write.mode("overwrite").text(tmp)
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("source",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("n_chars",
-          org.apache.spark.sql.types.LongType)))
-      val (good, bad) = graft.sources.JsonlIngest.ingest(s, tmp, schema)
-      val res = good.agg(count(lit(1)).cast("long").as("good_rows"),
-          sum("doc_id").cast("long").as("id_sum"),
-          countDistinct("source").cast("long").as("sources"))
-        .crossJoin(bad.agg(count(lit(1)).cast("long").as("quarantined"),
-          sum(length(col("raw_line"))).cast("long").as("quarantine_chars")))
-      val out = localResult(s, res) // 1-row checksum; frees the staged text
-      deleteDirs(tmp)
-      out
+      ingestRollup(s, lines, "graft_jsonl_")(JsonlIngest.ingest)(
+        countDistinct("source").cast("long").as("sources"))
     },
 
     // strict PII scrub on deterministically injected payloads: the
     // engine must pass the valid card, keep the Luhn-failed one, catch
-    // both phone shapes and leave bare digit runs alone
-    // expected-output construction: the oracle knows which injected
-    // payload each doc got and what the strict scrub must do to it (the
-    // Luhn decision itself is pinned by the fixed valid/invalid pair)
+    // both phone shapes and leave bare digit runs alone; the oracle
+    // builds the expected output per injected payload
     Gate("q_redact_strict", """
       SELECT doc_id, substring(md5(concat(text,
         CASE CAST(doc_id % 5 AS INT)
@@ -488,24 +486,8 @@ object VocabGates {
             concat(col("doc_id").cast("string"), lit(","), col("source")))
           .otherwise(concat(col("doc_id").cast("string"), lit(","), col("source"),
             lit(","), col("n_chars").cast("string"))).as("line"))
-      val tmp = streaming.FileStreams.createTempDir("graft_csv_").toString
-      lines.coalesce(4).write.mode("overwrite").text(tmp)
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("source",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("n_chars",
-          org.apache.spark.sql.types.LongType)))
-      val (good, bad) = graft.sources.JsonlIngest.ingestCsv(s, tmp, schema)
-      val res = good.agg(count(lit(1)).cast("long").as("good_rows"),
-          sum("doc_id").cast("long").as("id_sum"),
-          sum("n_chars").cast("long").as("chars_sum"))
-        .crossJoin(bad.agg(count(lit(1)).cast("long").as("quarantined"),
-          sum(length(col("raw_line"))).cast("long").as("quarantine_chars")))
-      val out = localResult(s, res) // 1-row checksum; frees the staged text
-      deleteDirs(tmp)
-      out
+      ingestRollup(s, lines, "graft_csv_")(JsonlIngest.ingestCsv(_, _, _))(
+        sum("n_chars").cast("long").as("chars_sum"))
     },
 
     // readability: Flesch reading ease with heuristic vowel-group
@@ -535,9 +517,8 @@ object VocabGates {
     // HTML -> text extraction on synthesized pages (script/style with
     // embedded '<', entities incl. double-escapes, block breaks);
     // per-doc md5 + length of the extraction, replayed byte for byte
-    // identical page synthesis, then the same regex pipeline with RE2 +
-    // the 'g' flag; entity decodes are plain replaces with &amp; LAST so
-    // double-escapes stay literal in both engines
+    // with RE2 + the 'g' flag; entity decodes are plain replaces with
+    // &amp; LAST so double-escapes stay literal in both engines
     Gate("q_html_extract", """
       WITH pages AS (SELECT doc_id,
         concat('<html><head><title>', source, '</title>',
@@ -577,6 +558,8 @@ object VocabGates {
         .orderBy("doc_id")
     },
 
+    // per-source curation report: docs / dup rate / volume per source,
+    // the table a pipeline reads to set per-source sampling weights
     Gate("q_source_report", """
       SELECT source, CAST(COUNT(*) AS BIGINT) AS docs,
              CAST(COUNT(DISTINCT md5(text)) AS BIGINT) AS distinct_docs,
@@ -599,9 +582,8 @@ object VocabGates {
     // INTEGER per-doc quantities (counts, char coverages, a modular
     // bigram hash) — no per-doc float rounding to go cross-engine-flaky;
     // the fraction columns the API exposes are these integers divided.
-    // Gopher repetition filters replayed independently: line/word distinct
-    // counts via list_distinct, top word-bigram per doc via the same
-    // count-DESC-then-bigram-ASC window, all-gate-columns integer
+    // The replay takes the top word-bigram per doc via the same
+    // count-DESC-then-bigram-ASC window.
     Gate("q_repetition", """
       WITH t AS (
         SELECT doc_id, string_split(text, chr(10)) AS lns,

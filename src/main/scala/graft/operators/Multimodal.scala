@@ -12,7 +12,7 @@ import org.apache.spark.sql.types._
 
 /** Multimodal column plumbing: image/audio/video payloads travel as opaque
   * BINARY columns with typed metadata structs, and decode / feature-extract /
-  * resize / frame-sample run as batched partition-parallel transforms.
+  * resize / frame-sample run as partition-parallel transforms.
   *
   * The image path is a REAL codec: payloads are PNG byte streams decoded with
   * `javax.imageio.ImageIO` (pure-JVM, no external libraries), metadata comes
@@ -227,7 +227,7 @@ object Multimodal {
     * formula's statistics exactly and `q_multimodal_video` gets a live
     * analytic oracle like the image and audio gates. A true motion codec
     * (H.264/VP9) needs native libraries this container lacks; the
-    * plumbing — payload bytes, per-frame metadata, batched decode — is
+    * plumbing — payload bytes, per-frame metadata, the decode stage — is
     * identical either way.
     */
   object VideoCodec {
@@ -442,15 +442,34 @@ object Multimodal {
     }
   }
 
-  /** Codec work is CPU-bound and the id-only input is tiny, so the
-    * synthesizers spread the ids across the session's full parallelism —
-    * a small table read as one 128MB-bounded partition would otherwise
-    * encode 50k payloads on a single core (measured: the sf1 gates ran
-    * single-threaded, 30s instead of ~2s).
+  /** The `(media_id, payload)` stage every synthesizer runs: one payload
+    * `encode(id)` per input id. Codec work is CPU-bound and the id-only
+    * input is tiny, so the ids are spread across the session's full
+    * parallelism first — a small table read as one 128MB-bounded partition
+    * would otherwise encode 50k payloads on a single core (measured: the
+    * sf1 gates ran single-threaded, 30s instead of ~2s).
     */
-  private def synthInput(df: DataFrame, idCol: String): DataFrame =
+  private def synthesize(df: DataFrame, idCol: String)(encode: Long => Array[Byte]): DataFrame = {
+    implicit val enc = RowEncoder.encoderFor(StructType(Seq(
+      StructField("media_id", LongType, nullable = false),
+      StructField("payload", BinaryType, nullable = false))))
     df.select(col(idCol).cast("long"))
       .repartition(df.sparkSession.sparkContext.defaultParallelism)
+      .mapPartitions(_.map { r => val id = r.getLong(0); Row(id, encode(id)) })
+  }
+
+  /** The payload-map stage every decoder runs: projects `(idCol as long,
+    * binCol as binary)` and emits `f(id, payload)`'s rows under `outSchema`.
+    * A NULL payload reaches `f` as `null` (every codec's `decode*` maps it
+    * to "not decodable"). No shuffle; partitioning is inherited.
+    */
+  private def mapPayloads(df: DataFrame, idCol: String, binCol: String, outSchema: StructType)(
+      f: (Long, Array[Byte]) => Iterator[Row]): DataFrame = {
+    implicit val enc = RowEncoder.encoderFor(outSchema)
+    df.select(col(idCol).cast("long"), col(binCol).cast("binary")).mapPartitions(_.flatMap { r =>
+      f(r.getLong(0), if (r.isNullAt(1)) null else r.getAs[Array[Byte]](1))
+    })
+  }
 
   /** Deterministic synthetic PNG payloads: one real PNG per input row, with
     * dimensions `8 + id % 9` x `8 + (id / 9) % 9` and RGB pixel values
@@ -458,34 +477,25 @@ object Multimodal {
     * integer arithmetic so an external engine can recompute every pixel
     * statistic without a codec — while the payload itself is genuine PNG
     * bytes produced by `javax.imageio` (encoder exercised here, decoder in
-    * [[decodeAndFeaturize]]). Runs as `mapPartitions` after the one
-    * round-robin exchange [[synthInput]] introduces for codec parallelism.
+    * [[decodeAndFeaturize]]).
     */
-  def synthesizePngPayloads(df: DataFrame, idCol: String): DataFrame = {
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("payload", BinaryType, nullable = false)))
-    implicit val enc = RowEncoder.encoderFor(outSchema)
-    synthInput(df, idCol).mapPartitions { rows =>
-      rows.map { r =>
-        val id = r.getLong(0)
-        val w = (8 + id % 9).toInt
-        val h = (8 + (id / 9) % 9).toInt
-        val img = new BufferedImage(w, h, BufferedImage.TYPE_INT_RGB)
-        var y = 0
-        while (y < h) {
-          var x = 0
-          while (x < w) {
-            def v(c: Long) = (((id * 31 + x * 7 + y * 13 + c * 101) % 256).toInt)
-            img.setRGB(x, y, (v(0) << 16) | (v(1) << 8) | v(2))
-            x += 1
-          }
-          y += 1
+  def synthesizePngPayloads(df: DataFrame, idCol: String): DataFrame =
+    synthesize(df, idCol) { id =>
+      val w = (8 + id % 9).toInt
+      val h = (8 + (id / 9) % 9).toInt
+      val img = new BufferedImage(w, h, BufferedImage.TYPE_INT_RGB)
+      var y = 0
+      while (y < h) {
+        var x = 0
+        while (x < w) {
+          def v(c: Long) = (((id * 31 + x * 7 + y * 13 + c * 101) % 256).toInt)
+          img.setRGB(x, y, (v(0) << 16) | (v(1) << 8) | v(2))
+          x += 1
         }
-        Row(id, ImageCodec.encodePng(img))
+        y += 1
       }
+      ImageCodec.encodePng(img)
     }
-  }
 
   /** Deterministic synthetic WAV payloads: one real PCM-16 WAV per input
     * row at 8 kHz with `1 + id % 2` channels and `400 + (id % 7) * 100`
@@ -493,29 +503,20 @@ object Multimodal {
     * - 2000`. Plain integer arithmetic, so an external engine recomputes
     * every sample statistic without a codec — while the payload is a
     * genuine RIFF/WAVE stream (encoder exercised here, decoder in
-    * [[decodeAndFeaturize]]). Runs as `mapPartitions` after the one
-    * round-robin exchange [[synthInput]] introduces for codec parallelism.
+    * [[decodeAndFeaturize]]).
     */
-  def synthesizeWavPayloads(df: DataFrame, idCol: String): DataFrame = {
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("payload", BinaryType, nullable = false)))
-    implicit val enc = RowEncoder.encoderFor(outSchema)
-    synthInput(df, idCol).mapPartitions { rows =>
-      rows.map { r =>
-        val id = r.getLong(0)
-        val channels = (1 + id % 2).toInt
-        val frames = (400 + (id % 7) * 100).toInt
-        val samples = new Array[Short](frames * channels)
-        var i = 0
-        while (i < samples.length) {
-          samples(i) = (((id * 31 + i.toLong * 17) % 4001) - 2000).toShort
-          i += 1
-        }
-        Row(id, AudioCodec.encodeWav(samples, 8000, channels))
+  def synthesizeWavPayloads(df: DataFrame, idCol: String): DataFrame =
+    synthesize(df, idCol) { id =>
+      val channels = (1 + id % 2).toInt
+      val frames = (400 + (id % 7) * 100).toInt
+      val samples = new Array[Short](frames * channels)
+      var i = 0
+      while (i < samples.length) {
+        samples(i) = (((id * 31 + i.toLong * 17) % 4001) - 2000).toShort
+        i += 1
       }
+      AudioCodec.encodeWav(samples, 8000, channels)
     }
-  }
 
   /** Deterministic synthetic animated-GIF payloads: one real GIF clip per
     * input row with `6 + id % 5` x `6 + (id / 5) % 5` frames of
@@ -527,139 +528,102 @@ object Multimodal {
     * pixel statistic is recomputable with plain integer arithmetic —
     * while the payload is a genuine GIF89a stream produced by
     * `javax.imageio` (encoder exercised here, decoder in
-    * [[decodeAndFeaturize]]). Runs as `mapPartitions` after the one
-    * round-robin exchange [[synthInput]] introduces for codec parallelism.
+    * [[decodeAndFeaturize]]).
     */
-  def synthesizeGifPayloads(df: DataFrame, idCol: String): DataFrame = {
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("payload", BinaryType, nullable = false)))
-    implicit val enc = RowEncoder.encoderFor(outSchema)
-    synthInput(df, idCol).mapPartitions { rows =>
-      rows.map { r =>
-        val id = r.getLong(0)
-        val w = (6 + id % 5).toInt
-        val h = (6 + (id / 5) % 5).toInt
-        val n = (2 + id % 4).toInt
-        val delayCs = (20 + (id % 5) * 10).toInt
-        val frames = (0 until n).map { f =>
-          VideoCodec.grayFrame(w, h)((x, y) =>
-            ((id * 31 + f * 29 + x * 7 + y * 13) % 256).toInt)
-        }
-        Row(id, VideoCodec.encodeGif(frames, delayCs))
+  def synthesizeGifPayloads(df: DataFrame, idCol: String): DataFrame =
+    synthesize(df, idCol) { id =>
+      val w = (6 + id % 5).toInt
+      val h = (6 + (id / 5) % 5).toInt
+      val n = (2 + id % 4).toInt
+      val delayCs = (20 + (id % 5) * 10).toInt
+      val frames = (0 until n).map { f =>
+        VideoCodec.grayFrame(w, h)((x, y) =>
+          ((id * 31 + f * 29 + x * 7 + y * 13) % 256).toInt)
       }
+      VideoCodec.encodeGif(frames, delayCs)
     }
+
+  /** 64-bit difference hash of one decoded image: nearest-sample it onto
+    * a 9×8 grid — sample (gc, gr) reads pixel `(gc·w div 9, gr·h div 8)` —
+    * take integer luma `(299·R + 587·G + 114·B) div 1000`, and set bit
+    * `gr·8 + gc` iff `s(gc, gr) > s(gc+1, gr)`. Bit 63 lands in the sign
+    * bit (two's complement, both engines agree).
+    */
+  private def dHash(img: BufferedImage): Long = {
+    val w = img.getWidth
+    val h = img.getHeight
+    val s = Array.ofDim[Int](8, 9)
+    var gr = 0
+    while (gr < 8) {
+      var gc = 0
+      while (gc < 9) {
+        val rgb = img.getRGB(gc * w / 9, gr * h / 8)
+        s(gr)(gc) = (((rgb >> 16) & 255) * 299 + ((rgb >> 8) & 255) * 587 +
+          (rgb & 255) * 114) / 1000
+        gc += 1
+      }
+      gr += 1
+    }
+    var hash = 0L
+    gr = 0
+    while (gr < 8) {
+      var gc = 0
+      while (gc < 8) {
+        if (s(gr)(gc) > s(gr)(gc + 1)) hash |= (1L << (gr * 8 + gc))
+        gc += 1
+      }
+      gr += 1
+    }
+    hash
   }
 
   /** Per-frame perceptual hashes of a video payload — [[dHash64]] applied
     * to every decoded frame: the shot-matching primitive for video
     * near-dup (clips sharing frame hashes contain the same footage).
     * Same exact integer spec as dHash64 (gray frames: luma == the gray
-    * level, since (299+587+114) div 1000 = 1). Undecodable payloads emit
-    * a single (-1, NULL) row so the id is never silently dropped.
+    * level, since (299+587+114) div 1000 = 1). Undecodable and NULL
+    * payloads emit a single (-1, NULL) row so the id is never silently
+    * dropped.
     *
-    * Scale shape: batched mapPartitions on the payload scan; output rows
-    * = frames, 24 B each; the dedup group-by downstream is hash-keyed.
+    * Scale shape: one payload-map pass over the scan; output rows =
+    * frames, 24 B each; the dedup group-by downstream is hash-keyed.
     */
-  def frameDHashes(df: DataFrame, idCol: String, binCol: String,
-      batchSize: Int = 64): DataFrame = {
-    val outSchema = StructType(Seq(
+  def frameDHashes(df: DataFrame, idCol: String, binCol: String): DataFrame =
+    mapPayloads(df, idCol, binCol, StructType(Seq(
       StructField("media_id", LongType, nullable = false),
       StructField("frame_idx", IntegerType, nullable = false),
-      StructField("fhash", LongType, nullable = true)))
-    val input = df.select(col(idCol).cast("long"), col(binCol).cast("binary"))
-    implicit val enc = RowEncoder.encoderFor(outSchema)
-    input.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        batch.iterator.flatMap { r =>
-          val id = r.getLong(0)
-          val bytes = if (r.isNullAt(1)) Array.emptyByteArray else r.getAs[Array[Byte]](1)
-          val clip = VideoCodec.decodeGif(bytes)
-          if (clip == null) Iterator.single(Row(id, -1, null))
-          else clip.frames.iterator.zipWithIndex.map { case (img, f) =>
-            val w = img.getWidth
-            val h = img.getHeight
-            val s = Array.ofDim[Int](8, 9)
-            var gr = 0
-            while (gr < 8) {
-              var gc = 0
-              while (gc < 9) {
-                val rgb = img.getRGB(gc * w / 9, gr * h / 8)
-                s(gr)(gc) = (((rgb >> 16) & 255) * 299 + ((rgb >> 8) & 255) * 587 +
-                  (rgb & 255) * 114) / 1000
-                gc += 1
-              }
-              gr += 1
-            }
-            var hash = 0L
-            gr = 0
-            while (gr < 8) {
-              var gc = 0
-              while (gc < 8) {
-                if (s(gr)(gc) > s(gr)(gc + 1)) hash |= (1L << (gr * 8 + gc))
-                gc += 1
-              }
-              gr += 1
-            }
-            Row(id, f, hash)
-          }
-        }
-      }
+      StructField("fhash", LongType, nullable = true)))) { (id, bytes) =>
+      val clip = VideoCodec.decodeGif(bytes)
+      if (clip == null) Iterator.single(Row(id, -1, null))
+      else clip.frames.iterator.zipWithIndex.map { case (img, f) => Row(id, f, dHash(img)) }
     }
-  }
 
   /** REAL byte-level image resize: decode each payload, nearest-neighbor
     * resample so the longest side is at most `maxSide` (aspect preserved,
     * `ceil(dim * scale)` targets — the same arithmetic as
     * [[withResizePlan]]), re-encode as PNG. Undecodable payloads pass
-    * through unchanged. Batched `mapPartitions`, no shuffle — the
-    * thumbnail/normalize pass of an image-corpus pipeline.
+    * through unchanged, NULL as NULL. One payload-map pass, no shuffle —
+    * the thumbnail/normalize pass of an image-corpus pipeline.
     */
-  def resizePayloads(df: DataFrame, idCol: String, binCol: String,
-      maxSide: Int, batchSize: Int = 256): DataFrame = {
+  def resizePayloads(df: DataFrame, idCol: String, binCol: String, maxSide: Int): DataFrame = {
     require(maxSide >= 1, "maxSide must be >= 1")
-    val outSchema = StructType(Seq(
+    mapPayloads(df, idCol, binCol, StructType(Seq(
       StructField("media_id", LongType, nullable = false),
-      StructField("payload", BinaryType, nullable = true)))
-    val input = df.select(col(idCol).cast("long"), col(binCol).cast("binary"))
-    implicit val enc = RowEncoder.encoderFor(outSchema)
-    input.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        batch.iterator.map { r =>
-          val id = r.getLong(0)
-          val bytes = if (r.isNullAt(1)) null else r.getAs[Array[Byte]](1)
-          val img = ImageCodec.decode(bytes)
-          if (img == null) Row(id, bytes)
-          else {
-            val scale = math.min(1.0, maxSide.toDouble / math.max(img.getWidth, img.getHeight))
-            // clamp: ceil(dim * (maxSide/dim)) can land one past maxSide
-            // when the float product rounds up (e.g. 187 * (3/187) ->
-            // 3.0000000000000004 -> ceil 4), breaking the contract
-            val tw = math.min(maxSide, math.ceil(img.getWidth * scale).toInt)
-            val th = math.min(maxSide, math.ceil(img.getHeight * scale).toInt)
-            Row(id, ImageCodec.encodePng(resizeNearest(img, tw, th)))
-          }
-        }
+      StructField("payload", BinaryType, nullable = true)))) { (id, bytes) =>
+      val img = ImageCodec.decode(bytes)
+      if (img == null) Iterator.single(Row(id, bytes))
+      else {
+        val scale = math.min(1.0, maxSide.toDouble / math.max(img.getWidth, img.getHeight))
+        // clamp: ceil(dim * (maxSide/dim)) can land one past maxSide
+        // when the float product rounds up (e.g. 187 * (3/187) ->
+        // 3.0000000000000004 -> ceil 4), breaking the contract
+        val tw = math.min(maxSide, math.ceil(img.getWidth * scale).toInt)
+        val th = math.min(maxSide, math.ceil(img.getHeight * scale).toInt)
+        Iterator.single(Row(id, ImageCodec.encodePng(resizeNearest(img, tw, th))))
       }
     }
   }
 
-  /** Decode a binary payload column into a metadata struct + feature vector.
-    *
-    * Runs as `mapPartitions` with an internal batch iterator (`batchSize`
-    * rows at a time), mirroring the arrow-batch shape a Pandas-UDF pipeline
-    * would use: a real codec amortizes model/codec init per batch, not per
-    * row. No shuffle is introduced; partitioning is inherited.
-    *
-    * `kind = "image"` uses the real [[ImageCodec]] (PNG/BMP — whatever
-    * `ImageIO` reads); `kind = "audio"` the real [[AudioCodec]] (PCM-16
-    * WAV; meta = (width=frame count, height=sample rate, channels,
-    * duration_ms)); `kind = "video"` the real [[VideoCodec]] (animated
-    * GIF; meta = (width, height, 1, duration from the per-frame delays)).
-    * Undecodable payloads produce zeroed metadata and features rather
-    * than failing the task. Other kinds go through the documented
-    * [[StubCodec]].
-    */
   /** 64-bit perceptual difference hash (dHash) of image payloads — the
     * image twin of the text fingerprints: near-identical images (resized,
     * re-encoded, slightly recolored) collide, so exact-groupBy on the
@@ -667,64 +631,24 @@ object Multimodal {
     * value gives a near-dup distance.
     *
     * Exact integer spec (engine-replayable without a codec when pixel
-    * values are analytic): nearest-sample the decoded image onto a 9×8
-    * grid — sample (gc, gr) reads pixel `(gc·w div 9, gr·h div 8)` —
-    * take integer luma `(299·R + 587·G + 114·B) div 1000`, and set bit
-    * `gr·8 + gc` iff `s(gc, gr) > s(gc+1, gr)`. Bit 63 lands in the sign
-    * bit (two's complement, both engines agree). Undecodable payloads
+    * values are analytic): see [[dHash]]. Undecodable and NULL payloads
     * yield a NULL hash with (-1, -1) dimensions.
     *
-    * Scale shape: embarrassingly parallel batched mapPartitions on the
-    * payload scan (same as [[decodeAndFeaturize]]); the output is 20 B a
-    * row no matter how large the images are.
+    * Scale shape: one embarrassingly parallel payload-map pass over the
+    * scan (same as [[decodeAndFeaturize]]); the output is 20 B a row no
+    * matter how large the images are.
     */
-  def dHash64(df: DataFrame, idCol: String, binCol: String,
-      batchSize: Int = 256): DataFrame = {
-    val outSchema = StructType(Seq(
+  def dHash64(df: DataFrame, idCol: String, binCol: String): DataFrame =
+    mapPayloads(df, idCol, binCol, StructType(Seq(
       StructField("media_id", LongType, nullable = false),
       StructField("width", IntegerType, nullable = false),
       StructField("height", IntegerType, nullable = false),
-      StructField("dhash", LongType, nullable = true)))
-    val input = df.select(col(idCol).cast("long"), col(binCol).cast("binary"))
-    implicit val enc = RowEncoder.encoderFor(outSchema)
-    input.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        batch.iterator.map { r =>
-          val id = r.getLong(0)
-          val bytes = if (r.isNullAt(1)) Array.emptyByteArray else r.getAs[Array[Byte]](1)
-          val img = ImageCodec.decode(bytes)
-          if (img == null) Row(id, -1, -1, null)
-          else {
-            val w = img.getWidth
-            val h = img.getHeight
-            val s = Array.ofDim[Int](8, 9)
-            var gr = 0
-            while (gr < 8) {
-              var gc = 0
-              while (gc < 9) {
-                val rgb = img.getRGB(gc * w / 9, gr * h / 8)
-                s(gr)(gc) = (((rgb >> 16) & 255) * 299 + ((rgb >> 8) & 255) * 587 +
-                  (rgb & 255) * 114) / 1000
-                gc += 1
-              }
-              gr += 1
-            }
-            var hash = 0L
-            gr = 0
-            while (gr < 8) {
-              var gc = 0
-              while (gc < 8) {
-                if (s(gr)(gc) > s(gr)(gc + 1)) hash |= (1L << (gr * 8 + gc))
-                gc += 1
-              }
-              gr += 1
-            }
-            Row(id, w, h, hash)
-          }
-        }
-      }
+      StructField("dhash", LongType, nullable = true)))) { (id, bytes) =>
+      val img = ImageCodec.decode(bytes)
+      Iterator.single(
+        if (img == null) Row(id, -1, -1, null)
+        else Row(id, img.getWidth, img.getHeight, dHash(img)))
     }
-  }
 
   /** 64-bit audio fingerprint over decoded PCM samples — [[dHash64]]'s
     * audio sibling: re-encoded or container-shuffled copies of the same
@@ -734,88 +658,77 @@ object Multimodal {
     * positions `p_k = k·N div 65` (k = 0..64) and set bit k iff
     * `s(p_k) > s(p_{k+1})` — the coarse waveform-shape signature, no FFT,
     * replayable in any engine when samples are analytic. Bit 63 lands in
-    * the sign bit. Undecodable payloads yield a NULL fingerprint.
+    * the sign bit. Undecodable and NULL payloads yield a NULL fingerprint
+    * with (-1, -1) frames and channels.
     *
-    * Scale shape: batched mapPartitions on the payload scan, 20 B out/row.
+    * Scale shape: one payload-map pass over the scan, 20 B out/row.
     */
-  def audioFingerprint64(df: DataFrame, idCol: String, binCol: String,
-      batchSize: Int = 256): DataFrame = {
-    val outSchema = StructType(Seq(
+  def audioFingerprint64(df: DataFrame, idCol: String, binCol: String): DataFrame =
+    mapPayloads(df, idCol, binCol, StructType(Seq(
       StructField("media_id", LongType, nullable = false),
       StructField("frames", IntegerType, nullable = false),
       StructField("channels", IntegerType, nullable = false),
-      StructField("afp", LongType, nullable = true)))
-    val input = df.select(col(idCol).cast("long"), col(binCol).cast("binary"))
-    implicit val enc = RowEncoder.encoderFor(outSchema)
-    input.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        batch.iterator.map { r =>
-          val id = r.getLong(0)
-          val bytes = if (r.isNullAt(1)) Array.emptyByteArray else r.getAs[Array[Byte]](1)
-          val wav = AudioCodec.decodeWav(bytes)
-          if (wav == null || wav.samples.length < 2) Row(id, -1, -1, null)
-          else {
-            val s = wav.samples
-            val n = s.length
-            var hash = 0L
-            var k = 0
-            while (k < 64) {
-              if (s((k.toLong * n / 65).toInt) > s(((k + 1).toLong * n / 65).toInt))
-                hash |= (1L << k)
-              k += 1
-            }
-            Row(id, wav.frames, wav.channels, hash)
+      StructField("afp", LongType, nullable = true)))) { (id, bytes) =>
+      val wav = AudioCodec.decodeWav(bytes)
+      Iterator.single(
+        if (wav == null || wav.samples.length < 2) Row(id, -1, -1, null)
+        else {
+          val s = wav.samples
+          val n = s.length
+          var hash = 0L
+          var k = 0
+          while (k < 64) {
+            if (s((k.toLong * n / 65).toInt) > s(((k + 1).toLong * n / 65).toInt))
+              hash |= (1L << k)
+            k += 1
           }
-        }
+          Row(id, wav.frames, wav.channels, hash)
+        })
+    }
+
+  /** Decode a binary payload column into a metadata struct + feature vector.
+    *
+    * One payload-map pass over the scan; the codec is chosen once per call,
+    * not per row. No shuffle is introduced; partitioning is inherited.
+    *
+    * `kind = "image"` uses the real [[ImageCodec]] (PNG/BMP — whatever
+    * `ImageIO` reads); `kind = "audio"` the real [[AudioCodec]] (PCM-16
+    * WAV; meta = (width=frame count, height=sample rate, channels,
+    * duration_ms)); `kind = "video"` the real [[VideoCodec]] (animated
+    * GIF; meta = (width, height, 1, duration from the per-frame delays)).
+    * Undecodable and NULL payloads produce zeroed metadata and features
+    * rather than failing the task. Other kinds go through the documented
+    * [[StubCodec]], which reads a NULL payload as empty.
+    */
+  def decodeAndFeaturize(df: DataFrame, idCol: String, binCol: String,
+      kind: String = "image", featureDim: Int = 64): DataFrame = {
+    val featurize: Array[Byte] => Option[(Row, Array[Float])] = kind match {
+      case "image" => bytes => Option(ImageCodec.decode(bytes)).map { img =>
+        Row(kind, img.getWidth, img.getHeight, img.getColorModel.getNumComponents, 0L) ->
+          ImageCodec.features(img, featureDim)
+      }
+      case "audio" => bytes => Option(AudioCodec.decodeWav(bytes)).map { wav =>
+        Row(kind, wav.frames, wav.sampleRate, wav.channels, wav.durationMs) ->
+          AudioCodec.features(wav, featureDim)
+      }
+      case "video" => bytes => Option(VideoCodec.decodeGif(bytes)).map { clip =>
+        Row(kind, clip.width, clip.height, 1, clip.durationMs) ->
+          VideoCodec.features(clip, featureDim)
+      }
+      case _ => payload => {
+        val bytes = if (payload == null) Array.emptyByteArray else payload
+        val (w, h, c, d) = StubCodec.decodeMeta(kind, bytes)
+        Some(Row(kind, w, h, c, d) -> StubCodec.extractFeatures(bytes, featureDim))
       }
     }
-  }
-
-  def decodeAndFeaturize(df: DataFrame, idCol: String, binCol: String,
-      kind: String = "image", featureDim: Int = 64, batchSize: Int = 256): DataFrame = {
-    val outSchema = StructType(Seq(
+    mapPayloads(df, idCol, binCol, StructType(Seq(
       StructField("media_id", LongType, nullable = false),
       StructField("meta", mediaMetaSchema, nullable = false),
-      StructField("features", ArrayType(FloatType, containsNull = false), nullable = false)))
-    val input = df.select(col(idCol).cast("long"), col(binCol).cast("binary"))
-    implicit val enc = RowEncoder.encoderFor(outSchema)
-    input.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        // per-batch codec "session" — where a real implementation would
-        // initialize/reuse its decoder state
-        batch.iterator.map { r =>
-          val id = r.getLong(0)
-          val bytes = if (r.isNullAt(1)) Array.emptyByteArray else r.getAs[Array[Byte]](1)
-          kind match {
-            case "image" =>
-              val img = ImageCodec.decode(bytes)
-              if (img == null)
-                Row(id, Row(kind, 0, 0, 0, 0L), new Array[Float](featureDim))
-              else {
-                val channels = img.getColorModel.getNumComponents
-                Row(id, Row(kind, img.getWidth, img.getHeight, channels, 0L),
-                  ImageCodec.features(img, featureDim))
-              }
-            case "audio" =>
-              val wav = AudioCodec.decodeWav(bytes)
-              if (wav == null)
-                Row(id, Row(kind, 0, 0, 0, 0L), new Array[Float](featureDim))
-              else
-                Row(id, Row(kind, wav.frames, wav.sampleRate, wav.channels, wav.durationMs),
-                  AudioCodec.features(wav, featureDim))
-            case "video" =>
-              val clip = VideoCodec.decodeGif(bytes)
-              if (clip == null)
-                Row(id, Row(kind, 0, 0, 0, 0L), new Array[Float](featureDim))
-              else
-                Row(id, Row(kind, clip.width, clip.height, 1, clip.durationMs),
-                  VideoCodec.features(clip, featureDim))
-            case _ =>
-              val (w, h, c, d) = StubCodec.decodeMeta(kind, bytes)
-              Row(id, Row(kind, w, h, c, d), StubCodec.extractFeatures(bytes, featureDim))
-          }
-        }
-      }
+      StructField("features", ArrayType(FloatType, containsNull = false), nullable = false)))) {
+      (id, bytes) =>
+        val (meta, features) = featurize(bytes)
+          .getOrElse(Row(kind, 0, 0, 0, 0L) -> new Array[Float](featureDim))
+        Iterator.single(Row(id, meta, features))
     }
   }
 

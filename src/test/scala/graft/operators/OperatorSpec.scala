@@ -284,10 +284,9 @@ class OperatorSpec extends AnyFunSuite with BeforeAndAfterAll {
     val sps = spark; import sps.implicits._
     val ids = (0L to 40L).toDF("doc_id")
     val gif = Multimodal.synthesizeGifPayloads(ids, "doc_id")
-    val a = Multimodal.decodeAndFeaturize(gif, "media_id", "payload", "video", 8, batchSize = 3)
+    val a = Multimodal.decodeAndFeaturize(gif, "media_id", "payload", "video", 8)
       .collect().map(r => r.getLong(0) -> r).toMap
-    val b = Multimodal.decodeAndFeaturize(gif.repartition(5), "media_id", "payload", "video", 8,
-        batchSize = 1000)
+    val b = Multimodal.decodeAndFeaturize(gif.repartition(5), "media_id", "payload", "video", 8)
       .collect().map(r => r.getLong(0) -> r).toMap
     (0L to 40L).foreach { id =>
       val (w, h, n, delay) = ((6 + id % 5).toInt, (6 + (id / 5) % 5).toInt,
@@ -1430,10 +1429,10 @@ class OperatorSpec extends AnyFunSuite with BeforeAndAfterAll {
     val sps = spark; import sps.implicits._
     val ids = (1L to 100L).toDF("doc_id")
     val png = Multimodal.synthesizePngPayloads(ids, "doc_id")
-    val a = Multimodal.decodeAndFeaturize(png, "media_id", "payload", "image", 8, batchSize = 3)
+    val a = Multimodal.decodeAndFeaturize(png, "media_id", "payload", "image", 8)
       .select("media_id", "meta.width", "meta.height", "meta.channels", "features").collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getInt(3), r.getSeq[Float](4))).sortBy(_._1)
-    val b = Multimodal.decodeAndFeaturize(png.repartition(7), "media_id", "payload", "image", 8, batchSize = 1000)
+    val b = Multimodal.decodeAndFeaturize(png.repartition(7), "media_id", "payload", "image", 8)
       .select("media_id", "meta.width", "meta.height", "meta.channels", "features").collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getInt(3), r.getSeq[Float](4))).sortBy(_._1)
     assert(a.sameElements(b))
@@ -1531,6 +1530,29 @@ class OperatorSpec extends AnyFunSuite with BeforeAndAfterAll {
     val junk = Seq((9L, "nope".getBytes("UTF-8"))).toDF("media_id", "payload")
     val j = Multimodal.frameDHashes(junk, "media_id", "payload").collect()
     assert(j.length == 1 && j(0).getInt(1) == -1 && j(0).isNullAt(2))
+  }
+
+  test("multimodal: a NULL payload keeps each decoder's NULL contract") {
+    val sps = spark; import sps.implicits._
+    val nul = Seq((5L, null: Array[Byte])).toDF("media_id", "payload")
+    val r = Multimodal.resizePayloads(nul, "media_id", "payload", 6).collect()
+    assert(r.length == 1 && r(0).getLong(0) == 5L && r(0).isNullAt(1))
+    val d = Multimodal.dHash64(nul, "media_id", "payload").head()
+    assert(d.getInt(1) == -1 && d.getInt(2) == -1 && d.isNullAt(3))
+    val a = Multimodal.audioFingerprint64(nul, "media_id", "payload").head()
+    assert(a.getInt(1) == -1 && a.getInt(2) == -1 && a.isNullAt(3))
+    val f = Multimodal.frameDHashes(nul, "media_id", "payload").collect()
+    assert(f.length == 1 && f(0).getLong(0) == 5L && f(0).getInt(1) == -1 && f(0).isNullAt(2))
+    Seq("image", "audio", "video").foreach { kind =>
+      val z = Multimodal.decodeAndFeaturize(nul, "media_id", "payload", kind, 8).head()
+      val meta = z.getStruct(1)
+      assert(meta.getString(0) == kind && (1 to 3).forall(meta.getInt(_) == 0) &&
+        meta.getLong(4) == 0L && z.getSeq[Float](2) == Seq.fill(8)(0f), kind)
+    }
+    // a stub kind reads a NULL payload as empty bytes: same row as an empty payload
+    val empty = Seq((5L, Array.emptyByteArray)).toDF("media_id", "payload")
+    val stub = Multimodal.decodeAndFeaturize(nul, "media_id", "payload", "lidar", 8).head()
+    assert(stub == Multimodal.decodeAndFeaturize(empty, "media_id", "payload", "lidar", 8).head())
   }
 
   test("scene cuts: consecutive-frame hamming over decoded GIFs matches the analytic walk") {
