@@ -133,10 +133,10 @@ object GraphGates {
         .orderBy(col("nodes").desc, col("degree")).limit(25)
     },
 
-    // personalized PageRank: teleport mass restricted to nation-0
-    // suppliers — random-walk proximity ranks the "more like these"
-    // neighborhood; 3 unrolled iterations, same ppb integer contract,
-    // teleport restricted to the (graph-present) seed set
+    // personalized PageRank: teleport mass restricted to the
+    // (graph-present) nation-0 suppliers — random-walk proximity ranks
+    // the "more like these" neighborhood; 3 unrolled iterations, same
+    // ppb integer contract
     Gate("q_ppr", s"""
       WITH $edgesCte,
       deg AS (SELECT src, CAST(COUNT(*) AS BIGINT) AS deg FROM edges GROUP BY src),

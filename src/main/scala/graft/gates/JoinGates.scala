@@ -251,8 +251,8 @@ object JoinGates {
     // On the TPC-H 1..7-lineitems-per-order shape p80 lands on 6, so the
     // max-size orders (~1/7 of keys) take the salted fan-out path and
     // the rest join plain — BOTH paths carry real rows. The result is
-    // row-identical to the plain join by construction — the oracle
-    // replays the plain join + aggregate (row-identical by construction).
+    // row-identical to the plain join by construction, which is what the
+    // oracle replays.
     Gate("q_salted_join", priorityRollupSql) { (s, _) =>
       val li = s.table("lineitem").select(
         col("l_orderkey").as("orderkey"), col("l_extendedprice"), col("l_discount"))

@@ -69,7 +69,8 @@ object MultimodalGates {
     // frame sampling over REAL decoded GIF durations (per-frame delay
     // metadata read back from the GraphicControlExtension blocks), with a
     // live analytic replay: duration = frames * delay_cs * 10; sampled
-    // frames at 2 fps = max(1, floor(dur/1000*2)); ts sum = 500 * f * (f-1) / 2
+    // frames at 2 fps = max(1, floor(dur/1000*2)); ts sum =
+    // 500 * f * (f-1) / 2
     Gate("q_multimodal_frames", """
       WITH d AS (
         SELECT doc_id, 2 + doc_id % 4 AS nf, 20 + (doc_id % 5) * 10 AS delay
