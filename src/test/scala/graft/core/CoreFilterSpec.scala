@@ -190,6 +190,27 @@ class CoreFilterSpec extends AnyFunSuite {
     assert(!qf.insert(DuckDbHash.hashLong(999999L)))
   }
 
+  // --- Classic bloom filter -----------------------------------------------
+
+  test("classic bloom: no false negatives, golden FP count, or-merge equals bulk build, size") {
+    val members0 = seriesHashes(0)
+    val members1 = seriesHashes(1)
+    val n = members0.length.toLong
+    val bulk = ClassicBloomFilter.create(n, 0.01)
+    members0.foreach(bulk.insert)
+    val blob = bulk.serialize()
+    assert(blob.length == 8 + ClassicBloomFilter.capacityFor(n, 0.01) / 8)
+    assert(members0.forall(ClassicBloomFilter.probeBlob(blob, _)), "classic bloom false negative")
+    val fps = members1.count(ClassicBloomFilter.probeBlob(blob, _))
+    assert(fps == 544, s"classic bloom FPs: expected 544, got $fps")
+    val a = ClassicBloomFilter.create(n, 0.01)
+    val b = ClassicBloomFilter.create(n, 0.01)
+    members0.take(20000).foreach(a.insert)
+    members0.drop(20000).foreach(b.insert)
+    a.orMerge(b)
+    assert(a.serialize().sameElements(blob))
+  }
+
   // --- Binary fuse filters ------------------------------------------------
 
   test("binary fuse: golden FP counts (reference test/sql/bitfilters.test:110-117)") {
