@@ -42,22 +42,6 @@ final class BinaryFuseFilter(
     val fingerprints: Array[Char]) {
   require(bits == 8 || bits == 16)
 
-  private val segmentLengthMask = segmentLength - 1
-
-  def mightContain(key: Long): Boolean = {
-    val hash = mixSplit(key, seed)
-    val fpMask = if (bits == 8) 0xff else 0xffff
-    var f = fingerprint64(hash).toInt & fpMask
-    val hi = unsignedMulHi(hash, segmentCountLength.toLong & 0xffffffffL)
-    val h0 = hi.toInt
-    var h1 = h0 + segmentLength
-    var h2 = h1 + segmentLength
-    h1 ^= ((hash >>> 18).toInt & segmentLengthMask)
-    h2 ^= (hash.toInt & segmentLengthMask)
-    f ^= fingerprints(h0) ^ fingerprints(h1) ^ fingerprints(h2)
-    (f & fpMask) == 0
-  }
-
   /** Fuse16 blobs carry 4 trailing zero bytes: the reference's
     * binary_fuse16_serialization_bytes counts SegmentLengthMask
     * (binaryfusefilter.h:725-729) but binary_fuse16_serialize never writes it
@@ -299,21 +283,6 @@ object BinaryFuseFilter {
     // updated by populate's dedup path (binaryfusefilter.h:218,416-418).
     new BinaryFuseFilter(bits, seed, n0, segmentLength, segmentCount,
       segmentCountLength, arrayLength, fingerprints)
-  }
-
-  def deserialize(bits: Int, blob: Array[Byte]): BinaryFuseFilter = {
-    val bb = ByteBuffer.wrap(blob).order(ByteOrder.LITTLE_ENDIAN)
-    val seed = bb.getLong(0)
-    val size = bb.getInt(8)
-    val segmentLength = bb.getInt(12)
-    val segmentCount = bb.getInt(16)
-    val segmentCountLength = bb.getInt(20)
-    val arrayLength = bb.getInt(24)
-    val fps = new Array[Char](arrayLength)
-    var i = 0
-    if (bits == 8) while (i < arrayLength) { fps(i) = (blob(28 + i) & 0xff).toChar; i += 1 }
-    else while (i < arrayLength) { fps(i) = (bb.getShort(28 + 2 * i) & 0xffff).toChar; i += 1 }
-    new BinaryFuseFilter(bits, seed, size, segmentLength, segmentCount, segmentCountLength, arrayLength, fps)
   }
 
   /** Zero-copy probe against a serialized blob (no fingerprint array copy). */

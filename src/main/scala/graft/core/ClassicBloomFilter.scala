@@ -18,8 +18,6 @@ final class ClassicBloomFilter(val bits: Long, val words: Array[Long]) {
 
   @inline private def setBit(i: Long): Unit =
     words((i >>> 6).toInt) |= 1L << (i & 63)
-  @inline private def getBit(i: Long): Boolean =
-    (words((i >>> 6).toInt) & (1L << (i & 63))) != 0
 
   /** Insert a pre-hashed 64-bit key (double hashing, K probes). */
   def insert(keyHash: Long): Unit = {
@@ -32,19 +30,6 @@ final class ClassicBloomFilter(val bits: Long, val words: Array[Long]) {
       h += h2
       i += 1
     }
-  }
-
-  def mightContain(keyHash: Long): Boolean = {
-    val h1 = Hashing.murmur64(keyHash)
-    val h2 = Hashing.murmur64(keyHash ^ 0x9e3779b97f4a7c15L) | 1L
-    var i = 0
-    var h = h1
-    while (i < K) {
-      if (!getBit(java.lang.Long.remainderUnsigned(h, bits))) return false
-      h += h2
-      i += 1
-    }
-    true
   }
 
   def orMerge(other: ClassicBloomFilter): Unit = {

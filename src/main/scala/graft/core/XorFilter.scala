@@ -33,18 +33,6 @@ import Hashing._
 final class XorFilter(val bits: Int, val seed: Long, val blockLength: Int, val fingerprints: Array[Char]) {
   require(bits == 8 || bits == 16)
 
-  @inline private def fp(hash: Long): Char =
-    if (bits == 8) (fingerprint64(hash) & 0xff).toChar else (fingerprint64(hash) & 0xffff).toChar
-
-  def mightContain(key: Long): Boolean = {
-    val hash = mixSplit(key, seed)
-    val f = fp(hash)
-    val h0 = reduce(hash.toInt, blockLength)
-    val h1 = reduce(rotl64(hash, 21).toInt, blockLength) + blockLength
-    val h2 = reduce(rotl64(hash, 42).toInt, blockLength) + 2 * blockLength
-    f == (fingerprints(h0) ^ fingerprints(h1) ^ fingerprints(h2)).toChar
-  }
-
   def serializedBytes: Int = 16 + (bits / 8) * 3 * blockLength
 
   def serialize(): Array[Byte] = {
@@ -222,17 +210,5 @@ object XorFilter {
     }
 
     new XorFilter(bits, seed, blockLength, fingerprints)
-  }
-
-  def deserialize(bits: Int, blob: Array[Byte]): XorFilter = {
-    val bb = ByteBuffer.wrap(blob).order(ByteOrder.LITTLE_ENDIAN)
-    val seed = bb.getLong(0)
-    val blockLength = bb.getLong(8).toInt
-    val n = 3 * blockLength
-    val fps = new Array[Char](n)
-    var i = 0
-    if (bits == 8) while (i < n) { fps(i) = (blob(16 + i) & 0xff).toChar; i += 1 }
-    else while (i < n) { fps(i) = (bb.getShort(16 + 2 * i) & 0xffff).toChar; i += 1 }
-    new XorFilter(bits, seed, blockLength, fps)
   }
 }

@@ -144,6 +144,16 @@ object Dedup {
       .withColumn("containment2", col("common").cast("double") / col("sz2"))
   }
 
+  /** The LSH band keys of a `(doc_id, sig)` row: a generator of `bands`
+    * (position, hash) rows, band b hashing the signature slice
+    * [b·r, (b+1)·r) with r = max(1, numHashes / bands).
+    */
+  private def bandKeys(bands: Int, numHashes: Int): Column = {
+    val rowsPerBand = math.max(1, numHashes / bands)
+    posexplode(transform(sequence(lit(0), lit(bands - 1)),
+      b => xxhash64(concat_ws(",", slice(col("sig"), b * rowsPerBand + 1, lit(rowsPerBand))))))
+  }
+
   /** Candidate pairs WITH their signature-match estimate. One groupBy on
     * (band_id, band_hash) over (doc_id)-only rows collects each bucket's
     * sorted id list, in-bucket array lambdas emit the ordered pairs, a
@@ -177,10 +187,7 @@ object Dedup {
     */
   def lshNearDuplicatePairs(sigs: DataFrame, bands: Int, numHashes: Int,
       maxBucketSize: Int = Int.MaxValue): DataFrame = {
-    val rowsPerBand = math.max(1, numHashes / bands)
-    val banded = sigs.select(col("doc_id"),
-        posexplode(transform(sequence(lit(0), lit(bands - 1)),
-          b => xxhash64(concat_ws(",", slice(col("sig"), b * rowsPerBand + 1, lit(rowsPerBand)))))))
+    val banded = sigs.select(col("doc_id"), bandKeys(bands, numHashes))
       .toDF("doc_id", "band_id", "band_hash")
     val run = Telemetry.start(sigs.sparkSession, "graft_lsh_buckets")
     val buckets = banded.groupBy("band_id", "band_hash")
@@ -296,12 +303,6 @@ object Dedup {
     })
   }
 
-  /** Full MinHash-LSH near-duplicate pipeline: shingle -> minhash -> band ->
-    * in-bucket candidate pairs -> signature-estimate -> threshold filter.
-    * Signatures are persisted for the pipeline's three consumers (banding
-    * and both estimate joins); Spark's cache is LRU-evicting, so at scale
-    * the MEMORY_AND_DISK level degrades to disk reads, never recompute.
-    */
   /** Fused per-document MinHash signatures straight off the text — one
     * shuffle-free projection (hash-identical to [[shingleHashes]] +
     * [[minHashSignatures]], proven by spec). `(doc_id, sig)` layout; the
@@ -317,6 +318,12 @@ object Dedup {
           shingleSize, numHashes, portable)).as("sig"))
       .where(col("sig").isNotNull)
 
+  /** Full MinHash-LSH near-duplicate pipeline: shingle -> minhash -> band ->
+    * in-bucket candidate pairs -> signature-estimate -> threshold filter.
+    * Signatures are persisted for the pipeline's three consumers (banding
+    * and both estimate joins); Spark's cache is LRU-evicting, so at scale
+    * the MEMORY_AND_DISK level degrades to disk reads, never recompute.
+    */
   def minHashNearDuplicates(df: DataFrame, textCol: String, idCol: String,
       numHashes: Int = 128, bands: Int = 32, shingleSize: Int = 3,
       threshold: Double = 0.7, portable: Boolean = false,
@@ -369,11 +376,7 @@ object Dedup {
     // corpus-sized caches otherwise accumulate until LRU eviction)
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     def sigsOf(df: DataFrame) = {
-      val s = df.select(col(idCol).as("doc_id"),
-          ColumnBridge.column(MinHashSignatureExpr(
-            ColumnBridge.expression(split(lower(col(textCol)), "\\s+")),
-            shingleSize, numHashes, portable)).as("sig"))
-        .where(col("sig").isNotNull)
+      val s = minHashSignaturesFused(df, textCol, idCol, numHashes, shingleSize, portable)
       if (df.isStreaming) s else s.persist(lvl)
     }
     incrementalNearDuplicatesFromSignatures(sigsOf(newDocs), sigsOf(oldDocs),
@@ -397,9 +400,7 @@ object Dedup {
       oldSigs: DataFrame, numHashes: Int, bands: Int,
       threshold: Double, maxBucketSize: Int = Int.MaxValue): DataFrame = {
     require(!oldSigs.isStreaming, "the existing corpus must be a static frame")
-    val rowsPerBand = math.max(1, numHashes / bands)
-    def bandCol = posexplode(transform(sequence(lit(0), lit(bands - 1)),
-      b => xxhash64(concat_ws(",", slice(col("sig"), b * rowsPerBand + 1, lit(rowsPerBand))))))
+    def bandCol = bandKeys(bands, numHashes)
     // skew telemetry for the warning listener, as in [[lshNearDuplicatePairs]]
     val run = Telemetry.start(oldSigs.sparkSession, "graft_lsh_buckets")
     val oldBuckets = oldSigs.select(col("doc_id"), bandCol)

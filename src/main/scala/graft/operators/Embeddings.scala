@@ -37,42 +37,15 @@ object Embeddings {
   def cosine(a: Column, b: Column): Column =
     vecDot(a, b) / (vecNorm(a) * vecNorm(b))
 
-  /** Unit-normalize a vector column (zero vectors pass through unchanged).
-    * The norm is the sequential-fold [[vecNorm]], so normalized components
-    * are bit-reproducible across engines that fold left-to-right (DuckDB's
-    * `list_reduce` form — see the q_embed_quant oracle).
-    */
-  def normalize(vec: Column): Column = {
-    val n = vecNorm(vec)
-    when(n > lit(0.0), transform(vec, x => x / n)).otherwise(vec)
-  }
-
-  /** Symmetric per-vector int8 quantization: scale = 127 / max|x_i|, each
-    * component -> floor(x*scale + 0.5) (round-half-up: identical IEEE ops
-    * in every engine, unlike round()'s mode-dependent halves). The
-    * standard embedding-storage compression (4x smaller than FLOAT) — at
-    * 100 TB the difference between an ANN index that fits executor memory
-    * and one that doesn't. Returns ARRAY<INT>; pair with the row's scale
-    * (`quantScale`) to dequantize.
-    */
-  def quantizeInt8(vec: Column): Column = {
-    val m = array_max(transform(vec, x => abs(x)))
-    val scale = when(m > lit(0.0), lit(127.0) / m).otherwise(lit(0.0))
-    transform(vec, x => floor(x * scale + lit(0.5)).cast("int"))
-  }
-
-  /** The dequantization factor matching [[quantizeInt8]]: max|x_i| / 127. */
-  def quantScale(vec: Column): Column = {
-    val m = array_max(transform(vec, x => abs(x)))
-    when(m > lit(0.0), m / lit(127.0)).otherwise(lit(0.0))
-  }
-
-  /** DataFrame-level [[normalize]]: projects the norm ONCE per row before
-    * the per-element transform. The Column form inlines `vec_norm` into
-    * the lambda body, and Spark does not hoist common subexpressions out
-    * of lambda loops — the norm would be recomputed for every element
-    * (64x per row at 64 dims; measured ~6x slowdown on the quantization
-    * gate). Use this form in pipelines.
+  /** Unit-normalize `vecCol` into `outCol` (zero vectors pass through
+    * unchanged). The norm is the sequential-fold [[vecNorm]], so normalized
+    * components are bit-reproducible across engines that fold
+    * left-to-right (DuckDB's `list_reduce` form — see the q_embed_quant
+    * oracle). The norm is projected ONCE per row before the per-element
+    * transform: inlined into the lambda body it would be recomputed for
+    * every element, as Spark does not hoist common subexpressions out of
+    * lambda loops (64x per row at 64 dims; measured ~6x slowdown on the
+    * quantization gate).
     */
   def withNormalized(df: DataFrame, vecCol: String, outCol: String): DataFrame = {
     val n = "__graft_norm"
@@ -83,9 +56,15 @@ object Embeddings {
       .drop(n)
   }
 
-  /** DataFrame-level [[quantizeInt8]] + [[quantScale]]: the abs-max is
-    * projected once per row (same lambda-inlining rationale as
-    * [[withNormalized]]); the element lambda sees only column refs.
+  /** Symmetric per-vector int8 quantization of `vecCol` into `outCol`
+    * (ARRAY<INT>): scale = 127 / max|x_i|, each component ->
+    * floor(x*scale + 0.5) (round-half-up: identical IEEE ops in every
+    * engine, unlike round()'s mode-dependent halves). `scaleCol` gets the
+    * dequantization factor max|x_i| / 127. The standard embedding-storage
+    * compression (4x smaller than FLOAT) — at 100 TB the difference
+    * between an ANN index that fits executor memory and one that doesn't.
+    * The abs-max is projected once per row (same lambda-inlining rationale
+    * as [[withNormalized]]); the element lambda sees only column refs.
     */
   def withInt8Quantized(df: DataFrame, vecCol: String, outCol: String,
       scaleCol: String): DataFrame = {
@@ -639,23 +618,6 @@ object Embeddings {
       .toDF("id1", "id2", "sim")
   }
 
-  /** The plan-native self-join form of [[cosineNearDuplicatesExact]], kept
-    * for cross-checking the blocked kernel (the spec asserts bit-equal
-    * results) and for callers who need the pair generation to stay inside
-    * Catalyst (e.g. to compose with further relational operators before
-    * the threshold filter).
-    */
-  def cosineNearDuplicatesExactJoin(embeddings: DataFrame, vecCol: String, idCol: String,
-      threshold: Double): DataFrame = {
-    // norms computed once per VECTOR (n of them), not once per pair (n^2)
-    val withNorm = embeddings.withColumn("__norm", vecNorm(col(vecCol)))
-    withNorm.as("a").join(withNorm.as("b"), col(s"a.$idCol") < col(s"b.$idCol"))
-      .withColumn("sim",
-        vecDot(col(s"a.$vecCol"), col(s"b.$vecCol")) / (col("a.__norm") * col("b.__norm")))
-      .where(col("sim") >= threshold)
-      .select(col(s"a.$idCol").as("id1"), col(s"b.$idCol").as("id2"), col("sim"))
-  }
-
   /** All pairs with cosine >= threshold via LSH buckets + exact verify.
     * The embedding-cosine near-duplicate detector for dedup pipelines.
     *
@@ -707,9 +669,9 @@ object Embeddings {
     *    (no respawn), also deterministically.
     *
     * Scale shape (MLlib's): centroids live on the driver (k×dim doubles —
-    * tiny by contract), assignment is a PURE MAP over constant-folded
-    * centroid literals (zero shuffle — no n×k window or group-by, which
-    * would amplify the corpus 16× at k=16), and each update is one
+    * tiny by contract), assignment is a PURE MAP through the
+    * `nearest_centroid` kernel (zero shuffle — no n×k window or group-by,
+    * which would amplify the corpus 16× at k=16), and each update is one
     * posexplode + partially-aggregated groupBy(cid, dim) shuffle carrying
     * only k·dim rows per map partition. One driver action per iteration,
     * like every production Lloyd's.
@@ -784,14 +746,15 @@ object Embeddings {
     * `round(sim*1e6) >= round(threshold*1e6)`, so no cross-engine raw
     * double comparison ever decides a pair.
     *
-    * Scale shape: assignment is a pure map over driver-held centroid
-    * literals (zero shuffle); candidate generation is ONE cid-keyed
-    * self-join, quadratic only within a cluster — SemDeDup's own contract
-    * (k grows with corpus size to keep clusters bounded; the paper runs
-    * k=50k over 5B embeddings). `k <= 0` applies exactly that contract
-    * as the default: [[derivedSemDedupK]] sizes k from the corpus count
-    * so occupancy (and with it the quadratic pairing term) stays pinned
-    * — a fixed k measured 23.9x/decade at the third fixture decade.
+    * Scale shape: assignment is a pure map through the `nearest_centroid`
+    * kernel over driver-held centroids (zero shuffle); candidate
+    * generation is ONE cid-keyed self-join, quadratic only within a
+    * cluster — SemDeDup's own contract (k grows with corpus size to keep
+    * clusters bounded; the paper runs k=50k over 5B embeddings). `k <= 0`
+    * applies exactly that contract as the default: [[derivedSemDedupK]]
+    * sizes k from the corpus count so occupancy (and with it the
+    * quadratic pairing term) stays pinned — a fixed k measured
+    * 23.9x/decade at the third fixture decade.
     * Norms are projected once per vector before
     * the join, and dropped ids collapse through DISTINCT before the final
     * id-keyed join, so in-cluster pair fan-out never reaches the output.
@@ -1059,50 +1022,23 @@ object Embeddings {
     cents
   }
 
-  /** Above this k the literal-argmax plan (k `greatest` structs, each
-    * holding a dim-length array literal) stops being a reasonable
-    * expression tree, so assignment switches to the broadcast-matrix
-    * kernel. Both paths compute the IDENTICAL micro-rounded argmax
-    * (spec-asserted on near-tie fixtures), so the oracle replay and all
-    * results are path-independent.
-    *
-    * 64 → 4 in round 16: same-JVM A/Bs at dim=64 measured the literal
-    * path SLOWER at every probed k — k=32 lloyd-update 0.56 vs 0.33 s,
-    * k=8 assignment 0.18 vs 0.14 s warm (VERDICT.md round 16) —
-    * the k·dim literal tree's analysis/codegen cost exceeds what the
-    * inline expression saves, and the kernel's tight matrix loop is no
-    * slower per row. The literal form is kept only for trivial fits
-    * (k <= 4), where a couple of structs beat shipping a matrix into
-    * the task binary.
+  /** Nearest-centroid assignment: adds `cid`, the id of the centroid with
+    * the greatest micro-unit-ROUNDED cosine similarity, ties to the smaller
+    * id. Spark folds dot/(sqrt(a)*sqrt(b)) sequentially while DuckDB's
+    * list_cosine_similarity computes dot/sqrt(a*b), so a raw-double argmax
+    * could flip near-tie assignments on ULP divergence; rounding both sides
+    * to 1e-6 makes the compare integer-robust (see [[NearestCentroid]]).
+    * The centroid matrix rides the expression into the broadcast task
+    * binary — k·dim doubles shipped once per stage, never per row — and
+    * assignment stays inside whole-stage codegen (SemDeDup runs k in the
+    * tens of thousands).
     */
-  private[operators] val AssignLiteralMaxK = 4
-
   private[graft] def kmeansAssign(embeddings: DataFrame, vecCol: String,
-      cents: Seq[(Long, Seq[Double])], forceBroadcast: Boolean = false): DataFrame = {
+      cents: Seq[(Long, Seq[Double])]): DataFrame = {
     val sorted = cents.sortBy(_._1)
-    if (forceBroadcast || sorted.size > AssignLiteralMaxK) {
-      // large-k path (SemDeDup runs k in the tens of thousands): the
-      // centroid matrix rides the expression into the broadcast task
-      // binary — k·dim doubles shipped once per stage, never per row —
-      // and assignment stays inside whole-stage codegen.
-      val nc = NearestCentroid(ColumnBridge.expression(col(vecCol)),
-        sorted.map(_._1).toArray, sorted.map(_._2.toArray).toArray)
-      embeddings.withColumn("cid", ColumnBridge.column(nc))
-    } else {
-      val scored = sorted.map { case (cid, cv) =>
-        val cl = typedlit(cv)
-        // Argmax over the micro-unit-ROUNDED similarity: Spark folds
-        // dot/(sqrt(a)*sqrt(b)) sequentially while DuckDB's
-        // list_cosine_similarity computes dot/sqrt(a*b), so raw-double argmax
-        // could flip near-tie assignments on ULP divergence. Rounding both
-        // sides to 1e-6 (ties to smaller cid) makes the compare integer-robust.
-        val sim = vecDot(col(vecCol), cl) / (vecNorm(col(vecCol)) * vecNorm(cl))
-        struct(round(sim * lit(1e6)).cast("long").as("sim_e6"), lit(-cid).as("ncid"))
-      }
-      val best =
-        if (scored.size == 1) scored.head else greatest(scored: _*)
-      embeddings.withColumn("cid", -best.getField("ncid"))
-    }
+    val nc = NearestCentroid(ColumnBridge.expression(col(vecCol)),
+      sorted.map(_._1).toArray, sorted.map(_._2.toArray).toArray)
+    embeddings.withColumn("cid", ColumnBridge.column(nc))
   }
 
   // --- product quantization -------------------------------------------
@@ -1426,14 +1362,14 @@ private[operators] object PqMath {
 }
 
 /** Nearest-centroid assignment against a driver-built centroid matrix —
-  * the large-k path of spherical k-means / SemDeDup. Bit-replicates the
-  * literal-argmax plan: sequential vec_dot/vec_norm folds, Spark's
-  * HALF_UP `round(sim*1e6)` with NaN/Inf passthrough, the JVM double→long
-  * cast, and ties broken to the SMALLEST cid — so switching paths never
-  * changes a single assignment (spec-asserted on near-tie fixtures).
+  * the assignment step of spherical k-means / SemDeDup. Bit-replicates the
+  * SQL argmax `greatest(struct(round(sim*1e6), -cid), ...)`: sequential
+  * vec_dot/vec_norm folds, Spark's HALF_UP `round(sim*1e6)` with NaN/Inf
+  * passthrough, the JVM double→long cast, and ties broken to the SMALLEST
+  * cid (spec-asserted against that SQL form on near-tie fixtures).
   *
   * That fidelity includes degenerate inputs: a NULL vector or NULL
-  * element nulls every similarity in the literal path, whose
+  * element nulls every similarity in the SQL form, whose
   * greatest-of-structs then tie-breaks all (null, -cid) structs to the
   * smallest cid — a NON-null assignment (and DuckDB's `ORDER BY sim
   * DESC NULLS LAST, cid` replay agrees). This expression therefore
@@ -1485,7 +1421,7 @@ case class NearestCentroid(child: Expression, cids: Array[Long],
   }
 
   /** Public entry shared by interpreted eval and generated code. A null
-    * element short-circuits to the smallest cid — the literal path's
+    * element short-circuits to the smallest cid — the SQL form's
     * all-sims-null tie-break (see class doc).
     *
     * Two passes over the centroids: raw similarities first (pure

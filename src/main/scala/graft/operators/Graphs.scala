@@ -43,7 +43,7 @@ import org.apache.spark.sql.functions._
   * round-12 session-4. Dangling mass
   * (nodes with no out-edges) is dropped,
   * the classic simplification; feed an undirected graph
-  * (`undirected = true` emits each edge both ways) when mass
+  * (`prepareGraph(undirected = true)` emits each edge both ways) when mass
   * conservation matters.
   */
 object Graphs {
@@ -57,81 +57,15 @@ object Graphs {
   final case class PageRankStats(iterations: Int, nodes: Long,
       finalDeltaPpb: Long)
 
-  /** PageRank over `edges(srcCol, dstCol)` (node ids BIGINT).
-    *
-    * rank_0(v)   = tele(v)
-    * rank_i+1(v) = ((10^6 - dampingPpm) * tele(v)) div 10^6
-    *             + (dampingPpm * Σ_{(u,v)∈E} (rank_i(u) div outdeg(u))) div 10^6
-    *
-    * with uniform teleport tele(v) = 10^9 div n, truncating integer
-    * division throughout, n = |nodes|. Every intermediate fits
-    * comfortably in a long (ranks ≤ 10^9; contributions are divided by
-    * out-degree before the damped sum, which stays ≪ 2^63).
-    *
-    * @param undirected emit each input edge in both directions (dedup'd)
-    * @param onConvergence receives the run's [[PageRankStats]] before the
-    *        call returns. Given a callback, a run without a tolerance pays
-    *        one extra bounded node-keyed join for the final step's delta;
-    *        `None` pays nothing.
-    * @param tolerancePpb > 0 enables convergence-driven early stop: quit
-    *        when the L1 step delta Σ|rank_i − rank_{i−1}| falls to the
-    *        tolerance (one extra bounded node-keyed join per step;
-    *        `iterations` becomes the cap). A converged run is IDENTICAL
-    *        to letting the remaining fixed iterations run only when the
-    *        tolerance is tight enough that further steps are no-ops —
-    *        gates pin iteration counts and leave this 0 (off).
-    * @return DataFrame(node BIGINT, rank_ppb BIGINT)
-    */
-  def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
-               iterations: Int, dampingPpm: Long = 850000L,
-               undirected: Boolean = false,
-               onConvergence: Option[PageRankStats => Unit] = None,
-               tolerancePpb: Long = 0L): DataFrame =
-    runPageRank(edges, srcCol, dstCol, iterations, dampingPpm, undirected,
-      None, onConvergence, tolerancePpb)
-
-  /** Personalized (seeded) PageRank: the teleport mass lands ONLY on the
-    * seed nodes — `tele(v) = 10^9 div |seeds|` for seeds, 0 otherwise —
-    * so ranks measure random-walk proximity to the seed set ("more like
-    * these" corpus expansion, topic-focused host weighting). Seeds not
-    * present in the edge set are ignored (they have no walk to
-    * personalize). Same integer contract as [[pageRank]].
-    */
-  def personalizedPageRank(edges: DataFrame, srcCol: String, dstCol: String,
-      seeds: DataFrame, seedCol: String, iterations: Int,
-      dampingPpm: Long = 850000L, undirected: Boolean = false,
-      onConvergence: Option[PageRankStats => Unit] = None,
-      tolerancePpb: Long = 0L): DataFrame =
-    runPageRank(edges, srcCol, dstCol, iterations, dampingPpm, undirected,
-      Some(seeds.select(col(seedCol).cast("long").as("node")).distinct()),
-      onConvergence, tolerancePpb)
-
-  /** Degree distribution of the (simple) graph: one row per distinct
-    * degree with the number of nodes holding it — the first thing to look
-    * at before running anything iterative (hubs, skew, disconnected
-    * dust). Two chained partial aggregates (node degree, then degree
-    * histogram); with `undirected` each input edge counts both endpoints.
+  /** Degree distribution of a [[PreparedGraph]]: one row per distinct
+    * out-degree with the number of nodes holding it — the first thing to
+    * look at before running anything iterative (hubs, skew, disconnected
+    * dust). The adjacency relation already carries each node's out-degree,
+    * so the histogram is one distinct over the checkpointed edges plus one
+    * tiny aggregate; an `undirected` graph counts both endpoints of each
+    * input edge.
     *
     * @return DataFrame(degree BIGINT, nodes BIGINT)
-    */
-  def degreeDistribution(edges: DataFrame, srcCol: String, dstCol: String,
-      undirected: Boolean = false): DataFrame = {
-    val directed = edges.select(
-      col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-    val e0 = if (undirected) directed.union(directed.select(col("dst").as("src"), col("src").as("dst")))
-             else directed
-    e0.distinct()
-      .groupBy(col("src").as("node"))
-      .agg(count(lit(1)).cast("long").as("degree"))
-      .groupBy("degree")
-      .agg(count(lit(1)).cast("long").as("nodes"))
-  }
-
-  /** Degree distribution read off a [[PreparedGraph]]: the adjacency
-    * relation already carries each node's out-degree, so the histogram is
-    * one distinct over the checkpointed edges plus one tiny aggregate —
-    * no re-derivation of the simple graph. Identical to
-    * [[degreeDistribution(edges*]] over the same inputs (spec-pinned).
     */
   def degreeDistribution(g: PreparedGraph): DataFrame =
     g.eDeg.select(col("src").as("node"), col("deg").as("degree")).distinct()
@@ -184,10 +118,9 @@ object Graphs {
     * edge relation with each edge's source out-degree, materialized once
     * (DISK_ONLY localCheckpoint — see [[prepareGraph]]). Derive it once
     * per graph and run [[pageRank]], [[personalizedPageRank]] and
-    * [[degreeDistribution]] against it; the raw-edge overloads re-derive
-    * it on every call, which a pipeline running several analyses over the
-    * same link graph should not pay (the distinct+degree pass is the one
-    * data-sized job in the whole family).
+    * [[degreeDistribution]] against it: the distinct+degree pass is the
+    * one data-sized job in the whole family, paid once per graph however
+    * many analyses run over it.
     *
     * `eDeg` schema: (src BIGINT, dst BIGINT, deg BIGINT); `nodes` is the
     * checkpointed node set (src ∪ dst — sinks included), so per-analysis
@@ -398,38 +331,49 @@ object Graphs {
     g
   }
 
-  /** [[pageRank]] over a [[PreparedGraph]] — skips the per-call
-    * distinct+degree+checkpoint derivation.
+  /** PageRank over a [[PreparedGraph]] (node ids BIGINT).
+    *
+    * rank_0(v)   = tele(v)
+    * rank_i+1(v) = ((10^6 - dampingPpm) * tele(v)) div 10^6
+    *             + (dampingPpm * Σ_{(u,v)∈E} (rank_i(u) div outdeg(u))) div 10^6
+    *
+    * with uniform teleport tele(v) = 10^9 div n, truncating integer
+    * division throughout, n = |nodes|. Every intermediate fits
+    * comfortably in a long (ranks ≤ 10^9; contributions are divided by
+    * out-degree before the damped sum, which stays ≪ 2^63).
+    *
+    * @param onConvergence receives the run's [[PageRankStats]] before the
+    *        call returns. Given a callback, a run without a tolerance pays
+    *        one extra bounded node-keyed join for the final step's delta;
+    *        `None` pays nothing.
+    * @param tolerancePpb > 0 enables convergence-driven early stop: quit
+    *        when the L1 step delta Σ|rank_i − rank_{i−1}| falls to the
+    *        tolerance (one extra bounded node-keyed join per step;
+    *        `iterations` becomes the cap). A converged run is IDENTICAL
+    *        to letting the remaining fixed iterations run only when the
+    *        tolerance is tight enough that further steps are no-ops —
+    *        gates pin iteration counts and leave this 0 (off).
+    * @return DataFrame(node BIGINT, rank_ppb BIGINT)
     */
-  def pageRank(g: PreparedGraph, iterations: Int, dampingPpm: Long,
-      onConvergence: Option[PageRankStats => Unit],
-      tolerancePpb: Long): DataFrame =
+  def pageRank(g: PreparedGraph, iterations: Int, dampingPpm: Long = 850000L,
+      onConvergence: Option[PageRankStats => Unit] = None,
+      tolerancePpb: Long = 0L): DataFrame =
     runPrepared(g, iterations, dampingPpm, None, onConvergence, tolerancePpb)
 
-  /** [[personalizedPageRank]] over a [[PreparedGraph]]. */
+  /** Personalized (seeded) PageRank: the teleport mass lands ONLY on the
+    * seed nodes — `tele(v) = 10^9 div |seeds|` for seeds, 0 otherwise —
+    * so ranks measure random-walk proximity to the seed set ("more like
+    * these" corpus expansion, topic-focused host weighting). Seeds not
+    * present in the graph are ignored (they have no walk to
+    * personalize). Same integer contract as [[pageRank]].
+    */
   def personalizedPageRank(g: PreparedGraph, seeds: DataFrame,
-      seedCol: String, iterations: Int, dampingPpm: Long,
-      onConvergence: Option[PageRankStats => Unit],
-      tolerancePpb: Long): DataFrame =
+      seedCol: String, iterations: Int, dampingPpm: Long = 850000L,
+      onConvergence: Option[PageRankStats => Unit] = None,
+      tolerancePpb: Long = 0L): DataFrame =
     runPrepared(g, iterations, dampingPpm,
       Some(seeds.select(col(seedCol).cast("long").as("node")).distinct()),
       onConvergence, tolerancePpb)
-
-  private def runPageRank(edges: DataFrame, srcCol: String, dstCol: String,
-      iterations: Int, dampingPpm: Long, undirected: Boolean,
-      seedsOpt: Option[DataFrame], onConvergence: Option[PageRankStats => Unit],
-      tolerancePpb: Long): DataFrame = {
-    // the per-call PreparedGraph is released eagerly once the run returns:
-    // the result roots at its own final rank checkpoint, so the graph's
-    // eDeg/nodes blocks are unreachable from it, and without the release a
-    // long-lived session calling the raw-edge overloads repeatedly would
-    // accumulate edge-table copies in spark.local.dir until a driver GC
-    // lets the ContextCleaner notice
-    val g = prepareGraph(edges, srcCol, dstCol, undirected)
-    try runPrepared(g, iterations, dampingPpm, seedsOpt, onConvergence,
-      tolerancePpb)
-    finally g.unpersist()
-  }
 
   private def runPrepared(g: PreparedGraph,
       iterations: Int, dampingPpm: Long,

@@ -67,17 +67,4 @@ object Packing {
       .withColumn("seq_pos", col("__cum") - col(seqCol) * lit(budget))
       .drop("__tok", "__cum")
   }
-
-  /** Per-(stratum, block) packing report: document count, token sum, and
-    * fill ratio against the budget — the waste dashboard for a packing
-    * run. One additional keyed aggregation over [[packSequences]] output.
-    */
-  def packingReport(df: DataFrame, strataCol: String, tokens: Column,
-      keyCol: String, uniqueCol: String, budget: Long): DataFrame = {
-    packSequences(df, strataCol, tokens, keyCol, uniqueCol, budget)
-      .groupBy(col(strataCol), col("seq_id"))
-      .agg(count(lit(1)).cast("long").as("docs"),
-        sum(tokens.cast("long")).as("tokens"))
-      .withColumn("fill_e6", expr(s"tokens * 1000000L div ${budget}L"))
-  }
 }

@@ -113,16 +113,4 @@ object FilterStore {
         graft.operators.ColumnBridge.expression(col(keyCol).cast("string"))))
     big.where(call_function(containsFn, blobCol, col(hashCol)))
   }
-
-  /** Write `df` as a bucketed+sorted managed table: repeated joins or
-    * aggregations on `keyCol` then run WITHOUT an exchange (bucket-local
-    * sort-merge) — the co-located-join layout for fact tables reused across
-    * many queries. At 100 TB, bucketing once amortizes the shuffle every
-    * downstream join would otherwise pay.
-    */
-  def writeBucketed(df: DataFrame, table: String, keyCol: String,
-      numBuckets: Int = 32): Unit =
-    df.write.format("parquet").mode("overwrite")
-      .bucketBy(numBuckets, keyCol).sortBy(keyCol)
-      .saveAsTable(table)
 }

@@ -17,14 +17,6 @@ import graft.core.DuckDbBloomFilter
   */
 object StreamingFilters {
 
-  /** Continuously maintained per-group bloom filter over a key stream.
-    * Use outputMode("update") on the writer.
-    */
-  def streamingBloomFilters(keyed: DataFrame, groupCol: String, hashCol: String,
-      numSectors: Int = 4096, version: String = "v1.5.1"): DataFrame =
-    keyed.groupBy(col(groupCol))
-      .agg(expr(s"bitfilters_duckdb_bloom_filter_create('$version', $numSectors, $hashCol)").as("filter"))
-
   /** Windowed distinct-ish cardinality guard: per event-time window, build a
     * bloom filter of seen keys (for downstream dedup probes) plus a count.
     * Watermark bounds state: windows older than `watermark` are finalized
@@ -39,16 +31,6 @@ object StreamingFilters {
       .agg(
         expr(s"bitfilters_duckdb_bloom_filter_create('v1.5.1', $numSectors, $hashCol)").as("filter"),
         count(lit(1)).as("events"))
-
-  /** Streaming near-duplicate pre-filter: tag each incoming document with
-    * whether its content fingerprint was possibly seen in the reference
-    * filter (built offline over the historical corpus, broadcast as a
-    * literal blob). False positives only — safe for candidate routing.
-    */
-  def tagPossiblySeen(docs: DataFrame, fingerprintCol: String, filterBlob: Array[Byte]): DataFrame =
-    docs.withColumn("possibly_seen",
-      call_function("bitfilters_duckdb_bloom_filter_probe",
-        lit("v1.5.1"), lit(filterBlob), col(fingerprintCol)))
 
   /** A document routed through the streaming dedup: `shard` is the state
     * partition (hash-derived; controls state granularity and parallelism),

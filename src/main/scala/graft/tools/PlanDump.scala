@@ -77,7 +77,7 @@ object PlanDump {
       "q_multimodal_decode" -> "real-codec round-trip: two chained mapPartitions (PNG encode, PNG decode+featurize) with no exchange until the final single aggregation",
       "q_asof_join" -> "as-of join: tagged union, ONE exchange on the key, running last(ignoreNulls) window — no range join, no per-key collect",
       "q_bm25" -> "BM25: tf computed inside the row (codegen'd HOFs on the scan), corpus stats a broadcast single-row aggregate — no document- or term-keyed exchange",
-      "q_kmeans" -> "k-means assignment: pure map over constant-folded centroid literals (zero exchange before the final per-cluster rollup)",
+      "q_kmeans" -> "k-means assignment: pure map through the nearest_centroid kernel (zero exchange before the final per-cluster rollup)",
       "q_range_join" -> "bucketed range join: interval explode to time bins, EQUI-join on __bin + residual BETWEEN — no BroadcastNestedLoopJoin anywhere in the plan",
       "q_interval_overlap" -> "interval overlap: both sides bin-exploded, equi-join + ownership-bin residual — pair set exact with zero dedup exchange",
       "q_normalize" -> "canonicalization: nfc/strip_accents/lower/regexp ride the scan in one codegen stage; no shuffle before the final sort",
@@ -112,7 +112,7 @@ object PlanDump {
       "q_join_card" -> "join-size estimation: both sketch sides are ObjectHashAggregate partial+final over one events scan each; the exact side aggregates per-(user, type) counts (no pair blowup); cms_inner_product runs on 5x5 blob pairs — the joins under estimation are never executed",
       "q_neg_sample" -> "contrastive negatives: anchors explode k row-locally, corpus count broadcasts as a single row, the draw is pure projection (codegen'd hash), and the payload fetch is ONE id-keyed join — no window, no collect",
       "q_resample" -> "grid resample: the LOCF fill is asofJoin's tagged union + ONE user-key exchange + running last(ignoreNulls) — no per-grid-point probe, no range join; grid explode rides the per-key span aggregate",
-      "q_outliers" -> "centroid outliers: constant-folded centroid argmax on the scan (zero-shuffle assignment), k-row broadcast re-join, per-cluster bottom-m window with WindowGroupLimit",
+      "q_outliers" -> "centroid outliers: nearest_centroid argmax on the scan (zero-shuffle assignment), k-row broadcast re-join, per-cluster bottom-m window with WindowGroupLimit",
       "q_span_ranges" -> "any-alignment repeated spans: one window per token rides the scan (transform + posexplode, no shuffle), ONE md5-keyed count, flag join co-partitioned on the window key, document-partitioned range-merge window",
       "q_vocab_coverage" -> "vocab coverage: token explode on the scan, the 500-row vocab BroadcastHashJoins into the stream, one source-keyed partial+final agg — the corpus never exchanges on tokens",
       "q_image_dedup" -> "image dHash dedup: payloads synthesized/hashed once per distinct pattern (mapPartitions, no shuffle), hashes broadcast back over the documents scan, hash-keyed partial+final agg + TakeOrdered",

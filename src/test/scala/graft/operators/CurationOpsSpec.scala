@@ -298,9 +298,10 @@ class CurationOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val packed = Packing.packSequences(packDocs, "source", col("tok"),
       "doc_id", "doc_id", budget = 32L)
     assert(packed.count() == 40L)
-    val report = Packing.packingReport(packDocs, "source", col("tok"),
-        "doc_id", "doc_id", budget = 32L)
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(3)))
+    // per-(stratum, block) token sums
+    val report = packed.groupBy(col("source"), col("seq_id"))
+      .agg(sum(col("tok").cast("long")))
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
     val totalTokens = packDocs.agg(sum("tok")).collect()(0).getLong(0)
     assert(report.map(_._3).sum == totalTokens)
     // every non-final block holds >= budget - (max doc - 1) tokens

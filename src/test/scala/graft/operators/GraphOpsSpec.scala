@@ -1,11 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
-/** Graphs.pageRank, Changelog.compactLatest, Ranking.tfidfTopTerms. */
+/** Graphs (over a PreparedGraph), Changelog.compactLatest, Ranking.tfidfTopTerms. */
 class GraphOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   @transient private var spark: SparkSession = _
@@ -22,13 +22,21 @@ class GraphOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = if (spark != null) spark.stop()
 
+  /** Runs `f` over the prepared graph of `edges(src, dst)`, then releases it. */
+  private def onGraph[T](edges: DataFrame, undirected: Boolean = false)(
+      f: Graphs.PreparedGraph => T): T = {
+    val g = Graphs.prepareGraph(edges, "src", "dst", undirected)
+    try f(g) finally g.unpersist()
+  }
+
+  private def asMap(df: DataFrame): Map[Long, Long] =
+    df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
   private def ranksOf(edges: Seq[(Long, Long)], iters: Int,
       dampingPpm: Long = 850000L, undirected: Boolean = false): Map[Long, Long] = {
     val s = spark
     import s.implicits._
-    Graphs.pageRank(edges.toDF("src", "dst"), "src", "dst", iters,
-        dampingPpm, undirected)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    onGraph(edges.toDF("src", "dst"), undirected)(g => asMap(Graphs.pageRank(g, iters, dampingPpm)))
   }
 
   test("pagerank: symmetric 2-cycle keeps ranks equal and mass conserved") {
@@ -100,11 +108,8 @@ class GraphOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val s = spark
     import s.implicits._
     val edges = (for (i <- 0L until 40L) yield (i, (i * 7 + 3) % 40)).toDF("src", "dst")
-    val a = Graphs.pageRank(edges.repartition(1), "src", "dst", 4, undirected = true)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
-    val b = Graphs.pageRank(edges.repartition(7), "src", "dst", 4, undirected = true)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
-    assert(a == b)
+    def run(df: DataFrame) = onGraph(df, undirected = true)(g => asMap(Graphs.pageRank(g, 4)))
+    assert(run(edges.repartition(1)) == run(edges.repartition(7)))
   }
 
   test("pagerank: convergence telemetry — delta shrinks with iterations, opt-in only") {
@@ -112,12 +117,12 @@ class GraphOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     import s.implicits._
     val edges = (for (i <- 0L until 30L) yield (i, (i * 11 + 3) % 30)).toDF("src", "dst")
     val reported = scala.collection.mutable.ArrayBuffer.empty[Graphs.PageRankStats]
-    Graphs.pageRank(edges, "src", "dst", 2, undirected = true).collect(): Unit
-    assert(reported.isEmpty) // no callback, no stats
-    Graphs.pageRank(edges, "src", "dst", 2, undirected = true,
-      onConvergence = Some(reported += _)).collect(): Unit
-    Graphs.pageRank(edges, "src", "dst", 12, undirected = true,
-      onConvergence = Some(reported += _)).collect(): Unit
+    onGraph(edges, undirected = true) { g =>
+      Graphs.pageRank(g, 2).collect(): Unit
+      assert(reported.isEmpty) // no callback, no stats
+      Graphs.pageRank(g, 2, onConvergence = Some(reported += _)).collect(): Unit
+      Graphs.pageRank(g, 12, onConvergence = Some(reported += _)).collect(): Unit
+    }
     val stats = reported.toSeq
     assert(stats.map(_.iterations) == Seq(2, 12))
     assert(stats.forall(_.nodes == 30L))
@@ -132,34 +137,34 @@ class GraphOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // directed 3-cycle: integer truncation walks ranks down ~1 ppb/node
     // per step to an exact fixpoint (delta 0) well inside 50 iterations
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L)).toDF("src", "dst")
-    val fixed = Graphs.pageRank(edges, "src", "dst", 50)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    var reported: Graphs.PageRankStats = null
-    val early = Graphs.pageRank(edges, "src", "dst", 50,
-        onConvergence = Some(reported = _), tolerancePpb = 1L)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(early == fixed, s"early-stop diverged: $early vs $fixed")
-    val st = reported
-    assert(st.iterations < 50, s"never stopped early: $st")
-    assert(st.finalDeltaPpb <= 1L && st.nodes == 3L, st.toString)
-    // a fixed-iteration run shorter than the stop point differs (the
-    // tolerance is doing the work, not the cap)
-    val shorter = Graphs.pageRank(edges, "src", "dst", 1)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(shorter != fixed)
+    onGraph(edges) { g =>
+      val fixed = asMap(Graphs.pageRank(g, 50))
+      var reported: Graphs.PageRankStats = null
+      val early = asMap(Graphs.pageRank(g, 50,
+        onConvergence = Some(reported = _), tolerancePpb = 1L))
+      assert(early == fixed, s"early-stop diverged: $early vs $fixed")
+      val st = reported
+      assert(st.iterations < 50, s"never stopped early: $st")
+      assert(st.finalDeltaPpb <= 1L && st.nodes == 3L, st.toString)
+      // a fixed-iteration run shorter than the stop point differs (the
+      // tolerance is doing the work, not the cap)
+      assert(asMap(Graphs.pageRank(g, 1)) != fixed)
+    }
   }
 
   test("pagerank: empty edge set returns empty, no NPE with tracking on") {
     val s = spark
     import s.implicits._
     val empty = Seq.empty[(Long, Long)].toDF("src", "dst")
-    var st: Graphs.PageRankStats = null
-    val out = Graphs.pageRank(empty, "src", "dst", 3, onConvergence = Some(st = _))
-    assert(out.count() == 0L)
-    assert(st != null, "no stats reported")
-    assert(st.nodes == 0L && st.finalDeltaPpb == 0L, st.toString)
-    // tolerance mode on an empty graph stops without a crash too
-    assert(Graphs.pageRank(empty, "src", "dst", 3, tolerancePpb = 5L).count() == 0L)
+    onGraph(empty) { g =>
+      var st: Graphs.PageRankStats = null
+      val out = Graphs.pageRank(g, 3, onConvergence = Some(st = _))
+      assert(out.count() == 0L)
+      assert(st != null, "no stats reported")
+      assert(st.nodes == 0L && st.finalDeltaPpb == 0L, st.toString)
+      // tolerance mode on an empty graph stops without a crash too
+      assert(Graphs.pageRank(g, 3, tolerancePpb = 5L).count() == 0L)
+    }
   }
 
   test("pagerank: multi-edges collapse to the simple graph") {
@@ -174,18 +179,17 @@ class GraphOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // two disconnected 2-cycles; seeds in the first component only
     val edges = Seq((1L, 2L), (2L, 1L), (10L, 11L), (11L, 10L)).toDF("src", "dst")
     val seeds = Seq(1L).toDF("node")
-    val r = Graphs.personalizedPageRank(edges, "src", "dst", seeds, "node",
-        iterations = 4)
-      .collect().map(x => x.getLong(0) -> x.getLong(1)).toMap
-    // unreached component has exactly zero rank; seed component holds ~all
-    assert(r(10L) == 0L && r(11L) == 0L)
-    assert(r(1L) > 0L && r(2L) > 0L)
-    assert(math.abs(r(1L) + r(2L) - 1000000000L) < 100L)
-    // seeds outside the graph are ignored
-    val r2 = Graphs.personalizedPageRank(edges, "src", "dst",
-        Seq(1L, 999L).toDF("node"), "node", iterations = 2)
-      .collect().map(x => x.getLong(0) -> x.getLong(1)).toMap
-    assert(r2(1L) > 0L && r2(10L) == 0L)
+    onGraph(edges) { g =>
+      val r = asMap(Graphs.personalizedPageRank(g, seeds, "node", iterations = 4))
+      // unreached component has exactly zero rank; seed component holds ~all
+      assert(r(10L) == 0L && r(11L) == 0L)
+      assert(r(1L) > 0L && r(2L) > 0L)
+      assert(math.abs(r(1L) + r(2L) - 1000000000L) < 100L)
+      // seeds outside the graph are ignored
+      val r2 = asMap(Graphs.personalizedPageRank(g, Seq(1L, 999L).toDF("node"), "node",
+        iterations = 2))
+      assert(r2(1L) > 0L && r2(10L) == 0L)
+    }
   }
 
   test("resample: aligned grid, forward fill, nulls before first obs and past tolerance") {
@@ -222,32 +226,22 @@ class GraphOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(tol.find(t => t._1 == 1L && t._2 == 4000L).get._3 == 20.0)
   }
 
-  test("prepared graph: pagerank/ppr/degree-distribution equal the raw-edge paths") {
+  test("prepared graph: degree distribution equals the raw-edge histogram") {
     val s = spark
     import s.implicits._
     // asymmetric graph with a multi-edge and a dangling node (4)
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (1L, 3L), (1L, 3L), (3L, 4L))
       .toDF("src", "dst")
     for (und <- Seq(false, true)) {
-      val g = Graphs.prepareGraph(edges, "src", "dst", undirected = und)
-      val prRaw = Graphs.pageRank(edges, "src", "dst", 4, undirected = und)
+      // the reference: node degree, then degree histogram, straight off
+      // the distinct (optionally mirrored) edges
+      val mirrored = if (und) edges.union(edges.select(col("dst"), col("src"))) else edges
+      val ddRaw = mirrored.distinct()
+        .groupBy(col("src")).agg(count(lit(1)).cast("long").as("degree"))
+        .groupBy("degree").agg(count(lit(1)).cast("long").as("nodes"))
         .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-      val prPrep = Graphs.pageRank(g, 4, dampingPpm = 850000L,
-          onConvergence = None, tolerancePpb = 0L)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-      assert(prPrep == prRaw, s"pagerank undirected=$und")
-      val seeds = Seq(1L, 4L).toDF("node")
-      val pprRaw = Graphs.personalizedPageRank(edges, "src", "dst", seeds,
-          "node", 3, undirected = und)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-      val pprPrep = Graphs.personalizedPageRank(g, seeds, "node", 3,
-          dampingPpm = 850000L, onConvergence = None, tolerancePpb = 0L)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-      assert(pprPrep == pprRaw, s"ppr undirected=$und")
-      val ddRaw = Graphs.degreeDistribution(edges, "src", "dst", undirected = und)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-      val ddPrep = Graphs.degreeDistribution(g)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+      val ddPrep = onGraph(edges, und)(g => Graphs.degreeDistribution(g)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq)
       assert(ddPrep == ddRaw, s"degree distribution undirected=$und")
     }
   }
@@ -257,11 +251,9 @@ class GraphOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     import s.implicits._
     // star 0-{1,2,3}: undirected degrees 3,1,1,1; directed out-degrees 3
     val edges = Seq((0L, 1L), (0L, 2L), (0L, 3L), (0L, 3L)).toDF("src", "dst")
-    val und = Graphs.degreeDistribution(edges, "src", "dst", undirected = true)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val und = onGraph(edges, undirected = true)(g => asMap(Graphs.degreeDistribution(g)))
     assert(und == Map(3L -> 1L, 1L -> 3L), und.toString)
-    val dir = Graphs.degreeDistribution(edges, "src", "dst")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val dir = onGraph(edges)(g => asMap(Graphs.degreeDistribution(g)))
     assert(dir == Map(3L -> 1L), dir.toString) // only node 0 has out-edges
   }
 
@@ -346,10 +338,10 @@ class GraphOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val capped = Graphs.coOccurrenceEdges(df, "g", "i", maxGroupSize = 2)
       .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getLong(2))).toMap
     assert(capped == Map((1L, 2L) -> 1L, (2L, 3L) -> 1L), capped.toString)
-    // feeds pageRank directly
-    val pr = Graphs.pageRank(Graphs.coOccurrenceEdges(df, "g", "i"),
-      "src", "dst", 2, undirected = true)
-    assert(pr.count() == 3L)
+    // feeds prepareGraph directly
+    val pr = onGraph(Graphs.coOccurrenceEdges(df, "g", "i"), undirected = true)(g =>
+      Graphs.pageRank(g, 2).count())
+    assert(pr == 3L)
   }
 
   test("applyChanges: snapshot + slice == full-history compaction") {

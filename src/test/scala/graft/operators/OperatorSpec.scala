@@ -280,7 +280,7 @@ class OperatorSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(clip != null && clip.frameCount == 2 && clip.delaysCs.toSeq == Seq(10, 10))
   }
 
-  test("multimodal: real GIF round-trip is lossless, timed, batch-size-invariant") {
+  test("multimodal: real GIF round-trip is lossless, timed, partition-invariant") {
     val sps = spark; import sps.implicits._
     val ids = (0L to 40L).toDF("doc_id")
     val gif = Multimodal.synthesizeGifPayloads(ids, "doc_id")
@@ -300,7 +300,7 @@ class OperatorSpec extends AnyFunSuite with BeforeAndAfterAll {
       val expected = (for (f <- 0 until n; y <- 0 until h; x <- 0 until w)
         yield ((id * 31 + f * 29 + x * 7 + y * 13) % 256)).sum
       assert(a(id).getSeq[Float](2).head.toLong == expected, s"id=$id")
-      assert(a(id).getSeq[Float](2) == b(id).getSeq[Float](2), "batch/partition invariance")
+      assert(a(id).getSeq[Float](2) == b(id).getSeq[Float](2), "partition invariance")
     }
     // junk bytes are not a GIF: zeroed meta and features, no task failure
     val junk = Seq((9L, "not a gif".getBytes("UTF-8"))).toDF("media_id", "payload")
@@ -317,7 +317,13 @@ class OperatorSpec extends AnyFunSuite with BeforeAndAfterAll {
     val blocked = Embeddings.cosineNearDuplicatesExact(vecs, "vec", "vec_id", 0.3,
         allowBruteForce = true)
       .collect().map(norm).sortBy(x => (x._1, x._2))
-    val joined = Embeddings.cosineNearDuplicatesExactJoin(vecs, "vec", "vec_id", 0.3)
+    // the reference: the plan-native self-join, norms projected once per
+    // vector and the same vec_dot / (norm_a * norm_b) the kernel folds
+    val withNorm = vecs.withColumn("norm", Embeddings.vecNorm(col("vec")))
+    val joined = withNorm.as("a").join(withNorm.as("b"), col("a.vec_id") < col("b.vec_id"))
+      .select(col("a.vec_id"), col("b.vec_id"),
+        (Embeddings.vecDot(col("a.vec"), col("b.vec")) / (col("a.norm") * col("b.norm"))).as("sim"))
+      .where(col("sim") >= 0.3)
       .collect().map(norm).sortBy(x => (x._1, x._2))
     assert(blocked.nonEmpty && blocked.sameElements(joined))
     // the quadratic path is opt-in ONLY: the default reach must refuse
@@ -867,31 +873,38 @@ class OperatorSpec extends AnyFunSuite with BeforeAndAfterAll {
       val a = i / 50.0
       (i.toLong, Seq(math.cos(a), math.sin(a), a / 7.0))
     }.toDF("vec_id", "vec")
-    val lit0 = Embeddings.kmeansAssign(vecs, "vec", cents)
-      .select("vec_id", "cid").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val bc = Embeddings.kmeansAssign(vecs, "vec", cents, forceBroadcast = true)
-      .select("vec_id", "cid").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // the reference: the literal SQL argmax greatest(struct(round(sim *
+    // 1e6), -cid)) over one centroid literal per cid
+    def literal(df: org.apache.spark.sql.DataFrame): Map[Long, Long] = {
+      val scored = cents.map { case (cid, cv) =>
+        val cl = typedlit(cv)
+        val sim = Embeddings.vecDot(col("vec"), cl) /
+          (Embeddings.vecNorm(col("vec")) * Embeddings.vecNorm(cl))
+        struct(round(sim * lit(1e6)).cast("long").as("sim_e6"), lit(-cid).as("ncid"))
+      }
+      df.select(col("vec_id"), -greatest(scored: _*).getField("ncid"))
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    }
+    def assigned(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+      Embeddings.kmeansAssign(df, "vec", cents)
+        .select("vec_id", "cid").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val lit0 = literal(vecs)
+    val bc = assigned(vecs)
     assert(lit0 == bc, s"paths diverge: ${lit0.toSeq.sorted} vs ${bc.toSeq.sorted}")
     assert(bc.values.toSet.subsetOf(Set(1L, 3L))) // ties never pick cid 2
     // float input dispatches the float getter on both paths
     val fvecs = vecs.withColumn("vec", col("vec").cast("array<float>"))
-    val litF = Embeddings.kmeansAssign(fvecs, "vec", cents)
-      .select("vec_id", "cid").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val bcF = Embeddings.kmeansAssign(fvecs, "vec", cents, forceBroadcast = true)
-      .select("vec_id", "cid").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(litF == bcF)
+    assert(literal(fvecs) == assigned(fvecs))
     // degenerate inputs: a null element (or null vector) nulls every sim,
     // and BOTH paths tie-break to the smallest cid (non-null assignment)
     val degen = Seq(1L).toDF("vec_id")
       .withColumn("vec", expr("array(1.0, cast(null as double), 0.0)"))
       .union(Seq(2L).toDF("vec_id").withColumn("vec", expr("cast(null as array<double>)")))
-    val litD = Embeddings.kmeansAssign(degen, "vec", cents)
-      .select("vec_id", "cid").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val bcD = Embeddings.kmeansAssign(degen, "vec", cents, forceBroadcast = true)
-      .select("vec_id", "cid").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val litD = literal(degen)
+    val bcD = assigned(degen)
     assert(litD == Map(1L -> 1L, 2L -> 1L), litD.toString)
     assert(bcD == litD, s"null handling diverges: $litD vs $bcD")
-    // a k > AssignLiteralMaxK end-to-end run goes down the broadcast path
+    // an end-to-end run at k = 100
     val many = (1 to 200).map(i =>
       (i.toLong, Seq(math.sin(i * 0.7), math.cos(i * 1.3), math.sin(i * 2.1 + 1)))).toDF("vec_id", "vec")
     val out = Embeddings.semanticDeduplicate(many, "vec", "vec_id",
@@ -1425,7 +1438,7 @@ class OperatorSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(langs == Map(1L -> "en", 2L -> "de", 3L -> "fr", 4L -> "es", 5L -> "und"), langs.toString)
   }
 
-  test("multimodal: real PNG round-trip is exact, deterministic, batch-size-invariant") {
+  test("multimodal: real PNG round-trip is exact, deterministic, partition-invariant") {
     val sps = spark; import sps.implicits._
     val ids = (1L to 100L).toDF("doc_id")
     val png = Multimodal.synthesizePngPayloads(ids, "doc_id")
@@ -1905,25 +1918,6 @@ class OperatorSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(spark.sql("SELECT unix_micros(ts) FROM events LIMIT 1").head().getLong(0) > 0L)
   }
 
-  test("typed Dataset API over real testdata") {
-    val docs = typed.documents(spark, "/root/testdata/sf0.001")
-    assert(docs.head().text.nonEmpty)
-    val pairs = typed.nearDuplicates(docs, threshold = 0.1).collect()
-    pairs.foreach(p => assert(p.id1 < p.id2 && p.jaccard_est >= 0.1))
-    val embs = typed.embeddings(spark, "/root/testdata/sf0.001")
-    val nbrs = typed.topKNeighbors(embs, Set(0L, 1L), 3).collect()
-    assert(nbrs.count(_.query_id == 0L) == 3)
-    assert(nbrs.filter(_.query_id == 1L).map(_.rank).sorted.sameElements(Array(1, 2, 3)))
-  }
-
-  test("typed sampling and quantization wrappers") {
-    val docs = typed.documents(spark, "/root/testdata/sf0.001")
-    val sampled = typed.balancedSample(docs, 5).collect()
-    assert(sampled.groupBy(_.lang).values.forall(_.length <= 5))
-    val q = typed.quantized(typed.embeddings(spark, "/root/testdata/sf0.001")).head()
-    assert(q.q.length == 64 && q.q.forall(v => v >= -127 && v <= 127) && q.scale > 0)
-  }
-
   test("sketch aggregates via SQL surface") {
     spark.range(0, 1000).createOrReplaceTempView("ids")
     val r = spark.sql("""
@@ -2163,30 +2157,37 @@ class OperatorSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("embedding normalize + int8 quantize") {
-    val r = spark.sql("SELECT array(3.0D, -4.0D, 0.0D) AS vec, array(0.0D, 0.0D) AS zvec")
-      .select(Embeddings.normalize(col("vec")).as("n"),
-        Embeddings.quantizeInt8(col("vec")).as("q"),
-        Embeddings.quantScale(col("vec")).as("s"),
-        Embeddings.normalize(col("zvec")).as("zn"),
-        Embeddings.quantizeInt8(col("zvec")).as("zq")).head()
-    val n = r.getSeq[Double](0)
-    assert(math.abs(n(0) - 0.6) < 1e-15 && math.abs(n(1) + 0.8) < 1e-15 && n(2) == 0.0)
-    // scale = 127/4: 3*31.75 = 95.25 -> 95; -4 -> -127; 0 -> 0
-    assert(r.getSeq[Int](1) == Seq(95, -127, 0))
-    assert(r.getDouble(2) == 4.0 / 127.0)
-    // zero vector: passthrough / zeros, no division by zero
-    assert(r.getSeq[Double](3) == Seq(0.0, 0.0) && r.getSeq[Int](4) == Seq(0, 0))
-    // DataFrame-level forms (norm/max projected once per row) agree exactly
+    type C = org.apache.spark.sql.Column
+    // the reference: per-element Column expressions with the norm and the
+    // abs-max inlined into each lambda
+    def normalized(v: C): C = {
+      val n = Embeddings.vecNorm(v)
+      when(n > lit(0.0), transform(v, x => x / n)).otherwise(v)
+    }
+    def maxAbs(v: C): C = array_max(transform(v, x => abs(x)))
+    def quantized(v: C): C = {
+      val sc = when(maxAbs(v) > lit(0.0), lit(127.0) / maxAbs(v)).otherwise(lit(0.0))
+      transform(v, x => floor(x * sc + lit(0.5)).cast("int"))
+    }
+    def scale(v: C): C = when(maxAbs(v) > lit(0.0), maxAbs(v) / lit(127.0)).otherwise(lit(0.0))
     val df = spark.sql("""SELECT * FROM VALUES (array(3.0D, -4.0D, 0.0D)), (array(0.0D, 0.0D, 0.0D)),
       (array(0.25D, -0.5D, 1.5D)) t(vec)""")
     val staged = Embeddings.withInt8Quantized(Embeddings.withNormalized(df, "vec", "vn"),
       "vec", "q", "s").collect()
-    val colForm = df.select(Embeddings.normalize(col("vec")).as("vn"),
-      Embeddings.quantizeInt8(col("vec")).as("q"), Embeddings.quantScale(col("vec")).as("s")).collect()
+    val Seq(vn, q, sc) = Seq("vn", "q", "s").map(staged.head.fieldIndex)
+    val n = staged(0).getSeq[Double](vn)
+    assert(math.abs(n(0) - 0.6) < 1e-15 && math.abs(n(1) + 0.8) < 1e-15 && n(2) == 0.0)
+    // scale = 127/4: 3*31.75 = 95.25 -> 95; -4 -> -127; 0 -> 0
+    assert(staged(0).getSeq[Int](q) == Seq(95, -127, 0))
+    assert(staged(0).getDouble(sc) == 4.0 / 127.0)
+    // zero vector: passthrough / zeros, no division by zero
+    assert(staged(1).getSeq[Double](vn) == Seq(0.0, 0.0, 0.0) && staged(1).getSeq[Int](q) == Seq(0, 0, 0))
+    // the staged forms (norm/max projected once per row) agree exactly
+    val colForm = df.select(normalized(col("vec")), quantized(col("vec")), scale(col("vec"))).collect()
     staged.zip(colForm).foreach { case (a, b) =>
-      assert(a.getSeq[Double](a.fieldIndex("vn")) == b.getSeq[Double](0))
-      assert(a.getSeq[Int](a.fieldIndex("q")) == b.getSeq[Int](1))
-      assert(a.getDouble(a.fieldIndex("s")) == b.getDouble(2))
+      assert(a.getSeq[Double](vn) == b.getSeq[Double](0))
+      assert(a.getSeq[Int](q) == b.getSeq[Int](1))
+      assert(a.getDouble(sc) == b.getDouble(2))
     }
   }
 

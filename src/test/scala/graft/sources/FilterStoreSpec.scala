@@ -89,22 +89,4 @@ class FilterStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     assert(guard.getMessage.contains("probeJoin"), guard.getMessage)
   }
-
-  test("bucketed tables join without an exchange") {
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    val sps = spark; import sps.implicits._
-    val a = spark.range(1, 20001).toDF("k").withColumn("va", col("k") * 2)
-    val b = spark.range(1, 20001).toDF("k").withColumn("vb", col("k") * 3)
-    FilterStore.writeBucketed(a, "bkt_a", "k", numBuckets = 8)
-    FilterStore.writeBucketed(b, "bkt_b", "k", numBuckets = 8)
-    val joined = spark.table("bkt_a").join(spark.table("bkt_b"), "k")
-      .agg(sum($"va" + $"vb").as("s"))
-    val plan = joined.queryExecution.executedPlan
-    val shufflesBeforeAgg = plan.collect { case e: ShuffleExchangeExec => e }
-    // the join itself must be exchange-free: only the final 1-row global
-    // aggregation may shuffle
-    assert(shufflesBeforeAgg.size <= 1,
-      s"expected bucket-local join (at most the final agg exchange), got:\n$plan")
-    assert(joined.head().getLong(0) == (1L to 20000L).map(k => 2 * k + 3 * k).sum)
-  }
 }
