@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
@@ -2157,19 +2157,18 @@ class OperatorSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("embedding normalize + int8 quantize") {
-    type C = org.apache.spark.sql.Column
     // the reference: per-element Column expressions with the norm and the
     // abs-max inlined into each lambda
-    def normalized(v: C): C = {
+    def normalized(v: Column): Column = {
       val n = Embeddings.vecNorm(v)
       when(n > lit(0.0), transform(v, x => x / n)).otherwise(v)
     }
-    def maxAbs(v: C): C = array_max(transform(v, x => abs(x)))
-    def quantized(v: C): C = {
+    def maxAbs(v: Column): Column = array_max(transform(v, x => abs(x)))
+    def quantized(v: Column): Column = {
       val sc = when(maxAbs(v) > lit(0.0), lit(127.0) / maxAbs(v)).otherwise(lit(0.0))
       transform(v, x => floor(x * sc + lit(0.5)).cast("int"))
     }
-    def scale(v: C): C = when(maxAbs(v) > lit(0.0), maxAbs(v) / lit(127.0)).otherwise(lit(0.0))
+    def scale(v: Column): Column = when(maxAbs(v) > lit(0.0), maxAbs(v) / lit(127.0)).otherwise(lit(0.0))
     val df = spark.sql("""SELECT * FROM VALUES (array(3.0D, -4.0D, 0.0D)), (array(0.0D, 0.0D, 0.0D)),
       (array(0.25D, -0.5D, 1.5D)) t(vec)""")
     val staged = Embeddings.withInt8Quantized(Embeddings.withNormalized(df, "vec", "vn"),
