@@ -156,13 +156,16 @@ private[graft] object SharedRelation {
 
   /** A relation materialized to parquet under [[dir]] (not `.persist`:
     * Bench clears the Spark cache between gates). `derive` reads the
-    * session's prepared views.
+    * session's prepared views. The files are read back with the schema they
+    * were written with, which starts no schema-inference job; a file read
+    * makes every field nullable, as an inferred read does.
     */
   def parquet(name: String)(derive: SparkSession => DataFrame): SharedRelation[DataFrame] =
     new SharedRelation[DataFrame]((s, fixture) => {
       val p = path(name, fixture)
-      derive(s).write.mode("overwrite").parquet(p)
-      s.read.parquet(p)
+      val df = derive(s)
+      df.write.mode("overwrite").parquet(p)
+      s.read.schema(df.schema).parquet(p)
     })
 
   /** Forget every built relation, release its blocks and empty [[dir]].

@@ -5,7 +5,7 @@ import java.nio.file.{Files, Path, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
 /** File-source Structured Streaming runs of the batch operators.
   *
@@ -56,6 +56,22 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   * is atomic too. Hadoop's `.crc` side files and Spark's state-file
   * checksums are still written and verified.
   *
+  * File modes: Hadoop's local filesystem sets the mode of every file and
+  * directory it creates, and without `libhadoop` it forks `chmod` for each:
+  * 75 forks per `q_stream_dedup_wm` drain, 60 in the checkpoint and 15 in
+  * the sink. A drain therefore runs with `fs.file.impl` set to
+  * [[NioLocalFileSystem]], the same checksummed local filesystem whose
+  * `setPermission` goes through `java.nio` (only a sticky-bit mode still
+  * takes Hadoop's path), unless the session already names an
+  * `fs.file.impl`. Hadoop caches one `file:` filesystem per JVM whatever its
+  * class, so the drain also sets `fs.file.impl.disable.cache`.
+  *
+  * A drain runs only query work: no Spark job infers a parquet schema.
+  * [[tableStream]] reads its source schema from a footer on the driver, and
+  * [[runAvailableNow]] reads the sink back with the schema it was written
+  * with. File sources make every field nullable either way, and the sink's
+  * `_spark_metadata` log still decides which files are read.
+  *
   * Directories this object creates (landing, sink, checkpoint) are deleted,
   * recursively and without following symlinks, by one JVM-exit hook: a
   * returned frame reads its sink lazily, so nothing can go sooner.
@@ -105,17 +121,17 @@ object FileStreams {
     */
   def stageLanding(files: Seq[Path]): Path = {
     val landing = createTempDir("graft_landing_")
-    val parts = files.flatMap { f =>
-      if (Files.isDirectory(f))
-        f.toFile.listFiles().toSeq.filter(_.getName.endsWith(".parquet"))
-          .sortBy(_.getName).map(_.toPath)
-      else Seq(f)
-    }
+    val parts = files.flatMap(f => if (Files.isDirectory(f)) partFiles(f) else Seq(f))
     parts.zipWithIndex.foreach { case (f, i) =>
       Files.createSymbolicLink(landing.resolve(f"part_$i%05d.parquet"), f): Unit
     }
     landing
   }
+
+  /** The `.parquet` files directly under `dir`, in name order. */
+  private def partFiles(dir: Path): Seq[Path] =
+    dir.toFile.listFiles().toSeq.filter(_.getName.endsWith(".parquet"))
+      .sortBy(_.getName).map(_.toPath)
 
   /** Directories created by [[createTempDir]], deleted at JVM exit. */
   private[graft] val createdDirs = java.util.concurrent.ConcurrentHashMap.newKeySet[Path]()
@@ -164,13 +180,13 @@ object FileStreams {
   }
 
   /** Stream one driver table (`$sfDir/$table.parquet`) as a parquet file
-    * stream with normalized event time. Schema comes from a batch footer
-    * read (file streams need an explicit schema).
+    * stream with normalized event time. File streams need an explicit
+    * schema; [[parquetSchema]] reads it from a footer on the driver.
     */
   def tableStream(spark: SparkSession, sfDir: String, table: String,
       nanosCols: Seq[String] = Nil): DataFrame = {
     val path = Paths.get(s"$sfDir/$table.parquet")
-    val schema = spark.read.parquet(path.toString).schema
+    val schema = parquetSchema(spark, path)
     val landing = stageLanding(Seq(path))
     normalizeTimestamps(
       spark.readStream.schema(schema).parquet(landing.toString), nanosCols)
@@ -300,6 +316,27 @@ object FileStreams {
     }.sum
   }
 
+  /** The Spark schema of a parquet file, or of a directory's first part file
+    * in [[stageLanding]]'s order, from its footer read on the driver through
+    * Spark's `ParquetFileFormat.readSchema`. Batch schema inference converts
+    * a footer with the same session settings (nanos, INT96, NTZ) and the
+    * same preference for a Spark-written footer's stored schema, but reads
+    * the footer in a Spark job. Fields keep the footer's nullability; a
+    * file read, batch or streaming, makes them all nullable.
+    */
+  private[graft] def parquetSchema(spark: SparkSession, path: Path): StructType = {
+    import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val file =
+      if (!Files.isDirectory(path)) path
+      else partFiles(path).headOption.getOrElse(
+        throw new IllegalArgumentException(s"parquetSchema: no parquet file under $path"))
+    val p = new org.apache.hadoop.fs.Path(file.toUri)
+    val r = ParquetFileReader.open(HadoopInputFile.fromPath(p, spark.sessionState.newHadoopConf()))
+    val footer = try r.getFooter finally r.close()
+    ParquetSchemaJ.readSchema(Seq(new Footer(p, footer)), spark).get
+  }
+
   /** [[parquetRowCount]] over a driver table (`$sfDir/$table.parquet`). */
   def tableRowCount(spark: SparkSession, sfDir: String, table: String): Long =
     parquetRowCount(spark, s"$sfDir/$table.parquet")
@@ -312,6 +349,8 @@ object FileStreams {
     */
   private[graft] val FileSystemCheckpointManager =
     "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"
+  private[graft] val FileImplConf = "fs.file.impl"
+  private[graft] val FileCacheOffConf = "fs.file.impl.disable.cache"
 
   /** Session-conf overrides for one [[runAvailableNow]] drain.
     *
@@ -348,6 +387,10 @@ object FileStreams {
     *
     * Checkpoint manager: [[FileSystemCheckpointManager]], unless the
     * session already sets [[CheckpointManagerConf]].
+    *
+    * Local filesystem: [[NioLocalFileSystem]] with Hadoop's `file:` cache
+    * off ([[FileCacheOffConf]]; see the object scaladoc), unless the
+    * session already sets [[FileImplConf]].
     *
     * CONCURRENCY CAVEAT: the overrides are session-global keys, set for
     * the drain and restored after it — a streaming query STARTED
@@ -390,7 +433,10 @@ object FileStreams {
     val manager =
       if (isSet(spark, CheckpointManagerConf)) None
       else Some(CheckpointManagerConf -> FileSystemCheckpointManager)
-    (provider ++ partitions ++ manager).toMap
+    val localFs =
+      if (isSet(spark, FileImplConf)) Nil
+      else Seq(FileImplConf -> classOf[NioLocalFileSystem].getName, FileCacheOffConf -> "true")
+    (provider ++ partitions ++ manager ++ localFs).toMap
   }
 
   /** Whether the session sets `key` itself; a registered key's default does
@@ -456,7 +502,9 @@ object FileStreams {
     operatorMsAcc.addAndGet(q.recentProgress.iterator.map { p =>
       Option(p.durationMs.get("triggerExecution")).map(_.longValue).getOrElse(0L)
     }.sum): Unit
-    spark.read.parquet(out.toString)
+    // the sink holds what the query wrote, so its schema is the stream's;
+    // naming it skips the schema-inference job a bare read would start
+    spark.read.schema(stream.schema).parquet(out.toString)
   }
 
   /** Daily event counts per type, finalized by the watermark — the

@@ -66,6 +66,22 @@ class GateRegistrySpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(dir.list().isEmpty, dir.list().mkString(", "))
   }
 
+  test("a shared parquet relation reads back with its derived schema: same schema and rows as inferred") {
+    val name = "readback_spec"
+    val rel = SharedRelation.parquet(name) { s =>
+      // `id` is non-nullable here; a file read makes it nullable
+      s.range(0, 50).selectExpr("id", "CAST(id % 7 AS STRING) AS k",
+        "array(id, id + 1) AS xs", "named_struct('a', id, 'b', CAST(id AS DOUBLE)) AS st")
+    }
+    val got = rel(spark, sfDir)
+    val inferred = spark.read.parquet(SharedRelation.path(name, sfDir))
+    assert(got.schema == inferred.schema)
+    assert(got.schema("id").nullable)
+    assert(got.count() == 50L)
+    assert(got.exceptAll(inferred).isEmpty && inferred.exceptAll(got).isEmpty)
+    SparkEntry.clearSharedRelations()
+  }
+
   test("a clear releases the prepared graph's blocks and keeps the minhash stage") {
     SparkEntry.prepare(spark, sfDir)
     val graph = gates.GraphGates.sharedPreparedGraph(spark, sfDir)

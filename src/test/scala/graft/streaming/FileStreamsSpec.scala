@@ -692,33 +692,157 @@ class FileStreamsSpec extends AnyFunSuite with BeforeAndAfterAll {
         "the session's checkpoint manager was not used")
       assert(spark.conf.get(CheckpointManagerConf) == counting)
     } finally spark.conf.unset(CheckpointManagerConf)
+    // the local filesystem the same way: the fork-free one, uncached, by
+    // default; a session-set `fs.file.impl` is kept and the cache left on
+    import FileStreams.{FileCacheOffConf, FileImplConf}
+    assert(!FileStreams.isSet(spark, FileImplConf))
+    val overrides = FileStreams.drainConf(spark)
+    assert(overrides.get(FileImplConf) == Some(classOf[NioLocalFileSystem].getName))
+    assert(overrides.get(FileCacheOffConf) == Some("true"))
+    def localFs() = new org.apache.hadoop.fs.Path("file:///")
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    assert(!localFs().isInstanceOf[NioLocalFileSystem])
+    assert(FileStreams.withSessionConf(spark, overrides)(localFs()).isInstanceOf[NioLocalFileSystem])
+    val hadoopLocal = classOf[org.apache.hadoop.fs.LocalFileSystem].getName
+    spark.conf.set(FileImplConf, hadoopLocal)
+    try {
+      val kept = FileStreams.drainConf(spark)
+      assert(!kept.contains(FileImplConf) && !kept.contains(FileCacheOffConf))
+      assert(windowCounts() == viaDefault)
+      assert(spark.conf.get(FileImplConf) == hadoopLocal)
+      assert(!FileStreams.isSet(spark, FileCacheOffConf))
+    } finally spark.conf.unset(FileImplConf)
   }
 
   test("a drain whose query fails restores every overridden session key exactly") {
-    import FileStreams.{CheckpointManagerConf, ShufflePartitionsConf, StateStoreProviderConf}
+    import FileStreams.{CheckpointManagerConf, FileCacheOffConf, FileImplConf,
+      ShufflePartitionsConf, StateStoreProviderConf}
     val shuffle = spark.conf.get(ShufflePartitionsConf)
-    assert(!FileStreams.isSet(spark, StateStoreProviderConf))
-    assert(!FileStreams.isSet(spark, CheckpointManagerConf))
+    val unsetKeys = Seq(StateStoreProviderConf, CheckpointManagerConf, FileImplConf, FileCacheOffConf)
+    unsetKeys.foreach(k => assert(!FileStreams.isSet(spark, k), k))
     val boom = udf((x: Long) => { if (x >= 0) throw new IllegalStateException("boom"); x })
     val failing = FileStreams.tableStream(spark, dir, "events", Seq("ts"))
       .select(boom(col("user_id").cast("long")).as("x"))
     val overrides = FileStreams.drainConf(spark, Some(3), Some("rocksdb"))
-    assert(overrides.keySet ==
-      Set(ShufflePartitionsConf, StateStoreProviderConf, CheckpointManagerConf))
+    assert(overrides.keySet == unsetKeys.toSet + ShufflePartitionsConf)
     intercept[org.apache.spark.sql.streaming.StreamingQueryException](
       FileStreams.runAvailableNow(failing, statePartitions = Some(3), stateStore = Some("rocksdb")))
     assert(spark.conf.get(ShufflePartitionsConf) == shuffle)
-    assert(!FileStreams.isSet(spark, StateStoreProviderConf))
-    assert(!FileStreams.isSet(spark, CheckpointManagerConf))
+    unsetKeys.foreach(k => assert(!FileStreams.isSet(spark, k), k))
     // the helper alone, body throwing: a set key gets its old value, an
     // unset key is unset again
     intercept[IllegalStateException](FileStreams.withSessionConf(spark,
-      Map(ShufflePartitionsConf -> "3", CheckpointManagerConf -> "x")) {
+      Map(ShufflePartitionsConf -> "3", CheckpointManagerConf -> "x",
+        FileImplConf -> "y", FileCacheOffConf -> "true")) {
       assert(spark.conf.get(ShufflePartitionsConf) == "3")
       throw new IllegalStateException("body")
     })
     assert(spark.conf.get(ShufflePartitionsConf) == shuffle)
-    assert(!FileStreams.isSet(spark, CheckpointManagerConf))
+    unsetKeys.foreach(k => assert(!FileStreams.isSet(spark, k), k))
+  }
+
+  test("tableStream schema == an inferred read's: every sf0.01 table, nanosAsLong on and off") {
+    val sf = "/root/testdata/sf0.01"
+    val tables = new java.io.File(sf).list().filter(_.endsWith(".parquet"))
+      .map(_.stripSuffix(".parquet")).sorted.toSeq
+    assert(tables.size == 10, tables.mkString(", "))
+    val nanosKey = "spark.sql.legacy.parquet.nanosAsLong"
+    try for (nanos <- Seq("true", "false"); t <- tables) {
+      spark.conf.set(nanosKey, nanos)
+      val path = s"$sf/$t.parquet"
+      val inferred = spark.read.parquet(path).schema
+      assert(FileStreams.parquetSchema(spark, java.nio.file.Paths.get(path)) == inferred,
+        s"$t, nanosAsLong=$nanos")
+      // no nanosCols: normalizeTimestamps only casts NTZ columns, on both sides
+      assert(FileStreams.tableStream(spark, sf, t).schema ==
+        FileStreams.normalizeTimestamps(spark.read.parquet(path), Nil).schema,
+        s"$t, nanosAsLong=$nanos")
+    } finally spark.conf.set(nanosKey, "true")
+  }
+
+  test("tableStream schema == an inferred read's for a multi-part directory Spark wrote") {
+    val sf = java.nio.file.Files.createTempDirectory("graft_schema_sf_")
+    try {
+      // Spark stores its own schema in the footer: `id` is non-nullable
+      // there, and both reads make it nullable
+      spark.range(0, 300).selectExpr("id", "CAST(id % 7 AS STRING) AS k",
+          "array(id, id + 1) AS xs", "named_struct('a', id, 'b', CAST(id AS DOUBLE)) AS st",
+          "timestamp_micros(id * 1000000) AS ts", "CAST(id AS DECIMAL(12, 2)) AS d")
+        .repartition(3).write.parquet(s"$sf/multi.parquet")
+      val parts = new java.io.File(s"$sf/multi.parquet").list().filter(_.endsWith(".parquet"))
+      assert(parts.length == 3, parts.mkString(", "))
+      val inferred = spark.read.parquet(s"$sf/multi.parquet").schema
+      assert(inferred("id").nullable)
+      assert(FileStreams.tableStream(spark, sf.toString, "multi").schema == inferred)
+    } finally FileStreams.deleteTree(sf)
+  }
+
+  test("a drain returns its sink's inferred schema and rows and starts no parquet job here") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val stages = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        e.stageInfos.foreach(st => stages.add(st.name): Unit)
+    }
+    val sc = spark.sparkContext
+    val sink = java.nio.file.Files.createTempDirectory("graft_readback_sink_")
+    sc.addSparkListener(listener)
+    val out = try {
+      val drained = FileStreams.runAvailableNow(
+        FileStreams.distinctKeysWithinWatermark(
+          FileStreams.tableStream(spark, dir, "events", Seq("ts")),
+          "ts", Seq("user_id", "event_type"), "1 hour"),
+        sinkDir = Some(sink))
+      // the bus delivers events in order: once the marker job is seen, every
+      // job the drain started has been seen too
+      val marker = "graft-listener-marker"
+      sc.setCallSite(marker)
+      try sc.parallelize(Seq(1), 1).count(): Unit finally sc.clearCallSite()
+      val deadline = System.nanoTime() + 30000000000L
+      while (!stages.contains(marker) && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(stages.contains(marker), "listener never saw the marker job")
+      drained
+    } finally sc.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    val names = stages.asScala.toSeq
+    assert(names.size > 1, "the drain ran no job")
+    assert(!names.exists(_.startsWith("parquet at FileStreams")),
+      names.filter(_.startsWith("parquet at")).mkString("; "))
+    val inferred = spark.read.parquet(sink.toString)
+    assert(out.schema == inferred.schema)
+    assert(out.count() > 0)
+    assert(out.exceptAll(inferred).isEmpty && inferred.exceptAll(out).isEmpty)
+  }
+
+  test("NIO setPermission leaves chmod's mode; a sticky-bit mode takes Hadoop's path") {
+    import org.apache.hadoop.fs.{Path => HPath, RawLocalFileSystem}
+    import org.apache.hadoop.fs.permission.FsPermission
+    val conf = new org.apache.hadoop.conf.Configuration()
+    val hadoop = new RawLocalFileSystem
+    hadoop.initialize(java.net.URI.create("file:///"), conf)
+    val nio = new NioRawLocalFileSystem
+    nio.initialize(java.net.URI.create("file:///"), conf)
+    val root = java.nio.file.Files.createTempDirectory("graft_perm_")
+    def mode(p: java.nio.file.Path): Int =
+      java.nio.file.Files.getAttribute(p, "unix:mode").asInstanceOf[Int] & 0xfff
+    def perm(octal: String) = new FsPermission(Integer.parseInt(octal, 8).toShort)
+    try {
+      for (octal <- Seq("600", "644", "700", "755")) {
+        val viaHadoop = java.nio.file.Files.createFile(root.resolve(s"hadoop_$octal"))
+        val viaNio = java.nio.file.Files.createFile(root.resolve(s"nio_$octal"))
+        hadoop.setPermission(new HPath(viaHadoop.toUri), perm(octal))
+        nio.setPermission(new HPath(viaNio.toUri), perm(octal))
+        assert(java.nio.file.Files.getPosixFilePermissions(viaNio) ==
+          java.nio.file.Files.getPosixFilePermissions(viaHadoop), octal)
+        assert(mode(viaNio) == Integer.parseInt(octal, 8), octal)
+      }
+      // NIO cannot set the sticky bit: a mode with it comes from Hadoop
+      val sticky = java.nio.file.Files.createDirectory(root.resolve("sticky"))
+      nio.setPermission(new HPath(sticky.toUri), perm("1755"))
+      assert(mode(sticky) == Integer.parseInt("1755", 8))
+      intercept[java.io.IOException](
+        nio.setPermission(new HPath(root.resolve("gone").toUri), perm("644")))
+    } finally FileStreams.deleteTree(root)
   }
 }
 
