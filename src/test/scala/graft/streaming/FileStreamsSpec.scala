@@ -785,7 +785,7 @@ class FileStreamsSpec extends AnyFunSuite with BeforeAndAfterAll {
         e.stageInfos.foreach(st => stages.add(st.name): Unit)
     }
     val sc = spark.sparkContext
-    val sink = java.nio.file.Files.createTempDirectory("graft_readback_sink_")
+    val sink = FileStreams.createTempDir("graft_readback_sink_")
     sc.addSparkListener(listener)
     val out = try {
       val drained = FileStreams.runAvailableNow(
