@@ -742,7 +742,7 @@ class FileStreamsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("tableStream schema == an inferred read's: every sf0.01 table, nanosAsLong on and off") {
-    val sf = "/root/testdata/sf0.01"
+    val sf = new java.io.File(new java.io.File(dir).getParentFile, "sf0.01").getPath
     val tables = new java.io.File(sf).list().filter(_.endsWith(".parquet"))
       .map(_.stripSuffix(".parquet")).sorted.toSeq
     assert(tables.size == 10, tables.mkString(", "))
