@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints one JSON metrics line.
   *
@@ -49,7 +47,6 @@ object Bench {
       sys.env.get("SPARK_GRAFT_BENCH_ISOLATED").exists(v => v == "1" || v == "true")
     val warmupDir = sys.env.getOrElse("SPARK_GRAFT_WARMUP_SF_DIR",
       "/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // local-iteration aid only (never set by the driver): restrict the
     // suite to a comma-separated gate subset. Shared-relation accounting
     // keeps the suite semantics (cleared per pass, built by first consumer).
@@ -57,17 +54,7 @@ object Bench {
       sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").map(_.trim).toSet)
     val secondPassBudget = sys.env.get("SPARK_GRAFT_BENCH_BUDGET").map(_.toDouble)
       .getOrElse(math.max(240.0, 5.0 * SparkEntry.queries.size))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // production path: FoldSingleRowJoin inside the operator-optimization
-      // batch, so rewritten probe filters reach the scans (the registerAll
-      // fallback would land it post-pushdown — weaker plans)
-      .config("spark.sql.extensions", "graft.GraftSparkExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session(defaultCpus = 4)
 
     // warm the JVM/session once (codegen, parquet footers)
     try SparkEntry.queries("q1_agg")(spark, sfDir).write.format("noop").mode("overwrite").save()

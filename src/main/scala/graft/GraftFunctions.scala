@@ -406,6 +406,11 @@ object GraftFunctions {
 
   /** Idempotent programmatic registration into the session's function registry.
     *
+    * A session built with `spark.sql.extensions=graft.GraftSparkExtensions`
+    * already runs both optimizer rules, injected into the
+    * operator-optimization batch, and gets nothing more here. Any other
+    * session gets them through `experimental.extraOptimizations`.
+    *
     * NOTE on plan quality: on an already-built session the extension hook is
     * gone, so FoldSingleRowJoin falls back to `experimental.extraOptimizations`
     * — a batch that runs AFTER predicate pushdown and column pruning. The
@@ -420,25 +425,22 @@ object GraftFunctions {
   def registerAll(spark: SparkSession): Unit = {
     val registry = spark.sessionState.functionRegistry
     all.foreach(fn => registry.registerFunction(FunctionIdentifier(fn.name), fn.info, fn.builder))
-    val rules = spark.experimental.extraOptimizations
-    if (!rules.contains(graft.plans.FoldSingleRowJoin)) {
-      val extensionActive = spark.conf.getOption("spark.sql.extensions")
-        .exists(_.contains("graft.GraftSparkExtensions"))
-      if (!extensionActive)
+    val extensionActive = spark.conf.getOption("spark.sql.extensions")
+      .exists(_.contains(classOf[GraftSparkExtensions].getName))
+    if (!extensionActive) {
+      // nanos-rebuild pushdown: on this fallback path the rule runs post-
+      // optimization, where filters already sit directly above the scans —
+      // the added plain-column bound is still extracted into PushedFilters
+      // at physical planning (FileSourceStrategy reads the OPTIMIZED plan)
+      val rules = spark.experimental.extraOptimizations
+      val missing = Seq(graft.plans.FoldSingleRowJoin, graft.plans.PushNanosTimestampFilters)
+        .filterNot(rules.contains)
+      if (missing.contains(graft.plans.FoldSingleRowJoin))
         org.slf4j.LoggerFactory.getLogger(getClass).warn(
           "graft: FoldSingleRowJoin registered via experimental.extraOptimizations " +
           "(post-pushdown batch) — rewritten probe filters will not reach the scans. " +
           "Prefer spark.sql.extensions=graft.GraftSparkExtensions for production plans.")
-      spark.experimental.extraOptimizations = rules :+ graft.plans.FoldSingleRowJoin
-    }
-    // nanos-rebuild pushdown: on this fallback path the rule runs post-
-    // optimization, where filters already sit directly above the scans —
-    // the added plain-column bound is still extracted into PushedFilters
-    // at physical planning (FileSourceStrategy reads the OPTIMIZED plan)
-    if (!spark.experimental.extraOptimizations
-        .contains(graft.plans.PushNanosTimestampFilters)) {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.PushNanosTimestampFilters
+      spark.experimental.extraOptimizations = rules ++ missing
     }
   }
 }

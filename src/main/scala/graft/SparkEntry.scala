@@ -1,10 +1,13 @@
 package graft
 
+import java.nio.file.Paths
+
 import scala.collection.mutable
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.gates._
+import graft.streaming.FileStreams
 
 /** Driver contract — the complete operator surface exposed as named queries
   * with DuckDB oracle SQL where the semantics are plain-SQL-expressible.
@@ -36,7 +39,7 @@ object SparkEntry {
     * they are read as nanos-since-epoch longs and rebuilt as microsecond
     * timestamps, matching what DuckDB sees).
     */
-  private val nanoTimestampCols: Map[String, Seq[String]] = Map(
+  private[graft] val nanoTimestampCols: Map[String, Seq[String]] = Map(
     "orders" -> Seq("o_orderdate"),
     "lineitem" -> Seq("l_shipdate"),
     "events" -> Seq("ts"))
@@ -85,14 +88,19 @@ object SparkEntry {
     if (prepared.get(spark).contains(dir)) return spark
     prepared(spark) = dir
     GraftFunctions.registerAll(spark)
+    // before the schema reads below: a footer's nanos columns convert per
+    // this key
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     tables.foreach { t =>
-      // nanos-as-long rebuild + TIMESTAMP_NTZ cast (generated parquet has
-      // flipped between isAdjustedToUTC=true/false across rounds; all
-      // sessions here run UTC, so the cast is value-preserving) — shared
-      // with the streaming readers so batch and stream see identical time
-      graft.streaming.FileStreams.normalizeTimestamps(
-          spark.read.parquet(s"$dir/$t.parquet"),
+      val path = s"$dir/$t.parquet"
+      // the schema comes from a footer read on the driver (an inferred
+      // read starts one Spark job per table); then the nanos-as-long
+      // rebuild + TIMESTAMP_NTZ cast (generated parquet has flipped between
+      // isAdjustedToUTC=true/false across rounds; all sessions here run
+      // UTC, so the cast is value-preserving) — shared with the streaming
+      // readers so batch and stream see identical time
+      FileStreams.normalizeTimestamps(
+          spark.read.schema(FileStreams.parquetSchema(spark, Paths.get(path))).parquet(path),
           nanoTimestampCols.getOrElse(t, Nil))
         .createOrReplaceTempView(t)
     }
@@ -146,7 +154,7 @@ private[graft] object SharedRelation {
 
   /** This JVM's checkpoint directory, removed at exit. */
   lazy val dir: java.io.File =
-    streaming.FileStreams.createTempDir("graft_shared_rel_").toFile
+    FileStreams.createTempDir("graft_shared_rel_").toFile
 
   /** Where relation `name` of fixture `fixture` is checkpointed. */
   def path(name: String, fixture: String): String =
@@ -173,7 +181,7 @@ private[graft] object SharedRelation {
     */
   def clearAll(): Unit = synchronized {
     all.foreach(_.clear())
-    streaming.FileStreams.deleteTree(dir.toPath)
+    FileStreams.deleteTree(dir.toPath)
     dir.mkdirs(): Unit
   }
 }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -8,22 +7,7 @@ object Verify {
     val Array(sfDir, outDir) = args.take(2)
     // optional extra args: run only the named gates (local iteration aid)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // same optimizer-rule placement as production (see Bench)
-      .config("spark.sql.extensions", "graft.GraftSparkExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // optional streaming state-store backend override (hdfs | rocksdb):
-    // flips every q_stream_* gate's provider via the session knob
-    // FileStreams.runAvailableNow resolves — used to hold the streaming
-    // oracles green under RocksDB as well as the default provider
-    sys.env.get("SPARK_GRAFT_STATE_STORE")
-      .foreach(spark.conf.set("graft.streaming.stateStore", _))
+    val spark = LocalSpark.session(defaultCpus = 4)
     new java.io.File(outDir).mkdirs()
     val selected = SparkEntry.queries.toSeq
       .filter { case (name, _) => only.isEmpty || only(name) }

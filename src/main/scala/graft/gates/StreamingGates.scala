@@ -24,25 +24,13 @@ object StreamingGates {
         SELECT (epoch_us(MAX(ts)) // 1000 - 3600000) * 1000 AS wm FROM events)"""
 
   /** One AvailableNow drain of `query` over `table` streamed from the
-    * staged fixture in `dir` (events with its nanos `ts` rebuilt).
-    *
-    * State partitions are DERIVED from a state-key estimate across ALL
-    * q_stream_* gates (round 16; round 15 hardcoded 4 at every site):
-    * FileStreams.derivedStatePartitions sizes the store count from
-    * projected state VOLUME — floor 4 (the round-15 A/B: 2 ~= 4 < 8 < 16
-    * on watermark-bounded state; the per-batch floor is the
-    * per-store-instance commit fsync), one store per ~64 MB of projected
-    * state past the knee. The estimate is the staged table's FOOTER row
-    * count (metadata-only, the catalog statistic): state keys never
-    * exceed staged rows, and the floor absorbs the over-estimate at bench
-    * scale while an unbounded-state pipeline at 100 TB derives a real
-    * fan-out instead of a copy-pasted literal.
+    * staged fixture in `dir` (events with its nanos `ts` rebuilt), under
+    * the one state setup every drain has (FileStreams.drainConf).
     */
   private def drain(s: SparkSession, dir: String, table: String = "events")(
       query: DataFrame => DataFrame): DataFrame =
     FileStreams.runAvailableNow(
-      query(FileStreams.tableStream(s, dir, table, if (table == "events") Seq("ts") else Nil)),
-      expectedStateKeys = FileStreams.tableRowCount(s, dir, table))
+      query(FileStreams.tableStream(s, dir, table, if (table == "events") Seq("ts") else Nil)))
 
   val gates: Seq[Gate] = Seq(
     // STREAMING per-key EWMA: flatMapGroupsWithState carries one 16-byte

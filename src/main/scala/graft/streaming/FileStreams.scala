@@ -42,6 +42,15 @@ import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, Times
   * the parquet sink is just a distributed write per micro-batch. Nothing
   * below collects to the driver.
   *
+  * State setup: every drain runs with [[MinStatePartitions]] state
+  * partitions and the state-store provider the session names in Spark's own
+  * `spark.sql.streaming.stateStore.providerClass` (the on-heap HDFS-backed
+  * store unless set). Nothing is sized from an estimate of the state: the
+  * gates' state is bounded by the watermark or by a small key set. A
+  * pipeline whose state nears the heap sets that key to RocksDB;
+  * `graft.tools.StateStoreScaleProbe` measures where the on-heap store stops
+  * fitting.
+  *
   * Checkpoint writes: every drain runs under Spark's
   * `FileSystemBasedCheckpointFileManager` unless the session already names
   * a `spark.sql.streaming.checkpointFileManagerClass`. Spark's default,
@@ -192,129 +201,18 @@ object FileStreams {
       spark.readStream.schema(schema).parquet(landing.toString), nanosCols)
   }
 
-  /** Derived state-store backend (round 15, same derived-default
-    * discipline as the LSH width / IVF nlist / SemDeDup k knobs): pick
-    * RocksDB when the projected on-heap state no longer fits comfortably.
-    *
-    * The HDFS-backed provider holds every partition's full state map
-    * on-heap — measured ~140 B/key at 50M distinct keys (~7 GB state,
-    * SCALE.md round-14, where the default provider OOMs a 2 GB heap and
-    * RocksDB completes at 308 MB) — and during snapshot commit briefly
-    * holds map copies, all inside the same unified pool the query's
-    * shuffles and aggregations need. The rule caps projected state at a
-    * QUARTER of the executor heap: `expectedStateKeys * 140 > heap / 4`
-    * -> `"rocksdb"`, else `"hdfs"`. At the r14 crossover this picks
-    * RocksDB two decades before the OOM (50M keys projects 7 GB vs a
-    * 0.5 GB budget on a 2 GB heap); watermark-bounded gates (thousands
-    * of keys) stay on the cheaper on-heap provider.
-    *
-    * `heapBytes` defaults to this JVM's max heap — the executor IS the
-    * driver in local mode; on a real cluster pass the executor heap.
+  /** State partitions of every drain. A stateful query fixes its state
+    * partition count in its first checkpoint (`offsets/0` records
+    * `spark.sql.shuffle.partitions`, and a resume keeps it whatever the
+    * session says), and every micro-batch commits each stateful operator's
+    * store once per partition: a stream-stream join commits four stores per
+    * partition per batch, and the no-data finalize batch pays again. So the
+    * count sets a per-batch cost floor, not a parallelism. The round-15 A/B
+    * at sf0.1, on the watermark-bounded state of the `q_stream_*` gates,
+    * measured 2 ≈ 4 < 8 < 16; 4 keeps the per-batch state work off a single
+    * task.
     */
-  def autoStateStoreChoice(expectedStateKeys: Long,
-      heapBytes: Long = Runtime.getRuntime.maxMemory): String = {
-    require(expectedStateKeys >= 0, "expectedStateKeys must be >= 0")
-    require(heapBytes > 0, "heapBytes must be > 0")
-    if (expectedStateKeys > heapBytes / 4 / StatePerKeyBytes) "rocksdb" else "hdfs"
-  }
-
-  /** Measured on-heap bytes per state key under the HDFS-backed provider
-    * (50M keys ~> 7 GB, SCALE.md round-14 state-store crossover probe).
-    */
-  private[graft] val StatePerKeyBytes = 140L
-
-  /** Derived state-partition count (round 16 — the
-    * [[autoStateStoreChoice]] sibling the round-15 verdict asked for,
-    * replacing the hardcoded `statePartitions = Some(4)` at every gate):
-    * size the store count from projected STATE VOLUME, never from core
-    * count.
-    *
-    * Why volume: every micro-batch pays a fixed commit (delta write +
-    * fsync) PER STORE INSTANCE — a stream-stream join runs 4 stores x
-    * partitions, and the commit floor is paid again on the no-data
-    * finalize batch (probed round 15: stateCommit 2.3 s of a 3.8 s
-    * trigger at 8 partitions). Most of that 2.3 s was forked `readlink`
-    * under Spark's default `FileContext`-based checkpoint manager, which
-    * [[runAvailableNow]] now replaces (object scaladoc): at sf0.01 and 4
-    * partitions, `q_stream_join`'s state commit over both batches fell from
-    * ~1.2 s to ~50 ms. The per-store cost that remains still grows with the
-    * store count, and the floor of 4 below is unchanged. So partitions
-    * should be the MINIMUM that keeps per-partition state comfortable, not
-    * the session's batch-shuffle parallelism:
-    *  - volume term: `ceil(keys * StatePerKeyBytes /
-    *    targetBytesPerPartition)` — one store per ~64 MB of projected
-    *    state, the guide-§2.2 "fewer, larger partitions" sizing applied
-    *    to state stores (64 MB per-task state is trivially inside an
-    *    executor's per-task memory share and amortizes its commit).
-    *  - FLOOR [[MinStatePartitions]] = 4: below the volume knee the
-    *    commit floor dominates and fewer is flatly better, but 4 keeps
-    *    the per-batch state work off a single task; A/B'd at sf0.1
-    *    (round 15): 2 ≈ 4 < 8 < 16 on watermark-bounded gate state.
-    *  - CAP [[MaxStatePartitions]] = 32768: bounds the per-batch
-    *    commit-file count and scheduler load; a state that large
-    *    (>2 TB projected) should also be on RocksDB
-    *    ([[autoStateStoreChoice]]) where per-partition state is
-    *    disk-resident.
-    *
-    * `expectedStateKeys` is the caller's estimate of distinct state keys
-    * (same parameter [[runAvailableNow]] feeds to the "auto" backend
-    * choice); an upper bound such as the staged input's row count is fine
-    * — the floor absorbs small-state over-estimates and the volume term
-    * only engages when state is genuinely large.
-    */
-  def derivedStatePartitions(expectedStateKeys: Long,
-      targetBytesPerPartition: Long = TargetStateBytesPerPartition,
-      maxPartitions: Int = MaxStatePartitions): Int = {
-    require(expectedStateKeys >= 0, "expectedStateKeys must be >= 0")
-    require(targetBytesPerPartition > 0, "targetBytesPerPartition must be > 0")
-    require(maxPartitions >= MinStatePartitions,
-      s"maxPartitions must be >= $MinStatePartitions")
-    val fromVolume = math.ceil(
-      expectedStateKeys.toDouble * StatePerKeyBytes / targetBytesPerPartition)
-    math.max(MinStatePartitions.toDouble,
-      math.min(maxPartitions.toDouble, fromVolume)).toInt
-  }
-
-  /** See [[derivedStatePartitions]]. */
   private[graft] val MinStatePartitions = 4
-  private[graft] val MaxStatePartitions = 32768
-  private[graft] val TargetStateBytesPerPartition = 64L << 20
-
-  /** Total row count of a parquet file/directory from its FOOTERS — a
-    * metadata-only read (no Spark job, no data pages), the statistic a
-    * production pipeline takes from its catalog. Used by the streaming
-    * gates as the upper-bound `expectedStateKeys` estimate: dedup state
-    * <= distinct keys <= rows, join buffers <= rows inside the watermark
-    * horizon, window state <= rows.
-    *
-    * A directory is listed recursively, so partitioned (`k=v/`) layouts
-    * count. Names Spark's file index skips are skipped too: a leading `.`,
-    * or a leading `_` without `=` (`_SUCCESS`, `_temporary`). A path that
-    * holds no parquet file fails rather than counting 0, which would floor
-    * the derived state partitions silently.
-    */
-  def parquetRowCount(spark: SparkSession, path: String): Long = {
-    import org.apache.hadoop.fs.Path
-    val hconf = spark.sessionState.newHadoopConf()
-    val p = new Path(path)
-    val fs = p.getFileSystem(hconf)
-    def hidden(name: String) =
-      name.startsWith(".") || (name.startsWith("_") && !name.contains("="))
-    def parquetFiles(dir: Path): Seq[Path] =
-      fs.listStatus(dir).toSeq.filterNot(st => hidden(st.getPath.getName)).flatMap { st =>
-        if (st.isDirectory) parquetFiles(st.getPath)
-        else if (st.getPath.getName.endsWith(".parquet")) Seq(st.getPath)
-        else Nil
-      }
-    val files = if (fs.getFileStatus(p).isDirectory) parquetFiles(p) else Seq(p)
-    if (files.isEmpty)
-      throw new IllegalArgumentException(s"parquetRowCount: no parquet file under $path")
-    files.map { f =>
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, hconf)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try r.getRecordCount finally r.close()
-    }.sum
-  }
 
   /** The Spark schema of a parquet file, or of a directory's first part file
     * in [[stageLanding]]'s order, from its footer read on the driver through
@@ -337,12 +235,7 @@ object FileStreams {
     ParquetSchemaJ.readSchema(Seq(new Footer(p, footer)), spark).get
   }
 
-  /** [[parquetRowCount]] over a driver table (`$sfDir/$table.parquet`). */
-  def tableRowCount(spark: SparkSession, sfDir: String, table: String): Long =
-    parquetRowCount(spark, s"$sfDir/$table.parquet")
-
   private[graft] val ShufflePartitionsConf = "spark.sql.shuffle.partitions"
-  private[graft] val StateStoreProviderConf = "spark.sql.streaming.stateStore.providerClass"
   private[graft] val CheckpointManagerConf = "spark.sql.streaming.checkpointFileManagerClass"
   /** Spark's own manager: renames through `FileSystem`, forking nothing on
     * a local path (see the object scaladoc).
@@ -354,36 +247,13 @@ object FileStreams {
 
   /** Session-conf overrides for one [[runAvailableNow]] drain.
     *
-    * State-store BACKEND: the default HDFS-backed provider holds every
-    * partition's full state map ON-HEAP (disk is only the commit log), so
-    * executor heap must scale with the key universe — fine for the
-    * watermark-bounded gates here, wrong for the 100 TB streaming shape
-    * (dedup/session key universes >> heap). "rocksdb" switches the query
-    * to RocksDBStateStoreProvider: state lives off-heap/on-disk per
-    * partition with a block-cache working set, heap stays O(cache), and
-    * changelog/snapshot files still ride the same checkpoint location.
-    * Like `statePartitions`, the provider is pinned by the FIRST
-    * checkpoint (offset-log metadata) — pass it on the first drain; a
-    * resume under a different provider refuses rather than corrupts.
-    * Resolution: explicit param > session conf `graft.streaming.stateStore`
-    * (lets a pipeline/Verify run flip EVERY streaming query to RocksDB
-    * without threading the knob through each call) > engine default.
-    *
-    * State-partition sizing: a stateful streaming query FREEZES its state
-    * partition count at the first checkpoint (it rides the offset-log
-    * metadata; later conf changes are ignored on resume), and every
-    * micro-batch pays a per-partition state-store commit for EVERY
-    * stateful operator — a stream-stream join commits four stores per
-    * partition per batch. Inheriting the session's batch-oriented
-    * shuffle.partitions therefore sets a permanent per-batch floor that
-    * has nothing to do with state volume. `statePartitions` sizes it
-    * explicitly at query start (state is keyed small-state here:
-    * watermark-bounded windows/joins hold thousands of keys, not rows);
-    * with no explicit count, a caller-supplied `expectedStateKeys`
-    * estimate derives it ([[derivedStatePartitions]] — volume-sized,
-    * floor 4, the same estimate that drives the "auto" backend choice);
-    * None + no estimate keeps the session default. Only meaningful for a
-    * FRESH checkpoint — on resume the checkpointed count wins, by design.
+    * State partitions: [[MinStatePartitions]], whatever the session's batch
+    * shuffle parallelism. The state-store provider is the session's own
+    * `spark.sql.streaming.stateStore.providerClass`, which a drain leaves
+    * alone: RocksDB is chosen by setting that key (`spark.conf.set`, or
+    * `-Dspark.sql.streaming.stateStore.providerClass=…` at JVM start). Both
+    * are recorded in a query's first checkpoint, and a resumed drain keeps
+    * the recorded ones.
     *
     * Checkpoint manager: [[FileSystemCheckpointManager]], unless the
     * session already sets [[CheckpointManagerConf]].
@@ -397,46 +267,16 @@ object FileStreams {
     * concurrently on the same SparkSession during the drain would capture
     * the temporary values and freeze them into its own checkpoint. This
     * helper assumes the session starts one streaming query at a time
-    * (Spark offers no per-query provider option to scope it tighter).
+    * (Spark offers no per-query option for these keys).
     */
-  private[graft] def drainConf(spark: SparkSession,
-      statePartitions: Option[Int] = None,
-      stateStore: Option[String] = None,
-      expectedStateKeys: Long = -1L): Map[String, String] = {
-    val provider = stateStore.orElse(spark.conf.getOption("graft.streaming.stateStore")).map { s =>
-      // "auto" derives the backend from the caller's distinct-state-key
-      // estimate ([[autoStateStoreChoice]]). Without an estimate it keeps
-      // the on-heap provider: every helper here is watermark-BOUNDED
-      // state (thousands of keys), the regime where hdfs wins — but a
-      // pipeline streaming an UNBOUNDED key universe (full-corpus dedup)
-      // must pass `expectedStateKeys`, or the choice that matters most at
-      // 100 TB silently defaults into the provider that OOMs there.
-      val resolved = if (s.equalsIgnoreCase("auto")) {
-        if (expectedStateKeys >= 0) autoStateStoreChoice(expectedStateKeys)
-        else "hdfs"
-      } else s
-      StateStoreProviderConf -> (resolved.toLowerCase match {
-        case "rocksdb" =>
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-        case "hdfs" =>
-          "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
-        case other => throw new IllegalArgumentException(
-          s"stateStore must be 'hdfs', 'rocksdb' or 'auto', got '$other'")
-      })
-    }
-    val partitions = statePartitions.orElse(
-      if (expectedStateKeys >= 0) Some(derivedStatePartitions(expectedStateKeys))
-      else None).map { n =>
-      require(n > 0, s"statePartitions must be positive, got $n")
-      ShufflePartitionsConf -> n.toString
-    }
+  private[graft] def drainConf(spark: SparkSession): Map[String, String] = {
     val manager =
       if (isSet(spark, CheckpointManagerConf)) None
       else Some(CheckpointManagerConf -> FileSystemCheckpointManager)
     val localFs =
       if (isSet(spark, FileImplConf)) Nil
       else Seq(FileImplConf -> classOf[NioLocalFileSystem].getName, FileCacheOffConf -> "true")
-    (provider ++ partitions ++ manager ++ localFs).toMap
+    (Seq(ShufflePartitionsConf -> MinStatePartitions.toString) ++ manager ++ localFs).toMap
   }
 
   /** Whether the session sets `key` itself; a registered key's default does
@@ -471,17 +311,15 @@ object FileStreams {
     * the union of emissions across drains equals the single-drain result
     * (spec-pinned, "two drains" case): a window still open at drain 1's
     * final watermark survives in the restored state store and finalizes
-    * in drain 2 with its full cross-drain count.
+    * in drain 2 with its full cross-drain count. The state setup is
+    * [[drainConf]]'s; a resumed drain keeps the one its checkpoint records.
     */
   def runAvailableNow(stream: DataFrame,
       mode: OutputMode = OutputMode.Append,
       sinkDir: Option[Path] = None,
-      checkpointDir: Option[Path] = None,
-      statePartitions: Option[Int] = None,
-      stateStore: Option[String] = None,
-      expectedStateKeys: Long = -1L): DataFrame = {
+      checkpointDir: Option[Path] = None): DataFrame = {
     val spark = stream.sparkSession
-    val overrides = drainConf(spark, statePartitions, stateStore, expectedStateKeys)
+    val overrides = drainConf(spark)
     // a caller's persistent sink/checkpoint location is theirs, not ours to
     // delete: only directories this call creates go at JVM exit
     val out = sinkDir.getOrElse(createTempDir("graft_sink_"))

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Robustness smoke (not a gate): single-group filter builds at 50M keys —
   * the shape that stresses the ObjectHashAggregate buffer and its
   * sort-based fallback. Run: sbt "runMain graft.tools.BigGroupSmoke [n]"
@@ -9,11 +7,7 @@ import org.apache.spark.sql.SparkSession
 object BigGroupSmoke {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toLong).getOrElse(50_000_000L)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.extensions", "graft.GraftSparkExtensions")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSpark.session(defaultCpus = 32)
     def t(name: String)(q: String): Unit = {
       val t0 = System.nanoTime()
       val row = spark.sql(q).collect()(0)

@@ -3,7 +3,6 @@ package graft.tools
 import java.util.concurrent.atomic.LongAdder
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Constrained-memory scale probe: runs named SparkEntry gates under
   * whatever heap the launching JVM was given (`-Xmx...`) and reports the
@@ -45,17 +44,9 @@ object ConstrainedProbe {
     require(args.length >= 2, "usage: ConstrainedProbe <sfDir> <gate> [gate...]")
     val sfDir = args(0)
     val gates = args.drop(1).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftSparkExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSpark.session(defaultCpus = 8)
     val heapMb = Runtime.getRuntime.maxMemory() / (1024 * 1024)
-    println(s"[constrained] heap=${heapMb}MB cores=$cpus sfDir=$sfDir")
+    println(s"[constrained] heap=${heapMb}MB cores=${spark.sparkContext.defaultParallelism} sfDir=$sfDir")
     val listener = new MetricsListener
     spark.sparkContext.addSparkListener(listener)
     gates.foreach { name =>

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import scala.util.control.NonFatal
 
 /** Ad-hoc per-gate timing probe: runs the named gates (args) against
@@ -14,19 +12,7 @@ object GateProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val passes = sys.env.getOrElse("SPARK_GRAFT_PROBE_PASSES", "3").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftSparkExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // optional streaming state-store backend (hdfs | rocksdb) — same knob
-    // as Verify, for provider A/B timing of the q_stream_* gates
-    sys.env.get("SPARK_GRAFT_STATE_STORE")
-      .foreach(spark.conf.set("graft.streaming.stateStore", _))
+    val spark = graft.LocalSpark.session(defaultCpus = 32)
     val unknown = args.toSeq.filterNot(graft.SparkEntry.queries.contains)
     require(unknown.isEmpty, s"unknown gate(s): ${unknown.mkString(", ")}")
     val gates = args.toSeq

@@ -1,7 +1,7 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
+
 import org.apache.spark.sql.execution.FormattedMode
 
 import graft.SparkEntry
@@ -24,12 +24,7 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     require(args.isEmpty || args.length >= 3,
       "usage: PlanDump | PlanDump <tag> <suffix> <gate ...|ALL>")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      // same optimizer-rule placement as Bench/Verify/production
-      .config("spark.sql.extensions", "graft.GraftSparkExtensions")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSpark.session(defaultCpus = 4)
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     def plan(name: String): String =
       SparkEntry.queries(name)(spark, dir).queryExecution.explainString(FormattedMode)

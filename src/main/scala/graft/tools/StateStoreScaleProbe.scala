@@ -13,10 +13,12 @@ import org.apache.spark.sql.streaming.Trigger
   * ~56 B of UnsafeRow (8 B long key + two 28-B row envelopes) plus
   * ~100 B of HashMap entry/boxing overhead per key puts 50M keys at
   * ~7 GB of resident heap. RocksDB keeps the working state in native
-  * memory + SST files (heap stays O(block cache)), which is why
-  * [[graft.streaming.FileStreams.runAvailableNow]] exposes the provider
-  * knob; the r13 A/B only measured kilobyte state (+14% flat cost), this
-  * probe measures the regime the knob EXISTS for.
+  * memory + SST files (heap stays O(block cache)). A
+  * [[graft.streaming.FileStreams.runAvailableNow]] drain runs under
+  * whichever provider the session names in Spark's own
+  * `spark.sql.streaming.stateStore.providerClass`; the r13 A/B only
+  * measured kilobyte state (+14% flat cost), this probe measures the
+  * regime where RocksDB is the one to name.
   *
   * Usage (run under a deliberately small heap):
   *   SPARK_DRIVER_MEM=2g tools/run_main.sh graft.tools.StateStoreScaleProbe \

@@ -64,6 +64,10 @@ class GraftExtensionsSpec extends AnyFunSuite {
       val dirA = "/root/testdata/sf0.001"
       val dirB = "/root/testdata/sf0.01"
       SparkEntry.prepare(spark, dirA)
+      // the extension already runs both rules: prepare adds neither a
+      // second time as an extra optimization
+      assert(spark.experimental.extraOptimizations.isEmpty,
+        spark.experimental.extraOptimizations.map(_.ruleName).mkString(", "))
       val nA = spark.table("lineitem").count()
       SparkEntry.prepare(spark, dirB)
       val nB = spark.table("lineitem").count()
