@@ -407,9 +407,10 @@ object GraftFunctions {
   /** Idempotent programmatic registration into the session's function registry.
     *
     * A session built with `spark.sql.extensions=graft.GraftSparkExtensions`
-    * already runs both optimizer rules, injected into the
-    * operator-optimization batch, and gets nothing more here. Any other
-    * session gets them through `experimental.extraOptimizations`.
+    * already has every function and runs both optimizer rules, injected into
+    * the operator-optimization batch, and gets nothing more here. Any other
+    * session gets the functions, and the rules through
+    * `experimental.extraOptimizations`.
     *
     * NOTE on plan quality: on an already-built session the extension hook is
     * gone, so FoldSingleRowJoin falls back to `experimental.extraOptimizations`
@@ -423,25 +424,24 @@ object GraftFunctions {
     * engages so the asymmetry is visible.
     */
   def registerAll(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    all.foreach(fn => registry.registerFunction(FunctionIdentifier(fn.name), fn.info, fn.builder))
     val extensionActive = spark.conf.getOption("spark.sql.extensions")
       .exists(_.contains(classOf[GraftSparkExtensions].getName))
-    if (!extensionActive) {
-      // nanos-rebuild pushdown: on this fallback path the rule runs post-
-      // optimization, where filters already sit directly above the scans —
-      // the added plain-column bound is still extracted into PushedFilters
-      // at physical planning (FileSourceStrategy reads the OPTIMIZED plan)
-      val rules = spark.experimental.extraOptimizations
-      val missing = Seq(graft.plans.FoldSingleRowJoin, graft.plans.PushNanosTimestampFilters)
-        .filterNot(rules.contains)
-      if (missing.contains(graft.plans.FoldSingleRowJoin))
-        org.slf4j.LoggerFactory.getLogger(getClass).warn(
-          "graft: FoldSingleRowJoin registered via experimental.extraOptimizations " +
-          "(post-pushdown batch) — rewritten probe filters will not reach the scans. " +
-          "Prefer spark.sql.extensions=graft.GraftSparkExtensions for production plans.")
-      spark.experimental.extraOptimizations = rules ++ missing
-    }
+    if (extensionActive) return
+    val registry = spark.sessionState.functionRegistry
+    all.foreach(fn => registry.registerFunction(FunctionIdentifier(fn.name), fn.info, fn.builder))
+    // nanos-rebuild pushdown: on this fallback path the rule runs post-
+    // optimization, where filters already sit directly above the scans —
+    // the added plain-column bound is still extracted into PushedFilters
+    // at physical planning (FileSourceStrategy reads the OPTIMIZED plan)
+    val rules = spark.experimental.extraOptimizations
+    val missing = Seq(graft.plans.FoldSingleRowJoin, graft.plans.PushNanosTimestampFilters)
+      .filterNot(rules.contains)
+    if (missing.contains(graft.plans.FoldSingleRowJoin))
+      org.slf4j.LoggerFactory.getLogger(getClass).warn(
+        "graft: FoldSingleRowJoin registered via experimental.extraOptimizations " +
+        "(post-pushdown batch) — rewritten probe filters will not reach the scans. " +
+        "Prefer spark.sql.extensions=graft.GraftSparkExtensions for production plans.")
+    spark.experimental.extraOptimizations = rules ++ missing
   }
 }
 
