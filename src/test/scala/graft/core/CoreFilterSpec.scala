@@ -353,6 +353,48 @@ class CoreFilterSpec extends AnyFunSuite {
       "0cfb5d8088bc4d211146c532dab325c720ee690cc3529c56916c5bc81d881887"))
   }
 
+  // --- Golden blob pins (dense families) ----------------------------------
+
+  test("golden blobs: classic bloom, hll, cms and quotient geometries over one seeded key set") {
+    val rnd = new scala.util.Random(15)
+    val keys = Array.fill(600)(rnd.nextLong())
+    def quotient(q: Int, r: Int, n: Int): QuotientFilter = {
+      val f = QuotientFilter.create(q, r)
+      keys.take(n).foreach(f.insert)
+      f
+    }
+    val classic = ClassicBloomFilter.create(keys.length, 0.01)
+    keys.foreach(classic.insert)
+    val hll = HllSketch.create(12)
+    keys.foreach(hll.add)
+    val cms = CountMinSketch.create(4, 10)
+    keys.foreach(k => cms.add(k))
+    val digests = Seq(
+      "classic" -> classic.serialize(),
+      "hll" -> hll.serialize(),
+      "cms" -> cms.serialize(),
+      // 9-bit slots straddle bytes
+      "quotient(10,6)" -> quotient(10, 6, 500).serialize(),
+      // 58-bit slots spill across 64-bit words
+      "quotient(6,55)" -> quotient(6, 55, 40).serialize(),
+      // 59-bit slots at an odd bit offset spill past an 8-byte window
+      "quotient(6,56)" -> quotient(6, 56, 40).serialize(),
+      // 64-bit slots in a full 4-slot table
+      "quotient(2,61)" -> quotient(2, 61, 4).serialize(),
+      // a merge that grows (8,4) into (10,6)
+      "quotient(8,4)+(10,6)" -> quotient(8, 4, 100).merge(quotient(10, 6, 400)).serialize()
+    ).map { case (name, blob) => name -> sha256(blob) }
+    assert(digests == Seq(
+      "classic" -> "39a25691cbfd3f4a1a115d01dd417acabc04683a96b6530cc6c9e50a3cfe2478",
+      "hll" -> "7ea9343e5c5033e3c4541cac4f2dba457fd400149fc2495a887d0de79e78201b",
+      "cms" -> "c0ed21311f9ef09a158e16076114d3091a22e55f532e1515cc855b6bc205db45",
+      "quotient(10,6)" -> "4e925dfbb5fd6d9cbd4b05c4d66751554bdd64b49353f1132b0ea9fd3841614d",
+      "quotient(6,55)" -> "2ded8b8a9ffc5e6e09fb6eafa436cb21410e2a1e7404c848c56f3b80a7a1b607",
+      "quotient(6,56)" -> "aaca1abf18f82db69465d3524c95859e679930e58b3c150d9e1cad36995746ef",
+      "quotient(2,61)" -> "10dfdde13c16a303a88a950972bea635bf0fe45698a20dc8abb2ee7c9d1d8903",
+      "quotient(8,4)+(10,6)" -> "aa73b15aac0df83c4d6e3fdcf42a8a461800e8d7cab4e9b717e01a7b60c9bc65"))
+  }
+
   // --- Error paths --------------------------------------------------------
 
   test("error paths: malformed blobs and impossible builds raise IllegalArgumentException") {
