@@ -1,6 +1,6 @@
 package graft.core
 
-import java.nio.{ByteBuffer, ByteOrder}
+import LittleEndianJ.{getLong, putLong}
 
 /** Classic Bloom filter, completing the reference's (written but disabled)
   * fifth family: `bloomfilter(capacity, fpr, value)` + merge overload +
@@ -12,21 +12,22 @@ import java.nio.{ByteBuffer, ByteOrder}
   *
   * Wire format (little-endian): [u64 capacity_bits][capacity_bits/8 bytes],
   * mirroring the reference's [u64 capacity][array] layout (cpp:148-159).
+  * Bit i is bit i&7 of byte 8 + i/8. The state is the blob itself:
+  * `insert` and `orMerge` change it in place, `serialize` copies it, and
+  * [[ClassicBloomFilter.probeBlob]] is the one membership read.
   */
-final class ClassicBloomFilter(val bits: Long, val words: Array[Long]) {
-  import ClassicBloomFilter._
-
-  @inline private def setBit(i: Long): Unit =
-    words((i >>> 6).toInt) |= 1L << (i & 63)
+final class ClassicBloomFilter private (private val blob: Array[Byte]) {
+  val bits: Long = getLong(blob, 0)
 
   /** Insert a pre-hashed 64-bit key (double hashing, K probes). */
   def insert(keyHash: Long): Unit = {
-    val h1 = Hashing.murmur64(keyHash)
-    val h2 = Hashing.murmur64(keyHash ^ 0x9e3779b97f4a7c15L) | 1L
+    val h2 = ClassicBloomFilter.step(keyHash)
+    var h = Hashing.murmur64(keyHash)
     var i = 0
-    var h = h1
-    while (i < K) {
-      setBit(java.lang.Long.remainderUnsigned(h, bits))
+    while (i < ClassicBloomFilter.K) {
+      val bit = java.lang.Long.remainderUnsigned(h, bits)
+      val at = 8 + (bit >>> 3).toInt
+      blob(at) = (blob(at) | (1 << (bit & 7))).toByte
       h += h2
       i += 1
     }
@@ -35,21 +36,22 @@ final class ClassicBloomFilter(val bits: Long, val words: Array[Long]) {
   def orMerge(other: ClassicBloomFilter): Unit = {
     require(other.bits == bits,
       s"cannot merge bloom filters of different capacities: $bits vs ${other.bits}")
-    var i = 0
-    while (i < words.length) { words(i) |= other.words(i); i += 1 }
+    val o = other.blob
+    var i = 8
+    while (i < blob.length) { putLong(blob, i, getLong(blob, i) | getLong(o, i)); i += 8 }
   }
 
-  def serialize(): Array[Byte] = {
-    val out = ByteBuffer.allocate(8 + words.length * 8).order(ByteOrder.LITTLE_ENDIAN)
-    out.putLong(bits)
-    words.foreach(out.putLong)
-    out.array()
-  }
+  def serialize(): Array[Byte] = blob.clone()
 }
 
 object ClassicBloomFilter {
   /** Fixed probe count, like the reference's boost::bloom::filter<T, 5>. */
   final val K = 5
+  private final val Family = "classic bloom filter"
+
+  /** The double-hashing stride: odd, so the K probes differ. */
+  @inline private def step(keyHash: Long): Long =
+    Hashing.murmur64(keyHash ^ 0x9e3779b97f4a7c15L) | 1L
 
   /** Bit capacity for `n` expected items at false-positive rate `fpr`:
     * m = -n ln(fpr) / ln(2)^2, rounded up to a whole 64-bit word.
@@ -64,34 +66,37 @@ object ClassicBloomFilter {
 
   def create(n: Long, fpr: Double): ClassicBloomFilter = {
     val bits = capacityFor(n, fpr)
-    require(bits / 64 <= Int.MaxValue - 8, s"bloom filter too large: $bits bits")
-    new ClassicBloomFilter(bits, new Array[Long]((bits / 64).toInt))
+    require(bits / 8 <= Int.MaxValue - 16, s"bloom filter too large: $bits bits")
+    val blob = new Array[Byte](8 + (bits / 8).toInt)
+    putLong(blob, 0, bits)
+    new ClassicBloomFilter(blob)
+  }
+
+  /** Refuse a blob whose capacity is not a positive multiple of 64 bits or
+    * whose length is not 8 + capacity_bits/8.
+    */
+  @inline private def check(blob: Array[Byte]): Unit = {
+    BlobSize.checkHeader(Family, blob, 8)
+    val bits = getLong(blob, 0)
+    if (bits <= 0 || (bits & 63) != 0) BlobSize.invalid(Family, s"capacity_bits=$bits")
+    BlobSize.check(Family, blob, 8 + (bits >>> 3))
   }
 
   def deserialize(blob: Array[Byte]): ClassicBloomFilter = {
-    if (blob.length < 8)
-      throw new IllegalArgumentException("Bloom filter data is too short to contain capacity")
-    val bb = ByteBuffer.wrap(blob).order(ByteOrder.LITTLE_ENDIAN)
-    val bits = bb.getLong
-    if (bits <= 0 || bits % 64 != 0 || blob.length < 8 + bits / 8)
-      throw new IllegalArgumentException(s"Bloom filter blob invalid for $bits bits")
-    val words = new Array[Long]((bits / 64).toInt)
-    var i = 0
-    while (i < words.length) { words(i) = bb.getLong; i += 1 }
-    new ClassicBloomFilter(bits, words)
+    check(blob)
+    new ClassicBloomFilter(blob.clone())
   }
 
-  /** Zero-copy probe against a serialized blob. */
+  /** The membership probe, zero-copy against a serialized blob. */
   def probeBlob(blob: Array[Byte], keyHash: Long): Boolean = {
-    val bb = ByteBuffer.wrap(blob).order(ByteOrder.LITTLE_ENDIAN)
-    val bits = bb.getLong(0)
-    val h1 = Hashing.murmur64(keyHash)
-    val h2 = Hashing.murmur64(keyHash ^ 0x9e3779b97f4a7c15L) | 1L
+    check(blob)
+    val bits = getLong(blob, 0)
+    val h2 = step(keyHash)
+    var h = Hashing.murmur64(keyHash)
     var i = 0
-    var h = h1
     while (i < K) {
       val bit = java.lang.Long.remainderUnsigned(h, bits)
-      if ((bb.getLong(8 + ((bit >>> 6) * 8).toInt) & (1L << (bit & 63))) == 0) return false
+      if ((blob(8 + (bit >>> 3).toInt) & (1 << (bit & 7))) == 0) return false
       h += h2
       i += 1
     }

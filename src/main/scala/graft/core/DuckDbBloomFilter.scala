@@ -1,6 +1,6 @@
 package graft.core
 
-import java.nio.{ByteBuffer, ByteOrder}
+import LittleEndianJ.{getLong, putLong}
 
 /** DuckDB-compatible cache-sectorized bloom filter.
   *
@@ -12,41 +12,35 @@ import java.nio.{ByteBuffer, ByteOrder}
   *  - wire format (little-endian): [u64 num_sectors][u64 * num_sectors]
   *    (cpp:509-516)
   *
-  * Keys are pre-hashed u64 values (produce them with [[DuckDbHash]]).
+  * The state is the blob itself: `insert` and `orMerge` change its sectors
+  * in place, `serialize` copies it, and [[DuckDbBloomFilter.probeBlob]] is
+  * the one membership read. Keys are pre-hashed u64 values (produce them
+  * with [[DuckDbHash]]).
   */
-final class DuckDbBloomFilter(val sectors: Array[Long]) {
-  require(sectors.length > 0 && (sectors.length & (sectors.length - 1)) == 0,
-    s"num_sectors must be a power of 2, got ${sectors.length}")
+final class DuckDbBloomFilter private (private val blob: Array[Byte]) {
 
   @inline def insert(hash: Long): Unit = {
-    val idx = (hash & (sectors.length - 1)).toInt
-    sectors(idx) |= DuckDbBloomFilter.getMask(hash)
+    val off = DuckDbBloomFilter.sectorOffset(blob, hash)
+    putLong(blob, off, getLong(blob, off) | DuckDbBloomFilter.getMask(hash))
   }
 
-  @inline def mightContain(hash: Long): Boolean = {
-    val idx = (hash & (sectors.length - 1)).toInt
-    val mask = DuckDbBloomFilter.getMask(hash)
-    (sectors(idx) & mask) == mask
-  }
+  def mightContain(hash: Long): Boolean = DuckDbBloomFilter.probeBlob(blob, hash)
 
   /** In-place bitwise-OR merge; both sides must have equal sector counts. */
   def orMerge(other: DuckDbBloomFilter): Unit = {
-    require(other.sectors.length == sectors.length,
-      s"cannot merge bloom filters with different num_sectors: ${sectors.length} vs ${other.sectors.length}")
-    var i = 0
-    while (i < sectors.length) { sectors(i) |= other.sectors(i); i += 1 }
+    val o = other.blob
+    require(o.length == blob.length,
+      s"cannot merge bloom filters with different num_sectors: ${blob.length / 8 - 1} vs ${o.length / 8 - 1}")
+    var i = 8
+    while (i < blob.length) { putLong(blob, i, getLong(blob, i) | getLong(o, i)); i += 8 }
   }
 
-  def serialize(): Array[Byte] = {
-    val out = ByteBuffer.allocate(8 * (sectors.length + 1)).order(ByteOrder.LITTLE_ENDIAN)
-    out.putLong(sectors.length.toLong)
-    var i = 0
-    while (i < sectors.length) { out.putLong(sectors(i)); i += 1 }
-    out.array()
-  }
+  def serialize(): Array[Byte] = blob.clone()
 }
 
 object DuckDbBloomFilter {
+  private final val Family = "duckdb bloom filter"
+  private final val MaxSectors = 1L << 28
 
   /** 4-bit mask from hash bytes 4-7, each byte mod 64 selecting a bit position;
     * reference cpp:252-260.
@@ -62,34 +56,37 @@ object DuckDbBloomFilter {
     mask
   }
 
+  /** Byte offset of `hash`'s sector: sector h & (n-1) after the u64 header. */
+  @inline private def sectorOffset(blob: Array[Byte], hash: Long): Int =
+    8 + ((hash & ((blob.length >>> 3) - 2)).toInt << 3)
+
   def create(numSectors: Int): DuckDbBloomFilter = {
     require(numSectors > 0 && (numSectors & (numSectors - 1)) == 0,
       s"num_sectors must be a power of 2, got $numSectors")
-    new DuckDbBloomFilter(new Array[Long](numSectors))
+    val blob = new Array[Byte](8 * (numSectors + 1))
+    putLong(blob, 0, numSectors.toLong)
+    new DuckDbBloomFilter(blob)
+  }
+
+  /** Refuse a blob whose num_sectors is not a power of two or whose length
+    * is not 8·(num_sectors+1).
+    */
+  @inline private def check(blob: Array[Byte]): Unit = {
+    BlobSize.checkHeader(Family, blob, 8)
+    val n = getLong(blob, 0)
+    if (n <= 0 || n > MaxSectors || (n & (n - 1)) != 0) BlobSize.invalid(Family, s"num_sectors=$n")
+    BlobSize.check(Family, blob, 8 * (n + 1))
   }
 
   def deserialize(blob: Array[Byte]): DuckDbBloomFilter = {
-    val bb = ByteBuffer.wrap(blob).order(ByteOrder.LITTLE_ENDIAN)
-    if (blob.length < 8) throw new IllegalArgumentException("bloom filter blob too short")
-    val n = bb.getLong
-    if (n <= 0 || (n & (n - 1)) != 0 || n > (1L << 28))
-      throw new IllegalArgumentException(s"num_sectors must be a power of 2 (and sane), got $n")
-    if (blob.length < 8 * (n + 1))
-      throw new IllegalArgumentException(s"bloom filter blob too short for $n sectors")
-    val sectors = new Array[Long](n.toInt)
-    var i = 0
-    while (i < sectors.length) { sectors(i) = bb.getLong; i += 1 }
-    new DuckDbBloomFilter(sectors)
+    check(blob)
+    new DuckDbBloomFilter(blob.clone())
   }
 
-  /** Zero-copy probe directly against a serialized blob (avoids materializing
-    * the sector array per row when the filter column is not constant).
-    */
+  /** The membership probe, zero-copy against a serialized blob. */
   def probeBlob(blob: Array[Byte], hash: Long): Boolean = {
-    val bb = ByteBuffer.wrap(blob).order(ByteOrder.LITTLE_ENDIAN)
-    val n = bb.getLong(0)
-    val idx = (hash & (n - 1)).toInt
+    check(blob)
     val mask = getMask(hash)
-    (bb.getLong(8 + idx * 8) & mask) == mask
+    (getLong(blob, sectorOffset(blob, hash)) & mask) == mask
   }
 }

@@ -1,7 +1,5 @@
 package graft.core
 
-import java.nio.{ByteBuffer, ByteOrder}
-
 /** Quotient filter (Bender et al. style, 3 metadata bits per slot).
   *
   * Behaviour and wire format replicated from the reference's vendor
@@ -20,70 +18,27 @@ import java.nio.{ByteBuffer, ByteOrder}
   *    NOTE the reference ignores insert() overflow during merge (cpp:399,403),
   *    silently dropping keys; we replicate that for bit-compatibility.
   *
-  * Only the lowest q+r bits of a hash participate.
+  * Only the lowest q+r bits of a hash participate. The state is the blob
+  * itself: `insert` and merge change its slots in place, `serialize` writes
+  * the u32 `entries` and copies it, and [[QuotientFilter.probeBlob]] is the
+  * one membership read.
   */
-final class QuotientFilter private (
-    val qbits: Int,
-    val rbits: Int,
-    private var _entries: Long,
-    val table: Array[Long]) {
+final class QuotientFilter private (private val blob: Array[Byte], private var _entries: Long) {
 
   import QuotientFilter._
 
+  val qbits: Int = blob(0) & 0xff
+  val rbits: Int = blob(1) & 0xff
   private val elemBits: Int = rbits + 3
   private val indexMask: Long = lowMask(qbits)
   private val rMask: Long = lowMask(rbits)
-  private val elemMask: Long = lowMask(elemBits)
   val maxSize: Long = 1L << qbits
 
   def entries: Long = _entries
 
-  /** Read slot idx (low `elemBits` bits); reference quotient_filter.cpp:60-73. */
-  @inline private[core] def getElem(idx: Long): Long = {
-    val bitpos = elemBits * idx
-    val tabpos = (bitpos >>> 6).toInt
-    val slotpos = (bitpos & 63).toInt
-    val spill = slotpos + elemBits - 64
-    var elt = (table(tabpos) >>> slotpos) & elemMask
-    if (spill > 0) {
-      val x = table(tabpos + 1) & lowMask(spill)
-      elt |= x << (elemBits - spill)
-    }
-    elt
-  }
-
-  /** Write slot idx; reference quotient_filter.cpp:76-89. */
-  @inline private def setElem(idx: Long, elt0: Long): Unit = {
-    val bitpos = elemBits * idx
-    val tabpos = (bitpos >>> 6).toInt
-    val slotpos = (bitpos & 63).toInt
-    val spill = slotpos + elemBits - 64
-    val elt = elt0 & elemMask
-    table(tabpos) &= ~(elemMask << slotpos)
-    table(tabpos) |= elt << slotpos
-    if (spill > 0) {
-      table(tabpos + 1) &= ~lowMask(spill)
-      table(tabpos + 1) |= elt >>> (elemBits - spill)
-    }
-  }
+  @inline private[core] def slot(idx: Long): Long = readSlot(blob, elemBits, idx)
 
   @inline private def incr(idx: Long): Long = (idx + 1) & indexMask
-  @inline private def decr(idx: Long): Long = (idx - 1) & indexMask
-
-  @inline private def hashToQuotient(hash: Long): Long = (hash >>> rbits) & indexMask
-  @inline private def hashToRemainder(hash: Long): Long = hash & rMask
-
-  /** Find start of the run for quotient fq; reference cpp:160-179. */
-  private def findRunIndex(fq: Long): Long = {
-    var b = fq
-    while (isShifted(getElem(b))) b = decr(b)
-    var s = b
-    while (b != fq) {
-      do s = incr(s) while (isContinuation(getElem(s)))
-      do b = incr(b) while (!isOccupied(getElem(b)))
-    }
-    s
-  }
 
   /** Insert elt at s, shifting the cluster right; reference cpp:182-202. */
   private def insertInto(s0: Long, elt: Long): Unit = {
@@ -91,7 +46,7 @@ final class QuotientFilter private (
     var curr = elt
     var empty = false
     do {
-      var prev = getElem(s)
+      var prev = slot(s)
       empty = isEmptyElement(prev)
       if (!empty) {
         prev = setShifted(prev)
@@ -100,7 +55,7 @@ final class QuotientFilter private (
           prev = clrOccupied(prev)
         }
       }
-      setElem(s, curr)
+      writeSlot(blob, elemBits, s, curr)
       curr = prev
       s = incr(s)
     } while (!empty)
@@ -109,39 +64,35 @@ final class QuotientFilter private (
   /** Returns false iff the filter is full; reference cpp:204-258. */
   def insert(hash: Long): Boolean = {
     if (_entries >= maxSize) return false
-    val fq = hashToQuotient(hash)
-    val fr = hashToRemainder(hash)
-    val tFq = getElem(fq)
+    val fq = (hash >>> rbits) & indexMask
+    val fr = hash & rMask
+    val tFq = slot(fq)
     var entry = (fr << 3) & ~7L
 
     if (isEmptyElement(tFq)) {
-      setElem(fq, setOccupied(entry))
+      writeSlot(blob, elemBits, fq, setOccupied(entry))
       _entries += 1
       return true
     }
 
-    if (!isOccupied(tFq)) setElem(fq, setOccupied(tFq))
+    if (!isOccupied(tFq)) writeSlot(blob, elemBits, fq, setOccupied(tFq))
 
-    val start = findRunIndex(fq)
+    val start = runStart(blob, elemBits, indexMask, fq)
     var s = start
 
     if (isOccupied(tFq)) {
       var continue = true
       while (continue) {
-        val rem = getRemainder(getElem(s))
+        val rem = getRemainder(slot(s))
         if (rem == fr) return true // duplicate
         else if (java.lang.Long.compareUnsigned(rem, fr) > 0) continue = false
         else {
           s = incr(s)
-          if (!isContinuation(getElem(s))) continue = false
+          if (!isContinuation(slot(s))) continue = false
         }
       }
-      if (s == start) {
-        val oldHead = getElem(start)
-        setElem(start, setContinuation(oldHead))
-      } else {
-        entry = setContinuation(entry)
-      }
+      if (s == start) writeSlot(blob, elemBits, start, setContinuation(slot(start)))
+      else entry = setContinuation(entry)
     }
 
     if (s != fq) entry = setShifted(entry)
@@ -152,21 +103,7 @@ final class QuotientFilter private (
   }
 
   /** No false negatives for inserted (q+r)-bit values; reference cpp:260-282. */
-  def mayContain(hash: Long): Boolean = {
-    val fq = hashToQuotient(hash)
-    val fr = hashToRemainder(hash)
-    if (!isOccupied(getElem(fq))) return false
-    var s = findRunIndex(fq)
-    var continue = true
-    while (continue) {
-      val rem = getRemainder(getElem(s))
-      if (rem == fr) return true
-      else if (java.lang.Long.compareUnsigned(rem, fr) > 0) return false
-      s = incr(s)
-      continue = isContinuation(getElem(s))
-    }
-    false
-  }
+  def mayContain(hash: Long): Boolean = probeBlob(blob, hash)
 
   /** Union-merge; reference cpp:388-406 (including its drop-on-overflow
     * quirk: insert() failures during merge are ignored, silently dropping
@@ -219,26 +156,12 @@ final class QuotientFilter private (
           s"is full at $entries entries; the reference (and strict=false) would " +
           "silently drop this key")
 
-  /** Wire format: 40-byte header + table bytes; reference hpp:91-98. */
+  /** Wire format: 40-byte header + table bytes; reference hpp:91-98. The
+    * state already is this blob but for its u32 `entries`.
+    */
   def serialize(): Array[Byte] = {
-    val tableBytes = QuotientFilter.tableSizeBytes(qbits, rbits)
-    val out = ByteBuffer.allocate(40 + tableBytes).order(ByteOrder.LITTLE_ENDIAN)
-    out.put(qbits.toByte)
-    out.put(rbits.toByte)
-    out.put(elemBits.toByte)
-    out.put(0.toByte) // struct alignment padding
-    out.putInt(_entries.toInt) // u32 entries
-    out.putLong(indexMask)
-    out.putLong(rMask)
-    out.putLong(elemMask)
-    out.putLong(maxSize)
-    // table payload: first `tableBytes` bytes of the little-endian u64 array
-    var i = 0
-    while (i < tableBytes) {
-      out.put(((table(i >>> 3) >>> ((i & 7) * 8)) & 0xff).toByte)
-      i += 1
-    }
-    out.array()
+    LittleEndianJ.putLong(blob, 0, (LittleEndianJ.getLong(blob, 0) & 0xffffffffL) | (_entries << 32))
+    blob.clone()
   }
 }
 
@@ -289,90 +212,109 @@ object QuotientFilter {
     require(q > 0, "Quotient filter q must be > 0")
     require(r > 0, "Quotient filter r must be > 0")
     require(q + r <= 64, "Quotient filter q + r must be <= 64")
+    require(r <= 61, s"Quotient filter r=$r leaves no 64-bit slot for r + 3 bits")
     require(q <= 28, s"Quotient filter q=$q too large for in-memory table")
-    val bits = (1L << q) * (r + 3)
-    val words = ((bits + 63) / 64).toInt
-    new QuotientFilter(q, r, 0L, new Array[Long](words))
+    val blob = new Array[Byte](Header + tableSizeBytes(q, r))
+    blob(0) = q.toByte
+    blob(1) = r.toByte
+    blob(2) = (r + 3).toByte // blob(3) is the C struct's alignment padding
+    LittleEndianJ.putLong(blob, 8, lowMask(q))
+    LittleEndianJ.putLong(blob, 16, lowMask(r))
+    LittleEndianJ.putLong(blob, 24, lowMask(r + 3))
+    LittleEndianJ.putLong(blob, 32, 1L << q)
+    new QuotientFilter(blob, 0L)
   }
 
-  /** Zero-copy membership probe directly against a serialized blob: reads
-    * packed (r+3)-bit slots straight out of the blob bytes, allocating
-    * nothing. Semantics identical to [[QuotientFilter.mayContain]]
-    * (reference quotient_filter.cpp:260-282) — this is the hot path for the
-    * `quotient_filter_contains` SQL expression where the filter column is not
-    * constant and a per-row table materialization would dominate.
+  private final val Header = 40
+  private final val Family = "quotient filter"
+
+  /** Slot `idx` of the packed (r+3)-bit table: one little-endian 8-byte
+    * window at the slot's first byte, moved back to the blob's last 8 bytes
+    * near the end of the table (a slot there lies wholly inside them). A
+    * slot wider than 57 bits can end past the window; it then also reads
+    * the next byte.
     */
-  def probeBlob(blob: Array[Byte], hash: Long): Boolean = {
-    val r = blob(1) & 0xff
-    val q = blob(0) & 0xff
-    val elemBits = r + 3
-    val indexMask = lowMask(q)
-    val rMask = lowMask(r)
-    val elemMask = lowMask(elemBits)
+  @inline private[core] def readSlot(blob: Array[Byte], elemBits: Int, idx: Long): Long = {
+    val bitpos = elemBits * idx
+    val at = Header + (bitpos >>> 3).toInt
+    val win = math.min(at, blob.length - 8)
+    val shift = (bitpos & 7).toInt + ((at - win) << 3)
+    val elemMask = -1L >>> (64 - elemBits)
+    val elt = (LittleEndianJ.getLong(blob, win) >>> shift) & elemMask
+    if (shift + elemBits <= 64) elt
+    else elt | ((blob(win + 8) & 0xffL) << (64 - shift)) & elemMask
+  }
 
-    // read the element at slot idx from the packed table starting at byte 40
-    def elem(idx: Long): Long = {
-      val bitpos = elemBits * idx
-      val bytePos = 40 + (bitpos >>> 3).toInt
-      val shift = (bitpos & 7).toInt
-      // gather up to (shift + elemBits) <= 71 bits, little-endian
-      var lo = 0L
-      var i = 0
-      val end = math.min(8, blob.length - bytePos)
-      while (i < end) { lo |= (blob(bytePos + i) & 0xffL) << (8 * i); i += 1 }
-      var elt = (lo >>> shift) & elemMask
-      val got = 64 - shift
-      if (got < elemBits && bytePos + 8 < blob.length) {
-        val hi = blob(bytePos + 8) & 0xffL
-        elt |= (hi << got) & elemMask
-      }
-      elt
+  /** Write slot `idx` through the same window as [[readSlot]]. */
+  @inline private def writeSlot(blob: Array[Byte], elemBits: Int, idx: Long, elt0: Long): Unit = {
+    val bitpos = elemBits * idx
+    val at = Header + (bitpos >>> 3).toInt
+    val win = math.min(at, blob.length - 8)
+    val shift = (bitpos & 7).toInt + ((at - win) << 3)
+    val elemMask = -1L >>> (64 - elemBits)
+    val elt = elt0 & elemMask
+    val word = LittleEndianJ.getLong(blob, win)
+    LittleEndianJ.putLong(blob, win, (word & ~(elemMask << shift)) | (elt << shift))
+    if (shift + elemBits > 64) {
+      val spill = (1 << (shift + elemBits - 64)) - 1
+      blob(win + 8) = ((blob(win + 8) & ~spill) | ((elt >>> (64 - shift)).toInt & spill)).toByte
     }
+  }
 
-    def incr(i: Long): Long = (i + 1) & indexMask
-    def decr(i: Long): Long = (i - 1) & indexMask
-
-    val fq = (hash >>> r) & indexMask
-    val fr = hash & rMask
-    if (!isOccupied(elem(fq))) return false
-
-    // find run start
+  /** First slot of the run of quotient `fq`; reference cpp:160-179. */
+  private def runStart(blob: Array[Byte], elemBits: Int, indexMask: Long, fq: Long): Long = {
     var b = fq
-    while (isShifted(elem(b))) b = decr(b)
+    while (isShifted(readSlot(blob, elemBits, b))) b = (b - 1) & indexMask
     var s = b
     while (b != fq) {
-      do s = incr(s) while (isContinuation(elem(s)))
-      do b = incr(b) while (!isOccupied(elem(b)))
+      do s = (s + 1) & indexMask while (isContinuation(readSlot(blob, elemBits, s)))
+      do b = (b + 1) & indexMask while (!isOccupied(readSlot(blob, elemBits, b)))
     }
+    s
+  }
+
+  /** Refuse a blob whose (q, r) no filter can have or whose length is not
+    * 40 + ceil(2^q (r+3) / 8). No blob reaches 2^31 bytes, so q <= 31.
+    */
+  @inline private def check(blob: Array[Byte]): Unit = {
+    BlobSize.checkHeader(Family, blob, Header)
+    val q = blob(0) & 0xff
+    val r = blob(1) & 0xff
+    if (q < 1 || q > 31 || r < 1 || r > 61 || q + r > 64) BlobSize.invalid(Family, s"q=$q, r=$r")
+    BlobSize.check(Family, blob, Header + ((((r + 3).toLong << q) + 7) >>> 3))
+  }
+
+  /** The membership probe, zero-copy against a serialized blob; reference
+    * quotient_filter.cpp:260-282. The hot path of `quotient_filter_contains`.
+    */
+  def probeBlob(blob: Array[Byte], hash: Long): Boolean = {
+    check(blob)
+    val q = blob(0) & 0xff
+    val r = blob(1) & 0xff
+    val elemBits = r + 3
+    val indexMask = lowMask(q)
+    val fq = (hash >>> r) & indexMask
+    val fr = hash & lowMask(r)
+    if (!isOccupied(readSlot(blob, elemBits, fq))) return false
+    var s = runStart(blob, elemBits, indexMask, fq)
     // scan the sorted run
-    var continue = true
-    while (continue) {
-      val rem = getRemainder(elem(s))
+    while (true) {
+      val rem = getRemainder(readSlot(blob, elemBits, s))
       if (rem == fr) return true
       else if (java.lang.Long.compareUnsigned(rem, fr) > 0) return false
-      s = incr(s)
-      continue = isContinuation(elem(s))
+      s = (s + 1) & indexMask
+      if (!isContinuation(readSlot(blob, elemBits, s))) return false
     }
     false
   }
 
+  /** A filter over a copy of `blob`'s table, with the header `create` writes. */
   def deserialize(blob: Array[Byte]): QuotientFilter = {
-    if (blob.length < 40)
-      throw new IllegalArgumentException("Data size is too small to contain QuotientFilter header")
-    val bb = ByteBuffer.wrap(blob).order(ByteOrder.LITTLE_ENDIAN)
-    val q = bb.get(0) & 0xff
-    val r = bb.get(1) & 0xff
-    val entries = bb.getInt(4).toLong & 0xffffffffL
-    val tableBytes = tableSizeBytes(q, r)
-    if (blob.length < 40 + tableBytes)
-      throw new IllegalArgumentException("Data size is too small to contain QuotientFilter table")
-    val words = new Array[Long]((tableBytes + 7) / 8)
-    var i = 0
-    while (i < tableBytes) {
-      words(i >>> 3) |= (blob(40 + i) & 0xffL) << ((i & 7) * 8)
-      i += 1
-    }
-    new QuotientFilter(q, r, entries, words)
+    check(blob)
+    val f = create(blob(0) & 0xff, blob(1) & 0xff)
+    System.arraycopy(blob, Header, f.blob, Header, blob.length - Header)
+    f._entries = LittleEndianJ.getLong(blob, 0) >>> 32 // u32 entries at byte 4
+    f
   }
 }
 
@@ -391,7 +333,7 @@ final class QuotientFilterIterator(qf: QuotientFilter) {
     var start = 0L
     var found = false
     while (start < qf.maxSize && !found) {
-      if (isClusterStart(qf.getElem(start))) found = true else start += 1
+      if (isClusterStart(qf.slot(start))) found = true else start += 1
     }
     visited = 0
     index = start
@@ -403,11 +345,11 @@ final class QuotientFilterIterator(qf: QuotientFilter) {
 
   def next(): Long = {
     while (!done) {
-      val elt = qf.getElem(index)
+      val elt = qf.slot(index)
       if (isClusterStart(elt)) quotient = index
       else if (isRunStart(elt)) {
         var quot = quotient
-        do quot = incr(quot) while (!isOccupied(qf.getElem(quot)))
+        do quot = incr(quot) while (!isOccupied(qf.slot(quot)))
         quotient = quot
       }
       index = incr(index)

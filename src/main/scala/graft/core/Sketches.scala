@@ -28,56 +28,31 @@ import java.nio.{ByteBuffer, ByteOrder}
 object HllSketch {
   val MinP = 4
   val MaxP = 18
+  private final val Family = "hll sketch"
 
   def create(p: Int): HllSketch = {
     require(p >= MinP && p <= MaxP, s"hll_sketch p must be in [$MinP, $MaxP], got $p")
-    new HllSketch(p, new Array[Byte](1 << p))
+    val blob = new Array[Byte](1 + (1 << p))
+    blob(0) = p.toByte
+    new HllSketch(blob)
   }
 
-  /** Static probe target for codegen (see the registration expressions). */
-  def estimateBlob(bytes: Array[Byte]): Double = deserialize(bytes).estimate
+  /** Refuse a blob whose p is out of range or whose length is not 1+2^p. */
+  private def check(bytes: Array[Byte]): Unit = {
+    BlobSize.checkHeader(Family, bytes, 1)
+    val p = bytes(0) & 0xff
+    if (p < MinP || p > MaxP) BlobSize.invalid(Family, s"p=$p")
+    BlobSize.check(Family, bytes, 1 + (1 << p))
+  }
 
   /** Blob: [u8 p][u8 register × 2^p], little-endian (single-byte fields). */
   def deserialize(bytes: Array[Byte]): HllSketch = {
-    require(bytes.length >= 1, "hll blob is empty")
-    val p = bytes(0) & 0xff
-    require(p >= MinP && p <= MaxP, s"hll blob has invalid p=$p")
-    require(bytes.length == 1 + (1 << p),
-      s"hll blob length ${bytes.length} != ${1 + (1 << p)} for p=$p")
-    new HllSketch(p, java.util.Arrays.copyOfRange(bytes, 1, bytes.length))
-  }
-}
-
-final class HllSketch(val p: Int, val registers: Array[Byte]) {
-  def m: Int = 1 << p
-
-  /** rho = leading-zero count of the low (64-p) bits + 1; a zero remainder
-    * saturates at 64-p+1 (all observable bits zero).
-    */
-  def add(hash: Long): Unit = {
-    val bucket = (hash >>> (64 - p)).toInt
-    val rem = hash & ((1L << (64 - p)) - 1)
-    val q = 64 - p
-    val rho = if (rem == 0L) q + 1 else q - (64 - java.lang.Long.numberOfLeadingZeros(rem)) + 1
-    if (rho > (registers(bucket) & 0xff)) registers(bucket) = rho.toByte
+    check(bytes)
+    new HllSketch(bytes.clone())
   }
 
-  def mergeMax(o: HllSketch): Unit = {
-    require(o.p == p, s"cannot merge hll sketches with p=$p and p=${o.p}")
-    var i = 0
-    while (i < registers.length) {
-      if ((o.registers(i) & 0xff) > (registers(i) & 0xff)) registers(i) = o.registers(i)
-      i += 1
-    }
-  }
-
-  def zeros: Int = {
-    var z = 0; var i = 0
-    while (i < registers.length) { if (registers(i) == 0) z += 1; i += 1 }
-    z
-  }
-
-  /** Flajolet HLL estimate with linear-counting small-range correction.
+  /** Flajolet HLL estimate with linear-counting small-range correction,
+    * read straight off the blob's registers.
     *
     * The harmonic sum is computed as an EXACT integer numerator
     * num = sum_j 2^(64-p+1-M_j) (BigInt; each term a power of two, exponent
@@ -85,34 +60,59 @@ final class HllSketch(val p: Int, val registers: Array[Byte]) {
     * of summation order and bit-identical to any engine that forms the same
     * integer and divides in the same expression order.
     */
-  def estimate: Double = {
+  def estimateBlob(bytes: Array[Byte]): Double = {
+    check(bytes)
+    val p = bytes(0) & 0xff
     val q1 = 64 - p + 1
     // histogram the (<= 64 distinct) register values first, then form the
     // numerator from at most 64 BigInt terms — identical integer (same sum,
     // associativity-free), ~100x cheaper than a BigInt op per register
     val hist = new Array[Int](q1 + 1)
-    var i = 0
-    while (i < registers.length) { hist(registers(i) & 0xff) += 1; i += 1 }
+    var i = 1
+    while (i < bytes.length) { hist(bytes(i) & 0xff) += 1; i += 1 }
     var num = BigInt(0)
     var r = 0
     while (r <= q1) {
       if (hist(r) > 0) num += BigInt(hist(r)) << (q1 - r)
       r += 1
     }
-    val md = m.toDouble
+    val md = (1 << p).toDouble
     val alpha = 0.7213 / (1.0 + 1.079 / md)
     val pow2q1 = java.lang.Math.scalb(1.0, q1)
     val raw = alpha * md * md * pow2q1 / num.doubleValue
-    val z = zeros
+    val z = hist(0)
     if (raw <= 2.5 * md && z > 0) md * math.log(md / z.toDouble) else raw
   }
+}
 
-  def serialize(): Array[Byte] = {
-    val out = new Array[Byte](1 + registers.length)
-    out(0) = p.toByte
-    System.arraycopy(registers, 0, out, 1, registers.length)
-    out
+/** The state is the blob itself, [u8 p][u8 register × 2^p]: `add` and
+  * `mergeMax` change its registers in place, `serialize` copies it, and
+  * [[HllSketch.estimateBlob]] is the one estimate read.
+  */
+final class HllSketch private (private val blob: Array[Byte]) {
+  val p: Int = blob(0) & 0xff
+
+  /** rho = leading-zero count of the low (64-p) bits + 1; a zero remainder
+    * saturates at 64-p+1 (all observable bits zero).
+    */
+  def add(hash: Long): Unit = {
+    val at = 1 + (hash >>> (64 - p)).toInt
+    val rem = hash & ((1L << (64 - p)) - 1)
+    val q = 64 - p
+    val rho = if (rem == 0L) q + 1 else q - (64 - java.lang.Long.numberOfLeadingZeros(rem)) + 1
+    if (rho > (blob(at) & 0xff)) blob(at) = rho.toByte
   }
+
+  def mergeMax(o: HllSketch): Unit = {
+    require(o.p == p, s"cannot merge hll sketches with p=$p and p=${o.p}")
+    var i = 1
+    while (i < blob.length) {
+      if ((o.blob(i) & 0xff) > (blob(i) & 0xff)) blob(i) = o.blob(i)
+      i += 1
+    }
+  }
+
+  def serialize(): Array[Byte] = blob.clone()
 }
 
 object CountMinSketch {
@@ -134,32 +134,50 @@ object CountMinSketch {
   val MaxDepth: Int = RowSeeds.length
   val MinLog2W = 4
   val MaxLog2W = 24
+  private final val Family = "cms sketch"
 
   def create(depth: Int, log2w: Int): CountMinSketch = {
     require(depth >= 1 && depth <= MaxDepth, s"cms_sketch depth must be in [1, $MaxDepth], got $depth")
     require(log2w >= MinLog2W && log2w <= MaxLog2W,
       s"cms_sketch log2_width must be in [$MinLog2W, $MaxLog2W], got $log2w")
-    new CountMinSketch(depth, log2w, new Array[Long](depth << log2w))
+    val blob = new Array[Byte](2 + 8 * (depth << log2w))
+    blob(0) = depth.toByte
+    blob(1) = log2w.toByte
+    new CountMinSketch(blob)
   }
 
-  /** Zero-copy point estimate straight off the serialized blob — the
-    * per-row probe path (`cms_estimate` over a scanned column) must not
-    * materialize depth·2^log2w counters per row.
+  /** Byte offset of `keyHash`'s counter in row `row`: the row's
+    * `DuckDbHash.hashLong(key ^ RowSeeds(row))` modulo the 2^log2w width.
     */
-  def probeBlob(bytes: Array[Byte], keyHash: Long): Long = {
+  @inline private def counterOffset(row: Int, log2w: Int, keyHash: Long): Int = {
+    val g = DuckDbHash.hashLong(keyHash ^ RowSeeds(row))
+    2 + 8 * ((row << log2w) + (g & ((1 << log2w) - 1)).toInt)
+  }
+
+  /** Refuse a blob whose depth or log2_width is out of range or whose
+    * length is not 2 + 8·depth·2^log2w.
+    */
+  private def check(bytes: Array[Byte]): Unit = {
+    BlobSize.checkHeader(Family, bytes, 2)
     val depth = bytes(0) & 0xff
     val log2w = bytes(1) & 0xff
-    val wMask = (1 << log2w) - 1
+    if (depth < 1 || depth > MaxDepth) BlobSize.invalid(Family, s"depth=$depth")
+    if (log2w < MinLog2W || log2w > MaxLog2W) BlobSize.invalid(Family, s"log2_width=$log2w")
+    BlobSize.check(Family, bytes, 2 + 8L * (depth << log2w))
+  }
+
+  /** Point-frequency upper bound, min over the depth rows, zero-copy off
+    * the serialized blob — the per-row probe path (`cms_estimate` over a
+    * scanned column) must not materialize depth·2^log2w counters per row.
+    */
+  def probeBlob(bytes: Array[Byte], keyHash: Long): Long = {
+    check(bytes)
+    val depth = bytes(0) & 0xff
+    val log2w = bytes(1) & 0xff
     var best = Long.MaxValue
     var r = 0
     while (r < depth) {
-      val g = DuckDbHash.hashLong(keyHash ^ RowSeeds(r))
-      val cell = (r << log2w) + (g & wMask).toInt
-      val off = 2 + 8 * cell
-      // little-endian long read
-      var c = 0L
-      var b = 7
-      while (b >= 0) { c = (c << 8) | (bytes(off + b) & 0xffL); b -= 1 }
+      val c = LittleEndianJ.getLong(bytes, counterOffset(r, log2w, keyHash))
       if (c < best) best = c
       r += 1
     }
@@ -168,49 +186,39 @@ object CountMinSketch {
 
   /** Blob: [u8 depth][u8 log2w][u64 × depth·2^log2w counters], LE. */
   def deserialize(bytes: Array[Byte]): CountMinSketch = {
-    require(bytes.length >= 2, "cms blob is too short")
-    val depth = bytes(0) & 0xff
-    val log2w = bytes(1) & 0xff
-    require(depth >= 1 && depth <= MaxDepth, s"cms blob has invalid depth=$depth")
-    require(log2w >= MinLog2W && log2w <= MaxLog2W, s"cms blob has invalid log2_width=$log2w")
-    val n = depth << log2w
-    require(bytes.length == 2 + 8 * n, s"cms blob length ${bytes.length} != ${2 + 8 * n}")
-    val counters = new Array[Long](n)
-    ByteBuffer.wrap(bytes, 2, 8 * n).order(ByteOrder.LITTLE_ENDIAN).asLongBuffer().get(counters)
-    new CountMinSketch(depth, log2w, counters)
+    check(bytes)
+    new CountMinSketch(bytes.clone())
   }
 }
 
-final class CountMinSketch(val depth: Int, val log2w: Int, val counters: Array[Long]) {
-  def width: Int = 1 << log2w
+/** The state is the blob itself, [u8 depth][u8 log2w][u64 counters]: `add`
+  * and `addMerge` change its counters in place, `serialize` copies it, and
+  * [[CountMinSketch.probeBlob]] is the one estimate read.
+  */
+final class CountMinSketch private (private val blob: Array[Byte]) {
+  import LittleEndianJ.{getLong, putLong}
 
-  @inline private def cellOf(row: Int, keyHash: Long): Int = {
-    val g = DuckDbHash.hashLong(keyHash ^ CountMinSketch.RowSeeds(row))
-    (row << log2w) + (g & (width - 1)).toInt // unsigned mod: width is 2^log2w
-  }
+  val depth: Int = blob(0) & 0xff
+  val log2w: Int = blob(1) & 0xff
+  def width: Int = 1 << log2w
 
   def add(keyHash: Long, inc: Long = 1L): Unit = {
     var r = 0
-    while (r < depth) { counters(cellOf(r, keyHash)) += inc; r += 1 }
-  }
-
-  /** Point-frequency upper bound: min over the depth rows. */
-  def estimate(keyHash: Long): Long = {
-    var best = Long.MaxValue
-    var r = 0
     while (r < depth) {
-      val c = counters(cellOf(r, keyHash))
-      if (c < best) best = c
+      val off = CountMinSketch.counterOffset(r, log2w, keyHash)
+      putLong(blob, off, getLong(blob, off) + inc)
       r += 1
     }
-    best
   }
 
-  def addMerge(o: CountMinSketch): Unit = {
+  private def requireShape(o: CountMinSketch, what: String): Unit =
     require(o.depth == depth && o.log2w == log2w,
-      s"cannot merge cms sketches with (depth=$depth,log2w=$log2w) and (depth=${o.depth},log2w=${o.log2w})")
-    var i = 0
-    while (i < counters.length) { counters(i) += o.counters(i); i += 1 }
+      s"cannot $what cms sketches with (depth=$depth,log2w=$log2w) and (depth=${o.depth},log2w=${o.log2w})")
+
+  def addMerge(o: CountMinSketch): Unit = {
+    requireShape(o, "merge")
+    var i = 2
+    while (i < blob.length) { putLong(blob, i, getLong(blob, i) + getLong(o.blob, i)); i += 8 }
   }
 
   /** Equi-join size upper bound (AMS/CM inner product): min over the depth
@@ -221,19 +229,18 @@ final class CountMinSketch(val depth: Int, val log2w: Int, val counters: Array[L
     * saturates cleanly instead of wrapping).
     */
   def innerProduct(o: CountMinSketch): Long = {
-    require(o.depth == depth && o.log2w == log2w,
-      s"cannot inner-product cms sketches with (depth=$depth,log2w=$log2w) and (depth=${o.depth},log2w=${o.log2w})")
+    requireShape(o, "inner-product")
     var best = Long.MaxValue
     var r = 0
     while (r < depth) {
       var s = 0L
       var saturated = false
-      var i = r << log2w
-      val end = (r + 1) << log2w
+      var i = 2 + 8 * (r << log2w)
+      val end = 2 + 8 * ((r + 1) << log2w)
       while (i < end && !saturated) {
-        try s = Math.addExact(s, Math.multiplyExact(counters(i), o.counters(i)))
+        try s = Math.addExact(s, Math.multiplyExact(getLong(blob, i), getLong(o.blob, i)))
         catch { case _: ArithmeticException => saturated = true }
-        i += 1
+        i += 8
       }
       if (!saturated && s < best) best = s
       r += 1
@@ -241,14 +248,7 @@ final class CountMinSketch(val depth: Int, val log2w: Int, val counters: Array[L
     best
   }
 
-  def serialize(): Array[Byte] = {
-    val out = new Array[Byte](2 + 8 * counters.length)
-    out(0) = depth.toByte
-    out(1) = log2w.toByte
-    ByteBuffer.wrap(out, 2, 8 * counters.length).order(ByteOrder.LITTLE_ENDIAN)
-      .asLongBuffer().put(counters)
-    out
-  }
+  def serialize(): Array[Byte] = blob.clone()
 }
 
 object KmvSketch {

@@ -263,11 +263,9 @@ case class HllRegisters(child: Expression) extends UnaryExpression
       TypeCheckResult.TypeCheckFailure(s"hll_registers argument must be BINARY, got ${child.dataType.sql}")
     else TypeCheckResult.TypeCheckSuccess
   override def nullSafeEval(blob: Any): Any = {
-    val sk = HllSketch.deserialize(blob.asInstanceOf[Array[Byte]])
-    val out = new Array[Int](sk.registers.length)
-    var i = 0
-    while (i < out.length) { out(i) = sk.registers(i) & 0xff; i += 1 }
-    new GenericArrayData(out)
+    // the serialized state is [u8 p][u8 register × 2^p]
+    val bytes = HllSketch.deserialize(blob.asInstanceOf[Array[Byte]]).serialize()
+    new GenericArrayData(Array.tabulate(bytes.length - 1)(i => bytes(i + 1) & 0xff))
   }
   override protected def withNewChildInternal(c: Expression): HllRegisters = copy(child = c)
 }

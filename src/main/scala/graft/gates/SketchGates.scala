@@ -64,7 +64,7 @@ object SketchGates {
     // (bucket = top-12 bits, rho = 53 - bitlength(low 52 bits); bin()
     // gives exact integer bit length — no float log2), absent buckets
     // are zeros. The estimate
-    // mirrors HllSketch.estimate operation for operation: exact integer
+    // mirrors HllSketch.estimateBlob operation for operation: exact integer
     // harmonic numerator summed as HUGEINT, one rounding at CAST AS DOUBLE,
     // same multiply/divide order, same linear-counting branch.
     Gate("q_hll", """

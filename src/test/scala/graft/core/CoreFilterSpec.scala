@@ -397,6 +397,40 @@ class CoreFilterSpec extends AnyFunSuite {
 
   // --- Error paths --------------------------------------------------------
 
+  test("wrong-size blobs of the five dense families raise the named size error, never an index error") {
+    val keys = (1L to 200L).map(DuckDbHash.hashLong)
+    val quotient = QuotientFilter.create(10, 6); keys.foreach(quotient.insert)
+    val bloom = DuckDbBloomFilter.create(64); keys.foreach(bloom.insert)
+    val classic = ClassicBloomFilter.create(200, 0.01); keys.foreach(classic.insert)
+    val hll = HllSketch.create(8); keys.foreach(hll.add)
+    val cms = CountMinSketch.create(2, 6); keys.foreach(k => cms.add(k))
+    val h = keys.head
+    // (family, blob, header bytes, every reader of the blob)
+    val families: Seq[(String, Array[Byte], Int, Seq[Array[Byte] => Any])] = Seq(
+      ("quotient filter", quotient.serialize(), 40,
+        Seq(QuotientFilter.probeBlob(_, h), QuotientFilter.deserialize)),
+      ("duckdb bloom filter", bloom.serialize(), 8,
+        Seq(DuckDbBloomFilter.probeBlob(_, h), DuckDbBloomFilter.deserialize)),
+      ("classic bloom filter", classic.serialize(), 8,
+        Seq(ClassicBloomFilter.probeBlob(_, h), ClassicBloomFilter.deserialize)),
+      ("hll sketch", hll.serialize(), 1, Seq(HllSketch.estimateBlob, HllSketch.deserialize)),
+      ("cms sketch", cms.serialize(), 2,
+        Seq(CountMinSketch.probeBlob(_, h), CountMinSketch.deserialize)))
+    for ((family, blob, header, readers) <- families) {
+      readers.foreach(read => read(blob))
+      val wrong = Seq(
+        "header only" -> blob.take(header),
+        "half" -> blob.take(header + (blob.length - header) / 2),
+        "one byte short" -> blob.dropRight(1),
+        "one byte extra" -> (blob :+ 0.toByte))
+      for ((what, bad) <- wrong; read <- readers) {
+        val e = intercept[IllegalArgumentException](read(bad))
+        assert(e.getMessage == s"$family blob: expected ${blob.length} bytes, got ${bad.length} bytes",
+          s"$family, $what")
+      }
+    }
+  }
+
   test("error paths: malformed blobs and impossible builds raise IllegalArgumentException") {
     intercept[IllegalArgumentException](QuotientFilter.deserialize(Array[Byte](1, 2, 3)))
     intercept[IllegalArgumentException](DuckDbBloomFilter.deserialize(Array.fill[Byte](40)(7)))

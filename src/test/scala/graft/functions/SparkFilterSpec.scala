@@ -409,6 +409,33 @@ class SparkFilterSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(one == blobs(32))
   }
 
+  test("quotient_filter_contains over a truncated scalar-subquery blob fails with the size error from generated code") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{BinaryType, StructField, StructType}
+    val blob = spark.sql(
+      "SELECT quotient_filter(10, 6, bitfilters_duckdb_hash('v1.5.1', id)) FROM range(0, 500)")
+      .head().getAs[Array[Byte]](0)
+    val cut = blob.dropRight(1)
+    // an RDD-backed view, so the subquery stays a subquery
+    spark.createDataFrame(spark.sparkContext.parallelize(Seq(Row(cut)), 1),
+      StructType(Seq(StructField("f", BinaryType)))).createOrReplaceTempView("qf_cut")
+    spark.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
+    try {
+      val q = spark.sql("""
+        SELECT count_if(quotient_filter_contains((SELECT f FROM qf_cut),
+                                                 bitfilters_duckdb_hash('v1.5.1', id)))
+        FROM range(0, 100)""")
+      assert(q.queryExecution.executedPlan.toString.contains("Subquery"))
+      val ex = intercept[Exception](q.collect())
+      val chain = Iterator.iterate(ex: Throwable)(_.getCause).takeWhile(_ != null).toSeq
+      val expected = s"quotient filter blob: expected ${blob.length} bytes, got ${cut.length} bytes"
+      val sized = chain.collectFirst { case e: IllegalArgumentException if e.getMessage == expected => e }
+      assert(sized.isDefined, chain.map(t => String.valueOf(t.getMessage)).mkString(" | "))
+      assert(sized.get.getStackTrace.exists(_.getClassName.contains("GeneratedClass")),
+        "the size error did not come out of generated code")
+    } finally spark.conf.unset("spark.sql.codegen.factoryMode")
+  }
+
   test("probes: codegen and interpreted paths agree on once-per-task and per-row blobs") {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.{BinaryType, LongType, StructField, StructType}

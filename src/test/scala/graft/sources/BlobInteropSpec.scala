@@ -93,6 +93,15 @@ class BlobInteropSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(members.forall(graft.core.DuckDbBloomFilter.probeBlob(pyBloom, _)))
     val pyQuotient = Files.readAllBytes(dir.resolve("pyquotient.blob"))
     assert(members.forall(graft.core.QuotientFilter.probeBlob(pyQuotient, _)))
+    // both readers refuse a blob one byte short, with the same message
+    for ((fam, probe) <- Seq[(String, (Array[Byte], Long) => Boolean)](
+        "quotient" -> graft.core.QuotientFilter.probeBlob,
+        "bloom" -> graft.core.DuckDbBloomFilter.probeBlob)) {
+      val short = Files.readAllBytes(dir.resolve(s"$fam.blob")).dropRight(1)
+      val e = intercept[IllegalArgumentException](probe(short, members.head))
+      assert(out.toString.contains(s"$fam-short: rejected=True"), s"python $fam reader took a short blob")
+      assert(out.toString.contains(s"$fam-short: ${e.getMessage}"), e.getMessage)
+    }
     val pyFuse8 = Files.readAllBytes(dir.resolve("pyfuse8.blob"))
     assert(members.forall(graft.core.BinaryFuseFilter.probeBlob(8, pyFuse8, _)))
     val pyXor8 = Files.readAllBytes(dir.resolve("pyxor8.blob"))

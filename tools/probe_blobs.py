@@ -28,6 +28,10 @@ order. This is the full-strength interop proof: any divergence in
 sizing, seed schedule, peel semantics, bit packing, or serialization
 between the two implementations fails the compare.
 
+The quotient and bloom readers check the blob length against its
+BASELINE.md formula first and refuse a wrong-size blob with the JVM
+readers' message; a blob one byte short must be refused by both.
+
 Exit 0 iff everything passes; prints one summary line per family.
 """
 import json
@@ -97,8 +101,18 @@ def probe_fuse(blob, key, bits):
     return (f ^ g) & fp_mask == 0
 
 
+def check_size(family, blob, expected):
+    """The size check every reader shares with the JVM side: a blob whose
+    length is not its layout's formula (BASELINE.md) is refused."""
+    if len(blob) != expected:
+        raise ValueError(f"{family} blob: expected {expected} bytes, got {len(blob)} bytes")
+
+
 def probe_quotient(blob, h):
+    if len(blob) < 40:
+        raise ValueError(f"quotient filter blob: expected at least 40 bytes, got {len(blob)} bytes")
     q, r = blob[0], blob[1]
+    check_size("quotient filter", blob, 40 + ((1 << q) * (r + 3) + 7) // 8)
     elem_bits = r + 3
     index_mask = (1 << q) - 1
     r_mask = (1 << r) - 1
@@ -148,7 +162,10 @@ def bloom_mask(h):
 
 
 def probe_bloom(blob, h):
+    if len(blob) < 8:
+        raise ValueError(f"duckdb bloom filter blob: expected at least 8 bytes, got {len(blob)} bytes")
     n = struct.unpack_from("<Q", blob, 0)[0]
+    check_size("duckdb bloom filter", blob, 8 * (n + 1))
     mask = bloom_mask(h)
     sector = struct.unpack_from("<Q", blob, 8 + 8 * (h & (n - 1)))[0]
     return sector & mask == mask
@@ -645,6 +662,19 @@ def main(d):
               f"{'OK' if ok else 'FAIL'}")
         if not ok:
             failures.append(fam)
+
+    # both size-checked readers refuse a blob one byte short
+    for fam in ("quotient", "bloom"):
+        blob = open(os.path.join(d, fam + ".blob"), "rb").read()
+        try:
+            probes[fam](blob[:-1], members[0])
+            rejected = False
+        except ValueError as e:
+            rejected = True
+            print(f"{fam}-short: {e}")
+        print(f"{fam}-short: rejected={rejected}")
+        if not rejected:
+            failures.append(fam + "-short")
 
     # reverse direction: build every family independently and byte-compare.
     # Geometry parameters are read back out of the Spark blobs' own headers
