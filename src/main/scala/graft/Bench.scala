@@ -259,6 +259,6 @@ object Bench {
     // min-of-2 vs min-of-3 artifacts are not directly comparable
     println(jsonLine(results, iters))
     System.out.flush()
-    spark.stop()
+    LocalSpark.stop(spark)
   }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.streaming.state.StateStore
 
 /** The local session graft's mains run in: `local[n]` with n from
   * `SPARK_GRAFT_CPUS`, else the program's own default; one shuffle
@@ -21,5 +22,16 @@ object LocalSpark {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
+  }
+
+  /** The end of every main: stop the state stores, then the session.
+    * Otherwise the state-store maintenance thread can run after
+    * `spark.stop()` ("SparkEnv not active, cannot do maintenance"), and
+    * RocksDB providers close after Spark has deleted their working
+    * directories ("Unable to close MANIFEST").
+    */
+  def stop(spark: SparkSession): Unit = {
+    StateStore.stop()
+    spark.stop()
   }
 }

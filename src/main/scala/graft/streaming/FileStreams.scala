@@ -466,22 +466,8 @@ object FileStreams {
     */
   def streamIntervalJoin(events: DataFrame, tsCol: String, typeCol: String,
       keyCol: String, leftType: String, rightType: String, windowUs: Long,
-      watermark: String = "1 hour"): DataFrame = {
-    val l = events.where(col(typeCol) === leftType)
-      .select(col(keyCol).as("__k"), col(tsCol).as("__lts"))
-      .withWatermark("__lts", watermark)
-    val r = events.where(col(typeCol) === rightType)
-      .select(col(keyCol).as("__rk"), col(tsCol).as("__rts"))
-      .withWatermark("__rts", watermark)
-    // the range must be expressed as event-time bounds on the timestamp
-    // columns themselves so Spark derives the join-state eviction horizon
-    l.join(r, col("__k") === col("__rk") &&
-        expr(s"__rts >= __lts AND __rts <= __lts + INTERVAL $windowUs MICROSECOND"))
-      .select(col("__k").as(keyCol),
-        unix_micros(col("__lts")).as("l_us"),
-        unix_micros(col("__rts")).as("r_us"),
-        (unix_micros(col("__rts")) - unix_micros(col("__lts"))).as("dt_us"))
-  }
+      watermark: String = "1 hour"): DataFrame =
+    intervalJoin(events, tsCol, typeCol, keyCol, leftType, rightType, windowUs, watermark, "inner")
 
   /** LEFT-OUTER variant of [[streamIntervalJoin]]: every left-type event
     * emits — matched pairs as they meet, and a NULL-extended row for a
@@ -507,16 +493,24 @@ object FileStreams {
     */
   def streamIntervalJoinOuter(events: DataFrame, tsCol: String, typeCol: String,
       keyCol: String, leftType: String, rightType: String, windowUs: Long,
-      watermark: String = "1 hour"): DataFrame = {
+      watermark: String = "1 hour"): DataFrame =
+    intervalJoin(events, tsCol, typeCol, keyCol, leftType, rightType, windowUs, watermark,
+      "left_outer")
+
+  /** The one body of both interval joins, which differ only in `joinType`. */
+  private def intervalJoin(events: DataFrame, tsCol: String, typeCol: String,
+      keyCol: String, leftType: String, rightType: String, windowUs: Long,
+      watermark: String, joinType: String): DataFrame = {
     val l = events.where(col(typeCol) === leftType)
       .select(col(keyCol).as("__k"), col(tsCol).as("__lts"))
       .withWatermark("__lts", watermark)
     val r = events.where(col(typeCol) === rightType)
       .select(col(keyCol).as("__rk"), col(tsCol).as("__rts"))
       .withWatermark("__rts", watermark)
+    // the range must be expressed as event-time bounds on the timestamp
+    // columns themselves so Spark derives the join-state eviction horizon
     l.join(r, col("__k") === col("__rk") &&
-        expr(s"__rts >= __lts AND __rts <= __lts + INTERVAL $windowUs MICROSECOND"),
-        "left_outer")
+        expr(s"__rts >= __lts AND __rts <= __lts + INTERVAL $windowUs MICROSECOND"), joinType)
       .select(col("__k").as(keyCol),
         unix_micros(col("__lts")).as("l_us"),
         unix_micros(col("__rts")).as("r_us"),

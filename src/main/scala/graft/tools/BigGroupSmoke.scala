@@ -47,6 +47,6 @@ object BigGroupSmoke {
                    bitfilters_duckdb_bloom_filter_create('v1.5.1', 4096,
                      bitfilters_duckdb_hash('v1.5.1', id)) AS f
             FROM range(${n / 2} + 1000000) GROUP BY 1)""")
-    spark.stop()
+    graft.LocalSpark.stop(spark)
   }
 }

@@ -68,6 +68,6 @@ object ConstrainedProbe {
         f"spill_mem=${mem / 1e6}%.0fMB spill_disk=${disk / 1e6}%.0fMB " +
         f"shuffle_write=${shuf / 1e6}%.0fMB peak_exec_mem=${peak / 1e6}%.0fMB gc=${gc / 1e3}%.1fs")
     }
-    spark.stop()
+    graft.LocalSpark.stop(spark)
   }
 }

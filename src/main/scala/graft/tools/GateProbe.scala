@@ -48,6 +48,6 @@ object GateProbe {
       if (ts.isEmpty) println(f"[probe] $g%-24s FAILED every pass")
       else println(f"[probe] $g%-24s min=${ts.min}%.3f avg=${ts.sum / ts.size}%.3f passes=${ts.size}")
     }
-    spark.stop()
+    graft.LocalSpark.stop(spark)
   }
 }

@@ -317,6 +317,6 @@ object GenScale {
     }
     if (want("embeddings")) write(embN, "embeddings")
 
-    spark.stop()
+    graft.LocalSpark.stop(spark)
   }
 }

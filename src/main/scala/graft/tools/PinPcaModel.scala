@@ -41,6 +41,6 @@ object PinPcaModel {
     }
     println("-- eigenvalues --")
     println(model.eigenvalues.mkString(", "))
-    spark.stop()
+    graft.LocalSpark.stop(spark)
   }
 }

@@ -30,7 +30,7 @@ object PlanDump {
       SparkEntry.queries(name)(spark, dir).queryExecution.explainString(FormattedMode)
     if (args.isEmpty) writeReview(plan)
     else writeTagged(args(0), args(1), args.drop(2).toSeq, plan)
-    spark.stop()
+    graft.LocalSpark.stop(spark)
   }
 
   private def writeTagged(tag: String, suffix: String, gates: Seq[String],

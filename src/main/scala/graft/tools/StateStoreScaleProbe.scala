@@ -77,6 +77,6 @@ object StateStoreScaleProbe {
     val heapMb = (rt.totalMemory() - rt.freeMemory()) / (1024 * 1024)
     println(f"[ssprobe] RESULT provider=$provider keys=$numKeys wall=$wall%.1f s " +
       f"usedHeapMB=$heapMb maxHeapMB=${rt.maxMemory() / (1024 * 1024)}")
-    spark.stop()
+    graft.LocalSpark.stop(spark)
   }
 }

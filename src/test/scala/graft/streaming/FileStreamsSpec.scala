@@ -31,7 +31,8 @@ class FileStreamsSpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
   }
 
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  // the state stores stop before the session (see LocalSpark.stop)
+  override def afterAll(): Unit = if (spark != null) graft.LocalSpark.stop(spark)
 
   private def batchEvents(): DataFrame =
     FileStreams.normalizeTimestamps(
