@@ -24,7 +24,10 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     require(args.isEmpty || args.length >= 3,
       "usage: PlanDump | PlanDump <tag> <suffix> <gate ...|ALL>")
-    val spark = graft.LocalSpark.session(defaultCpus = 4)
+    // A broadcast stage's runtime size is its hash relation's memory pages,
+    // and Spark derives the default page size from the heap: fixed here, the
+    // dump reads the same under any -Xmx or launcher.
+    val spark = graft.LocalSpark.session(defaultCpus = 4, "spark.buffer.pageSize" -> "32m")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     def plan(name: String): String =
       SparkEntry.queries(name)(spark, dir).queryExecution.explainString(FormattedMode)
