@@ -11,8 +11,7 @@ import org.apache.spark.sql.execution.streaming.state.StateStore
   * batch, so rewritten probe filters reach the scans.
   */
 object LocalSpark {
-  /** `conf` adds Spark settings of the calling program's own. */
-  def session(defaultCpus: Int, conf: (String, String)*): SparkSession = {
+  def session(defaultCpus: Int): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus.toString)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -20,7 +19,6 @@ object LocalSpark {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.extensions", classOf[GraftSparkExtensions].getName)
-      .config(conf.toMap)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

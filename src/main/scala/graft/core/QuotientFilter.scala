@@ -37,6 +37,7 @@ final class QuotientFilter private (private val blob: Array[Byte], private var _
   def entries: Long = _entries
 
   @inline private[core] def slot(idx: Long): Long = readSlot(blob, elemBits, idx)
+  @inline private def setSlot(idx: Long, elt: Long): Unit = writeSlot(blob, elemBits, idx, elt)
 
   @inline private def incr(idx: Long): Long = (idx + 1) & indexMask
 
@@ -55,7 +56,7 @@ final class QuotientFilter private (private val blob: Array[Byte], private var _
           prev = clrOccupied(prev)
         }
       }
-      writeSlot(blob, elemBits, s, curr)
+      setSlot(s, curr)
       curr = prev
       s = incr(s)
     } while (!empty)
@@ -70,12 +71,12 @@ final class QuotientFilter private (private val blob: Array[Byte], private var _
     var entry = (fr << 3) & ~7L
 
     if (isEmptyElement(tFq)) {
-      writeSlot(blob, elemBits, fq, setOccupied(entry))
+      setSlot(fq, setOccupied(entry))
       _entries += 1
       return true
     }
 
-    if (!isOccupied(tFq)) writeSlot(blob, elemBits, fq, setOccupied(tFq))
+    if (!isOccupied(tFq)) setSlot(fq, setOccupied(tFq))
 
     val start = runStart(blob, elemBits, indexMask, fq)
     var s = start
@@ -91,7 +92,7 @@ final class QuotientFilter private (private val blob: Array[Byte], private var _
           if (!isContinuation(slot(s))) continue = false
         }
       }
-      if (s == start) writeSlot(blob, elemBits, start, setContinuation(slot(start)))
+      if (s == start) setSlot(start, setContinuation(slot(start)))
       else entry = setContinuation(entry)
     }
 

@@ -25,9 +25,11 @@ object PlanDump {
     require(args.isEmpty || args.length >= 3,
       "usage: PlanDump | PlanDump <tag> <suffix> <gate ...|ALL>")
     // A broadcast stage's runtime size is its hash relation's memory pages,
-    // and Spark derives the default page size from the heap: fixed here, the
-    // dump reads the same under any -Xmx or launcher.
-    val spark = graft.LocalSpark.session(defaultCpus = 4, "spark.buffer.pageSize" -> "32m")
+    // and Spark derives the default page size from the heap: fixed here (the
+    // session's SparkConf reads spark.* system properties), the dump reads
+    // the same under any -Xmx or launcher.
+    sys.props("spark.buffer.pageSize") = "32m"
+    val spark = graft.LocalSpark.session(defaultCpus = 4)
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     def plan(name: String): String =
       SparkEntry.queries(name)(spark, dir).queryExecution.explainString(FormattedMode)
