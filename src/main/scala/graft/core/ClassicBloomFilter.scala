@@ -27,7 +27,7 @@ final class ClassicBloomFilter private (private val blob: Array[Byte]) {
     while (i < ClassicBloomFilter.K) {
       val bit = java.lang.Long.remainderUnsigned(h, bits)
       val at = 8 + (bit >>> 3).toInt
-      blob(at) = (blob(at) | (1 << (bit & 7))).toByte
+      blob(at) = (blob(at) | (1 << (bit & 7).toInt)).toByte
       h += h2
       i += 1
     }
@@ -96,7 +96,7 @@ object ClassicBloomFilter {
     var i = 0
     while (i < K) {
       val bit = java.lang.Long.remainderUnsigned(h, bits)
-      if ((blob(8 + (bit >>> 3).toInt) & (1 << (bit & 7))) == 0) return false
+      if ((blob(8 + (bit >>> 3).toInt) & (1 << (bit & 7).toInt)) == 0) return false
       h += h2
       i += 1
     }
