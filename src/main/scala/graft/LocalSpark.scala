@@ -25,10 +25,10 @@ object LocalSpark {
   }
 
   /** The end of every main: stop the state stores, then the session.
-    * Otherwise the state-store maintenance thread can run after
-    * `spark.stop()` ("SparkEnv not active, cannot do maintenance"), and
-    * RocksDB providers close after Spark has deleted their working
-    * directories ("Unable to close MANIFEST").
+    * `StateStore.stop()` ends the state-store maintenance thread and
+    * closes every loaded provider while SparkEnv is still up; left running,
+    * the thread can fire after `spark.stop()` and log "SparkEnv not
+    * active, cannot do maintenance".
     */
   def stop(spark: SparkSession): Unit = {
     StateStore.stop()
