@@ -57,6 +57,7 @@ case class BroadcastBlob(bc: org.apache.spark.broadcast.Broadcast[Array[Byte]])
 
   override def eval(input: InternalRow): Any = bytes
 
+  // Hand-written: generated code reads this expression's once-per-executor bytes by reference.
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val ref = ctx.addReferenceObj("graftBcastBlob", this, classOf[BroadcastBlob].getName)
     ev.copy(
@@ -108,6 +109,7 @@ case class BroadcastBlobMap(
     if (k == null) null else lookup(k.asInstanceOf[UTF8String])
   }
 
+  // Hand-written: generated code looks up in this expression's broadcast map by reference.
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val ref = ctx.addReferenceObj("graftBcastBlobMap", this, classOf[BroadcastBlobMap].getName)
     nullSafeCodeGen(ctx, ev, k =>
@@ -247,6 +249,7 @@ abstract class FilterContainsExpression extends BinaryExpression with OncePerTas
     probe(blob, hashOf(h))
   }
 
+  // Hand-written: a row-independent blob is evaluated once per task into a generated field.
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val call = (f: String, h: String) => probeCall(f, hashCall(h))
     if (rowIndependentBlob) genKeyedProbe(ctx, ev, right, "graftConstBlob", "probe")(call)
@@ -405,6 +408,7 @@ case class DuckDbHashExpr(children: Seq[Expression]) extends Expression {
     h
   }
 
+  // Hand-written: one unrolled hash-combine step per argument of the variadic call.
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val hVar = ctx.freshName("ddbHash")
     val nullVar = ctx.freshName("ddbAnyNull")
@@ -474,6 +478,7 @@ case class DuckDbBloomFilterProbe(children: Seq[Expression]) extends Expression 
     DuckDbBloomFilter.probeBlob(blob, h)
   }
 
+  // Hand-written: the once-per-task blob plus one unrolled hash step per variadic argument.
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val blobCode = genBlob(ctx, "graftConstBlob")
     val hVar = ctx.freshName("ddbHash")

@@ -83,6 +83,7 @@ case class ZOrderKey(children: Seq[Expression]) extends Expression {
     z
   }
 
+  // Hand-written: one constant-bound interleave loop per argument of the variadic call.
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val nd = dims.size
     val z = ctx.freshName("z")

@@ -2,9 +2,10 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, RuntimeReplaceable, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 
@@ -235,17 +236,14 @@ case class KmvSketchAgg(
 }
 
 /** SQL: `hll_estimate(blob)` → DOUBLE distinct-count estimate. */
-case class HllEstimate(child: Expression) extends UnaryExpression {
+case class HllEstimate(child: Expression) extends UnaryExpression with RuntimeReplaceable {
   override def prettyName: String = "hll_estimate"
-  override def dataType: DataType = DoubleType
   override def checkInputDataTypes(): TypeCheckResult =
     if (child.dataType != BinaryType)
       TypeCheckResult.TypeCheckFailure(s"hll_estimate argument must be BINARY, got ${child.dataType.sql}")
     else TypeCheckResult.TypeCheckSuccess
-  override def nullSafeEval(blob: Any): Any =
-    HllSketch.estimateBlob(blob.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.core.HllSketch.estimateBlob($c)")
+  override lazy val replacement: Expression =
+    StaticInvoke(HllSketch.getClass, DoubleType, "estimateBlob", Seq(child), returnNullable = false)
   override protected def withNewChildInternal(c: Expression): HllEstimate = copy(child = c)
 }
 
@@ -298,6 +296,7 @@ case class CmsEstimate(left: Expression, right: Expression) extends BinaryExpres
     CountMinSketch.probeBlob(blob, h.asInstanceOf[Long])
   }
 
+  // Hand-written: a row-independent sketch is evaluated once per task into a generated field.
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val call = (f: String, h: String) => s"graft.core.CountMinSketch.probeBlob($f, $h)"
     if (rowIndependentBlob) genKeyedProbe(ctx, ev, right, "graftCmsBlob", "cms")(call)
@@ -311,17 +310,14 @@ case class CmsEstimate(left: Expression, right: Expression) extends BinaryExpres
 /** SQL: `kmv_estimate(blob)` → DOUBLE distinct-count estimate (exact when
   * fewer than k distinct hashes were seen).
   */
-case class KmvEstimate(child: Expression) extends UnaryExpression {
+case class KmvEstimate(child: Expression) extends UnaryExpression with RuntimeReplaceable {
   override def prettyName: String = "kmv_estimate"
-  override def dataType: DataType = DoubleType
   override def checkInputDataTypes(): TypeCheckResult =
     if (child.dataType != BinaryType)
       TypeCheckResult.TypeCheckFailure(s"kmv_estimate argument must be BINARY, got ${child.dataType.sql}")
     else TypeCheckResult.TypeCheckSuccess
-  override def nullSafeEval(blob: Any): Any =
-    KmvSketch.estimateBlob(blob.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.core.KmvSketch.estimateBlob($c)")
+  override lazy val replacement: Expression =
+    StaticInvoke(KmvSketch.getClass, DoubleType, "estimateBlob", Seq(child), returnNullable = false)
   override protected def withNewChildInternal(c: Expression): KmvEstimate = copy(child = c)
 }
 

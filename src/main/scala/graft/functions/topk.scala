@@ -5,8 +5,9 @@ import java.nio.{ByteBuffer, ByteOrder}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Expression, RuntimeReplaceable, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions.{col, lit, posexplode}
 import org.apache.spark.sql.types._
@@ -197,21 +198,14 @@ object SortableBits {
 }
 
 /** SQL: `sortable_bits(d DOUBLE) -> BIGINT` — see [[SortableBits]]. */
-case class SortableDoubleBits(child: Expression)
-  extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-  override def dataType: DataType = LongType
+case class SortableDoubleBits(child: Expression) extends UnaryExpression with RuntimeReplaceable {
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case DoubleType => TypeCheckResult.TypeCheckSuccess
     case other => TypeCheckResult.TypeCheckFailure(
       s"sortable_bits requires DOUBLE, got ${other.sql}")
   }
-  override protected def nullSafeEval(input: Any): Any =
-    SortableBits.encode(input.asInstanceOf[Double])
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
-    defineCodeGen(ctx, ev, v => s"graft.functions.SortableBits.encode($v)")
+  override lazy val replacement: Expression =
+    StaticInvoke(SortableBits.getClass, LongType, "encode", Seq(child), returnNullable = false)
   override def prettyName: String = "sortable_bits"
   override protected def withNewChildInternal(newChild: Expression): SortableDoubleBits =
     copy(child = newChild)
@@ -220,21 +214,14 @@ case class SortableDoubleBits(child: Expression)
 /** SQL: `sortable_bits_double(l BIGINT) -> DOUBLE` — inverse of
   * [[SortableDoubleBits]] (the transform is an involution on the bits).
   */
-case class SortableBitsDouble(child: Expression)
-  extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-  override def dataType: DataType = DoubleType
+case class SortableBitsDouble(child: Expression) extends UnaryExpression with RuntimeReplaceable {
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case LongType => TypeCheckResult.TypeCheckSuccess
     case other => TypeCheckResult.TypeCheckFailure(
       s"sortable_bits_double requires BIGINT, got ${other.sql}")
   }
-  override protected def nullSafeEval(input: Any): Any =
-    SortableBits.decode(input.asInstanceOf[Long])
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
-    defineCodeGen(ctx, ev, v => s"graft.functions.SortableBits.decode($v)")
+  override lazy val replacement: Expression =
+    StaticInvoke(SortableBits.getClass, DoubleType, "decode", Seq(child), returnNullable = false)
   override def prettyName: String = "sortable_bits_double"
   override protected def withNewChildInternal(newChild: Expression): SortableBitsDouble =
     copy(child = newChild)

@@ -1516,6 +1516,7 @@ case class NearestCentroid(child: Expression, cids: Array[Long],
     if (v == null) cids(0) else assign(v.asInstanceOf[ArrayData])
   }
 
+  // Hand-written: generated code reaches this expression's centroids by reference.
   override protected def doGenCode(
       ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
       ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
@@ -1603,6 +1604,7 @@ case class HyperplaneSignature(child: Expression, numBits: Int, seed: Long)
   override protected def nullSafeEval(input: Any): Any =
     signatureOf(input.asInstanceOf[ArrayData])
 
+  // Hand-written: generated code reaches this expression's hyperplanes by reference.
   override protected def doGenCode(
       ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
       ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
@@ -1672,6 +1674,7 @@ case class PqEncode(child: Expression, codebooks: Array[Array[Array[Double]]])
   override protected def nullSafeEval(input: Any): Any =
     encode(input.asInstanceOf[ArrayData])
 
+  // Hand-written: generated code reaches this expression's codebooks by reference.
   override protected def doGenCode(
       ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
       ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
@@ -1735,6 +1738,7 @@ case class PqAdcE6(left: Expression, right: Expression,
   override protected def nullSafeEval(l: Any, r: Any): Any =
     adc(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
 
+  // Hand-written: generated code reaches this expression's codebooks by reference.
   override protected def doGenCode(
       ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
       ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)

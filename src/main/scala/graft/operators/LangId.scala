@@ -1,9 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, StringType}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Single-pass heuristic language identification.
@@ -99,23 +98,10 @@ object LangId {
 }
 
 /** SQL: `lang_id(text)` -> language code ('de'|'en'|'es'|'fr'|'und'). */
-case class LangIdExpr(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = child.nullable
+case class LangIdExpr(child: Expression) extends StringKernelExpr {
   override def prettyName: String = "lang_id"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case _: StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(s"lang_id requires STRING, got ${other.sql}")
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    LangId.detect(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, t => s"graft.operators.LangId.detect($t)")
-
+  override lazy val replacement: Expression =
+    StaticInvoke(LangId.getClass, StringType, "detect", Seq(child), returnNullable = false)
   override protected def withNewChildInternal(newChild: Expression): LangIdExpr =
     copy(child = newChild)
 }

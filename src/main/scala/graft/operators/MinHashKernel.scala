@@ -1,8 +1,8 @@
 package graft.operators
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, RuntimeReplaceable, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
@@ -102,14 +102,12 @@ object MinHashKernel {
   * ARRAY<BIGINT> full MinHash signature of a token array.
   */
 case class MinHashSignatureExpr(child: Expression, shingleSize: Int, numHashes: Int,
-    portable: Boolean) extends UnaryExpression {
+    portable: Boolean) extends UnaryExpression with RuntimeReplaceable {
 
   require(shingleSize > 0, "shingle_size must be positive")
   require(numHashes > 0 && numHashes <= 1024, "k must be in (0, 1024]")
 
   override def prettyName: String = "minhash_signature"
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(_: StringType, _) => TypeCheckResult.TypeCheckSuccess
@@ -117,14 +115,9 @@ case class MinHashSignatureExpr(child: Expression, shingleSize: Int, numHashes: 
       s"minhash_signature requires ARRAY<STRING> tokens, got ${other.sql}")
   }
 
-  override protected def nullSafeEval(input: Any): Any =
-    MinHashKernel.signature(input.asInstanceOf[ArrayData], shingleSize, numHashes, portable)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, t => s"""
-      ${ev.value} = graft.operators.MinHashKernel.signature($t, $shingleSize, $numHashes, $portable);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
+  override lazy val replacement: Expression = StaticInvoke(MinHashKernel.getClass,
+    ArrayType(LongType, containsNull = false), "signature",
+    Seq(child, Literal(shingleSize), Literal(numHashes), Literal(portable)))
 
   override protected def withNewChildInternal(newChild: Expression): MinHashSignatureExpr =
     copy(child = newChild)

@@ -1,9 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, LongType, StringType}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.types.LongType
 import org.apache.spark.unsafe.types.UTF8String
 
 /** 60-bit md5-prefix hash: numerically equal to
@@ -31,23 +30,10 @@ object PortableHash {
 }
 
 /** SQL: `md5_prefix64(text)` -> BIGINT (60 effective bits, non-negative). */
-case class Md5Prefix64Expr(child: Expression) extends UnaryExpression {
-
+case class Md5Prefix64Expr(child: Expression) extends StringKernelExpr {
   override def prettyName: String = "md5_prefix64"
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = child.nullable
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case _: StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(s"md5_prefix64 requires STRING, got ${other.sql}")
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    PortableHash.md5Prefix64(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, t => s"graft.operators.PortableHash.md5Prefix64($t)")
-
+  override lazy val replacement: Expression =
+    StaticInvoke(PortableHash.getClass, LongType, "md5Prefix64", Seq(child), returnNullable = false)
   override protected def withNewChildInternal(newChild: Expression): Md5Prefix64Expr =
     copy(child = newChild)
 }

@@ -1,9 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, LongType, StringType}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.types.LongType
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Polynomial (Rabin-Karp) rolling-hash document fingerprint over Unicode
@@ -35,23 +34,10 @@ object RollingHash {
 }
 
 /** SQL: `rolling_hash(text)` -> BIGINT polynomial fingerprint. */
-case class RollingHashExpr(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = child.nullable
+case class RollingHashExpr(child: Expression) extends StringKernelExpr {
   override def prettyName: String = "rolling_hash"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case _: StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(s"rolling_hash requires STRING, got ${other.sql}")
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    RollingHash.hash(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, t => s"graft.operators.RollingHash.hash($t)")
-
+  override lazy val replacement: Expression =
+    StaticInvoke(RollingHash.getClass, LongType, "hash", Seq(child), returnNullable = false)
   override protected def withNewChildInternal(newChild: Expression): RollingHashExpr =
     copy(child = newChild)
 }

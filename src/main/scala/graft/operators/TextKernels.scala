@@ -1,11 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Single-pass byte-level text kernels replacing the hottest regex/HOF
@@ -174,10 +173,8 @@ object TextKernels {
 case class CollapseWsExpr(child: Expression, trimEnds: Boolean)
     extends StringKernelExpr {
   override def prettyName: String = "collapse_ws"
-  override protected def nullSafeEval(input: Any): Any =
-    TextKernels.collapseWs(input.asInstanceOf[UTF8String], trimEnds)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, t => s"graft.operators.TextKernels.collapseWs($t, $trimEnds)")
+  override lazy val replacement: Expression = StaticInvoke(TextKernels.getClass, StringType,
+    "collapseWs", Seq(child, Literal(trimEnds)), returnNullable = false)
   override protected def withNewChildInternal(newChild: Expression): CollapseWsExpr =
     copy(child = newChild)
 }
@@ -186,22 +183,14 @@ case class CollapseWsExpr(child: Expression, trimEnds: Boolean)
   * STRUCT<words: BIGINT, sentences: BIGINT, syllables: BIGINT> (raw runs;
   * min-1 rules applied by the caller, matching the regex form).
   */
-case class ReadabilityCountsExpr(child: Expression) extends UnaryExpression {
+case class ReadabilityCountsExpr(child: Expression) extends StringKernelExpr {
   override def prettyName: String = "readability_counts"
-  override def dataType: DataType = StructType(Seq(
-    StructField("words", LongType, nullable = false),
-    StructField("sentences", LongType, nullable = false),
-    StructField("syllables", LongType, nullable = false)))
-  override def nullable: Boolean = child.nullable
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case _: StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires STRING, got ${other.sql}")
-  }
-  override protected def nullSafeEval(input: Any): Any =
-    TextKernels.readabilityCounts(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, t => s"graft.operators.TextKernels.readabilityCounts($t)")
+  override lazy val replacement: Expression = StaticInvoke(TextKernels.getClass,
+    StructType(Seq(
+      StructField("words", LongType, nullable = false),
+      StructField("sentences", LongType, nullable = false),
+      StructField("syllables", LongType, nullable = false))),
+    "readabilityCounts", Seq(child), returnNullable = false)
   override protected def withNewChildInternal(newChild: Expression): ReadabilityCountsExpr =
     copy(child = newChild)
 }
@@ -210,19 +199,10 @@ case class ReadabilityCountsExpr(child: Expression) extends UnaryExpression {
   * card candidates in match order ([[TextAnalysis.redactPiiStrict]]'s
   * candidate+checksum stage as one scan).
   */
-case class CardCandidatesExpr(child: Expression) extends UnaryExpression {
+case class CardCandidatesExpr(child: Expression) extends StringKernelExpr {
   override def prettyName: String = "card_candidates"
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullable: Boolean = child.nullable
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case _: StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires STRING, got ${other.sql}")
-  }
-  override protected def nullSafeEval(input: Any): Any =
-    TextKernels.cardCandidates(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, t => s"graft.operators.TextKernels.cardCandidates($t)")
+  override lazy val replacement: Expression = StaticInvoke(TextKernels.getClass,
+    ArrayType(StringType, containsNull = false), "cardCandidates", Seq(child), returnNullable = false)
   override protected def withNewChildInternal(newChild: Expression): CardCandidatesExpr =
     copy(child = newChild)
 }

@@ -1,10 +1,8 @@
 package graft.operators
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -118,23 +116,10 @@ object TextMetrics {
 /** SQL: `token_count(text)` -> BIGINT; one-pass equivalent of
   * `size(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]', 0))`.
   */
-case class TokenCountExpr(child: Expression) extends UnaryExpression {
-
+case class TokenCountExpr(child: Expression) extends StringKernelExpr {
   override def prettyName: String = "token_count"
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = child.nullable
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case _: StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(s"token_count requires STRING, got ${other.sql}")
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    TextMetrics.tokenCount(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, t => s"graft.operators.TextMetrics.tokenCount($t)")
-
+  override lazy val replacement: Expression =
+    StaticInvoke(TextMetrics.getClass, LongType, "tokenCount", Seq(child), returnNullable = false)
   override protected def withNewChildInternal(newChild: Expression): TokenCountExpr =
     copy(child = newChild)
 }
@@ -166,25 +151,10 @@ object CompressRatio {
 }
 
 /** SQL: `compress_ratio(text)` -> DOUBLE, deflated size / input size. */
-case class CompressRatioExpr(child: Expression) extends UnaryExpression {
-
+case class CompressRatioExpr(child: Expression) extends StringKernelExpr {
   override def prettyName: String = "compress_ratio"
-
-  override def dataType: DataType = DoubleType
-
-  override def nullable: Boolean = child.nullable
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case _: StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(s"compress_ratio requires STRING, got ${other.sql}")
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    CompressRatio.ratio(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, t => s"graft.operators.CompressRatio.ratio($t)")
-
+  override lazy val replacement: Expression =
+    StaticInvoke(CompressRatio.getClass, DoubleType, "ratio", Seq(child), returnNullable = false)
   override protected def withNewChildInternal(newChild: Expression): CompressRatioExpr =
     copy(child = newChild)
 }
@@ -192,31 +162,12 @@ case class CompressRatioExpr(child: Expression) extends UnaryExpression {
 /** SQL: `text_metrics(text)` -> STRUCT<chars, words, punct, digits, toks,
   * sw_hits : BIGINT>.
   */
-case class TextMetricsExpr(child: Expression) extends UnaryExpression {
-
+case class TextMetricsExpr(child: Expression) extends StringKernelExpr {
   override def prettyName: String = "text_metrics"
-
-  override def dataType: DataType = StructType(Seq(
-    StructField("chars", LongType, nullable = false),
-    StructField("words", LongType, nullable = false),
-    StructField("punct", LongType, nullable = false),
-    StructField("digits", LongType, nullable = false),
-    StructField("toks", LongType, nullable = false),
-    StructField("sw_hits", LongType, nullable = false)))
-
-  override def nullable: Boolean = child.nullable
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case _: StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(s"text_metrics requires STRING, got ${other.sql}")
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    TextMetrics.computeRow(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, t => s"graft.operators.TextMetrics.computeRow($t)")
-
+  override lazy val replacement: Expression = StaticInvoke(TextMetrics.getClass,
+    StructType(Seq("chars", "words", "punct", "digits", "toks", "sw_hits")
+      .map(StructField(_, LongType, nullable = false))),
+    "computeRow", Seq(child), returnNullable = false)
   override protected def withNewChildInternal(newChild: Expression): TextMetricsExpr =
     copy(child = newChild)
 }

@@ -3,9 +3,9 @@ package graft.operators
 import java.text.Normalizer
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, StringType}
+import org.apache.spark.sql.catalyst.expressions.{Expression, RuntimeReplaceable, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Unicode text normalization kernels for corpus canonicalization: NFC
@@ -50,9 +50,11 @@ object TextNormalize {
   }
 }
 
-private[operators] abstract class StringKernelExpr extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = child.nullable
+/** A one-call STRING kernel: `replacement` is a `StaticInvoke` of its static
+  * method, from which Spark derives both the interpreted and the generated
+  * path. Only the argument type check is written here.
+  */
+private[operators] abstract class StringKernelExpr extends UnaryExpression with RuntimeReplaceable {
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case _: StringType => TypeCheckResult.TypeCheckSuccess
     case other => TypeCheckResult.TypeCheckFailure(s"$prettyName requires STRING, got ${other.sql}")
@@ -62,10 +64,8 @@ private[operators] abstract class StringKernelExpr extends UnaryExpression {
 /** SQL: `nfc_normalize(text)` -> Unicode-NFC-composed STRING. */
 case class NfcNormalizeExpr(child: Expression) extends StringKernelExpr {
   override def prettyName: String = "nfc_normalize"
-  override protected def nullSafeEval(input: Any): Any =
-    TextNormalize.nfc(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, t => s"graft.operators.TextNormalize.nfc($t)")
+  override lazy val replacement: Expression =
+    StaticInvoke(TextNormalize.getClass, StringType, "nfc", Seq(child), returnNullable = false)
   override protected def withNewChildInternal(newChild: Expression): NfcNormalizeExpr =
     copy(child = newChild)
 }
@@ -73,10 +73,8 @@ case class NfcNormalizeExpr(child: Expression) extends StringKernelExpr {
 /** SQL: `strip_accents(text)` -> STRING with non-spacing marks removed. */
 case class StripAccentsExpr(child: Expression) extends StringKernelExpr {
   override def prettyName: String = "strip_accents"
-  override protected def nullSafeEval(input: Any): Any =
-    TextNormalize.stripAccents(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, t => s"graft.operators.TextNormalize.stripAccents($t)")
+  override lazy val replacement: Expression =
+    StaticInvoke(TextNormalize.getClass, StringType, "stripAccents", Seq(child), returnNullable = false)
   override protected def withNewChildInternal(newChild: Expression): StripAccentsExpr =
     copy(child = newChild)
 }

@@ -1,8 +1,8 @@
 package graft.operators
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal, RuntimeReplaceable, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
@@ -23,9 +23,15 @@ object VectorOps {
     case _ => false
   }
 
-  def isFloatVec(dt: DataType): Boolean = dt match {
+  /** The kernels' `aFloat` argument: whether `vec` is ARRAY<FLOAT>. */
+  def floatFlag(vec: Expression): Literal = Literal(vec.dataType match {
     case ArrayType(FloatType, _) => true
     case _ => false
+  })
+
+  def mayHaveNullElems(dt: DataType): Boolean = dt match {
+    case ArrayType(_, containsNull) => containsNull
+    case _ => true
   }
 
   /** Sequential dot product over min(|a|, |b|) elements. Elements must be
@@ -92,11 +98,14 @@ object VectorOps {
   }
 }
 
-/** SQL: `vec_dot(a, b)` -> DOUBLE. */
-case class VecDot(left: Expression, right: Expression) extends BinaryExpression {
+/** SQL: `vec_dot(a, b)` -> DOUBLE. `dot` when neither array can hold a
+  * NULL element; otherwise `dotChecked`, whose NULL result makes the output
+  * nullable.
+  */
+case class VecDot(left: Expression, right: Expression) extends BinaryExpression
+    with RuntimeReplaceable {
 
   override def prettyName: String = "vec_dot"
-  override def dataType: DataType = DoubleType
 
   override def checkInputDataTypes(): TypeCheckResult =
     if (!VectorOps.isVec(left.dataType) || !VectorOps.isVec(right.dataType))
@@ -104,31 +113,12 @@ case class VecDot(left: Expression, right: Expression) extends BinaryExpression 
         s"vec_dot requires ARRAY<FLOAT>/ARRAY<DOUBLE> arguments, got ${left.dataType.sql}, ${right.dataType.sql}")
     else TypeCheckResult.TypeCheckSuccess
 
-  private def aF = VectorOps.isFloatVec(left.dataType)
-  private def bF = VectorOps.isFloatVec(right.dataType)
-  private def mayHaveNullElems: Boolean = (left.dataType, right.dataType) match {
-    case (ArrayType(_, an), ArrayType(_, bn)) => an || bn
-    case _ => true
+  override lazy val replacement: Expression = {
+    val checked = VectorOps.mayHaveNullElems(left.dataType) || VectorOps.mayHaveNullElems(right.dataType)
+    StaticInvoke(VectorOps.getClass, DoubleType, if (checked) "dotChecked" else "dot",
+      Seq(left, right, VectorOps.floatFlag(left), VectorOps.floatFlag(right)),
+      returnNullable = checked)
   }
-
-  override def nullable: Boolean = left.nullable || right.nullable || mayHaveNullElems
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    if (mayHaveNullElems)
-      VectorOps.dotChecked(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData], aF, bF)
-    else
-      VectorOps.dot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData], aF, bF)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    if (!mayHaveNullElems)
-      defineCodeGen(ctx, ev, (a, b) => s"graft.operators.VectorOps.dot($a, $b, $aF, $bF)")
-    else {
-      val r = ctx.freshName("dotChecked")
-      nullSafeCodeGen(ctx, ev, (a, b) => s"""
-        java.lang.Double $r = graft.operators.VectorOps.dotChecked($a, $b, $aF, $bF);
-        if ($r == null) { ${ev.isNull} = true; } else { ${ev.value} = $r.doubleValue(); }
-      """)
-    }
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): VecDot =
     copy(left = l, right = r)
@@ -143,10 +133,10 @@ case class VecDot(left: Expression, right: Expression) extends BinaryExpression 
   * element would compare as not-equal rather than poisoning the count —
   * estimates must stay total.
   */
-case class SigMatchCount(left: Expression, right: Expression) extends BinaryExpression {
+case class SigMatchCount(left: Expression, right: Expression) extends BinaryExpression
+    with RuntimeReplaceable {
 
   override def prettyName: String = "sig_match_count"
-  override def dataType: DataType = IntegerType
 
   override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
     case (ArrayType(LongType, _), ArrayType(LongType, _)) => TypeCheckResult.TypeCheckSuccess
@@ -154,11 +144,8 @@ case class SigMatchCount(left: Expression, right: Expression) extends BinaryExpr
       s"sig_match_count requires two ARRAY<BIGINT> arguments, got ${l.sql}, ${r.sql}")
   }
 
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    SigMatchCount.count(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.operators.SigMatchCount.count($a, $b)")
+  override lazy val replacement: Expression =
+    StaticInvoke(SigMatchCount.getClass, IntegerType, "count", Seq(left, right), returnNullable = false)
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): SigMatchCount =
     copy(left = l, right = r)
@@ -194,10 +181,9 @@ object SigMatchCount {
   * NaN ABOVE zero, so cross-engine replay of the layout assumes NaN-free
   * vectors (the oracle's data is).
   */
-case class BinaryQuantize(child: Expression) extends UnaryExpression {
+case class BinaryQuantize(child: Expression) extends UnaryExpression with RuntimeReplaceable {
 
   override def prettyName: String = "binary_quantize"
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
   override def checkInputDataTypes(): TypeCheckResult =
     if (!VectorOps.isVec(child.dataType))
@@ -205,13 +191,9 @@ case class BinaryQuantize(child: Expression) extends UnaryExpression {
         s"binary_quantize requires an ARRAY<FLOAT>/ARRAY<DOUBLE> argument, got ${child.dataType.sql}")
     else TypeCheckResult.TypeCheckSuccess
 
-  private def aF = VectorOps.isFloatVec(child.dataType)
-
-  override protected def nullSafeEval(a: Any): Any =
-    BinaryQuantize.pack(a.asInstanceOf[ArrayData], aF)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, a => s"graft.operators.BinaryQuantize.pack($a, $aF)")
+  override lazy val replacement: Expression = StaticInvoke(BinaryQuantize.getClass,
+    ArrayType(LongType, containsNull = false), "pack", Seq(child, VectorOps.floatFlag(child)),
+    returnNullable = false)
 
   override protected def withNewChildInternal(newChild: Expression): BinaryQuantize =
     copy(child = newChild)
@@ -240,10 +222,10 @@ object BinaryQuantize {
   * Long.bitCount per word, no intermediate array. NULL words compare
   * as 0L (totality, as [[SigMatchCount]]).
   */
-case class WordHamming(left: Expression, right: Expression) extends BinaryExpression {
+case class WordHamming(left: Expression, right: Expression) extends BinaryExpression
+    with RuntimeReplaceable {
 
   override def prettyName: String = "word_hamming"
-  override def dataType: DataType = IntegerType
 
   override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
     case (ArrayType(LongType, _), ArrayType(LongType, _)) => TypeCheckResult.TypeCheckSuccess
@@ -251,11 +233,8 @@ case class WordHamming(left: Expression, right: Expression) extends BinaryExpres
       s"word_hamming requires two ARRAY<BIGINT> arguments, got ${l.sql}, ${r.sql}")
   }
 
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    WordHamming.distance(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.operators.WordHamming.distance($a, $b)")
+  override lazy val replacement: Expression =
+    StaticInvoke(WordHamming.getClass, IntegerType, "distance", Seq(left, right), returnNullable = false)
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): WordHamming =
     copy(left = l, right = r)
@@ -276,11 +255,12 @@ object WordHamming {
   }
 }
 
-/** SQL: `vec_norm(a)` -> DOUBLE. */
-case class VecNorm(child: Expression) extends UnaryExpression {
+/** SQL: `vec_norm(a)` -> DOUBLE, through `norm` or `normChecked` as
+  * [[VecDot]] chooses.
+  */
+case class VecNorm(child: Expression) extends UnaryExpression with RuntimeReplaceable {
 
   override def prettyName: String = "vec_norm"
-  override def dataType: DataType = DoubleType
 
   override def checkInputDataTypes(): TypeCheckResult =
     if (!VectorOps.isVec(child.dataType))
@@ -288,28 +268,11 @@ case class VecNorm(child: Expression) extends UnaryExpression {
         s"vec_norm requires an ARRAY<FLOAT>/ARRAY<DOUBLE> argument, got ${child.dataType.sql}")
     else TypeCheckResult.TypeCheckSuccess
 
-  private def aF = VectorOps.isFloatVec(child.dataType)
-  private def mayHaveNullElems: Boolean = child.dataType match {
-    case ArrayType(_, n) => n
-    case _ => true
+  override lazy val replacement: Expression = {
+    val checked = VectorOps.mayHaveNullElems(child.dataType)
+    StaticInvoke(VectorOps.getClass, DoubleType, if (checked) "normChecked" else "norm",
+      Seq(child, VectorOps.floatFlag(child)), returnNullable = checked)
   }
-
-  override def nullable: Boolean = child.nullable || mayHaveNullElems
-
-  override protected def nullSafeEval(a: Any): Any =
-    if (mayHaveNullElems) VectorOps.normChecked(a.asInstanceOf[ArrayData], aF)
-    else VectorOps.norm(a.asInstanceOf[ArrayData], aF)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    if (!mayHaveNullElems)
-      defineCodeGen(ctx, ev, a => s"graft.operators.VectorOps.norm($a, $aF)")
-    else {
-      val r = ctx.freshName("normChecked")
-      nullSafeCodeGen(ctx, ev, a => s"""
-        java.lang.Double $r = graft.operators.VectorOps.normChecked($a, $aF);
-        if ($r == null) { ${ev.isNull} = true; } else { ${ev.value} = $r.doubleValue(); }
-      """)
-    }
 
   override protected def withNewChildInternal(newChild: Expression): VecNorm =
     copy(child = newChild)
