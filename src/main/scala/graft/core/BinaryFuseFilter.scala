@@ -48,7 +48,7 @@ final class BinaryFuseFilter(
     * (:739-753), so the extension's buffer is 4 bytes larger than what is
     * written. Replicated for byte-identical blobs.
     */
-  def serializedBytes: Int = 28 + (bits / 8) * arrayLength + (if (bits == 16) 4 else 0)
+  def serializedBytes: Int = BinaryFuseFilter.serializedBytes(bits, arrayLength).toInt
 
   def serialize(): Array[Byte] = {
     val out = ByteBuffer.allocate(serializedBytes).order(ByteOrder.LITTLE_ENDIAN)
@@ -285,9 +285,22 @@ object BinaryFuseFilter {
       segmentCountLength, arrayLength, fingerprints)
   }
 
-  /** Zero-copy probe against a serialized blob (no fingerprint array copy). */
+  /** The blob size: a 28-byte header, the fingerprints, and for fuse16 the
+    * reference's 4 trailing bytes.
+    */
+  def serializedBytes(bits: Int, arrayLength: Long): Long =
+    28 + (bits / 8) * arrayLength + (if (bits == 16) 4 else 0)
+
+  private def family(bits: Int): String =
+    if (bits == 8) "binary fuse8 filter" else "binary fuse16 filter"
+
+  /** Zero-copy probe against a serialized blob (no fingerprint array copy),
+    * after its size check.
+    */
   def probeBlob(bits: Int, blob: Array[Byte], key: Long): Boolean = {
+    BlobSize.checkHeader(family(bits), blob, 28)
     val bb = ByteBuffer.wrap(blob).order(ByteOrder.LITTLE_ENDIAN)
+    BlobSize.check(family(bits), blob, serializedBytes(bits, bb.getInt(24)))
     val seed = bb.getLong(0)
     val segmentLength = bb.getInt(12)
     val segmentCountLength = bb.getInt(20)

@@ -37,12 +37,19 @@ object HllSketch {
     new HllSketch(blob)
   }
 
-  /** Refuse a blob whose p is out of range or whose length is not 1+2^p. */
+  /** Refuse a blob whose p is out of range, whose length is not 1+2^p, or
+    * with a register above 64-p+1 (the largest rho `add` can write).
+    */
   private def check(bytes: Array[Byte]): Unit = {
     BlobSize.checkHeader(Family, bytes, 1)
     val p = bytes(0) & 0xff
     if (p < MinP || p > MaxP) BlobSize.invalid(Family, s"p=$p")
     BlobSize.check(Family, bytes, 1 + (1 << p))
+    var i = 1
+    while (i < bytes.length) {
+      if ((bytes(i) & 0xff) > 64 - p + 1) BlobSize.invalid(Family, s"register ${i - 1}=${bytes(i) & 0xff}")
+      i += 1
+    }
   }
 
   /** Blob: [u8 p][u8 register × 2^p], little-endian (single-byte fields). */

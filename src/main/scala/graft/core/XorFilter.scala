@@ -33,7 +33,7 @@ import Hashing._
 final class XorFilter(val bits: Int, val seed: Long, val blockLength: Int, val fingerprints: Array[Char]) {
   require(bits == 8 || bits == 16)
 
-  def serializedBytes: Int = 16 + (bits / 8) * 3 * blockLength
+  def serializedBytes: Int = XorFilter.serializedBytes(bits, blockLength).toInt
 
   def serialize(): Array[Byte] = {
     val out = ByteBuffer.allocate(serializedBytes).order(ByteOrder.LITTLE_ENDIAN)
@@ -48,10 +48,17 @@ final class XorFilter(val bits: Int, val seed: Long, val blockLength: Int, val f
 
 object XorFilter {
 
-  /** Zero-copy probe against a serialized blob. */
+  /** The blob size: [u64 seed][u64 blockLength][3 blocks of fingerprints]. */
+  def serializedBytes(bits: Int, blockLength: Long): Long = 16 + (bits / 8) * 3 * blockLength
+
+  private def family(bits: Int): String = if (bits == 8) "xor8 filter" else "xor16 filter"
+
+  /** Zero-copy probe against a serialized blob, after its size check. */
   def probeBlob(bits: Int, blob: Array[Byte], key: Long): Boolean = {
+    BlobSize.checkHeader(family(bits), blob, 16)
     val bb = ByteBuffer.wrap(blob).order(ByteOrder.LITTLE_ENDIAN)
     val seed = bb.getLong(0)
+    BlobSize.check(family(bits), blob, serializedBytes(bits, bb.getLong(8)))
     val blockLength = bb.getLong(8).toInt
     val hash = mixSplit(key, seed)
     val h0 = reduce(hash.toInt, blockLength)

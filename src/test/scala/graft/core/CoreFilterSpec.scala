@@ -397,8 +397,9 @@ class CoreFilterSpec extends AnyFunSuite {
 
   // --- Error paths --------------------------------------------------------
 
-  test("wrong-size blobs of the five dense families raise the named size error, never an index error") {
+  test("wrong-size blobs of every filter and sketch family raise the named size error, never an index error") {
     val keys = (1L to 200L).map(DuckDbHash.hashLong)
+    val built = keys.toArray
     val quotient = QuotientFilter.create(10, 6); keys.foreach(quotient.insert)
     val bloom = DuckDbBloomFilter.create(64); keys.foreach(bloom.insert)
     val classic = ClassicBloomFilter.create(200, 0.01); keys.foreach(classic.insert)
@@ -406,7 +407,7 @@ class CoreFilterSpec extends AnyFunSuite {
     val cms = CountMinSketch.create(2, 6); keys.foreach(k => cms.add(k))
     val h = keys.head
     // (family, blob, header bytes, every reader of the blob)
-    val families: Seq[(String, Array[Byte], Int, Seq[Array[Byte] => Any])] = Seq(
+    val dense: Seq[(String, Array[Byte], Int, Seq[Array[Byte] => Any])] = Seq(
       ("quotient filter", quotient.serialize(), 40,
         Seq(QuotientFilter.probeBlob(_, h), QuotientFilter.deserialize)),
       ("duckdb bloom filter", bloom.serialize(), 8,
@@ -416,6 +417,11 @@ class CoreFilterSpec extends AnyFunSuite {
       ("hll sketch", hll.serialize(), 1, Seq(HllSketch.estimateBlob, HllSketch.deserialize)),
       ("cms sketch", cms.serialize(), 2,
         Seq(CountMinSketch.probeBlob(_, h), CountMinSketch.deserialize)))
+    val families = dense ++ Seq(8, 16).flatMap(bits => Seq(
+      (s"xor$bits filter", XorFilter.build(bits, built, built.length).serialize(), 16,
+        Seq[Array[Byte] => Any](XorFilter.probeBlob(bits, _, h))),
+      (s"binary fuse$bits filter", BinaryFuseFilter.build(bits, built, built.length).serialize(), 28,
+        Seq[Array[Byte] => Any](BinaryFuseFilter.probeBlob(bits, _, h)))))
     for ((family, blob, header, readers) <- families) {
       readers.foreach(read => read(blob))
       val wrong = Seq(
@@ -436,5 +442,12 @@ class CoreFilterSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](DuckDbBloomFilter.deserialize(Array.fill[Byte](40)(7)))
     intercept[IllegalArgumentException](XorFilter.build(8, Array.empty[Long], 0))
     intercept[IllegalArgumentException](QuotientFilter.create(40, 30)) // q + r > 64
+    // an hll blob of the right size whose register exceeds 64-p+1
+    val hll = HllSketch.create(12).serialize()
+    hll(1) = 100
+    for (read <- Seq[Array[Byte] => Any](HllSketch.estimateBlob, HllSketch.deserialize)) {
+      val e = intercept[IllegalArgumentException](read(hll))
+      assert(e.getMessage == "hll sketch blob has invalid register 0=100")
+    }
   }
 }

@@ -93,10 +93,14 @@ class BlobInteropSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(members.forall(graft.core.DuckDbBloomFilter.probeBlob(pyBloom, _)))
     val pyQuotient = Files.readAllBytes(dir.resolve("pyquotient.blob"))
     assert(members.forall(graft.core.QuotientFilter.probeBlob(pyQuotient, _)))
-    // both readers refuse a blob one byte short, with the same message
+    // both sides refuse a blob one byte short, with the same message
     for ((fam, probe) <- Seq[(String, (Array[Byte], Long) => Boolean)](
         "quotient" -> graft.core.QuotientFilter.probeBlob,
-        "bloom" -> graft.core.DuckDbBloomFilter.probeBlob)) {
+        "bloom" -> graft.core.DuckDbBloomFilter.probeBlob,
+        "xor8" -> (graft.core.XorFilter.probeBlob(8, _, _)),
+        "xor16" -> (graft.core.XorFilter.probeBlob(16, _, _)),
+        "fuse8" -> (graft.core.BinaryFuseFilter.probeBlob(8, _, _)),
+        "fuse16" -> (graft.core.BinaryFuseFilter.probeBlob(16, _, _)))) {
       val short = Files.readAllBytes(dir.resolve(s"$fam.blob")).dropRight(1)
       val e = intercept[IllegalArgumentException](probe(short, members.head))
       assert(out.toString.contains(s"$fam-short: rejected=True"), s"python $fam reader took a short blob")

@@ -28,9 +28,9 @@ order. This is the full-strength interop proof: any divergence in
 sizing, seed schedule, peel semantics, bit packing, or serialization
 between the two implementations fails the compare.
 
-The quotient and bloom readers check the blob length against its
-BASELINE.md formula first and refuse a wrong-size blob with the JVM
-readers' message; a blob one byte short must be refused by both.
+Every reader checks the blob length against its BASELINE.md formula
+first and refuses a wrong-size blob with the JVM readers' message; a blob
+one byte short must be refused by each.
 
 Exit 0 iff everything passes; prints one summary line per family.
 """
@@ -68,7 +68,9 @@ def fingerprint64(h):
 
 
 def probe_xor(blob, key, bits):
-    seed, block_len = struct.unpack_from("<QQ", blob, 0)
+    check_header(f"xor{bits} filter", blob, 16)
+    seed, block_len = struct.unpack_from("<Qq", blob, 0)
+    check_size(f"xor{bits} filter", blob, 16 + (bits // 8) * 3 * block_len)
     h = mixsplit(key, seed)
     h0 = reduce32(h & 0xFFFFFFFF, block_len)
     h1 = reduce32(rotl64(h, 21) & 0xFFFFFFFF, block_len) + block_len
@@ -82,8 +84,11 @@ def probe_xor(blob, key, bits):
 
 
 def probe_fuse(blob, key, bits):
+    check_header(f"binary fuse{bits} filter", blob, 28)
     seed, size, seg_len, seg_cnt, seg_cnt_len, arr_len = struct.unpack_from(
-        "<QIIIII", blob, 0)
+        "<QIIIIi", blob, 0)
+    check_size(f"binary fuse{bits} filter", blob,
+               28 + (bits // 8) * arr_len + (4 if bits == 16 else 0))
     seg_mask = seg_len - 1
     h = mixsplit(key, seed)
     fp_mask = 0xFF if bits == 8 else 0xFFFF
@@ -101,6 +106,12 @@ def probe_fuse(blob, key, bits):
     return (f ^ g) & fp_mask == 0
 
 
+def check_header(family, blob, header):
+    """A blob must hold the header bytes its size formula reads."""
+    if len(blob) < header:
+        raise ValueError(f"{family} blob: expected at least {header} bytes, got {len(blob)} bytes")
+
+
 def check_size(family, blob, expected):
     """The size check every reader shares with the JVM side: a blob whose
     length is not its layout's formula (BASELINE.md) is refused."""
@@ -109,8 +120,7 @@ def check_size(family, blob, expected):
 
 
 def probe_quotient(blob, h):
-    if len(blob) < 40:
-        raise ValueError(f"quotient filter blob: expected at least 40 bytes, got {len(blob)} bytes")
+    check_header("quotient filter", blob, 40)
     q, r = blob[0], blob[1]
     check_size("quotient filter", blob, 40 + ((1 << q) * (r + 3) + 7) // 8)
     elem_bits = r + 3
@@ -162,8 +172,7 @@ def bloom_mask(h):
 
 
 def probe_bloom(blob, h):
-    if len(blob) < 8:
-        raise ValueError(f"duckdb bloom filter blob: expected at least 8 bytes, got {len(blob)} bytes")
+    check_header("duckdb bloom filter", blob, 8)
     n = struct.unpack_from("<Q", blob, 0)[0]
     check_size("duckdb bloom filter", blob, 8 * (n + 1))
     mask = bloom_mask(h)
@@ -663,8 +672,8 @@ def main(d):
         if not ok:
             failures.append(fam)
 
-    # both size-checked readers refuse a blob one byte short
-    for fam in ("quotient", "bloom"):
+    # every reader refuses a blob one byte short
+    for fam in probes:
         blob = open(os.path.join(d, fam + ".blob"), "rb").read()
         try:
             probes[fam](blob[:-1], members[0])
