@@ -32,11 +32,25 @@ object PlanDump {
     val spark = graft.LocalSpark.session(defaultCpus = 4)
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     def plan(name: String): String =
-      SparkEntry.queries(name)(spark, dir).queryExecution.explainString(FormattedMode)
+      canonical(SparkEntry.queries(name)(spark, dir).queryExecution.explainString(FormattedMode))
     if (args.isEmpty) writeReview(plan)
     else writeTagged(args(0), args(1), args.drop(2).toSeq, plan)
     graft.LocalSpark.stop(spark)
   }
+
+  /** The ids a run draws afresh, each masked to one token: expression ids
+    * (`#12L`), plan ids, object hashes (`@1a2b3c`), lambda classes, RDD ids
+    * and `graft_shared_rel_<n>` directories. Two dumps of the same plans
+    * are then byte-identical, so a diff shows only real plan changes.
+    */
+  def canonical(plan: String): String = Seq(
+    "#[0-9]+L?" -> "#N",
+    "plan_id=[0-9]+" -> "plan_id=N",
+    "@[0-9a-f]{4,}" -> "@H",
+    "Lambda\\$[0-9]+/0x[0-9a-f]+" -> "Lambda\\$N",
+    "RDD\\[[0-9]+\\]" -> "RDD[N]",
+    "graft_shared_rel_[0-9]+" -> "graft_shared_rel_N"
+  ).foldLeft(plan) { case (text, (id, token)) => text.replaceAll(id, token) }
 
   private def writeTagged(tag: String, suffix: String, gates: Seq[String],
       plan: String => String): Unit = {
