@@ -13,8 +13,10 @@ import graft.functions._
   * (sketches, text analysis, vector kernels).
   *
   * Two entry points:
-  *  - `GraftFunctions.registerAll(spark)` — programmatic, for tests/apps
-  *  - `spark.sql.extensions=graft.GraftSparkExtensions` — config-driven
+  *  - `spark.sql.extensions=graft.GraftSparkExtensions` — config-driven,
+  *    the one every main, perfbench and spec session uses
+  *  - `GraftFunctions.registerAll(spark)` — the fallback for a session graft
+  *    did not build; its optimizer rules run after pushdown
   */
 object GraftFunctions {
 

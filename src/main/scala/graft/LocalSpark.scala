@@ -3,22 +3,26 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.state.StateStore
 
-/** The local session graft's mains run in: `local[n]` with n from
-  * `SPARK_GRAFT_CPUS`, else the program's own default; one shuffle
-  * partition per core; UTC; no UI; Spark logging at WARN. The graft
+/** The local session graft's mains and specs run in: `local[n]`; one
+  * shuffle partition per core; UTC; no UI; Spark logging at WARN. The graft
   * functions and optimizer rules come through [[GraftSparkExtensions]],
   * the production placement: the rules run inside the operator-optimization
   * batch, so rewritten probe filters reach the scans.
   */
 object LocalSpark {
-  def session(defaultCpus: Int): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus.toString)
+  /** A main's session: n from `SPARK_GRAFT_CPUS`, else the program's own default. */
+  def session(defaultCpus: Int): SparkSession =
+    session(sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus.toString), Map.empty)
+
+  /** The session on `cpus` cores, with `conf` on top of the shared settings. */
+  def session(cpus: String, conf: Map[String, String]): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.extensions", classOf[GraftSparkExtensions].getName)
+      .config(conf)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

@@ -1,6 +1,7 @@
 package graft
 package gates
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Embeddings, Pca, PcaPinnedModels}
@@ -51,6 +52,16 @@ object EmbeddingGates {
       c0 AS (SELECT vec_id AS cid, v AS cv FROM (
                SELECT vec_id, v, row_number() OVER (ORDER BY vec_id) AS rn FROM $src)
              WHERE rn <= (SELECT k FROM kk))"""
+
+  /** The SemDeDup gates' answer: per cluster of a `(cid, vec_id, keep)`
+    * frame, its members, kept count and kept-id sum, in cid order.
+    */
+  private def clusterRollup(df: DataFrame): DataFrame =
+    df.groupBy("cid")
+      .agg(count(lit(1)).cast("long").as("members"),
+        sum(when(col("keep"), 1L).otherwise(0L)).cast("long").as("kept"),
+        sum(when(col("keep"), col("vec_id"))).cast("long").as("kept_id_sum"))
+      .orderBy("cid")
 
   /** The incremental SemDeDup replay: the kmeans chain fit on the OLD
     * slice (`vec_id % 10 <> 0`) only, with k derived from its COUNT(*);
@@ -223,12 +234,7 @@ object EmbeddingGates {
       FROM a1 LEFT JOIN dropped d ON a1.vec_id = d.vec_id
       GROUP BY a1.cid ORDER BY a1.cid""") { (s, _) =>
       val emb = vectors(s)
-      Embeddings.semanticDeduplicate(emb, "vec", "vec_id", k = 0, threshold = 0.35)
-        .groupBy("cid")
-        .agg(count(lit(1)).cast("long").as("members"),
-          sum(when(col("keep"), 1L).otherwise(0L)).cast("long").as("kept"),
-          sum(when(col("keep"), col("vec_id"))).cast("long").as("kept_id_sum"))
-        .orderBy("cid")
+      clusterRollup(Embeddings.semanticDeduplicate(emb, "vec", "vec_id", k = 0, threshold = 0.35))
     },
 
     // incremental SemDeDup: the refresh slice (vec_id % 10 = 0) is
@@ -245,14 +251,9 @@ object EmbeddingGates {
       val oldE = emb.where(col("vec_id") % 10 =!= 0)
       val cents = Embeddings.kmeansCentroids(oldE, "vec", "vec_id",
         k = 0, iterations = 1)
-      Embeddings.incrementalSemanticDeduplicate(
+      clusterRollup(Embeddings.incrementalSemanticDeduplicate(
           emb.where(col("vec_id") % 10 === 0), oldE,
-          "vec", "vec_id", k = 0, threshold = 0.35, centroids = Some(cents))
-        .groupBy("cid")
-        .agg(count(lit(1)).cast("long").as("members"),
-          sum(when(col("keep"), 1L).otherwise(0L)).cast("long").as("kept"),
-          sum(when(col("keep"), col("vec_id"))).cast("long").as("kept_id_sum"))
-        .orderBy("cid")
+          "vec", "vec_id", k = 0, threshold = 0.35, centroids = Some(cents)))
     },
 
     // persisted SemDeDup model (build-once / refresh-many): the archive
@@ -267,13 +268,8 @@ object EmbeddingGates {
       val idx = streaming.FileStreams.createTempDir("graft_semdedup_idx_").toString
       graft.sources.SemDedupIndex.build(
         emb.where(col("vec_id") % 10 =!= 0), "vec", "vec_id", idx, k = 0)
-      val res = graft.sources.SemDedupIndex.refresh(s, idx,
-          emb.where(col("vec_id") % 10 === 0), "vec", "vec_id", threshold = 0.35)
-        .groupBy("cid")
-        .agg(count(lit(1)).cast("long").as("members"),
-          sum(when(col("keep"), 1L).otherwise(0L)).cast("long").as("kept"),
-          sum(when(col("keep"), col("vec_id"))).cast("long").as("kept_id_sum"))
-        .orderBy("cid")
+      val res = clusterRollup(graft.sources.SemDedupIndex.refresh(s, idx,
+          emb.where(col("vec_id") % 10 === 0), "vec", "vec_id", threshold = 0.35))
       val out = localResult(s, res) // <= k rows; frees the staged index
       deleteDirs(idx)
       out

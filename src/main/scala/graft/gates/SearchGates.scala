@@ -395,6 +395,19 @@ ${pad}FROM cbv, subs),
                CAST(SUM(CASE WHEN tf2 > 0 THEN 1 ELSE 0 END) AS DOUBLE) AS df2
         FROM tf)"""
 
+  /** The micro-unit-rounded BM25 score `bm25_e6` over [[bm25Terms]], in
+    * the operator's fold order (term0 + term1 + term2).
+    */
+  private val bm25E6 =
+    """CAST(round((
+               ln(1.0 + (n - df0 + 0.5) / (df0 + 0.5)) * (CAST(tf0 AS DOUBLE) * 2.2)
+                 / (CAST(tf0 AS DOUBLE) + 1.2 * (0.25 + 0.75 * CAST(dl AS DOUBLE) / avgdl))
+             + ln(1.0 + (n - df1 + 0.5) / (df1 + 0.5)) * (CAST(tf1 AS DOUBLE) * 2.2)
+                 / (CAST(tf1 AS DOUBLE) + 1.2 * (0.25 + 0.75 * CAST(dl AS DOUBLE) / avgdl))
+             + ln(1.0 + (n - df2 + 0.5) / (df2 + 0.5)) * (CAST(tf2 AS DOUBLE) * 2.2)
+                 / (CAST(tf2 AS DOUBLE) + 1.2 * (0.25 + 0.75 * CAST(dl AS DOUBLE) / avgdl))
+             ) * 1e6) AS BIGINT) AS bm25_e6"""
+
   val gates: Seq[Gate] = Seq(
     // BM25 corpus search: top-20 docs for a 3-term query. Scores are
     // micro-unit-rounded and the ordering is on the ROUNDED score (then
@@ -403,15 +416,7 @@ ${pad}FROM cbv, subs),
     // the same Lucene idf; ln() is natural log in DuckDB (log() is base-10)
     Gate("q_bm25", s"""
       WITH $bm25Terms
-      SELECT doc_id, dl,
-             CAST(round((
-               ln(1.0 + (n - df0 + 0.5) / (df0 + 0.5)) * (CAST(tf0 AS DOUBLE) * 2.2)
-                 / (CAST(tf0 AS DOUBLE) + 1.2 * (0.25 + 0.75 * CAST(dl AS DOUBLE) / avgdl))
-             + ln(1.0 + (n - df1 + 0.5) / (df1 + 0.5)) * (CAST(tf1 AS DOUBLE) * 2.2)
-                 / (CAST(tf1 AS DOUBLE) + 1.2 * (0.25 + 0.75 * CAST(dl AS DOUBLE) / avgdl))
-             + ln(1.0 + (n - df2 + 0.5) / (df2 + 0.5)) * (CAST(tf2 AS DOUBLE) * 2.2)
-                 / (CAST(tf2 AS DOUBLE) + 1.2 * (0.25 + 0.75 * CAST(dl AS DOUBLE) / avgdl))
-             ) * 1e6) AS BIGINT) AS bm25_e6
+      SELECT doc_id, dl, $bm25E6
       FROM tf, s
       ORDER BY bm25_e6 DESC, doc_id LIMIT 20""") { (s, _) =>
       Ranking.bm25(s.table("documents"), "text", "doc_id",
@@ -432,15 +437,7 @@ ${pad}FROM cbv, subs),
     Gate("q_hybrid_search", s"""
       WITH $bm25Terms,
       sc AS (
-        SELECT doc_id,
-               CAST(round((
-                 ln(1.0 + (n - df0 + 0.5) / (df0 + 0.5)) * (CAST(tf0 AS DOUBLE) * 2.2)
-                   / (CAST(tf0 AS DOUBLE) + 1.2 * (0.25 + 0.75 * CAST(dl AS DOUBLE) / avgdl))
-               + ln(1.0 + (n - df1 + 0.5) / (df1 + 0.5)) * (CAST(tf1 AS DOUBLE) * 2.2)
-                   / (CAST(tf1 AS DOUBLE) + 1.2 * (0.25 + 0.75 * CAST(dl AS DOUBLE) / avgdl))
-               + ln(1.0 + (n - df2 + 0.5) / (df2 + 0.5)) * (CAST(tf2 AS DOUBLE) * 2.2)
-                   / (CAST(tf2 AS DOUBLE) + 1.2 * (0.25 + 0.75 * CAST(dl AS DOUBLE) / avgdl))
-               ) * 1e6) AS BIGINT) AS bm25_e6
+        SELECT doc_id, $bm25E6
         FROM tf, s),
       cand AS (
         SELECT doc_id, rank_b FROM (

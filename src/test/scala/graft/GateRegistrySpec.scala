@@ -2,33 +2,16 @@ package graft
 
 import java.io.File
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** The gate registry's own state: what gates leave on disk once they
   * return, and the [[SharedRelation]] memo behind the shared relations.
   */
-class GateRegistrySpec extends AnyFunSuite with BeforeAndAfterAll {
+class GateRegistrySpec extends AnyFunSuite with SparkSpec {
 
   private val sfDir = "/root/testdata/sf0.001"
-
-  @transient private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-gate-registry-test")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftSparkExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def tmpEntries(prefix: String): Set[String] =
     Option(new File(System.getProperty("java.io.tmpdir")).list())

@@ -1,10 +1,11 @@
 package graft
 
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.execution.WholeStageCodegenExec
 import org.apache.spark.sql.types._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.streaming.FileStreams
 
 /** Every one-call scalar kernel (text, hash, vector, sortable-bits and
   * sketch-estimate functions) gives the same rows through generated code
@@ -17,22 +18,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * elements, FLOAT and DOUBLE vectors of both element nullabilities and
   * non-null columns, so every nullability branch of the kernels is reached.
   */
-class ScalarKernelParitySpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  @transient private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-scalar-parity")
-      .config("spark.sql.extensions", classOf[GraftSparkExtensions].getName)
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class ScalarKernelParitySpec extends AnyFunSuite with SparkSpec {
 
   private val calls = Seq(
     "collapse_ws(t)", "collapse_ws(t, 1)", "readability_counts(lower(t))", "card_candidates(t)",
@@ -161,20 +147,15 @@ class ScalarKernelParitySpec extends AnyFunSuite with BeforeAndAfterAll {
   test("scalar kernels: generated and interpreted rows agree, output schema as pinned") {
     inputView()
     val q = s"SELECT id, ${calls.mkString(", ")} FROM kernel_in"
-    def run(mode: String): (Seq[String], Seq[Any]) = {
-      spark.conf.set("spark.sql.codegen.factoryMode", mode)
-      spark.conf.set("spark.sql.codegen.wholeStage", (mode == "CODEGEN_ONLY").toString)
-      try {
+    def run(mode: String): (Seq[String], Seq[Any]) =
+      FileStreams.withSessionConf(spark, Map("spark.sql.codegen.factoryMode" -> mode,
+          "spark.sql.codegen.wholeStage" -> (mode == "CODEGEN_ONLY").toString)) {
         val df = spark.sql(q)
         val stages = df.queryExecution.executedPlan.collect { case w: WholeStageCodegenExec => w }
         assert(stages.nonEmpty == (mode == "CODEGEN_ONLY"), s"$mode:\n${df.queryExecution.executedPlan}")
         (df.schema.fields.toSeq.map(field),
           df.collect().toSeq.sortBy(_.getLong(0)).map(canon))
-      } finally {
-        spark.conf.unset("spark.sql.codegen.factoryMode")
-        spark.conf.unset("spark.sql.codegen.wholeStage")
       }
-    }
     val (genSchema, genRows) = run("CODEGEN_ONLY")
     val (intSchema, intRows) = run("NO_CODEGEN")
     assert(genSchema == pinnedSchema)

@@ -3,9 +3,7 @@ package graft
 import java.util.concurrent.atomic.LongAdder
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** Shuffle-bytes budgets for the widest-shuffle gates, pinned as specs so
   * a scale-killer plan change (pair blowup, shuffling text instead of ids,
@@ -22,7 +20,7 @@ import org.scalatest.BeforeAndAfterAll
   *   q_minhash_near_dup ~0.7 KB/doc measured -> 4 KB/doc budget
   *   q_token_drift   ~0.1 KB/doc measured -> 2 KB/doc budget
   */
-class ShuffleBudgetSpec extends AnyFunSuite with BeforeAndAfterAll {
+class ShuffleBudgetSpec extends AnyFunSuite with SparkSpec {
 
   private val sfDir = "/root/testdata/sf0.1"
 
@@ -34,25 +32,15 @@ class ShuffleBudgetSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  @transient private var spark: SparkSession = _
   @transient private var listener: ShuffleListener = _
   private var docs: Long = 0L
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-shuffle-budget-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftSparkExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    super.beforeAll()
     listener = new ShuffleListener
     spark.sparkContext.addSparkListener(listener)
     docs = spark.read.parquet(s"$sfDir/documents.parquet").count()
   }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   /** Runs a gate end to end (noop sink — full execution, no collect) and
     * returns shuffle bytes written per input document. Shared relations

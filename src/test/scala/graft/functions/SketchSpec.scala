@@ -1,32 +1,15 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
-import graft.GraftFunctions
+import graft.SparkSpec
 import graft.core._
 
 /** HLL / Count-Min / KMV sketch family: core semantics, wire round-trips,
   * merge laws, and SQL end-to-end through real partial/final aggregation.
   */
-class SketchSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  @transient private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-sketch-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftFunctions.registerAll(spark)
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class SketchSpec extends AnyFunSuite with SparkSpec {
 
   // --- core ---
 

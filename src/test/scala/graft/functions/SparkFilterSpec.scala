@@ -1,33 +1,21 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
-import graft.GraftFunctions
+import graft.SparkSpec
+import graft.streaming.FileStreams
 
 /** End-to-end SQL tests mirroring the reference's sqllogictests
   * (test/sql/bitfilters.test, test/sql/duckdb_bloom_filter.test) through a
   * real SparkSession, including parallel partial/final aggregation.
   */
-class SparkFilterSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  @transient private var spark: SparkSession = _
+class SparkFilterSpec extends AnyFunSuite with SparkSpec {
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftFunctions.registerAll(spark)
+    super.beforeAll()
     // series_data fixture: reference test/sql/bitfilters.test:9-10
     spark.range(1, 100001).toDF("id").createOrReplaceTempView("series_data")
   }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def sqlRows(q: String): Seq[Seq[Any]] =
     spark.sql(q).collect().toSeq.map(_.toSeq)
@@ -419,8 +407,7 @@ class SparkFilterSpec extends AnyFunSuite with BeforeAndAfterAll {
     // an RDD-backed view, so the subquery stays a subquery
     spark.createDataFrame(spark.sparkContext.parallelize(Seq(Row(cut)), 1),
       StructType(Seq(StructField("f", BinaryType)))).createOrReplaceTempView("qf_cut")
-    spark.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
-    try {
+    FileStreams.withSessionConf(spark, Map("spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY")) {
       val q = spark.sql("""
         SELECT count_if(quotient_filter_contains((SELECT f FROM qf_cut),
                                                  bitfilters_duckdb_hash('v1.5.1', id)))
@@ -433,7 +420,7 @@ class SparkFilterSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(sized.isDefined, chain.map(t => String.valueOf(t.getMessage)).mkString(" | "))
       assert(sized.get.getStackTrace.exists(_.getClassName.contains("GeneratedClass")),
         "the size error did not come out of generated code")
-    } finally spark.conf.unset("spark.sql.codegen.factoryMode")
+    }
   }
 
   test("probes: codegen and interpreted paths agree on once-per-task and per-row blobs") {
@@ -475,19 +462,14 @@ class SparkFilterSpec extends AnyFunSuite with BeforeAndAfterAll {
       ", " + names.map(n => probe(n, s"(SELECT max($n) FROM probe_blobs WHERE false)")).mkString(", ") +
       " FROM range(800, 1200)"
     val perRowQ = "SELECT id, " + names.map(n => probe(n, n)).mkString(", ") + " FROM probe_rows"
-    def run(mode: String): (Seq[Seq[Any]], Seq[Seq[Any]]) = {
-      spark.conf.set("spark.sql.codegen.factoryMode", mode)
-      spark.conf.set("spark.sql.codegen.wholeStage", (mode == "CODEGEN_ONLY").toString)
-      try {
+    def run(mode: String): (Seq[Seq[Any]], Seq[Seq[Any]]) =
+      FileStreams.withSessionConf(spark, Map("spark.sql.codegen.factoryMode" -> mode,
+          "spark.sql.codegen.wholeStage" -> (mode == "CODEGEN_ONLY").toString)) {
         val once = spark.sql(onceQ)
         assert(once.queryExecution.executedPlan.toString.contains("Subquery"))
         (once.collect().toSeq.map(_.toSeq).sortBy(_.head.asInstanceOf[Long]),
           sqlRows(perRowQ).sortBy(_.head.asInstanceOf[Long]))
-      } finally {
-        spark.conf.unset("spark.sql.codegen.factoryMode")
-        spark.conf.unset("spark.sql.codegen.wholeStage")
       }
-    }
     val (onceGen, rowsGen) = run("CODEGEN_ONLY")
     val (onceInt, rowsInt) = run("NO_CODEGEN")
     assert(onceGen == onceInt)

@@ -1,29 +1,16 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+
+import graft.SparkSpec
 
 /** Line-level boilerplate dedup, sequence packing, and domain-mixture
   * rebalancing: the three corpus-curation operators added in round 5's
   * second half.
   */
-class CurationOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  @transient private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-curation-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class CurationOpsSpec extends AnyFunSuite with SparkSpec {
 
   private def rows(df: DataFrame): Seq[String] =
     df.collect().map(_.mkString("|")).sorted.toSeq
@@ -384,7 +371,10 @@ class CurationOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       Sampling.rebalanceMix(mixDocs, "source", "doc_id", "doc_id",
         Seq("web" -> 0.5, "nosuch" -> 0.5)).count()
     }
-    assert(e.getMessage.contains("nosuch"))
+    // the folded scale subquery wraps the raised error in an awaitResult one
+    val chain = Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null).toSeq
+    assert(chain.exists(t => String.valueOf(t.getMessage).contains("target stratum 'nosuch' has no rows")),
+      chain.map(t => String.valueOf(t.getMessage)).mkString(" | "))
   }
 
   test("rebalanceMix growth is prefix-monotone for strata that did not grow") {
@@ -414,7 +404,6 @@ class CurationOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("compress_ratio separates repetitive, natural, and random text") {
     val s = spark
     import s.implicits._
-    graft.GraftFunctions.registerAll(spark)
     val rnd = new scala.util.Random(11)
     val docs = Seq(
       (1L, "spam " * 400),                                    // boilerplate

@@ -1,30 +1,17 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+
+import graft.SparkSpec
 
 /** The PassJoin-style candidate scheme must be COMPLETE (no pair within
   * the threshold missed) — verified against a brute-force cross join at
   * k = 1 and k = 2 over a fixture with shared prefixes, repeats,
   * transpositions, and length-edge strings.
   */
-class EditDistanceSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  @transient private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-editdist-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class EditDistanceSpec extends AnyFunSuite with SparkSpec {
 
   private def fixture(): DataFrame = {
     val sps = spark; import sps.implicits._

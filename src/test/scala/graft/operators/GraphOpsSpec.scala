@@ -1,26 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+
+import graft.SparkSpec
 
 /** Graphs (over a PreparedGraph), Changelog.compactLatest, Ranking.tfidfTopTerms. */
-class GraphOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  @transient private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-graphops-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class GraphOpsSpec extends AnyFunSuite with SparkSpec {
 
   /** Runs `f` over the prepared graph of `edges(src, dst)`, then releases it. */
   private def onGraph[T](edges: DataFrame, undirected: Boolean = false)(
@@ -261,7 +248,6 @@ class GraphOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("quantileBins: near-equal buckets, monotone thresholds, boundary to upper bucket") {
     val s = spark
     import s.implicits._
-    graft.GraftFunctions.registerAll(spark)
     val df = (0 until 100).map(i => (i.toLong, i + 0.5)).toDF("id", "v")
     val out = Profile.quantileBins(df, "v", nbins = 100, lo = 0.0, hi = 100.0, k = 4)
       .collect().map(r => (r.getDouble(1), r.getInt(2)))

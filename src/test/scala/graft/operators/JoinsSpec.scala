@@ -1,25 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
-class JoinsSpec extends AnyFunSuite with BeforeAndAfterAll {
+import graft.SparkSpec
 
-  @transient private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-joins-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class JoinsSpec extends AnyFunSuite with SparkSpec {
 
   /** 1 hot key (5000 rows) + 200 uniform keys (10 rows each) on the left;
     * right has 2 rows per key plus 50 keys the left never sees.
@@ -164,7 +150,6 @@ class JoinsSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("filterPrunedJoin inner equals the plain inner join") {
     val (left, right) = skewed
     val rightSel = right.where(col("k") % 7 === 0) // selective small side
-    graft.GraftFunctions.registerAll(spark)
     val plain = left.join(rightSel, Seq("k"), "inner")
     val pruned = Joins.filterPrunedJoin(left, rightSel, Seq("k"))
     assert(sortedRows(pruned) == sortedRows(plain))
@@ -174,7 +159,6 @@ class JoinsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("filterPrunedJoin with an empty build side returns no rows") {
     val (left, right) = skewed
-    graft.GraftFunctions.registerAll(spark)
     val empty = right.where(col("k") < 0)
     assert(Joins.filterPrunedJoin(left, empty, Seq("k")).count() == 0)
   }

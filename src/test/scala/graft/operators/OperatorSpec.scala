@@ -1,28 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
-import graft.GraftFunctions
+import graft.SparkSpec
+import graft.streaming.FileStreams
 
-class OperatorSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  @transient private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-operators-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftFunctions.registerAll(spark)
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class OperatorSpec extends AnyFunSuite with SparkSpec {
 
   private def docsDf = {
     val base = "the quick brown fox jumps over the lazy dog and runs far away into the green forest tonight"
@@ -499,16 +484,14 @@ class OperatorSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the clamp bypass: with ANSI off, -1e13 would cast-clamp to
     // Long.MinValue whose abs wraps negative and slips a post-cast
     // check — the guard tests the DOUBLE, so it still raises
-    val prevAnsi = spark.conf.get("spark.sql.ansi.enabled")
-    spark.conf.set("spark.sql.ansi.enabled", "false")
-    try {
+    FileStreams.withSessionConf(spark, Map("spark.sql.ansi.enabled" -> "false")) {
       val clamp = spark.createDataFrame(Seq(
         (1L, ts("2024-01-01 10:00:00"), -1e13))).toDF("k", "ts", "v")
       val e3 = intercept[Exception] {
         Events.ewmaSmooth(clamp, "k", "ts", "v", 500000L).collect()
       }
       assert(e3.getMessage.contains("exact-recursion domain"), e3.getMessage)
-    } finally spark.conf.set("spark.sql.ansi.enabled", prevAnsi)
+    }
   }
 
   test("ewmaSmooth: maxKeyHistory drops hot keys fail-soft with telemetry") {
@@ -1683,11 +1666,9 @@ class OperatorSpec extends AnyFunSuite with BeforeAndAfterAll {
     val seen = new java.util.concurrent.atomic.AtomicReference[(Long, Long)](null)
     Dedup.registerLshBucketWarningListener(spark, threshold = 10L,
       onWarn = (mx, dr) => seen.set((mx, dr)))
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
     // accumulator-backed listener works either way; this test pins the
     // AQE-off half, the test below pins the AQE-on (default) half
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    FileStreams.withSessionConf(spark, Map("spark.sql.adaptive.enabled" -> "false")) {
       // 40 identical docs: every band bucket holds all 40 -> hot-bucket skew
       val docs = (1L to 40L)
         .map(i => (i, "same exact text content for every single document in this corpus"))
@@ -1700,7 +1681,7 @@ class OperatorSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(seen.get() != null, "bucket-skew warning did not fire")
       assert(seen.get()._1 == 40L, s"expected max bucket 40, got ${seen.get()}")
       assert(seen.get()._2 == 0L, "uncapped run must not drop buckets")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+    }
   }
 
   test("lsh bucket warning listener fires with AQE enabled (accumulator path)") {
@@ -1823,7 +1804,6 @@ class OperatorSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("winsorize: clips at the sketch quantiles, flags exactly, ids inside band untouched") {
     val sps = spark; import sps.implicits._
-    graft.GraftFunctions.registerAll(spark)
     // 100 uniform values 0.5..99.5 (bin centers for width 1), nbins = 100
     val df = (0 until 100).map(i => (i.toLong, i + 0.5)).toDF("id", "v")
     val out = Profile.winsorize(df, "v", nbins = 100, lo = 0.0, hi = 100.0,
@@ -1863,7 +1843,6 @@ class OperatorSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("autoQuantiles: exact on uniform data, virtual max bin, degenerate inputs") {
     val sps = spark; import sps.implicits._
-    graft.GraftFunctions.registerAll(spark)
     // 0..999 with nbins=1000 over [0, 999): every value its own bin,
     // 999 in the virtual max bin; quantile(q) interpolates rank q*1000
     val df = (0 until 1000).map(i => Tuple1(i.toDouble)).toDF("v")
@@ -1889,7 +1868,6 @@ class OperatorSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("winsorize/quantileBins NaN contract: NULL out, false flags, thresholds unaffected") {
     val sps = spark; import sps.implicits._
-    graft.GraftFunctions.registerAll(spark)
     val df = ((0 until 100).map(i => (i.toLong, i + 0.5)) :+ (100L, Double.NaN))
       .toDF("id", "v")
     val w = Profile.winsorize(df, "v", nbins = 100, lo = 0.0, hi = 100.0,

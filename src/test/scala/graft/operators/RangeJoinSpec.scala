@@ -2,32 +2,15 @@ package graft.operators
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
-import graft.GraftFunctions
+import graft.SparkSpec
 
 /** Range/overlap joins checked against the brute-force nested-loop result
   * they must exactly reproduce, plus the text-normalization kernels.
   */
-class RangeJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  @transient private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-rangejoin-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftFunctions.registerAll(spark)
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class RangeJoinSpec extends AnyFunSuite with SparkSpec {
 
   // deterministic corpus: 200 points, 60 intervals with spans from zero to
   // several bins, all inside a few hours so collisions are plentiful

@@ -1,11 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
-import graft.GraftFunctions
+import graft.SparkSpec
 
 /** A/B equality of the single-pass byte kernels (TextKernels) against the
   * regex/HOF formulations they replaced — the DuckDB oracles still replay
@@ -14,22 +13,7 @@ import graft.GraftFunctions
   * 1:1. Adversarial unit strings + a full-corpus sweep over the sf0.001
   * documents fixture (with the redact gate's PII injection).
   */
-class TextKernelsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  @transient private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-textkernels-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftFunctions.registerAll(spark)
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class TextKernelsSpec extends AnyFunSuite with SparkSpec {
 
   private def kernel(c: Column, trim: Boolean): Column =
     ColumnBridge.column(CollapseWsExpr(ColumnBridge.expression(c), trim))

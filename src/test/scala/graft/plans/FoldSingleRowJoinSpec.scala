@@ -1,33 +1,21 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.logical.Join
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
-import graft.GraftFunctions
+import graft.SparkSpec
+import graft.streaming.FileStreams
 
 /** Optimizer-rule tests: single-row-aggregate joins fold into scalar
   * subqueries (the blob-carrying-join hazard; see FoldSingleRowJoin docs).
   */
-class FoldSingleRowJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  @transient private var spark: SparkSession = _
+class FoldSingleRowJoinSpec extends AnyFunSuite with SparkSpec {
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-plan-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftFunctions.registerAll(spark)
+    super.beforeAll()
     spark.range(1, 10001).toDF("id").createOrReplaceTempView("big")
     spark.range(1, 5001).toDF("k").createOrReplaceTempView("dim")
   }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def hasJoin(q: String): Boolean =
     spark.sql(q).queryExecution.optimizedPlan.exists(_.isInstanceOf[Join])
@@ -51,12 +39,11 @@ class FoldSingleRowJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
                    bitfilters_duckdb_hash('v1.5.1', k)) AS f FROM dim) flt
       WHERE bitfilters_duckdb_bloom_filter_probe('v1.5.1', f, id)"""
     val withRule = spark.sql(q).collect().head.getLong(0)
-    val prev = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = prev.filterNot(_ == FoldSingleRowJoin)
-    try {
-      val withoutRule = spark.sql(q).collect().head.getLong(0)
-      assert(withRule == withoutRule)
-    } finally spark.experimental.extraOptimizations = prev
+    FileStreams.withSessionConf(spark,
+        Map("spark.sql.optimizer.excludedRules" -> FoldSingleRowJoin.ruleName)) {
+      assert(hasJoin(q), "excluding the rule should have kept the join")
+      assert(spark.sql(q).collect().head.getLong(0) == withRule)
+    }
   }
 
   test("multi-row aggregate joins are left alone") {

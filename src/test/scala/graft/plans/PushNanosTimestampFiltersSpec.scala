@@ -24,6 +24,7 @@ class PushNanosTimestampFiltersSpec extends AnyFunSuite with BeforeAndAfterAll {
     -1L, 0L, 1L, 999L, 1000L, 1001L, 1999L, 2000L, 2001L, 123456789L)
 
   override def beforeAll(): Unit = {
+    // the registerAll fallback pin: a session graft did not build (rules after pushdown)
     spark = SparkSession.builder()
       .master("local[4]")
       .appName("graft-nanos-pushdown-test")
@@ -32,14 +33,14 @@ class PushNanosTimestampFiltersSpec extends AnyFunSuite with BeforeAndAfterAll {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    GraftFunctions.registerAll(spark) // extraOptimizations fallback path
+    GraftFunctions.registerAll(spark)
     dir = java.nio.file.Files.createTempDirectory("graft_nanos_pd_").toString
     val sps = spark; import sps.implicits._
     nanos.zipWithIndex.map { case (n, i) => (i.toLong, n) }
       .toDF("id", "ts").write.mode("overwrite").parquet(dir)
   }
 
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  override def afterAll(): Unit = if (spark != null) graft.LocalSpark.stop(spark)
 
   /** The prepare()-shaped view: raw nanos long rebuilt as a micros timestamp. */
   private def view: DataFrame =

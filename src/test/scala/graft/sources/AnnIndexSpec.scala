@@ -2,29 +2,15 @@ package graft.sources
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
+import graft.SparkSpec
 import graft.operators.Embeddings
 
-class AnnIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
+class AnnIndexSpec extends AnyFunSuite with SparkSpec {
 
-  @transient private var spark: SparkSession = _
   private val dir = Files.createTempDirectory("graft-annindex").toString
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-annindex-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("persisted index query equals in-memory ivfTopK and prunes cell partitions") {
     val sps = spark; import sps.implicits._

@@ -5,11 +5,9 @@ import java.nio.file.{Files, Paths}
 
 import scala.sys.process._
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
-import graft.GraftFunctions
+import graft.SparkSpec
 
 /** Cross-implementation blob round-trip: blobs built THROUGH THE SQL
   * FUNCTIONS are probed by an independent pure-Python reimplementation of
@@ -25,22 +23,7 @@ import graft.GraftFunctions
   * FP-count gates (CORRECTNESS q_quotient_golden / q_fuse_golden) tie the
   * same formats to reference-recorded values.
   */
-class BlobInteropSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  @transient private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-blob-interop")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftFunctions.registerAll(spark)
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class BlobInteropSpec extends AnyFunSuite with SparkSpec {
 
   private def writeLongsLE(path: java.nio.file.Path, xs: Array[Long]): Unit = {
     val bb = ByteBuffer.allocate(xs.length * 8).order(ByteOrder.LITTLE_ENDIAN)

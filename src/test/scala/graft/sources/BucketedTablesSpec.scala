@@ -2,32 +2,20 @@ package graft.sources
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
-class BucketedTablesSpec extends AnyFunSuite with BeforeAndAfterAll
+import graft.SparkSpec
+
+class BucketedTablesSpec extends AnyFunSuite with SparkSpec
     with AdaptiveSparkPlanHelper {
 
-  @transient private var spark: SparkSession = _
-
   override def beforeAll(): Unit = {
-    val wh = Files.createTempDirectory("graft-bucketed-wh").toString
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-bucketed-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.warehouse.dir", wh)
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1") // force the join path under test
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    super.beforeAll()
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force the join path under test
   }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("co-bucketed join plans with zero exchanges and matches the plain join") {
     val sps = spark; import sps.implicits._

@@ -1,28 +1,12 @@
 package graft.sources
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
-import graft.GraftFunctions
+import graft.SparkSpec
+import graft.streaming.FileStreams
 
-class DataLayoutSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  @transient private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-layout-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftFunctions.registerAll(spark)
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class DataLayoutSpec extends AnyFunSuite with SparkSpec {
 
   /** Reference Morton interleave for the oracle side of the tests. */
   private def morton(bits: Int, vals: Long*): Long = {
@@ -48,8 +32,7 @@ class DataLayoutSpec extends AnyFunSuite with BeforeAndAfterAll {
     val s = spark
     import s.implicits._
     // fail (don't fall back) if the generated code doesn't compile
-    spark.conf.set("spark.sql.codegen.fallback", "false")
-    try {
+    FileStreams.withSessionConf(spark, Map("spark.sql.codegen.fallback" -> "false")) {
       val rnd = new scala.util.Random(42)
       val data = Seq.fill(1000)((rnd.nextInt(1 << 10).toLong, rnd.nextInt(1 << 10).toLong))
       val got = data.toDF("x", "y")
@@ -57,7 +40,7 @@ class DataLayoutSpec extends AnyFunSuite with BeforeAndAfterAll {
       got.foreach { r =>
         assert(r.getLong(2) == morton(10, r.getLong(0), r.getLong(1)))
       }
-    } finally spark.conf.unset("spark.sql.codegen.fallback")
+    }
   }
 
   test("zorder_key null and error semantics") {

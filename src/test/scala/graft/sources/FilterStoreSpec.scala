@@ -2,31 +2,14 @@ package graft.sources
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
-import graft.GraftFunctions
+import graft.SparkSpec
 
-class FilterStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
+class FilterStoreSpec extends AnyFunSuite with SparkSpec {
 
-  @transient private var spark: SparkSession = _
   private val dir = Files.createTempDirectory("graft-filterstore").toString
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-store-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.warehouse.dir", s"$dir/warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftFunctions.registerAll(spark)
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("write/read/probe a filter catalog roundtrip") {
     val sps = spark; import sps.implicits._

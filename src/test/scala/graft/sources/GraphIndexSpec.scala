@@ -1,36 +1,28 @@
 package graft.sources
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
+import graft.SparkSpec
 import graft.operators.Graphs
 
 /** GraphIndex: the persisted prepared graph must be indistinguishable —
   * row for row, analysis for analysis — from the in-memory
   * [[Graphs.prepareGraph]] over the same raw edges.
   */
-class GraphIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
+class GraphIndexSpec extends AnyFunSuite with SparkSpec {
 
-  @transient private var spark: SparkSession = _
   private var dir: String = _
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-graphindex-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    super.beforeAll()
     dir = java.nio.file.Files.createTempDirectory("graft_graphidx_").toString
   }
 
   override def afterAll(): Unit = {
     if (dir != null)
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
-    if (spark != null) spark.stop()
+    super.afterAll()
   }
 
   test("build/load equals prepareGraph: relations, degree histogram, pagerank, ppr") {

@@ -1,26 +1,11 @@
 package graft.sources
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
+import graft.SparkSpec
 import graft.operators.Telemetry
 
-class InvertedIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  @transient private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-invertedindex-test")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class InvertedIndexSpec extends AnyFunSuite with SparkSpec {
 
   test("two capped builds in one query each report their own dropped tokens") {
     val s = spark

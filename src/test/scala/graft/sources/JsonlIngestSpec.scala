@@ -1,26 +1,12 @@
 package graft.sources
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
-class JsonlIngestSpec extends AnyFunSuite with BeforeAndAfterAll {
+import graft.SparkSpec
 
-  @transient private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-jsonl-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class JsonlIngestSpec extends AnyFunSuite with SparkSpec {
 
   test("good rows parse typed, malformed lines quarantine verbatim") {
     val dir = java.nio.file.Files.createTempDirectory("graft_jsonl_spec_").toString

@@ -1,25 +1,11 @@
 package graft.sources
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
-class LayoutReportSpec extends AnyFunSuite with BeforeAndAfterAll {
+import graft.SparkSpec
 
-  @transient private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-layout-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class LayoutReportSpec extends AnyFunSuite with SparkSpec {
 
   test("fileReport counts files (incl. partition dirs), flags small ones, sizes compaction") {
     val sps = spark; import sps.implicits._

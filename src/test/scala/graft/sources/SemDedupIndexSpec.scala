@@ -2,29 +2,16 @@ package graft.sources
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
+import graft.SparkSpec
 import graft.operators.Embeddings
 
-class SemDedupIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
+class SemDedupIndexSpec extends AnyFunSuite with SparkSpec {
 
-  @transient private var spark: SparkSession = _
   private val dir = Files.createTempDirectory("graft-semdedupindex").toString
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-semdedupindex-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def emb: DataFrame = spark.read
     .parquet("/root/testdata/sf0.001/embeddings.parquet")

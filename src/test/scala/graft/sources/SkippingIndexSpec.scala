@@ -1,27 +1,17 @@
 package graft.sources
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
-import graft.GraftFunctions
+import graft.SparkSpec
 
-class SkippingIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
+class SkippingIndexSpec extends AnyFunSuite with SparkSpec {
 
-  @transient private var spark: SparkSession = _
   private var dataDir: String = _
   private var indexPath: String = _
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-skipping-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftFunctions.registerAll(spark)
+    super.beforeAll()
     // stage lineitem as 8 range-partitioned files (the clustered layout a
     // real lake maintains on its primary key)
     dataDir = java.nio.file.Files.createTempDirectory("graft_skip_data_").toString
@@ -31,8 +21,6 @@ class SkippingIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
       .write.mode("overwrite").parquet(dataDir)
     SkippingIndex.build(spark, dataDir, "l_orderkey", indexPath)
   }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("index has one row per data file with sane ranges") {
     val idx = spark.read.parquet(s"$indexPath/index").collect()

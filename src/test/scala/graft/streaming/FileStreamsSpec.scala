@@ -1,10 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+
+import graft.SparkSpec
 
 /** Pins the determinism contract the `q_stream_*` CORRECTNESS gates rely
   * on (FileStreams scaladoc): after an AvailableNow drain, the emitted set
@@ -14,25 +15,14 @@ import org.scalatest.BeforeAndAfterAll
   * (inclusive); `session_window` merges events exactly `gap` apart (the
   * same `diff > gap` break rule as the batch sessionizer).
   */
-class FileStreamsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class FileStreamsSpec extends AnyFunSuite with SparkSpec {
 
-  @transient private var spark: SparkSession = _
   private val dir = "/root/testdata/sf0.001"
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-filestreams-test")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    super.beforeAll()
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
   }
-
-  // the state stores stop before the session (see LocalSpark.stop)
-  override def afterAll(): Unit = if (spark != null) graft.LocalSpark.stop(spark)
 
   private def batchEvents(): DataFrame =
     FileStreams.normalizeTimestamps(
@@ -628,15 +618,14 @@ class FileStreamsSpec extends AnyFunSuite with BeforeAndAfterAll {
         .FileSystemBasedCheckpointFileManager].getName))
     val viaDefault = windowCounts()
     val counting = classOf[CountingCheckpointFileManager].getName
-    spark.conf.set(CheckpointManagerConf, counting)
-    try {
+    FileStreams.withSessionConf(spark, Map(CheckpointManagerConf -> counting)) {
       assert(!FileStreams.drainConf(spark).contains(CheckpointManagerConf))
       val before = CountingCheckpointFileManager.constructed.get
       assert(windowCounts() == viaDefault)
       assert(CountingCheckpointFileManager.constructed.get > before,
         "the session's checkpoint manager was not used")
       assert(spark.conf.get(CheckpointManagerConf) == counting)
-    } finally spark.conf.unset(CheckpointManagerConf)
+    }
     // the local filesystem the same way: the fork-free one, uncached, by
     // default; a session-set `fs.file.impl` is kept and the cache left on
     import FileStreams.{FileCacheOffConf, FileImplConf}
@@ -649,14 +638,13 @@ class FileStreamsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!localFs().isInstanceOf[NioLocalFileSystem])
     assert(FileStreams.withSessionConf(spark, overrides)(localFs()).isInstanceOf[NioLocalFileSystem])
     val hadoopLocal = classOf[org.apache.hadoop.fs.LocalFileSystem].getName
-    spark.conf.set(FileImplConf, hadoopLocal)
-    try {
+    FileStreams.withSessionConf(spark, Map(FileImplConf -> hadoopLocal)) {
       val kept = FileStreams.drainConf(spark)
       assert(!kept.contains(FileImplConf) && !kept.contains(FileCacheOffConf))
       assert(windowCounts() == viaDefault)
       assert(spark.conf.get(FileImplConf) == hadoopLocal)
       assert(!FileStreams.isSet(spark, FileCacheOffConf))
-    } finally spark.conf.unset(FileImplConf)
+    }
     // the state setup: 4 state partitions whatever the session's shuffle
     // parallelism, and the session's own provider, both fixed in offsets/0
     assert(!FileStreams.drainConf(spark).contains(ProviderConf))
@@ -706,17 +694,17 @@ class FileStreamsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .map(_.stripSuffix(".parquet")).sorted.toSeq
     assert(tables.size == 10, tables.mkString(", "))
     val nanosKey = "spark.sql.legacy.parquet.nanosAsLong"
-    try for (nanos <- Seq("true", "false"); t <- tables) {
-      spark.conf.set(nanosKey, nanos)
-      val path = s"$sf/$t.parquet"
-      val inferred = spark.read.parquet(path).schema
-      assert(FileStreams.parquetSchema(spark, java.nio.file.Paths.get(path)) == inferred,
-        s"$t, nanosAsLong=$nanos")
-      // no nanosCols: normalizeTimestamps only casts NTZ columns, on both sides
-      assert(FileStreams.tableStream(spark, sf, t).schema ==
-        FileStreams.normalizeTimestamps(spark.read.parquet(path), Nil).schema,
-        s"$t, nanosAsLong=$nanos")
-    } finally spark.conf.set(nanosKey, "true")
+    for (nanos <- Seq("true", "false"))
+      FileStreams.withSessionConf(spark, Map(nanosKey -> nanos))(tables.foreach { t =>
+        val path = s"$sf/$t.parquet"
+        val inferred = spark.read.parquet(path).schema
+        assert(FileStreams.parquetSchema(spark, java.nio.file.Paths.get(path)) == inferred,
+          s"$t, nanosAsLong=$nanos")
+        // no nanosCols: normalizeTimestamps only casts NTZ columns, on both sides
+        assert(FileStreams.tableStream(spark, sf, t).schema ==
+          FileStreams.normalizeTimestamps(spark.read.parquet(path), Nil).schema,
+          s"$t, nanosAsLong=$nanos")
+      })
     // SparkEntry.prepare's views: an inferred read's schema and rows, and
     // no schema-inference job. A new session keeps prepare's conf and
     // optimizer rules off this suite's session.

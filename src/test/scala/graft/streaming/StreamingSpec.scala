@@ -2,30 +2,13 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
-import graft.GraftFunctions
+import graft.SparkSpec
 
-class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  @transient private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-streaming-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftFunctions.registerAll(spark)
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class StreamingSpec extends AnyFunSuite with SparkSpec {
 
   test("streaming bloom filter aggregate folds state across micro-batches") {
     val sps = spark; import sps.implicits._
