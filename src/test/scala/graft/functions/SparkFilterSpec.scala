@@ -397,29 +397,44 @@ class SparkFilterSpec extends AnyFunSuite with SparkSpec {
     assert(one == blobs(32))
   }
 
-  test("quotient_filter_contains over a truncated scalar-subquery blob fails with the size error from generated code") {
+  test("every probe over a truncated scalar-subquery blob fails with its family's size error on both paths") {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.{BinaryType, StructField, StructType}
-    val blob = spark.sql(
-      "SELECT quotient_filter(10, 6, bitfilters_duckdb_hash('v1.5.1', id)) FROM range(0, 500)")
-      .head().getAs[Array[Byte]](0)
-    val cut = blob.dropRight(1)
-    // an RDD-backed view, so the subquery stays a subquery
-    spark.createDataFrame(spark.sparkContext.parallelize(Seq(Row(cut)), 1),
-      StructType(Seq(StructField("f", BinaryType)))).createOrReplaceTempView("qf_cut")
-    FileStreams.withSessionConf(spark, Map("spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY")) {
-      val q = spark.sql("""
-        SELECT count_if(quotient_filter_contains((SELECT f FROM qf_cut),
-                                                 bitfilters_duckdb_hash('v1.5.1', id)))
-        FROM range(0, 100)""")
-      assert(q.queryExecution.executedPlan.toString.contains("Subquery"))
-      val ex = intercept[Exception](q.collect())
-      val chain = Iterator.iterate(ex: Throwable)(_.getCause).takeWhile(_ != null).toSeq
-      val expected = s"quotient filter blob: expected ${blob.length} bytes, got ${cut.length} bytes"
-      val sized = chain.collectFirst { case e: IllegalArgumentException if e.getMessage == expected => e }
-      assert(sized.isDefined, chain.map(t => String.valueOf(t.getMessage)).mkString(" | "))
-      assert(sized.get.getStackTrace.exists(_.getClassName.contains("GeneratedClass")),
-        "the size error did not come out of generated code")
+    val h = "bitfilters_duckdb_hash('v1.5.1', id)"
+    // (family named in the error, blob build, probe of blob `b`)
+    val cases: Seq[(String, String, String => String)] = Seq(
+      ("xor8 filter", s"xor8_filter($h)", b => s"xor8_filter_contains($b, $h)"),
+      ("xor16 filter", s"xor16_filter($h)", b => s"xor16_filter_contains($b, $h)"),
+      ("binary fuse8 filter", s"binary_fuse8_filter($h)", b => s"binary_fuse8_filter_contains($b, $h)"),
+      ("binary fuse16 filter", s"binary_fuse16_filter($h)", b => s"binary_fuse16_filter_contains($b, $h)"),
+      ("quotient filter", s"quotient_filter(10, 6, $h)", b => s"quotient_filter_contains($b, $h)"),
+      ("duckdb bloom filter", s"bitfilters_duckdb_bloom_filter_create('v1.5.1', 256, $h)",
+        b => s"bitfilters_duckdb_bloom_filter_probe('v1.5.1', $b, id)"),
+      ("classic bloom filter", "bloomfilter(1000, CAST(0.01 AS DOUBLE), id)", b => s"bloom_filter_contains($b, id)"),
+      ("cms sketch", s"cms_sketch(4, 8, $h)", b => s"cms_estimate($b, $h)"))
+    for ((family, build, probe) <- cases) {
+      val blob = spark.sql(s"SELECT $build FROM range(0, 500)").head().getAs[Array[Byte]](0)
+      val cut = blob.dropRight(1)
+      // an RDD-backed view, so the subquery stays a subquery
+      spark.createDataFrame(spark.sparkContext.parallelize(Seq(Row(cut)), 1),
+        StructType(Seq(StructField("f", BinaryType)))).createOrReplaceTempView("blob_cut")
+      val expected = s"$family blob: expected ${blob.length} bytes, got ${cut.length} bytes"
+      for (mode <- Seq("CODEGEN_ONLY", "NO_CODEGEN"))
+        FileStreams.withSessionConf(spark, Map("spark.sql.codegen.factoryMode" -> mode,
+            "spark.sql.codegen.wholeStage" -> (mode == "CODEGEN_ONLY").toString)) {
+          val q = spark.sql(s"SELECT count(${probe("(SELECT f FROM blob_cut)")}) FROM range(0, 100)")
+          assert(q.queryExecution.executedPlan.toString.contains("Subquery"))
+          val ex = intercept[Exception](q.collect())
+          val chain = Iterator.iterate(ex: Throwable)(_.getCause).takeWhile(_ != null).toSeq
+          val sized = chain.collectFirst { case e: IllegalArgumentException if e.getMessage == expected => e }
+          assert(sized.isDefined, s"$family, $mode: " + chain.map(t => String.valueOf(t.getMessage)).mkString(" | "))
+          val frames = sized.get.getStackTrace
+          val generated = frames.exists(_.getClassName.contains("GeneratedClass"))
+          if (mode == "CODEGEN_ONLY") assert(generated, s"$family: the size error did not come out of generated code")
+          else assert(!generated && frames.exists(f =>
+              f.getClassName.startsWith("graft.functions.") && f.getMethodName == "eval"),
+            s"$family: the size error did not come out of the interpreted probe")
+        }
     }
   }
 
@@ -432,17 +447,48 @@ class SparkFilterSpec extends AnyFunSuite with SparkSpec {
       "fuse8" -> s"binary_fuse8_filter($h)", "fuse16" -> s"binary_fuse16_filter($h)",
       "qf" -> s"quotient_filter(12, 8, $h)",
       "ddb" -> s"bitfilters_duckdb_bloom_filter_create('v1.5.1', 256, $h)",
+      "ddb2" -> "bitfilters_duckdb_bloom_filter_create('v1.5.1', 256, bitfilters_duckdb_hash('v1.5.1', id, concat('k', id)))",
       "bf" -> "bloomfilter(1000, CAST(0.01 AS DOUBLE), id)",
       "cms" -> s"cms_sketch(4, 8, $h)")
-    def probe(family: String, blob: String): String = family match {
-      case "xor8" | "xor16" => s"${family}_filter_contains($blob, $h)"
-      case "fuse8" => s"binary_fuse8_filter_contains($blob, $h)"
-      case "fuse16" => s"binary_fuse16_filter_contains($blob, $h)"
-      case "qf" => s"quotient_filter_contains($blob, $h)"
-      case "ddb" => s"bitfilters_duckdb_bloom_filter_probe('v1.5.1', $blob, id)"
-      case "bf" => s"bloom_filter_contains($blob, id)"
-      case "cms" => s"cms_estimate($blob, $h)"
-    }
+    // (blob, probe of that blob) per column; `h` is the key's hash, `v` the
+    // key with every 5th one NULL
+    val probes: Seq[(String, String => String)] = Seq(
+      "xor8" -> (b => s"xor8_filter_contains($b, h)"),
+      "xor16" -> (b => s"xor16_filter_contains($b, h)"),
+      "fuse8" -> (b => s"binary_fuse8_filter_contains($b, h)"),
+      "fuse16" -> (b => s"binary_fuse16_filter_contains($b, h)"),
+      "qf" -> (b => s"quotient_filter_contains($b, h)"),
+      "ddb" -> (b => s"bitfilters_duckdb_bloom_filter_probe('v1.5.1', $b, id)"),
+      "ddb2" -> (b => s"bitfilters_duckdb_bloom_filter_probe('v1.5.1', $b, id, concat('k', id))"),
+      "ddb" -> (b => s"bitfilters_duckdb_bloom_filter_probe('v1.5.1', $b, v)"),
+      "bf" -> (b => s"bloom_filter_contains($b, id)"),
+      "bf" -> (b => s"bloom_filter_contains($b, v)"),
+      "cms" -> (b => s"cms_estimate($b, h)"))
+    // output schema of the probe columns, over a subquery blob and over a blob column
+    val pinnedOnce = Seq(
+      "xor8_filter_contains(scalarsubquery(), h): BOOLEAN",
+      "xor16_filter_contains(scalarsubquery(), h): BOOLEAN",
+      "binary_fuse8_filter_contains(scalarsubquery(), h): BOOLEAN",
+      "binary_fuse16_filter_contains(scalarsubquery(), h): BOOLEAN",
+      "quotient_filter_contains(scalarsubquery(), h): BOOLEAN",
+      "duckdbbloomfilterprobe(v1.5.1, scalarsubquery(), id): BOOLEAN",
+      "duckdbbloomfilterprobe(v1.5.1, scalarsubquery(), id, concat(k, id)): BOOLEAN",
+      "duckdbbloomfilterprobe(v1.5.1, scalarsubquery(), v): BOOLEAN",
+      "bloom_filter_contains(scalarsubquery(), id): BOOLEAN",
+      "bloom_filter_contains(scalarsubquery(), v): BOOLEAN",
+      "cms_estimate(scalarsubquery(), h): BIGINT")
+    val pinnedPerRow = Seq(
+      "xor8_filter_contains(xor8, h): BOOLEAN",
+      "xor16_filter_contains(xor16, h): BOOLEAN",
+      "binary_fuse8_filter_contains(fuse8, h): BOOLEAN",
+      "binary_fuse16_filter_contains(fuse16, h): BOOLEAN",
+      "quotient_filter_contains(qf, h): BOOLEAN",
+      "duckdbbloomfilterprobe(v1.5.1, ddb, id): BOOLEAN",
+      "duckdbbloomfilterprobe(v1.5.1, ddb2, id, concat(k, id)): BOOLEAN",
+      "duckdbbloomfilterprobe(v1.5.1, ddb, v): BOOLEAN",
+      "bloom_filter_contains(bf, id): BOOLEAN",
+      "bloom_filter_contains(bf, v): BOOLEAN",
+      "cms_estimate(cms, h): BIGINT")
     val names = builds.map(_._1)
     // blobs built once and held in RDD-backed views, so both modes probe
     // the same bytes (xor/fuse layouts depend on key order) and the
@@ -458,27 +504,39 @@ class SparkFilterSpec extends AnyFunSuite with SparkSpec {
     spark.createDataFrame(spark.sparkContext.parallelize(perRow, 4),
       StructType(StructField("id", LongType) +: blobSchema.fields))
       .createOrReplaceTempView("probe_rows")
-    val onceQ = "SELECT id, " + names.map(n => probe(n, s"(SELECT $n FROM probe_blobs)")).mkString(", ") +
-      ", " + names.map(n => probe(n, s"(SELECT max($n) FROM probe_blobs WHERE false)")).mkString(", ") +
-      " FROM range(800, 1200)"
-    val perRowQ = "SELECT id, " + names.map(n => probe(n, n)).mkString(", ") + " FROM probe_rows"
+    val keys = s"SELECT *, $h AS h, IF(id % 5 = 0, NULL, id) AS v FROM"
+    val onceQ = "SELECT id, " + probes.map { case (n, p) => p(s"(SELECT $n FROM probe_blobs)") }.mkString(", ") +
+      ", " + probes.map { case (n, p) => p(s"(SELECT max($n) FROM probe_blobs WHERE false)") }.mkString(", ") +
+      s" FROM ($keys range(800, 1200))"
+    val perRowQ = "SELECT id, " + probes.map { case (n, p) => p(n) }.mkString(", ") + s" FROM ($keys probe_rows)"
+    def field(f: StructField): String = s"${f.name}: ${f.dataType.sql}${if (f.nullable) "" else " NOT NULL"}"
     def run(mode: String): (Seq[Seq[Any]], Seq[Seq[Any]]) =
       FileStreams.withSessionConf(spark, Map("spark.sql.codegen.factoryMode" -> mode,
           "spark.sql.codegen.wholeStage" -> (mode == "CODEGEN_ONLY").toString)) {
         val once = spark.sql(onceQ)
+        val rows = spark.sql(perRowQ)
         assert(once.queryExecution.executedPlan.toString.contains("Subquery"))
+        assert(once.schema.fields.toSeq.map(field) == "id: BIGINT NOT NULL" +: (pinnedOnce ++ pinnedOnce))
+        assert(rows.schema.fields.toSeq.map(field) == "id: BIGINT" +: pinnedPerRow)
         (once.collect().toSeq.map(_.toSeq).sortBy(_.head.asInstanceOf[Long]),
-          sqlRows(perRowQ).sortBy(_.head.asInstanceOf[Long]))
+          rows.collect().toSeq.map(_.toSeq).sortBy(_.head.asInstanceOf[Long]))
       }
     val (onceGen, rowsGen) = run("CODEGEN_ONLY")
     val (onceInt, rowsInt) = run("NO_CODEGEN")
     assert(onceGen == onceInt)
     assert(rowsGen == rowsInt)
-    val k = names.size
+    val k = probes.size
+    // each probe of `v` next to the probe of `id` on the same blob
+    val overV = probes.indices.filter(i => probes(i)._2("b").endsWith(", v)"))
+      .map(i => 1 + i -> (1 + probes.indexWhere(_._1 == probes(i)._1)))
+    assert(overV.size == 2)
     for (r <- onceGen) {
-      val member = r.head.asInstanceOf[Long] < 1000L
+      val id = r.head.asInstanceOf[Long]
       assert(r.slice(k + 1, 2 * k + 1).forall(_ == null), s"NULL blob must probe NULL: $r")
-      if (member) assert(r.slice(1, k).forall(_ == true) && r(k).asInstanceOf[Long] >= 1L, s"false negative: $r")
+      for ((viaV, viaId) <- overV)
+        assert(r(viaV) == (if (id % 5 == 0) null else r(viaId)), s"NULL value must probe NULL: $r")
+      if (id < 1000L) assert((1 until k).filterNot(overV.map(_._1).contains).forall(r(_) == true) &&
+        r(k).asInstanceOf[Long] >= 1L, s"false negative: $r")
     }
     for (r <- rowsGen) {
       val id = r.head.asInstanceOf[Long]
