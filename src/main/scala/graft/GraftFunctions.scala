@@ -75,7 +75,7 @@ object GraftFunctions {
       arg("filter - BINARY quotient-filter blob",
         "hash - BIGINT hashed probe value (same hash as at build time)"),
       ex("SELECT quotient_filter_contains(f, bitfilters_duckdb_hash('v1.5.1', 42)) FROM filters;"),
-      args => { arity("quotient_filter_contains", 2, args); QuotientFilterContains(args(0), args(1)) }),
+      args => { arity("quotient_filter_contains", 2, args); BlobProbe(args(0), args(1), ProbeFamily.Quotient) }),
     Fn("xor8_filter",
       "xor8_filter(hash) - aggregate hashes into an xor8 filter BLOB (~0.4% FPR)",
       arg("hash - BIGINT pre-hashed key (e.g. bitfilters_duckdb_hash)"),
@@ -90,12 +90,12 @@ object GraftFunctions {
       "xor8_filter_contains(filter, hash) - probe an xor8 filter",
       arg("filter - BINARY xor8 blob", "hash - BIGINT hashed probe value"),
       ex("SELECT xor8_filter_contains(f, bitfilters_duckdb_hash('v1.5.1', 42)) FROM filters;"),
-      args => { arity("xor8_filter_contains", 2, args); XorFilterContains(args(0), args(1), 8) }),
+      args => { arity("xor8_filter_contains", 2, args); BlobProbe(args(0), args(1), ProbeFamily.Xor(8)) }),
     Fn("xor16_filter_contains",
       "xor16_filter_contains(filter, hash) - probe an xor16 filter",
       arg("filter - BINARY xor16 blob", "hash - BIGINT hashed probe value"),
       ex("SELECT xor16_filter_contains(f, bitfilters_duckdb_hash('v1.5.1', 42)) FROM filters;"),
-      args => { arity("xor16_filter_contains", 2, args); XorFilterContains(args(0), args(1), 16) }),
+      args => { arity("xor16_filter_contains", 2, args); BlobProbe(args(0), args(1), ProbeFamily.Xor(16)) }),
     Fn("binary_fuse8_filter",
       "binary_fuse8_filter(hash) - aggregate hashes into a binary fuse8 filter BLOB (~0.4% FPR)",
       arg("hash - BIGINT pre-hashed key"),
@@ -110,12 +110,12 @@ object GraftFunctions {
       "binary_fuse8_filter_contains(filter, hash) - probe a binary fuse8 filter",
       arg("filter - BINARY binary-fuse8 blob", "hash - BIGINT hashed probe value"),
       ex("SELECT binary_fuse8_filter_contains(f, bitfilters_duckdb_hash('v1.5.1', 42)) FROM filters;"),
-      args => { arity("binary_fuse8_filter_contains", 2, args); BinaryFuseFilterContains(args(0), args(1), 8) }),
+      args => { arity("binary_fuse8_filter_contains", 2, args); BlobProbe(args(0), args(1), ProbeFamily.Fuse(8)) }),
     Fn("binary_fuse16_filter_contains",
       "binary_fuse16_filter_contains(filter, hash) - probe a binary fuse16 filter",
       arg("filter - BINARY binary-fuse16 blob", "hash - BIGINT hashed probe value"),
       ex("SELECT binary_fuse16_filter_contains(f, bitfilters_duckdb_hash('v1.5.1', 42)) FROM filters;"),
-      args => { arity("binary_fuse16_filter_contains", 2, args); BinaryFuseFilterContains(args(0), args(1), 16) }),
+      args => { arity("binary_fuse16_filter_contains", 2, args); BlobProbe(args(0), args(1), ProbeFamily.Fuse(16)) }),
     Fn("bitfilters_duckdb_hash",
       "bitfilters_duckdb_hash(version, v1[, v2, ...]) - DuckDB-internal hash for a pinned version",
       arg("version - STRING DuckDB version to pin ('v1.4.4'|'v1.5.1'|'v1.6.0')",
@@ -312,7 +312,7 @@ object GraftFunctions {
       "cms_estimate(sketch, hash) - frequency upper bound for a pre-hashed key",
       arg("sketch - BINARY cms blob", "hash - BIGINT pre-hashed probe key"),
       ex("SELECT cms_estimate(s, bitfilters_duckdb_hash('v1.5.1', 42)) FROM sketches;"),
-      args => { arity("cms_estimate", 2, args); CmsEstimate(args(0), args(1)) }),
+      args => { arity("cms_estimate", 2, args); BlobProbe(args(0), args(1), ProbeFamily.Cms) }),
     Fn("cms_inner_product",
       "cms_inner_product(a, b) - equi-join size upper bound: min over rows of the counter inner product",
       arg("a - BINARY cms blob", "b - BINARY cms blob (same depth/log2_width)"),

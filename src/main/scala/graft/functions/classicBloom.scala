@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal, RuntimeReplaceable}
 import org.apache.spark.sql.types._
 
 import graft.core.ClassicBloomFilter
@@ -79,10 +79,11 @@ case class ClassicBloomFilterAgg(
 }
 
 /** SQL: `bloom_filter_contains(filter, value)` — typed-value probe for the
-  * classic bloom family (reference cpp:246-294).
+  * classic bloom family (reference cpp:246-294): the [[BlobProbe]] of the
+  * filter by the value's DuckDB hash, the hash the aggregate inserts.
   */
 case class ClassicBloomContains(left: Expression, right: Expression)
-  extends FilterContainsExpression {
+  extends BinaryExpression with RuntimeReplaceable {
 
   override def prettyName: String = "bloom_filter_contains"
 
@@ -93,16 +94,8 @@ case class ClassicBloomContains(left: Expression, right: Expression)
       TypeCheckResult.TypeCheckFailure(s"bloom_filter_contains: unsupported value type ${right.dataType.sql}")
     else TypeCheckResult.TypeCheckSuccess
 
-  @transient private lazy val hasher: Any => Long =
-    HashDispatch.hasherFor(right.dataType, "bloom_filter_contains")
-
-  override protected def probe(blob: Array[Byte], hash: Long): Boolean =
-    ClassicBloomFilter.probeBlob(blob, hash)
-  override protected def probeCall(f: String, h: String): String =
-    s"graft.core.ClassicBloomFilter.probeBlob($f, $h)"
-  override protected def hashOf(v: Any): Long = hasher(v)
-  override protected def hashCall(term: String): String =
-    HashDispatch.hashCallJava(right.dataType, term)
+  override lazy val replacement: Expression =
+    BlobProbe(left, DuckDbHashExpr(Seq(Literal(filters.DefaultVersion), right)), ProbeFamily.ClassicBloom)
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): ClassicBloomContains =
     copy(left = l, right = r)

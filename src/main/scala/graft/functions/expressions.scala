@@ -2,8 +2,8 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{Block, CodeGenerator, CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, RuntimeReplaceable}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -123,84 +123,50 @@ case class BroadcastBlobMap(
     copy(child = c)
 }
 
-/** The once-per-task blob evaluation shared by every probe scalar
-  * (`*_contains`, `bitfilters_duckdb_bloom_filter_probe`, `cms_estimate`),
-  * for both `eval` and `doGenCode`. A blob argument that is row-independent
-  * (see [[RowIndependent]]) but not a plain literal — e.g. a scalar
-  * subquery, or a struct field of a MERGED scalar subquery — is evaluated
-  * ONCE per task: evaluating it per row would copy the whole serialized
-  * blob out of its container for every probe (measured ~2 ms/row for a
-  * 120 KB fuse16 blob — turns a sub-second scan into minutes at scale).
-  * This is the Spark-native mirror of the reference's constant-vector fast
-  * path (src/bitfilters_xor_filter.cpp:223-232).
+/** One family's probe of a serialized blob by a 64-bit hash: the SQL name,
+  * the blob argument's name in type errors, the result type, and the
+  * family's `probeBlob` as a call (interpreted path) and as Java source of
+  * the same static call (generated path).
   */
-trait OncePerTaskBlob extends Expression {
-  /** The argument yielding the serialized blob. */
-  protected def blobExpr: Expression
+sealed abstract class ProbeFamily(val sqlName: String, val dataType: DataType, owner: String,
+    bits: String = "", val blobArg: String = "filter") extends Serializable {
+  def probe(blob: Array[Byte], hash: Long): Any
+  def javaCall(blob: String, hash: String): String = s"graft.core.$owner.probeBlob($bits$blob, $hash)"
+}
 
-  protected def rowIndependentBlob: Boolean = RowIndependent(blobExpr)
-
-  // benign-race cache for the interpreted path (value write precedes flag)
-  @transient private var cachedBlob: Array[Byte] = _
-  @transient @volatile private var cachedBlobSet = false
-
-  protected def evalBlob(input: InternalRow): Array[Byte] =
-    if (!rowIndependentBlob) blobExpr.eval(input).asInstanceOf[Array[Byte]]
-    else {
-      if (!cachedBlobSet) {
-        cachedBlob = blobExpr.eval(input).asInstanceOf[Array[Byte]]
-        cachedBlobSet = true
-      }
-      cachedBlob
-    }
-
-  /** Java for the blob: the code, and a term holding the blob or null. A
-    * row-independent blob's code runs inside an init-once guard (it reads
-    * no input columns, so this is safe) and lands in mutable state `state`.
-    */
-  protected def genBlob(ctx: CodegenContext, state: String): (Block, String) =
-    if (rowIndependentBlob) {
-      val blobVar = ctx.addMutableState("byte[]", state)
-      val initVar = ctx.addMutableState("boolean", state + "Init")
-      val f = blobExpr.genCode(ctx)
-      (code"""
-      if (!$initVar) {
-        ${f.code}
-        $blobVar = ${f.isNull} ? null : ${f.value};
-        $initVar = true;
-      }""", blobVar)
-    } else {
-      val f = blobExpr.genCode(ctx)
-      (f.code, s"(${f.isNull} ? null : ${f.value})")
-    }
-
-  /** Java for a row-independent (blob, key) probe of BOOLEAN or BIGINT
-    * result: NULL when the key or the blob is NULL, else `call(blob, key)`.
-    * Locals are named `<local>IsNull` and `<local>Value`.
-    */
-  protected def genKeyedProbe(ctx: CodegenContext, ev: ExprCode, key: Expression,
-      state: String, local: String)(call: (String, String) => String): ExprCode = {
-    val (blobCode, blob) = genBlob(ctx, state)
-    val h = key.genCode(ctx)
-    val isNullVar = ctx.freshName(local + "IsNull")
-    val valueVar = ctx.freshName(local + "Value")
-    val javaType = CodeGenerator.javaType(dataType)
-    ev.copy(code = code"""$blobCode
-      ${h.code}
-      boolean $isNullVar = true;
-      $javaType $valueVar = ${if (dataType == BooleanType) "false" else "0L"};
-      if (!(${h.isNull}) && $blob != null) {
-        $isNullVar = false;
-        $valueVar = ${call(blob, h.value.toString)};
-      }
-      boolean ${ev.isNull} = $isNullVar;
-      $javaType ${ev.value} = $valueVar;
-    """)
+object ProbeFamily {
+  /** Reference src/bitfilters_quotient_filter.cpp:246-267. */
+  case object Quotient extends ProbeFamily("quotient_filter_contains", BooleanType, "QuotientFilter") {
+    def probe(blob: Array[Byte], hash: Long): Any = QuotientFilter.probeBlob(blob, hash)
+  }
+  /** Reference src/bitfilters_xor_filter.cpp:214-245. */
+  case class Xor(bits: Int) extends ProbeFamily(s"xor${bits}_filter_contains", BooleanType, "XorFilter", s"$bits, ") {
+    def probe(blob: Array[Byte], hash: Long): Any = XorFilter.probeBlob(bits, blob, hash)
+  }
+  /** Reference src/bitfilters_binary_fuse_filter.cpp:215-246. */
+  case class Fuse(bits: Int)
+    extends ProbeFamily(s"binary_fuse${bits}_filter_contains", BooleanType, "BinaryFuseFilter", s"$bits, ") {
+    def probe(blob: Array[Byte], hash: Long): Any = BinaryFuseFilter.probeBlob(bits, blob, hash)
+  }
+  /** Reference src/bitfilters_duckdb_bloom_filter.cpp:327-468. */
+  case object DuckDbBloom
+    extends ProbeFamily("bitfilters_duckdb_bloom_filter_probe", BooleanType, "DuckDbBloomFilter") {
+    def probe(blob: Array[Byte], hash: Long): Any = DuckDbBloomFilter.probeBlob(blob, hash)
+  }
+  /** Reference src/bitfilters_bloom_filter.cpp:246-294. */
+  case object ClassicBloom extends ProbeFamily("bloom_filter_contains", BooleanType, "ClassicBloomFilter") {
+    def probe(blob: Array[Byte], hash: Long): Any = ClassicBloomFilter.probeBlob(blob, hash)
+  }
+  /** Frequency upper bound of a Count-Min sketch. */
+  case object Cms extends ProbeFamily("cms_estimate", LongType, "CountMinSketch", blobArg = "sketch") {
+    def probe(blob: Array[Byte], hash: Long): Any = CountMinSketch.probeBlob(blob, hash)
   }
 }
 
-/** Base for the `*_contains` probe expressions: (filter BLOB, hash BIGINT) ->
-  * BOOLEAN with standard null propagation.
+/** The probe of a serialized filter or sketch blob by a 64-bit hash:
+  * (blob BINARY, hash BIGINT) -> the family's result, NULL when either is
+  * NULL. Every `*_contains`, `cms_estimate`, and the two typed bloom probes
+  * (through their hash) are this expression.
   *
   * All probes are ZERO-COPY against the serialized blob bytes (no filter
   * materialization per row) and implement `doGenCode`, so `WHERE
@@ -209,91 +175,85 @@ trait OncePerTaskBlob extends Expression {
   * and (b) an expression that falls back to interpreted mode would eject its
   * whole operator from codegen, forcing joined rows (which carry the filter
   * blobs) to be materialized at stage boundaries — at 100k+ rows x 100KB+
-  * blobs that is gigabytes of row copies. Mirrors the reference's
-  * constant-vector fast path intent (src/bitfilters_xor_filter.cpp:223-232)
-  * with Spark's compilation model.
+  * blobs that is gigabytes of row copies.
+  *
+  * A blob argument that is row-independent (see [[RowIndependent]]) but not
+  * a plain literal — e.g. a scalar subquery, or a struct field of a MERGED
+  * scalar subquery — is evaluated ONCE per task, on both paths: evaluating
+  * it per row would copy the whole serialized blob out of its container for
+  * every probe (measured ~2 ms/row for a 120 KB fuse16 blob — turns a
+  * sub-second scan into minutes at scale). This is the Spark-native mirror
+  * of the reference's constant-vector fast path
+  * (src/bitfilters_xor_filter.cpp:223-232).
   */
-abstract class FilterContainsExpression extends BinaryExpression with OncePerTaskBlob {
+case class BlobProbe(blob: Expression, hash: Expression, family: ProbeFamily) extends BinaryExpression {
+
+  override def left: Expression = blob
+  override def right: Expression = hash
+  override def prettyName: String = family.sqlName
+  override def dataType: DataType = family.dataType
+  override def nullable: Boolean = blob.nullable || hash.nullable
+  // plans print the two arguments, not the family
+  override protected def stringArgs: Iterator[Any] = Iterator(blob, hash)
 
   override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType != BinaryType)
-      TypeCheckResult.TypeCheckFailure(s"$prettyName filter argument must be BINARY, got " + left.dataType.sql)
-    else if (right.dataType != LongType)
-      TypeCheckResult.TypeCheckFailure(s"$prettyName hash argument must be BIGINT, got " + right.dataType.sql)
+    if (blob.dataType != BinaryType)
+      TypeCheckResult.TypeCheckFailure(
+        s"$prettyName ${family.blobArg} argument must be BINARY, got " + blob.dataType.sql)
+    else if (hash.dataType != LongType)
+      TypeCheckResult.TypeCheckFailure(s"$prettyName hash argument must be BIGINT, got " + hash.dataType.sql)
     else TypeCheckResult.TypeCheckSuccess
 
-  override def dataType: DataType = BooleanType
-  override def nullable: Boolean = left.nullable || right.nullable
-  override protected def blobExpr: Expression = left
+  @transient private lazy val oncePerTask: Boolean = RowIndependent(blob)
 
-  /** Probe a serialized filter blob (zero-copy). */
-  protected def probe(blob: Array[Byte], hash: Long): Boolean
-
-  /** Java source for the static probe call used by codegen. */
-  protected def probeCall(blobTerm: String, hashTerm: String): String
-
-  /** Map the evaluated right-hand value to the 64-bit probe hash (identity
-    * for the pre-hashed BIGINT probes; ClassicBloomContains hashes typed
-    * values here).
-    */
-  protected def hashOf(v: Any): Long = v.asInstanceOf[Long]
-
-  /** Java source mapping the right-hand value term to the probe hash. */
-  protected def hashCall(term: String): String = term
+  // benign-race cache for the interpreted path (value write precedes flag)
+  @transient private var cachedBlob: Array[Byte] = _
+  @transient @volatile private var cachedBlobSet = false
 
   override def eval(input: InternalRow): Any = {
-    val h = right.eval(input)
+    val h = hash.eval(input)
     if (h == null) return null
-    val blob = evalBlob(input)
-    if (blob == null) return null
-    probe(blob, hashOf(h))
+    if (oncePerTask && !cachedBlobSet) {
+      cachedBlob = blob.eval(input).asInstanceOf[Array[Byte]]
+      cachedBlobSet = true
+    }
+    val b = if (oncePerTask) cachedBlob else blob.eval(input).asInstanceOf[Array[Byte]]
+    if (b == null) null else family.probe(b, h.asInstanceOf[Long])
   }
 
   // Hand-written: a row-independent blob is evaluated once per task into a generated field.
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val call = (f: String, h: String) => probeCall(f, hashCall(h))
-    if (rowIndependentBlob) genKeyedProbe(ctx, ev, right, "graftConstBlob", "probe")(call)
-    else defineCodeGen(ctx, ev, call)
+    val b = blob.genCode(ctx)
+    val blobVar = ctx.freshName("probeBlob")
+    // a row-independent blob reads no input column, so its code can run
+    // once, inside an init guard, into mutable state
+    val blobCode = if (oncePerTask) {
+      val cached = ctx.addMutableState("byte[]", "graftConstBlob")
+      val init = ctx.addMutableState("boolean", "graftConstBlobInit")
+      code"""
+      if (!$init) {
+        ${b.code}
+        $cached = ${b.isNull} ? null : ${b.value};
+        $init = true;
+      }
+      byte[] $blobVar = $cached;"""
+    } else code"""
+      ${b.code}
+      byte[] $blobVar = ${b.isNull} ? null : ${b.value};"""
+    val h = hash.genCode(ctx)
+    val javaType = CodeGenerator.javaType(dataType)
+    ev.copy(code = code"""$blobCode
+      ${h.code}
+      boolean ${ev.isNull} = ${h.isNull} || $blobVar == null;
+      $javaType ${ev.value} = ${CodeGenerator.defaultValue(dataType)};
+      if (!${ev.isNull}) {
+        ${ev.value} = ${family.javaCall(blobVar, h.value.toString)};
+      }
+    """)
   }
-}
 
-/** SQL: `quotient_filter_contains(filter, hash)`;
-  * reference src/bitfilters_quotient_filter.cpp:246-267. */
-case class QuotientFilterContains(left: Expression, right: Expression)
-  extends FilterContainsExpression {
-  override def prettyName: String = "quotient_filter_contains"
-  override protected def probe(blob: Array[Byte], hash: Long): Boolean =
-    QuotientFilter.probeBlob(blob, hash)
-  override protected def probeCall(f: String, h: String): String =
-    s"graft.core.QuotientFilter.probeBlob($f, $h)"
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): QuotientFilterContains =
-    copy(left = l, right = r)
-}
-
-/** SQL: `xor8_filter_contains` / `xor16_filter_contains`;
-  * reference src/bitfilters_xor_filter.cpp:214-245. */
-case class XorFilterContains(left: Expression, right: Expression, bits: Int)
-  extends FilterContainsExpression {
-  override def prettyName: String = s"xor${bits}_filter_contains"
-  override protected def probe(blob: Array[Byte], hash: Long): Boolean =
-    XorFilter.probeBlob(bits, blob, hash)
-  override protected def probeCall(f: String, h: String): String =
-    s"graft.core.XorFilter.probeBlob($bits, $f, $h)"
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): XorFilterContains =
-    copy(left = l, right = r)
-}
-
-/** SQL: `binary_fuse8_filter_contains` / `binary_fuse16_filter_contains`;
-  * reference src/bitfilters_binary_fuse_filter.cpp:215-246. */
-case class BinaryFuseFilterContains(left: Expression, right: Expression, bits: Int)
-  extends FilterContainsExpression {
-  override def prettyName: String = s"binary_fuse${bits}_filter_contains"
-  override protected def probe(blob: Array[Byte], hash: Long): Boolean =
-    BinaryFuseFilter.probeBlob(bits, blob, hash)
-  override protected def probeCall(f: String, h: String): String =
-    s"graft.core.BinaryFuseFilter.probeBlob($bits, $f, $h)"
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): BinaryFuseFilterContains =
-    copy(left = l, right = r)
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): BlobProbe =
+    copy(blob = l, hash = r)
 }
 
 private[functions] object HashDispatch {
@@ -371,6 +331,7 @@ private[functions] object HashDispatch {
   */
 case class DuckDbHashExpr(children: Seq[Expression]) extends Expression {
 
+  override def prettyName: String = "bitfilters_duckdb_hash"
   override def dataType: DataType = LongType
   override def nullable: Boolean = children.exists(_.nullable)
   override def foldable: Boolean = children.forall(_.foldable)
@@ -424,17 +385,16 @@ case class DuckDbHashExpr(children: Seq[Expression]) extends Expression {
     copy(children = newChildren)
 }
 
-/** SQL: `bitfilters_duckdb_bloom_filter_probe(version, filter, v1[, v2, ...])`.
-  * Hashes the value arguments with the versioned algorithm (CombineHash for
-  * multi-key) and probes the serialized bloom filter. Unlike the reference
-  * (which rejects non-constant filter vectors,
-  * src/bitfilters_duckdb_bloom_filter.cpp:444-446) we also accept a
-  * per-row filter column. Reference cpp:327-468.
+/** SQL: `bitfilters_duckdb_bloom_filter_probe(version, filter, v1[, v2, ...])`:
+  * the [[BlobProbe]] of the filter by `bitfilters_duckdb_hash(version, v1,
+  * ...)`, so the values hash exactly like at build time (CombineHash for
+  * multi-key). Unlike the reference (which rejects non-constant filter
+  * vectors, src/bitfilters_duckdb_bloom_filter.cpp:444-446) we also accept
+  * a per-row filter column. Reference cpp:327-468.
   */
-case class DuckDbBloomFilterProbe(children: Seq[Expression]) extends Expression with OncePerTaskBlob {
+case class DuckDbBloomFilterProbe(children: Seq[Expression]) extends Expression with RuntimeReplaceable {
 
-  override def dataType: DataType = BooleanType
-  override def nullable: Boolean = true
+  override def prettyName: String = "bitfilters_duckdb_bloom_filter_probe"
 
   private def versionExpr = children.head
   private def filterExpr = children(1)
@@ -458,51 +418,8 @@ case class DuckDbBloomFilterProbe(children: Seq[Expression]) extends Expression 
     }
   }
 
-  @transient private lazy val hashers: Array[Any => Long] =
-    valueExprs.map(e => HashDispatch.hasherFor(e.dataType, "bitfilters_duckdb_bloom_filter_probe")).toArray
-  @transient private lazy val valueArr: Array[Expression] = valueExprs.toArray
-
-  override protected def blobExpr: Expression = filterExpr
-
-  override def eval(input: InternalRow): Any = {
-    val blob = evalBlob(input)
-    if (blob == null) return null
-    var h = 0L
-    var i = 0
-    while (i < valueArr.length) {
-      val v = valueArr(i).eval(input)
-      if (v == null) return null // NULL propagates like the hash function
-      h = if (i == 0) hashers(0)(v) else DuckDbHash.combine(h, hashers(i)(v))
-      i += 1
-    }
-    DuckDbBloomFilter.probeBlob(blob, h)
-  }
-
-  // Hand-written: the once-per-task blob plus one unrolled hash step per variadic argument.
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val blobCode = genBlob(ctx, "graftConstBlob")
-    val hVar = ctx.freshName("ddbHash")
-    val nullVar = ctx.freshName("ddbAnyNull")
-    val hashCode = HashDispatch.genCombinedHash(ctx, valueExprs, hVar, nullVar)
-    val isNullVar = ctx.freshName("probeIsNull")
-    val valueVar = ctx.freshName("probeValue")
-    val blobVal = ctx.freshName("probeBlob")
-    ev.copy(code = code"""
-      ${blobCode._1}
-      byte[] $blobVal = ${blobCode._2};
-      boolean $isNullVar = true;
-      boolean $valueVar = false;
-      if ($blobVal != null) {
-        $hashCode
-        if (!$nullVar) {
-          $isNullVar = false;
-          $valueVar = graft.core.DuckDbBloomFilter.probeBlob($blobVal, $hVar);
-        }
-      }
-      boolean ${ev.isNull} = $isNullVar;
-      boolean ${ev.value} = $valueVar;
-    """)
-  }
+  override lazy val replacement: Expression =
+    BlobProbe(filterExpr, DuckDbHashExpr(versionExpr +: valueExprs), ProbeFamily.DuckDbBloom)
 
   override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): DuckDbBloomFilterProbe =
     copy(children = newChildren)

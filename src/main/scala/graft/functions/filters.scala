@@ -43,15 +43,15 @@ object filters {
 
   // probes -----------------------------------------------------------------
   def quotientFilterContains(filter: Column, hash: Column): Column =
-    c(QuotientFilterContains(e(filter), e(hash)))
+    c(BlobProbe(e(filter), e(hash), ProbeFamily.Quotient))
   def xor8FilterContains(filter: Column, hash: Column): Column =
-    c(XorFilterContains(e(filter), e(hash), 8))
+    c(BlobProbe(e(filter), e(hash), ProbeFamily.Xor(8)))
   def xor16FilterContains(filter: Column, hash: Column): Column =
-    c(XorFilterContains(e(filter), e(hash), 16))
+    c(BlobProbe(e(filter), e(hash), ProbeFamily.Xor(16)))
   def binaryFuse8FilterContains(filter: Column, hash: Column): Column =
-    c(BinaryFuseFilterContains(e(filter), e(hash), 8))
+    c(BlobProbe(e(filter), e(hash), ProbeFamily.Fuse(8)))
   def binaryFuse16FilterContains(filter: Column, hash: Column): Column =
-    c(BinaryFuseFilterContains(e(filter), e(hash), 16))
+    c(BlobProbe(e(filter), e(hash), ProbeFamily.Fuse(16)))
   def duckdbBloomFilterProbe(filter: Column, values: Column*): Column =
     duckdbBloomFilterProbeVersion(DefaultVersion, filter, values: _*)
   def duckdbBloomFilterProbeVersion(version: String, filter: Column, values: Column*): Column =

@@ -4,7 +4,6 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, RuntimeReplaceable, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
@@ -266,45 +265,6 @@ case class HllRegisters(child: Expression) extends UnaryExpression
     new GenericArrayData(Array.tabulate(bytes.length - 1)(i => bytes(i + 1) & 0xff))
   }
   override protected def withNewChildInternal(c: Expression): HllRegisters = copy(child = c)
-}
-
-/** SQL: `cms_estimate(blob, hash)` → BIGINT frequency upper bound. The
-  * per-row probe path: zero-copy against the blob bytes, codegen'd, with
-  * the same once-per-task row-independent blob caching as the filter
-  * `*_contains` family (a scalar-subquery CMS probed across a scan must
-  * not re-copy the multi-MB blob per row).
-  */
-case class CmsEstimate(left: Expression, right: Expression) extends BinaryExpression
-  with OncePerTaskBlob {
-  override def prettyName: String = "cms_estimate"
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = left.nullable || right.nullable
-  override protected def blobExpr: Expression = left
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType != BinaryType)
-      TypeCheckResult.TypeCheckFailure(s"cms_estimate sketch argument must be BINARY, got ${left.dataType.sql}")
-    else if (right.dataType != LongType)
-      TypeCheckResult.TypeCheckFailure(s"cms_estimate hash argument must be BIGINT, got ${right.dataType.sql}")
-    else TypeCheckResult.TypeCheckSuccess
-
-  override def eval(input: InternalRow): Any = {
-    val h = right.eval(input)
-    if (h == null) return null
-    val blob = evalBlob(input)
-    if (blob == null) return null
-    CountMinSketch.probeBlob(blob, h.asInstanceOf[Long])
-  }
-
-  // Hand-written: a row-independent sketch is evaluated once per task into a generated field.
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val call = (f: String, h: String) => s"graft.core.CountMinSketch.probeBlob($f, $h)"
-    if (rowIndependentBlob) genKeyedProbe(ctx, ev, right, "graftCmsBlob", "cms")(call)
-    else defineCodeGen(ctx, ev, call)
-  }
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): CmsEstimate =
-    copy(left = l, right = r)
 }
 
 /** SQL: `kmv_estimate(blob)` → DOUBLE distinct-count estimate (exact when

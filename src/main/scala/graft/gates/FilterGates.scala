@@ -149,7 +149,7 @@ object FilterGates {
     // four scalar subqueries that Spark's MergeScalarSubqueries fuses into
     // ONE build pass per parity; the probes hit the merged subquery's
     // struct fields, which the contains-expressions evaluate once per task
-    // (never per row — see graft.functions.OncePerTaskBlob)
+    // (never per row — see graft.functions.BlobProbe)
     Gate("q_fuse_golden", """
       SELECT CAST(filter_rem AS INT) AS filter_rem, CAST(fp16 AS BIGINT) AS fp16, CAST(fp8 AS BIGINT) AS fp8
       FROM (VALUES (0, 1, 171), (1, 1, 199)) t(filter_rem, fp16, fp8) ORDER BY filter_rem""") { (s, _) =>

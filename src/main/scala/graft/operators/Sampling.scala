@@ -200,7 +200,11 @@ object Sampling {
     * stratum keeps its first `n_s = N * ppm_s / 1_000_000` rows in
     * content-hash order. Strata absent from `targets` are dropped;
     * targets naming absent strata make the mix unachievable and fail
-    * fast.
+    * fast. That failure is raised inside the plan, and with the graft
+    * extension `FoldSingleRowJoin` turns the 1-row scale into a scalar
+    * subquery, whose errors Spark rethrows as "Exception thrown in
+    * awaitResult:". So the "target stratum '<s>' has no rows" message is
+    * in the exception's cause chain, not always in its top message.
     *
     * Deterministic and append-degrading-gracefully: adding rows to a
     * stratum never changes WHICH existing rows of other strata are kept

@@ -471,9 +471,9 @@ class SparkFilterSpec extends AnyFunSuite with SparkSpec {
       "binary_fuse8_filter_contains(scalarsubquery(), h): BOOLEAN",
       "binary_fuse16_filter_contains(scalarsubquery(), h): BOOLEAN",
       "quotient_filter_contains(scalarsubquery(), h): BOOLEAN",
-      "duckdbbloomfilterprobe(v1.5.1, scalarsubquery(), id): BOOLEAN",
-      "duckdbbloomfilterprobe(v1.5.1, scalarsubquery(), id, concat(k, id)): BOOLEAN",
-      "duckdbbloomfilterprobe(v1.5.1, scalarsubquery(), v): BOOLEAN",
+      "bitfilters_duckdb_bloom_filter_probe(v1.5.1, scalarsubquery(), id): BOOLEAN",
+      "bitfilters_duckdb_bloom_filter_probe(v1.5.1, scalarsubquery(), id, concat(k, id)): BOOLEAN",
+      "bitfilters_duckdb_bloom_filter_probe(v1.5.1, scalarsubquery(), v): BOOLEAN",
       "bloom_filter_contains(scalarsubquery(), id): BOOLEAN",
       "bloom_filter_contains(scalarsubquery(), v): BOOLEAN",
       "cms_estimate(scalarsubquery(), h): BIGINT")
@@ -483,9 +483,9 @@ class SparkFilterSpec extends AnyFunSuite with SparkSpec {
       "binary_fuse8_filter_contains(fuse8, h): BOOLEAN",
       "binary_fuse16_filter_contains(fuse16, h): BOOLEAN",
       "quotient_filter_contains(qf, h): BOOLEAN",
-      "duckdbbloomfilterprobe(v1.5.1, ddb, id): BOOLEAN",
-      "duckdbbloomfilterprobe(v1.5.1, ddb2, id, concat(k, id)): BOOLEAN",
-      "duckdbbloomfilterprobe(v1.5.1, ddb, v): BOOLEAN",
+      "bitfilters_duckdb_bloom_filter_probe(v1.5.1, ddb, id): BOOLEAN",
+      "bitfilters_duckdb_bloom_filter_probe(v1.5.1, ddb2, id, concat(k, id)): BOOLEAN",
+      "bitfilters_duckdb_bloom_filter_probe(v1.5.1, ddb, v): BOOLEAN",
       "bloom_filter_contains(bf, id): BOOLEAN",
       "bloom_filter_contains(bf, v): BOOLEAN",
       "cms_estimate(cms, h): BIGINT")
