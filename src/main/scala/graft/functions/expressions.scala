@@ -192,7 +192,6 @@ case class BlobProbe(blob: Expression, hash: Expression, family: ProbeFamily) ex
   override def right: Expression = hash
   override def prettyName: String = family.sqlName
   override def dataType: DataType = family.dataType
-  override def nullable: Boolean = blob.nullable || hash.nullable
   // plans print the two arguments, not the family
   override protected def stringArgs: Iterator[Any] = Iterator(blob, hash)
 
